@@ -7,23 +7,24 @@ any engine (the DuckDB oracles use the same construction) — Spark's murmur
 Scale design notes:
 
 - ``exact_dedup``: one hash-shuffle on the content hash; linear.
-- ``token_jaccard_pairs``: exact set-similarity self-join with *prefix
-  filtering* (Chaudhuri et al.'s SSJoin / Bayardo et al.'s All-Pairs): a pair
-  with Jaccard >= t must share at least one token among the first
-  ``L - ceil(t*L) + 1`` of each document's tokens when ordered rarest-first.
-  Only prefix tokens enter the self-join, which collapses the quadratic
-  blowup from ubiquitous tokens (the naive inverted-index join is kept as the
-  test oracle). Verification is exact via ``array_intersect`` on the full
-  token sets.
-- ``minhash_signatures`` / ``minhash_lsh_pairs``: banded MinHash-LSH
-  candidate generation, verified with exact Jaccard — the sub-quadratic path
-  when even prefix filtering is too dense.
+- The exact-Jaccard pair family (``token_jaccard_pairs``,
+  ``minhash_lsh_pairs``, ``lsh_representatives``) is one candidate→verify
+  pipeline.  A candidate source emits ``(doc_a, doc_b)``: the lossless
+  All-Pairs/SSJoin prefix self-join (:func:`_prefix_candidates`), banded
+  MinHash-LSH buckets (the sub-quadratic path when even prefix filtering
+  is too dense), or bucket-hub star edges.  :func:`_verify_candidates`
+  then verifies exactly on the tier :func:`_verify_tier` picks.  For
+  vocabularies of <= 64 tokens ``token_jaccard_pairs`` instead collapses
+  identical token sets first (:func:`_jaccard_bitmask`).
+- ``containment_pairs``: asymmetric ``|A ∩ B| / |A|`` over the
+  containment prefix of the contained side.
 - ``simhash``: 60-bit SimHash per document for Hamming-distance near-dup.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -128,56 +129,63 @@ def derive_candidate_budget(
     return max(budget, 1_000_000)
 
 
+def _check_threshold(threshold: float) -> None:
+    """The pair family's threshold contract: ``t`` in (0, 1].  At ``t <= 0``
+    "every pair with J >= t" includes pairs that share no token or band,
+    which no candidate source can enumerate."""
+    if threshold <= 0 or threshold > 1:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+
+
+def _sampled_pairs(
+    frame: DataFrame,
+    sample_docs: int,
+    pair_sum: Callable[[DataFrame], DataFrame],
+) -> tuple[int, int]:
+    """``(projected candidates, n_docs)`` from a uniform document sample —
+    the shared half of the ``estimate_*`` guards.
+
+    ``pair_sum(sample)`` returns a one-row frame whose first column is the
+    sample's candidate count.  Per-key document frequencies scale ~``p``
+    under uniform doc sampling, so pair counts (products of two
+    frequencies) scale by ``1/p^2``.  One count job plus one small job over
+    ~``sample_docs`` documents; no full-corpus shuffle."""
+    n_docs = frame.count()  # cheap: callers persist or read a scan
+    if n_docs == 0:
+        return 0, 0
+    p = min(1.0, sample_docs / n_docs)
+    sample = frame if p == 1.0 else frame.sample(fraction=p, seed=7)
+    pairs = pair_sum(sample).collect()[0][0]
+    return int(float(pairs or 0.0) / (p * p)), n_docs
+
+
+def _key_pairs(frame: DataFrame, key: str) -> DataFrame:
+    """``sum over key of C(n_key, 2)``: the self-join stream on ``key``."""
+    return (
+        frame.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2))
+    )
+
+
 def estimate_candidate_pairs(
-    docsets: DataFrame, threshold: float, sample_docs: int = 20_000,
-    prefix: bool = True,
+    docsets: DataFrame, threshold: float, sample_docs: int = 20_000
 ) -> int:
-    """Projected pre-``distinct`` candidate volume of the exact self-join,
-    from a bounded document sample.
+    """Projected pre-``distinct`` candidate volume of the exact prefix
+    self-join, from a bounded document sample.
 
     The quantity that bounds the exact path's feasibility is the candidate
     *stream* the join shuffles — ``sum over joined tokens of
     C(df_token, 2)`` — not the verified output (at sf10 this stream hit
     ~1.25e9 rows and exceeded local disk while the gate-visible output was
-    tiny).  With ``prefix=True`` the estimator replays the actual prefix
-    selection (rarest-first rank, length-dependent prefix) on a uniform doc
-    sample of rate ``p``; with ``prefix=False`` (the ``naive``
-    inverted-index join, which has no prefix cut) it sums ``C(df, 2)`` over
-    EVERY token — the true naive stream, which can be far larger than the
-    prefix projection.  Either way the summed per-token pair counts scale
-    by ``1/p^2``: per-token document frequency scales ~``p`` under uniform
-    doc sampling, so ``C(p*df, 2) ~ p^2 * C(df, 2)``.  One small job over
-    ~``sample_docs`` documents; no full-corpus shuffle.
-    """
-    n_docs = docsets.count()  # cheap: docsets is persisted by the caller
-    if n_docs == 0:
-        return 0
-    if n_docs <= sample_docs:
-        sample, p = docsets, 1.0
-    else:
-        p = sample_docs / n_docs
-        sample = docsets.sample(fraction=p, seed=7)
-    tok = sample.select("doc_id", "sz", F.explode("toks").alias("token"))
-    if prefix:
-        dfreq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-        tok = (
-            tok.join(F.broadcast(dfreq), "token")
-            .withColumn(
-                "rnk",
-                F.row_number().over(
-                    Window.partitionBy("doc_id").orderBy("df", "token")
-                ),
-            )
-            .filter(_prefix_len_ok(F.col("rnk"), F.col("sz"), threshold))
-        )
-    row = (
-        tok.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .agg(F.sum(F.col("df") * (F.col("df") - 1) / 2).alias("pairs"))
-        .collect()[0]
-    )
-    sampled_pairs = float(row["pairs"] or 0.0)
-    return int(sampled_pairs / (p * p))
+    tiny).  The estimator replays the actual prefix selection
+    (:func:`_rarest_prefix`) on the sample; see :func:`_sampled_pairs`."""
+
+    def pair_sum(sample: DataFrame) -> DataFrame:
+        tok = sample.select("doc_id", "sz", F.explode("toks").alias("token"))
+        return _key_pairs(_rarest_prefix(tok, "token", threshold), "token")
+
+    return _sampled_pairs(docsets, sample_docs, pair_sum)[0]
 
 
 def estimate_lsh_candidates(
@@ -188,9 +196,10 @@ def estimate_lsh_candidates(
     band_size: int,
     tokenizer: Column | None = None,
     sample_docs: int = 20_000,
-) -> int:
-    """Projected pre-``distinct`` candidate volume of the banded-LSH
-    self-join (:func:`minhash_lsh_pairs`), from a bounded document sample.
+) -> tuple[int, int]:
+    """``(projected candidates, n_docs)`` of the banded-LSH self-join
+    (:func:`minhash_lsh_pairs`), from a bounded document sample; ``n_docs``
+    feeds the verifier's amortization gate without a second count.
 
     The LSH join's shuffle is ``sum over (band, band_key) buckets of
     C(n_bucket, 2)`` — on a heavily self-similar corpus near-dup pairs
@@ -198,35 +207,22 @@ def estimate_lsh_candidates(
     ``n_bands × true_pairs`` and can exceed local disk even though
     banding is "sub-quadratic" (measured: the unguarded q23 at sf10 died
     at 176 s — ~7e9 projected candidates vs 74 GB of shuffle disk).
-    Bucket sizes scale ~``p`` under uniform doc sampling, so the per-
-    bucket pair sums scale by ``1/p^2`` exactly like
-    :func:`estimate_candidate_pairs`.
 
-    Since r14's in-join All-Pairs length cut this is a CONSERVATIVE upper
-    bound (it sums C(n, 2) per bucket without the size-compatibility
-    predicate) — the same posture as the prefix estimator, which also
-    projects its stream without the r13 length cut.  Upper bound is the
-    right direction for a feasibility guard, and on near-dup corpora the
-    cut prunes little anyway (true near-dups are size-compatible by
-    definition), so the bound stays tight where it matters."""
-    n_docs = df.count()
-    if n_docs == 0:
-        return 0
-    if n_docs <= sample_docs:
-        sample, p = df, 1.0
-    else:
-        p = sample_docs / n_docs
-        sample = df.sample(fraction=p, seed=7)
-    stacked = _stacked_bands(
-        sample, id_col, text_col, n_hashes, band_size, tokenizer=tokenizer
+    This is a CONSERVATIVE upper bound: it sums C(n, 2) per bucket without
+    the in-join size cut.  Upper bound is the right direction for a
+    feasibility guard, and on near-dup corpora the cut prunes little
+    (true near-dups are size-compatible by definition)."""
+    return _sampled_pairs(
+        df,
+        sample_docs,
+        lambda sample: _key_pairs(
+            _stacked_bands(
+                sample, id_col, text_col, n_hashes, band_size,
+                tokenizer=tokenizer,
+            ),
+            "band_key",
+        ),
     )
-    row = (
-        stacked.groupBy("band_key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("pairs"))
-        .collect()[0]
-    )
-    return int(float(row["pairs"] or 0.0) / (p * p))
 
 
 def estimate_containment_candidates(
@@ -235,40 +231,17 @@ def estimate_containment_candidates(
     """Projected pre-``distinct`` candidate volume of the containment
     prefix⋈index join (:func:`containment_pairs`): ``sum over tokens of
     prefix_df(token) × (df(token) - 1)`` — each prefix posting joins every
-    OTHER posting of that token in the full inverted index.  Replays the
-    containment prefix formula on a uniform doc sample; both factors
-    scale ~``p``, so the sum scales by ``1/p^2``."""
-    n_docs = docsets.count()
-    if n_docs == 0:
-        return 0
-    if n_docs <= sample_docs:
-        sample, p = docsets, 1.0
-    else:
-        p = sample_docs / n_docs
-        sample = docsets.sample(fraction=p, seed=7)
-    tok = sample.select("doc_id", "sz", F.explode("toks").alias("token"))
-    dfreq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    pref = (
-        tok.join(F.broadcast(dfreq), "token")
-        .withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy("df", "token")
-            ),
+    OTHER posting of that token in the full inverted index, i.e. ``df - 1``
+    summed over the prefix rows.  Replays the containment prefix on a
+    uniform doc sample (:func:`_sampled_pairs`)."""
+
+    def pair_sum(sample: DataFrame) -> DataFrame:
+        tok = sample.select("doc_id", "sz", F.explode("toks").alias("token"))
+        return _rarest_prefix(tok, "token", threshold, containment=True).agg(
+            F.sum(F.col("df") - 1)
         )
-        .filter(
-            F.col("rnk")
-            <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-        )
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("pdf"))
-    )
-    row = (
-        pref.join(dfreq, "token")
-        .agg(F.sum(F.col("pdf") * (F.col("df") - 1)).alias("pairs"))
-        .collect()[0]
-    )
-    return int(float(row["pairs"] or 0.0) / (p * p))
+
+    return _sampled_pairs(docsets, sample_docs, pair_sum)[0]
 
 
 def token_jaccard_pairs(
@@ -285,62 +258,57 @@ def token_jaccard_pairs(
     """All pairs of documents with token-set Jaccard >= threshold (exact).
 
     Returns columns (doc_a, doc_b, n_common, jaccard) with doc_a < doc_b and
-    jaccard rounded to 4 decimals.
+    jaccard rounded to 4 decimals.  ``threshold`` must be in (0, 1].
+    ``tokenizer`` defaults to whitespace tokens; pass e.g.
+    ``char_ngrams(text_col)`` for shingle (n-gram) set similarity.
 
-    Strategies (all lossless — they produce identical results):
+    Strategies (both lossless — they produce identical results):
 
     - ``bitmask``: for small vocabularies (<= 64 distinct tokens): encode
       each document's token set as one 64-bit mask, collapse documents with
       identical sets, compare *distinct sets* pairwise with popcount
-      arithmetic, then expand back to document pairs. The pairwise
-      comparison is a broadcast nested-loop self-join on the distinct-set
-      table — tiny vocabularies collapse billions of documents into at most
-      ``2^V`` (in practice ~thousands of) distinct sets.
-    - ``prefix``: general vocabularies: All-Pairs/SSJoin prefix filtering —
-      only each document's ``L - ceil(t*L) + 1`` globally-rarest tokens
-      enter the self-join; exact verification via ``array_intersect``.
-      Correct at any vocabulary size; efficient when token document
-      frequencies are small relative to the corpus (real text).
-    - ``naive``: full inverted-index self-join (the test oracle's shape).
+      arithmetic, then expand back to document pairs
+      (:func:`_jaccard_bitmask`).  Tiny vocabularies collapse billions of
+      documents into at most ``2^V`` (in practice ~thousands of) sets.
+    - ``prefix``: general vocabularies: the All-Pairs/SSJoin prefix
+      self-join (:func:`_prefix_candidates`) verified by
+      :func:`_verify_candidates`.  When the vocabulary fits
+      :data:`_BLOCKMASK_VOCAB_CAP` tokens the join keys on dictionary
+      positions and verifies on the ``blockmask`` tier; otherwise it keys
+      on token strings and verifies on ``arrays``.
     - ``auto``: ``bitmask`` if the vocabulary fits in 64 bits else
-      ``prefix``.  Decided from a bounded document sample first: a sample
-      vocabulary > 64 already *proves* the full vocabulary is > 64 (sample
-      ⊆ corpus), so the common big-corpus case is settled by scanning a few
-      thousand docs — no full-corpus pass.  Only when the sample stays ≤ 64
-      (plausibly tiny vocabulary) does an exact full count confirm, and the
-      bitmask path would immediately rescan the corpus anyway.  Callers that
-      know their corpus should pass the strategy explicitly.
+      ``prefix``, settled by one sample-first probe (:func:`_vocab_if_small`)
+      whose result also numbers the blockmask dictionary.
 
-    ``candidate_budget`` is the regime guard for the exact path: before
+    ``candidate_budget`` is the regime guard for the prefix path: before
     any full-corpus shuffle, :func:`estimate_candidate_pairs` projects the
-    prefix join's candidate stream from a doc sample; if the projection
-    exceeds the budget the operator either raises with actionable advice
+    join's candidate stream from a doc sample; if the projection exceeds
+    the budget the operator either raises with actionable advice
     (``on_budget='error'``) or degrades to banded MinHash-LSH candidates
     with the same exact verification and output schema
     (``on_budget='degrade'``: high recall instead of guaranteed-total
-    recall — the production posture once exact pairs are physically
-    output-bound; banding ``n_hashes=16, band_size=4`` centers the
-    collision s-curve near ``(1/4)^(1/4) ~ 0.71``, matched to the default
-    0.8 threshold).  The guard never fires for ``bitmask`` (candidates are
-    bounded by distinct token-SETS squared, not documents).
+    recall; ``n_hashes=16, band_size=4`` centers the collision s-curve
+    near ``(1/4)^(1/4) ~ 0.71``, matched to the default 0.8 threshold).
+    The guard never fires for ``bitmask`` (candidates are bounded by
+    distinct token-SETS squared, not documents).
 
     The fallback is guarded too: the banded stream can itself be
     output-bound on a self-similar corpus (q23 at sf10 projected ~2.3e9
     banded candidates), so the degrade call inherits ``candidate_budget``
-    and raises the designed feasibility error rather than re-entering an
-    unguarded self-join.  When the caller's budget is a deliberate
-    forcing lever rather than a physical limit (demos, tests), pass
-    ``degrade_budget`` — the fallback is then guarded by THAT figure
-    (e.g. ``derive_candidate_budget(spark)``) instead.
+    ×4 — budgets are denominated in ~64 B exact-verification rows, banded
+    candidate rows are two ids (~16 B) — and raises the designed
+    feasibility error rather than exhausting shuffle disk.  When the
+    caller's budget is a deliberate forcing lever rather than a physical
+    limit (demos, tests), pass ``degrade_budget`` — the fallback is then
+    guarded by THAT figure (e.g. ``derive_candidate_budget(spark)``).
     """
+    _check_threshold(threshold)
     if on_budget not in ("error", "degrade"):
         raise ValueError(f"bad on_budget {on_budget!r}")
+    if strategy not in ("auto", "bitmask", "prefix"):
+        raise ValueError(f"bad strategy {strategy!r}")
     # the tokenized relation feeds the candidate join AND both verification
     # sides — persist it so the corpus is tokenized once, not 3-4 times
-    # (the standard SSJoin practice of materializing the token relation)
-    # tokenizer defaults to whitespace tokens; pass e.g. char_ngrams(text_col)
-    # for shingle-based (n-gram) set similarity — everything downstream
-    # (prefix filter, bitmask, verification) is tokenization-agnostic
     tok_col = tokens(text_col) if tokenizer is None else tokenizer
     docsets = (
         df.select(F.col(id_col).alias("doc_id"), tok_col.alias("toks"))
@@ -348,28 +316,20 @@ def token_jaccard_pairs(
         .persist()
     )
 
-    # ONE sample-first vocabulary probe (<= 2 bounded jobs) settles the
-    # auto strategy AND hands the mask/int tiers their position
-    # assignment — the r16 probe collapse (see _vocab_if_small); pinned
-    # strategies probe lazily below so they pay nothing extra.
+    # auto probes first (its answer picks the strategy); a pinned prefix
+    # probes only after the budget guard, so a degrade pays no probe
     small_vocab: list[str] | None = None
-    vocab_probed = False
-    if strategy == "auto":
+    probed = strategy == "auto"
+    if probed:
         small_vocab = _vocab_if_small(docsets, _BLOCKMASK_VOCAB_CAP)
-        vocab_probed = True
         strategy = (
             "bitmask"
             if small_vocab is not None and len(small_vocab) <= 64
             else "prefix"
         )
 
-    if candidate_budget is not None and strategy in ("prefix", "naive"):
-        # the naive inverted-index join has no prefix cut, so its stream is
-        # the full per-token C(df,2) sum — project that, not the (much
-        # smaller) prefix replay
-        projected = estimate_candidate_pairs(
-            docsets, threshold, prefix=(strategy == "prefix")
-        )
+    if candidate_budget is not None and strategy == "prefix":
+        projected = estimate_candidate_pairs(docsets, threshold)
         if projected > candidate_budget:
             docsets.unpersist()
             if on_budget == "error":
@@ -382,22 +342,6 @@ def token_jaccard_pairs(
                     f"exact verification, same schema), or use "
                     f"minhash_lsh_pairs / dup_clusters directly."
                 )
-            # forward a budget: on a corpus dense enough that the BANDED
-            # stream is itself output-bound (the q23 sf10 regime, ~2.3e9
-            # banded candidates), an unguarded degrade re-enters the exact
-            # failure the guard exists to prevent — the fallback must raise
-            # the designed feasibility error, not exhaust shuffle disk.
-            # The forwarded budget is RESCALED ×4: candidate budgets are
-            # denominated in ~64 B exact-path verification rows
-            # (derive_candidate_budget's default), while banded candidate
-            # rows are two 8-byte ids (~16 B framed) — the same spill disk
-            # affords 4× the candidates.  Without the rescale the
-            # r11-complete sf10 regime (q16/q50/q77: ~4.5e8 banded
-            # candidates ≈ 7 GB) spuriously raises — the r12 sweep caught
-            # exactly that regression; with it, the q23 regime (~2.3e9
-            # banded ≈ past the scaled budget) still raises as designed.
-            # degrade_budget overrides when candidate_budget is a forcing
-            # lever rather than a physical limit.
             return minhash_lsh_pairs(
                 df, id_col, text_col, n_hashes=16, band_size=4,
                 threshold=threshold, tokenizer=tokenizer,
@@ -412,97 +356,24 @@ def token_jaccard_pairs(
             _jaccard_bitmask(docsets, threshold, vocab=small_vocab), docsets
         )
 
-    if strategy == "prefix":
-        # vocabulary-adaptive verification: when the vocabulary fits a
-        # fixed budget of 64-bit words (<= _BLOCKMASK_VOCAB_CAP tokens),
-        # verify candidates with popcount arithmetic over long arrays
-        # instead of merging string arrays — exact (explicit bit positions,
-        # no hashing), JVM-side, and ~10x cheaper per pair.  The sf1 sweep
-        # showed verification dominating the prefix path (48 of 65 s on
-        # 122M candidates) precisely in the small-vocabulary regime where
-        # this representation applies.
-        if not vocab_probed:
-            small_vocab = _vocab_if_small(docsets, _BLOCKMASK_VOCAB_CAP)
-        if small_vocab:
-            return _release_on_gc(
-                _jaccard_prefix_blockmask(docsets, threshold, small_vocab),
-                docsets,
-            )
-        tok = docsets.select("doc_id", "sz", F.explode("toks").alias("token"))
-        # rarest-first global order; ties broken by token text for determinism
-        dfreq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-        ranked = (
-            tok.join(F.broadcast(dfreq), "token")
-            .withColumn(
-                "rnk",
-                F.row_number().over(
-                    Window.partitionBy("doc_id").orderBy("df", "token")
-                ),
-            )
-            # prefix length L - ceil(t_eff*L) + 1 (slacked; see helper)
-            .filter(_prefix_len_ok(F.col("rnk"), F.col("sz"), threshold))
-            .select("doc_id", "token", "sz", "rnk")
-        )
-        a, b = ranked.alias("a"), ranked.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.token") == F.col("b.token"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-                & _size_compatible(F.col("a.sz"), F.col("b.sz"), threshold)
-                & _positional_bound_ok(
-                    F.col("a.rnk"), F.col("b.rnk"),
-                    F.col("a.sz"), F.col("b.sz"), threshold,
-                ),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-            )
-            .distinct()
-        )
-    elif strategy == "naive":
-        tok = docsets.select("doc_id", F.explode("toks").alias("token"))
-        a, b = tok.alias("a"), tok.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.token") == F.col("b.token"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-            )
-            .distinct()
-        )
+    if not probed:
+        small_vocab = _vocab_if_small(docsets, _BLOCKMASK_VOCAB_CAP)
+    if small_vocab:
+        # the dictionary numbers the join keys (int shuffle keys) AND the
+        # blockmask bits, built once; popcount verification is ~10x
+        # cheaper per pair than merging string arrays (sf1: verification
+        # was 48 of 65 s on 122M candidates in this regime)
+        positions = _token_positions(docsets, "blockmask", small_vocab)
+        tok, key, verify = positions[0], "pos", "blockmask"
     else:
-        raise ValueError(f"bad strategy {strategy!r}")
-
-    sa = docsets.select(
-        F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"), F.col("sz").alias("sz_a")
-    )
-    sb = docsets.select(
-        F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"), F.col("sz").alias("sz_b")
-    )
-    verified = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        # lossless length cut before the set intersection (All-Pairs bound;
-        # already enforced inside the prefix join — kept here so the naive
-        # strategy and any future candidate source verify identically)
-        .filter(_size_compatible(F.col("sz_a"), F.col("sz_b"), threshold))
-        .withColumn("n_common", F.size(F.array_intersect("toks_a", "toks_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+        positions, key, verify = None, "token", "arrays"
+        tok = docsets.select("doc_id", "sz", F.explode("toks").alias("token"))
+    cand = _prefix_candidates(tok, key, threshold)
     return _release_on_gc(
-        verified.select("doc_a", "doc_b", "n_common", "jaccard"), docsets
+        _verify_candidates(
+            cand, docsets, verify, threshold, positions=positions
+        ),
+        docsets,
     )
 
 
@@ -536,15 +407,7 @@ def _vocab_if_small(
     Stage 2 (reached only for genuinely small-vocabulary corpora)
     confirms with one bounded ``limit(cap+1)`` COLLECT whose values
     settle every downstream question at once — fits-64?, fits-cap?, and
-    the mask/int position assignment itself.
-
-    r16 probe collapse (guide §2.6 / r15 verdict item 4): the former
-    ladder ran up to FIVE serial bounded jobs ahead of a q16-family
-    query's real work (sample count + full count for the 64-bit mask
-    question, the same pair again for the blockmask cap, then a separate
-    ``_vocab_positions`` limit-collect once a mask tier was chosen);
-    collecting values instead of counting them folds all of those into
-    the same two jobs."""
+    the mask/int position assignment itself."""
     sample_vocab = (
         docsets.limit(sample_docs)
         .select(F.explode("toks").alias("token"))
@@ -557,69 +420,95 @@ def _vocab_if_small(
     return _full_vocab_if_small(docsets, cap)
 
 
-def _vocab_positions(
-    docsets: DataFrame, cap: int, err: str, vocab: list[str] | None = None
-) -> tuple[DataFrame, int]:
-    """``((token, pos) frame, vocab size)`` with positions assigned
-    lexicographically — the shared vocabulary-numbering step of the
-    bitmask/blockmask/int-array paths.
-
-    ``vocab`` short-circuits the collect when a caller already probed the
-    vocabulary (r16 probe collapse — the auto strategies pass their probe
-    result through, so the numbering costs ZERO extra jobs).  Without it,
-    one bounded ``limit(cap+1)`` driver collect + a Python sort — same
-    result as a global ``row_number`` window, no single-partition
-    WindowExec (whose expected warning drowned real warnings in the gate
-    logs).  A pinned strategy on a corpus that outgrew the cap
-    (precondition violated) raises ``err`` here, at plan time, instead of
-    mid-execution."""
-    if vocab is None:
-        vocab = _full_vocab_if_small(docsets, cap)
-    if vocab is None or len(vocab) > cap:
-        raise ValueError(err)
-    return (
-        docsets.sparkSession.createDataFrame(
-            [(t, i) for i, t in enumerate(vocab)], "token string, pos int"
-        ),
-        len(vocab),
-    )
-
-
 _BLOCKMASK_VOCAB_CAP = 4096  # 64 longs of bitset per document
 
-#: int-array tier cap (r16): unlike the blockmask, the int tier's per-pair
-#: cost is O(sz) regardless of vocabulary width, so its only bound is the
+#: int-array tier cap: unlike the blockmask, the int tier's per-pair cost
+#: is O(sz) regardless of vocabulary width, so its only bound is the
 #: driver-collect + broadcast of the position dictionary — 64k tokens is a
-#: ~2 MB broadcast.  Real open-vocabulary corpora blow past this within
-#: one sample probe (answer settles with no full-corpus pass); bounded
-#: synthetic/categorical vocabularies stay inside and verify on ints.
+#: ~2 MB broadcast.
 _INTARRAYS_VOCAB_CAP = 65536
 
 
-def _prefix_len_ok(rnk: Column, sz: Column, threshold: float) -> Column:
-    """All-Pairs prefix-membership predicate: token rank within
-    ``L - ceil(t_eff * L) + 1``.  Uses the SLACKED threshold
-    ``t_eff = t - 1e-4`` like every other filter in the family — the
-    final filter admits raw jaccard down to ``t - 5e-5`` (4-dp HALF_UP),
-    so a prefix computed from the exact ``t`` is one token too short
-    precisely when ``t*L`` sits within ``1e-4*L`` above an integer
-    (possible at ~1e4+-token documents), silently dropping a pair the
-    rounding contract admits (r15 review catch — pre-existing since the
-    r13 prefix join).  Cost: prefixes grow by at most one token."""
-    t_eff = threshold - 1e-4
-    return rnk <= sz - F.ceil(F.lit(t_eff) * sz) + 1
+def _token_positions(
+    docsets: DataFrame, tier: str, vocab: list[str] | None = None
+) -> tuple[DataFrame, int]:
+    """``((doc_id, sz, pos) relation, vocab size)``: every document token
+    numbered by its place in the sorted vocabulary — the one dictionary
+    encoding behind the mask and int tiers.  Positions are explicit per
+    token (no hashing), so set intersections over them are exact.
+
+    ``vocab`` is a probe result the caller already holds (zero extra
+    jobs); without it one bounded ``limit(cap+1)`` collect numbers the
+    vocabulary.  A pinned tier on a corpus past its cap raises here, at
+    plan time, instead of letting positions wrap into colliding bits."""
+    # caps read at call time, so tests can shrink them
+    cap = {
+        "bitmask": 64,
+        "blockmask": _BLOCKMASK_VOCAB_CAP,
+        "intarrays": _INTARRAYS_VOCAB_CAP,
+    }[tier]
+    if vocab is None:
+        vocab = _full_vocab_if_small(docsets, cap)
+    if vocab is None or len(vocab) > cap:
+        raise ValueError(
+            f"{tier} verification requires vocabulary <= {cap} distinct "
+            f"tokens; use strategy='prefix', verify='arrays' or 'auto'"
+        )
+    vocab_df = docsets.sparkSession.createDataFrame(
+        [(t, i) for i, t in enumerate(vocab)], "token string, pos int"
+    )
+    tokp = (
+        docsets.select("doc_id", "sz", F.explode("toks").alias("token"))
+        .join(F.broadcast(vocab_df), "token")
+        .select("doc_id", "sz", "pos")
+    )
+    return tokp, len(vocab)
+
+
+def _rarest_prefix(
+    tok: DataFrame, key: str, threshold: float, containment: bool = False
+) -> DataFrame:
+    """Each document's rarest-first prefix — the one ranking behind every
+    prefix filter.  ``tok`` is ``(doc_id, sz, <key>)``; rows gain the
+    key's document frequency ``df`` and a per-document rank ``rnk`` under
+    the global ``(df, key)`` order (ties broken by the key for
+    determinism), and are kept while ``rnk <= L - ceil(t·L) + 1``.
+
+    - Jaccard (All-Pairs/SSJoin) ranks with the slacked ``t - 1e-4``: the
+      final filter admits raw jaccard down to ``t - 5e-5`` (4-dp HALF_UP),
+      so a prefix from the exact ``t`` is one token short when ``t·L``
+      sits within ``1e-4·L`` above an integer.
+    - Containment filters the unrounded ratio, so it uses ``t`` with a
+      ``1e-9`` float guard: ``0.55 * 100`` is ``55.00000000000001``, whose
+      bare ceil shortens the prefix by one token and drops pairs at
+      exactly ``t``.
+
+    Either adjustment lengthens a prefix by at most one token, which is
+    lossless."""
+    sz = F.col("sz")
+    need = (
+        F.ceil(F.lit(threshold) * sz - F.lit(1e-9))
+        if containment
+        else F.ceil(F.lit(threshold - 1e-4) * sz)
+    )
+    dfreq = tok.groupBy(key).agg(F.count(F.lit(1)).alias("df"))
+    return (
+        tok.join(F.broadcast(dfreq), key)
+        .withColumn(
+            "rnk",
+            F.row_number().over(Window.partitionBy("doc_id").orderBy("df", key)),
+        )
+        .filter(F.col("rnk") <= sz - need + 1)
+    )
 
 
 def _size_compatible(sz_a: Column, sz_b: Column, threshold: float) -> Column:
     """All-Pairs/SSJoin length filter: ``jaccard(A,B) <= min(|A|,|B|) /
     max(|A|,|B|)`` (the intersection is at most the smaller set), so a
     pair whose token-count ratio is below the threshold cannot reach the
-    output — a LOSSLESS pre-filter evaluated inside the prefix join, two
-    integer comparisons per candidate, pruning before the distinct and
-    the array/bitset verification (r12 verdict item: the pair family's
-    remaining headroom).  The 1e-4 slack covers the 4-dp output rounding:
-    the final filter is on round4(jaccard) >= t, which admits raw jaccard
-    down to t - 5e-5."""
+    output — a LOSSLESS pre-filter, two integer comparisons per candidate.
+    The 1e-4 slack covers the 4-dp output rounding: the final filter is on
+    round4(jaccard) >= t, which admits raw jaccard down to t - 5e-5."""
     return F.least(sz_a, sz_b) >= (
         F.lit(threshold) - F.lit(1e-4)
     ) * F.greatest(sz_a, sz_b)
@@ -629,14 +518,13 @@ def _positional_bound_ok(
     rnk_a: Column, rnk_b: Column, sz_a: Column, sz_b: Column, threshold: float
 ) -> Column:
     """PPJoin-style positional filter (Xiao et al., "Efficient Similarity
-    Joins for Near Duplicate Detection" — the same public-literature family
-    as the All-Pairs length cut above), evaluated per matched prefix token
-    INSIDE the candidate join, before the ``distinct`` shuffle and the
-    array/bitset verification.
+    Joins for Near Duplicate Detection"), evaluated per matched prefix
+    token INSIDE the candidate join, before the ``distinct`` shuffle and
+    verification.
 
     For a candidate generated by a shared token at per-document ranks
     ``(i, j)`` under one consistent global order (rarest-first ``(df,
-    token)`` — so any common token sits on the same side of the match in
+    key)`` — so any common token sits on the same side of the match in
     BOTH documents), the overlap decomposes into common-before plus
     common-from-the-match-on::
 
@@ -646,12 +534,10 @@ def _positional_bound_ok(
     whose bound cannot reach that is discarded.  LOSSLESS per row (not
     just per pair): a truly-similar pair satisfies the bound at EVERY
     shared token, so each of its join rows survives and the pair cannot
-    be lost — no ordering or first-match bookkeeping needed, which is
-    what makes the filter expressible as a pure join predicate Catalyst
-    evaluates before the exchange.  The threshold carries the same 1e-4
-    rounding slack as :func:`_size_compatible` (final filter admits raw
-    jaccard down to ``t - 5e-5``) plus 1e-9 float headroom, so boundary
-    pairs are kept, never dropped."""
+    be lost — which is what makes the filter expressible as a pure join
+    predicate.  The threshold carries the same 1e-4 rounding slack as
+    :func:`_size_compatible` plus 1e-9 float headroom, so boundary pairs
+    are kept, never dropped."""
     t = threshold - 1e-4
     ubound = (
         F.least(rnk_a, rnk_b)
@@ -660,52 +546,28 @@ def _positional_bound_ok(
     return ubound >= F.lit(t / (1.0 + t)) * (sz_a + sz_b) - F.lit(1e-9)
 
 
-def _jaccard_prefix_blockmask(
-    docsets: DataFrame, threshold: float, vocab: list[str]
-) -> DataFrame:
-    """Prefix-filtered candidates + popcount verification over multi-word
-    bitsets, for vocabularies of up to ``_BLOCKMASK_VOCAB_CAP`` tokens
-    (``vocab`` is the caller's probe result — no further vocabulary jobs).
+def _prefix_candidates(tok: DataFrame, key: str, threshold: float) -> DataFrame:
+    """``(doc_a, doc_b)`` candidates of the All-Pairs/SSJoin prefix
+    self-join: a pair with Jaccard >= t must share a token among both
+    documents' rarest-first prefixes (:func:`_rarest_prefix`), so only
+    prefix rows enter the join, which collapses the quadratic blowup from
+    ubiquitous tokens.  The size and positional bounds prune inside the
+    join, before the ``distinct``.
 
-    Identical results to the string path: the prefix filter is lossless
-    under any consistent token order (here (df, pos), which sorts the same
-    as (df, token) because positions are assigned in token order), and the
-    bitset intersection counts exactly the common tokens — positions are
-    explicit per token, no hashing, so there is nothing to collide.
-    Candidates join on int positions (8-byte shuffle keys vs strings)."""
-    vocab_n = len(vocab)
-    n_words = (vocab_n + 63) // 64
-    tok = docsets.select("doc_id", "sz", F.explode("toks").alias("token"))
-    vocab_df, _ = _vocab_positions(
-        docsets,
-        _BLOCKMASK_VOCAB_CAP,
-        f"blockmask verification requires vocabulary <= "
-        f"{_BLOCKMASK_VOCAB_CAP} distinct tokens",
-        vocab=vocab,
-    )
-    tokp = tok.join(F.broadcast(vocab_df), "token").select(
-        "doc_id", "sz", "pos"
-    )
-    dfreq = tokp.groupBy("pos").agg(F.count(F.lit(1)).alias("df"))
-    ranked = (
-        tokp.join(F.broadcast(dfreq), "pos")
-        .withColumn(
-            "rnk",
-            F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "pos")),
-        )
-        .filter(_prefix_len_ok(F.col("rnk"), F.col("sz"), threshold))
-        .select("doc_id", "pos", "sz", "rnk")
+    ``tok`` is ``(doc_id, sz, <key>)`` with ``key`` either ``token``
+    (strings) or ``pos`` (dictionary positions, 4-byte shuffle keys).
+    Positions are assigned in token order, so ``(df, pos)`` ranks exactly
+    like ``(df, token)`` and both keys yield the same candidates."""
+    ranked = _rarest_prefix(tok, key, threshold).select(
+        "doc_id", key, "sz", "rnk"
     )
     a, b = ranked.alias("a"), ranked.alias("b")
-    cand = (
+    return (
         a.join(
             b,
-            (F.col("a.pos") == F.col("b.pos"))
+            (F.col(f"a.{key}") == F.col(f"b.{key}"))
             & (F.col("a.doc_id") < F.col("b.doc_id"))
             & _size_compatible(F.col("a.sz"), F.col("b.sz"), threshold)
-            # the (df, pos) ranking orders identically to the string path's
-            # (df, token) — positions are assigned in token order — so the
-            # positional bound is the same lossless predicate here
             & _positional_bound_ok(
                 F.col("a.rnk"), F.col("b.rnk"),
                 F.col("a.sz"), F.col("b.sz"), threshold,
@@ -714,139 +576,20 @@ def _jaccard_prefix_blockmask(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    masks = _blockmasks_from_tokp(tokp, n_words)
-    # size cut already enforced inside the candidate join above
-    return _blockmask_pair_jaccard(
-        cand, masks, threshold, size_cut=False, n_words=n_words
-    )
 
 
-def _blockmask_pair_jaccard(
-    cand: DataFrame, masks: DataFrame, threshold: float, size_cut: bool,
-    n_words: int,
-) -> DataFrame:
-    """Popcount pair verification over ``(doc_id, sz, mask)`` bitsets —
-    the shared final stage of the prefix blockmask path and the blockmask
-    tier of :func:`_verify_candidates` (one definition, so the jaccard
-    fixed-point/rounding contract cannot diverge between candidate
-    sources — the module convention).  ``size_cut`` re-applies the
-    All-Pairs length filter for candidate sources that did not already
-    enforce it inside their join.
-
-    The intersection popcount is the ``zip_with``/``aggregate`` HOF fold
-    — measured DECISIVELY faster than a flat plan-time-unrolled
-    ``F.get(mask, w)`` sum, contrary to the interpreted-lambda-overhead
-    hypothesis an r15 experiment tested: q54 sf1 (30 mask words, same
-    JVM, interleaved) ran 36.3 s HOF vs 116.4 s unrolled — N independent
-    ``get`` expressions re-traverse the join-produced arrays where the
-    fold makes one pass, a 3x loss that a fresh-JVM isolate first
-    surfaced as a sweep regression.  ``n_words`` stays in the signature
-    only as documentation of the caller's width-based blockmask-vs-arrays
-    gate (see :func:`_verify_candidates`)."""
-    del n_words  # width decisions happen in the caller
-    ma = masks.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sz").alias("sz_a"),
-        F.col("mask").alias("mask_a"),
-    )
-    mb = masks.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sz").alias("sz_b"),
-        F.col("mask").alias("mask_b"),
-    )
-    inter = F.aggregate(
-        F.zip_with("mask_a", "mask_b", lambda x, y: F.bit_count(x.bitwiseAND(y))),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    out = cand.join(ma, "doc_a").join(mb, "doc_b")
-    if size_cut:
-        out = out.filter(
-            _size_compatible(F.col("sz_a"), F.col("sz_b"), threshold)
-        )
-    return (
-        out.withColumn("n_common", inter.cast("int"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_common", "jaccard")
-    )
+def _jaccard(n_common: Column, sz_a: Column, sz_b: Column) -> Column:
+    """The family's fixed-point jaccard, ``|A∩B| / |A∪B|`` rounded to 4 dp
+    (HALF_UP): the value every path emits and every threshold compares.
+    ``|A∪B| = |A| + |B| - |A∩B|`` in integers, so a popcount union gives
+    the same double."""
+    return F.round(n_common / (sz_a + sz_b - n_common), 4)
 
 
-def _intset_pair_jaccard(
-    cand: DataFrame, intsets: DataFrame, threshold: float, size_cut: bool
-) -> DataFrame:
-    """``array_intersect`` pair verification over ``(doc_id, sz, ipos)``
-    int-position sets — the r16 int-array verification tier (the r15
-    BASELINE's named candidate for the wide-vocabulary regime where the
-    blockmask is wider than the token array it replaces).
-
-    Exact like the blockmask: positions are assigned bijectively per
-    distinct token (:func:`_vocab_positions` — explicit, no hashing), so
-    ``|A ∩ B|`` over position arrays equals the token-set intersection
-    count.  Per pair the intersection hashes ``~sz`` 4-byte ints instead
-    of ``~sz`` strings (arrays tier) or folding ``n_words`` longs
-    (blockmask tier) — it costs O(sz) regardless of vocabulary width, so
-    it has no wide-mask failure mode, and the verification joins shuffle
-    int arrays (~4 B/token) instead of token strings (~10+ B/token).
-    Same jaccard fixed-point/rounding contract as every other tier (the
-    module convention)."""
-    ia = intsets.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sz").alias("sz_a"),
-        F.col("ipos").alias("ipos_a"),
-    )
-    ib = intsets.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sz").alias("sz_b"),
-        F.col("ipos").alias("ipos_b"),
-    )
-    out = cand.join(ia, "doc_a").join(ib, "doc_b")
-    if size_cut:
-        out = out.filter(
-            _size_compatible(F.col("sz_a"), F.col("sz_b"), threshold)
-        )
-    return (
-        out.withColumn(
-            "n_common", F.size(F.array_intersect("ipos_a", "ipos_b"))
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_common", "jaccard")
-    )
-
-
-def _intsets_from_tokp(tokp: DataFrame) -> DataFrame:
-    """``(doc_id, sz, ipos)`` int-position sets from a ``(doc_id, sz,
-    pos)`` token-position relation — the int-array sibling of
-    :func:`_blockmasks_from_tokp` (same input relation, so a candidate
-    source that already built ``tokp`` can feed either tier)."""
-    return tokp.groupBy("doc_id", "sz").agg(
-        F.collect_list("pos").alias("ipos")
-    )
-
-
-def _blockmasks_from_tokp(tokp: DataFrame, n_words: int) -> DataFrame:
-    """``(doc_id, sz, mask)`` multi-word bitsets from a ``(doc_id, sz,
-    pos)`` token-position relation — the shared mask-building stage of
-    :func:`_jaccard_prefix_blockmask` and the blockmask verification tier
-    of :func:`_verify_candidates` (one definition, so the bit layout
-    cannot diverge between candidate sources).  Per-doc bitset: one
-    conditional sum per 64-bit word (sum == OR for the distinct positions
-    of one document's token set)."""
+def _blockmasks(tokp: DataFrame, n_words: int) -> DataFrame:
+    """``(doc_id, sz, rep)`` multi-word bitsets from a ``(doc_id, sz, pos)``
+    relation: one conditional sum per 64-bit word (sum == OR for the
+    distinct positions of one document's token set)."""
     word_aggs = [
         F.sum(
             F.when(
@@ -861,7 +604,7 @@ def _blockmasks_from_tokp(tokp: DataFrame, n_words: int) -> DataFrame:
         .agg(*word_aggs)
         .select(
             "doc_id", "sz",
-            F.array(*[f"_w{w}" for w in range(n_words)]).alias("mask"),
+            F.array(*[f"_w{w}" for w in range(n_words)]).alias("rep"),
         )
     )
 
@@ -872,24 +615,15 @@ def _doc_masks(
     """(doc_id, mask): each document's token set as one 64-bit bitmask.
 
     Only valid when the corpus vocabulary has <= 64 distinct tokens
-    (enforced at plan time by :func:`_vocab_positions` — a pinned bitmask
-    strategy on a corpus that outgrew 64 tokens raises rather than letting
-    ``shiftleft`` wrap pos & 63 into silently-colliding bit positions);
-    positions are assigned lexicographically for determinism.  ``vocab``
-    short-circuits the vocabulary collect when the caller already probed
-    it (r16 probe collapse).
+    (enforced at plan time by :func:`_token_positions` — a pinned bitmask
+    on a corpus that outgrew 64 tokens raises rather than letting
+    ``shiftleft`` wrap pos & 63 into silently-colliding bit positions).
+    ``vocab`` short-circuits the vocabulary collect when the caller already
+    probed it.
     """
-    tok = docsets.select("doc_id", F.explode("toks").alias("token"))
-    vocab_df, _ = _vocab_positions(
-        docsets,
-        64,
-        "bitmask dedup requires vocabulary <= 64 distinct tokens; "
-        "use strategy=prefix or auto",
-        vocab=vocab,
-    )
+    tokp, _ = _token_positions(docsets, "bitmask", vocab)
     return (
-        tok.join(F.broadcast(vocab_df), "token")
-        .groupBy("doc_id")
+        tokp.groupBy("doc_id")
         # arithmetic sum == bitwise OR for distinct bit positions (the sign
         # bit for pos 63 wraps but stays a valid mask in two's complement)
         .agg(F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), pos)")).alias("mask"))
@@ -902,7 +636,7 @@ def _jaccard_bitmask(
     """Exact Jaccard pairs for vocabularies that fit one 64-bit mask.
 
     docsets: (doc_id, toks array, sz). See :func:`token_jaccard_pairs`;
-    ``vocab`` is the auto strategy's probe result (r16 probe collapse).
+    ``vocab`` is the auto strategy's probe result.
     """
     # feeds both sides of the identical-set join AND the distinct-set roll-up:
     # persist, or the explode+shuffle mask build runs three times
@@ -938,7 +672,6 @@ def _jaccard_bitmask(
     sa = pcs.withColumn("pc_b", F.explode(F.sequence(lo, hi))).alias("sa")
     sb = pcs.alias("sb")
     inter_bits = F.bit_count(F.col("sa.mask").bitwiseAND(F.col("sb.mask")))
-    union_bits = F.bit_count(F.col("sa.mask").bitwiseOR(F.col("sb.mask")))
     set_pairs = (
         sa.join(
             sb,
@@ -946,7 +679,10 @@ def _jaccard_bitmask(
             & (F.col("sa.mask") < F.col("sb.mask")),
         )
         .withColumn("n_common", inter_bits.cast("int"))
-        .withColumn("jaccard", F.round(inter_bits / union_bits, 4))
+        .withColumn(
+            "jaccard",
+            _jaccard(F.col("n_common"), F.col("sa.pc"), F.col("sb.pc")),
+        )
         .filter(F.col("jaccard") >= threshold)
     )
     inter = (
@@ -1075,10 +811,9 @@ def minhash_lsh_pairs(
 
     Signature rows are banded (``n_hashes / band_size`` bands); documents
     colliding in any band become candidates; candidates are verified against
-    the exact token-set Jaccard so the output has no false positives (recall
-    depends on banding parameters, as usual for LSH). ``verify`` picks the
-    verification representation: 'bitmask' (vocab <= 64, popcount
-    arithmetic), 'arrays' (general, ``array_intersect``), or 'auto'.
+    the exact token-set Jaccard (:func:`_verify_candidates`, tier ``verify``)
+    so the output has no false positives (recall depends on banding
+    parameters, as usual for LSH).  ``threshold`` must be in (0, 1].
     ``tokenizer`` switches both the signatures and the verification to a
     custom token set (e.g. ``char_ngrams`` shingles).
 
@@ -1100,13 +835,15 @@ def minhash_lsh_pairs(
     the pair list (one row per doc, not per pair) — so a caller at
     pair-infeasible scale gets a usable dedup artifact instead of advice.
     """
+    _check_threshold(threshold)
     if on_budget not in ("error", "representatives"):
         raise ValueError(f"bad on_budget {on_budget!r}")
-    projected: int | None = None
+    projection: tuple[int, int] | None = None
     if candidate_budget is not None:
-        projected = estimate_lsh_candidates(
+        projection = estimate_lsh_candidates(
             df, id_col, text_col, n_hashes, band_size, tokenizer=tokenizer
         )
+        projected = projection[0]
         if projected > candidate_budget:
             if on_budget == "representatives":
                 return lsh_representatives(
@@ -1135,12 +872,8 @@ def minhash_lsh_pairs(
         with_size=True,
     )
     a, b = stacked.alias("a"), stacked.alias("b")
-    # _size_compatible INSIDE the join condition (r14): a lossless
-    # All-Pairs length cut — any pruned pair has jaccard <= min(sz)/max(sz)
-    # < threshold, so _verify_candidates would drop it anyway — applied
-    # BEFORE the distinct so size-incompatible collisions never enter that
-    # shuffle (the sf10 stream this guards measured 452.8M rows pre-cut;
-    # same move the r13 prefix joins made).
+    # the size cut inside the join keeps size-incompatible collisions out
+    # of the distinct shuffle (the sf10 stream measured 452.8M rows pre-cut)
     cand = (
         a.join(
             b,
@@ -1153,7 +886,7 @@ def minhash_lsh_pairs(
     )
     return _verify_candidates(
         cand, _docsets(df, id_col, text_col, tokenizer), verify, threshold,
-        projected_candidates=projected,
+        projection=projection,
     )
 
 
@@ -1161,22 +894,63 @@ def _docsets(
     df: DataFrame, id_col: str, text_col: str, tokenizer: Column | None
 ) -> DataFrame:
     """The ``(doc_id, toks, sz)`` verification input shared by
-    :func:`minhash_lsh_pairs` and :func:`lsh_representatives` — one
-    definition so the tokenization half of the verification contract
-    cannot drift between the two paths (the jaccard half lives in
-    :func:`_verify_candidates`).
+    :func:`minhash_lsh_pairs` and :func:`lsh_representatives`.
 
     A custom tokenizer is distinct-wrapped: the operator's contract is
-    token-SET jaccard, and before r14 a duplicate-emitting tokenizer made
-    the two verify modes DISAGREE — bitmask computed true set jaccard
-    while the arrays mode divided by multiset sizes ('x x x x' vs 'x':
-    1.0 vs 0.25), so verify='auto' answered differently depending on
-    vocabulary size (r14 review finding)."""
+    token-SET jaccard, and a duplicate-emitting tokenizer would otherwise
+    make the tiers disagree — popcount tiers compute set jaccard while
+    arrays would divide by multiset sizes ('x x x x' vs 'x': 1.0 vs
+    0.25)."""
     tok_col = tokens(text_col) if tokenizer is None else F.array_distinct(tokenizer)
     return df.select(
         F.col(id_col).alias("doc_id"),
         tok_col.alias("toks"),
     ).withColumn("sz", F.size("toks"))
+
+
+def _verify_tier(
+    vocab_n: int | None,
+    avg_sz: float | None,
+    projected: int | None,
+    n_docs: int | None,
+    dense: bool,
+) -> str:
+    """The ``verify='auto'`` tier policy, from probed facts: vocabulary size
+    (None past the probe cap), sampled mean set size, the projected
+    candidate stream and corpus size (None when the caller has no
+    budget), and whether the candidate stream is dense.  Every boundary
+    was measured with interleaved same-JVM A/Bs and identical checksums:
+
+    - vocab <= 64 → ``bitmask`` (one long, popcount);
+    - sparse streams (``dense=False``: the representatives path's hub
+      edges are LINEAR in the corpus) → ``arrays``: a dictionary build is
+      an O(corpus) fixed cost that never amortizes there (q119 14.1 s
+      arrays vs 20.6 s blockmask);
+    - vocab <= :data:`_BLOCKMASK_VOCAB_CAP` and the mask no wider than the
+      token array (``n_words <= avg_sz``) → ``blockmask`` (sf1, 5 words vs
+      ~31 tokens: 9.0 s vs 15.5 s intarrays vs 36.4 s arrays);
+    - vocab <= :data:`_INTARRAYS_VOCAB_CAP` and a projected stream at
+      least 2× the token relation (``n_docs × avg_sz``) → ``intarrays``.
+      Its dictionary build must amortize: sf10 token family, ratio ~29,
+      226.6 s intarrays vs 293.7 s arrays; q54's shingle degrade, ratio
+      0.4, 189 s vs 84 s.  2× splits the two with >5× margin each side;
+    - otherwise → ``arrays``."""
+    if vocab_n is None:
+        return "arrays"
+    if vocab_n <= 64:
+        return "bitmask"
+    if not dense:
+        return "arrays"
+    if vocab_n <= _BLOCKMASK_VOCAB_CAP and (vocab_n + 63) // 64 <= avg_sz:
+        return "blockmask"
+    if (
+        projected is not None
+        and avg_sz > 0
+        and vocab_n <= _INTARRAYS_VOCAB_CAP
+        and projected >= 2 * n_docs * avg_sz
+    ):
+        return "intarrays"
+    return "arrays"
 
 
 def _verify_candidates(
@@ -1185,170 +959,100 @@ def _verify_candidates(
     verify: str,
     threshold: float,
     dense_candidates: bool = True,
-    projected_candidates: int | None = None,
+    projection: tuple[int, int] | None = None,
+    positions: tuple[DataFrame, int] | None = None,
 ) -> DataFrame:
     """Exact-Jaccard verification of a ``(doc_a, doc_b)`` candidate frame
-    against a ``(doc_id, toks, sz)`` docsets frame — the shared final stage
-    of :func:`minhash_lsh_pairs` and :func:`lsh_representatives` (one
-    definition, so the two paths cannot silently diverge on the jaccard
-    fixed-point/rounding contract).  Returns ``(doc_a, doc_b, n_common,
-    jaccard)`` with ``jaccard`` already 4-rounded and thresholded.
+    against a ``(doc_id, toks, sz)`` docsets frame — the one verifier of
+    the pair family, whatever the candidate source (prefix join, banded
+    LSH, representative hub edges).  It alone joins both sides, applies
+    the All-Pairs size cut (:func:`_size_compatible`), computes
+    ``n_common`` and the 4-dp :func:`_jaccard`, and thresholds; returns
+    ``(doc_a, doc_b, n_common, jaccard)``.
 
-    Verification tiers (all exact — explicit bit positions, no hashing):
-    'bitmask' (vocab <= 64: one long, popcount), 'blockmask' (r15, vocab
-    <= :data:`_BLOCKMASK_VOCAB_CAP`: multi-word bitsets — the same tier
-    the prefix path has used since r13, now shared with EVERY candidate
-    source including banded LSH; popcount over ~vocab/64 longs beats
-    ``array_intersect``'s per-pair string hash-set both in CPU and in
-    join-shuffle bytes when the mask is NARROW), 'intarrays' (r16, vocab
-    <= :data:`_INTARRAYS_VOCAB_CAP`: ``array_intersect`` over
-    dictionary-encoded int positions — O(sz) per pair regardless of
-    vocabulary width, int hashing and ~4 B/token shuffle rows instead of
-    strings), 'arrays' (general vocabularies).  'auto' probes vocabulary
-    size through the same bounded-sample ladder the pair strategies use.
+    A tier supplies only its per-document representation and its
+    ``n_common`` expression.  All tiers are exact — the encoded ones use
+    explicit dictionary positions (:func:`_token_positions`), no hashing:
 
-    ``dense_candidates`` steers 'auto' between the encoded tiers and
-    arrays: the dictionary build is an O(corpus) fixed cost (vocab probe
-    + position join + per-doc groupBy) that amortizes only over a
-    candidate stream much larger than the corpus.  Pair ENUMERATION is
-    that regime; the representatives path's hub-edge stream is LINEAR in
-    the corpus and measured the other way (r15: q119 14.1 s arrays vs
-    20.6 s blockmask — the fixed cost never amortizes), so
-    :func:`lsh_representatives` passes False.
+    - ``bitmask``: one 64-bit mask (vocab <= 64), ``bit_count`` of the AND;
+    - ``blockmask``: a multi-word bitset (vocab <=
+      :data:`_BLOCKMASK_VOCAB_CAP`), popcount folded over the words with
+      ``zip_with``/``aggregate`` — measured 3× faster than a plan-time
+      unrolled ``get`` sum, which re-traverses the joined arrays per word
+      (q54 sf1, 30 words: 36.3 s vs 116.4 s);
+    - ``intarrays``: ``array_intersect`` over int positions (vocab <=
+      :data:`_INTARRAYS_VOCAB_CAP`) — O(sz) per pair regardless of
+      vocabulary width, ~4 B/token join rows instead of strings;
+    - ``arrays``: ``array_intersect`` over the token strings (general).
 
-    Dense-auto ladder, all boundaries measured with interleaved same-JVM
-    A/Bs and identical output checksums: vocab <= 64 → bitmask; <= 4096
-    AND mask narrower than the token array (``n_words <= sampled
-    avg_sz``) → blockmask (sf1, 5 words vs ~31 tokens: 9.0 s vs 15.5 s
-    intarrays vs 36.4 s arrays); wider-or-larger up to 65536 →
-    intarrays (r16 sf10, vocab 5246, 72.8M pairs: 226.6 s vs 293.7 s
-    arrays, −23%); past the int cap → arrays.  Explicit pins are always
-    honored."""
+    ``verify='auto'`` probes the vocabulary (:func:`_vocab_if_small`, at
+    the widest cap the policy can still use) and the mean set size, then
+    asks :func:`_verify_tier`; explicit pins are always honored.
+    ``projection`` is the caller's ``(projected candidates, n_docs)``;
+    ``positions`` is a :func:`_token_positions` result the caller already
+    built (the prefix path keys its join on it)."""
     if verify not in ("auto", "bitmask", "blockmask", "intarrays", "arrays"):
         raise ValueError(f"bad verify {verify!r}")
-    small_vocab: list[str] | None = None
+    vocab: list[str] | None = None
     if verify == "auto":
-        # ONE sample-first probe (<= 2 bounded jobs) settles every tier
-        # question — the r16 probe collapse; the sparse-candidates path
-        # only needs the 64-bit-mask answer, so it probes at cap 64 and
-        # keeps its former cost.  Dense streams probe at the int-tier cap:
-        # when the blockmask is too wide (or the vocabulary exceeds its
-        # 4096 cap outright) the fallback is now the int-array tier, not
-        # strings — measured on the 72.8M-pair sf10 stream, interleaved
-        # same-JVM with identical checksums: arrays 293.7 s median vs
-        # intarrays 226.6 s (−23%; r16).  An open-vocabulary corpus whose
-        # SAMPLE stays under the cap pays one bounded full-corpus distinct
-        # collect before settling on arrays — linear, and small against
-        # the dense verification join this path exists to serve.
-        cap = _INTARRAYS_VOCAB_CAP if dense_candidates else 64
-        small_vocab = _vocab_if_small(docsets, cap)
-        if small_vocab is not None and len(small_vocab) <= 64:
-            verify = "bitmask"
-        elif small_vocab:
-            # one bounded sample agg (same 4096-doc sample discipline as
-            # the vocabulary probes) feeds both sub-gates below
-            row = (
-                docsets.limit(4096)
-                .agg(F.avg("sz").alias("avg_sz"))
-                .collect()[0]
-            )
-            avg_sz = float(row["avg_sz"] or 0.0)
-            if (
-                len(small_vocab) <= _BLOCKMASK_VOCAB_CAP
-                and (len(small_vocab) + 63) // 64 <= avg_sz
-            ):
-                # width gate: narrow masks beat int arrays decisively
-                # (sf1: blockmask 9.0 s vs intarrays 15.5 s vs 36.4 s
-                # arrays)
-                verify = "blockmask"
-            elif projected_candidates is not None and avg_sz > 0:
-                # amortization gate for the int tier: its dictionary
-                # build (explode + position join + per-doc groupBy) is an
-                # O(corpus-tokens) fixed cost the arrays tier never pays,
-                # so it must be amortized by a candidate stream well past
-                # the token relation.  Both sides measured at sf10,
-                # interleaved, identical checksums: the token family's
-                # ~453M-projected / 15.5M-token stream (ratio ~29) ran
-                # 226.6 s intarrays vs 293.7 s arrays (−23%), while
-                # q54's shingle degrade at 12.5M projected / ~30M trigram
-                # rows (ratio 0.4) ran 189 s intarrays vs 84 s arrays —
-                # the build never paid for itself.  2x the token relation
-                # splits the two regimes with >5x margin on each side.
-                # Unbudgeted callers (no projection) keep arrays — the
-                # conservative status quo.
-                token_rows = docsets.count() * avg_sz
-                verify = (
-                    "intarrays"
-                    if projected_candidates >= 2 * token_rows
-                    else "arrays"
-                )
-            else:
-                verify = "arrays"
-        else:
-            verify = "arrays"
-    if verify in ("blockmask", "intarrays"):
-        # one bounded limit(cap+1) collect settles BOTH the cap check and
-        # the vocabulary size (ZERO extra jobs when auto already probed) —
-        # a pinned caller needs no separate distinct-count jobs
+        # intarrays needs a projection, blockmask a dense stream: probe no
+        # wider than the widest tier still reachable
         cap = (
-            _INTARRAYS_VOCAB_CAP if verify == "intarrays"
+            64 if not dense_candidates
+            else _INTARRAYS_VOCAB_CAP if projection is not None
             else _BLOCKMASK_VOCAB_CAP
         )
-        vocab_df, vocab_n = _vocab_positions(
-            docsets,
-            cap,
-            f"{verify} verification requires vocabulary <= "
-            f"{cap} distinct tokens; use "
-            "verify='arrays' or 'auto'",
-            vocab=small_vocab,
-        )
-        tokp = (
-            docsets.select("doc_id", "sz", F.explode("toks").alias("token"))
-            .join(F.broadcast(vocab_df), "token")
-            .select("doc_id", "sz", "pos")
-        )
-        if verify == "intarrays":
-            return _intset_pair_jaccard(
-                cand, _intsets_from_tokp(tokp), threshold, size_cut=True
+        vocab = _vocab_if_small(docsets, cap)
+        avg_sz = None
+        if vocab is not None and len(vocab) > 64:
+            # the same bounded 4096-doc sample discipline as the probe
+            avg_sz = float(
+                docsets.limit(4096).agg(F.avg("sz")).collect()[0][0] or 0.0
             )
-        n_words = (max(vocab_n, 1) + 63) // 64
-        masks = _blockmasks_from_tokp(tokp, n_words)
-        return _blockmask_pair_jaccard(
-            cand, masks, threshold, size_cut=True, n_words=n_words
+        projected, n_docs = projection or (None, None)
+        verify = _verify_tier(
+            None if vocab is None else len(vocab),
+            avg_sz, projected, n_docs, dense_candidates,
         )
-    if verify == "bitmask":
-        masks = _doc_masks(docsets, vocab=small_vocab)
-        va = masks.select(F.col("doc_id").alias("doc_a"), F.col("mask").alias("mask_a"))
-        vb = masks.select(F.col("doc_id").alias("doc_b"), F.col("mask").alias("mask_b"))
-        inter_bits = F.bit_count(F.col("mask_a").bitwiseAND(F.col("mask_b")))
-        union_bits = F.bit_count(F.col("mask_a").bitwiseOR(F.col("mask_b")))
-        return (
-            cand.join(va, "doc_a")
-            .join(vb, "doc_b")
-            .withColumn("n_common", inter_bits.cast("int"))
-            .withColumn("jaccard", F.round(inter_bits / union_bits, 4))
-            .filter(F.col("jaccard") >= threshold)
-            .select("doc_a", "doc_b", "n_common", "jaccard")
+    a, b = F.col("rep_a"), F.col("rep_b")
+    n_common = F.size(F.array_intersect(a, b))
+    if verify == "arrays":
+        rep = docsets.select("doc_id", "sz", F.col("toks").alias("rep"))
+    elif verify == "bitmask":
+        rep = _doc_masks(docsets, vocab=vocab).select(
+            "doc_id",
+            F.bit_count("mask").cast("int").alias("sz"),
+            F.col("mask").alias("rep"),
         )
-    sa = docsets.select(
-        F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"), F.col("sz").alias("sz_a")
-    )
-    sb = docsets.select(
-        F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"), F.col("sz").alias("sz_b")
-    )
+        n_common = F.bit_count(a.bitwiseAND(b))
+    else:
+        tokp, vocab_n = positions or _token_positions(docsets, verify, vocab)
+        if verify == "intarrays":
+            rep = tokp.groupBy("doc_id", "sz").agg(
+                F.collect_list("pos").alias("rep")
+            )
+        else:
+            rep = _blockmasks(tokp, (max(vocab_n, 1) + 63) // 64)
+            n_common = F.aggregate(
+                F.zip_with(a, b, lambda x, y: F.bit_count(x.bitwiseAND(y))),
+                F.lit(0),
+                lambda acc, x: acc + x,
+            )
+
+    def side(s: str) -> DataFrame:
+        return rep.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("sz").alias(f"sz_{s}"),
+            F.col("rep").alias(f"rep_{s}"),
+        )
+
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        # lossless length cut before the set intersection (All-Pairs bound)
+        cand.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
         .filter(_size_compatible(F.col("sz_a"), F.col("sz_b"), threshold))
-        .withColumn("n_common", F.size(F.array_intersect("toks_a", "toks_b")))
+        .withColumn("n_common", n_common.cast("int"))
         .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")),
-                4,
-            ),
+            "jaccard", _jaccard(F.col("n_common"), F.col("sz_a"), F.col("sz_b"))
         )
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "n_common", "jaccard")
@@ -1414,6 +1118,7 @@ def lsh_representatives(
     r14 partly measure the cut itself."""
     from foresttime_builder_spark.operators.graph import connected_components
 
+    _check_threshold(threshold)
     stacked = _stacked_bands(
         df, id_col, text_col, n_hashes, band_size, tokenizer=tokenizer,
         with_size=True,
@@ -1443,9 +1148,7 @@ def lsh_representatives(
     )
     verified = _verify_candidates(
         edges, _docsets(df, id_col, text_col, tokenizer), verify, threshold,
-        # hub-edge stream is linear in the corpus: the blockmask tier's
-        # O(corpus) mask build never amortizes here (measured — see
-        # _verify_candidates docstring), so auto resolves to arrays
+        # hub-edge stream is linear in the corpus (see _verify_tier)
         dense_candidates=False,
     ).select("doc_a", "doc_b")
     # exact-duplicate star tier: hub edges alone cannot GUARANTEE that
@@ -1665,8 +1368,7 @@ def incremental_dedup(
     the semantics stay self-contained (swap ``history`` for the persisted
     projection — the plan below the scan is identical).
     """
-    if threshold <= 0 or threshold > 1:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+    _check_threshold(threshold)
     if n_hashes % band_size != 0:
         raise ValueError(
             f"band_size {band_size} must divide n_hashes {n_hashes}"
@@ -1764,13 +1466,13 @@ def containment_pairs(
     Blocking is a LOSSLESS containment prefix filter, not LSH: for
     C(A, B) >= t, B must contain at least ``ceil(t*|A|)`` of A's tokens,
     so B must contain at least one of A's first ``|A| - ceil(t*|A|) + 1``
-    tokens in rarest-first order (if it missed all of them it already
-    misses too many).  Only those prefix tokens of the CONTAINED side
-    join the full inverted index of the container side — exact recall,
-    and because the prefix picks the rarest tokens, the candidate stream
-    stays small (symmetric-MinHash banding was tried first and rejected:
-    a 1.0-containment pair with Jaccard 0.3 — the operator's whole point
-    — collides in a band with probability ~3%).
+    tokens in rarest-first order (:func:`_rarest_prefix`; if it missed all
+    of them it already misses too many).  Only those prefix tokens of the
+    CONTAINED side join the full inverted index of the container side —
+    exact recall, and because the prefix picks the rarest tokens, the
+    candidate stream stays small (symmetric-MinHash banding was tried
+    first and rejected: a 1.0-containment pair with Jaccard 0.3 — the
+    operator's whole point — collides in a band with probability ~3%).
 
     Returns ``(contained_id, container_id, n_common, containment)`` with
     containment rounded to 4 decimals (the q16 convention); both
@@ -1785,15 +1487,10 @@ def containment_pairs(
     the levers are a higher threshold, dedup-then-contain (cluster
     representatives first), or corpus sharding.
     """
-    if threshold <= 0 or threshold > 1:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+    _check_threshold(threshold)
     # persisted: the tokenized relation feeds the prefix stage, the full
-    # inverted index, AND both verification sides (the token_jaccard_pairs
-    # discipline; without it the corpus re-tokenizes ~5x).  The ranked
-    # rarest-first prefix below intentionally mirrors token_jaccard_pairs'
-    # formula with the CONTAINED side's |A| as the sole denominator —
-    # kept inline because the Jaccard path's prefix lives inside its
-    # strategy branches and shares no extractable seam yet.
+    # inverted index, AND both verification sides (without it the corpus
+    # re-tokenizes ~5x)
     docsets = df.select(
         F.col(id_col).alias("doc_id"), tokens(text_col).alias("toks")
     ).withColumn("sz", F.size("toks")).persist()
@@ -1812,20 +1509,8 @@ def containment_pairs(
     tok = docsets.select(
         "doc_id", "sz", F.explode("toks").alias("token")
     ).persist()
-    dfreq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("_df"))
-    prefix = (
-        tok.join(F.broadcast(dfreq), "token")
-        .withColumn(
-            "_rnk",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy("_df", "token")
-            ),
-        )
-        .filter(
-            F.col("_rnk")
-            <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-        )
-        .select(F.col("doc_id").alias("contained_id"), "token")
+    prefix = _rarest_prefix(tok, "token", threshold, containment=True).select(
+        F.col("doc_id").alias("contained_id"), "token"
     )
     index = tok.select(F.col("doc_id").alias("container_id"), "token")
     cand = (

@@ -885,7 +885,7 @@ def q120_cluster_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate_budget=1 forces both upper rungs infeasible at any SF;
     # degrade_budget=1 keeps the LSH rung's forwarded budget forcing too.
     # strategy is PINNED to 'prefix' because the candidate-budget guard
-    # applies to the prefix/naive join strategies only — 'auto' resolves
+    # applies to the prefix join strategy only — 'auto' resolves
     # to the mask family at gate vocabularies and runs the exact path,
     # never reaching the ladder (found while gating this query: the
     # 'forced' run silently produced the exact clustering instead)

@@ -21,8 +21,8 @@ def _corpus(spark, vocab: int):
 
 
 def test_pinned_bitmask_raises_on_wide_vocab(spark):
-    # the precondition check is plan-time now (bounded vocab collect in
-    # _vocab_positions), so the raise happens at call time, before any
+    # the precondition check is plan-time (bounded vocab collect in
+    # _token_positions), so the raise happens at call time, before any
     # full-corpus job
     wide = _corpus(spark, vocab=120)
     with pytest.raises(Exception, match="64 distinct tokens"):
@@ -230,37 +230,6 @@ def test_estimator_order_of_magnitude(spark):
         docsets.unpersist()
 
 
-def test_estimator_naive_mode_counts_full_stream(spark):
-    """strategy='naive' has no prefix cut, so its guard must project the
-    FULL per-token C(df,2) sum — strictly above the prefix projection on
-    any corpus where the prefix filter actually cuts (here every doc keeps
-    ~6 of 10 tokens at t=0.5), and exactly sum C(df,2) when unsampled."""
-    from foresttime_builder_spark.operators.dedup import (
-        estimate_candidate_pairs,
-        tokens,
-    )
-    from pyspark.sql import functions as F
-
-    corpus = _corpus(spark, vocab=500)
-    docsets = (
-        corpus.select(F.col("doc_id"), tokens("text").alias("toks"))
-        .withColumn("sz", F.size("toks"))
-        .persist()
-    )
-    try:
-        naive = estimate_candidate_pairs(
-            docsets, 0.5, sample_docs=10**9, prefix=False
-        )
-        pref = estimate_candidate_pairs(
-            docsets, 0.5, sample_docs=10**9, prefix=True
-        )
-        assert naive > pref > 0
-        # every token appears in exactly 10 docs -> 500 * C(10,2)
-        assert naive == 500 * 45
-    finally:
-        docsets.unpersist()
-
-
 def test_derive_candidate_budget_scales_and_floors(spark):
     """The production budget helper: positive, floored at 1M, linear in
     n_workers, monotone in safety, and usable directly as the guard."""
@@ -453,3 +422,31 @@ def test_prefix_slack_keeps_rounding_boundary_pair(spark):
     assert [(r.doc_a, r.doc_b, r.n_common, r.jaccard) for r in got] == [
         (0, 1, 9999, 0.5)
     ]
+
+
+@pytest.mark.parametrize(
+    "vocab_n, avg_sz, projected, n_docs, dense, tier",
+    [
+        (None, None, None, None, True, "arrays"),  # past the probe cap
+        (0, None, None, None, True, "bitmask"),
+        (64, None, None, None, True, "bitmask"),
+        (64, None, None, None, False, "bitmask"),
+        (65, 31.0, None, None, False, "arrays"),  # sparse stream
+        (320, 31.0, None, None, True, "blockmask"),  # 5 words <= 31 tokens
+        (4096, 64.0, None, None, True, "blockmask"),  # cap, 64 words
+        (4096, 63.0, None, None, True, "arrays"),  # mask wider than set
+        (4097, 100.0, None, None, True, "arrays"),  # no projection
+        # 2x amortization gate: token relation 1000 docs x 10 tokens
+        (5246, 10.0, 20_000, 1000, True, "intarrays"),
+        (5246, 10.0, 19_999, 1000, True, "arrays"),
+        (5246, 0.0, 20_000, 1000, True, "arrays"),  # empty sample
+        (65536, 10.0, 10**9, 1000, True, "intarrays"),
+        (65537, 10.0, 10**9, 1000, True, "arrays"),  # past the int cap
+        (5246, 10.0, 10**9, 1000, False, "arrays"),
+    ],
+)
+def test_verify_tier_ladder(vocab_n, avg_sz, projected, n_docs, dense, tier):
+    """The verify='auto' policy is a pure function of probed facts."""
+    from foresttime_builder_spark.operators.dedup import _verify_tier
+
+    assert _verify_tier(vocab_n, avg_sz, projected, n_docs, dense) == tier

@@ -310,7 +310,7 @@ def test_cluster_near_dups_representatives_fallback(spark):
         (4, "p q r s t u v w x y"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    # strategy='prefix': the budget guard applies to prefix/naive only —
+    # strategy='prefix': the budget guard applies to prefix only —
     # 'auto' resolves to the mask family on this vocabulary and the exact
     # path runs without ever reaching the ladder
     out = cluster_near_dups(

@@ -105,7 +105,41 @@ def test_containment_asymmetric_detection(spark):
 
 
 def test_containment_validation():
+    """Every pair operator rejects a threshold outside (0, 1] before it
+    touches its input: at t <= 0 "all pairs with J >= t" includes pairs
+    sharing no token or band, which no candidate source can enumerate."""
+    from foresttime_builder_spark.operators.dedup import (
+        containment_pairs,
+        lsh_representatives,
+        minhash_lsh_pairs,
+        token_jaccard_pairs,
+    )
+
+    for op in (
+        containment_pairs,
+        token_jaccard_pairs,
+        minhash_lsh_pairs,
+        lsh_representatives,
+    ):
+        for t in (0.0, -0.5, 1.5):
+            with pytest.raises(ValueError, match="threshold"):
+                op(None, "i", "t", threshold=t)
+
+
+def test_containment_exact_threshold_survives_float_prefix(spark):
+    """0.55 * 100 is 55.00000000000001 in floating point: a bare ceil
+    would cut doc 0's containment prefix to its 45 unique (df=1) tokens,
+    so the pair at exactly C = 0.55 would never become a candidate."""
     from foresttime_builder_spark.operators.dedup import containment_pairs
 
-    with pytest.raises(ValueError, match="threshold"):
-        containment_pairs(None, "i", "t", threshold=1.5)
+    shared = [f"s{i:02d}" for i in range(55)]
+    uniq = [f"u{i:02d}" for i in range(45)]
+    df = spark.createDataFrame(
+        [(0, " ".join(uniq + shared)), (1, " ".join(shared))],
+        "doc_id long, text string",
+    )
+    got = sorted(
+        tuple(r)
+        for r in containment_pairs(df, "doc_id", "text", threshold=0.55).collect()
+    )
+    assert got == [(0, 1, 55, 0.55), (1, 0, 55, 1.0)]
