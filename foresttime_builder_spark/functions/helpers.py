@@ -18,6 +18,8 @@ dependent), DIVISION replaces the province's last character with '0'.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 
@@ -33,10 +35,13 @@ def apply_layers(
 
     The pyramid is folded into ONE generated nested-``SELECT`` statement
     (explicit column lists, no ``*`` re-expansion) executed with a single
-    ``spark.sql(text, __base__=base)`` call.  Classic PySpark analyzes
-    EAGERLY on every Dataset transform, so the former one-``withColumns``-
-    per-layer form re-ran the analyzer over the deepening ~250-column plan
-    once per layer — ~33 ms × 49 layers ≈ 1.6 s of the q26 build, measured
+    ``spark.sql`` call over a uniquely named temp view of ``base``, whose
+    NAME alone is dropped afterwards: ``spark.sql(text, df=...)`` drops
+    its views with ``Catalog.dropTempView``, which also uncaches the
+    view's plan and so silently un-persists a cached ``base``.  Classic
+    PySpark analyzes EAGERLY on every Dataset transform, so the former
+    one-``withColumns``-per-layer form re-ran the analyzer over the
+    deepening ~250-column plan once per layer — ~33 ms × 49 layers ≈ 1.6 s of the q26 build, measured
     with cProfile (r15 optimization round: 2.5 s of a 3.0 s build was py4j
     ``recv_into``, 49 ``withColumns`` calls = 1.62 s).  One sql() call pays
     parse + analysis once: q26 build 2.06 → 1.67 s median (interleaved A/B,
@@ -83,8 +88,10 @@ def apply_layers(
             dset = {d.lower() for d in drops}
             expected = [c for c in expected if c.lower() not in dset]
 
+    spark = base.sparkSession
+    view = f"__apply_layers_{uuid.uuid4().hex}"
     cur = list(base.columns)
-    sql = "SELECT * FROM {__base__}"
+    sql = f"SELECT * FROM {view}"
     for exprs, drops in _merge_layers(layers):
         dset = {d.lower() for d in drops}
         if exprs:
@@ -124,15 +131,11 @@ def apply_layers(
             "SELECT " + ", ".join(_bq(c) for c in expected)
             + " FROM (" + sql + ")"
         )
-    # spark.sql(text, **kwargs) runs the text through PySpark's string
-    # Formatter, where a literal '{'/'}' (e.g. a regex quantifier
-    # '[0-9]{4}' inside a layer expression) would crash or mis-substitute.
-    # Escape every brace the layers contributed, then append the ONE real
-    # placeholder — only it reaches the formatter unescaped.
-    sql = sql.replace("{", "{{").replace("}", "}}").replace(
-        "{{__base__}}", "{__base__}"
-    )
-    return base.sparkSession.sql(sql, __base__=base)
+    base.createTempView(view)
+    try:
+        return spark.sql(sql)  # analyzes eagerly: the view can go after
+    finally:
+        spark._jsparkSession.sessionState().catalog().dropTempView(view)
 
 
 _IDENT = None  # compiled lazily; helpers imports before re is warm

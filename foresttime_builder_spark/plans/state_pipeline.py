@@ -8,7 +8,8 @@ run_workflow.yml:40-48``) with one Spark job over any number of states:
   interpolated intermediate, then derives BOTH mortality variants from it
   (mirroring the reuse in ``scripts/state-parquet.R:15-33``) and writes
   ``annualized_midpt`` / ``annualized_mortyr`` parquet datasets partitioned
-  by STATECD;
+  by STATECD.  The ``auto`` MORTYR probe and both branches of the sink
+  write read the persisted panel (``InMemoryTableScan``), not the CSVs;
 - a single ``repartition(plot_ID)`` after tidy makes every downstream window
   shuffle-free (tree_ID is plot-prefixed, SURVEY §3.1).
 """
@@ -20,26 +21,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from foresttime_builder_spark.plans import carbon, fia
-
-
-def annualized_both(
-    db: dict[str, DataFrame], estimate: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """(midpt, mortyr) annualized(+estimated) tables off one shared
-    interpolated intermediate."""
-    tidy = fia.fia_tidy(db)
-    interp = fia.interpolate_data(fia.expand_data(tidy))
-    interp = interp.persist()
-
-    out = []
-    # "auto" keeps the reference's runtime downgrade for MORTYR-less states;
-    # the probe re-reads the persisted intermediate, so it is cheap here
-    for use_mortyr in (False, "auto"):
-        adj = fia.adjust_mortality(interp, use_mortyr=use_mortyr)
-        if estimate:
-            adj = carbon.estimate_carbon(carbon.prep_carbon(adj))
-        out.append(adj)
-    return out[0], out[1]
 
 
 def run_states(
@@ -63,35 +44,38 @@ def run_states(
     """
     tidy = fia.fia_tidy(db)
     interp = fia.interpolate_data(fia.expand_data(tidy)).persist()
+    try:
+        # the "auto" probe (the reference's runtime downgrade for
+        # MORTYR-less states) is the first job over the persisted panel;
+        # the sink's two union branches then read it from memory instead
+        # of re-running CSV → interpolate each
+        tagged = [
+            fia.adjust_mortality(interp, use_mortyr=um).withColumn(
+                "variant", F.lit(name)
+            )
+            for name, um in (("annualized_midpt", False),
+                             ("annualized_mortyr", "auto"))
+        ]
+        both = tagged[0].unionByName(tagged[1])
+        if estimate:
+            both = carbon.estimate_carbon(carbon.prep_carbon(both))
 
-    # "auto" keeps the reference's runtime downgrade for MORTYR-less
-    # states; its probe re-reads the persisted intermediate, so it is
-    # cheap here
-    tagged = [
-        fia.adjust_mortality(interp, use_mortyr=um).withColumn(
-            "variant", F.lit(name)
+        # recover STATECD from the composite plot key for partitioning
+        if partition_by == "STATECD" and "STATECD" not in both.columns:
+            both = both.withColumn(
+                "STATECD",
+                F.split(F.col("plot_ID"), "_").getItem(0).cast("int"),
+            )
+        part_cols = ["variant"] + (
+            [partition_by] if partition_by in both.columns else []
         )
-        for name, um in (("annualized_midpt", False),
-                         ("annualized_mortyr", "auto"))
-    ]
-    both = tagged[0].unionByName(tagged[1])
-    if estimate:
-        both = carbon.estimate_carbon(carbon.prep_carbon(both))
-
-    # recover STATECD from the composite plot key for partitioning
-    if partition_by == "STATECD" and "STATECD" not in both.columns:
-        both = both.withColumn(
-            "STATECD", F.split(F.col("plot_ID"), "_").getItem(0).cast("int")
-        )
-    part_cols = ["variant"] + (
-        [partition_by] if partition_by in both.columns else []
-    )
-    root = os.path.join(out_dir, "annualized")
-    both.write.mode("overwrite").partitionBy(*part_cols).parquet(root)
-    # the write consumed the cache; returned paths read the PARQUET, so
-    # nothing lazy still needs it — release, or a long-lived session
-    # (bench loop, test suite) accumulates one panel cache per call
-    interp.unpersist()
+        root = os.path.join(out_dir, "annualized")
+        both.write.mode("overwrite").partitionBy(*part_cols).parquet(root)
+    finally:
+        # the returned paths read the PARQUET, so nothing lazy still needs
+        # the panel — release it, on error too, or a long-lived session
+        # (bench loop, test suite) accumulates one panel cache per call
+        interp.unpersist()
     return {
         name: os.path.join(root, f"variant={name}")
         for name in ("annualized_midpt", "annualized_mortyr")

@@ -1,4 +1,5 @@
-"""Cache-lifetime semantics: release_on_gc + carry_cache.
+"""Cache-lifetime semantics: release_on_gc + carry_cache, and plan
+builders that must not uncache the frame they build on.
 
 The operators persist() intermediate relations (tokenized corpora, mask
 relations) that feed several branches of one returned plan.  The finalizer
@@ -14,7 +15,10 @@ import gc
 
 from pyspark.sql import functions as F
 
+from foresttime_builder_spark.functions.helpers import apply_layers
 from foresttime_builder_spark.operators.cache import carry_cache, release_on_gc
+from foresttime_builder_spark.plans import fia
+from tests.fia_fixtures import spark_db
 
 
 def _cached_frame(spark):
@@ -61,3 +65,41 @@ def test_carry_cache_noop_without_metadata(spark):
     out = carry_cache(plain.select("id"), plain)
     assert out.count() == 10
     assert "_ft_cache_finalizers" not in out.__dict__
+
+
+def _n_persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _reads_cache(df) -> bool:
+    return "InMemoryRelation" in str(
+        df._jdf.queryExecution().withCachedData().toString()
+    )
+
+
+def test_apply_layers_keeps_persisted_base_cached(spark):
+    """apply_layers must not un-persist its base, and must leave no temp
+    view behind (spark.sql(text, df=...) drops its view through
+    Catalog.dropTempView, which uncaches the view's plan)."""
+    cached = _cached_frame(spark)
+    n_rdds = _n_persisted(spark)
+    views = sorted(t.name for t in spark.catalog.listTables())
+    out = apply_layers(cached, [({"w": "v + 1"}, []), ({"z": "w * 2"}, ["v"])])
+    assert _n_persisted(spark) == n_rdds
+    assert _reads_cache(out)
+    assert sorted(t.name for t in spark.catalog.listTables()) == views
+    assert out.agg({"z": "sum"}).collect()[0][0] == sum(
+        (2 * i + 1) * 2 for i in range(100)
+    )
+    cached.unpersist()
+
+
+def test_adjust_mortality_reads_persisted_panel(spark):
+    interp = fia.interpolate_data(
+        fia.expand_data(fia.fia_tidy(spark_db(spark)))
+    ).persist()
+    try:
+        out = fia.adjust_mortality(interp, use_mortyr=False)
+        assert _reads_cache(out)
+    finally:
+        interp.unpersist()

@@ -95,6 +95,99 @@ def test_run_states_writes_both_variants(spark, tmp_path):
     assert m.filter(F.col("s_mid") != F.col("s_mor")).count() > 0
 
 
+def test_run_states_sink_reads_the_persisted_panel(
+    spark, csv_dir, tmp_path, monkeypatch
+):
+    """Both union branches of the sink write (and the ``auto`` probe
+    before it) read the persisted interpolated panel: the write plan has
+    an InMemoryTableScan and no CSV scan outside the cached relation."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    leaves = []
+    parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        plan = self._df._jdf.queryExecution().sparkPlan()
+        it = plan.collectLeaves().iterator()
+        while it.hasNext():
+            leaves.append(it.next().getClass().getSimpleName())
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    db = fia_src.fia_load(spark, ["RI"], csv_dir)
+    state_pipeline.run_states(spark, db, str(tmp_path), estimate=True)
+    assert leaves.count("InMemoryTableScanExec") == 2, leaves
+    assert "FileSourceScanExec" not in leaves, leaves
+
+
+def test_run_states_releases_panel_when_write_fails(spark, csv_dir, tmp_path):
+    import gc
+
+    db = fia_src.fia_load(spark, ["RI"], csv_dir)
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("")
+    gc.collect()  # flush pending release_on_gc finalizers first
+    n_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception):
+        state_pipeline.run_states(spark, db, str(blocker), estimate=False)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_rdds
+
+
+def _values_form(spark, rows, spec):
+    """A dim as the generated ``VALUES`` text it was once built from: the
+    reference for column types, nullability and values."""
+
+    def lit(v, kind):
+        if v is None:
+            return f"CAST(NULL AS {kind.upper()})"
+        if kind == "double":
+            text = "Infinity" if v == float("inf") else repr(v)
+            return f"CAST('{text}' AS DOUBLE)"
+        if kind == "string":
+            return "'" + v.replace("'", "''") + "'"
+        return str(v).lower()  # int, boolean
+
+    vals = ", ".join(
+        "(" + ", ".join(lit(v, k) for v, (_, k) in zip(r, spec)) + ")"
+        for r in rows
+    )
+    cols = ", ".join(c for c, _ in spec)
+    return spark.sql(f"SELECT * FROM VALUES {vals} AS t({cols})")
+
+
+def test_reference_dims_match_values_form(spark, monkeypatch):
+    """Every reference dim (species, TPA, decay, dead-carbon ratio,
+    crprop, the three NSVB level dims) keeps the VALUES form's names,
+    types, nullability and values (NULLs and Infinity included) and
+    plans as a LocalRelation, which broadcasts with no job."""
+    from foresttime_builder_spark.functions import nsvb
+    from foresttime_builder_spark.sources import ref_tables as rt
+
+    built = []
+    values_df = rt.values_df
+
+    def record(spark_, rows, spec):
+        df = values_df(spark_, rows, spec)
+        built.append((rows, spec, df))
+        return df
+
+    monkeypatch.setattr(rt, "values_df", record)
+    monkeypatch.setattr(spark, "_ft_ref_cache", {}, raising=False)
+    for dim in (rt.ref_species, rt.tpa_rules, rt.decay_prop,
+                rt.carbon_ratio_dead, rt.median_crprop, nsvb.level_dims):
+        dim(spark)
+    assert len(built) == 8
+    cells = [v for rows, _, _ in built for r in rows for v in r]
+    assert None in cells and float("inf") in cells
+    for rows, spec, df in built:
+        want = _values_form(spark, rows, spec)
+        assert df.schema == want.schema, spec[0]
+        got = df.collect()
+        assert got == want.collect() and [tuple(r) for r in got] == list(rows)
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.nodeName() == "LocalRelation", spec[0]
+
+
 def test_csv_roundtrip_staging(spark, csv_dir, tmp_path):
     db = fia_src.fia_load(spark, ["RI"], csv_dir, tables=("PLOT", "TREE"))
     fia_src.csv_to_parquet(db, str(tmp_path / "stage"))

@@ -258,9 +258,9 @@ def test_apply_layers_quoted_identifier_dependency(spark):
 
 
 def test_apply_layers_brace_expression(spark):
-    """Literal braces in a layer expression (regex quantifiers) must not
-    crash or corrupt the generated-SQL path's formatter substitution
-    (r15 advice: spark.sql(text, __base__=...) string-formats the text)."""
+    """Literal braces in a layer expression (regex quantifiers) must reach
+    the SQL parser unchanged (r15 advice: the generated statement once
+    went through PySpark's string formatter, which crashed on them)."""
     from foresttime_builder_spark.functions.helpers import apply_layers
 
     base = spark.range(1).selectExpr("'ab 2026 cd' AS s")

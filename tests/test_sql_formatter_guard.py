@@ -1,0 +1,52 @@
+"""Spark-free guard: no package module calls ``.sql(...)`` with keywords.
+
+``spark.sql(text, df=frame)`` is PySpark's string-formatter path: it
+registers each DataFrame keyword as a temp view, then drops it with
+``Catalog.dropTempView``, which also UNCACHES the view's plan.  A
+persisted ``frame`` silently stops being cached (``frame.is_cached``
+still says True): ``run_states`` recomputed its shared interpolated panel
+once per consumer this way.  Build SQL over a frame with
+:func:`foresttime_builder_spark.functions.helpers.apply_layers`, or a
+temp view whose name alone is dropped.  ``args=`` binds SQL parameters
+without the formatter and stays allowed.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+
+import foresttime_builder_spark
+
+PKG = os.path.dirname(foresttime_builder_spark.__file__)
+
+
+def _sql_calls():
+    for root, _dirs, files in os.walk(PKG):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "sql"
+                ):
+                    yield os.path.relpath(path, PKG), node
+
+
+def test_no_sql_call_uses_the_string_formatter():
+    calls = list(_sql_calls())
+    assert calls, "the scan found no .sql(...) call at all"
+    offenders = [
+        f"{path}:{node.lineno}"
+        for path, node in calls
+        if any(kw.arg != "args" for kw in node.keywords)
+    ]
+    assert not offenders, (
+        "spark.sql(text, df=...) un-persists df; see this module's "
+        f"docstring: {offenders}"
+    )
