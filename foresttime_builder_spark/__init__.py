@@ -11,7 +11,7 @@ Layout:
   session     — SparkSession builder tuned for the workload
   operators/  — generic distributed operators (time series, joins, dedup, …)
   sources/    — schemas + readers for FIA tables and reference data
-  functions/  — scalar helper expressions (R-NA semantics, ecoregion decode)
+  functions/  — SQL-text layer building and the NSVB equation system
   plans/      — the FIA pipeline stages (tidy → expand → interpolate →
                 mortality → carbon) and analytic query layer
   streaming/  — Structured Streaming variants of the aggregation layer

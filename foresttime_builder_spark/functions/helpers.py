@@ -1,26 +1,15 @@
-"""Scalar expression helpers replicating R semantics the pipeline relies on.
+"""SQL-text plan building shared by the pipeline layers.
 
-R's three-valued logic matches SQL for AND/OR, but several dplyr/base idioms
-differ from naive Spark translations:
-
-- ``dplyr::if_else(cond, yes, no, missing=m)`` returns ``m`` (default NA)
-  when ``cond`` is NA. Plain ``F.when(cond, yes).otherwise(no)`` returns
-  ``no`` for a null condition — usually what ``missing = no`` means, but not
-  what the default means. :func:`r_if_else` makes the missing branch
-  explicit.
-- ``x %in% ys`` is never NA in R (NA %in% ys → FALSE); Spark's ``isin``
-  returns null for null input. :func:`r_isin` coalesces to false.
-
-Ecoregion decode ports ``getDivision`` (reference ``R/getDivision.R:7-33``):
-PROVINCE strips the trailing subsection code from ``ECOSUBCD`` (length
-dependent), DIVISION replaces the province's last character with '0'.
+:func:`apply_layers` folds dependency-ordered projection layers of SQL-text
+expressions into one generated statement; the FIA interpolators and the
+NSVB carbon DAG are built with it.
 """
 
 from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 
 def apply_layers(
@@ -214,37 +203,3 @@ def _bq(name: str) -> str:
     """Backquote an identifier for generated SQL."""
     return "`" + name.replace("`", "``") + "`"
 
-
-def r_if_else(cond: Column, yes, no, missing=None) -> Column:
-    """``dplyr::if_else`` with explicit NA-condition branch."""
-    yes = yes if isinstance(yes, Column) else F.lit(yes)
-    no = no if isinstance(no, Column) else F.lit(no)
-    missing = missing if isinstance(missing, Column) else F.lit(missing)
-    return F.when(cond.isNull(), missing).when(cond, yes).otherwise(no)
-
-
-def r_isin(col: Column, values) -> Column:
-    """R ``%in%``: null input → false, never null."""
-    return F.coalesce(col.isin(*values), F.lit(False))
-
-
-def get_province(ecosubcd: Column) -> Column:
-    """PROVINCE from ECOSUBCD: trim, then drop the trailing 1-3 chars
-    depending on length (4 → keep 3; 7 → drop 3; else drop 2)."""
-    x = F.trim(ecosubcd)
-    n = F.length(x)
-    return (
-        F.when(n == 0, F.lit(""))
-        .when(n == 4, F.substring(x, 1, 3))
-        .when(n == 7, x.substr(F.lit(1), n - 3))
-        .otherwise(x.substr(F.lit(1), n - 2))
-    )
-
-
-def get_division(ecosubcd: Column) -> Column:
-    """DIVISION: the province with its last character replaced by '0'."""
-    y = get_province(ecosubcd)
-    n = F.length(y)
-    return F.when(n != 0, F.concat(y.substr(F.lit(1), n - 1), F.lit("0"))).otherwise(
-        F.lit("")
-    )

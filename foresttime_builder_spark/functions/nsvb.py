@@ -2,23 +2,26 @@
 
 The reference evaluates the NSVB equation system (Westfall et al. 2024) with
 per-equation ``eval(parse())`` over row splits and ~14 merge-by-ID passes
-(reference ``R/predictCRM2.R``).  Here the same math is expressed as native
-Column algebra so the whole stage compiles into one WholeStageCodegen span:
+(reference ``R/predictCRM2.R``).  Here the same math is generated as SQL
+text that ``plans/carbon.py`` folds into one ``apply_layers`` statement, so
+the whole stage compiles into one WholeStageCodegen span:
 
 - coefficient resolution (reference ``applyAllLevels``/``combineLevels2``,
-  ``R/predictCRM2.R:628-721``): three broadcast left joins (SPCD_DIVISION →
-  SPCD → JENKINS_SPGRPCD) + a matched-level pick, instead of row-splitting
+  ``R/predictCRM2.R:628-721``): :func:`join_coef_dims` — three broadcast
+  left joins (SPCD_DIVISION → SPCD → JENKINS_SPGRPCD) — then the
+  matched-level pick of :func:`coef_pick_layer`, instead of row-splitting
   and rbind;
 - equation forms (``data-raw/equation_forms_and_calls.csv`` + the two forms
-  appended in ``R/estimate_carbon.R:64-72``): pre-built Column expressions
-  dispatched with chained ``F.when`` on the equation id — no runtime eval;
-- ``findVol`` (``R/predictCRM2.R:767-785``): closed-form column algebra;
+  appended in ``R/estimate_carbon.R:64-72``): :func:`equation_sql`, one
+  ``CASE`` on the equation id — no runtime eval;
+- ``findVol`` (``R/predictCRM2.R:767-785``): :func:`find_vol_sql`,
+  closed-form column algebra;
 - ``findHT`` (``R/predictCRM2.R:729-765``): the reference runs a per-row
-  ``stats::optimise``; here a 48-iteration vectorized bisection in an
-  Arrow-batched pandas UDF (the profile ``pd(h)`` decreases monotonically in
-  ``h`` for the NSVB rcum coefficient ranges — alpha > 1, beta < 1 — so the
-  bisection converges to the same root, to ~1e-12 ft instead of optimise's
-  ~1e-4 tolerance).
+  ``stats::optimise``; here :func:`find_ht_sql` calls a 48-iteration
+  vectorized bisection in an Arrow-batched pandas UDF (the profile
+  ``pd(h)`` decreases monotonically in ``h`` for the NSVB rcum coefficient
+  ranges — alpha > 1, beta < 1 — so the bisection converges to the same
+  root, to ~1e-12 ft instead of optimise's ~1e-4 tolerance).
 
 Scale notes: every coefficient table is tiny (≤ 424 rows) and explicitly
 broadcast, so resolution adds no shuffle at any data scale; the single
@@ -30,15 +33,13 @@ from __future__ import annotations
 
 import csv
 import os
-from collections.abc import Sequence
 from functools import lru_cache
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
-from foresttime_builder_spark.functions.helpers import r_if_else
 from foresttime_builder_spark.sources import ref_tables
 
 #: all coefficient columns that may appear in a coef table
@@ -51,93 +52,6 @@ LEVELS = ("SPCD_DIVISION", "SPCD", "JENKINS_SPGRPCD")
 BISECT_ITERS = 48
 
 
-def _level_slice(coef_df: DataFrame, level: str) -> DataFrame:
-    """Rows of a coef table keyed at `level` with only key + coef columns
-    (reference ``getLevel``, ``R/predictCRM2.R:631-650``)."""
-    keep = [c for c in COEF_COLS if c in coef_df.columns]
-    return coef_df.filter(F.col(level).isNotNull()).select(
-        F.col(level).alias("_key"), *keep
-    )
-
-
-def merge_coef_pair(t1: DataFrame, t2: DataFrame, level: str) -> DataFrame:
-    """Inner-join two coef tables at one level (reference ``myMerge`` applied
-    to the (rcumob, volob) pair for HT4/HTSAW, ``R/predictCRM2.R:723-727``);
-    returns a level-sliced frame with the union of coef columns keyed ``_key``."""
-    a, b = _level_slice(t1, level), _level_slice(t2, level)
-    dup = [c for c in b.columns if c != "_key" and c in a.columns]
-    return a.join(b.drop(*dup), on="_key", how="inner")
-
-
-def resolve_coefs(
-    df: DataFrame,
-    coef_source,
-    prefix: str,
-    keys: Sequence[str] = ("SPCD_DIVISION", "SPCD", "JENKINS_SPGRPCD"),
-) -> DataFrame:
-    """Attach one coef table (or a pre-merged pair) to ``df`` with
-    finest-level-wins precedence.
-
-    ``coef_source`` is either a DataFrame or a callable ``level -> DataFrame``
-    returning the level slice (used for merged pairs).  Adds columns
-    ``{prefix}_{coef}`` for every coef column present and ``{prefix}_level``
-    (1/2/3, null when no level matched — the reference *drops* such rows via
-    its inner merge-by-ID, which is equivalent because every downstream value
-    derives from the resolved coefficients and nulls propagate).
-    """
-    if callable(coef_source):
-        slices = [coef_source(lv) for lv in LEVELS]
-    else:
-        slices = [_level_slice(coef_source, lv) for lv in LEVELS]
-
-    out = df
-    present: list[str] = []
-    for i, (lv, sl) in enumerate(zip(LEVELS, slices), start=1):
-        cols = [c for c in sl.columns if c != "_key"]
-        present = sorted(set(present) | set(cols))
-        ren = sl.select(
-            F.col("_key").alias(f"_{prefix}{i}_key"),
-            *[F.col(c).alias(f"_{prefix}{i}_{c}") for c in cols],
-        )
-        key = F.col(keys[i - 1])
-        if lv == "JENKINS_SPGRPCD":
-            key = key.cast("int")
-        else:
-            key = key.cast("string")
-        out = out.join(
-            F.broadcast(ren), on=key == ren[f"_{prefix}{i}_key"], how="left"
-        )
-
-    hits = [F.col(f"_{prefix}{i}_key").isNotNull() for i in range(1, 4)]
-    new_cols = {
-        f"{prefix}_level": (
-            F.when(hits[0], 1).when(hits[1], 2).when(hits[2], 3)
-        )
-    }
-    for c in present:
-        picks = None
-        for i in range(1, 4):
-            name = f"_{prefix}{i}_{c}"
-            if name in out.columns:
-                branch = (hits[i - 1], F.col(name))
-                picks = (
-                    F.when(*branch) if picks is None else picks.when(*branch)
-                )
-        new_cols[f"{prefix}_{c}"] = picks
-    drop = [
-        f"_{prefix}{i}_{c}"
-        for i in range(1, 4)
-        for c in ["key", *present]
-        if f"_{prefix}{i}_{c}" in out.columns
-    ]
-    # one projection for level + all coefficient picks
-    return out.withColumns(new_cols).drop(*drop)
-
-
-def cf(prefix: str, name: str) -> Column:
-    return F.col(f"{prefix}_{name}")
-
-
 # ---------------------------------------------------------------------------
 # driver-side coefficient-dimension build
 # ---------------------------------------------------------------------------
@@ -146,8 +60,7 @@ def cf(prefix: str, name: str) -> Column:
 # pre-merging them per precedence level is pure dimension preparation, so it
 # runs driver-side in plain python:
 #
-# - 24 per-table-per-level Spark joins collapse into THREE broadcast joins
-#   (one per level) against pre-merged level dims;
+# - one broadcast join per level, against a pre-merged level dim;
 # - the reference's (rcumob ⋈ volob) pair for HT4/HTSAW (``myMerge``,
 #   ``R/predictCRM2.R:723-727``) becomes a python dict merge;
 # - resolution no longer needs a distinct-key-space subplan, which at
@@ -266,7 +179,11 @@ def coef_pick_layer() -> tuple[dict[str, str], list[str]]:
     """The finest-level-wins resolution as one SQL projection layer
     (reference ``applyAllLevels``/``combineLevels2``,
     ``R/predictCRM2.R:628-721``): returns ``({name: sql_expr}, drop_list)``
-    where the drop list removes every raw ``_l{i}_*`` column."""
+    where the drop list removes every raw ``_l{i}_*`` column.
+    ``{prefix}_level`` is null when no level matched; the reference *drops*
+    such rows via its inner merge-by-ID, which is equivalent because every
+    downstream value derives from the resolved coefficients and nulls
+    propagate."""
     new_cols: dict[str, str] = {}
     drops: list[str] = [f"_l{i}_key" for i in (1, 2, 3)]
     for p, cols in prefix_cols().items():
@@ -285,15 +202,6 @@ def coef_pick_layer() -> tuple[dict[str, str], list[str]]:
     return new_cols, drops
 
 
-def attach_coefs(d: DataFrame) -> DataFrame:
-    """Resolve every coefficient source onto ``d`` with finest-level-wins
-    precedence: three broadcast left joins + one CASE pick per coefficient.
-    Adds ``{prefix}_{coef}`` and ``{prefix}_level``."""
-    d = join_coef_dims(d)
-    new_cols, drops = coef_pick_layer()
-    return d.withColumns({k: F.expr(v) for k, v in new_cols.items()}).drop(*drops)
-
-
 #: coefficient columns each equation form reads (dispatch branches are only
 #: emitted when the table actually carries them)
 EQUATION_REQUIRES: dict[float, frozenset[str]] = {
@@ -305,17 +213,10 @@ EQUATION_REQUIRES: dict[float, frozenset[str]] = {
 }
 
 
-def available_coefs(df: DataFrame, prefix: str) -> frozenset[str]:
-    """Coefficient names attached by :func:`resolve_coefs` under ``prefix``."""
-    tag = f"{prefix}_"
-    return frozenset(
-        c[len(tag):] for c in df.columns if c.startswith(tag) and c != f"{prefix}_level"
-    )
-
-
 def rif_sql(cond: str, yes: str, no: str, missing: str = "NULL") -> str:
-    """SQL-text twin of :func:`..helpers.r_if_else` (dplyr ``if_else`` with
-    explicit NA-condition branch)."""
+    """dplyr ``if_else`` with an explicit NA-condition branch: a null
+    ``cond`` yields ``missing``, where a plain ``CASE WHEN cond`` would take
+    the ``ELSE``."""
     return (
         f"CASE WHEN ({cond}) IS NULL THEN {missing} "
         f"WHEN {cond} THEN {yes} ELSE {no} END"
@@ -331,13 +232,16 @@ def equation_sql(
     equation: str | None = None,
     available: frozenset[str] | None = None,
 ) -> str:
-    """SQL-text twin of :func:`equation_value` — the allometric equation
-    dispatch as one CASE expression (forms from
-    ``data-raw/equation_forms_and_calls.csv`` + ``R/estimate_carbon.R:64-72``).
+    """The allometric prediction for one response as one CASE expression:
+    dispatch over equation ids 3 / 4 / 5 / 50 / 3.1 (forms from
+    ``data-raw/equation_forms_and_calls.csv`` + ``R/estimate_carbon.R:64-72``;
+    ids 7-14 and 6.1 are handled by :func:`find_ht_sql` /
+    :func:`find_vol_sql` / the HT_RAT_ADJ algebra instead).
 
-    Building the dispatch as a string costs one JVM round trip when wrapped
-    in ``F.expr`` — the Column formulation costs ~40 per response, and the
-    NSVB DAG has 6 responses over ~150 derived columns."""
+    ``available`` restricts the dispatch to forms whose coefficients the
+    table actually carries (e.g. bark_biomass has no eq-5 columns).  Text
+    rather than Column objects: the NSVB DAG has 6 responses over ~150
+    derived columns, and each Column call is a JVM round trip."""
     a, a0, a1 = f"{prefix}_a", f"{prefix}_a0", f"{prefix}_a1"
     b, b0, b1 = f"{prefix}_b", f"{prefix}_b0", f"{prefix}_b1"
     b2, c, c1 = f"{prefix}_b2", f"{prefix}_c", f"{prefix}_c1"
@@ -370,8 +274,11 @@ def equation_sql(
 
 
 def find_vol_sql(alpha: str, beta: str, tht: str, hl: str, hu: str, vtot: str) -> str:
-    """SQL-text twin of :func:`find_vol` — association kept exactly as the
-    reference (each ratio multiplied by the total before subtracting)."""
+    """Stem-section volume between heights ``hl`` and ``hu`` via the
+    cumulative-volume ratio ``(1-(1-h/H)^alpha)^beta`` (reference ``findVol``,
+    ``R/predictCRM2.R:767-785``).  Association kept exactly as the reference
+    (each ratio multiplied by the total before subtracting) for bit-parity
+    with the SQL oracle."""
     vl = f"pow(1 - pow(1 - {hl} / {tht}, {alpha}), {beta}) * {vtot}"
     vu = f"pow(1 - pow(1 - {hu} / {tht}, {alpha}), {beta}) * {vtot}"
     return f"({vu}) - ({vl})"
@@ -388,130 +295,17 @@ def register_udfs(spark) -> None:
     ref_tables.cached(spark, "_nsvb_udfs", build)
 
 
-def find_ht_sql(dlim: str, k_col: str | None = None) -> str:
-    """Merchantable-height root find as SQL text.
-
-    Two implementations, both 48-step interval halvings of the same
-    published diameter profile, differentially tested to 1e-9
-    (``tests/test_nsvb_bisect_native.py``):
-
-    - ``pandas`` (default): the Arrow-batched numpy bisection — the only
-      Python in any hot path.  MEASURED faster: q26 sf1 8.6 s / sf10
-      57-67 s vs native's 9.1 s / 80 s, because numpy evaluates the 48
-      pow-heavy iterations vectorized while Spark's ``aggregate``
-      higher-order function is interpreted per element — the Arrow hop
-      costs less than JVM expression interpretation here.
-    - ``native`` (``SPARK_GRAFT_NSVB_BISECT=native``): a pure-JVM
-      ``aggregate`` fold — ONE Catalyst expression, zero Python, no
-      Arrow round trip.  The right choice where Python workers are
-      unavailable or per-executor Python memory is contended; ~25%
-      slower on this box at sf10.
-
-    ``k_col`` names a precomputed column holding the profile constant
-    ``K = a*D^b*H^c / 0.005454154 / H * alpha * beta`` so the two pows in
-    K are not re-evaluated in every bisection step; required for native
-    mode (the caller adds it one layer earlier).
-    """
-    if os.environ.get("SPARK_GRAFT_NSVB_BISECT", "pandas") == "pandas" or k_col is None:
-        args = ", ".join(
-            f"CAST({x} AS DOUBLE)"
-            for x in ("DBH", "THT", dlim, "mh_a", "mh_b", "mh_c", "mh_alpha", "mh_beta")
-        )
-        return f"nsvb_bisect_ht({args})"
-    return find_ht_native_sql(dlim, k_col)
-
-
-def find_ht_native_sql(dlim: str, k_col: str) -> str:
-    """JVM-native bisection of the NSVB diameter profile (reference
-    ``findHT``'s objective, ``R/predictCRM2.R:737-751``): the stem
-    diameter ``pd(h)^2 = K * (1-h/H)^(alpha-1) * (1-(1-h/H)^alpha)^(beta-1)``
-    falls monotonically from +inf at the butt to 0 at the tip, so the
-    ``pd = dlim`` crossing is unique and interval halving converges to it.
-
-    The loop is an ``aggregate(sequence(1, N), lo, ...)`` fold over a
-    SCALAR accumulator — per-row JVM evaluation, no shuffle, no Python,
-    and no per-iteration struct allocation: the bracketing interval after
-    ``i`` halvings always has width ``THT / 2^i``, so only its lower edge
-    needs carrying (``mid = lo + THT/2^i``; root above mid ⇒ ``lo = mid``).
-    Null/sapling masking mirrors the pandas twin exactly (``_bisect_ht``);
-    the returned root differs from the two-edge formulation by at most
-    ``THT / 2^48`` — the shared convergence bound."""
-    mid = f"(acc + THT / CAST(shiftleft(1L, i) AS DOUBLE))"
-    x = f"({mid} / THT)"
-    q = (
-        f"({k_col} * pow(1.0D - {x}, mh_alpha - 1.0D)"
-        f" * pow(1.0D - pow(1.0D - {x}, mh_alpha), mh_beta - 1.0D))"
+def find_ht_sql(dlim: str) -> str:
+    """Merchantable-height root find as SQL text: the height where the stem
+    tapers to ``dlim`` inches, by the Arrow-batched numpy bisection
+    :func:`_bisect_ht` (call :func:`register_udfs` first).  Numpy evaluates
+    the 48 pow-heavy iterations vectorized, where a JVM ``aggregate`` fold
+    is interpreted per element: measured q26 sf10 57-67 s vs 80 s."""
+    args = ", ".join(
+        f"CAST({x} AS DOUBLE)"
+        for x in ("DBH", "THT", dlim, "mh_a", "mh_b", "mh_c", "mh_alpha", "mh_beta")
     )
-    return f"""CASE
-  WHEN DBH IS NULL OR isnan(DBH) OR DBH < 5.0D
-       OR THT IS NULL OR isnan(THT)
-       OR ({dlim}) IS NULL OR isnan({dlim})
-       OR {k_col} IS NULL OR isnan({k_col}) THEN CAST(NULL AS DOUBLE)
-  ELSE aggregate(
-    sequence(1, {BISECT_ITERS}),
-    CAST(0.0D AS DOUBLE),
-    (acc, i) -> IF({q} > ({dlim}) * ({dlim}), {mid}, acc),
-    acc -> acc + THT / CAST(shiftleft(1L, {BISECT_ITERS + 1}) AS DOUBLE))
-END"""
-
-
-def equation_value(
-    prefix: str,
-    dbh: Column,
-    tht: Column,
-    wdsg: Column,
-    k: Column,
-    equation: Column | None = None,
-    available: frozenset[str] | None = None,
-) -> Column:
-    """The allometric prediction for one response: dispatch over equation ids
-    3 / 4 / 5 / 50 / 3.1 (forms from ``data-raw/equation_forms_and_calls.csv``
-    and ``R/estimate_carbon.R:64-72``; ids 7-14 and 6.1 are handled by
-    :func:`find_ht` / :func:`find_vol` / the HT_RAT_ADJ algebra instead).
-
-    ``available`` restricts the dispatch to forms whose coefficients the
-    table actually carries (e.g. bark_biomass has no eq-5 columns)."""
-    a, a0, a1 = cf(prefix, "a"), cf(prefix, "a0"), cf(prefix, "a1")
-    b, b0, b1 = cf(prefix, "b"), cf(prefix, "b0"), cf(prefix, "b1")
-    b2, c, c1 = cf(prefix, "b2"), cf(prefix, "c"), cf(prefix, "c1")
-    eq = equation if equation is not None else cf(prefix, "equation")
-
-    def forms():
-        # eq 4 uses R ifelse: null DBH<k condition must yield null, not the else
-        yield 3, lambda: a * F.pow(dbh, b) * F.pow(tht, c)
-        yield 4, lambda: r_if_else(
-            dbh < k,
-            a0 * F.pow(dbh, b0) * F.pow(tht, c),
-            a0 * F.pow(k, b0 - b1) * F.pow(dbh, b1) * F.pow(tht, c),
-        )
-        yield 5, lambda: a * F.pow(dbh, a1 * F.pow(1 - F.exp(-b1 * dbh), c1)) * F.pow(tht, c)
-        yield 50, lambda: a * F.pow(dbh, b) * F.pow(tht, c) * F.exp(-(b2 * dbh))
-        yield 3.1, lambda: a * F.pow(dbh, b) * F.pow(tht, c) * wdsg
-
-    out = None
-    for eid, build in forms():
-        if available is not None and not EQUATION_REQUIRES[eid] <= available:
-            continue
-        if out is None:
-            out = F.when(eq == eid, build())
-        else:
-            out = out.when(eq == eid, build())
-    return out
-
-
-def find_vol(
-    alpha: Column, beta: Column, tht: Column, hl, hu, vtot: Column
-) -> Column:
-    """Stem-section volume between heights ``hl`` and ``hu`` via the
-    cumulative-volume ratio ``(1-(1-h/H)^alpha)^beta`` (reference ``findVol``,
-    ``R/predictCRM2.R:767-785``).  Association kept exactly as the reference
-    (each ratio multiplied by the total before subtracting) for bit-parity
-    with the SQL oracle."""
-    hl = hl if isinstance(hl, Column) else F.lit(float(hl))
-    hu = hu if isinstance(hu, Column) else F.lit(float(hu))
-    vl = F.pow(1 - F.pow(1 - hl / tht, alpha), beta) * vtot
-    vu = F.pow(1 - F.pow(1 - hu / tht, alpha), beta) * vtot
-    return vu - vl
+    return f"nsvb_bisect_ht({args})"
 
 
 @pandas_udf(DoubleType())
@@ -566,19 +360,3 @@ def _bisect_ht(
         res = np.where(bad, np.nan, res)
     return pd.Series(res)
 
-
-def find_ht(
-    dbh: Column, tht: Column, dlim: Column, a: Column, b: Column, c: Column,
-    alpha: Column, beta: Column,
-) -> Column:
-    """Merchantable-height root find (see :func:`_bisect_ht`)."""
-    return _bisect_ht(
-        dbh.cast("double"),
-        tht.cast("double"),
-        dlim.cast("double"),
-        a.cast("double"),
-        b.cast("double"),
-        c.cast("double"),
-        alpha.cast("double"),
-        beta.cast("double"),
-    )

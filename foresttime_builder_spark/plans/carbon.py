@@ -228,25 +228,12 @@ def predict_crm2(data: DataFrame) -> DataFrame:
     layers.append(({"VTOTOB_GROSS": "VTOTIB_GROSS + VTOTBK_GROSS"}, []))
 
     # merch/sawlog heights: (rcumob ⋈ volob) coefs + bisection, floor at 5 ft.
-    # The profile constant K is shared by both root finds and hoisted one
-    # layer up so its pows are evaluated once; the raw roots get their own
-    # layer so each bisection expression is evaluated once.
+    # The raw roots get their own layer so each bisection is evaluated once.
     layers.append(
         (
             {
-                "_mh_K": (
-                    "mh_a * pow(DBH, mh_b) * pow(THT, mh_c)"
-                    " / 0.005454154D / THT * mh_alpha * mh_beta"
-                )
-            },
-            [],
-        )
-    )
-    layers.append(
-        (
-            {
-                "_ht4_raw": nsvb.find_ht_sql("4.0D", "_mh_K"),
-                "_htsaw_raw": nsvb.find_ht_sql("saw", "_mh_K"),
+                "_ht4_raw": nsvb.find_ht_sql("4.0D"),
+                "_htsaw_raw": nsvb.find_ht_sql("saw"),
             },
             [],
         )
@@ -594,6 +581,6 @@ def predict_crm2(data: DataFrame) -> DataFrame:
             [],
         )
     )
-    layers.append(({}, ["_ht4_raw", "_htsaw_raw", "_mh_K", "_bcp_raw", "_bcp0"]))
+    layers.append(({}, ["_ht4_raw", "_htsaw_raw", "_bcp_raw", "_bcp0"]))
 
     return apply_layers(d, layers)

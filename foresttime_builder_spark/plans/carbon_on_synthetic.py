@@ -193,7 +193,7 @@ def _coef_cols(table: str) -> list[str]:
 
 def _coef_level_ctes(table: str, p: str) -> tuple[str, list[str]]:
     """CTEs ``{p}_l1/2/3``: one coef table sliced per resolution level with
-    explicit casts (mirrors ``nsvb._level_slice``)."""
+    explicit casts (mirrors one level of ``nsvb.level_dims``)."""
     cols = _coef_cols(table)
     path = os.path.join(_RES, "coefs", f"{table}_coefs.csv")
     casts = ", ".join(f"CAST({c} AS DOUBLE) AS {c}" for c in cols)
@@ -210,7 +210,8 @@ def _coef_level_ctes(table: str, p: str) -> tuple[str, list[str]]:
 
 
 def _pair_level_ctes(t1: str, t2: str, p: str) -> tuple[str, list[str]]:
-    """Per-level inner join of two coef tables (``nsvb.merge_coef_pair``)."""
+    """Per-level inner join of two coef tables (the pair merge inside
+    ``nsvb.level_dims``)."""
     c1, cols1 = _coef_level_ctes(t1, f"{p}a")
     c2, cols2 = _coef_level_ctes(t2, f"{p}b")
     cols2_only = [c for c in cols2 if c not in cols1 or True]
@@ -227,7 +228,8 @@ def _pair_level_ctes(t1: str, t2: str, p: str) -> tuple[str, list[str]]:
 
 
 def _resolve_cte(p: str, cols: list[str], src: str, out: str) -> str:
-    """Three-level precedence join (``nsvb.resolve_coefs``): adds
+    """Three-level precedence join (``nsvb.join_coef_dims`` +
+    ``nsvb.coef_pick_layer``): adds
     ``{p}_level`` and ``{p}_{coef}`` columns."""
     picks = [
         "CASE WHEN l1.key IS NOT NULL THEN 1 WHEN l2.key IS NOT NULL THEN 2 "
@@ -260,7 +262,7 @@ _EQ_REQUIRES = {
 
 
 def _eq_dispatch(p: str, cols: list[str], eq: str | None = None) -> str:
-    """Equation-form dispatch (mirrors ``nsvb.equation_value``); branches are
+    """Equation-form dispatch (mirrors ``nsvb.equation_sql``); branches are
     emitted only for forms whose coefficients the table carries."""
     eq = eq or f"{p}_equation"
     a, a0, a1 = f"{p}_a", f"{p}_a0", f"{p}_a1"
@@ -290,7 +292,7 @@ def _eq_dispatch(p: str, cols: list[str], eq: str | None = None) -> str:
 
 
 def _find_vol(hl: str, hu: str, vtot: str) -> str:
-    """``nsvb.find_vol`` with identical association."""
+    """``nsvb.find_vol_sql`` with identical association."""
     return (
         f"pow(1 - pow(1 - {hu} / THT, rib_alpha), rib_beta) * {vtot}"
         f" - pow(1 - pow(1 - {hl} / THT, rib_alpha), rib_beta) * {vtot}"

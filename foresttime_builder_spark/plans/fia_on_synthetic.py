@@ -84,14 +84,6 @@ _PANEL_SQL = """
 """
 
 
-def _r4(c) -> F.Column:
-    """Engine-portable 4-decimal rounding: identical IEEE ops in Spark and
-    DuckDB (their native ``round`` implementations disagree on exact-tie
-    doubles like interpolated midpoints ``(a+b)/2``)."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.floor(col * 10000 + F.lit(0.5)) / 10000
-
-
 def _e4(c) -> F.Column:
     """Fixed-point gate emission: 1e-4 units as BIGINT.  A rounded double
     whose nearest binary representation sits a hair below the decimal value

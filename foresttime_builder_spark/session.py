@@ -74,22 +74,14 @@ def get_spark(
         # still bounds how far cached stages coalesce, and exchange reuse
         # lost to output-partitioning changes is irrelevant here (the
         # persisted intermediates feed column-DAG stages, not re-joins).
-        # FTB_AQE_CACHED_REPLAN=false is the A/B lever for the trend-row
-        # study in BASELINE.md ("AQE cached-plan flag" section)
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("FTB_AQE_CACHED_REPLAN", "true"),
-        )
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # AQE coalescing sizes partitions by BYTES; window/expression-dense
         # stages (annualization: ~10 window passes per row) have huge
         # CPU-per-byte, and the 1 MB default floor collapsed them to ~3
         # partitions — a 3.3x slowdown from idle cores. 16k keeps small
         # CPU-dense stages parallel while still merging true stragglers;
         # at production scale partitions are >= 64 MB and the floor is moot.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("FTB_AQE_MIN_PARTITION_SIZE", "16k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
         # Shuffle partition count must scale with DATA, not with cores:
         # with a fixed 32, a billion-row aggregate packs ~40M keys into
         # each task's hash map (measured OOM at sf10 in q16's candidate

@@ -10,7 +10,7 @@ from __future__ import annotations
 import os
 from functools import lru_cache
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 _RES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "resources")
 
@@ -189,33 +189,3 @@ def crprop_undefined() -> dict[str, float]:
         for r in csv_rows("median_crprop.csv", _CRPROP_SPEC)
         if r[1] == "UNDEFINED"
     }
-
-
-def coef_table(spark: SparkSession, name: str) -> DataFrame:
-    """One NSVB coefficient table. Exactly one of the three level keys
-    (SPCD_DIVISION, SPCD, JENKINS_SPGRPCD) is non-null per row; SPCD is kept
-    as string because planted loblolly/slash pine rows use '1_131'-style
-    keys."""
-    assert name in COEF_NAMES, name
-    df = (
-        spark.read.option("header", True)
-        .option("inferSchema", True)
-        .option("nullValue", "NA")
-        .csv(os.path.join(_RES, "coefs", f"{name}_coefs.csv"))
-    )
-    for c in df.columns:
-        if c == "SPCD_DIVISION":
-            df = df.withColumn(c, F.col(c).cast("string"))
-        elif c == "SPCD":
-            df = df.withColumn(c, F.col(c).cast("string"))
-        elif c == "JENKINS_SPGRPCD":
-            df = df.withColumn(c, F.col(c).cast("int"))
-        elif c == "equation":
-            df = df.withColumn(c, F.col(c).cast("double"))
-        else:
-            df = df.withColumn(c, F.col(c).cast("double"))
-    return df
-
-
-def all_coef_tables(spark: SparkSession) -> dict[str, DataFrame]:
-    return {n: coef_table(spark, n) for n in COEF_NAMES}

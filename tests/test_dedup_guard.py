@@ -366,10 +366,13 @@ def test_lsh_verify_blockmask_matches_arrays_and_auto(spark):
     # tier for the wide-vocabulary regime.  All four representations must
     # agree bit-for-bit on a 120-token corpus (above the 64-bit mask,
     # inside the shared vocab cap) — and 'auto' must pick a mask/int tier
-    # there.
+    # there.  An empty-text and a NULL-text doc ride along: zero-token docs
+    # are an edge every tier must treat alike.
     from foresttime_builder_spark.operators.dedup import minhash_lsh_pairs
 
-    wide = _corpus(spark, vocab=120)
+    wide = _corpus(spark, vocab=120).unionByName(
+        spark.createDataFrame([(1000, ""), (1001, None)], "doc_id long, text string")
+    )
     rows = lambda df: sorted(  # noqa: E731
         (r.doc_a, r.doc_b, r.n_common, r.jaccard) for r in df.collect()
     )

@@ -10,59 +10,67 @@ from pyspark.sql import functions as F
 from foresttime_builder_spark.functions import nsvb
 
 
-@pytest.fixture(scope="module")
-def coef_df(spark):
-    rows = [
-        # key at all three levels with distinct 'a' so precedence is visible
-        ("316 230", None, None, 1.0, 2.0, 3.0, 3.0),
-        (None, "316", None, 10.0, 2.0, 3.0, 3.0),
-        (None, None, 7, 100.0, 2.0, 3.0, 3.0),
-        (None, "999", None, 55.0, 2.0, 3.0, 3.0),
-    ]
-    return spark.createDataFrame(
-        rows,
-        "SPCD_DIVISION string, SPCD string, JENKINS_SPGRPCD int, "
-        "a double, b double, c double, equation double",
-    )
+def _vib_pick(spark, rows):
+    """Evaluate the ``vib_*`` entries of :func:`nsvb.coef_pick_layer` over
+    raw per-level columns as :func:`nsvb.join_coef_dims` attaches them.
+
+    ``rows`` are ``(tag, [(has, a, b) for levels 1-3])``: ``has`` is the
+    dim's presence flag (NULL when no level row matched the key at all),
+    ``a``/``b`` the level's coefficients; the other vib coefs are 0."""
+    cols = nsvb.prefix_cols()["vib"]
+    schema = ["tag string"]
+    for i in (1, 2, 3):
+        schema.append(f"_l{i}_vib_has boolean")
+        schema += [f"_l{i}_vib_{c} double" for c in cols]
+    data = []
+    for tag, levels in rows:
+        row = [tag]
+        for has, a, b in levels:
+            coefs = {"a": a, "b": b}
+            row.append(has)
+            row += [coefs.get(c, 0.0) for c in cols]
+        data.append(tuple(row))
+    df = spark.createDataFrame(data, ", ".join(schema))
+    picks, _ = nsvb.coef_pick_layer()
+    vib = {k: v for k, v in picks.items() if k.startswith("vib_")}
+    out = df.select("tag", *[F.expr(v).alias(k) for k, v in vib.items()])
+    return {r["tag"]: r for r in out.collect()}
 
 
-def _data(spark, rows):
-    return spark.createDataFrame(
-        rows, "SPCD_DIVISION string, SPCD string, JENKINS_SPGRPCD int"
-    )
-
-
-def test_resolution_precedence(spark, coef_df):
-    data = _data(
+def test_resolution_precedence(spark):
+    miss = (None, None, None)
+    by = _vib_pick(
         spark,
         [
-            ("316 230", "316", 7),   # level 1 wins
-            ("316 990", "316", 7),   # no division row -> level 2
-            ("500 230", "500", 7),   # only jenkins -> level 3
-            ("x", "y", 99),          # no match anywhere -> nulls
+            ("l1", [(True, 1.0, 2.0), (True, 10.0, 2.0), (True, 100.0, 2.0)]),
+            # no division row -> level 2
+            ("l2", [miss, (True, 10.0, 2.0), (True, 100.0, 2.0)]),
+            # the key has a division row, but not for this source -> level 2
+            ("l2_src", [(False, None, None), (True, 10.0, 2.0),
+                        (True, 100.0, 2.0)]),
+            # only jenkins -> level 3
+            ("l3", [miss, miss, (True, 100.0, 2.0)]),
+            # no match anywhere -> nulls
+            ("none", [miss, miss, miss]),
         ],
     )
-    out = nsvb.resolve_coefs(data, coef_df, "t").collect()
-    by = {r["SPCD_DIVISION"]: r for r in out}
-    assert by["316 230"]["t_level"] == 1 and by["316 230"]["t_a"] == 1.0
-    assert by["316 990"]["t_level"] == 2 and by["316 990"]["t_a"] == 10.0
-    assert by["500 230"]["t_level"] == 3 and by["500 230"]["t_a"] == 100.0
-    assert by["x"]["t_level"] is None and by["x"]["t_a"] is None
+    assert by["l1"]["vib_level"] == 1 and by["l1"]["vib_a"] == 1.0
+    assert by["l2"]["vib_level"] == 2 and by["l2"]["vib_a"] == 10.0
+    assert by["l2_src"]["vib_level"] == 2 and by["l2_src"]["vib_a"] == 10.0
+    assert by["l3"]["vib_level"] == 3 and by["l3"]["vib_a"] == 100.0
+    assert by["none"]["vib_level"] is None and by["none"]["vib_a"] is None
 
 
 def test_matched_level_takes_all_coefs(spark):
     """A null coefficient at the matched level must NOT fall through to a
     coarser level (row-level precedence, not per-coefficient coalesce)."""
-    coef = spark.createDataFrame(
-        [("316 230", None, None, None, 5.0), (None, "316", None, 7.0, 9.0)],
-        "SPCD_DIVISION string, SPCD string, JENKINS_SPGRPCD int, "
-        "a double, b double",
-    )
-    data = _data(spark, [("316 230", "316", 7)])
-    row = nsvb.resolve_coefs(data, coef, "t").collect()[0]
-    assert row["t_level"] == 1
-    assert row["t_a"] is None  # level-1 'a' is null and stays null
-    assert row["t_b"] == 5.0
+    row = _vib_pick(
+        spark,
+        [("t", [(True, None, 5.0), (True, 7.0, 9.0), (None, None, None)])],
+    )["t"]
+    assert row["vib_level"] == 1
+    assert row["vib_a"] is None  # level-1 'a' is null and stays null
+    assert row["vib_b"] == 5.0
 
 
 def test_equation_dispatch_forms(spark):
@@ -81,36 +89,35 @@ def test_equation_dispatch_forms(spark):
         (50, 2.0 * 10.0**1.5 * 60.0**0.8 * math.exp(0.05 * 10.0)),
         (3.1, 2.0 * 10.0**1.5 * 60.0**0.8 * 0.5),
     ]:
-        got = df.select(
-            nsvb.equation_value(
-                "t", F.col("DBH"), F.col("THT"), F.col("WDSG"), F.col("k"),
-                equation=F.lit(float(eq)), available=avail,
-            ).alias("v")
-        ).collect()[0]["v"]
+        sql = nsvb.equation_sql("t", equation=f"{eq}D", available=avail)
+        got = df.select(F.expr(sql).alias("v")).collect()[0]["v"]
         assert got == pytest.approx(expected, rel=1e-12), f"eq {eq}"
 
 
 def test_find_vol_algebra(spark):
     df = spark.createDataFrame([(60.0, 12.0)], "THT double, VTOT double")
     a, b = 2.1, 0.87
-    got = df.select(
-        nsvb.find_vol(F.lit(a), F.lit(b), F.col("THT"), 1.0, 30.0, F.col("VTOT")).alias("v")
-    ).collect()[0]["v"]
+    sql = nsvb.find_vol_sql(f"{a}D", f"{b}D", "THT", "1.0D", "30.0D", "VTOT")
+    got = df.select(F.expr(sql).alias("v")).collect()[0]["v"]
     ratio = lambda h: (1 - (1 - h / 60.0) ** a) ** b
     assert got == pytest.approx(ratio(30.0) * 12.0 - ratio(1.0) * 12.0, rel=1e-12)
+
+
+_MH = "DBH double, THT double, dl double, mh_a double, mh_b double, " \
+      "mh_c double, mh_alpha double, mh_beta double"
+
+
+def _find_ht(spark, rows):
+    nsvb.register_udfs(spark)
+    df = spark.createDataFrame(rows, _MH)
+    return [r["h"] for r in df.selectExpr(f"{nsvb.find_ht_sql('dl')} AS h").collect()]
 
 
 def test_bisection_finds_taper_root(spark):
     """pd(HT4) must equal dlim at the returned height."""
     a, b, c, al, be = 0.002, 1.98, 1.02, 2.1, 0.87
     D, H, dlim = 14.0, 80.0, 4.0
-    df = spark.createDataFrame([(D, H, dlim)], "D double, H double, dl double")
-    got = df.select(
-        nsvb.find_ht(
-            F.col("D"), F.col("H"), F.col("dl"),
-            F.lit(a), F.lit(b), F.lit(c), F.lit(al), F.lit(be),
-        ).alias("h")
-    ).collect()[0]["h"]
+    [got] = _find_ht(spark, [(D, H, dlim, a, b, c, al, be)])
     K = a * D**b * H**c / 0.005454154 / H * al * be
     pd_sq = K * (1 - got / H) ** (al - 1) * (1 - (1 - got / H) ** al) ** (be - 1)
     assert math.sqrt(pd_sq) == pytest.approx(dlim, rel=1e-6)
@@ -118,16 +125,10 @@ def test_bisection_finds_taper_root(spark):
 
 
 def test_bisection_sapling_and_missing_null(spark):
-    df = spark.createDataFrame(
-        [(4.0, 30.0), (10.0, None), (None, 30.0)], "D double, H double"
-    )
-    rows = df.select(
-        nsvb.find_ht(
-            F.col("D"), F.col("H"), F.lit(4.0),
-            F.lit(0.002), F.lit(1.98), F.lit(1.02), F.lit(2.1), F.lit(0.87),
-        ).alias("h")
-    ).collect()
-    assert all(r["h"] is None for r in rows)
+    coefs = (0.002, 1.98, 1.02, 2.1, 0.87)
+    rows = [(4.0, 30.0, 4.0, *coefs), (10.0, None, 4.0, *coefs),
+            (None, 30.0, 4.0, *coefs)]
+    assert _find_ht(spark, rows) == [None, None, None]
 
 
 def test_apply_layers_packing_differential(spark):

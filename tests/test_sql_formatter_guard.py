@@ -21,7 +21,9 @@ import foresttime_builder_spark
 PKG = os.path.dirname(foresttime_builder_spark.__file__)
 
 
-def _sql_calls():
+def package_nodes():
+    """``(path relative to the package, node)`` for every AST node of every
+    package module."""
     for root, _dirs, files in os.walk(PKG):
         for name in sorted(files):
             if not name.endswith(".py"):
@@ -30,12 +32,17 @@ def _sql_calls():
             with open(path) as f:
                 tree = ast.parse(f.read(), path)
             for node in ast.walk(tree):
-                if (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "sql"
-                ):
-                    yield os.path.relpath(path, PKG), node
+                yield os.path.relpath(path, PKG), node
+
+
+def _sql_calls():
+    for path, node in package_nodes():
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "sql"
+        ):
+            yield path, node
 
 
 def test_no_sql_call_uses_the_string_formatter():
