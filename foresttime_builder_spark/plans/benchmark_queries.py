@@ -8,462 +8,57 @@ every float that passes through an order-dependent aggregate is rounded to a
 fixed scale on both sides (per-row IEEE arithmetic is deterministic and needs
 no rounding; cross-partition summation order is not).
 
+Each family module under ``plans/queries/`` (and ``plans/streaming_queries``)
+declares its own ``QUERIES`` entries; this module only merges them, so
+adding a query touches one file.
+
 Query → reference-operator map (SURVEY.md §2): see each docstring.
 """
 
 from __future__ import annotations
 
-from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
-    QuerySpec,
-    _stream,
-    _stream_oracle,
+from foresttime_builder_spark.plans import streaming_queries
+from foresttime_builder_spark.plans.queries import (
+    ann,
+    dedup,
+    fia,
+    infra,
+    multimodal,
+    profile,
+    relational,
+    relevance,
+    sampling,
+    streaming,
+    text,
+    timeseries,
 )
-from foresttime_builder_spark.plans.queries.ann import (  # noqa: F401
-    _coverage_sample_oracle,
-    q121_coverage_sample,
-    q122_diversity_sample,
-    ORACLE_Q17,
-    _ann_oracle,
-    _ann_recall_oracle,
-    _ivf_oracle,
-    _neardup_oracle,
-    _random_projection_oracle,
-    q101_ann_recall,
-    q17_cosine_topk,
-    q37_ann_lsh,
-    q40_embed_neardup,
-    q42_ann_ivf,
-    q95_random_projection,
-)
-from foresttime_builder_spark.plans.queries.dedup import (  # noqa: F401
-    ORACLE_Q116,
-    ORACLE_Q12,
-    ORACLE_Q16,
-    ORACLE_Q54,
-    ORACLE_Q71,
-    _cluster_ladder_oracle,
-    _containment_oracle,
-    _dedup_keep_best_oracle,
-    _dup_clusters_oracle,
-    _incremental_dedup_oracle,
-    _lsh_representatives_oracle,
-    _minhash_lsh_oracle,
-    _semantic_dedup_oracle,
-    _simhash_oracle,
-    q111_containment_pairs,
-    q116_fuzzy_join_d2,
-    q119_lsh_representatives,
-    q120_cluster_ladder,
-    q12_dedup_exact,
-    q16_jaccard_pairs,
-    q23_minhash_lsh,
-    q24_simhash,
-    q50_dup_clusters,
-    q54_ngram_jaccard,
-    q71_fuzzy_join,
-    q76_jaccard_budget_guard,
-    q77_dedup_keep_best,
-    q87_semantic_dedup,
-    q90_incremental_dedup,
-)
-from foresttime_builder_spark.plans.queries.fia import (  # noqa: F401
-    ORACLE_Q39,
-    _annualize_oracle,
-    _carbon_oracle,
-    _grain_oracle,
-    _pop_oracle,
-    _pop_stratified_oracle,
-    _sapling_oracle,
-    _state_pipeline_oracle,
-    q25_fia_annualize,
-    q26_nsvb_carbon,
-    q27_population_scaling,
-    q28_grain_sweep,
-    q38_sapling_transitions,
-    q39_id_roundtrip,
-    q51_state_pipeline,
-    q52_population_stratified,
-)
-from foresttime_builder_spark.plans.queries.infra import (  # noqa: F401
-    ORACLE_Q106,
-    ORACLE_Q43,
-    ORACLE_Q44,
-    ORACLE_Q45,
-    ORACLE_Q49,
-    ORACLE_Q66,
-    ORACLE_Q70,
-    ORACLE_Q97,
-    _incremental_agg_oracle,
-    _pipeline_e2e_oracle,
-    _python_datasource_oracle,
-    _scd2_oracle,
-    _snapshot_diff_oracle,
-    _zorder_oracle,
-    q100_pipeline_e2e,
-    q106_schema_evolution,
-    q110_python_datasource,
-    q43_bucketed_join,
-    q44_salted_skew_agg,
-    q45_salted_join,
-    q49_merge_latest,
-    q66_jsonl_roundtrip,
-    q70_partitioned_sink,
-    q75_zorder_key,
-    q79_snapshot_diff,
-    q92_scd2_build,
-    q93_incremental_agg,
-    q97_json_extract,
-)
-from foresttime_builder_spark.plans.queries.multimodal import (  # noqa: F401
-    ORACLE_Q35,
-    ORACLE_Q36,
-    ORACLE_Q55,
-    q35_multimodal_features,
-    q36_frame_sample,
-    q55_image_meta,
-)
-from foresttime_builder_spark.plans.queries.profile import (  # noqa: F401
-    _equidepth_oracle,
-    _equidepth_sampled_oracle,
-    _group_kmv_estimate_oracle,
-    _group_kmv_oracle,
-    _kmv_oracle,
-    _numeric_histogram_oracle,
-    q107_equidepth_histogram,
-    q115_equidepth_sampled,
-    q117_group_kmv,
-    q118_group_kmv_estimate,
-    q46_kmv_sketch,
-    q98_numeric_histogram,
-)
-from foresttime_builder_spark.plans.queries.relational import (  # noqa: F401
-    ORACLE_Q01,
-    ORACLE_Q02,
-    ORACLE_Q03,
-    ORACLE_Q04,
-    ORACLE_Q05,
-    ORACLE_Q06,
-    ORACLE_Q103,
-    ORACLE_Q104,
-    ORACLE_Q105,
-    ORACLE_Q109,
-    ORACLE_Q113,
-    ORACLE_Q18,
-    ORACLE_Q19,
-    ORACLE_Q20,
-    ORACLE_Q21,
-    ORACLE_Q22,
-    ORACLE_Q41,
-    ORACLE_Q47,
-    ORACLE_Q48,
-    ORACLE_Q62,
-    ORACLE_Q67,
-    ORACLE_Q73,
-    q01_pricing_summary,
-    q02_region_revenue,
-    q03_customer_order_counts,
-    q04_snapshot_full_outer,
-    q05_range_band_join,
-    q06_asof_last_click,
-    q103_cumulative_distinct,
-    q104_anomaly_zscore,
-    q105_winsorized_stats,
-    q109_unpivot_roundtrip,
-    q113_interval_overlap,
-    q18_grouping_sets,
-    q19_manual_pivot,
-    q20_yearly_ratio,
-    q21_monthly_lag,
-    q22_expns_per_year,
-    q41_sql_over_views,
-    q47_asof_join,
-    q48_group_percentiles,
-    q62_semijoin_reduction,
-    q67_cohort_retention,
-    q73_rolling_revenue,
-)
-from foresttime_builder_spark.plans.queries.relevance import (  # noqa: F401
-    _bm25_oracle,
-    _dsir_oracle,
-    _inverted_index_oracle,
-    _lm_score_oracle,
-    _tfidf_signatures_oracle,
-    q82_bm25_scores,
-    q86_lm_score,
-    q88_dsir_weights,
-    q89_inverted_index,
-    q94_tfidf_signatures,
-)
-from foresttime_builder_spark.plans.queries.sampling import (  # noqa: F401
-    ORACLE_Q114,
-    ORACLE_Q56,
-    ORACLE_Q57,
-    ORACLE_Q74,
-    _epoch_upsample_oracle,
-    _length_bucket_oracle,
-    _score_calibration_oracle,
-    _split_assign_oracle,
-    _stratified_split_oracle,
-    _weighted_sample_oracle,
-    q102_weighted_sample,
-    q112_stratified_split,
-    q114_distribution_drift,
-    q56_sequence_packing,
-    q57_source_mixing,
-    q65_split_assign,
-    q74_temperature_mix,
-    q78_length_bucket_batches,
-    q84_epoch_upsample,
-    q99_score_calibration,
-)
-from foresttime_builder_spark.plans.queries.streaming import (  # noqa: F401
-    ORACLE_Q68,
-    ORACLE_Q69,
-    q68_batch_sessions,
-    q69_event_funnel,
-)
-from foresttime_builder_spark.plans.queries.text import (  # noqa: F401
-    ORACLE_Q13,
-    ORACLE_Q14,
-    ORACLE_Q15,
-    ORACLE_Q58,
-    ORACLE_Q72,
-    _chunk_tokens_oracle,
-    _corpus_profile_oracle,
-    _domain_quota_oracle,
-    _dup_spans_oracle,
-    _pii_oracle,
-    _quality_gate_oracle,
-    _text_oracle,
-    _top_ngrams_oracle,
-    _line_dedup_oracle,
-    _line_dedup_normalized_oracle,
-    _vocab_overlap_oracle,
-    q123_line_dedup,
-    q124_line_dedup_normalized,
-    q13_text_quality,
-    q14_token_df,
-    q15_doc_fingerprint,
-    q32_language_id,
-    q33_bpe_tokens,
-    q34_winnow_fingerprint,
-    q58_decontamination,
-    q59_repetition_quality,
-    q60_pii_scrub,
-    q61_domain_quota,
-    q63_dup_spans,
-    q64_top_ngrams,
-    q72_novelty_check,
-    q80_chunk_tokens,
-    q81_corpus_profile,
-    q83_quota_prefilter,
-    q85_quality_gate,
-    q91_vocab_overlap,
-)
-from foresttime_builder_spark.plans.queries.timeseries import (  # noqa: F401
-    ORACLE_Q07,
-    ORACLE_Q08,
-    ORACLE_Q09,
-    ORACLE_Q10,
-    ORACLE_Q11,
-    q07_expand_grid,
-    q08_linear_interp,
-    q09_step_interp,
-    q10_fill_downup,
-    q11_first_flag_year,
-)
+from foresttime_builder_spark.plans.queries._shared import QuerySpec
 
 
-QUERIES: dict[str, QuerySpec] = {
-    "q01_pricing_summary": QuerySpec(q01_pricing_summary, ORACLE_Q01),
-    "q02_region_revenue": QuerySpec(q02_region_revenue, ORACLE_Q02),
-    "q03_customer_order_counts": QuerySpec(q03_customer_order_counts, ORACLE_Q03),
-    "q04_snapshot_full_outer": QuerySpec(q04_snapshot_full_outer, ORACLE_Q04),
-    "q05_range_band_join": QuerySpec(q05_range_band_join, ORACLE_Q05),
-    "q06_asof_last_click": QuerySpec(q06_asof_last_click, ORACLE_Q06),
-    "q07_expand_grid": QuerySpec(q07_expand_grid, ORACLE_Q07),
-    "q08_linear_interp": QuerySpec(q08_linear_interp, ORACLE_Q08),
-    "q09_step_interp": QuerySpec(q09_step_interp, ORACLE_Q09),
-    "q10_fill_downup": QuerySpec(q10_fill_downup, ORACLE_Q10),
-    "q11_first_flag_year": QuerySpec(q11_first_flag_year, ORACLE_Q11),
-    "q12_dedup_exact": QuerySpec(q12_dedup_exact, ORACLE_Q12),
-    "q13_text_quality": QuerySpec(q13_text_quality, ORACLE_Q13),
-    "q14_token_df": QuerySpec(q14_token_df, ORACLE_Q14),
-    "q15_doc_fingerprint": QuerySpec(q15_doc_fingerprint, ORACLE_Q15),
-    "q16_jaccard_pairs": QuerySpec(q16_jaccard_pairs, ORACLE_Q16),
-    "q17_cosine_topk": QuerySpec(q17_cosine_topk, ORACLE_Q17),
-    "q18_grouping_sets": QuerySpec(q18_grouping_sets, ORACLE_Q18),
-    "q19_manual_pivot": QuerySpec(q19_manual_pivot, ORACLE_Q19),
-    "q20_yearly_ratio": QuerySpec(q20_yearly_ratio, ORACLE_Q20),
-    "q21_monthly_lag": QuerySpec(q21_monthly_lag, ORACLE_Q21),
-    "q22_expns_per_year": QuerySpec(q22_expns_per_year, ORACLE_Q22),
-    "q23_minhash_lsh": QuerySpec(q23_minhash_lsh, _minhash_lsh_oracle()),
-    "q24_simhash": QuerySpec(q24_simhash, _simhash_oracle()),
-    "q25_fia_annualize": QuerySpec(q25_fia_annualize, _annualize_oracle()),
-    "q26_nsvb_carbon": QuerySpec(q26_nsvb_carbon, _carbon_oracle()),
-    "q27_population_scaling": QuerySpec(q27_population_scaling, _pop_oracle()),
-    "q28_grain_sweep": QuerySpec(q28_grain_sweep, _grain_oracle()),
-    "q29_stream_rollup": QuerySpec(
-        _stream("q29_stream_rollup"), _stream_oracle("ORACLE_STREAM_ROLLUP")
-    ),
-    "q30_stream_sessions": QuerySpec(
-        _stream("q30_stream_sessions"), _stream_oracle("ORACLE_STREAM_SESSIONS")
-    ),
-    "q31_stream_stateful": QuerySpec(
-        _stream("q31_stream_stateful"), _stream_oracle("ORACLE_STREAM_STATEFUL")
-    ),
-    "q32_language_id": QuerySpec(
-        q32_language_id, _text_oracle("language_id_oracle_sql")
-    ),
-    "q33_bpe_tokens": QuerySpec(
-        q33_bpe_tokens, _text_oracle("token_count_bpe_oracle_sql")
-    ),
-    "q34_winnow_fingerprint": QuerySpec(
-        q34_winnow_fingerprint, _text_oracle("winnow_fingerprint_oracle_sql")
-    ),
-    "q35_multimodal_features": QuerySpec(q35_multimodal_features, ORACLE_Q35),
-    "q36_frame_sample": QuerySpec(q36_frame_sample, ORACLE_Q36),
-    "q37_ann_lsh": QuerySpec(q37_ann_lsh, _ann_oracle()),
-    "q38_sapling_transitions": QuerySpec(q38_sapling_transitions, _sapling_oracle()),
-    "q39_id_roundtrip": QuerySpec(q39_id_roundtrip, ORACLE_Q39),
-    "q40_embed_neardup": QuerySpec(q40_embed_neardup, _neardup_oracle()),
-    "q41_sql_over_views": QuerySpec(q41_sql_over_views, ORACLE_Q41),
-    "q42_ann_ivf": QuerySpec(q42_ann_ivf, _ivf_oracle()),
-    "q43_bucketed_join": QuerySpec(q43_bucketed_join, ORACLE_Q43),
-    "q44_salted_skew_agg": QuerySpec(q44_salted_skew_agg, ORACLE_Q44),
-    "q45_salted_join": QuerySpec(q45_salted_join, ORACLE_Q45),
-    "q46_kmv_sketch": QuerySpec(q46_kmv_sketch, _kmv_oracle()),
-    "q47_asof_join": QuerySpec(q47_asof_join, ORACLE_Q47),
-    "q48_group_percentiles": QuerySpec(q48_group_percentiles, ORACLE_Q48),
-    "q49_merge_latest": QuerySpec(q49_merge_latest, ORACLE_Q49),
-    "q50_dup_clusters": QuerySpec(q50_dup_clusters, _dup_clusters_oracle()),
-    "q51_state_pipeline": QuerySpec(q51_state_pipeline, _state_pipeline_oracle()),
-    "q52_population_stratified": QuerySpec(
-        q52_population_stratified, _pop_stratified_oracle()
-    ),
-    "q53_stream_attribution": QuerySpec(
-        _stream("q53_stream_attribution"),
-        _stream_oracle("ORACLE_STREAM_ATTRIBUTION"),
-    ),
-    "q54_ngram_jaccard": QuerySpec(q54_ngram_jaccard, ORACLE_Q54),
-    "q55_image_meta": QuerySpec(q55_image_meta, ORACLE_Q55),
-    "q56_sequence_packing": QuerySpec(q56_sequence_packing, ORACLE_Q56),
-    "q57_source_mixing": QuerySpec(q57_source_mixing, ORACLE_Q57),
-    "q58_decontamination": QuerySpec(q58_decontamination, ORACLE_Q58),
-    "q59_repetition_quality": QuerySpec(
-        q59_repetition_quality, _text_oracle("repetition_quality_oracle_sql")
-    ),
-    "q60_pii_scrub": QuerySpec(q60_pii_scrub, _pii_oracle()),
-    "q61_domain_quota": QuerySpec(q61_domain_quota, _domain_quota_oracle()),
-    "q62_semijoin_reduction": QuerySpec(q62_semijoin_reduction, ORACLE_Q62),
-    "q63_dup_spans": QuerySpec(q63_dup_spans, _dup_spans_oracle()),
-    "q64_top_ngrams": QuerySpec(q64_top_ngrams, _top_ngrams_oracle()),
-    "q65_split_assign": QuerySpec(q65_split_assign, _split_assign_oracle()),
-    "q66_jsonl_roundtrip": QuerySpec(q66_jsonl_roundtrip, ORACLE_Q66),
-    "q67_cohort_retention": QuerySpec(q67_cohort_retention, ORACLE_Q67),
-    "q68_batch_sessions": QuerySpec(q68_batch_sessions, ORACLE_Q68),
-    "q69_event_funnel": QuerySpec(q69_event_funnel, ORACLE_Q69),
-    "q70_partitioned_sink": QuerySpec(q70_partitioned_sink, ORACLE_Q70),
-    "q71_fuzzy_join": QuerySpec(q71_fuzzy_join, ORACLE_Q71),
-    "q72_novelty_check": QuerySpec(q72_novelty_check, ORACLE_Q72),
-    "q73_rolling_revenue": QuerySpec(q73_rolling_revenue, ORACLE_Q73),
-    "q74_temperature_mix": QuerySpec(q74_temperature_mix, ORACLE_Q74),
-    "q75_zorder_key": QuerySpec(q75_zorder_key, _zorder_oracle()),
-    "q76_jaccard_budget_guard": QuerySpec(
-        q76_jaccard_budget_guard,
-        _minhash_lsh_oracle(n_hashes=16, band_size=4, threshold=0.8),
-    ),
-    "q77_dedup_keep_best": QuerySpec(
-        q77_dedup_keep_best, _dedup_keep_best_oracle()
-    ),
-    "q78_length_bucket_batches": QuerySpec(
-        q78_length_bucket_batches, _length_bucket_oracle()
-    ),
-    "q79_snapshot_diff": QuerySpec(q79_snapshot_diff, _snapshot_diff_oracle()),
-    "q80_chunk_tokens": QuerySpec(q80_chunk_tokens, _chunk_tokens_oracle()),
-    "q81_corpus_profile": QuerySpec(q81_corpus_profile, _corpus_profile_oracle()),
-    "q82_bm25_scores": QuerySpec(q82_bm25_scores, _bm25_oracle()),
-    "q83_quota_prefilter": QuerySpec(q83_quota_prefilter, ORACLE_Q57),
-    "q84_epoch_upsample": QuerySpec(q84_epoch_upsample, _epoch_upsample_oracle()),
-    "q85_quality_gate": QuerySpec(q85_quality_gate, _quality_gate_oracle()),
-    "q86_lm_score": QuerySpec(q86_lm_score, _lm_score_oracle()),
-    "q87_semantic_dedup": QuerySpec(q87_semantic_dedup, _semantic_dedup_oracle()),
-    "q88_dsir_weights": QuerySpec(q88_dsir_weights, _dsir_oracle()),
-    "q89_inverted_index": QuerySpec(q89_inverted_index, _inverted_index_oracle()),
-    "q90_incremental_dedup": QuerySpec(
-        q90_incremental_dedup, _incremental_dedup_oracle()
-    ),
-    "q91_vocab_overlap": QuerySpec(q91_vocab_overlap, _vocab_overlap_oracle()),
-    "q92_scd2_build": QuerySpec(q92_scd2_build, _scd2_oracle()),
-    "q93_incremental_agg": QuerySpec(
-        q93_incremental_agg, _incremental_agg_oracle()
-    ),
-    "q94_tfidf_signatures": QuerySpec(
-        q94_tfidf_signatures, _tfidf_signatures_oracle()
-    ),
-    "q95_random_projection": QuerySpec(
-        q95_random_projection, _random_projection_oracle()
-    ),
-    "q96_stream_dedup": QuerySpec(
-        _stream("q96_stream_dedup"), _stream_oracle("ORACLE_STREAM_DEDUP")
-    ),
-    "q97_json_extract": QuerySpec(q97_json_extract, ORACLE_Q97),
-    "q98_numeric_histogram": QuerySpec(
-        q98_numeric_histogram, _numeric_histogram_oracle()
-    ),
-    "q99_score_calibration": QuerySpec(
-        q99_score_calibration, _score_calibration_oracle()
-    ),
-    "q100_pipeline_e2e": QuerySpec(q100_pipeline_e2e, _pipeline_e2e_oracle()),
-    "q101_ann_recall": QuerySpec(q101_ann_recall, _ann_recall_oracle()),
-    "q102_weighted_sample": QuerySpec(
-        q102_weighted_sample, _weighted_sample_oracle()
-    ),
-    "q103_cumulative_distinct": QuerySpec(q103_cumulative_distinct, ORACLE_Q103),
-    "q104_anomaly_zscore": QuerySpec(q104_anomaly_zscore, ORACLE_Q104),
-    "q105_winsorized_stats": QuerySpec(q105_winsorized_stats, ORACLE_Q105),
-    "q106_schema_evolution": QuerySpec(q106_schema_evolution, ORACLE_Q106),
-    "q107_equidepth_histogram": QuerySpec(
-        q107_equidepth_histogram, _equidepth_oracle()
-    ),
-    "q108_stream_outer_join": QuerySpec(
-        _stream("q108_stream_outer_join"),
-        _stream_oracle("ORACLE_STREAM_OUTER_JOIN"),
-    ),
-    "q109_unpivot_roundtrip": QuerySpec(q109_unpivot_roundtrip, ORACLE_Q109),
-    "q110_python_datasource": QuerySpec(
-        q110_python_datasource, _python_datasource_oracle()
-    ),
-    "q111_containment_pairs": QuerySpec(
-        q111_containment_pairs, _containment_oracle()
-    ),
-    "q112_stratified_split": QuerySpec(
-        q112_stratified_split, _stratified_split_oracle()
-    ),
-    "q113_interval_overlap": QuerySpec(q113_interval_overlap, ORACLE_Q113),
-    "q114_distribution_drift": QuerySpec(
-        q114_distribution_drift, ORACLE_Q114
-    ),
-    "q115_equidepth_sampled": QuerySpec(
-        q115_equidepth_sampled, _equidepth_sampled_oracle()
-    ),
-    "q116_fuzzy_join_d2": QuerySpec(q116_fuzzy_join_d2, ORACLE_Q116),
-    "q117_group_kmv": QuerySpec(q117_group_kmv, _group_kmv_oracle()),
-    "q118_group_kmv_estimate": QuerySpec(
-        q118_group_kmv_estimate, _group_kmv_estimate_oracle()
-    ),
-    "q119_lsh_representatives": QuerySpec(
-        q119_lsh_representatives, _lsh_representatives_oracle()
-    ),
-    "q120_cluster_ladder": QuerySpec(q120_cluster_ladder, _cluster_ladder_oracle()),
-    "q121_coverage_sample": QuerySpec(
-        q121_coverage_sample, _coverage_sample_oracle("representative")
-    ),
-    "q122_diversity_sample": QuerySpec(
-        q122_diversity_sample, _coverage_sample_oracle("diverse")
-    ),
-    "q123_line_dedup": QuerySpec(q123_line_dedup, _line_dedup_oracle()),
-    "q124_line_dedup_normalized": QuerySpec(
-        q124_line_dedup_normalized, _line_dedup_normalized_oracle()
-    ),
-}
+def _merge(*families: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
+    """Union of the family registries, ordered by query number.  A name
+    declared by two families raises instead of silently overwriting."""
+    merged: dict[str, QuerySpec] = {}
+    for family in families:
+        for name, spec in family.items():
+            if name in merged:
+                raise ValueError(f"query {name!r} is declared twice")
+            merged[name] = spec
+    return dict(sorted(merged.items(), key=lambda kv: int(kv[0][1:].split("_")[0])))
+
+
+QUERIES: dict[str, QuerySpec] = _merge(
+    ann.QUERIES,
+    dedup.QUERIES,
+    fia.QUERIES,
+    infra.QUERIES,
+    multimodal.QUERIES,
+    profile.QUERIES,
+    relational.QUERIES,
+    relevance.QUERIES,
+    sampling.QUERIES,
+    streaming.QUERIES,
+    streaming_queries.QUERIES,
+    text.QUERIES,
+    timeseries.QUERIES,
+)

@@ -1,1 +1,2 @@
-"""Per-family benchmark query modules (split in r13)."""
+"""Per-family benchmark query modules, each declaring its own ``QUERIES``
+entries; ``plans.benchmark_queries`` merges them."""

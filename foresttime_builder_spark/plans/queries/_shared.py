@@ -1,28 +1,16 @@
-"""Benchmark / correctness-gate queries over the synthetic star schema.
-
-Each entry pairs an idiomatic-PySpark query (DataFrame API, Catalyst-friendly)
-with an equivalent ANSI-SQL oracle that DuckDB runs on the same parquet
-tables. The driver compares row counts, schemas, and order-insensitive value
-hashes — so every computed column is aliased identically on both sides, and
-every float that passes through an order-dependent aggregate is rounded to a
-fixed scale on both sides (per-row IEEE arithmetic is deterministic and needs
-no rounding; cross-partition summation order is not).
-
-Query → reference-operator map (SURVEY.md §2): see each docstring.
-"""
+"""Shared pieces of the query family modules: the ``QuerySpec`` registry
+record and the SQL/Column fragments that more than one family builds on both
+engine sides."""
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-
 from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-
-
-
 from foresttime_builder_spark.sources import load_table
+
 
 @dataclass(frozen=True)
 class QuerySpec:
@@ -133,20 +121,5 @@ _URL_SQL = (
     "CAST(doc_id % 1000 AS VARCHAR) || "
     "CASE WHEN doc_id % 2 = 0 THEN '?utm_source=x&ref=y' ELSE '' END"
 )
-
-def _stream(name: str):
-    """Late-bind the streaming queries (module imports streaming machinery)."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from foresttime_builder_spark.plans import streaming_queries
-
-        return getattr(streaming_queries, name)(spark, sf_dir)
-
-    return run
-
-def _stream_oracle(name: str) -> str:
-    from foresttime_builder_spark.plans import streaming_queries
-
-    return getattr(streaming_queries, name)
 
 _BM25_TERMS = ("spark", "hash", "window", "merge")

@@ -1,11 +1,11 @@
-"""ann benchmark queries — split from plans/benchmark_queries.py (r13, mechanical
-move; see that module's docstring).  QUERIES contract unchanged."""
+"""ann benchmark queries; this module declares its own ``QUERIES`` entries."""
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from foresttime_builder_spark.operators.cache import carry_cache
 from foresttime_builder_spark.operators.dedup import derive_candidate_budget
 from foresttime_builder_spark.sources import load_table
+from foresttime_builder_spark.plans.queries._shared import QuerySpec
 
 
 
@@ -321,3 +321,21 @@ def q122_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmeans_coverage_sample(
         load_table(spark, sf_dir, "embeddings"), order="diverse"
     )
+
+
+QUERIES: dict[str, QuerySpec] = {
+    "q17_cosine_topk": QuerySpec(q17_cosine_topk, ORACLE_Q17),
+    "q37_ann_lsh": QuerySpec(q37_ann_lsh, _ann_oracle()),
+    "q40_embed_neardup": QuerySpec(q40_embed_neardup, _neardup_oracle()),
+    "q42_ann_ivf": QuerySpec(q42_ann_ivf, _ivf_oracle()),
+    "q95_random_projection": QuerySpec(
+        q95_random_projection, _random_projection_oracle()
+    ),
+    "q101_ann_recall": QuerySpec(q101_ann_recall, _ann_recall_oracle()),
+    "q121_coverage_sample": QuerySpec(
+        q121_coverage_sample, _coverage_sample_oracle("representative")
+    ),
+    "q122_diversity_sample": QuerySpec(
+        q122_diversity_sample, _coverage_sample_oracle("diverse")
+    ),
+}

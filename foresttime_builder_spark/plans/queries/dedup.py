@@ -1,5 +1,4 @@
-"""dedup benchmark queries — split from plans/benchmark_queries.py (r13, mechanical
-move; see that module's docstring).  QUERIES contract unchanged."""
+"""dedup benchmark queries; this module declares its own ``QUERIES`` entries."""
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -13,6 +12,7 @@ from foresttime_builder_spark.operators.dedup import (
 from foresttime_builder_spark.sources import load_table
 
 from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
+    QuerySpec,
     _HASH60_SQL,
     _MH_BAND,
     _MH_N,
@@ -900,3 +900,33 @@ def _cluster_ladder_oracle() -> str:
         + _lsh_representatives_oracle(threshold=0.5)
         + ") z WHERE cluster_size > 1"
     )
+
+
+QUERIES: dict[str, QuerySpec] = {
+    "q12_dedup_exact": QuerySpec(q12_dedup_exact, ORACLE_Q12),
+    "q16_jaccard_pairs": QuerySpec(q16_jaccard_pairs, ORACLE_Q16),
+    "q23_minhash_lsh": QuerySpec(q23_minhash_lsh, _minhash_lsh_oracle()),
+    "q24_simhash": QuerySpec(q24_simhash, _simhash_oracle()),
+    "q50_dup_clusters": QuerySpec(q50_dup_clusters, _dup_clusters_oracle()),
+    "q54_ngram_jaccard": QuerySpec(q54_ngram_jaccard, ORACLE_Q54),
+    "q71_fuzzy_join": QuerySpec(q71_fuzzy_join, ORACLE_Q71),
+    "q76_jaccard_budget_guard": QuerySpec(
+        q76_jaccard_budget_guard,
+        _minhash_lsh_oracle(n_hashes=16, band_size=4, threshold=0.8),
+    ),
+    "q77_dedup_keep_best": QuerySpec(
+        q77_dedup_keep_best, _dedup_keep_best_oracle()
+    ),
+    "q87_semantic_dedup": QuerySpec(q87_semantic_dedup, _semantic_dedup_oracle()),
+    "q90_incremental_dedup": QuerySpec(
+        q90_incremental_dedup, _incremental_dedup_oracle()
+    ),
+    "q111_containment_pairs": QuerySpec(
+        q111_containment_pairs, _containment_oracle()
+    ),
+    "q116_fuzzy_join_d2": QuerySpec(q116_fuzzy_join_d2, ORACLE_Q116),
+    "q119_lsh_representatives": QuerySpec(
+        q119_lsh_representatives, _lsh_representatives_oracle()
+    ),
+    "q120_cluster_ladder": QuerySpec(q120_cluster_ladder, _cluster_ladder_oracle()),
+}

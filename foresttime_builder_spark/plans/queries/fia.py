@@ -1,11 +1,11 @@
-"""fia benchmark queries — split from plans/benchmark_queries.py (r13, mechanical
-move; see that module's docstring).  QUERIES contract unchanged."""
+"""fia benchmark queries; this module declares its own ``QUERIES`` entries."""
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from foresttime_builder_spark.sources import load_table
 
 from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
+    QuerySpec,
     _PANEL_SQL,
 )
 
@@ -227,3 +227,17 @@ def _grain_oracle() -> str:
     )
 
     return ORACLE_GRAIN_SWEEP.format(chain=carbon_cte())
+
+
+QUERIES: dict[str, QuerySpec] = {
+    "q25_fia_annualize": QuerySpec(q25_fia_annualize, _annualize_oracle()),
+    "q26_nsvb_carbon": QuerySpec(q26_nsvb_carbon, _carbon_oracle()),
+    "q27_population_scaling": QuerySpec(q27_population_scaling, _pop_oracle()),
+    "q28_grain_sweep": QuerySpec(q28_grain_sweep, _grain_oracle()),
+    "q38_sapling_transitions": QuerySpec(q38_sapling_transitions, _sapling_oracle()),
+    "q39_id_roundtrip": QuerySpec(q39_id_roundtrip, ORACLE_Q39),
+    "q51_state_pipeline": QuerySpec(q51_state_pipeline, _state_pipeline_oracle()),
+    "q52_population_stratified": QuerySpec(
+        q52_population_stratified, _pop_stratified_oracle()
+    ),
+}

@@ -1,11 +1,11 @@
-"""infra benchmark queries — split from plans/benchmark_queries.py (r13, mechanical
-move; see that module's docstring).  QUERIES contract unchanged."""
+"""infra benchmark queries; this module declares its own ``QUERIES`` entries."""
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from foresttime_builder_spark.sources import load_table
 
 from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
+    QuerySpec,
     _HASH60_SQL,
 )
 
@@ -598,3 +598,25 @@ SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
 FROM ({synthetic_docs_oracle_sql(5000)})
 GROUP BY lang
 """
+
+
+QUERIES: dict[str, QuerySpec] = {
+    "q43_bucketed_join": QuerySpec(q43_bucketed_join, ORACLE_Q43),
+    "q44_salted_skew_agg": QuerySpec(q44_salted_skew_agg, ORACLE_Q44),
+    "q45_salted_join": QuerySpec(q45_salted_join, ORACLE_Q45),
+    "q49_merge_latest": QuerySpec(q49_merge_latest, ORACLE_Q49),
+    "q66_jsonl_roundtrip": QuerySpec(q66_jsonl_roundtrip, ORACLE_Q66),
+    "q70_partitioned_sink": QuerySpec(q70_partitioned_sink, ORACLE_Q70),
+    "q75_zorder_key": QuerySpec(q75_zorder_key, _zorder_oracle()),
+    "q79_snapshot_diff": QuerySpec(q79_snapshot_diff, _snapshot_diff_oracle()),
+    "q92_scd2_build": QuerySpec(q92_scd2_build, _scd2_oracle()),
+    "q93_incremental_agg": QuerySpec(
+        q93_incremental_agg, _incremental_agg_oracle()
+    ),
+    "q97_json_extract": QuerySpec(q97_json_extract, ORACLE_Q97),
+    "q100_pipeline_e2e": QuerySpec(q100_pipeline_e2e, _pipeline_e2e_oracle()),
+    "q106_schema_evolution": QuerySpec(q106_schema_evolution, ORACLE_Q106),
+    "q110_python_datasource": QuerySpec(
+        q110_python_datasource, _python_datasource_oracle()
+    ),
+}

@@ -1,9 +1,9 @@
-"""multimodal benchmark queries — split from plans/benchmark_queries.py (r13, mechanical
-move; see that module's docstring).  QUERIES contract unchanged."""
+"""multimodal benchmark queries; this module declares its own ``QUERIES`` entries."""
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from foresttime_builder_spark.sources import load_table
+from foresttime_builder_spark.plans.queries._shared import QuerySpec
 
 
 
@@ -137,3 +137,10 @@ SELECT doc_id, n_frames, len(ids) AS n_sampled,
          AS last_frame_hash
 FROM f
 """
+
+
+QUERIES: dict[str, QuerySpec] = {
+    "q35_multimodal_features": QuerySpec(q35_multimodal_features, ORACLE_Q35),
+    "q36_frame_sample": QuerySpec(q36_frame_sample, ORACLE_Q36),
+    "q55_image_meta": QuerySpec(q55_image_meta, ORACLE_Q55),
+}

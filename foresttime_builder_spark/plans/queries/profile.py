@@ -1,10 +1,10 @@
-"""profile benchmark queries — split from plans/benchmark_queries.py (r13, mechanical
-move; see that module's docstring).  QUERIES contract unchanged."""
+"""profile benchmark queries; this module declares its own ``QUERIES`` entries."""
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from foresttime_builder_spark.operators.cache import carry_cache
 from foresttime_builder_spark.sources import load_table
+from foresttime_builder_spark.plans.queries._shared import QuerySpec
 
 
 
@@ -183,3 +183,21 @@ def _group_kmv_estimate_oracle() -> str:
         + kmv_by_oracle_sql(inner, "lang", "tok", k=64, with_exact=False)
         + ") z"
     )
+
+
+QUERIES: dict[str, QuerySpec] = {
+    "q46_kmv_sketch": QuerySpec(q46_kmv_sketch, _kmv_oracle()),
+    "q98_numeric_histogram": QuerySpec(
+        q98_numeric_histogram, _numeric_histogram_oracle()
+    ),
+    "q107_equidepth_histogram": QuerySpec(
+        q107_equidepth_histogram, _equidepth_oracle()
+    ),
+    "q115_equidepth_sampled": QuerySpec(
+        q115_equidepth_sampled, _equidepth_sampled_oracle()
+    ),
+    "q117_group_kmv": QuerySpec(q117_group_kmv, _group_kmv_oracle()),
+    "q118_group_kmv_estimate": QuerySpec(
+        q118_group_kmv_estimate, _group_kmv_estimate_oracle()
+    ),
+}

@@ -1,11 +1,11 @@
-"""relational benchmark queries — split from plans/benchmark_queries.py (r13, mechanical
-move; see that module's docstring).  QUERIES contract unchanged."""
+"""relational benchmark queries; this module declares its own ``QUERIES`` entries."""
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from foresttime_builder_spark.sources import load_table
 
 from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
+    QuerySpec,
     _QTY_BANDS,
 )
 
@@ -857,3 +857,29 @@ SELECT user_id, day, wday, s_start, s_end, w_start, w_end
 FROM spans JOIN windows
   ON s_start < w_end AND w_start < s_end
 """
+
+
+QUERIES: dict[str, QuerySpec] = {
+    "q01_pricing_summary": QuerySpec(q01_pricing_summary, ORACLE_Q01),
+    "q02_region_revenue": QuerySpec(q02_region_revenue, ORACLE_Q02),
+    "q03_customer_order_counts": QuerySpec(q03_customer_order_counts, ORACLE_Q03),
+    "q04_snapshot_full_outer": QuerySpec(q04_snapshot_full_outer, ORACLE_Q04),
+    "q05_range_band_join": QuerySpec(q05_range_band_join, ORACLE_Q05),
+    "q06_asof_last_click": QuerySpec(q06_asof_last_click, ORACLE_Q06),
+    "q18_grouping_sets": QuerySpec(q18_grouping_sets, ORACLE_Q18),
+    "q19_manual_pivot": QuerySpec(q19_manual_pivot, ORACLE_Q19),
+    "q20_yearly_ratio": QuerySpec(q20_yearly_ratio, ORACLE_Q20),
+    "q21_monthly_lag": QuerySpec(q21_monthly_lag, ORACLE_Q21),
+    "q22_expns_per_year": QuerySpec(q22_expns_per_year, ORACLE_Q22),
+    "q41_sql_over_views": QuerySpec(q41_sql_over_views, ORACLE_Q41),
+    "q47_asof_join": QuerySpec(q47_asof_join, ORACLE_Q47),
+    "q48_group_percentiles": QuerySpec(q48_group_percentiles, ORACLE_Q48),
+    "q62_semijoin_reduction": QuerySpec(q62_semijoin_reduction, ORACLE_Q62),
+    "q67_cohort_retention": QuerySpec(q67_cohort_retention, ORACLE_Q67),
+    "q73_rolling_revenue": QuerySpec(q73_rolling_revenue, ORACLE_Q73),
+    "q103_cumulative_distinct": QuerySpec(q103_cumulative_distinct, ORACLE_Q103),
+    "q104_anomaly_zscore": QuerySpec(q104_anomaly_zscore, ORACLE_Q104),
+    "q105_winsorized_stats": QuerySpec(q105_winsorized_stats, ORACLE_Q105),
+    "q109_unpivot_roundtrip": QuerySpec(q109_unpivot_roundtrip, ORACLE_Q109),
+    "q113_interval_overlap": QuerySpec(q113_interval_overlap, ORACLE_Q113),
+}

@@ -1,11 +1,11 @@
-"""relevance benchmark queries — split from plans/benchmark_queries.py (r13, mechanical
-move; see that module's docstring).  QUERIES contract unchanged."""
+"""relevance benchmark queries; this module declares its own ``QUERIES`` entries."""
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from foresttime_builder_spark.sources import load_table
 
 from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
+    QuerySpec,
     _BM25_TERMS,
 )
 
@@ -103,3 +103,14 @@ def _tfidf_signatures_oracle() -> str:
     )
 
     return tfidf_signature_terms_oracle_sql("source", "text", "documents", k=5)
+
+
+QUERIES: dict[str, QuerySpec] = {
+    "q82_bm25_scores": QuerySpec(q82_bm25_scores, _bm25_oracle()),
+    "q86_lm_score": QuerySpec(q86_lm_score, _lm_score_oracle()),
+    "q88_dsir_weights": QuerySpec(q88_dsir_weights, _dsir_oracle()),
+    "q89_inverted_index": QuerySpec(q89_inverted_index, _inverted_index_oracle()),
+    "q94_tfidf_signatures": QuerySpec(
+        q94_tfidf_signatures, _tfidf_signatures_oracle()
+    ),
+}

@@ -1,9 +1,9 @@
-"""sampling benchmark queries — split from plans/benchmark_queries.py (r13, mechanical
-move; see that module's docstring).  QUERIES contract unchanged."""
+"""sampling benchmark queries; this module declares its own ``QUERIES`` entries."""
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from foresttime_builder_spark.sources import load_table
+from foresttime_builder_spark.plans.queries._shared import QuerySpec
 
 
 
@@ -349,3 +349,27 @@ SELECT CAST(count(*) AS BIGINT) AS n_buckets,
        CAST(sum(t_e9) AS BIGINT) AS psi_e9
 FROM terms
 """
+
+
+QUERIES: dict[str, QuerySpec] = {
+    "q56_sequence_packing": QuerySpec(q56_sequence_packing, ORACLE_Q56),
+    "q57_source_mixing": QuerySpec(q57_source_mixing, ORACLE_Q57),
+    "q65_split_assign": QuerySpec(q65_split_assign, _split_assign_oracle()),
+    "q74_temperature_mix": QuerySpec(q74_temperature_mix, ORACLE_Q74),
+    "q78_length_bucket_batches": QuerySpec(
+        q78_length_bucket_batches, _length_bucket_oracle()
+    ),
+    "q84_epoch_upsample": QuerySpec(q84_epoch_upsample, _epoch_upsample_oracle()),
+    "q99_score_calibration": QuerySpec(
+        q99_score_calibration, _score_calibration_oracle()
+    ),
+    "q102_weighted_sample": QuerySpec(
+        q102_weighted_sample, _weighted_sample_oracle()
+    ),
+    "q112_stratified_split": QuerySpec(
+        q112_stratified_split, _stratified_split_oracle()
+    ),
+    "q114_distribution_drift": QuerySpec(
+        q114_distribution_drift, ORACLE_Q114
+    ),
+}

@@ -1,9 +1,9 @@
-"""streaming benchmark queries — split from plans/benchmark_queries.py (r13, mechanical
-move; see that module's docstring).  QUERIES contract unchanged."""
+"""streaming benchmark queries; this module declares its own ``QUERIES`` entries."""
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from foresttime_builder_spark.sources import load_table
+from foresttime_builder_spark.plans.queries._shared import QuerySpec
 
 
 
@@ -144,3 +144,9 @@ SELECT v.user_id, v.view_es, c.click_es, p.purchase_es,
             ELSE 0 END AS stage
 FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)
 """
+
+
+QUERIES: dict[str, QuerySpec] = {
+    "q68_batch_sessions": QuerySpec(q68_batch_sessions, ORACLE_Q68),
+    "q69_event_funnel": QuerySpec(q69_event_funnel, ORACLE_Q69),
+}

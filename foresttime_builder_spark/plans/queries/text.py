@@ -1,11 +1,12 @@
-"""text benchmark queries — split from plans/benchmark_queries.py (r13, mechanical
-move; see that module's docstring).  QUERIES contract unchanged."""
+"""text benchmark queries; this module declares its own ``QUERIES`` entries."""
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from foresttime_builder_spark.sources import load_table
 
+from foresttime_builder_spark.plans.queries.sampling import ORACLE_Q57
 from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
+    QuerySpec,
     _HASH60_SQL,
     _PII_SUFFIX_SQL,
     _URL_SQL,
@@ -457,3 +458,37 @@ def _line_dedup_normalized_oracle() -> str:
         delimiter_regex=" line ", max_doc_freq=1, joiner=" | ",
         normalize=True,
     )
+
+
+QUERIES: dict[str, QuerySpec] = {
+    "q13_text_quality": QuerySpec(q13_text_quality, ORACLE_Q13),
+    "q14_token_df": QuerySpec(q14_token_df, ORACLE_Q14),
+    "q15_doc_fingerprint": QuerySpec(q15_doc_fingerprint, ORACLE_Q15),
+    "q32_language_id": QuerySpec(
+        q32_language_id, _text_oracle("language_id_oracle_sql")
+    ),
+    "q33_bpe_tokens": QuerySpec(
+        q33_bpe_tokens, _text_oracle("token_count_bpe_oracle_sql")
+    ),
+    "q34_winnow_fingerprint": QuerySpec(
+        q34_winnow_fingerprint, _text_oracle("winnow_fingerprint_oracle_sql")
+    ),
+    "q58_decontamination": QuerySpec(q58_decontamination, ORACLE_Q58),
+    "q59_repetition_quality": QuerySpec(
+        q59_repetition_quality, _text_oracle("repetition_quality_oracle_sql")
+    ),
+    "q60_pii_scrub": QuerySpec(q60_pii_scrub, _pii_oracle()),
+    "q61_domain_quota": QuerySpec(q61_domain_quota, _domain_quota_oracle()),
+    "q63_dup_spans": QuerySpec(q63_dup_spans, _dup_spans_oracle()),
+    "q64_top_ngrams": QuerySpec(q64_top_ngrams, _top_ngrams_oracle()),
+    "q72_novelty_check": QuerySpec(q72_novelty_check, ORACLE_Q72),
+    "q80_chunk_tokens": QuerySpec(q80_chunk_tokens, _chunk_tokens_oracle()),
+    "q81_corpus_profile": QuerySpec(q81_corpus_profile, _corpus_profile_oracle()),
+    "q83_quota_prefilter": QuerySpec(q83_quota_prefilter, ORACLE_Q57),
+    "q85_quality_gate": QuerySpec(q85_quality_gate, _quality_gate_oracle()),
+    "q91_vocab_overlap": QuerySpec(q91_vocab_overlap, _vocab_overlap_oracle()),
+    "q123_line_dedup": QuerySpec(q123_line_dedup, _line_dedup_oracle()),
+    "q124_line_dedup_normalized": QuerySpec(
+        q124_line_dedup_normalized, _line_dedup_normalized_oracle()
+    ),
+}

@@ -1,5 +1,4 @@
-"""timeseries benchmark queries — split from plans/benchmark_queries.py (r13, mechanical
-move; see that module's docstring).  QUERIES contract unchanged."""
+"""timeseries benchmark queries; this module declares its own ``QUERIES`` entries."""
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
@@ -12,6 +11,7 @@ from foresttime_builder_spark.operators import (
 from foresttime_builder_spark.sources import load_table
 
 from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
+    QuerySpec,
     _GRID_SQL,
     _orders_panel,
 )
@@ -167,3 +167,12 @@ SELECT o_custkey AS custkey,
          AS first_f_year
 FROM orders GROUP BY 1
 """
+
+
+QUERIES: dict[str, QuerySpec] = {
+    "q07_expand_grid": QuerySpec(q07_expand_grid, ORACLE_Q07),
+    "q08_linear_interp": QuerySpec(q08_linear_interp, ORACLE_Q08),
+    "q09_step_interp": QuerySpec(q09_step_interp, ORACLE_Q09),
+    "q10_fill_downup": QuerySpec(q10_fill_downup, ORACLE_Q10),
+    "q11_first_flag_year": QuerySpec(q11_first_flag_year, ORACLE_Q11),
+}

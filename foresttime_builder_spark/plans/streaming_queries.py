@@ -4,12 +4,14 @@ Each runs a streaming plan to completion (``availableNow`` → memory sink)
 and returns the materialized result; the DuckDB oracle computes the same
 analytics in batch SQL.  This gates the streaming operators end-to-end:
 incremental execution must converge to the batch answer.
+The module declares its own ``QUERIES`` entries.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from foresttime_builder_spark.plans.queries._shared import QuerySpec
 from foresttime_builder_spark.streaming import (
     purchase_attribution,
     read_event_stream,
@@ -271,3 +273,17 @@ LEFT JOIN clicks c
 CROSS JOIN cutoff
 WHERE p.purchase_ts <= cutoff.co
 """
+
+
+QUERIES: dict[str, QuerySpec] = {
+    "q29_stream_rollup": QuerySpec(q29_stream_rollup, ORACLE_STREAM_ROLLUP),
+    "q30_stream_sessions": QuerySpec(q30_stream_sessions, ORACLE_STREAM_SESSIONS),
+    "q31_stream_stateful": QuerySpec(q31_stream_stateful, ORACLE_STREAM_STATEFUL),
+    "q53_stream_attribution": QuerySpec(
+        q53_stream_attribution, ORACLE_STREAM_ATTRIBUTION
+    ),
+    "q96_stream_dedup": QuerySpec(q96_stream_dedup, ORACLE_STREAM_DEDUP),
+    "q108_stream_outer_join": QuerySpec(
+        q108_stream_outer_join, ORACLE_STREAM_OUTER_JOIN
+    ),
+}

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from foresttime_builder_spark.plans.benchmark_queries import q69_event_funnel
+from foresttime_builder_spark.plans.queries.streaming import q69_event_funnel
 
 
 def _write_events(spark, tmp_path, rows):

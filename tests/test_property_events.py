@@ -78,7 +78,7 @@ def _model_funnel(events):
 @settings(**_SETTINGS)
 @given(events=events_strategy)
 def test_funnel_matches_model(spark, tmp_path_factory, events):
-    from foresttime_builder_spark.plans.benchmark_queries import q69_event_funnel
+    from foresttime_builder_spark.plans.queries.streaming import q69_event_funnel
 
     d = str(tmp_path_factory.mktemp("ev"))
     _mk_df(spark, events).coalesce(1).write.parquet(d + "/events.parquet")
@@ -113,7 +113,7 @@ def _model_sessions(events):
 @settings(**_SETTINGS)
 @given(events=events_strategy)
 def test_sessions_match_model(spark, tmp_path_factory, events):
-    from foresttime_builder_spark.plans.benchmark_queries import q68_batch_sessions
+    from foresttime_builder_spark.plans.queries.streaming import q68_batch_sessions
 
     d = str(tmp_path_factory.mktemp("ev"))
     _mk_df(spark, events).coalesce(1).write.parquet(d + "/events.parquet")
