@@ -32,16 +32,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from foresttime_builder_spark.operators.dedup import hash60
 from foresttime_builder_spark.operators.spread import spread as _spread
-
-
-def _hash60(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def _plane_component(bit: int, dim: int) -> Column:
     """Deterministic pseudo-random hyperplane weight in [-1, 1]."""
-    h = _hash60(F.lit(f"{bit}_{dim}"))
+    h = hash60(F.lit(f"{bit}_{dim}"))
     return ((h % 2001) - 1000) / 1000.0
 
 
@@ -594,7 +591,7 @@ def _kmeans_build(
     seed_key = F.concat(vid_md5, F.lpad(F.col("vid").cast("string"), 20, "0"))
     cent = (
         base.withColumn(
-            "cid", F.pmod(_hash60(vid_md5), F.lit(k_clusters)).cast("int")
+            "cid", F.pmod(hash60(vid_md5), F.lit(k_clusters)).cast("int")
         )
         .groupBy("cid")
         .agg(F.min_by("vec", seed_key).alias("cvec"))

@@ -29,15 +29,12 @@ document length.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from foresttime_builder_spark.operators.decontaminate import (
     token_ngrams_from_tokens,
 )
-
-
-def _hash60(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+from foresttime_builder_spark.operators.dedup import hash60
 
 
 def duplicated_span_coverage(
@@ -78,7 +75,7 @@ def duplicated_span_coverage(
                 "pos", "gram"
             ),
         )
-        .select(F.col(id_col), "pos", _hash60(F.col("gram")).alias("h"))
+        .select(F.col(id_col), "pos", hash60(F.col("gram")).alias("h"))
         .persist()
     )
 

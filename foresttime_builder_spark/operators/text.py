@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from foresttime_builder_spark.operators.dedup import hash60
 from foresttime_builder_spark.operators.spread import spread as _spread
 
 #: tiny deterministic stopword profiles (order = tie-break priority)
@@ -119,10 +120,6 @@ FROM {table}
 """
 
 
-def _hash60(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def winnow_fingerprint(
     df: DataFrame, id_col: str, text_col: str, k: int = 8, w: int = 4
 ) -> DataFrame:
@@ -190,7 +187,7 @@ def winnow_fingerprint(
             "_rid",
             "_p",
             "_nw",
-            _hash60(F.col("_t").substr(F.col("_p"), F.lit(k))).alias("_h"),
+            hash60(F.col("_t").substr(F.col("_p"), F.lit(k))).alias("_h"),
         )
     )
     win = (
@@ -236,7 +233,7 @@ def _winnow_fingerprint_hof(
             n_grams >= 1,
             F.transform(
                 F.sequence(F.lit(1), n_grams),
-                lambda p: _hash60(text.substr(p, F.lit(k))),
+                lambda p: hash60(text.substr(p, F.lit(k))),
             ),
         ).otherwise(empty),
     )

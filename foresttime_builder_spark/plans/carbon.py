@@ -14,9 +14,9 @@ broadcast reference joins + one lazy column DAG:
 - the only non-codegen step is the vectorized bisection for HT4/HTSAW.
 
 The ~30 dependency-ordered projection layers of the prediction DAG are
-authored as SQL text and applied as incremental ``withColumns`` batches of ``F.expr`` text
-(:func:`..functions.helpers.apply_layers`) — one JVM round trip per
-column instead of one per operator.
+authored as SQL text and folded into one generated nested-``SELECT``
+statement (:func:`..functions.helpers.apply_layers`): one ``spark.sql``
+call, so the eager analyzer runs once instead of once per layer.
 
 Division-by-zero edges (zero combined biomass or zero present volume) yield
 null here — Spark/ANSI-friendly — where R would produce Inf/NaN

@@ -102,15 +102,13 @@ def fia_tidy(db: dict[str, DataFrame]) -> DataFrame:
     plotgeom = (
         db["PLOTGEOM"]
         .filter(F.col("INVYR") >= 2000)
-        .select(
-            F.col("CN").cast("string").alias("PLT_CN"), "INVYR", "ECOSUBCD"
-        )
+        .select(F.col("CN").alias("PLT_CN"), "INVYR", "ECOSUBCD")
     )
     plot = (
         add_composite_ids(db["PLOT"].filter(F.col("INVYR") >= 2000))
         .select(
             "plot_ID",
-            F.col("CN").cast("string").alias("PLT_CN"),
+            F.col("CN").alias("PLT_CN"),
             "INVYR",
             "DESIGNCD",
             "INTENSITY",
@@ -120,7 +118,7 @@ def fia_tidy(db: dict[str, DataFrame]) -> DataFrame:
         add_composite_ids(db["COND"].filter(F.col("INVYR") >= 2000))
         .select(
             "plot_ID",
-            F.col("PLT_CN").cast("string").alias("PLT_CN"),
+            "PLT_CN",
             "INVYR",
             "CONDID",
             "CONDPROP_UNADJ",
@@ -135,7 +133,7 @@ def fia_tidy(db: dict[str, DataFrame]) -> DataFrame:
             "plot_ID",
             "tree_ID",
             "INVYR",
-            F.col("PLT_CN").cast("string").alias("PLT_CN"),
+            "PLT_CN",
             "CONDID",
             "MORTYR",
             "STATUSCD",

@@ -17,12 +17,6 @@ class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: Optional[str]  # ANSI SQL for DuckDB; None → rows-only check
 
-def _hash60(col: Column) -> Column:
-    """Deterministic 60-bit hash shared with the DuckDB oracle: first 15 hex
-    digits of md5, as a bigint. (Spark's murmur ``F.hash`` has no DuckDB
-    twin, so engine-portable operators hash via md5.)"""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
 _HASH60_SQL = "CAST(('0x' || substr(md5({x}), 1, 15)) AS BIGINT)"
 
 _QTY_BANDS = [("tiny", 0.0, 10.0), ("small", 10.0, 25.0), ("mid", 25.0, 40.0), ("large", 40.0, 1e9)]

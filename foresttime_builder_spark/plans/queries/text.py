@@ -4,13 +4,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from foresttime_builder_spark.sources import load_table
 
+from foresttime_builder_spark.operators.dedup import hash60
 from foresttime_builder_spark.plans.queries.sampling import ORACLE_Q57
 from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
     QuerySpec,
     _HASH60_SQL,
     _PII_SUFFIX_SQL,
     _URL_SQL,
-    _hash60,
     _pii_suffix_spark,
     _url_spark,
 )
@@ -75,8 +75,8 @@ def q15_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     return toks.groupBy("doc_id").agg(
-        F.min(_hash60(F.col("token"))).alias("min_token_hash"),
-        F.max(_hash60(F.col("token"))).alias("max_token_hash"),
+        F.min(hash60(F.col("token"))).alias("min_token_hash"),
+        F.max(hash60(F.col("token"))).alias("max_token_hash"),
         F.count(F.lit(1)).alias("n_tokens"),
     )
 

@@ -2,7 +2,7 @@
 
 The full production path of the reference's per-state job
 (``scripts/state-parquet.R:10-49``): raw FIA-shaped CSVs → CSV source layer
-(CN→string contract, ``sources/fia.py``) → ``fia_tidy`` → ``expand_data`` →
+(declared type contract, ``sources/fia.py``) → ``fia_tidy`` → ``expand_data`` →
 ``interpolate_data`` → ``adjust_mortality`` in BOTH variants →
 ``estimate_carbon`` → parquet sink → read back.  Everything between the CSV
 bytes and the parquet bytes is inside the gate — the component queries

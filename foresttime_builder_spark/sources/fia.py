@@ -6,26 +6,25 @@ Mirrors the reference's source surface (``R/fia_download.R``,
 - :func:`fia_download` / :func:`unzip_csvs` are driver-side (a handful of
   HTTP fetches is not a Spark job), idempotent (skip-if-present), and only
   extract the 9 needed tables;
-- :func:`fia_load` is a schema-contracted multi-state CSV scan: Spark infers
-  the per-table schema from a sample, then every control-number column
-  (``CN`` / ``*_CN``) is pinned to ``StringType`` before the real scan —
-  FIADB CNs are 15+ digit integers that silently lose precision as doubles
-  (reference casts them to character for the same reason,
-  ``R/fia_tidy.R:25,31,45,61``; rationale ``NEWS.md:26``).
+- :func:`fia_load` is a schema-contracted multi-state CSV scan: each table
+  is read under one declared type map, :data:`FIA_TYPES`, laid out in the
+  order of the files' header line (read on the driver, so loading runs no
+  Spark job).  Undeclared columns, control numbers included, read as
+  string; states whose headers differ for one table raise ``ValueError``.
 
-Scale notes: multi-state loads are one reader over a path glob, so partition
+Scale notes: multi-state loads are one reader over a path list, so partition
 planning, predicate pushdown (e.g. the INVYR >= 2000 filter) and parallelism
-come from the data source, not a driver loop.  For production scale, convert
-the CSVs to parquet once with :func:`csv_to_parquet` and scan that.
+come from the data source, not a driver loop.
 """
 
 from __future__ import annotations
 
+import csv
 import os
 import zipfile
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 #: the 9 FIADB tables the pipeline consumes (reference ``R/fia_download.R:2-12``)
@@ -40,6 +39,32 @@ FIA_TABLES = (
     "POP_PLOT_STRATUM_ASSGN",
     "POP_STRATUM",
 )
+
+#: the declared FIADB column types, table → column → type: the numeric
+#: columns the package reads (SURVEY §1.2).  Every other column reads as
+#: string, control numbers (``CN`` / ``*_CN``) included: FIADB CNs are 15+
+#: digit integers that silently lose precision as doubles (the reference
+#: casts them to character for the same reason, ``R/fia_tidy.R:25,31,45,61``;
+#: rationale ``NEWS.md:26``).  A declared type does not drift with the data:
+#: an all-``NA`` MORTYR stays int and an integer-valued DIA stays double.
+FIA_TYPES: dict[str, dict[str, str]] = {
+    table: {
+        **dict.fromkeys(ints.split(), "int"),
+        **dict.fromkeys(doubles.split(), "double"),
+    }
+    for table, ints, doubles in (
+        ("TREE", "STATECD UNITCD COUNTYCD PLOT SUBP TREE INVYR CONDID MORTYR "
+                 "STATUSCD RECONCILECD DECAYCD STANDING_DEAD_CD SPCD",
+         "DIA CR HT ACTUALHT CULL"),
+        ("PLOT", "INVYR STATECD UNITCD COUNTYCD PLOT DESIGNCD INTENSITY", ""),
+        ("COND", "INVYR STATECD UNITCD COUNTYCD PLOT CONDID COND_STATUS_CD "
+                 "STDORGCD",
+         "CONDPROP_UNADJ"),
+        ("PLOTGEOM", "INVYR", ""),
+        # the only POP columns plans/population.py does arithmetic on
+        ("POP_STRATUM", "", "EXPNS ADJ_FACTOR_SUBP"),
+    )
+}
 
 DATAMART_URL = "https://apps.fs.usda.gov/fia/datamart/CSV/{state}_CSV.zip"
 
@@ -153,29 +178,35 @@ def unzip_csvs(
     return extracted
 
 
-def _pin_cn_columns(schema: T.StructType) -> T.StructType:
-    """Control numbers must never be numeric (precision loss)."""
-    fields = []
-    for f in schema.fields:
-        if f.name == "CN" or f.name.endswith("_CN"):
-            fields.append(T.StructField(f.name, T.StringType(), True))
-        else:
-            fields.append(f)
-    return T.StructType(fields)
+_SPARK_TYPES = {
+    "int": T.IntegerType(),
+    "double": T.DoubleType(),
+    "string": T.StringType(),
+}
 
 
-#: the reader options the schema inference runs under — part of the memo
-#: key below, so a future change to these (or a per-call override) can
-#: never serve a schema inferred under different settings
-_CSV_READ_OPTS: tuple[tuple[str, str], ...] = (
-    ("header", "true"),
-    ("nullValue", "NA"),
-)
+def _declared_schema(table: str, paths: Sequence[str]) -> T.StructType:
+    """``table``'s :data:`FIA_TYPES` contract in its files' header order.
 
-#: inferred-CSV-schema memo, keyed on the reader options plus every
-#: file's (path, mtime_ns, size) — see the inference note inside
-#: :func:`fia_load`
-_SCHEMA_CACHE: dict[tuple, "object"] = {}
+    Spark applies a CSV schema by position, so every state's file must list
+    the same columns in the same order; a mismatch raises instead of
+    loading values into the wrong columns."""
+    header = first = None
+    for path in paths:
+        with open(path, newline="") as f:
+            cols = next(csv.reader(f), [])
+        if header is None:
+            header, first = cols, path
+        elif cols != header:
+            raise ValueError(
+                f"{table}: the header of {path} differs from {first}; "
+                "every state's file of one table must list the same columns "
+                "in the same order"
+            )
+    types = FIA_TYPES.get(table, {})
+    return T.StructType(
+        [T.StructField(c, _SPARK_TYPES[types.get(c, "string")]) for c in header]
+    )
 
 
 def fia_load(
@@ -186,7 +217,10 @@ def fia_load(
 ) -> dict[str, DataFrame]:
     """Multi-state CSV scan → ``{table: DataFrame}`` (reference
     ``R/fia_load.R:8-11``). One reader per table over all state files (union
-    by path list), schema inferred once then CN columns pinned to string."""
+    by path list) under the declared :data:`FIA_TYPES` schema, built from
+    the files' shared header line; no Spark job runs until the frames are
+    used.  The scan fails fast: a value its declared type cannot parse
+    (e.g. ``2003.0`` in an int column) raises instead of reading as null."""
     db: dict[str, DataFrame] = {}
     for table in tables:
         paths = [
@@ -195,49 +229,9 @@ def fia_load(
         paths = [p for p in paths if os.path.exists(p)]
         if not paths:
             continue
-        # schema inference is a FULL extra scan job per table (9 jobs per
-        # load); the files are immutable between runs of the same
-        # pipeline, so memoize on (path, mtime, size) — same idea as
-        # parquet footer caching.  A touched/replaced file misses the key
-        # and re-infers, so this can never serve a stale schema.
-        stats = [(p, os.stat(p)) for p in paths]  # one stat per file
-        key = (_CSV_READ_OPTS,) + tuple(
-            (p, s.st_mtime_ns, s.st_size) for p, s in stats
-        )
-        inferred = _SCHEMA_CACHE.get(key)
-        if inferred is None:
-            inferred = (
-                spark.read.options(**dict(_CSV_READ_OPTS))
-                .option("inferSchema", True)
-                .csv(paths)
-                .schema
-            )
-            _SCHEMA_CACHE[key] = inferred
         db[table] = (
-            spark.read.options(**dict(_CSV_READ_OPTS))
-            .schema(_pin_cn_columns(inferred))
+            spark.read.options(header="true", nullValue="NA", mode="FAILFAST")
+            .schema(_declared_schema(table, paths))
             .csv(paths)
         )
     return db
-
-
-def csv_to_parquet(
-    db: dict[str, DataFrame], out_dir: str, partition_by: str | None = "STATECD"
-) -> None:
-    """One-time CSV → parquet staging for repeated large-scale runs."""
-    for table, df in db.items():
-        writer = df.write.mode("overwrite")
-        if partition_by and partition_by in df.columns:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(os.path.join(out_dir, table))
-
-
-def load_staged(
-    spark: SparkSession, stage_dir: str, tables: Sequence[str] = FIA_TABLES
-) -> dict[str, DataFrame]:
-    """Read a :func:`csv_to_parquet` staging area (partition-pruned scans)."""
-    return {
-        t: spark.read.parquet(os.path.join(stage_dir, t))
-        for t in tables
-        if os.path.exists(os.path.join(stage_dir, t))
-    }

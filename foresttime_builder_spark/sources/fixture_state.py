@@ -23,6 +23,8 @@ from __future__ import annotations
 import csv
 import os
 
+from foresttime_builder_spark.sources.fia import FIA_TYPES
+
 STATE = "44"
 YEARS = [2002, 2007, 2012]
 
@@ -40,11 +42,6 @@ COND_COLS = [
     "CONDPROP_UNADJ", "PROP_BASIS", "COND_STATUS_CD", "STDORGCD",
 ]
 GEOM_COLS = ["CN", "INVYR", "ECOSUBCD"]
-
-#: string-typed columns (everything else is numeric); CN columns carry
-#: leading zeros, which is exactly what the CSV layer's CN→string pinning
-#: contract exists to preserve (sources/fia.py:_pin_cn_columns)
-_STR_COLS = {"CN", "PLT_CN", "PROP_BASIS", "ECOSUBCD"}
 
 
 def _plt_cn(plot: int, year: int) -> str:
@@ -183,28 +180,17 @@ def build_rows() -> dict[str, tuple[list[str], list[dict]]]:
     }
 
 
-TREE_SCHEMA = (
-    "CN string, PLT_CN string, STATECD int, UNITCD int, COUNTYCD int, "
-    "PLOT int, SUBP int, TREE int, INVYR int, CONDID int, MORTYR int, "
-    "STATUSCD int, RECONCILECD int, DECAYCD int, STANDING_DEAD_CD int, "
-    "DIA double, CR double, HT double, ACTUALHT double, CULL double, SPCD int"
-)
-PLOT_SCHEMA = (
-    "CN string, INVYR int, STATECD int, UNITCD int, COUNTYCD int, PLOT int, "
-    "DESIGNCD int, INTENSITY int"
-)
-COND_SCHEMA = (
-    "PLT_CN string, INVYR int, STATECD int, UNITCD int, COUNTYCD int, "
-    "PLOT int, CONDID int, CONDPROP_UNADJ double, PROP_BASIS string, "
-    "COND_STATUS_CD int, STDORGCD int"
-)
-GEOM_SCHEMA = "CN string, INVYR int, ECOSUBCD string"
-
+#: the fixture tables' ``"NAME type, ..."`` schemas, a view of the CSV
+#: layer's declared contract (``sources.fia.FIA_TYPES``): undeclared
+#: columns, the leading-zero CN columns included, are strings
 SCHEMAS = {
-    "TREE": TREE_SCHEMA,
-    "PLOT": PLOT_SCHEMA,
-    "COND": COND_SCHEMA,
-    "PLOTGEOM": GEOM_SCHEMA,
+    table: ", ".join(f"{c} {FIA_TYPES[table].get(c, 'string')}" for c in cols)
+    for table, cols in (
+        ("TREE", TREE_COLS),
+        ("PLOT", PLOT_COLS),
+        ("COND", COND_COLS),
+        ("PLOTGEOM", GEOM_COLS),
+    )
 }
 
 #: species → JENKINS_SPGRPCD for the fixture species, as a SQL CASE for the
@@ -248,19 +234,22 @@ def write_csvs(out_dir: str) -> list[str]:
     return paths
 
 
-def _sql_cell(v, col: str) -> str:
+def _sql_cell(v, declared: bool) -> str:
     if v is None:
         return "NULL"
-    if col in _STR_COLS:
+    if not declared:  # an undeclared column is a string column
         return f"'{v}'"
     return repr(v)
 
 
-def _values_cte(name: str, cols: list[str], rows: list[dict]) -> str:
+def _values_cte(table: str, cols: list[str], rows: list[dict]) -> str:
+    types = FIA_TYPES[table]
     tuples = ",\n    ".join(
-        "(" + ", ".join(_sql_cell(r[c], c) for c in cols) + ")" for r in rows
+        "(" + ", ".join(_sql_cell(r[c], c in types) for c in cols) + ")"
+        for r in rows
     )
     collist = ", ".join(cols)
+    name = f"f{table.lower()}"
     return f"{name} AS (SELECT * FROM (VALUES\n    {tuples}\n) t({collist}))"
 
 
@@ -268,6 +257,6 @@ def values_sql() -> dict[str, str]:
     """DuckDB ``name AS (VALUES ...)`` CTE per table — the oracle-side twin
     of :func:`write_csvs` (same rows, same types, same null positions)."""
     return {
-        table: _values_cte(f"f{table.lower()}", cols, rows)
+        table: _values_cte(table, cols, rows)
         for table, (cols, rows) in build_rows().items()
     }

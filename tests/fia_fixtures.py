@@ -11,11 +11,9 @@ from __future__ import annotations
 
 import pandas as pd
 
+from foresttime_builder_spark.sources.fia import FIA_TYPES
 from foresttime_builder_spark.sources.fixture_state import (  # noqa: F401
-    COND_SCHEMA,
-    GEOM_SCHEMA,
-    PLOT_SCHEMA,
-    TREE_SCHEMA,
+    SCHEMAS,
     YEARS,
     build_rows,
     spark_db,
@@ -23,7 +21,11 @@ from foresttime_builder_spark.sources.fixture_state import (  # noqa: F401
 
 
 def build_db() -> dict[str, pd.DataFrame]:
+    """Declared int columns are nullable ``Int64``, so ``to_csv`` writes
+    them the way the DataMart CSVs do (``2003``, not ``2003.0``)."""
     return {
-        table: pd.DataFrame(rows, columns=cols)
+        table: pd.DataFrame(rows, columns=cols).astype(
+            {c: "Int64" for c, t in FIA_TYPES[table].items() if t == "int"}
+        )
         for table, (cols, rows) in build_rows().items()
     }

@@ -27,8 +27,79 @@ def test_fia_load_pins_cn_to_string(spark, csv_dir):
     assert dict(db["PLOT"].dtypes)["CN"] == "string"
     assert dict(db["TREE"].dtypes)["CN"] == "string"
     assert dict(db["TREE"].dtypes)["PLT_CN"] == "string"
-    # numeric columns still inferred as numbers
+    # numeric columns still declared as numbers
     assert dict(db["TREE"].dtypes)["DIA"] == "double"
+
+
+def test_fia_load_runs_no_spark_job(spark, csv_dir, tmp_path):
+    """Loading reads header lines on the driver: no schema-inference scan.
+    A fresh copy of the files, so no earlier load in this process can have
+    served the schema."""
+    import shutil
+
+    fresh = shutil.copytree(csv_dir, tmp_path / "fresh")
+    sc, group = spark.sparkContext, "test_fia_load_runs_no_spark_job"
+    sc.setJobGroup(group, "fia_load")
+    try:
+        fia_src.fia_load(spark, ["RI"], str(fresh))
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_declared_types_do_not_drift_with_the_data(spark, tmp_path):
+    """Integer-valued DIA stays double and all-NA MORTYR / CULL keep their
+    declared int / double, where inference would pick int and string."""
+    (tmp_path / "XX_TREE.csv").write_text(
+        "CN,PLT_CN,DIA,MORTYR,CULL\n0001,0009,6,NA,NA\n0002,0009,12,NA,NA\n"
+    )
+    tree = fia_src.fia_load(spark, ["XX"], str(tmp_path), tables=("TREE",))
+    assert tree["TREE"].dtypes == [
+        ("CN", "string"), ("PLT_CN", "string"), ("DIA", "double"),
+        ("MORTYR", "int"), ("CULL", "double"),
+    ]
+    assert [tuple(r) for r in tree["TREE"].collect()] == [
+        ("0001", "0009", 6.0, None, None), ("0002", "0009", 12.0, None, None)
+    ]
+
+
+def test_states_with_different_headers_raise(spark, tmp_path):
+    """The schema is applied by position, so two states listing the same
+    TREE columns in another order must not load into the wrong columns."""
+    (tmp_path / "AA_TREE.csv").write_text("CN,DIA,HT\n1,6.0,40.0\n")
+    (tmp_path / "BB_TREE.csv").write_text("CN,HT,DIA\n2,40.0,6.0\n")
+    with pytest.raises(ValueError, match="TREE: .*BB_TREE.csv.*AA_TREE.csv"):
+        fia_src.fia_load(spark, ["AA", "BB"], str(tmp_path), tables=("TREE",))
+
+
+def test_undeclared_columns_read_as_string(spark, tmp_path):
+    (tmp_path / "XX_TREE.csv").write_text(
+        "CN,PREV_TRE_CN,CARBON_AG,DIA\n1,2,10.5,6.0\n"
+    )
+    (tmp_path / "XX_POP_STRATUM.csv").write_text(
+        "CN,EVALID,EXPNS,ADJ_FACTOR_SUBP\n7,441801,1500.5,1.0\n"
+    )
+    db = fia_src.fia_load(
+        spark, ["XX"], str(tmp_path), tables=("TREE", "POP_STRATUM")
+    )
+    assert db["TREE"].dtypes == [
+        ("CN", "string"), ("PREV_TRE_CN", "string"),
+        ("CARBON_AG", "string"), ("DIA", "double"),
+    ]
+    assert db["POP_STRATUM"].dtypes == [
+        ("CN", "string"), ("EVALID", "string"),
+        ("EXPNS", "double"), ("ADJ_FACTOR_SUBP", "double"),
+    ]
+
+
+def test_value_the_declared_type_cannot_parse_raises(spark, tmp_path):
+    """``2003.0`` in the int MORTYR column fails the scan instead of
+    silently reading as null."""
+    (tmp_path / "XX_TREE.csv").write_text("CN,MORTYR\n1,2003\n2,2003.0\n")
+    tree = fia_src.fia_load(spark, ["XX"], str(tmp_path), tables=("TREE",))
+    with pytest.raises(Exception, match="MALFORMED_RECORD"):
+        tree["TREE"].collect()
 
 
 def test_fia_load_matches_in_memory_db(spark, csv_dir):
@@ -186,16 +257,6 @@ def test_reference_dims_match_values_form(spark, monkeypatch):
         assert got == want.collect() and [tuple(r) for r in got] == list(rows)
         plan = df._jdf.queryExecution().optimizedPlan()
         assert plan.nodeName() == "LocalRelation", spec[0]
-
-
-def test_csv_roundtrip_staging(spark, csv_dir, tmp_path):
-    db = fia_src.fia_load(spark, ["RI"], csv_dir, tables=("PLOT", "TREE"))
-    fia_src.csv_to_parquet(db, str(tmp_path / "stage"))
-    staged = fia_src.load_staged(
-        spark, str(tmp_path / "stage"), tables=("PLOT", "TREE")
-    )
-    assert staged["TREE"].count() == db["TREE"].count()
-    assert dict(staged["TREE"].dtypes)["CN"] == "string"
 
 
 class _FakeResponse:

@@ -9,6 +9,11 @@ once per consumer this way.  Build SQL over a frame with
 :func:`foresttime_builder_spark.functions.helpers.apply_layers`, or a
 temp view whose name alone is dropped.  ``args=`` binds SQL parameters
 without the formatter and stays allowed.
+
+The same walk rejects the ``inferSchema`` reader option: inference is a
+full extra scan per table whose column types drift with the data.  The
+FIA tables read under the declared
+:data:`foresttime_builder_spark.sources.fia.FIA_TYPES` contract.
 """
 
 from __future__ import annotations
@@ -56,4 +61,27 @@ def test_no_sql_call_uses_the_string_formatter():
     assert not offenders, (
         "spark.sql(text, df=...) un-persists df; see this module's "
         f"docstring: {offenders}"
+    )
+
+
+def _is_infer_schema(name) -> bool:
+    return isinstance(name, str) and name.lower() == "inferschema"
+
+
+def test_no_package_module_infers_a_schema():
+    offenders = [
+        f"{path}:{node.lineno}"
+        for path, node in package_nodes()
+        if isinstance(node, ast.Call)
+        and (
+            any(_is_infer_schema(kw.arg) for kw in node.keywords)
+            or any(
+                isinstance(a, ast.Constant) and _is_infer_schema(a.value)
+                for a in node.args
+            )
+        )
+    ]
+    assert not offenders, (
+        "inferSchema scans the data an extra time and its types drift; "
+        f"declare the column types instead: {offenders}"
     )
