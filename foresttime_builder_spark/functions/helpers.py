@@ -200,6 +200,7 @@ def _merge_layers(
 
 
 def _bq(name: str) -> str:
-    """Backquote an identifier for generated SQL."""
+    """Backtick-quote a SQL identifier, escaping embedded backticks, so a
+    column literally named ``a`b`` round-trips through generated SQL."""
     return "`" + name.replace("`", "``") + "`"
 

@@ -32,7 +32,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
-from foresttime_builder_spark.operators.dedup import hash60
+from foresttime_builder_spark.functions.encoding import (
+    fixed,
+    fixed_sql,
+    hash60,
+    hash60_sql,
+)
 from foresttime_builder_spark.operators.spread import spread as _spread
 
 
@@ -353,7 +358,7 @@ def lsh_topk(
 
 
 def _plane_sql(b: int, j: int) -> str:
-    h = f"CAST(('0x' || substr(md5('{b}_{j}'), 1, 15)) AS BIGINT)"
+    h = hash60_sql(f"'{b}_{j}'")
     return f"(({h} % 2001) - 1000) / 1000.0"
 
 
@@ -1028,8 +1033,8 @@ def _kmeans_ctes(
             else f"kq AS (SELECT {k_clusters} AS kk)"
         ),
         f"""cent0 AS (
-  SELECT CAST(CAST(('0x' || substr(md5(md5(CAST(vid AS VARCHAR))), 1, 15))
-                   AS BIGINT) % (SELECT kk FROM kq) AS INT) AS cid,
+  SELECT CAST({hash60_sql("md5(CAST(vid AS VARCHAR))")} % (SELECT kk FROM kq)
+              AS INT) AS cid,
          arg_min(vec, concat(md5(CAST(vid AS VARCHAR)),
                              lpad(CAST(vid AS VARCHAR), 20, '0'))) AS cvec
   FROM base GROUP BY 1
@@ -1213,9 +1218,7 @@ def kmeans_coverage_sample(
         .select(
             F.col("vid").alias(id_col),
             "cid",
-            F.floor(F.col("dist") * 1000000.0 + F.lit(0.5))
-            .cast("long")
-            .alias("dist_e6"),
+            fixed("dist", 6).alias("dist_e6"),
             "pick_rank",
         )
     )
@@ -1253,7 +1256,7 @@ def kmeans_coverage_sample_oracle_sql(
     return (
         f"WITH {body}\n"
         f"SELECT vid AS {id_col}, cid, "
-        f"CAST(floor(dist * 1000000.0 + 0.5) AS BIGINT) AS dist_e6, "
+        f"{fixed_sql('dist', 6)} AS dist_e6, "
         f"pick_rank FROM picked WHERE pick_rank <= {per_cluster}"
     )
 
@@ -1424,11 +1427,8 @@ def random_projection_oracle_sql(
     quantization before the integer sum."""
     if out_dims < 1:
         raise ValueError(f"out_dims must be >= 1, got {out_dims}")
-    sign = (
-        "CASE WHEN CAST(('0x' || substr(md5("
-        f"'{salt}|' || (i - 1) || '|' || j), 1, 15)) AS BIGINT) % 2 = 0 "
-        "THEN 1 ELSE -1 END"
-    )
+    h = hash60_sql(f"'{salt}|' || (i - 1) || '|' || j")
+    sign = f"CASE WHEN {h} % 2 = 0 THEN 1 ELSE -1 END"
     return f"""
 WITH comps AS (
   SELECT {id_col}, i, CAST(floor({vec_col}[i] * 1e9) AS BIGINT) AS big

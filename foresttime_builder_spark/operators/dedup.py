@@ -1,8 +1,8 @@
 """Deduplication operators for large-scale document pipelines.
 
-All hashing is md5-derived (:func:`hash60`) so results are reproducible in
-any engine (the DuckDB oracles use the same construction) — Spark's murmur
-``F.hash`` has no cross-engine twin.
+All hashing is md5-derived (``functions.encoding.hash60``) so results are
+reproducible in any engine (the DuckDB oracles use the same construction) —
+Spark's murmur ``F.hash`` has no cross-engine twin.
 
 Scale design notes:
 
@@ -28,17 +28,9 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from foresttime_builder_spark.functions.encoding import hash60
 from foresttime_builder_spark.operators.cache import release_on_gc as _release_on_gc
 from foresttime_builder_spark.operators.spread import spread as _sp
-
-
-def hash60(col: Column | str) -> Column:
-    """First 15 hex digits of md5 as a non-negative 60-bit bigint.
-
-    DuckDB twin: ``CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)``.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
 def tokens(text: Column | str, distinct: bool = True) -> Column:

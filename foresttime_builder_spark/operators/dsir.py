@@ -33,8 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from foresttime_builder_spark.functions.encoding import hash60, hash60_sql
 from foresttime_builder_spark.operators.cache import release_on_gc
-from foresttime_builder_spark.operators.dedup import hash60
 
 __all__ = ["dsir_logweights", "dsir_logweights_oracle_sql"]
 
@@ -167,9 +167,8 @@ def dsir_logweights_oracle_sql(
     boolean over ``table``'s columns."""
     _check(n_buckets, add_k)
     kb = repr(float(add_k) * n_buckets)
-    h = "CAST(('0x' || substr(md5({x}), 1, 15)) AS BIGINT)"
-    h_uni = h.format(x="concat('u|', w)") + f" % {n_buckets}"
-    h_bi = h.format(x="concat('b|', w1, ' ', w2)") + f" % {n_buckets}"
+    h_uni = hash60_sql("concat('u|', w)") + f" % {n_buckets}"
+    h_bi = hash60_sql("concat('b|', w1, ' ', w2)") + f" % {n_buckets}"
     return f"""
 WITH docs AS (
   SELECT {id_col}, CAST(({target_expr}) AS BOOLEAN) AS tgt,

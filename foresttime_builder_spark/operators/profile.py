@@ -25,6 +25,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from foresttime_builder_spark.functions.encoding import (
+    fixed,
+    fixed_sql,
+    hash60,
+    hash60_sql,
+)
+
 __all__ = [
     "numeric_histogram",
     "numeric_histogram_oracle_sql",
@@ -238,8 +245,6 @@ def equidepth_histogram_sampled(
         )
     from pyspark.sql import Window as _W
 
-    from foresttime_builder_spark.operators.dedup import hash60
-
     cut = int(fraction * float((1 << 60) - 1))
     h = hash60(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
     v = F.floor(F.col(value_col) * scale).cast("long")
@@ -261,9 +266,7 @@ def equidepth_histogram_sampled(
             "lo",
             "hi",
             "n_sample",
-            F.floor(F.col("n_sample") / fraction + 0.5)
-            .cast("long")
-            .alias("n_est"),
+            fixed(F.col("n_sample") / fraction, 0).alias("n_est"),
         )
     )
 
@@ -289,10 +292,7 @@ def equidepth_histogram_sampled_oracle_sql(
     if not (0.0 < fraction <= 1.0):
         raise ValueError(f"fraction must be in (0, 1], got {fraction}")
     cut = int(fraction * float((1 << 60) - 1))
-    h = (
-        f"CAST(('0x' || substr(md5('{salt}:' || "
-        f"CAST({id_col} AS VARCHAR)), 1, 15)) AS BIGINT)"
-    )
+    h = hash60_sql(f"'{salt}:' || CAST({id_col} AS VARCHAR)")
     return f"""
 WITH base AS (
   SELECT CAST(floor({value_col} * {scale}) AS BIGINT) AS v, {id_col} AS id
@@ -302,8 +302,7 @@ WITH base AS (
 SELECT CAST(bucket AS INTEGER) AS bucket,
        min(v) AS lo, max(v) AS hi,
        CAST(count(*) AS BIGINT) AS n_sample,
-       CAST(floor(count(*) / CAST({fraction!r} AS DOUBLE) + 0.5) AS BIGINT)
-         AS n_est
+       {fixed_sql(f"count(*) / CAST({fraction!r} AS DOUBLE)", 0)} AS n_est
 FROM (SELECT v, ntile({n_buckets}) OVER (ORDER BY v, id) AS bucket FROM base)
 GROUP BY bucket
 """

@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
+
 __all__ = ["bm25_scores", "bm25_scores_oracle_sql"]
 
 
@@ -111,7 +113,7 @@ def bm25_scores(
             F.col(id_col),
             dl.cast("long").alias("n_tokens"),
             hits.cast("long").alias("n_hits"),
-            F.floor(score * 10000 + F.lit(0.5)).cast("long").alias("bm25_e4"),
+            fixed(score, 4).alias("bm25_e4"),
         )
         .filter(F.col("n_hits") > 0)
     )
@@ -174,7 +176,7 @@ WITH stats AS (
 SELECT {id_col},
        CAST(len(ts) AS BIGINT) AS n_tokens,
        CAST({hits} AS BIGINT) AS n_hits,
-       CAST(floor({score} * 10000 + 0.5) AS BIGINT) AS bm25_e4
+       {fixed_sql(score, 4)} AS bm25_e4
 FROM docs CROSS JOIN stats
 WHERE {hits} > 0
 """

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from foresttime_builder_spark.operators.dedup import hash60
+from foresttime_builder_spark.functions.encoding import hash60, hash60_sql
 
 #: hash60 values are 15 hex digits -> [0, 2^60)
 _MAX_HASH60 = (1 << 60) - 1
@@ -175,9 +175,8 @@ def split_assign_oracle_sql(
 ) -> str:
     """DuckDB CASE expression computing the identical ``split`` column."""
     bucket = (
-        f"CAST(('0x' || substr(md5('{salt}:' || "
-        f"coalesce(CAST({id_col} AS VARCHAR), '<NULL>')), 1, 15)) "
-        f"AS BIGINT) % 10000"
+        hash60_sql(f"'{salt}:' || coalesce(CAST({id_col} AS VARCHAR), '<NULL>')")
+        + " % 10000"
     )
     parts, cum = [], 0
     for name, w in splits[:-1]:
@@ -238,9 +237,7 @@ def upsample_to_quota_oracle_sql(
 ) -> str:
     """DuckDB twin of :func:`upsample_to_quota` (``quotas_sql`` is a
     subquery yielding (mix_col, quota))."""
-    hash_sql = (
-        f"CAST(('0x' || substr(md5(CAST({id_col} AS VARCHAR)), 1, 15)) AS BIGINT)"
-    )
+    hash_sql = hash60_sql(f"CAST({id_col} AS VARCHAR)")
     return f"""
 WITH ranked AS (
   SELECT t.*,
@@ -428,10 +425,7 @@ def weighted_sample_oracle_sql(
     and ln(u)/w ranking."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    h = (
-        f"CAST(('0x' || substr(md5('{salt}:' || "
-        f"CAST({id_col} AS VARCHAR)), 1, 15)) AS BIGINT)"
-    )
+    h = hash60_sql(f"'{salt}:' || CAST({id_col} AS VARCHAR)")
     u = (
         f"greatest(least({h} / {2.0**60!r}, {1.0 - 2.0**-53!r}), "
         f"{2.0**-60!r})"
@@ -519,10 +513,7 @@ def stratified_split_exact_oracle_sql(
     total = sum(w for _, w in splits)
     if total != 10_000:
         raise ValueError(f"split weights must sum to 10000 bp, got {total}")
-    h = (
-        f"CAST(('0x' || substr(md5('{salt}:' || "
-        f"CAST({id_col} AS VARCHAR)), 1, 15)) AS BIGINT)"
-    )
+    h = hash60_sql(f"'{salt}:' || CAST({id_col} AS VARCHAR)")
     case = "CASE "
     cum = 0
     for name, bp in splits[:-1]:

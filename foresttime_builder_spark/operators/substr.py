@@ -31,10 +31,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from foresttime_builder_spark.functions.encoding import (
+    fixed,
+    fixed_sql,
+    hash60,
+    hash60_sql,
+)
 from foresttime_builder_spark.operators.decontaminate import (
     token_ngrams_from_tokens,
 )
-from foresttime_builder_spark.operators.dedup import hash60
 
 
 def duplicated_span_coverage(
@@ -122,12 +127,11 @@ def duplicated_span_coverage(
         "n_tokens",
         F.coalesce("n_dup_windows", F.lit(0)).alias("n_dup_windows"),
         F.coalesce("dup_token_cov", F.lit(0)).alias("dup_token_cov"),
-        F.floor(
+        fixed(
             F.coalesce("dup_token_cov", F.lit(0))
-            / F.nullif(F.col("n_tokens"), F.lit(0))
-            * 10000
-            + F.lit(0.5)
-        ).cast("long").alias("dup_cov_frac_e4"),
+            / F.nullif(F.col("n_tokens"), F.lit(0)),
+            4,
+        ).alias("dup_cov_frac_e4"),
     )
     from foresttime_builder_spark.operators.cache import release_on_gc
 
@@ -150,9 +154,9 @@ WITH base AS (
            AS pos,
          unnest(list_transform(
            generate_series(1, len(string_split({text_col}, ' ')) - {n - 1}),
-           i -> CAST(('0x' || substr(md5(
-                  array_to_string(string_split({text_col}, ' ')[i:i+{n - 1}], ' ')
-                ), 1, 15)) AS BIGINT))) AS h
+           i -> {hash60_sql(
+             f"array_to_string(string_split({text_col}, ' ')[i:i+{n - 1}], ' ')"
+           )})) AS h
   FROM {table}
   WHERE len(string_split({text_col}, ' ')) >= {n}
 ), dup_h AS (
@@ -185,8 +189,7 @@ WITH base AS (
 SELECT b.{id_col}, b.n_tokens,
        coalesce(c.n_dup_windows, 0) AS n_dup_windows,
        coalesce(c.dup_token_cov, 0) AS dup_token_cov,
-       CAST(floor(coalesce(c.dup_token_cov, 0)
-                  / nullif(b.n_tokens, 0) * 10000 + 0.5) AS BIGINT)
+       {fixed_sql('coalesce(c.dup_token_cov, 0) / nullif(b.n_tokens, 0)', 4)}
          AS dup_cov_frac_e4
 FROM base b LEFT JOIN cov c ON b.{id_col} = c.{id_col}
 """

@@ -17,7 +17,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from foresttime_builder_spark.operators.dedup import hash60
+from foresttime_builder_spark.functions.encoding import (
+    fixed,
+    fixed_sql,
+    hash60,
+    hash60_sql,
+)
 from foresttime_builder_spark.operators.spread import spread as _spread
 
 #: tiny deterministic stopword profiles (order = tie-break priority)
@@ -100,9 +105,9 @@ def token_count_bpe(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         F.col(id_col),
         F.size(pieces).alias("n_bpe_tokens"),
         F.size(words).alias("n_words"),
-        F.floor(
-            F.size(pieces) / F.nullif(F.size(words), F.lit(0)) * 10000 + F.lit(0.5)
-        ).cast("long").alias("tokens_per_word_e4"),
+        fixed(F.size(pieces) / F.nullif(F.size(words), F.lit(0)), 4).alias(
+            "tokens_per_word_e4"
+        ),
     )
 
 
@@ -114,8 +119,7 @@ def token_count_bpe_oracle_sql(id_col: str, text_col: str, table: str) -> str:
 SELECT {id_col},
        {pieces} AS n_bpe_tokens,
        {words} AS n_words,
-       CAST(floor({pieces} / nullif({words}, 0) * 10000 + 0.5) AS BIGINT)
-         AS tokens_per_word_e4
+       {fixed_sql(f"{pieces} / nullif({words}, 0)", 4)} AS tokens_per_word_e4
 FROM {table}
 """
 
@@ -211,63 +215,11 @@ def winnow_fingerprint(
     return mins.unionByName(short)
 
 
-def _winnow_fingerprint_hof(
-    df: DataFrame, id_col: str, text_col: str, k: int = 8, w: int = 4
-) -> DataFrame:
-    """The pre-r12 array-HOF form of :func:`winnow_fingerprint`, kept as
-    the differential twin (same role the unguarded forms play for the
-    dedup family): both transform() lambdas run interpreted
-    (CodegenFallback) and the slice window-min is O(n·w) per document —
-    measured 144.8 s at sf10 vs the exploded form's window plan.  Tests
-    assert output identity; do not use in the hot path."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    n_grams = F.greatest(F.length(text) - F.lit(k - 1), F.lit(0))
-    empty = F.expr("CAST(array() AS array<bigint>)")
-    # materialize each array stage as a column: expressions inside lambdas are
-    # NOT common-subexpression-eliminated across elements, so referencing the
-    # gram array directly in the window lambda would recompute every k-gram
-    # hash per window (O(n^2) md5 calls per document)
-    staged = df.withColumn(
-        "_wf_grams",
-        F.when(
-            n_grams >= 1,
-            F.transform(
-                F.sequence(F.lit(1), n_grams),
-                lambda p: hash60(text.substr(p, F.lit(k))),
-            ),
-        ).otherwise(empty),
-    )
-    grams = F.col("_wf_grams")
-    n_windows = F.greatest(F.size(grams) - F.lit(w - 1), F.lit(0))
-    staged = staged.withColumn(
-        "_wf_fps",
-        F.array_distinct(
-            F.when(
-                n_windows >= 1,
-                F.transform(
-                    F.sequence(F.lit(1), n_windows),
-                    lambda i: F.array_min(F.slice(grams, i, w)),
-                ),
-            ).otherwise(empty)
-        ),
-    )
-    fps = F.col("_wf_fps")
-    return staged.select(
-        F.col(id_col),
-        F.size(fps).alias("n_fingerprints"),
-        F.array_min(fps).alias("min_fp"),
-        F.array_max(fps).alias("max_fp"),
-    )
-
-
 def winnow_fingerprint_oracle_sql(
     id_col: str, text_col: str, table: str, k: int = 8, w: int = 4
 ) -> str:
     txt = f"coalesce({text_col}, '')"
-    h = (
-        "CAST(('0x' || substr(md5(substr({t}, CAST(p AS INT), "
-        f"{k})), 1, 15)) AS BIGINT)"
-    ).format(t=txt)
+    h = hash60_sql(f"substr({txt}, CAST(p AS INT), {k})")
     return f"""
 WITH grams AS (
   SELECT {id_col},
@@ -407,9 +359,7 @@ def repetition_quality(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     T = F.col("_toks")
     n_tok = F.size(T)
 
-    dup_frac = F.floor(
-        (F.lit(1.0) - F.size(F.array_distinct(T)) / n_tok) * 10000 + F.lit(0.5)
-    ).cast("long")
+    dup_frac = fixed(F.lit(1.0) - F.size(F.array_distinct(T)) / n_tok, 4)
 
     def top_run(n: int) -> Column:
         # max multiplicity in the gram multiset == longest equal-run in
@@ -448,12 +398,8 @@ def repetition_quality(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         return F.when(n_tok >= n, best)
 
     def frac(n: int, top: Column) -> Column:
-        # identical float-op order to the DuckDB twin:
-        # ((top*n)/n_tok)*10000 + 0.5
-        return F.when(
-            top.isNotNull(),
-            F.floor(top * n / n_tok * 10000 + F.lit(0.5)).cast("long"),
-        )
+        # identical float-op order to the DuckDB twin: (top*n)/n_tok
+        return fixed(top * n / n_tok, 4)
 
     t2, t3 = top_run(2), top_run(3)
     top2, top3 = frac(2, t2), frac(3, t3)
@@ -491,10 +437,7 @@ def repetition_quality_oracle_sql(id_col: str, text_col: str, table: str) -> str
         )
 
     def top_frac(n: int) -> str:
-        return (
-            f"CASE WHEN m{n}.top IS NOT NULL THEN CAST(floor("
-            f"m{n}.top * {n} / b.n_tok * 10000 + 0.5) AS BIGINT) END"
-        )
+        return fixed_sql(f"m{n}.top * {n} / b.n_tok", 4)
 
     return f"""
 WITH base AS (
@@ -517,8 +460,7 @@ SELECT b.{id_col},
   b.n_tok AS n_tokens,
   {top_frac(2)} AS top2gram_frac_e4,
   {top_frac(3)} AS top3gram_frac_e4,
-  CAST(floor((1.0 - len(list_distinct(b.toks)) / b.n_tok) * 10000 + 0.5)
-       AS BIGINT) AS dup_token_frac_e4,
+  {fixed_sql('1.0 - len(list_distinct(b.toks)) / b.n_tok', 4)} AS dup_token_frac_e4,
   coalesce({top_frac(2)}, 0) <= 2000 AND coalesce({top_frac(3)}, 0) <= 1800
     AS keep
 FROM base b
@@ -670,12 +612,8 @@ def corpus_profile(
             "n_docs",
             "total_tokens",
             "min_tokens",
-            F.floor(F.col("_med") * 10000 + F.lit(0.5))
-            .cast("long")
-            .alias("median_tokens_e4"),
-            F.floor(F.col("_p95") * 10000 + F.lit(0.5))
-            .cast("long")
-            .alias("p95_tokens_e4"),
+            fixed("_med", 4).alias("median_tokens_e4"),
+            fixed("_p95", 4).alias("p95_tokens_e4"),
             "max_tokens",
         )
     )
@@ -694,9 +632,9 @@ SELECT {group_col},
   count(*) AS n_docs,
   CAST(sum(n) AS BIGINT) AS total_tokens,
   CAST(min(n) AS BIGINT) AS min_tokens,
-  CAST(floor(quantile_cont(n, 0.5) * 10000 + 0.5) AS BIGINT)
+  {fixed_sql('quantile_cont(n, 0.5)', 4)}
     AS median_tokens_e4,
-  CAST(floor(quantile_cont(n, 0.95) * 10000 + 0.5) AS BIGINT)
+  {fixed_sql('quantile_cont(n, 0.95)', 4)}
     AS p95_tokens_e4,
   CAST(max(n) AS BIGINT) AS max_tokens
 FROM base GROUP BY {group_col}
@@ -1119,15 +1057,13 @@ def line_dedup(
     total = F.col("n_kept") + F.col("n_dropped")
     # double multiply BEFORE the int counts can overflow int32 (a
     # >2147-line doc would wrap n_dropped * 1e6 in integer arithmetic);
-    # identical IEEE double ops on both engines -> exact e6 parity
+    # identical IEEE double ops on both engines -> exact e6 parity, so the
+    # 1e6 scale is applied here and the emission rounds at 0 decimals
     return out.withColumn(
         "dup_frac_e6",
-        F.when(
-            total > 0,
-            F.floor(
-                F.col("n_dropped").cast("double") * 1.0e6 / total + F.lit(0.5)
-            ),
-        ).cast("long"),  # NULL-text docs: total 0 -> NULL (never NaN)
+        F.when(  # NULL-text docs: total 0 -> NULL (never NaN)
+            total > 0, fixed(F.col("n_dropped").cast("double") * 1.0e6 / total, 0)
+        ),
     )
 
 
@@ -1213,8 +1149,11 @@ SELECT t.{id_col},
        CAST(coalesce(agg.n_kept, 0) AS INTEGER) AS n_kept,
        CAST(coalesce(agg.n_dropped, 0) AS INTEGER) AS n_dropped,
        CASE WHEN coalesce(agg.n_kept, 0) + coalesce(agg.n_dropped, 0) > 0
-            THEN CAST(floor(CAST(agg.n_dropped AS DOUBLE) * 1000000.0
-                            / (agg.n_kept + agg.n_dropped) + 0.5) AS BIGINT)
+            THEN {fixed_sql(
+                "CAST(agg.n_dropped AS DOUBLE) * 1000000.0"
+                " / (agg.n_kept + agg.n_dropped)",
+                0,
+            )}
        END AS dup_frac_e6
 FROM {table} t LEFT JOIN agg ON t.{id_col} = agg._id
 """

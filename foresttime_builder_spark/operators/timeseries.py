@@ -20,16 +20,11 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from foresttime_builder_spark.functions.helpers import _bq
+
 
 def _group(cols: Sequence[str]) -> list[Column]:
     return [F.col(c) for c in cols]
-
-
-def _qident(name: str) -> str:
-    """Backtick-quote a SQL identifier, escaping embedded backticks — the
-    interpolators assemble SQL text, so a column literally named ``a`b``
-    must round-trip."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _partition_clause(group_cols: Sequence[str]) -> str:
@@ -39,7 +34,7 @@ def _partition_clause(group_cols: Sequence[str]) -> str:
     Window.partitionBy() no-arg semantics the SQL-text rewrite replaced)."""
     if not group_cols:
         return ""
-    return "PARTITION BY " + ", ".join(_qident(g) for g in group_cols) + " "
+    return "PARTITION BY " + ", ".join(_bq(g) for g in group_cols) + " "
 
 
 def fill_gaps_layers(
@@ -56,17 +51,17 @@ def fill_gaps_layers(
     over the whole deepening plan)."""
     part = _partition_clause(group_cols)
     over_down = (
-        f"OVER ({part}ORDER BY {_qident(order_col)} "
+        f"OVER ({part}ORDER BY {_bq(order_col)} "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
     over_up = (
-        f"OVER ({part}ORDER BY {_qident(order_col)} "
+        f"OVER ({part}ORDER BY {_bq(order_col)} "
         "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
     )
     filled = {}
     for c in cols:
-        down = f"last({_qident(c)}, true) {over_down}"
-        up = f"first({_qident(c)}, true) {over_up}"
+        down = f"last({_bq(c)}, true) {over_down}"
+        up = f"first({_bq(c)}, true) {over_up}"
         if direction == "down":
             filled[c] = down
         elif direction == "up":
@@ -109,7 +104,6 @@ def expand_grid(
     x_col: str,
     out_col: str | None = None,
     flag_col: str = "interpolated",
-    step: int = 1,
 ) -> DataFrame:
     """Densify an integer axis to every value between each group's min and max.
 
@@ -119,15 +113,15 @@ def expand_grid(
     non-group column and ``flag_col = True``; original rows keep their values
     and get ``flag_col = False``.
 
-    Implementation (``step == 1``, the hot path): ONE pass — a ``lead``
-    window over (group, x) finds each row's next year, and every row
-    explodes into itself plus the gap years up to that neighbour.  The
-    r15 optimization round replaced the original two-sided form (groupBy
-    min/max → explode → join the input back on (group, x)), which
-    computed the ENTIRE input subtree twice — q26's synthetic panel
-    appeared once on the stream side and once inside a broadcast — and
-    paid a grid-aggregate exchange plus the join itself (guide §2.4:
-    remove shuffles outright / don't compute things twice).  The window
+    Implementation: ONE pass — a ``lead`` window over (group, x) finds each
+    row's next year, and every row explodes into itself plus the gap years
+    up to that neighbour.  The r15 optimization round replaced the original
+    two-sided form (groupBy min/max → explode → join the input back on
+    (group, x)), which computed the ENTIRE input subtree twice — q26's
+    synthetic panel appeared once on the stream side and once inside a
+    broadcast — and paid a grid-aggregate exchange plus the join itself
+    (guide §2.4: remove shuffles outright / don't compute things twice).
+    The window
     needs the same (group) hash partitioning every downstream
     interpolation window already requires, so the whole chain now rides
     one exchange.
@@ -144,25 +138,6 @@ def expand_grid(
       grid year → every original row emits itself.
     """
     out_col = out_col or x_col
-    if step != 1:
-        # step grids keep the two-sided form: original rows off the step
-        # lattice must NOT survive (they never matched a grid row), which
-        # the single-pass form cannot express row-locally
-        lo, hi = F.min(x_col).alias("_lo"), F.max(x_col).alias("_hi")
-        grid = (
-            df.groupBy(*_group(group_cols))
-            .agg(lo, hi)
-            .select(
-                *group_cols,
-                F.explode(F.sequence("_lo", "_hi", F.lit(step))).alias(out_col),
-            )
-        )
-        orig = df.withColumn("_orig", F.lit(True))
-        if out_col != x_col:
-            orig = orig.withColumnRenamed(x_col, out_col)
-        joined = grid.join(orig, on=[*group_cols, out_col], how="left")
-        return joined.withColumn(flag_col, F.col("_orig").isNull()).drop("_orig")
-
     src = df.filter(F.col(x_col).isNotNull())
     if out_col != x_col:
         src = src.withColumnRenamed(x_col, out_col)
@@ -273,21 +248,21 @@ def linear_interpolate_layers(
     the former one-transform-per-stage form paid a full analyzer pass per
     transform on an already-deep plan."""
     over = (
-        f"OVER ({_partition_clause(group_cols)}ORDER BY {_qident(x_col)} "
+        f"OVER ({_partition_clause(group_cols)}ORDER BY {_bq(x_col)} "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
     )
-    x = f"CAST({_qident(x_col)} AS DOUBLE)"
+    x = f"CAST({_bq(x_col)} AS DOUBLE)"
 
     karrs = {}
     for c in cols:
-        y = f"CAST({_qident(c)} AS DOUBLE)"
+        y = f"CAST({_bq(c)} AS DOUBLE)"
         kp = f"CASE WHEN {y} IS NOT NULL THEN named_struct('x', {x}, 'y', {y}) END"
         karrs[f"_li_{c}_k"] = f"collect_list({kp}) {over}"
 
     final, drops = {}, []
     for c in cols:
-        y = f"CAST({_qident(c)} AS DOUBLE)"
-        k = _qident(f"_li_{c}_k")
+        y = f"CAST({_bq(c)} AS DOUBLE)"
+        k = _bq(f"_li_{c}_k")
         drops.append(f"_li_{c}_k")
         # nearest known point at-or-before / at-or-after this row
         prev = f"try_element_at(filter({k}, e -> e.x <= {x}), -1)"
@@ -376,28 +351,28 @@ def step_interpolate_layers(
     reason as linear_interpolate."""
     part = _partition_clause(group_cols)
     over = (
-        f"OVER ({part}ORDER BY {_qident(order_col)} "
+        f"OVER ({part}ORDER BY {_bq(order_col)} "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
     )
 
-    rn = {"_sg_i": f"row_number() OVER ({part}ORDER BY {_qident(order_col)})"}
+    rn = {"_sg_i": f"row_number() OVER ({part}ORDER BY {_bq(order_col)})"}
     karrs = {}
     for c in cols:
         kp = (
-            f"CASE WHEN {_qident(c)} IS NOT NULL"
-            f" THEN named_struct('i', _sg_i, 'v', {_qident(c)}) END"
+            f"CASE WHEN {_bq(c)} IS NOT NULL"
+            f" THEN named_struct('i', _sg_i, 'v', {_bq(c)}) END"
         )
         karrs[f"_sg_{c}_k"] = f"collect_list({kp}) {over}"
     filled = {}
     drops = ["_sg_i"]
     for c in cols:
-        k = _qident(f"_sg_{c}_k")
+        k = _bq(f"_sg_{c}_k")
         drops.append(f"_sg_{c}_k")
         prev = f"try_element_at(filter({k}, e -> e.i <= _sg_i), -1)"
         nxt = f"try_element_at(filter({k}, e -> e.i >= _sg_i), 1)"
         switch_at = f"({prev}).i + CEIL((({nxt}).i - ({prev}).i) / 2.0D)"
         filled[c] = (
-            f"CASE WHEN {_qident(c)} IS NOT NULL THEN {_qident(c)} "
+            f"CASE WHEN {_bq(c)} IS NOT NULL THEN {_bq(c)} "
             f"WHEN {prev} IS NULL THEN NULL "  # leading: stay null
             f"WHEN {nxt} IS NULL THEN ({prev}).v "  # trailing: last value
             f"WHEN _sg_i < {switch_at} THEN ({prev}).v "

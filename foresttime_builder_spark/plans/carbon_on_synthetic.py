@@ -28,6 +28,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
 from foresttime_builder_spark.operators.cache import release_on_gc
 from foresttime_builder_spark.plans import carbon, fia
 from foresttime_builder_spark.plans.fia_on_synthetic import annualize_cte
@@ -139,24 +140,15 @@ def estimate_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("YEAR"),
         F.col("STATUSCD").cast("int").alias("statuscd"),
         F.when(elig, F.col("SPCD")).alias("spcd"),
-        _nan_e4(F.col("DIA")).alias("dia_e4"),
-        _nan_e4(F.col("HT")).alias("ht_e4"),
+        fixed("DIA", 4).alias("dia_e4"),
+        fixed("HT", 4).alias("ht_e4"),
     ]
     for p in _OUT_R4:
         out_name, src = p.split(":")
         if src in ("DIA", "HT"):
             continue
-        sel.append(_nan_e4(F.when(elig, F.col(src))).alias(out_name + "_e4"))
+        sel.append(fixed(F.when(elig, F.col(src)), 4).alias(out_name + "_e4"))
     return est.select(*sel)
-
-
-def _nan_e4(col):
-    """Fixed-point gate emission (1e-4-unit BIGINT) with NaN → null (IEEE
-    NaN floors to 0 in Spark but stays NaN in DuckDB; both engines emit
-    null instead).  Integer emission removes float hash-flap risk — same
-    convention as the q51/q29-q31 gates."""
-    scaled = F.floor(col * 10000 + F.lit(0.5)).cast("long")
-    return F.when(F.isnan(col), None).otherwise(scaled)
 
 
 # ---------------------------------------------------------------------------
@@ -772,32 +764,23 @@ est AS (
     return ",\n".join(pieces)
 
 
-def _sql_e4(x: str) -> str:
-    """DuckDB twin of :func:`_nan_e4`."""
-    return (
-        f"CASE WHEN isnan({x}) THEN NULL"
-        f" ELSE CAST(floor({x} * 10000 + 0.5) AS BIGINT) END"
-    )
-
-
 def _final_select() -> str:
-    e4 = _sql_e4
     return f"""SELECT f.tree_ID, f.YEAR,
   CAST(f.STATUSCD AS INT) AS statuscd,
   c.spcd_est AS spcd,
-  {e4('f.DIA')} AS dia_e4,
-  {e4('f.HT')} AS ht_e4,
-  {e4('c.HT4')} AS ht4_e4,
-  {e4('c.HTSAW')} AS htsaw_e4,
-  {e4('c.VTOTIB_SOUND')} AS vtotib_sound_e4,
-  {e4('c.VMEROB_SOUND')} AS vmerob_sound_e4,
-  {e4('c.VSAWIB_SOUND')} AS vsawib_sound_e4,
-  {e4('c.WTOTIB')} AS wtotib_e4,
-  {e4('c.WMERBCH')} AS wmerbch_e4,
-  {e4('c.FOLIAGE')} AS foliage_e4,
-  {e4('c.AGB')} AS agb_e4,
-  {e4('c.BIOMASS')} AS drybio_ag_e4,
-  {e4('c.CARBON')} AS carbon_ag_e4
+  {fixed_sql('f.DIA', 4)} AS dia_e4,
+  {fixed_sql('f.HT', 4)} AS ht_e4,
+  {fixed_sql('c.HT4', 4)} AS ht4_e4,
+  {fixed_sql('c.HTSAW', 4)} AS htsaw_e4,
+  {fixed_sql('c.VTOTIB_SOUND', 4)} AS vtotib_sound_e4,
+  {fixed_sql('c.VMEROB_SOUND', 4)} AS vmerob_sound_e4,
+  {fixed_sql('c.VSAWIB_SOUND', 4)} AS vsawib_sound_e4,
+  {fixed_sql('c.WTOTIB', 4)} AS wtotib_e4,
+  {fixed_sql('c.WMERBCH', 4)} AS wmerbch_e4,
+  {fixed_sql('c.FOLIAGE', 4)} AS foliage_e4,
+  {fixed_sql('c.AGB', 4)} AS agb_e4,
+  {fixed_sql('c.BIOMASS', 4)} AS drybio_ag_e4,
+  {fixed_sql('c.CARBON', 4)} AS carbon_ag_e4
 FROM final f
 LEFT JOIN carbonout c
   ON f.plot_ID = c.plot_ID AND f.tree_ID = c.tree_ID AND f.YEAR = c.YEAR"""
@@ -832,15 +815,9 @@ def population_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return release_on_gc(
         pop.select(
             "YEAR",
-            F.floor(F.col("total_tons") * 100 + F.lit(0.5)).cast("long").alias(
-                "total_tons_e2"
-            ),
-            F.floor(F.col("total_area") * 100 + F.lit(0.5)).cast("long").alias(
-                "total_area_e2"
-            ),
-            F.floor(F.col("tons_per_acre") * 1000000 + F.lit(0.5)).cast("long").alias(
-                "tons_per_acre_e6"
-            ),
+            fixed("total_tons", 2).alias("total_tons_e2"),
+            fixed("total_area", 2).alias("total_area_e2"),
+            fixed("tons_per_acre", 6).alias("tons_per_acre_e6"),
         ),
         est,
     )
@@ -907,21 +884,15 @@ def population_stratified_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return release_on_gc(
         pop.select(
             "YEAR",
-            F.floor(F.col("total_tons") * 100 + F.lit(0.5)).cast("long").alias(
-                "total_tons_e2"
-            ),
-            F.floor(F.col("total_area") * 100 + F.lit(0.5)).cast("long").alias(
-                "total_area_e2"
-            ),
-            F.floor(F.col("tons_per_acre") * 1000000 + F.lit(0.5)).cast(
-                "long"
-            ).alias("tons_per_acre_e6"),
+            fixed("total_tons", 2).alias("total_tons_e2"),
+            fixed("total_area", 2).alias("total_area_e2"),
+            fixed("tons_per_acre", 6).alias("tons_per_acre_e6"),
         ),
         plt,
     )
 
 
-ORACLE_POPULATION_STRATIFIED = """WITH {chain},
+ORACLE_POPULATION_STRATIFIED = f"""WITH {{chain}},
 annest AS (
   SELECT f.*, c.CARBON AS CARBON_AG
   FROM final f
@@ -977,9 +948,9 @@ yearly AS (
   GROUP BY 1
 )
 SELECT YEAR,
-  CAST(floor(total_tons * 100 + 0.5) AS BIGINT) AS total_tons_e2,
-  CAST(floor(total_area * 100 + 0.5) AS BIGINT) AS total_area_e2,
-  CAST(floor(total_tons / nullif(total_area, 0) * 1000000 + 0.5) AS BIGINT)
+  {fixed_sql('total_tons', 2)} AS total_tons_e2,
+  {fixed_sql('total_area', 2)} AS total_area_e2,
+  {fixed_sql('total_tons / nullif(total_area, 0)', 6)}
     AS tons_per_acre_e6
 FROM yearly
 """
@@ -1024,9 +995,9 @@ yearly AS (
   GROUP BY 1
 )
 SELECT YEAR,
-  CAST(floor(total_tons * 100 + 0.5) AS BIGINT) AS total_tons_e2,
-  CAST(floor(total_area * 100 + 0.5) AS BIGINT) AS total_area_e2,
-  CAST(floor(total_tons / nullif(total_area, 0) * 1000000 + 0.5) AS BIGINT)
+  {fixed_sql('total_tons', 2)} AS total_tons_e2,
+  {fixed_sql('total_area', 2)} AS total_area_e2,
+  {fixed_sql('total_tons / nullif(total_area, 0)', 6)}
     AS tons_per_acre_e6
 FROM yearly
 """
@@ -1051,16 +1022,14 @@ def grain_sweep_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("SPCD").cast("int").alias("spcd"),
             F.col("YEAR").cast("int").alias("year"),
             "grain",
-            F.floor(F.col("weighted_value") * 100 + F.lit(0.5)).cast("long").alias(
-                "weighted_value_e2"
-            ),
+            fixed("weighted_value", 2).alias("weighted_value_e2"),
             "n_rows",
         ),
         est,
     )
 
 
-ORACLE_GRAIN_SWEEP = """WITH {chain},
+ORACLE_GRAIN_SWEEP = f"""WITH {{chain}},
 annest AS (
   SELECT f.*, c.CARBON AS CARBON_AG
   FROM final f
@@ -1074,7 +1043,7 @@ d AS (
 SELECT CAST(SPCD AS INT) AS spcd, CAST(YEAR AS INT) AS year,
   concat_ws('|', CASE WHEN grouping(SPCD) = 0 THEN 'SPCD' END,
                  CASE WHEN grouping(YEAR) = 0 THEN 'YEAR' END) AS grain,
-  CAST(floor(sum(_wv) * 100 + 0.5) AS BIGINT) AS weighted_value_e2,
+  {fixed_sql('sum(_wv)', 2)} AS weighted_value_e2,
   count(*) AS n_rows
 FROM d
 GROUP BY GROUPING SETS ((SPCD), (YEAR), (SPCD, YEAR), ())

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
 from foresttime_builder_spark.plans import fia
 from foresttime_builder_spark.sources import load_table
 
@@ -84,15 +85,6 @@ _PANEL_SQL = """
 """
 
 
-def _e4(c) -> F.Column:
-    """Fixed-point gate emission: 1e-4 units as BIGINT.  A rounded double
-    whose nearest binary representation sits a hair below the decimal value
-    can hash-flap across engines; integers cannot (same convention as the
-    q51/q29-q31 gates)."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.floor(col * 10000 + F.lit(0.5)).cast("long")
-
-
 def synthetic_tree_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_PANEL_SQL)
@@ -107,17 +99,17 @@ def annualize_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tree_ID",
         "YEAR",
         "interpolated",
-        _e4("DIA").alias("dia_e4"),
-        _e4("HT").alias("ht_e4"),
-        _e4("ACTUALHT").alias("actualht_e4"),
-        _e4("CULL").alias("cull_e4"),
-        _e4("CR").alias("cr_e4"),
+        fixed("DIA", 4).alias("dia_e4"),
+        fixed("HT", 4).alias("ht_e4"),
+        fixed("ACTUALHT", 4).alias("actualht_e4"),
+        fixed("CULL", 4).alias("cull_e4"),
+        fixed("CR", 4).alias("cr_e4"),
         F.col("STATUSCD").cast("int").alias("statuscd"),
         F.col("STANDING_DEAD_CD").cast("int").alias("standing_dead_cd"),
         F.col("DECAYCD").cast("int").alias("decaycd"),
         F.col("RECONCILECD").cast("int").alias("reconcilecd"),
         F.col("COND_STATUS_CD").cast("int").alias("cond_status_cd"),
-        _e4("TPA_UNADJ").alias("tpa_unadj_e4"),
+        fixed("TPA_UNADJ", 4).alias("tpa_unadj_e4"),
         "PLT_CN",
     )
 
@@ -411,17 +403,17 @@ def _oracle() -> str:
     return f"""
 WITH {annualize_cte(_PANEL_SQL)}
 SELECT tree_ID, YEAR, interpolated,
-       CAST(floor(DIA * 10000 + 0.5) AS BIGINT) AS dia_e4,
-       CAST(floor(HT * 10000 + 0.5) AS BIGINT) AS ht_e4,
-       CAST(floor(ACTUALHT * 10000 + 0.5) AS BIGINT) AS actualht_e4,
-       CAST(floor(CULL * 10000 + 0.5) AS BIGINT) AS cull_e4,
-       CAST(floor(CR * 10000 + 0.5) AS BIGINT) AS cr_e4,
+       {fixed_sql('DIA', 4)} AS dia_e4,
+       {fixed_sql('HT', 4)} AS ht_e4,
+       {fixed_sql('ACTUALHT', 4)} AS actualht_e4,
+       {fixed_sql('CULL', 4)} AS cull_e4,
+       {fixed_sql('CR', 4)} AS cr_e4,
        CAST(STATUSCD AS INT) AS statuscd,
        CAST(STANDING_DEAD_CD AS INT) AS standing_dead_cd,
        CAST(DECAYCD AS INT) AS decaycd,
        CAST(RECONCILECD AS INT) AS reconcilecd,
        CAST(COND_STATUS_CD AS INT) AS cond_status_cd,
-       CAST(floor(TPA_UNADJ * 10000 + 0.5) AS BIGINT) AS tpa_unadj_e4,
+       {fixed_sql('TPA_UNADJ', 4)} AS tpa_unadj_e4,
        PLT_CN
 FROM final
 """

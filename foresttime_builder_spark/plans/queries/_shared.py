@@ -17,8 +17,6 @@ class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: Optional[str]  # ANSI SQL for DuckDB; None → rows-only check
 
-_HASH60_SQL = "CAST(('0x' || substr(md5({x}), 1, 15)) AS BIGINT)"
-
 _QTY_BANDS = [("tiny", 0.0, 10.0), ("small", 10.0, 25.0), ("mid", 25.0, 40.0), ("large", 40.0, 1e9)]
 
 _PANEL_FILTER = "((o_custkey + year(o_orderdate)) % 3) != 0"

@@ -4,6 +4,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from foresttime_builder_spark.operators.cache import carry_cache
 from foresttime_builder_spark.operators.dedup import derive_candidate_budget
+from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
 from foresttime_builder_spark.sources import load_table
 from foresttime_builder_spark.plans.queries._shared import QuerySpec
 
@@ -36,13 +37,11 @@ def q17_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "probe_id",
         "neighbor_id",
-        F.floor(F.col("cosine") * 1000000 + F.lit(0.5)).cast("long").alias(
-            "cosine_e6"
-        ),
+        fixed("cosine", 6).alias("cosine_e6"),
         "rank",
     )
 
-ORACLE_Q17 = """
+ORACLE_Q17 = f"""
 WITH base AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings
   WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
@@ -63,7 +62,7 @@ ranked AS (
   FROM pairs
 )
 SELECT probe_id, neighbor_id,
-       CAST(floor(cosine * 1000000 + 0.5) AS BIGINT) AS cosine_e6, rank
+       {fixed_sql('cosine', 6)} AS cosine_e6, rank
 FROM ranked WHERE rank <= 5
 """
 
@@ -80,9 +79,7 @@ def q37_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.select(
             "probe_id",
             "neighbor_id",
-            F.floor(F.col("cosine") * 1000000 + F.lit(0.5)).cast("long").alias(
-                "cosine_e6"
-            ),
+            fixed("cosine", 6).alias("cosine_e6"),
             "rank",
         ),
         out,
@@ -98,9 +95,7 @@ def q40_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.select(
             "id_a",
             "id_b",
-            F.floor(F.col("cosine") * 1000000 + F.lit(0.5)).cast("long").alias(
-                "cosine_e6"
-            ),
+            fixed("cosine", 6).alias("cosine_e6"),
         ),
         out,
     )
@@ -130,9 +125,7 @@ def q42_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.select(
             "probe_id",
             "neighbor_id",
-            F.floor(F.col("cosine") * 1000000 + F.lit(0.5)).cast("long").alias(
-                "cosine_e6"
-            ),
+            fixed("cosine", 6).alias("cosine_e6"),
             "rank",
         ),
         out,
@@ -143,7 +136,7 @@ def _neardup_oracle() -> str:
 
     return (
         "SELECT id_a, id_b, "
-        "CAST(floor(cosine * 1000000 + 0.5) AS BIGINT) AS cosine_e6 "
+        f"{fixed_sql('cosine', 6)} AS cosine_e6 "
         f"FROM ({embedding_neardup_oracle_sql()}) z"
     )
 
@@ -152,7 +145,7 @@ def _ann_oracle() -> str:
 
     return (
         "SELECT probe_id, neighbor_id, "
-        "CAST(floor(cosine * 1000000 + 0.5) AS BIGINT) AS cosine_e6, rank "
+        f"{fixed_sql('cosine', 6)} AS cosine_e6, rank "
         f"FROM ({lsh_topk_oracle_sql()}) z"
     )
 
@@ -161,7 +154,7 @@ def _ivf_oracle() -> str:
 
     return (
         "SELECT probe_id, neighbor_id, "
-        "CAST(floor(cosine * 1000000 + 0.5) AS BIGINT) AS cosine_e6, rank "
+        f"{fixed_sql('cosine', 6)} AS cosine_e6, rank "
         f"FROM ({ivf_topk_oracle_sql()}) z"
     )
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from foresttime_builder_spark.functions.encoding import fixed, fixed_sql, hash60_sql
 from foresttime_builder_spark.operators.cache import carry_cache
 from foresttime_builder_spark.operators.dedup import (
     derive_candidate_budget,
@@ -13,7 +14,6 @@ from foresttime_builder_spark.sources import load_table
 
 from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
     QuerySpec,
-    _HASH60_SQL,
     _MH_BAND,
     _MH_N,
     _SH_BITS,
@@ -65,14 +65,15 @@ def q16_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a",
             "doc_b",
             "n_common",
-            F.floor(F.col("jaccard") * 10000 + F.lit(0.5)).cast("long").alias(
-                "jaccard_e4"
-            ),
+            fixed("jaccard", 4).alias("jaccard_e4"),
         ),
         pairs,
     )
 
-ORACLE_Q16 = """
+#: The oracles round the jaccard to 4 decimals as the Spark operators do.
+_JACCARD_E4_SQL = fixed_sql("round(n_common / (sa.sz + sb.sz - n_common), 4)", 4)
+
+ORACLE_Q16 = f"""
 WITH toks AS (
   SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
   FROM documents
@@ -84,8 +85,7 @@ inter AS (
   GROUP BY 1, 2
 )
 SELECT doc_a, doc_b, n_common,
-       CAST(floor(round(n_common / (sa.sz + sb.sz - n_common), 4) * 10000 + 0.5)
-            AS BIGINT) AS jaccard_e4
+       {_JACCARD_E4_SQL} AS jaccard_e4
 FROM inter
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
@@ -144,14 +144,12 @@ def q54_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a",
             "doc_b",
             "n_common",
-            F.floor(F.col("jaccard") * 10000 + F.lit(0.5)).cast("long").alias(
-                "jaccard_e4"
-            ),
+            fixed("jaccard", 4).alias("jaccard_e4"),
         ),
         pairs,
     )
 
-ORACLE_Q54 = """
+ORACLE_Q54 = f"""
 WITH toks AS (
   SELECT doc_id, unnest(list_distinct(
     CASE WHEN length(text) < 3 THEN []
@@ -167,8 +165,7 @@ inter AS (
   GROUP BY 1, 2
 )
 SELECT doc_a, doc_b, n_common,
-       CAST(floor(round(n_common / (sa.sz + sb.sz - n_common), 4) * 10000 + 0.5)
-            AS BIGINT) AS jaccard_e4
+       {_JACCARD_E4_SQL} AS jaccard_e4
 FROM inter
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
@@ -206,9 +203,7 @@ def q23_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a",
             "doc_b",
             "n_common",
-            F.floor(F.col("jaccard") * 10000 + F.lit(0.5)).cast("long").alias(
-                "jaccard_e4"
-            ),
+            fixed("jaccard", 4).alias("jaccard_e4"),
         ),
         pairs,
     )
@@ -217,7 +212,7 @@ def _minhash_lsh_oracle(
     n_hashes: int = _MH_N, band_size: int = _MH_BAND, threshold: float = 0.5
 ) -> str:
     mins = ",\n         ".join(
-        f"min({_HASH60_SQL.format(x=repr(str(i) + '|') + ' || token')}) AS mh_{i:02d}"
+        f"min({hash60_sql(repr(str(i) + '|') + ' || token')}) AS mh_{i:02d}"
         for i in range(n_hashes)
     )
     n_bands = n_hashes // band_size
@@ -262,9 +257,11 @@ docsets AS (
 )
 SELECT doc_a, doc_b,
        len(list_intersect(sa.toks, sb.toks)) AS n_common,
-       CAST(floor(round(len(list_intersect(sa.toks, sb.toks))
-                        / (sa.sz + sb.sz - len(list_intersect(sa.toks, sb.toks))), 4)
-                  * 10000 + 0.5) AS BIGINT)
+       {fixed_sql(
+           "round(len(list_intersect(sa.toks, sb.toks))"
+           " / (sa.sz + sb.sz - len(list_intersect(sa.toks, sb.toks))), 4)",
+           4,
+       )}
          AS jaccard_e4
 FROM cand
 JOIN docsets sa ON sa.doc_id = doc_a
@@ -279,7 +276,7 @@ def q24_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash(d, "doc_id", "text", n_bits=_SH_BITS)
 
 def _simhash_oracle() -> str:
-    h = _HASH60_SQL.format(x="token")
+    h = hash60_sql("token")
     bits = " + ".join(
         f"(CASE WHEN sum((h >> {k}) & 1) * 2 > count(*) THEN CAST({2**k} AS BIGINT) ELSE 0 END)"
         for k in range(_SH_BITS)
@@ -434,9 +431,7 @@ def q76_jaccard_budget_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a",
         "doc_b",
         "n_common",
-        F.floor(F.col("jaccard") * 10000 + F.lit(0.5)).cast("long").alias(
-            "jaccard_e4"
-        ),
+        fixed("jaccard", 4).alias("jaccard_e4"),
     )
 
 def q77_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -580,7 +575,7 @@ def _incremental_dedup_oracle(
 ) -> str:
     n_bands = n_hashes // band_size
     mins = ",\n         ".join(
-        f"min({_HASH60_SQL.format(x=repr(str(i) + '|') + ' || token')}) AS mh_{i:02d}"
+        f"min({hash60_sql(repr(str(i) + '|') + ' || token')}) AS mh_{i:02d}"
         for i in range(n_hashes)
     )
     bands = ",\n         ".join(
@@ -773,7 +768,7 @@ def _lsh_representatives_oracle(
 
         rounds = MAX_ITER_DEFAULT
     mins = ",\n         ".join(
-        f"min({_HASH60_SQL.format(x=repr(str(i) + '|') + ' || token')}) AS mh_{i:02d}"
+        f"min({hash60_sql(repr(str(i) + '|') + ' || token')}) AS mh_{i:02d}"
         for i in range(n_hashes)
     )
     n_bands = n_hashes // band_size

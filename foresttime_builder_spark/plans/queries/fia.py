@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
 from foresttime_builder_spark.sources import load_table
 
 from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
@@ -116,9 +117,7 @@ def q38_sapling_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "prev_state",
         "state",
         "n",
-        F.floor(F.col("n") / F.sum("n").over(tot) * 10000 + F.lit(0.5)).cast(
-            "long"
-        ).alias("prop_e4"),
+        fixed(F.col("n") / F.sum("n").over(tot), 4).alias("prop_e4"),
     )
 
 def _sapling_oracle() -> str:
@@ -149,8 +148,7 @@ counts AS (
   WHERE prev_state IS NOT NULL GROUP BY 1, 2
 )
 SELECT prev_state, state, n,
-       CAST(floor(n / (sum(n) OVER (PARTITION BY prev_state)) * 10000 + 0.5)
-            AS BIGINT) AS prop_e4
+       {fixed_sql('n / (sum(n) OVER (PARTITION BY prev_state))', 4)} AS prop_e4
 FROM counts
 """
 

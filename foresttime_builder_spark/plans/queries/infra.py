@@ -2,12 +2,15 @@
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from foresttime_builder_spark.functions.encoding import (
+    fixed,
+    fixed_sql,
+    hash60,
+    hash60_sql,
+)
 from foresttime_builder_spark.sources import load_table
 
-from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
-    QuerySpec,
-    _HASH60_SQL,
-)
+from foresttime_builder_spark.plans.queries._shared import QuerySpec
 
 
 def q43_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,18 +65,14 @@ def q43_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 1e8-magnitude products is summation-order-dependent in its last
         # ulp, which e2 flooring then exposes as off-by-one cross-engine
         F.sum(
-            F.floor(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-                + F.lit(0.5)
-            ).cast("long")
+            fixed(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
         ).cast("long").alias("revenue_e2"),
     )
 
-ORACLE_Q43 = """
+ORACLE_Q43 = f"""
 SELECT o_orderpriority AS priority, year(o_orderdate) AS year,
        count(*) AS n_rows,
-       CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5)
-                AS BIGINT)) AS BIGINT)
+       CAST(sum({fixed_sql('l_extendedprice * (1 - l_discount)', 2)}) AS BIGINT)
          AS revenue_e2
 FROM orders JOIN lineitem ON o_orderkey = l_orderkey
 GROUP BY 1, 2
@@ -102,24 +101,18 @@ def q44_salted_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "l_returnflag",
-        F.floor(F.col("sum_qty") * 100 + F.lit(0.5)).cast("long").alias(
-            "sum_qty_e2"
-        ),
+        fixed("sum_qty", 2).alias("sum_qty_e2"),
         "n_items",
-        F.floor(F.col("min_price") * 100 + F.lit(0.5)).cast("long").alias(
-            "min_price_e2"
-        ),
-        F.floor(F.col("max_price") * 100 + F.lit(0.5)).cast("long").alias(
-            "max_price_e2"
-        ),
+        fixed("min_price", 2).alias("min_price_e2"),
+        fixed("max_price", 2).alias("max_price_e2"),
     )
 
-ORACLE_Q44 = """
+ORACLE_Q44 = f"""
 SELECT l_returnflag,
-       CAST(floor(sum(l_quantity) * 100 + 0.5) AS BIGINT) AS sum_qty_e2,
+       {fixed_sql('sum(l_quantity)', 2)} AS sum_qty_e2,
        count(*) AS n_items,
-       CAST(floor(min(l_extendedprice) * 100 + 0.5) AS BIGINT) AS min_price_e2,
-       CAST(floor(max(l_extendedprice) * 100 + 0.5) AS BIGINT) AS max_price_e2
+       {fixed_sql('min(l_extendedprice)', 2)} AS min_price_e2,
+       {fixed_sql('max(l_extendedprice)', 2)} AS max_price_e2
 FROM lineitem
 GROUP BY l_returnflag
 """
@@ -141,15 +134,13 @@ def q45_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         li, o, ["l_orderkey"], salt=8, salt_from=["l_orderkey", "l_linenumber"]
     )
     return j.groupBy(F.col("o_orderpriority").alias("priority")).agg(
-        F.floor(F.sum("l_quantity") * 100 + F.lit(0.5)).cast("long").alias(
-            "sum_qty_e2"
-        ),
+        fixed(F.sum("l_quantity"), 2).alias("sum_qty_e2"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 
-ORACLE_Q45 = """
+ORACLE_Q45 = f"""
 SELECT o_orderpriority AS priority,
-       CAST(floor(sum(l_quantity) * 100 + 0.5) AS BIGINT) AS sum_qty_e2,
+       {fixed_sql('sum(l_quantity)', 2)} AS sum_qty_e2,
        count(*) AS n_rows
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 GROUP BY 1
@@ -176,14 +167,12 @@ def q49_merge_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_type",
         "event_id",
-        F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long").alias(
-            "last_value_e4"
-        ),
+        fixed("value", 4).alias("last_value_e4"),
     )
 
-ORACLE_Q49 = """
+ORACLE_Q49 = f"""
 SELECT user_id, event_type, event_id,
-       CAST(floor(value * 10000 + 0.5) AS BIGINT) AS last_value_e4
+       {fixed_sql('value', 4)} AS last_value_e4
 FROM (
   SELECT *, row_number() OVER (
     PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) AS rn
@@ -203,7 +192,6 @@ def q66_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSONL round trip is byte-faithful."""
     import tempfile
 
-    from foresttime_builder_spark.operators.dedup import hash60
     from foresttime_builder_spark.sources.jsonl import read_jsonl, write_jsonl
 
     d = load_table(spark, sf_dir, "documents")
@@ -217,16 +205,13 @@ def q66_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
-        F.expr(
-            "bit_xor(cast(conv(substring(md5(text), 1, 15), 16, 10) as bigint))"
-        ).alias("content_sig"),
+        F.bit_xor(hash60("text")).alias("content_sig"),
     )
 
-ORACLE_Q66 = """
+ORACLE_Q66 = f"""
 SELECT lang, count(*) AS n_docs,
        CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       bit_xor(CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT))
-         AS content_sig
+       bit_xor({hash60_sql('text')}) AS content_sig
 FROM documents GROUP BY lang
 """
 
@@ -245,16 +230,13 @@ def q70_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
-        F.expr(
-            "bit_xor(cast(conv(substring(md5(text), 1, 15), 16, 10) as bigint))"
-        ).alias("content_sig"),
+        F.bit_xor(hash60("text")).alias("content_sig"),
     )
 
-ORACLE_Q70 = """
+ORACLE_Q70 = f"""
 SELECT source, count(*) AS n_docs,
        CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       bit_xor(CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT))
-         AS content_sig
+       bit_xor({hash60_sql('text')}) AS content_sig
 FROM documents WHERE lang = 'en' GROUP BY source
 """
 
@@ -305,9 +287,7 @@ def q79_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_orderdate",
         "o_orderstatus",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("price_e2"),
+        fixed("o_totalprice", 2).alias("price_e2"),
     )
     old = base.filter(F.col("o_orderdate") < F.lit("1997-01-01").cast("date"))
     new = (
@@ -330,7 +310,7 @@ def _snapshot_diff_oracle() -> str:
 
     base = (
         "SELECT o_orderkey, o_orderdate, o_orderstatus, "
-        "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS price_e2 "
+        f"{fixed_sql('o_totalprice', 2)} AS price_e2 "
         "FROM orders"
     )
     old_sql = f"SELECT * FROM ({base}) WHERE o_orderdate < DATE '1997-01-01'"
@@ -475,7 +455,7 @@ def _pipeline_e2e_oracle() -> str:
     from foresttime_builder_spark.operators.text import quality_gate_oracle_sql
 
     gate = quality_gate_oracle_sql("doc_id", "text", "documents")
-    h = _HASH60_SQL.format(x="CAST(doc_id AS VARCHAR)")
+    h = hash60_sql("CAST(doc_id AS VARCHAR)")
     return f"""
 WITH gate AS ({gate}),
 survivors AS (
@@ -517,9 +497,7 @@ def q106_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_orderdate",
         "o_orderstatus",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("price_e2"),
+        fixed("o_totalprice", 2).alias("price_e2"),
     )
     v1 = o.filter(F.year("o_orderdate") == 1995).select(
         "o_orderkey", "price_e2"
@@ -549,11 +527,11 @@ def q106_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("price_e2").cast("long").alias("total_e2"),
     )
 
-ORACLE_Q106 = """
+ORACLE_Q106 = f"""
 SELECT CASE WHEN year(o_orderdate) = 1996 THEN o_orderstatus END
          AS o_orderstatus,
        CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
+       CAST(sum({fixed_sql('o_totalprice', 2)}) AS BIGINT)
          AS total_e2
 FROM orders
 WHERE year(o_orderdate) IN (1995, 1996)

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
 from foresttime_builder_spark.sources import load_table
 from foresttime_builder_spark.plans.queries._shared import QuerySpec
 
@@ -22,9 +23,7 @@ def q35_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "byte_len",
         "thumb_hash",
         *[
-            F.floor(F.col("features").getItem(j) * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias(f"f{j}_e6")
+            fixed(F.col("features").getItem(j), 6).alias(f"f{j}_e6")
             for j in range(8)
         ],
     )
@@ -36,8 +35,12 @@ SELECT doc_id, length(coalesce(text, '')) AS byte_len,
 FROM documents
 """.format(
     feats=", ".join(
-        "CAST(floor(CAST(('0x' || substr(md5(coalesce(text, '')), 1 + 2 * %d, 2))"
-        " AS BIGINT) / 255.0 * 1000000 + 0.5) AS BIGINT) AS f%d_e6" % (j, j)
+        fixed_sql(
+            "CAST(('0x' || substr(md5(coalesce(text, '')), 1 + 2 * %d, 2))"
+            " AS BIGINT) / 255.0" % j,
+            6,
+        )
+        + f" AS f{j}_e6"
         for j in range(8)
     )
 )

@@ -3,6 +3,7 @@
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from foresttime_builder_spark.operators.cache import carry_cache
+from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
 from foresttime_builder_spark.sources import load_table
 from foresttime_builder_spark.plans.queries._shared import QuerySpec
 
@@ -18,9 +19,7 @@ def q46_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = kmv_distinct(o, "o_custkey", k=64)
     return carry_cache(
         out.select(
-            F.floor(F.col("est_distinct") * 10000 + F.lit(0.5)).cast("long").alias(
-                "est_distinct_e4"
-            ),
+            fixed("est_distinct", 4).alias("est_distinct_e4"),
             "n_exact",
         ),
         out,
@@ -30,7 +29,7 @@ def _kmv_oracle() -> str:
     from foresttime_builder_spark.operators.sketch import kmv_oracle_sql
 
     return (
-        "SELECT CAST(floor(est_distinct * 10000 + 0.5) AS BIGINT) "
+        f"SELECT {fixed_sql('est_distinct', 4)} "
         "AS est_distinct_e4, n_exact "
         f"FROM ({kmv_oracle_sql('orders', 'o_custkey', k=64)}) z"
     )
@@ -121,9 +120,7 @@ def q117_group_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     return carry_cache(
         out.select(
             "source",
-            F.floor(F.col("est_distinct") * 10000 + F.lit(0.5))
-            .cast("long")
-            .alias("est_distinct_e4"),
+            fixed("est_distinct", 4).alias("est_distinct_e4"),
             F.col("n_exact").cast("long").alias("n_exact"),
         ),
         out,
@@ -137,7 +134,7 @@ def _group_kmv_oracle() -> str:
         "AS tok FROM documents)"
     )
     return (
-        "SELECT source, CAST(floor(est_distinct * 10000 + 0.5) AS BIGINT)"
+        f"SELECT source, {fixed_sql('est_distinct', 4)}"
         " AS est_distinct_e4, CAST(n_exact AS BIGINT) AS n_exact FROM ("
         + kmv_by_oracle_sql(inner, "source", "tok", k=64, with_exact=True)
         + ") z"
@@ -163,9 +160,7 @@ def q118_group_kmv_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return carry_cache(
         out.select(
             "lang",
-            F.floor(F.col("est_distinct") * 10000 + F.lit(0.5))
-            .cast("long")
-            .alias("est_distinct_e4"),
+            fixed("est_distinct", 4).alias("est_distinct_e4"),
         ),
         out,
     )
@@ -178,7 +173,7 @@ def _group_kmv_estimate_oracle() -> str:
         "AS tok FROM documents)"
     )
     return (
-        "SELECT lang, CAST(floor(est_distinct * 10000 + 0.5) AS BIGINT)"
+        f"SELECT lang, {fixed_sql('est_distinct', 4)}"
         " AS est_distinct_e4 FROM ("
         + kmv_by_oracle_sql(inner, "lang", "tok", k=64, with_exact=False)
         + ") z"

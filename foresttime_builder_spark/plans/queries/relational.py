@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
 from foresttime_builder_spark.sources import load_table
 
 from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
@@ -17,25 +18,20 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.floor(F.sum("l_quantity") * 100 + F.lit(0.5)).cast("long").alias(
-                "sum_qty_e2"
-            ),
-            F.floor(F.sum("l_extendedprice") * 100 + F.lit(0.5)).cast("long").alias(
-                "sum_base_price_e2"
-            ),
-            F.floor(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 100
-                + F.lit(0.5)
-            ).cast("long").alias("sum_disc_price_e2"),
+            fixed(F.sum("l_quantity"), 2).alias("sum_qty_e2"),
+            fixed(F.sum("l_extendedprice"), 2).alias("sum_base_price_e2"),
+            fixed(
+                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+            ).alias("sum_disc_price_e2"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )
 
-ORACLE_Q01 = """
+ORACLE_Q01 = f"""
 SELECT l_returnflag, l_linestatus,
-       CAST(floor(sum(l_quantity) * 100 + 0.5) AS BIGINT) AS sum_qty_e2,
-       CAST(floor(sum(l_extendedprice) * 100 + 0.5) AS BIGINT) AS sum_base_price_e2,
-       CAST(floor(sum(l_extendedprice * (1 - l_discount)) * 100 + 0.5) AS BIGINT)
+       {fixed_sql('sum(l_quantity)', 2)} AS sum_qty_e2,
+       {fixed_sql('sum(l_extendedprice)', 2)} AS sum_base_price_e2,
+       {fixed_sql('sum(l_extendedprice * (1 - l_discount))', 2)}
          AS sum_disc_price_e2,
        count(*) AS count_order
 FROM lineitem
@@ -61,19 +57,15 @@ def q02_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             # double-sum form diverged in its last ulp under fuzz
             # magnitudes — same fix as q43/q62)
             F.sum(
-                F.floor(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-                    + F.lit(0.5)
-                ).cast("long")
+                fixed(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
             ).cast("long").alias("revenue_e2"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
 
-ORACLE_Q02 = """
+ORACLE_Q02 = f"""
 SELECT r_name AS region, year(o_orderdate) AS year,
-       CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5)
-                AS BIGINT)) AS BIGINT)
+       CAST(sum({fixed_sql('l_extendedprice * (1 - l_discount)', 2)}) AS BIGINT)
          AS revenue_e2,
        count(*) AS n_items
 FROM lineitem
@@ -93,16 +85,16 @@ def q03_customer_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey", "c_mktsegment")
         .agg(
             F.count("o_orderkey").alias("n_orders"),
-            F.floor(
-                F.coalesce(F.sum("o_totalprice"), F.lit(0.0)) * 100 + F.lit(0.5)
-            ).cast("long").alias("total_spend_e2"),
+            fixed(F.coalesce(F.sum("o_totalprice"), F.lit(0.0)), 2).alias(
+                "total_spend_e2"
+            ),
         )
     )
 
-ORACLE_Q03 = """
+ORACLE_Q03 = f"""
 SELECT c_custkey, c_mktsegment,
        count(o_orderkey) AS n_orders,
-       CAST(floor(coalesce(sum(o_totalprice), 0.0) * 100 + 0.5) AS BIGINT)
+       {fixed_sql('coalesce(sum(o_totalprice), 0.0)', 2)}
          AS total_spend_e2
 FROM customer LEFT JOIN orders ON c_custkey = o_custkey
 GROUP BY c_custkey, c_mktsegment
@@ -154,14 +146,12 @@ def q05_range_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("band").agg(
         F.count(F.lit(1)).alias("n"),
-        F.floor(F.sum("l_extendedprice") * 100 + F.lit(0.5)).cast("long").alias(
-            "band_price_e2"
-        ),
+        fixed(F.sum("l_extendedprice"), 2).alias("band_price_e2"),
     )
 
-ORACLE_Q05 = """
+ORACLE_Q05 = f"""
 SELECT band, count(*) AS n,
-       CAST(floor(sum(l_extendedprice) * 100 + 0.5) AS BIGINT) AS band_price_e2
+       {fixed_sql('sum(l_extendedprice)', 2)} AS band_price_e2
 FROM lineitem
 LEFT JOIN (VALUES ('tiny', 0.0, 10.0), ('small', 10.0, 25.0),
                   ('mid', 25.0, 40.0), ('large', 40.0, 1e9)) bands(band, lo, hi)
@@ -189,23 +179,21 @@ def q06_asof_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ev.withColumn(
             "last_click_value_e4",
-            F.floor(last_click * 10000 + F.lit(0.5)).cast("long"),
+            fixed(last_click, 4),
         )
         .filter(F.col("event_type") == "purchase")
         .select(
             "event_id",
             "user_id",
-            F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long").alias(
-                "purchase_value_e4"
-            ),
+            fixed("value", 4).alias("purchase_value_e4"),
             "last_click_value_e4",
         )
     )
 
-ORACLE_Q06 = """
+ORACLE_Q06 = f"""
 SELECT event_id, user_id,
-       CAST(floor(value * 10000 + 0.5) AS BIGINT) AS purchase_value_e4,
-       CAST(floor(last_click_value * 10000 + 0.5) AS BIGINT) AS last_click_value_e4
+       {fixed_sql('value', 4)} AS purchase_value_e4,
+       {fixed_sql('last_click_value', 4)} AS last_click_value_e4
 FROM (
   SELECT event_id, user_id, event_type, value,
          last_value(CASE WHEN event_type = 'click' THEN value END IGNORE NULLS)
@@ -224,9 +212,7 @@ def q18_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
-            F.floor(F.sum("l_quantity") * 100 + F.lit(0.5)).cast("long").alias(
-                "sum_qty_e2"
-            ),
+            fixed(F.sum("l_quantity"), 2).alias("sum_qty_e2"),
             F.count(F.lit(1)).alias("n"),
         )
         .select(
@@ -237,10 +223,10 @@ def q18_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-ORACLE_Q18 = """
+ORACLE_Q18 = f"""
 SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
        coalesce(l_linestatus, 'ALL') AS linestatus,
-       CAST(floor(sum(l_quantity) * 100 + 0.5) AS BIGINT) AS sum_qty_e2,
+       {fixed_sql('sum(l_quantity)', 2)} AS sum_qty_e2,
        count(*) AS n
 FROM lineitem
 GROUP BY ROLLUP (l_returnflag, l_linestatus)
@@ -251,28 +237,23 @@ def q19_manual_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     flag = F.col("l_returnflag")
     return li.groupBy("l_linestatus").agg(
-        F.floor(
-            F.sum(F.when(flag == "A", F.col("l_quantity")).otherwise(0.0)) * 100
-            + F.lit(0.5)
-        ).cast("long").alias("qty_A_e2"),
-        F.floor(
-            F.sum(F.when(flag == "N", F.col("l_quantity")).otherwise(0.0)) * 100
-            + F.lit(0.5)
-        ).cast("long").alias("qty_N_e2"),
-        F.floor(
-            F.sum(F.when(flag == "R", F.col("l_quantity")).otherwise(0.0)) * 100
-            + F.lit(0.5)
-        ).cast("long").alias("qty_R_e2"),
+        fixed(F.sum(F.when(flag == "A", F.col("l_quantity")).otherwise(0.0)), 2)
+        .alias("qty_A_e2"),
+        fixed(F.sum(F.when(flag == "N", F.col("l_quantity")).otherwise(0.0)), 2)
+        .alias("qty_N_e2"),
+        fixed(F.sum(F.when(flag == "R", F.col("l_quantity")).otherwise(0.0)), 2)
+        .alias("qty_R_e2"),
     )
 
-ORACLE_Q19 = """
+def _qty_when(flag: str) -> str:
+    return f"sum(CASE WHEN l_returnflag = '{flag}' THEN l_quantity ELSE 0.0 END)"
+
+
+ORACLE_Q19 = f"""
 SELECT l_linestatus,
-       CAST(floor(sum(CASE WHEN l_returnflag = 'A' THEN l_quantity ELSE 0.0 END)
-                  * 100 + 0.5) AS BIGINT) AS qty_A_e2,
-       CAST(floor(sum(CASE WHEN l_returnflag = 'N' THEN l_quantity ELSE 0.0 END)
-                  * 100 + 0.5) AS BIGINT) AS qty_N_e2,
-       CAST(floor(sum(CASE WHEN l_returnflag = 'R' THEN l_quantity ELSE 0.0 END)
-                  * 100 + 0.5) AS BIGINT) AS qty_R_e2
+       {fixed_sql(_qty_when('A'), 2)} AS qty_A_e2,
+       {fixed_sql(_qty_when('N'), 2)} AS qty_N_e2,
+       {fixed_sql(_qty_when('R'), 2)} AS qty_R_e2
 FROM lineitem
 GROUP BY l_linestatus
 """
@@ -293,28 +274,26 @@ def q20_yearly_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "year",
-            F.floor(F.col("_tr") * 100 + F.lit(0.5)).cast("long").alias(
-                "total_revenue_e2"
-            ),
+            fixed("_tr", 2).alias("total_revenue_e2"),
             "n_customers",
-            F.floor(
-                F.col("_tr") / F.col("n_customers") * 10000 + F.lit(0.5)
-            ).cast("long").alias("revenue_per_customer_e4"),
+            fixed(F.col("_tr") / F.col("n_customers"), 4).alias(
+                "revenue_per_customer_e4"
+            ),
         )
     )
 
-ORACLE_Q20 = """
+ORACLE_Q20 = f"""
 WITH per_cust_year AS (
   SELECT o_custkey AS custkey, year(o_orderdate) AS year,
          sum(o_totalprice) AS cust_total
   FROM orders GROUP BY 1, 2
 )
 SELECT year,
-       CAST(floor(round(sum(cust_total), 2) * 100 + 0.5) AS BIGINT)
+       {fixed_sql('round(sum(cust_total), 2)', 2)}
          AS total_revenue_e2,
        count(DISTINCT custkey) AS n_customers,
-       CAST(floor(round(sum(cust_total), 2) / count(DISTINCT custkey) * 10000
-                  + 0.5) AS BIGINT) AS revenue_per_customer_e4
+       {fixed_sql('round(sum(cust_total), 2) / count(DISTINCT custkey)', 4)}
+         AS revenue_per_customer_e4
 FROM per_cust_year GROUP BY year
 """
 
@@ -335,25 +314,21 @@ def q21_monthly_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         "suppkey",
         "year",
         "month",
-        F.floor(F.col("qty") * 100 + F.lit(0.5)).cast("long").alias("qty_e2"),
-        F.floor(F.lag("qty", 1).over(w) * 100 + F.lit(0.5)).cast("long").alias(
-            "prev_qty_e2"
-        ),
-        F.floor(
-            (F.col("qty") - F.lag("qty", 1).over(w)) * 100 + F.lit(0.5)
-        ).cast("long").alias("qty_delta_e2"),
+        fixed("qty", 2).alias("qty_e2"),
+        fixed(F.lag("qty", 1).over(w), 2).alias("prev_qty_e2"),
+        fixed(F.col("qty") - F.lag("qty", 1).over(w), 2).alias("qty_delta_e2"),
     )
 
-ORACLE_Q21 = """
+ORACLE_Q21 = f"""
 WITH monthly AS (
   SELECT l_suppkey AS suppkey, year(l_shipdate) AS year,
          month(l_shipdate) AS month, round(sum(l_quantity), 2) AS qty
   FROM lineitem WHERE l_shipdate IS NOT NULL GROUP BY 1, 2, 3
 )
 SELECT suppkey, year, month,
-       CAST(floor(qty * 100 + 0.5) AS BIGINT) AS qty_e2,
-       CAST(floor(lag(qty, 1) OVER w * 100 + 0.5) AS BIGINT) AS prev_qty_e2,
-       CAST(floor((qty - lag(qty, 1) OVER w) * 100 + 0.5) AS BIGINT)
+       {fixed_sql('qty', 2)} AS qty_e2,
+       {fixed_sql('lag(qty, 1) OVER w', 2)} AS prev_qty_e2,
+       {fixed_sql('qty - lag(qty, 1) OVER w', 2)}
          AS qty_delta_e2
 FROM monthly
 WINDOW w AS (PARTITION BY suppkey ORDER BY year, month)
@@ -369,16 +344,14 @@ def q22_expns_per_year(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.countDistinct("o_custkey").alias("n_customers"))
         .withColumn(
             "expns_e4",
-            F.floor(F.lit(area) / F.col("n_customers") * 10000 + F.lit(0.5)).cast(
-                "long"
-            ),
+            fixed(F.lit(area) / F.col("n_customers"), 4),
         )
     )
 
-ORACLE_Q22 = """
+ORACLE_Q22 = f"""
 SELECT year(o_orderdate) AS year,
        count(DISTINCT o_custkey) AS n_customers,
-       CAST(floor(1000000.0 / count(DISTINCT o_custkey) * 10000 + 0.5) AS BIGINT)
+       {fixed_sql('1000000.0 / count(DISTINCT o_custkey)', 4)}
          AS expns_e4
 FROM orders GROUP BY 1
 """
@@ -410,30 +383,29 @@ def q47_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select(
         "event_id",
         "user_id",
-        F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long").alias(
-            "purchase_value_e4"
-        ),
-        F.floor(F.col("click_value") * 10000 + F.lit(0.5)).cast("long").alias(
-            "asof_click_value_e4"
-        ),
+        fixed("value", 4).alias("purchase_value_e4"),
+        fixed("click_value", 4).alias("asof_click_value_e4"),
     )
 
-ORACLE_Q47 = """
+ORACLE_Q47 = f"""
 WITH ev AS (
   SELECT * FROM events WHERE ts IS NOT NULL AND event_id IS NOT NULL
 ),
 clicks AS (SELECT * FROM ev WHERE event_type = 'click')
-SELECT p.event_id, p.user_id,
-       CAST(floor(p.value * 10000 + 0.5) AS BIGINT) AS purchase_value_e4,
-       CAST(floor((SELECT c.value FROM clicks c
-                   -- IS NOT DISTINCT FROM: the Spark operator's window
-                   -- PARTITION BY groups NULL user_ids together; a plain
-                   -- equality would orphan every NULL-user purchase
-                   WHERE c.user_id IS NOT DISTINCT FROM p.user_id
-                     AND c.ts <= p.ts
-                   ORDER BY c.ts DESC, c.event_id DESC LIMIT 1) * 10000 + 0.5)
-            AS BIGINT) AS asof_click_value_e4
-FROM ev p WHERE p.event_type = 'purchase'
+SELECT event_id, user_id,
+       {fixed_sql('value', 4)} AS purchase_value_e4,
+       {fixed_sql('click_value', 4)} AS asof_click_value_e4
+FROM (
+  SELECT p.event_id, p.user_id, p.value,
+         (SELECT c.value FROM clicks c
+          -- IS NOT DISTINCT FROM: the Spark operator's window
+          -- PARTITION BY groups NULL user_ids together; a plain
+          -- equality would orphan every NULL-user purchase
+          WHERE c.user_id IS NOT DISTINCT FROM p.user_id
+            AND c.ts <= p.ts
+          ORDER BY c.ts DESC, c.event_id DESC LIMIT 1) AS click_value
+  FROM ev p WHERE p.event_type = 'purchase'
+)
 """
 
 def q48_group_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -443,19 +415,19 @@ def q48_group_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     pct = F.expr("percentile(l_extendedprice, array(0.25D, 0.5D, 0.9D))")
     return li.groupBy("l_returnflag").agg(
-        F.floor(pct.getItem(0) * 10000 + F.lit(0.5)).cast("long").alias("p25_e4"),
-        F.floor(pct.getItem(1) * 10000 + F.lit(0.5)).cast("long").alias("p50_e4"),
-        F.floor(pct.getItem(2) * 10000 + F.lit(0.5)).cast("long").alias("p90_e4"),
+        fixed(pct.getItem(0), 4).alias("p25_e4"),
+        fixed(pct.getItem(1), 4).alias("p50_e4"),
+        fixed(pct.getItem(2), 4).alias("p90_e4"),
         F.count(F.lit(1)).alias("n"),
     )
 
-ORACLE_Q48 = """
+ORACLE_Q48 = f"""
 SELECT l_returnflag,
-       CAST(floor(quantile_cont(l_extendedprice, 0.25) * 10000 + 0.5) AS BIGINT)
+       {fixed_sql('quantile_cont(l_extendedprice, 0.25)', 4)}
          AS p25_e4,
-       CAST(floor(quantile_cont(l_extendedprice, 0.5) * 10000 + 0.5) AS BIGINT)
+       {fixed_sql('quantile_cont(l_extendedprice, 0.5)', 4)}
          AS p50_e4,
-       CAST(floor(quantile_cont(l_extendedprice, 0.9) * 10000 + 0.5) AS BIGINT)
+       {fixed_sql('quantile_cont(l_extendedprice, 0.9)', 4)}
          AS p90_e4,
        count(*) AS n
 FROM lineitem
@@ -469,19 +441,19 @@ def q41_sql_over_views(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir, names=("orders", "customer"))
     return spark.sql(
-        """
+        f"""
         SELECT c_mktsegment, year(o_orderdate) AS year,
                count(*) AS n_orders,
-               CAST(floor(sum(o_totalprice) * 100 + 0.5) AS BIGINT)
+               {fixed_sql('sum(o_totalprice)', 2)}
                  AS revenue_e2
         FROM orders JOIN customer ON o_custkey = c_custkey
         GROUP BY 1, 2
         """
     )
 
-ORACLE_Q41 = """
+ORACLE_Q41 = f"""
 SELECT c_mktsegment, year(o_orderdate) AS year, count(*) AS n_orders,
-       CAST(floor(sum(o_totalprice) * 100 + 0.5) AS BIGINT) AS revenue_e2
+       {fixed_sql('sum(o_totalprice)', 2)} AS revenue_e2
 FROM orders JOIN customer ON o_custkey = c_custkey
 GROUP BY 1, 2
 """
@@ -508,17 +480,14 @@ def q62_semijoin_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 1e8-magnitude products is summation-order-dependent in its last
         # ulp, which e2 flooring then exposes as off-by-one cross-engine
         F.sum(
-            F.floor(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-                + F.lit(0.5)
-            ).cast("long")
+            fixed(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
         ).cast("long").alias("revenue_e2"),
     )
 
-ORACLE_Q62 = """
+ORACLE_Q62 = f"""
 SELECT o_orderpriority, count(*) AS n_items,
-       CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5)
-                AS BIGINT)) AS BIGINT) AS revenue_e2
+       CAST(sum({fixed_sql('l_extendedprice * (1 - l_discount)', 2)}) AS BIGINT)
+         AS revenue_e2
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 WHERE o_orderdate >= '1995-03-01' AND o_orderdate < '1995-06-01'
 GROUP BY o_orderpriority
@@ -581,23 +550,20 @@ def q73_rolling_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_custkey",
         es.alias("es"),
-        F.floor(F.sum("o_totalprice").over(w) * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("rolling_7d_e2"),
+        fixed(F.sum("o_totalprice").over(w), 2).alias("rolling_7d_e2"),
     )
 
-ORACLE_Q73 = """
+ORACLE_Q73 = f"""
 WITH t AS (
   SELECT o_orderkey, o_custkey, o_totalprice,
          CAST(floor(epoch(o_orderdate)) AS BIGINT) AS es
   FROM orders
 )
 SELECT o_orderkey, o_custkey, es,
-       CAST(floor(sum(o_totalprice) OVER (
-         PARTITION BY o_custkey ORDER BY es
-         RANGE BETWEEN 518400 PRECEDING AND CURRENT ROW
-       ) * 100 + 0.5) AS BIGINT) AS rolling_7d_e2
+       {fixed_sql('sum(o_totalprice) OVER w', 2)} AS rolling_7d_e2
 FROM t
+WINDOW w AS (PARTITION BY o_custkey ORDER BY es
+             RANGE BETWEEN 518400 PRECEDING AND CURRENT ROW)
 """
 
 def q103_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -725,9 +691,7 @@ def q105_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads instead of raw means."""
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("price_e2"),
+        fixed("o_totalprice", 2).alias("price_e2"),
     )
     pcts = o.groupBy("o_orderpriority").agg(
         F.expr("percentile(price_e2, 0.05)").alias("_p05"),
@@ -749,10 +713,9 @@ def q105_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("_w").cast("long").alias("winsorized_sum_e2"),
     )
 
-ORACLE_Q105 = """
+ORACLE_Q105 = f"""
 WITH o AS (
-  SELECT o_orderpriority,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS price_e2
+  SELECT o_orderpriority, {fixed_sql('o_totalprice', 2)} AS price_e2
   FROM orders
 ), pcts AS (
   SELECT o_orderpriority,

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from foresttime_builder_spark.functions.encoding import hash60_sql
 from foresttime_builder_spark.sources import load_table
 from foresttime_builder_spark.plans.queries._shared import QuerySpec
 
@@ -75,13 +76,12 @@ def q57_source_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = quota_sample(d.select("doc_id", "source"), quotas)
     return out.select("doc_id", "source", "sample_rank", "quota")
 
-ORACLE_Q57 = """
+ORACLE_Q57 = f"""
 WITH ranked AS (
   SELECT doc_id, source,
          row_number() OVER (
            PARTITION BY source
-           ORDER BY CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                         AS BIGINT) ASC, doc_id ASC
+           ORDER BY {hash60_sql('CAST(doc_id AS VARCHAR)')} ASC, doc_id ASC
          ) AS sample_rank
   FROM documents
   WHERE doc_id IS NOT NULL
@@ -140,7 +140,7 @@ def q74_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("doc_id").alias("drawn_id_sum"),
     )
 
-ORACLE_Q74 = """
+ORACLE_Q74 = f"""
 WITH c AS (
   SELECT source, count(*) AS n_docs FROM documents GROUP BY source
 ), w AS (
@@ -157,8 +157,7 @@ WITH c AS (
   SELECT doc_id, source,
          row_number() OVER (
            PARTITION BY source
-           ORDER BY CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                         AS BIGINT) ASC, doc_id ASC
+           ORDER BY {hash60_sql('CAST(doc_id AS VARCHAR)')} ASC, doc_id ASC
          ) AS sample_rank
   FROM documents
   WHERE doc_id IS NOT NULL

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
 from foresttime_builder_spark.sources import load_table
 from foresttime_builder_spark.plans.queries._shared import QuerySpec
 
@@ -38,12 +39,10 @@ def q68_batch_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias(
             "duration_s"
         ),
-        F.floor(F.sum("value") * 10000 + F.lit(0.5)).cast("long").alias(
-            "total_value_e4"
-        ),
+        fixed(F.sum("value"), 4).alias("total_value_e4"),
     )
 
-ORACLE_Q68 = """
+ORACLE_Q68 = f"""
 WITH secs AS (
   -- per-event truncation to whole epoch seconds BEFORE any difference,
   -- mirroring Spark's cast(timestamp as long) exactly (epoch() alone keeps
@@ -66,7 +65,7 @@ WITH secs AS (
 )
 SELECT user_id, session_id, count(*) AS n_events,
        max(es) - min(es) AS duration_s,
-       CAST(floor(sum(value) * 10000 + 0.5) AS BIGINT) AS total_value_e4
+       {fixed_sql('sum(value)', 4)} AS total_value_e4
 FROM numbered GROUP BY user_id, session_id
 """
 

@@ -2,13 +2,17 @@
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from foresttime_builder_spark.functions.encoding import (
+    fixed,
+    fixed_sql,
+    hash60,
+    hash60_sql,
+)
 from foresttime_builder_spark.sources import load_table
 
-from foresttime_builder_spark.operators.dedup import hash60
 from foresttime_builder_spark.plans.queries.sampling import ORACLE_Q57
 from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
     QuerySpec,
-    _HASH60_SQL,
     _PII_SUFFIX_SQL,
     _URL_SQL,
     _pii_suffix_spark,
@@ -27,25 +31,24 @@ def q13_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         n_tok.alias("n_tokens"),
-        F.floor(F.length("text") / n_tok * 10000 + F.lit(0.5)).cast("long").alias(
-            "mean_tok_len_e4"
-        ),
-        F.floor(
-            F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
-            / n_tok * 10000 + F.lit(0.5)
-        ).cast("long").alias("stopword_ratio_e4"),
+        fixed(F.length("text") / n_tok, 4).alias("mean_tok_len_e4"),
+        fixed(
+            F.size(F.filter(toks, lambda t: F.array_contains(stop, t))) / n_tok, 4
+        ).alias("stopword_ratio_e4"),
         (n_stop > 0).alias("has_stopword"),
     )
 
-ORACLE_Q13 = """
+ORACLE_Q13 = f"""
 SELECT doc_id,
        len(string_split(text, ' ')) AS n_tokens,
-       CAST(floor(length(text) / len(string_split(text, ' ')) * 10000 + 0.5)
-            AS BIGINT) AS mean_tok_len_e4,
-       CAST(floor(len(list_filter(string_split(text, ' '),
-                                  t -> list_contains(['the','a','of','and','to'], t)))
-                  / len(string_split(text, ' ')) * 10000 + 0.5) AS BIGINT)
-         AS stopword_ratio_e4,
+       {fixed_sql("length(text) / len(string_split(text, ' '))", 4)}
+         AS mean_tok_len_e4,
+       {fixed_sql(
+           "len(list_filter(string_split(text, ' '),"
+           " t -> list_contains(['the','a','of','and','to'], t)))"
+           " / len(string_split(text, ' '))",
+           4,
+       )} AS stopword_ratio_e4,
        len(list_intersect(string_split(text, ' '),
                           ['the','a','of','and','to'])) > 0 AS has_stopword
 FROM documents
@@ -82,8 +85,8 @@ def q15_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_Q15 = f"""
 SELECT doc_id,
-       min({_HASH60_SQL.format(x='token')}) AS min_token_hash,
-       max({_HASH60_SQL.format(x='token')}) AS max_token_hash,
+       min({hash60_sql('token')}) AS min_token_hash,
+       max({hash60_sql('token')}) AS max_token_hash,
        count(*) AS n_tokens
 FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents) t
 GROUP BY doc_id

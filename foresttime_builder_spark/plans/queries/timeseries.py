@@ -8,6 +8,7 @@ from foresttime_builder_spark.operators import (
     linear_interpolate,
     step_interpolate,
 )
+from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
 from foresttime_builder_spark.sources import load_table
 
 from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
@@ -24,14 +25,14 @@ def q07_expand_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return expand_grid(panel, ["custkey"], "year").select(
         "custkey",
         "year",
-        F.floor(F.col("val") * 10000 + F.lit(0.5)).cast("long").alias("val_e4"),
+        fixed("val", 4).alias("val_e4"),
         "interpolated",
     )
 
 ORACLE_Q07 = f"""
 WITH {_GRID_SQL}
 SELECT custkey, year,
-       CAST(floor(val * 10000 + 0.5) AS BIGINT) AS val_e4, interpolated
+       {fixed_sql('val', 4)} AS val_e4, interpolated
 FROM joined
 """
 
@@ -43,26 +44,13 @@ def q08_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "custkey",
         "year",
-        F.floor(F.col("val") * 10000 + F.lit(0.5)).cast("long").alias("val_e4"),
+        fixed("val", 4).alias("val_e4"),
         "interpolated",
     )
 
-ORACLE_Q08 = f"""
-WITH {_GRID_SQL},
-kn AS (
-  -- per-group sorted known-point array: the same formulation the Spark
-  -- operator uses (collect_list of (x, y) structs), so every branch —
-  -- including the EXTRAPOLATION arms the old window-only twin lacked
-  -- (caught by the fuzz sweep: trailing NULL measurements never occur in
-  -- the clean panel, so the gate had never exercised them) — is the
-  -- identical array arithmetic
-  SELECT custkey,
-         list(struct_pack(x := CAST(year AS DOUBLE), y := val)
-              ORDER BY year) AS k
-  FROM joined WHERE val IS NOT NULL GROUP BY custkey
-)
-SELECT j.custkey, j.year,
-  CAST(floor((CASE
+#: The q08 oracle's interpolated value of a grid row ``j`` from its group's
+#: known-point array ``k``.
+_INTERP_SQL = """CASE
     WHEN j.val IS NOT NULL THEN j.val
     WHEN k IS NULL OR len(k) = 0 THEN NULL
     WHEN len(k) = 1
@@ -80,7 +68,24 @@ SELECT j.custkey, j.year,
            * (j.year - k[-1].x)
     ELSE k[1].y + (k[1].y - k[2].y) / (k[1].x - k[2].x)
          * (j.year - k[1].x)
-    END) * 10000 + 0.5) AS BIGINT) AS val_e4,
+    END"""
+
+ORACLE_Q08 = f"""
+WITH {_GRID_SQL},
+kn AS (
+  -- per-group sorted known-point array: the same formulation the Spark
+  -- operator uses (collect_list of (x, y) structs), so every branch —
+  -- including the EXTRAPOLATION arms the old window-only twin lacked
+  -- (caught by the fuzz sweep: trailing NULL measurements never occur in
+  -- the clean panel, so the gate had never exercised them) — is the
+  -- identical array arithmetic
+  SELECT custkey,
+         list(struct_pack(x := CAST(year AS DOUBLE), y := val)
+              ORDER BY year) AS k
+  FROM joined WHERE val IS NOT NULL GROUP BY custkey
+)
+SELECT j.custkey, j.year,
+  {fixed_sql(_INTERP_SQL, 4)} AS val_e4,
   j.interpolated
 FROM joined j LEFT JOIN kn USING (custkey)
 """

@@ -26,11 +26,13 @@ non-matching).
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
 from foresttime_builder_spark.plans.carbon_on_synthetic import carbon_cte
 from foresttime_builder_spark.plans.state_pipeline import run_states
 from foresttime_builder_spark.sources import fixture_state
@@ -96,22 +98,9 @@ _OUT_DOUBLES = ("DIA", "HT", "ACTUALHT", "CULL", "CR", "TPA_UNADJ")
 _OUT_INTS = ("STATUSCD", "STANDING_DEAD_CD", "DECAYCD")
 
 
-def _nan_e4(col) -> F.Column:
-    """Fixed-point emission for the cross-engine hash gate: 1e-4 units as a
-    BIGINT (NaN → null).  A rounded double's nearest-binary representation
-    can sit a hair *below* the decimal value, which the boundary-risk check
-    rightly flags as hash-flap hazard; an integer has no representation
-    error, so the gate hashes exactly."""
-    scaled = F.floor(col * 10000 + F.lit(0.5)).cast("long")
-    return F.when(F.isnan(col), None).otherwise(scaled)
-
-
-def _sql_e4(x: str) -> str:
-    """DuckDB twin of :func:`_nan_e4` (same IEEE ops, same fixed point)."""
-    return (
-        f"CASE WHEN isnan({x}) THEN NULL"
-        f" ELSE CAST(floor({x} * 10000 + 0.5) AS BIGINT) END"
-    )
+#: The gate's 4-decimal SQL emission; perfbench/checks.py builds its DuckDB
+#: twin checksums with it.
+_sql_e4 = functools.partial(fixed_sql, n=4)
 
 
 def state_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -135,10 +124,10 @@ def state_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tree_ID",
             F.col("YEAR").cast("int").alias("year"),
             "interpolated",
-            *[_nan_e4(F.col(c)).alias(c.lower() + "_e4") for c in _OUT_DOUBLES],
+            *[fixed(c, 4).alias(c.lower() + "_e4") for c in _OUT_DOUBLES],
             *[F.col(c).cast("int").alias(c.lower()) for c in _OUT_INTS],
-            _nan_e4(F.col("DRYBIO_AG")).alias("drybio_ag_e4"),
-            _nan_e4(F.col("CARBON_AG")).alias("carbon_ag_e4"),
+            fixed("DRYBIO_AG", 4).alias("drybio_ag_e4"),
+            fixed("CARBON_AG", 4).alias("carbon_ag_e4"),
         ]
         frames.append(df.select(*sel))
     return frames[0].unionByName(frames[1])
@@ -150,13 +139,14 @@ def _variant_sql(use_mortyr: bool) -> str:
     chain = carbon_cte(
         panel_sql=panel_sql, jcase=fixture_state.JCASE, use_mortyr=use_mortyr
     )
-    e4 = _sql_e4
     # columns come from the chain's `prep` stage, not `final`: the pipeline's
     # parquet carries prep_carbon's view of the panel (live trees get
     # STANDING_DEAD_CD/DECAYCD = 0, CULL nulls coalesced to 0 —
     # R/prep_carbon.R:62-90), exactly like the reference's
     # left_join(data_prepped, estimates) output contract
-    doubles = ",\n  ".join(f"{e4('f.' + c)} AS {c.lower()}_e4" for c in _OUT_DOUBLES)
+    doubles = ",\n  ".join(
+        f"{fixed_sql('f.' + c, 4)} AS {c.lower()}_e4" for c in _OUT_DOUBLES
+    )
     ints = ",\n  ".join(f"CAST(f.{c} AS INT) AS {c.lower()}" for c in _OUT_INTS)
     variant = "mortyr" if use_mortyr else "midpt"
     return f"""SELECT '{variant}' AS variant, sub.* FROM (
@@ -164,8 +154,8 @@ WITH {chain}
 SELECT f.plot_ID, f.tree_ID, CAST(f.YEAR AS INT) AS year, f.interpolated,
   {doubles},
   {ints},
-  {e4('c.BIOMASS')} AS drybio_ag_e4,
-  {e4('c.CARBON')} AS carbon_ag_e4
+  {fixed_sql('c.BIOMASS', 4)} AS drybio_ag_e4,
+  {fixed_sql('c.CARBON', 4)} AS carbon_ag_e4
 FROM prep f
 LEFT JOIN carbonout c
   ON f.plot_ID = c.plot_ID AND f.tree_ID = c.tree_ID AND f.YEAR = c.YEAR

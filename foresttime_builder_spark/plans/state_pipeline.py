@@ -28,7 +28,6 @@ def run_states(
     db: dict[str, DataFrame],
     out_dir: str,
     estimate: bool = True,
-    partition_by: str = "STATECD",
 ) -> dict[str, str]:
     """Write ``annualized_midpt`` and ``annualized_mortyr`` parquet datasets
     (the reference's ``{state}_midpt.parquet`` / ``{state}_mortyr.parquet``
@@ -61,16 +60,13 @@ def run_states(
             both = carbon.estimate_carbon(carbon.prep_carbon(both))
 
         # recover STATECD from the composite plot key for partitioning
-        if partition_by == "STATECD" and "STATECD" not in both.columns:
+        if "STATECD" not in both.columns:
             both = both.withColumn(
                 "STATECD",
                 F.split(F.col("plot_ID"), "_").getItem(0).cast("int"),
             )
-        part_cols = ["variant"] + (
-            [partition_by] if partition_by in both.columns else []
-        )
         root = os.path.join(out_dir, "annualized")
-        both.write.mode("overwrite").partitionBy(*part_cols).parquet(root)
+        both.write.mode("overwrite").partitionBy("variant", "STATECD").parquet(root)
     finally:
         # the returned paths read the PARQUET, so nothing lazy still needs
         # the panel — release it, on error too, or a long-lived session

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
 from foresttime_builder_spark.plans.queries._shared import QuerySpec
 from foresttime_builder_spark.streaming import (
     purchase_attribution,
@@ -23,19 +24,8 @@ from foresttime_builder_spark.streaming import (
 
 SESSION_GAP = "36 hours"
 
-
-def _e4(col) -> F.Column:
-    """Fixed-point gate emission: 1e-4 units as BIGINT.  The operators
-    already round their value sums to 4 decimals; scaling the rounded double
-    (which is within ~1e-12 of k/1e4) recovers k exactly, and an integer
-    column can never sit near a float rounding boundary, so the cross-engine
-    hash is exact."""
-    return F.floor(F.col(col) * 10000 + F.lit(0.5)).cast("long")
-
-
-#: DuckDB twin of :func:`_e4` applied to a 4-rounded expression
-def _sql_e4(x: str) -> str:
-    return f"CAST(floor(round({x}, 4) * 10000 + 0.5) AS BIGINT)"
+# The streaming operators round value sums to 4 decimals, so each oracle
+# rounds the same way before the fixed-point emission.
 
 
 def q29_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,7 +37,7 @@ def q29_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("window_start").cast("long").alias("window_start"),
         "event_type",
         "n_events",
-        _e4("total_value").alias("total_value_e4"),
+        fixed("total_value", 4).alias("total_value_e4"),
     )
 
 
@@ -55,7 +45,7 @@ ORACLE_STREAM_ROLLUP = f"""
 SELECT CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT)
          AS window_start,
        event_type, count(*) AS n_events,
-       {_sql_e4('sum(value)')} AS total_value_e4
+       {fixed_sql('round(sum(value), 4)', 4)} AS total_value_e4
 FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
 """
 
@@ -71,7 +61,7 @@ def q30_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("session_end").cast("long").alias("session_end"),
         "user_id",
         "n_events",
-        _e4("session_value").alias("session_value_e4"),
+        fixed("session_value", 4).alias("session_value_e4"),
     )
 
 
@@ -97,7 +87,7 @@ g AS (
 SELECT CAST(floor(epoch(min(ts))) AS BIGINT) AS session_start,
        CAST(floor(epoch(max(ts) + INTERVAL 36 HOURS)) AS BIGINT) AS session_end,
        user_id, count(*) AS n_events,
-       {_sql_e4('sum(value)')} AS session_value_e4
+       {fixed_sql('round(sum(value), 4)', 4)} AS session_value_e4
 FROM g GROUP BY user_id, sid
 """
 
@@ -113,11 +103,12 @@ def q31_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = out.groupBy("user_id").agg(
         F.max_by("total", "n").alias("total"), F.max("n").alias("n")
     )
-    return agg.select("user_id", _e4("total").alias("total_e4"), "n")
+    return agg.select("user_id", fixed("total", 4).alias("total_e4"), "n")
 
 
 ORACLE_STREAM_STATEFUL = f"""
-SELECT user_id, {_sql_e4('sum(coalesce(value, 0.0))')} AS total_e4, count(*) AS n
+SELECT user_id, {fixed_sql('round(sum(coalesce(value, 0.0)), 4)', 4)} AS total_e4,
+       count(*) AS n
 FROM events GROUP BY 1
 """
 
@@ -190,12 +181,12 @@ def q96_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "event_type",
-        _e4("value").alias("value_e4"),
+        fixed("value", 4).alias("value_e4"),
     )
 
 
 ORACLE_STREAM_DEDUP = f"""
-SELECT event_id, user_id, event_type, {_sql_e4('value')} AS value_e4
+SELECT event_id, user_id, event_type, {fixed_sql('round(value, 4)', 4)} AS value_e4
 FROM events WHERE event_id IS NOT NULL
 """
 

@@ -68,14 +68,3 @@ def co_bucketed_join(
     bucket counts Catalyst plans this without any Exchange."""
     left, right = spark.table(left_name), spark.table(right_name)
     return left.join(right, on=left[left_on] == right[right_on], how=how)
-
-
-def exchange_count(df: DataFrame) -> int:
-    """Number of shuffle Exchange operators in the physical plan (broadcast
-    exchanges excluded — those are the cheap kind)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return sum(
-        1
-        for line in plan.splitlines()
-        if "Exchange" in line and "BroadcastExchange" not in line
-    )

@@ -21,6 +21,8 @@ import hashlib
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from foresttime_builder_spark.functions.encoding import hash60_sql
+
 __all__ = [
     "SyntheticDocsDataSource",
     "register_synthetic_source",
@@ -82,10 +84,7 @@ def register_synthetic_source(spark) -> None:
 
 def synthetic_docs_oracle_sql(n_rows: int) -> str:
     """DuckDB twin: the identical md5-derived rows from generate_series."""
-    h = (
-        "CAST(('0x' || substr(md5('syn:' || CAST(i AS VARCHAR)), 1, 15)) "
-        "AS BIGINT)"
-    )
+    h = hash60_sql("'syn:' || CAST(i AS VARCHAR)")
     langs = ", ".join(f"'{l}'" for l in _LANGS)
     return f"""
 SELECT i AS doc_id,

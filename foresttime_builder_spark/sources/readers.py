@@ -16,6 +16,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from foresttime_builder_spark.sources.ref_tables import cached
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -50,19 +52,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     re-reads a path it has WRITTEN (q51's sink read-back, streaming
     sinks) goes through ``spark.read`` directly, never this cache."""
     path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
-    cache = getattr(spark, "_ftb_table_cache", None)
-    if cache is None:
-        cache = {}
-        spark._ftb_table_cache = cache
-    df = cache.get(path)
-    if df is not None:
+
+    def build() -> DataFrame:
+        df = spark.read.parquet(path)
+        for c in _TS_COLS.get(name, ()):
+            if c in df.columns and isinstance(df.schema[c].dataType, T.LongType):
+                df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
         return df
-    df = spark.read.parquet(path)
-    for c in _TS_COLS.get(name, ()):
-        if c in df.columns and isinstance(df.schema[c].dataType, T.LongType):
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    cache[path] = df
-    return df
+
+    return cached(spark, path, build)
 
 
 def load_tables(

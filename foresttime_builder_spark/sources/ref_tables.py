@@ -16,9 +16,12 @@ _RES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 
 
 def cached(spark: SparkSession, key: str, build) -> DataFrame:
-    """Per-session memo for the tiny broadcast dims: building them is pure
-    driver-side work, so repeated plan builds (q26/q27/q28 each rebuild the
-    whole chain) should pay it once per session."""
+    """Per-session memo of ``build()`` under ``key``, hung off the session
+    object (it dies with the session).  The tiny broadcast dims use it —
+    building them is pure driver-side work, so repeated plan builds
+    (q26/q27/q28 each rebuild the whole chain) pay it once per session —
+    and so does :func:`~foresttime_builder_spark.sources.readers.load_table`,
+    keyed on the table's absolute path."""
     cache = getattr(spark, "_ft_ref_cache", None)
     if cache is None:
         cache = {}

@@ -7,16 +7,26 @@ import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from foresttime_builder_spark.sources.bucketing import (
     co_bucketed_join,
-    exchange_count,
     write_bucketed,
 )
 from foresttime_builder_spark.sources.readers import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def exchange_count(df: DataFrame) -> int:
+    """Number of shuffle Exchange operators in the physical plan (broadcast
+    exchanges excluded — those are the cheap kind)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sum(
+        1
+        for line in plan.splitlines()
+        if "Exchange" in line and "BroadcastExchange" not in line
+    )
 
 
 @pytest.fixture(scope="module")

@@ -3,8 +3,9 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
+from foresttime_builder_spark.functions.encoding import hash60
 from foresttime_builder_spark.operators.sampling import split_assign
 from foresttime_builder_spark.operators.text import top_token_ngrams
 
@@ -412,6 +413,53 @@ def test_tfidf_signature_terms_ranks_distinctive_terms(spark):
     assert out[("s3", 1)][0] == "go"
 
 
+def _winnow_fingerprint_hof(
+    df: DataFrame, id_col: str, text_col: str, k: int = 8, w: int = 4
+) -> DataFrame:
+    """The pre-r12 array-HOF form of ``winnow_fingerprint``, kept as its
+    differential twin: both transform() lambdas run interpreted
+    (CodegenFallback) and the slice window-min is O(n·w) per document —
+    measured 144.8 s at sf10 vs the exploded form's window plan."""
+    text = F.coalesce(F.col(text_col), F.lit(""))
+    n_grams = F.greatest(F.length(text) - F.lit(k - 1), F.lit(0))
+    empty = F.expr("CAST(array() AS array<bigint>)")
+    # materialize each array stage as a column: expressions inside lambdas are
+    # NOT common-subexpression-eliminated across elements, so referencing the
+    # gram array directly in the window lambda would recompute every k-gram
+    # hash per window (O(n^2) md5 calls per document)
+    staged = df.withColumn(
+        "_wf_grams",
+        F.when(
+            n_grams >= 1,
+            F.transform(
+                F.sequence(F.lit(1), n_grams),
+                lambda p: hash60(text.substr(p, F.lit(k))),
+            ),
+        ).otherwise(empty),
+    )
+    grams = F.col("_wf_grams")
+    n_windows = F.greatest(F.size(grams) - F.lit(w - 1), F.lit(0))
+    staged = staged.withColumn(
+        "_wf_fps",
+        F.array_distinct(
+            F.when(
+                n_windows >= 1,
+                F.transform(
+                    F.sequence(F.lit(1), n_windows),
+                    lambda i: F.array_min(F.slice(grams, i, w)),
+                ),
+            ).otherwise(empty)
+        ),
+    )
+    fps = F.col("_wf_fps")
+    return staged.select(
+        F.col(id_col),
+        F.size(fps).alias("n_fingerprints"),
+        F.array_min(fps).alias("min_fp"),
+        F.array_max(fps).alias("max_fp"),
+    )
+
+
 def test_winnow_fingerprint_matches_hof_twin_on_edge_cases(spark):
     """The r12 exploded-window winnowing must equal the pre-r12 array-HOF
     form row-for-row on the adversarial corners the fuzz corpora carry:
@@ -419,10 +467,7 @@ def test_winnow_fingerprint_matches_hof_twin_on_edge_cases(spark):
     row fingerprints its own text; grouping by id would merge the NULL-id
     documents), and the k/w boundary lengths (len < k: zero grams;
     k <= len < k+w-1: grams but zero windows)."""
-    from foresttime_builder_spark.operators.text import (
-        _winnow_fingerprint_hof,
-        winnow_fingerprint,
-    )
+    from foresttime_builder_spark.operators.text import winnow_fingerprint
 
     rows = [
         (1, None),                      # NULL text -> 0 fps, NULL min/max

@@ -14,12 +14,18 @@ The same walk rejects the ``inferSchema`` reader option: inference is a
 full extra scan per table whose column types drift with the data.  The
 FIA tables read under the declared
 :data:`foresttime_builder_spark.sources.fia.FIA_TYPES` contract.
+
+It also rejects inline spellings of the cross-engine value encoding
+(``*_eN`` fixed point and the md5 60-bit hash) outside
+:mod:`foresttime_builder_spark.functions.encoding`: copies drift apart,
+as the unguarded NaN → 0 (Spark) vs cast error (DuckDB) copies did.
 """
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 
 import foresttime_builder_spark
 
@@ -84,4 +90,73 @@ def test_no_package_module_infers_a_schema():
     assert not offenders, (
         "inferSchema scans the data an extra time and its types drift; "
         f"declare the column types instead: {offenders}"
+    )
+
+
+_ENCODING_MODULE = os.path.join("functions", "encoding.py")
+_INLINE_ENCODING_SQL = [
+    re.compile(r"\+\s*0\.5\s*\)\s*AS\s+BIGINT", re.I),
+    re.compile(r"substr\(\s*md5\(.*?,\s*1\s*,\s*15\s*\)", re.I | re.S),
+    re.compile(r"conv\(\s*substring\(\s*md5\(", re.I),
+]
+
+
+def _string_text(node):
+    """The literal text of a string constant or f-string (each
+    interpolation as ``{}``); ``None`` for any other node."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    if isinstance(node, ast.JoinedStr):
+        return "".join(
+            v.value if isinstance(v, ast.Constant) else "{}" for v in node.values
+        )
+    return None
+
+
+def _is_f_call(node, name: str) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == name
+    )
+
+
+def _is_half(node) -> bool:
+    if _is_f_call(node, "lit") and node.args:
+        node = node.args[0]
+    return isinstance(node, ast.Constant) and node.value == 0.5
+
+
+def _is_fixed_point_column(node) -> bool:
+    """``F.floor(... + F.lit(0.5)).cast("long")``."""
+    if not (
+        _is_f_call(node, "cast")
+        and node.args
+        and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value in ("long", "bigint")
+    ):
+        return False
+    floor = node.func.value
+    return (
+        _is_f_call(floor, "floor")
+        and len(floor.args) == 1
+        and isinstance(floor.args[0], ast.BinOp)
+        and isinstance(floor.args[0].op, ast.Add)
+        and _is_half(floor.args[0].right)
+    )
+
+
+def test_no_package_module_spells_the_value_encoding_inline():
+    offenders = set()
+    for path, node in package_nodes():
+        if path == _ENCODING_MODULE:
+            continue
+        text = _string_text(node)
+        if text is not None and any(p.search(text) for p in _INLINE_ENCODING_SQL):
+            offenders.add(f"{path}:{node.lineno}")
+        elif _is_fixed_point_column(node):
+            offenders.add(f"{path}:{node.lineno}")
+    assert not offenders, (
+        "emit gate values with functions.encoding.fixed/fixed_sql and "
+        f"hash60/hash60_sql, not an inline copy: {sorted(offenders)}"
     )

@@ -176,25 +176,6 @@ def test_expand_grid(spark):
     ]
 
 
-def test_expand_grid_step2(spark):
-    """step != 1 keeps the two-sided grid-join form: off-lattice original
-    rows must NOT survive (they never matched a grid row), on-lattice rows
-    keep values, missing lattice points appear all-NULL + flagged (r15
-    verdict: the branch had no caller and no test)."""
-    rows = [
-        Row(g="t1", x=2001, y=1.0),
-        Row(g="t1", x=2004, y=4.0),  # off the 2001+2k lattice -> vanishes
-        Row(g="t1", x=2005, y=5.0),
-    ]
-    df = spark.createDataFrame(rows, schema="g string, x int, y double")
-    out = expand_grid(df, ["g"], "x", step=2).orderBy("g", "x").collect()
-    assert [(r["g"], r["x"], r["y"], r["interpolated"]) for r in out] == [
-        ("t1", 2001, 1.0, False),
-        ("t1", 2003, None, True),
-        ("t1", 2005, 5.0, False),
-    ]
-
-
 def test_fill_gaps_directions(spark):
     df = _series(spark, [None, 5.0, None, 7.0, None])
     assert _col(fill_gaps(df, ["g"], "x", ["y"], "down")) == [None, 5.0, 5.0, 7.0, 7.0]
