@@ -208,14 +208,16 @@ def q23_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs,
     )
 
-def _minhash_lsh_oracle(
-    n_hashes: int = _MH_N, band_size: int = _MH_BAND, threshold: float = 0.5
-) -> str:
+def _minhash_band_sql(n_hashes: int, band_size: int) -> tuple[str, str, str]:
+    """The DuckDB MinHash blocks the LSH oracles share: ``mins`` (one
+    ``min(hash60)`` signature column ``mh_NN`` per hash over ``token``),
+    ``bands`` (one md5 key ``band_B`` per ``band_size`` signature columns)
+    and ``band_list`` (the band column names)."""
+    n_bands = n_hashes // band_size
     mins = ",\n         ".join(
         f"min({hash60_sql(repr(str(i) + '|') + ' || token')}) AS mh_{i:02d}"
         for i in range(n_hashes)
     )
-    n_bands = n_hashes // band_size
     bands = ",\n         ".join(
         "md5(concat_ws('|', '{b}', {cols})) AS band_{b}".format(
             b=b,
@@ -227,6 +229,12 @@ def _minhash_lsh_oracle(
         for b in range(n_bands)
     )
     band_list = ", ".join(f"band_{b}" for b in range(n_bands))
+    return mins, bands, band_list
+
+def _minhash_lsh_oracle(
+    n_hashes: int = _MH_N, band_size: int = _MH_BAND, threshold: float = 0.5
+) -> str:
+    mins, bands, band_list = _minhash_band_sql(n_hashes, band_size)
     return f"""
 WITH tok AS (
   SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
@@ -573,22 +581,7 @@ def q90_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _incremental_dedup_oracle(
     n_hashes: int = 16, band_size: int = 4, threshold: float = 0.5
 ) -> str:
-    n_bands = n_hashes // band_size
-    mins = ",\n         ".join(
-        f"min({hash60_sql(repr(str(i) + '|') + ' || token')}) AS mh_{i:02d}"
-        for i in range(n_hashes)
-    )
-    bands = ",\n         ".join(
-        "md5(concat_ws('|', '{b}', {cols})) AS band_{b}".format(
-            b=b,
-            cols=", ".join(
-                f"CAST(mh_{b * band_size + j:02d} AS VARCHAR)"
-                for j in range(band_size)
-            ),
-        )
-        for b in range(n_bands)
-    )
-    band_list = ", ".join(f"band_{b}" for b in range(n_bands))
+    mins, bands, band_list = _minhash_band_sql(n_hashes, band_size)
 
     def _stack(src: str) -> str:
         return f"""(
@@ -767,22 +760,7 @@ def _lsh_representatives_oracle(
         from foresttime_builder_spark.operators.graph import MAX_ITER_DEFAULT
 
         rounds = MAX_ITER_DEFAULT
-    mins = ",\n         ".join(
-        f"min({hash60_sql(repr(str(i) + '|') + ' || token')}) AS mh_{i:02d}"
-        for i in range(n_hashes)
-    )
-    n_bands = n_hashes // band_size
-    bands = ",\n         ".join(
-        "md5(concat_ws('|', '{b}', {cols})) AS band_{b}".format(
-            b=b,
-            cols=", ".join(
-                f"CAST(mh_{b * band_size + j:02d} AS VARCHAR)"
-                for j in range(band_size)
-            ),
-        )
-        for b in range(n_bands)
-    )
-    band_list = ", ".join(f"band_{b}" for b in range(n_bands))
+    mins, bands, band_list = _minhash_band_sql(n_hashes, band_size)
     layers = []
     for i in range(rounds):
         layers.append(

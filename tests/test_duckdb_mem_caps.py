@@ -1,0 +1,31 @@
+"""Spark-free checks of the DuckDB memory caps the correctness gate sizes
+from the host (``tools/check_correctness.py``)."""
+
+from __future__ import annotations
+
+import pytest
+
+from tools.check_correctness import duckdb_mem_caps
+
+GIB = 1 << 30
+
+
+@pytest.mark.parametrize(
+    "phys, override, caps",
+    [
+        (15 * GIB, None, ("9216MiB", "6912MiB")),
+        (64 * GIB, None, ("39321MiB", "29491MiB")),
+        (15 * GIB, "8GB", ("8GB", "8GB")),
+        (15 * GIB, "", ("9216MiB", "6912MiB")),
+    ],
+)
+def test_caps_follow_physical_memory_unless_overridden(phys, override, caps):
+    assert duckdb_mem_caps(phys, override) == caps
+
+
+def test_caps_fit_the_host_and_the_largest_twin():
+    """Both caps stay under physical memory, the retry below the first
+    cap, and on a 15 GiB host both exceed the 4 GiB q52's NSVB twin ran
+    out of on clean sf0.01."""
+    cap, retry = (int(c.removesuffix("MiB")) << 20 for c in duckdb_mem_caps(15 * GIB))
+    assert 4 * GIB < retry < cap < 15 * GIB

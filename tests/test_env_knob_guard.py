@@ -18,6 +18,10 @@ DEPLOYMENT_SETTINGS = {
     "SPARK_GRAFT_SF_DIR",
     "SPARK_DRIVER_MEMORY",
     "SPARK_LOCAL_DIRS",
+    # read by session.py only to honour what Spark's launcher honours: the
+    # conf dir it puts on the classpath and the JVM it starts
+    "SPARK_CONF_DIR",
+    "JAVA_HOME",
 }
 
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import ast
 import importlib
+import json
 import pathlib
 import re
 
@@ -66,3 +67,13 @@ def test_merge_rejects_a_name_declared_twice():
     clash = {name: next(iter(streaming.QUERIES.values()))}
     with pytest.raises(ValueError, match=name):
         benchmark_queries._merge(fia.QUERIES, clash)
+
+
+def test_minhash_oracles_keep_their_sql_text():
+    """The LSH oracles build their MinHash signature and band blocks with
+    one helper (``dedup._minhash_band_sql``); their SQL text stays what it
+    was when each oracle spelled the blocks out itself, captured in
+    ``tests/data/minhash_oracle_sql.json``."""
+    ref = pathlib.Path(__file__).parent / "data" / "minhash_oracle_sql.json"
+    for name, sql in json.loads(ref.read_text()).items():
+        assert QUERIES[name].oracle == sql, name

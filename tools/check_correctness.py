@@ -87,6 +87,21 @@ def boundary_risk(df: pd.DataFrame, decimals: int = 6) -> int:
     return n
 
 
+def duckdb_mem_caps(phys_bytes: int, override: str | None = None) -> tuple[str, str]:
+    """DuckDB ``memory_limit`` for an oracle and for its one OOM retry.
+
+    DuckDB's own default (80% of RAM) collides with the Spark JVM's RSS and
+    dies on malloc, so the cap is 60% of physical memory, and the retry,
+    which runs after a long run's RSS has grown, 45%.  On a 15 GiB host
+    that is about 9 and 7 GiB; q52's NSVB twin needs more than 4 GiB on
+    clean sf0.01.  ``override`` (``FTB_DUCKDB_MEM``) sets both: the retry
+    never outbids an operator's ceiling."""
+    if override:
+        return override, override
+    mib = phys_bytes >> 20
+    return f"{mib * 60 // 100}MiB", f"{mib * 45 // 100}MiB"
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
@@ -101,8 +116,12 @@ def main() -> int:
     if args.only:
         keep = set(args.only.split(","))
         qs = {k: v for k, v in qs.items() if any(k.startswith(p) for p in keep)}
+    mem_cap, retry_cap = duckdb_mem_caps(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"),
+        os.environ.get("FTB_DUCKDB_MEM"),
+    )
 
-    def fresh_con(mem: str | None = None):
+    def fresh_con(mem: str):
         """One connection per query: a query that hits DuckDB's memory
         ceiling otherwise poisons the connection and every later oracle
         fails with bad-allocation too. A temp_directory lets the big
@@ -111,12 +130,7 @@ def main() -> int:
         spill = os.path.join(tempfile.gettempdir(), "ftb_duckdb_spill")
         os.makedirs(spill, exist_ok=True)
         c.execute(f"SET temp_directory='{spill}'")
-        # default (80% of RAM) collides with the Spark JVM's RSS at larger
-        # SFs and dies on malloc; an explicit cap below system headroom
-        # (but big enough for the sf0.1 NSVB twins' transients) avoids that
-        c.execute(
-            f"SET memory_limit='{mem or os.environ.get('FTB_DUCKDB_MEM', '64GB')}'"
-        )
+        c.execute(f"SET memory_limit='{mem}'")
         for t in TABLES:
             p = os.path.join(args.sf, f"{t}.parquet")
             if os.path.exists(p):
@@ -141,7 +155,7 @@ def main() -> int:
             # close on BOTH paths: an oracle OOM (the very scenario the
             # per-query connection exists for) must not leak the
             # connection's memory reservation and spill directory
-            with contextlib.closing(fresh_con()) as con:
+            with contextlib.closing(fresh_con(mem_cap)) as con:
                 odf = con.execute(oracles[name]).fetchdf()
         except Exception as ex:
             if "emory" in str(ex):
@@ -154,7 +168,7 @@ def main() -> int:
 
                 _gc.collect()
                 try:
-                    with contextlib.closing(fresh_con("48GB")) as con:
+                    with contextlib.closing(fresh_con(retry_cap)) as con:
                         odf = con.execute(oracles[name]).fetchdf()
                 except Exception as ex2:
                     print(f"FAIL {name}: oracle error (after retry): {ex2}")
