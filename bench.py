@@ -2,7 +2,8 @@
 
 Prints ONE COMPACT JSON line (< 1500 chars, asserted): {"metric": ...,
 "value": total_sec, "unit": "sec", "queries": {name: sec, ...},
-"extended": {...}, "trend_total_sec": ..., "sf": ...}.  Each per-query
+"extended": {...}, "trend_total_sec": ..., "sf": ..., "cpus": ...,
+"master": ...}.  Each per-query
 number is the MEDIAN of timed runs after a warm-up run.  Full detail
 (per-query spreads, cold timings, the median-of-5 trend block) is written
 to BENCH_detail_last.json beside this script — keeping it OFF stdout is
@@ -174,6 +175,11 @@ def main() -> None:
         },
         "runs": n_runs,
         "sf": float(sf) if sf else None,
+        # the parallelism the session took from SPARK_GRAFT_CPUS, so a
+        # scaling comparison can tell "honoured but floor-bound" from
+        # "ignored"
+        "cpus": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
     }
     # suffix with the sf so concurrent runs against different SF dirs
     # can't clobber each other's detail record; BENCH_DETAIL_PATH
@@ -197,7 +203,7 @@ def main() -> None:
     compact = {
         k: detail[k]
         for k in ("metric", "value", "unit", "queries", "extended",
-                  "extended_total_sec", "runs", "sf")
+                  "extended_total_sec", "runs", "sf", "cpus", "master")
     }
     compact["trend_total_sec"] = detail["trend"]["total_sec"]
     compact["trend_extended_total_sec"] = detail["trend"]["extended_total_sec"]
@@ -216,7 +222,7 @@ def main() -> None:
         line = json.dumps(
             {k: compact[k] for k in (
                 "metric", "value", "unit", "extended_total_sec",
-                "trend_total_sec", "runs", "sf",
+                "trend_total_sec", "runs", "sf", "cpus", "master",
             )},
             separators=(",", ":"),
         )

@@ -13,9 +13,16 @@ Scale design notes:
   All-Pairs/SSJoin prefix self-join (:func:`_prefix_candidates`), banded
   MinHash-LSH buckets (the sub-quadratic path when even prefix filtering
   is too dense), or bucket-hub star edges.  :func:`_verify_candidates`
-  then verifies exactly on the tier :func:`_verify_tier` picks.  For
+  then verifies exactly on the tier :func:`choose` picks.  For
   vocabularies of <= 64 tokens ``token_jaccard_pairs`` instead collapses
   identical token sets first (:func:`_jaccard_bitmask`).
+- Adaptive choices read facts, not probe jobs.  Each operator call makes
+  one bounded pass over its corpus (:func:`_corpus_facts`: the corpus
+  whole when it fits ``sample_docs``, else a count and a uniform sample),
+  computes the vocabulary, mean set size and projected candidate streams
+  from those rows on the driver, and asks the pure :func:`choose` for its
+  strategy, budget degrade and verify tier.  Every choice is written to
+  stderr as one ``{"event": "dedup.decision", ...}`` JSON line.
 - ``containment_pairs``: asymmetric ``|A ∩ B| / |A|`` over the
   containment prefix of the contained side.
 - ``simhash``: 60-bit SimHash per document for Hamming-distance near-dup.
@@ -23,9 +30,15 @@ Scale design notes:
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
-from collections.abc import Callable
+import sys
+from typing import NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from foresttime_builder_spark.functions.encoding import hash60
@@ -129,35 +142,155 @@ def _check_threshold(threshold: float) -> None:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
 
 
-def _sampled_pairs(
-    frame: DataFrame,
-    sample_docs: int,
-    pair_sum: Callable[[DataFrame], DataFrame],
-) -> tuple[int, int]:
-    """``(projected candidates, n_docs)`` from a uniform document sample —
-    the shared half of the ``estimate_*`` guards.
+class CorpusFacts(NamedTuple):
+    """What the pair family's adaptive choices read about a ``(doc_id,
+    toks, sz)`` corpus, gathered by one bounded pass (:func:`_corpus_facts`)."""
 
-    ``pair_sum(sample)`` returns a one-row frame whose first column is the
-    sample's candidate count.  Per-key document frequencies scale ~``p``
-    under uniform doc sampling, so pair counts (products of two
-    frequencies) scale by ``1/p^2``.  One count job plus one small job over
-    ~``sample_docs`` documents; no full-corpus shuffle."""
-    n_docs = frame.count()  # cheap: callers persist or read a scan
-    if n_docs == 0:
-        return 0, 0
-    p = min(1.0, sample_docs / n_docs)
-    sample = frame if p == 1.0 else frame.sample(fraction=p, seed=7)
-    pairs = pair_sum(sample).collect()[0][0]
-    return int(float(pairs or 0.0) / (p * p)), n_docs
+    n_docs: int
+    p: float  # the fraction of documents in ``sample``
+    vocab: list[str] | None  # sorted, None past _INTARRAYS_VOCAB_CAP tokens
+    avg_sz: float  # mean set size of the first 4096 documents
+    sample: pa.Table  # the (doc_id, toks, sz) rows the projections replay
 
 
-def _key_pairs(frame: DataFrame, key: str) -> DataFrame:
-    """``sum over key of C(n_key, 2)``: the self-join stream on ``key``."""
-    return (
-        frame.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2))
+def _corpus_facts(docsets: DataFrame, sample_docs: int = 20_000) -> CorpusFacts:
+    """One bounded pass over ``docsets`` for every fact the pair family's
+    choices read.
+
+    A corpus of at most ``sample_docs`` documents is read whole by one
+    ``limit(max(sample_docs, 4096) + 1)`` Arrow collect, a single Spark
+    job, whose first 4096 rows give ``avg_sz``.  A larger one adds a count
+    and the ``sample(p, seed=7)`` rows (``p = sample_docs / n_docs``);
+    per-key document frequencies scale ~``p`` under uniform document
+    sampling, which the projections undo.  The sample's vocabulary is a
+    lower bound on the corpus's: past the cap the answer is None,
+    otherwise a sampled corpus confirms with one bounded ``limit(cap + 1)``
+    collect of its distinct tokens, whose sorted values number the mask
+    and int tiers' dictionary.  NULL tokens are not vocabulary: the
+    dictionary join drops them."""
+    bound = max(sample_docs, 4096)
+    head = docsets.limit(bound + 1).toArrow()
+    first = head.column("sz").slice(0, 4096)
+    n_sz = len(first) - first.null_count
+    avg_sz = (pc.sum(first).as_py() or 0) / n_sz if n_sz else 0.0
+    n_docs = head.num_rows if head.num_rows <= bound else docsets.count()
+    p = min(1.0, sample_docs / n_docs) if n_docs else 1.0
+    sample = head if p == 1.0 else docsets.sample(fraction=p, seed=7).toArrow()
+    cap = _INTARRAYS_VOCAB_CAP  # read at call time, so tests can shrink it
+    words = pc.unique(pc.list_flatten(sample.column("toks"))).drop_null()
+    vocab = sorted(words.to_pylist()) if len(words) <= cap else None
+    if vocab is not None and p < 1.0:
+        rows = (
+            docsets.select(F.explode("toks").alias("token"))
+            .filter(F.col("token").isNotNull())
+            .distinct()
+            .limit(cap + 1)
+            .collect()
+        )
+        vocab = sorted(r["token"] for r in rows) if len(rows) <= cap else None
+    return CorpusFacts(n_docs, p, vocab, avg_sz, sample)
+
+
+def _sample_tokens(
+    sample: pa.Table,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, list[str]]:
+    """``(row, doc, tok, words)`` per token element of the sample's
+    non-NULL ``toks``: the element's sample row, its document code (equal
+    doc ids share one, as they share a Spark group; NULL is a code too),
+    its index into ``words`` (the distinct tokens; a NULL element gets
+    ``len(words)``), and ``words``."""
+    toks = sample.column("toks").combine_chunks()
+    row = pc.list_parent_indices(toks).to_numpy()
+    enc = pc.dictionary_encode(pc.list_flatten(toks))
+    words = enc.dictionary.to_pylist()
+    tok = enc.indices.fill_null(len(words)).to_numpy(zero_copy_only=False)
+    ids = pc.dictionary_encode(
+        sample.column("doc_id").combine_chunks(), null_encoding="encode"
+    ).indices.to_numpy(zero_copy_only=False)
+    return row, ids[row], tok.astype(np.int64), words
+
+
+def _prefix_projection(
+    facts: CorpusFacts, threshold: float, containment: bool = False
+) -> int:
+    """The prefix join's projected pre-``distinct`` candidate stream,
+    scaled from ``facts.sample`` by ``1/p^2`` (pair counts are products of
+    two frequencies).  Replays :func:`_rarest_prefix` on the sample in
+    numpy: each token element's sample document frequency ``df``, its
+    rank in its document under the global ``(df, token)`` order, and the
+    same prefix bound in the same double arithmetic.  Jaccard's stream is
+    ``sum over tokens of C(prefix_df, 2)``; containment's is ``sum over
+    prefix rows of (df - 1)``, each prefix posting joining every OTHER
+    posting of its token in the full inverted index."""
+    row, doc, tok, words = _sample_tokens(facts.sample)
+    real = tok < len(words)  # the frequency join drops NULL tokens
+    if not real.any():
+        return 0
+    row, doc, tok = row[real], doc[real], tok[real]
+    sz = facts.sample.column("sz").combine_chunks().to_numpy(
+        zero_copy_only=False
+    )[row].astype(np.float64)
+    v = len(words)
+    df = np.bincount(tok, minlength=v)
+    # each token's place in the global (df, token) order; Python orders
+    # str by code point, which is Spark's UTF-8 byte order
+    by_token = np.empty(v, np.int64)
+    by_token[sorted(range(v), key=words.__getitem__)] = np.arange(v)
+    place = np.empty(v, np.int64)
+    place[np.lexsort((by_token, df))] = np.arange(v)
+    order = np.argsort(doc * v + place[tok])
+    grouped = doc[order]
+    pos = np.arange(len(order))
+    starts = np.r_[True, grouped[1:] != grouped[:-1]]
+    rnk = np.empty(len(order), np.int64)
+    rnk[order] = pos - np.maximum.accumulate(np.where(starts, pos, 0)) + 1
+    need = (
+        np.ceil(threshold * sz - 1e-9) if containment
+        else np.ceil((threshold - 1e-4) * sz)
     )
+    kept = tok[rnk <= sz - need + 1]
+    if containment:
+        pairs = int((df[kept] - 1).sum())
+    else:
+        n = np.bincount(kept, minlength=len(words))
+        pairs = int((n * (n - 1) // 2).sum())
+    return int(float(pairs) / (facts.p * facts.p))
+
+
+def _lsh_projection(facts: CorpusFacts, n_hashes: int, band_size: int) -> int:
+    """The banded-LSH self-join's projected stream, ``sum over (band,
+    band_key) buckets of C(n_bucket, 2)`` scaled from ``facts.sample`` by
+    ``1/p^2``.  The sample's MinHash signatures are computed in numpy from
+    the same ``hash60(concat('i|', token))`` values
+    :func:`minhash_signatures` takes the min of: md5 runs once per
+    distinct sample token and hash.  A NULL token hashes to NULL, which
+    the min skips; a document of NULL tokens only has NULL minima, so its
+    band keys (``concat_ws`` skips NULLs) equal every such document's.
+
+    A CONSERVATIVE upper bound: no in-join size cut (see
+    :func:`minhash_lsh_pairs`)."""
+    _, doc, tok, words = _sample_tokens(facts.sample)
+    if not len(tok):
+        return 0
+    null = np.uint64(2**64 - 1)  # above every 60-bit hash: the min skips it
+    h = np.full((n_hashes, len(words) + 1), null, np.uint64)
+    encoded = [w.encode() for w in words]
+    for i in range(n_hashes):
+        salt = b"%d|" % i
+        digests = b"".join([hashlib.md5(salt + w).digest() for w in encoded])
+        h[i, :-1] = np.frombuffer(digests, ">u8")[::2] >> np.uint64(4)
+    order = np.argsort(doc, kind="stable")  # rows arrive grouped: O(n)
+    doc, tok = doc[order], tok[order]
+    starts = np.flatnonzero(np.r_[True, doc[1:] != doc[:-1]])
+    sig = [np.minimum.reduceat(h[i][tok], starts) for i in range(n_hashes)]
+    pairs = 0
+    for b in range(n_hashes // band_size):
+        band = sig[b * band_size:(b + 1) * band_size]
+        keys = [k[np.lexsort(band)] for k in band]
+        first = np.r_[True, np.any([k[1:] != k[:-1] for k in keys], axis=0)]
+        n = np.diff(np.r_[np.flatnonzero(first), len(first)])
+        pairs += int((n * (n - 1) // 2).sum())
+    return int(float(pairs) / (facts.p * facts.p))
 
 
 def estimate_candidate_pairs(
@@ -170,70 +303,8 @@ def estimate_candidate_pairs(
     *stream* the join shuffles — ``sum over joined tokens of
     C(df_token, 2)`` — not the verified output (at sf10 this stream hit
     ~1.25e9 rows and exceeded local disk while the gate-visible output was
-    tiny).  The estimator replays the actual prefix selection
-    (:func:`_rarest_prefix`) on the sample; see :func:`_sampled_pairs`."""
-
-    def pair_sum(sample: DataFrame) -> DataFrame:
-        tok = sample.select("doc_id", "sz", F.explode("toks").alias("token"))
-        return _key_pairs(_rarest_prefix(tok, "token", threshold), "token")
-
-    return _sampled_pairs(docsets, sample_docs, pair_sum)[0]
-
-
-def estimate_lsh_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_hashes: int,
-    band_size: int,
-    tokenizer: Column | None = None,
-    sample_docs: int = 20_000,
-) -> tuple[int, int]:
-    """``(projected candidates, n_docs)`` of the banded-LSH self-join
-    (:func:`minhash_lsh_pairs`), from a bounded document sample; ``n_docs``
-    feeds the verifier's amortization gate without a second count.
-
-    The LSH join's shuffle is ``sum over (band, band_key) buckets of
-    C(n_bucket, 2)`` — on a heavily self-similar corpus near-dup pairs
-    collide in MOST bands, so the stream approaches
-    ``n_bands × true_pairs`` and can exceed local disk even though
-    banding is "sub-quadratic" (measured: the unguarded q23 at sf10 died
-    at 176 s — ~7e9 projected candidates vs 74 GB of shuffle disk).
-
-    This is a CONSERVATIVE upper bound: it sums C(n, 2) per bucket without
-    the in-join size cut.  Upper bound is the right direction for a
-    feasibility guard, and on near-dup corpora the cut prunes little
-    (true near-dups are size-compatible by definition)."""
-    return _sampled_pairs(
-        df,
-        sample_docs,
-        lambda sample: _key_pairs(
-            _stacked_bands(
-                sample, id_col, text_col, n_hashes, band_size,
-                tokenizer=tokenizer,
-            ),
-            "band_key",
-        ),
-    )
-
-
-def estimate_containment_candidates(
-    docsets: DataFrame, threshold: float, sample_docs: int = 20_000
-) -> int:
-    """Projected pre-``distinct`` candidate volume of the containment
-    prefix⋈index join (:func:`containment_pairs`): ``sum over tokens of
-    prefix_df(token) × (df(token) - 1)`` — each prefix posting joins every
-    OTHER posting of that token in the full inverted index, i.e. ``df - 1``
-    summed over the prefix rows.  Replays the containment prefix on a
-    uniform doc sample (:func:`_sampled_pairs`)."""
-
-    def pair_sum(sample: DataFrame) -> DataFrame:
-        tok = sample.select("doc_id", "sz", F.explode("toks").alias("token"))
-        return _rarest_prefix(tok, "token", threshold, containment=True).agg(
-            F.sum(F.col("df") - 1)
-        )
-
-    return _sampled_pairs(docsets, sample_docs, pair_sum)[0]
+    tiny).  See :func:`_corpus_facts` and :func:`_prefix_projection`."""
+    return _prefix_projection(_corpus_facts(docsets, sample_docs), threshold)
 
 
 def token_jaccard_pairs(
@@ -269,18 +340,20 @@ def token_jaccard_pairs(
       positions and verifies on the ``blockmask`` tier; otherwise it keys
       on token strings and verifies on ``arrays``.
     - ``auto``: ``bitmask`` if the vocabulary fits in 64 bits else
-      ``prefix``, settled by one sample-first probe (:func:`_vocab_if_small`)
-      whose result also numbers the blockmask dictionary.
+      ``prefix``, settled by the call's one fact pass
+      (:func:`_corpus_facts`), whose vocabulary also numbers the blockmask
+      dictionary; :func:`choose` makes every choice from those facts.
 
     ``candidate_budget`` is the regime guard for the prefix path: before
-    any full-corpus shuffle, :func:`estimate_candidate_pairs` projects the
-    join's candidate stream from a doc sample; if the projection exceeds
-    the budget the operator either raises with actionable advice
-    (``on_budget='error'``) or degrades to banded MinHash-LSH candidates
-    with the same exact verification and output schema
-    (``on_budget='degrade'``: high recall instead of guaranteed-total
-    recall; ``n_hashes=16, band_size=4`` centers the collision s-curve
-    near ``(1/4)^(1/4) ~ 0.71``, matched to the default 0.8 threshold).
+    any full-corpus shuffle, :func:`_prefix_projection` projects the
+    join's candidate stream from the fact pass's document sample; if the
+    projection exceeds the budget the operator either raises with
+    actionable advice (``on_budget='error'``) or degrades to banded
+    MinHash-LSH candidates with the same exact verification and output
+    schema (``on_budget='degrade'``: high recall instead of
+    guaranteed-total recall; ``n_hashes=16, band_size=4`` centers the
+    collision s-curve near ``(1/4)^(1/4) ~ 0.71``, matched to the default
+    0.8 threshold).
     The guard never fires for ``bitmask`` (candidates are bounded by
     distinct token-SETS squared, not documents).
 
@@ -308,108 +381,56 @@ def token_jaccard_pairs(
         .persist()
     )
 
-    # auto probes first (its answer picks the strategy); a pinned prefix
-    # probes only after the budget guard, so a degrade pays no probe
-    small_vocab: list[str] | None = None
-    probed = strategy == "auto"
-    if probed:
-        small_vocab = _vocab_if_small(docsets, _BLOCKMASK_VOCAB_CAP)
-        strategy = (
-            "bitmask"
-            if small_vocab is not None and len(small_vocab) <= 64
-            else "prefix"
+    facts = _corpus_facts(docsets)
+    projected = (
+        None if candidate_budget is None else _prefix_projection(facts, threshold)
+    )
+    d = _decide(
+        "token_jaccard_pairs", facts, projected, pin=strategy,
+        budget=candidate_budget, on_budget=on_budget,
+    )
+    if d.choice in ("error", "degrade"):
+        docsets.unpersist()
+    if d.choice == "error":
+        raise ValueError(
+            f"token_jaccard_pairs: projected candidate stream "
+            f"~{projected:,} pairs exceeds candidate_budget="
+            f"{candidate_budget:,}; the exact all-pairs answer is "
+            f"shuffle/output-bound in this regime. Re-run with "
+            f"on_budget='degrade' (banded MinHash-LSH candidates, "
+            f"exact verification, same schema), or use "
+            f"minhash_lsh_pairs / dup_clusters directly."
         )
-
-    if candidate_budget is not None and strategy == "prefix":
-        projected = estimate_candidate_pairs(docsets, threshold)
-        if projected > candidate_budget:
-            docsets.unpersist()
-            if on_budget == "error":
-                raise ValueError(
-                    f"token_jaccard_pairs: projected candidate stream "
-                    f"~{projected:,} pairs exceeds candidate_budget="
-                    f"{candidate_budget:,}; the exact all-pairs answer is "
-                    f"shuffle/output-bound in this regime. Re-run with "
-                    f"on_budget='degrade' (banded MinHash-LSH candidates, "
-                    f"exact verification, same schema), or use "
-                    f"minhash_lsh_pairs / dup_clusters directly."
-                )
-            return minhash_lsh_pairs(
-                df, id_col, text_col, n_hashes=16, band_size=4,
-                threshold=threshold, tokenizer=tokenizer,
-                candidate_budget=(
-                    candidate_budget * 4 if degrade_budget is None
-                    else degrade_budget
-                ),
-            )
-
-    if strategy == "bitmask":
+    if d.choice == "degrade":
+        return minhash_lsh_pairs(
+            df, id_col, text_col, n_hashes=16, band_size=4,
+            threshold=threshold, tokenizer=tokenizer,
+            candidate_budget=(
+                candidate_budget * 4 if degrade_budget is None
+                else degrade_budget
+            ),
+        )
+    if d.choice == "bitmask":
         return _release_on_gc(
-            _jaccard_bitmask(docsets, threshold, vocab=small_vocab), docsets
+            _jaccard_bitmask(docsets, threshold, facts.vocab), docsets
         )
-
-    if not probed:
-        small_vocab = _vocab_if_small(docsets, _BLOCKMASK_VOCAB_CAP)
-    if small_vocab:
+    if d.choice == "blockmask":
         # the dictionary numbers the join keys (int shuffle keys) AND the
         # blockmask bits, built once; popcount verification is ~10x
         # cheaper per pair than merging string arrays (sf1: verification
         # was 48 of 65 s on 122M candidates in this regime)
-        positions = _token_positions(docsets, "blockmask", small_vocab)
-        tok, key, verify = positions[0], "pos", "blockmask"
+        positions = _token_positions(docsets, "blockmask", facts.vocab)
+        tok, key = positions[0], "pos"
     else:
-        positions, key, verify = None, "token", "arrays"
+        positions, key = None, "token"
         tok = docsets.select("doc_id", "sz", F.explode("toks").alias("token"))
     cand = _prefix_candidates(tok, key, threshold)
     return _release_on_gc(
         _verify_candidates(
-            cand, docsets, verify, threshold, positions=positions
+            cand, docsets, d.choice, threshold, facts.vocab, positions
         ),
         docsets,
     )
-
-
-def _full_vocab_if_small(docsets: DataFrame, cap: int) -> list[str] | None:
-    """The full corpus vocabulary, sorted, if <= ``cap`` distinct tokens,
-    else None — ONE bounded ``limit(cap+1)`` collect (no full-corpus
-    distinct-count job; the collected values are the position assignment
-    the mask/int tiers need, so callers run no further vocabulary jobs)."""
-    rows = (
-        docsets.select(F.explode("toks").alias("token"))
-        .distinct()
-        .limit(cap + 1)
-        .collect()
-    )
-    if len(rows) > cap:
-        return None
-    return sorted(r["token"] for r in rows)
-
-
-def _vocab_if_small(
-    docsets: DataFrame, cap: int, sample_docs: int = 4096
-) -> list[str] | None:
-    """Sample-first vocabulary probe: the sorted vocabulary if <= ``cap``
-    distinct tokens, else None, in at most TWO bounded jobs.
-
-    Stage 1 counts distinct tokens in a bounded ``limit(sample_docs)``
-    sample — on any real text corpus this exceeds the cap within the
-    first few documents and the answer is certain (sample vocabulary is
-    a lower bound on corpus vocabulary), costing a scan of a handful of
-    input splits instead of a full-corpus explode+distinct shuffle.
-    Stage 2 (reached only for genuinely small-vocabulary corpora)
-    confirms with one bounded ``limit(cap+1)`` COLLECT whose values
-    settle every downstream question at once — fits-64?, fits-cap?, and
-    the mask/int position assignment itself."""
-    sample_vocab = (
-        docsets.limit(sample_docs)
-        .select(F.explode("toks").alias("token"))
-        .distinct()
-        .limit(cap + 1)
-        .count()
-    )
-    if sample_vocab > cap:
-        return None
-    return _full_vocab_if_small(docsets, cap)
 
 
 _BLOCKMASK_VOCAB_CAP = 4096  # 64 longs of bitset per document
@@ -422,25 +443,23 @@ _INTARRAYS_VOCAB_CAP = 65536
 
 
 def _token_positions(
-    docsets: DataFrame, tier: str, vocab: list[str] | None = None
+    docsets: DataFrame, tier: str, vocab: list[str] | None
 ) -> tuple[DataFrame, int]:
     """``((doc_id, sz, pos) relation, vocab size)``: every document token
     numbered by its place in the sorted vocabulary — the one dictionary
     encoding behind the mask and int tiers.  Positions are explicit per
     token (no hashing), so set intersections over them are exact.
 
-    ``vocab`` is a probe result the caller already holds (zero extra
-    jobs); without it one bounded ``limit(cap+1)`` collect numbers the
-    vocabulary.  A pinned tier on a corpus past its cap raises here, at
-    plan time, instead of letting positions wrap into colliding bits."""
+    ``vocab`` is :attr:`CorpusFacts.vocab` (None past every cap), so the
+    numbering runs no job.  A pinned tier on a corpus past its cap raises
+    here, at plan time, instead of letting positions wrap into colliding
+    bits."""
     # caps read at call time, so tests can shrink them
     cap = {
         "bitmask": 64,
         "blockmask": _BLOCKMASK_VOCAB_CAP,
         "intarrays": _INTARRAYS_VOCAB_CAP,
     }[tier]
-    if vocab is None:
-        vocab = _full_vocab_if_small(docsets, cap)
     if vocab is None or len(vocab) > cap:
         raise ValueError(
             f"{tier} verification requires vocabulary <= {cap} distinct "
@@ -601,17 +620,13 @@ def _blockmasks(tokp: DataFrame, n_words: int) -> DataFrame:
     )
 
 
-def _doc_masks(
-    docsets: DataFrame, vocab: list[str] | None = None
-) -> DataFrame:
+def _doc_masks(docsets: DataFrame, vocab: list[str] | None) -> DataFrame:
     """(doc_id, mask): each document's token set as one 64-bit bitmask.
 
     Only valid when the corpus vocabulary has <= 64 distinct tokens
     (enforced at plan time by :func:`_token_positions` — a pinned bitmask
     on a corpus that outgrew 64 tokens raises rather than letting
     ``shiftleft`` wrap pos & 63 into silently-colliding bit positions).
-    ``vocab`` short-circuits the vocabulary collect when the caller already
-    probed it.
     """
     tokp, _ = _token_positions(docsets, "bitmask", vocab)
     return (
@@ -623,16 +638,16 @@ def _doc_masks(
 
 
 def _jaccard_bitmask(
-    docsets: DataFrame, threshold: float, vocab: list[str] | None = None
+    docsets: DataFrame, threshold: float, vocab: list[str] | None
 ) -> DataFrame:
     """Exact Jaccard pairs for vocabularies that fit one 64-bit mask.
 
     docsets: (doc_id, toks array, sz). See :func:`token_jaccard_pairs`;
-    ``vocab`` is the auto strategy's probe result.
+    ``vocab`` is :attr:`CorpusFacts.vocab`.
     """
     # feeds both sides of the identical-set join AND the distinct-set roll-up:
     # persist, or the explode+shuffle mask build runs three times
-    masks = _doc_masks(docsets, vocab=vocab).persist()
+    masks = _doc_masks(docsets, vocab).persist()
 
     # identical-set pairs: join on equal mask (Jaccard exactly 1)
     ma, mb = masks.alias("a"), masks.alias("b")
@@ -815,7 +830,7 @@ def minhash_lsh_pairs(
     in most bands and the candidate stream approaches
     ``n_bands × true_pairs`` (the r11 sf10 sweep measured ~7e9 projected
     candidates for q23 — past local shuffle disk).  When the sampled
-    projection (:func:`estimate_lsh_candidates`) exceeds the budget the
+    projection (:func:`_lsh_projection`) exceeds the budget the
     operator's default posture (``on_budget='error'``) RAISES with the
     projection and the levers — there is no lossless degrade below pair
     enumeration: if the pair list itself is the bottleneck, the answer is
@@ -830,35 +845,40 @@ def minhash_lsh_pairs(
     _check_threshold(threshold)
     if on_budget not in ("error", "representatives"):
         raise ValueError(f"bad on_budget {on_budget!r}")
-    projection: tuple[int, int] | None = None
-    if candidate_budget is not None:
-        projection = estimate_lsh_candidates(
-            df, id_col, text_col, n_hashes, band_size, tokenizer=tokenizer
+    _check_verify(verify)
+    docsets = _docsets(df, id_col, text_col, tokenizer)
+    facts = _corpus_facts(docsets)
+    projected = (
+        None if candidate_budget is None
+        else _lsh_projection(facts, n_hashes, band_size)
+    )
+    d = _decide(
+        "minhash_lsh_pairs", facts, projected, pin=verify,
+        budget=candidate_budget, on_budget=on_budget,
+    )
+    if d.choice == "representatives":
+        return lsh_representatives(
+            df,
+            id_col,
+            text_col,
+            n_hashes=n_hashes,
+            band_size=band_size,
+            threshold=threshold,
+            verify=verify,
+            tokenizer=tokenizer,
         )
-        projected = projection[0]
-        if projected > candidate_budget:
-            if on_budget == "representatives":
-                return lsh_representatives(
-                    df,
-                    id_col,
-                    text_col,
-                    n_hashes=n_hashes,
-                    band_size=band_size,
-                    threshold=threshold,
-                    verify=verify,
-                    tokenizer=tokenizer,
-                )
-            raise ValueError(
-                f"minhash_lsh_pairs: projected candidate stream "
-                f"~{projected:,} pairs exceeds candidate_budget="
-                f"{candidate_budget:,}; at this similarity density the "
-                f"enumerated pair list is itself the bottleneck. Use "
-                f"lsh_representatives (one row per doc; reachable as "
-                f"minhash_lsh_pairs(on_budget='representatives') when "
-                f"calling that operator directly), dup_clusters/"
-                f"dedup_finalize, raise threshold with tighter banding "
-                f"(larger band_size), or shard the corpus."
-            )
+    if d.choice == "error":
+        raise ValueError(
+            f"minhash_lsh_pairs: projected candidate stream "
+            f"~{projected:,} pairs exceeds candidate_budget="
+            f"{candidate_budget:,}; at this similarity density the "
+            f"enumerated pair list is itself the bottleneck. Use "
+            f"lsh_representatives (one row per doc; reachable as "
+            f"minhash_lsh_pairs(on_budget='representatives') when "
+            f"calling that operator directly), dup_clusters/"
+            f"dedup_finalize, raise threshold with tighter banding "
+            f"(larger band_size), or shard the corpus."
+        )
     stacked = _stacked_bands(
         df, id_col, text_col, n_hashes, band_size, tokenizer=tokenizer,
         with_size=True,
@@ -876,10 +896,7 @@ def minhash_lsh_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    return _verify_candidates(
-        cand, _docsets(df, id_col, text_col, tokenizer), verify, threshold,
-        projection=projection,
-    )
+    return _verify_candidates(cand, docsets, d.choice, threshold, facts.vocab)
 
 
 def _docsets(
@@ -900,58 +917,135 @@ def _docsets(
     ).withColumn("sz", F.size("toks"))
 
 
-def _verify_tier(
-    vocab_n: int | None,
-    avg_sz: float | None,
-    projected: int | None,
-    n_docs: int | None,
-    dense: bool,
-) -> str:
-    """The ``verify='auto'`` tier policy, from probed facts: vocabulary size
-    (None past the probe cap), sampled mean set size, the projected
-    candidate stream and corpus size (None when the caller has no
-    budget), and whether the candidate stream is dense.  Every boundary
-    was measured with interleaved same-JVM A/Bs and identical checksums:
+class Decision(NamedTuple):
+    """One adaptive choice of the pair family: what was picked, why, and
+    the facts it was picked from."""
 
-    - vocab <= 64 → ``bitmask`` (one long, popcount);
-    - sparse streams (``dense=False``: the representatives path's hub
-      edges are LINEAR in the corpus) → ``arrays``: a dictionary build is
-      an O(corpus) fixed cost that never amortizes there (q119 14.1 s
-      arrays vs 20.6 s blockmask);
-    - vocab <= :data:`_BLOCKMASK_VOCAB_CAP` and the mask no wider than the
-      token array (``n_words <= avg_sz``) → ``blockmask`` (sf1, 5 words vs
-      ~31 tokens: 9.0 s vs 15.5 s intarrays vs 36.4 s arrays);
-    - vocab <= :data:`_INTARRAYS_VOCAB_CAP` and a projected stream at
-      least 2× the token relation (``n_docs × avg_sz``) → ``intarrays``.
-      Its dictionary build must amortize: sf10 token family, ratio ~29,
-      226.6 s intarrays vs 293.7 s arrays; q54's shingle degrade, ratio
-      0.4, 189 s vs 84 s.  2× splits the two with >5× margin each side;
-    - otherwise → ``arrays``."""
+    choice: str
+    reasons: tuple[str, ...]
+    facts: dict
+
+
+def choose(
+    op: str,
+    facts: dict,
+    pin: str = "auto",
+    budget: int | None = None,
+    on_budget: str = "error",
+) -> Decision:
+    """The pair family's adaptive policy, a pure function of the corpus
+    facts (``n_docs``, ``vocab_n`` — None past the vocabulary cap —,
+    ``avg_sz`` and ``projected``, the candidate stream projected when the
+    caller has a budget) and the caller's pins.  ``op`` names the operator;
+    ``pin`` is its ``strategy`` (``token_jaccard_pairs``) or ``verify``
+    (``minhash_lsh_pairs``, ``lsh_representatives``).  The choice is:
+
+    - ``on_budget`` (``error``, ``degrade`` or ``representatives``) when
+      the projection exceeds the budget.  ``bitmask`` is never guarded:
+      its candidates are bounded by distinct token SETS squared;
+    - ``token_jaccard_pairs``: ``bitmask`` (``auto`` picks it when the
+      vocabulary fits 64 bits), else the prefix join, keyed on dictionary
+      positions and verified on ``blockmask`` when the vocabulary fits
+      :data:`_BLOCKMASK_VOCAB_CAP`, else on token strings and ``arrays``;
+    - ``containment_pairs``: ``prefix``;
+    - otherwise the pinned verify tier, or for ``auto`` this ladder, each
+      boundary measured with interleaved same-JVM A/Bs and identical
+      checksums:
+
+      - vocab <= 64 → ``bitmask`` (one long, popcount);
+      - sparse streams (``lsh_representatives``: hub edges are LINEAR in
+        the corpus) → ``arrays``: a dictionary build is an O(corpus) fixed
+        cost that never amortizes there (q119 14.1 s arrays vs 20.6 s
+        blockmask);
+      - vocab <= :data:`_BLOCKMASK_VOCAB_CAP` and the mask no wider than
+        the token array (``n_words <= avg_sz``) → ``blockmask`` (sf1, 5
+        words vs ~31 tokens: 9.0 s vs 15.5 s intarrays vs 36.4 s arrays);
+      - vocab <= :data:`_INTARRAYS_VOCAB_CAP` and a projected stream at
+        least 2× the token relation (``n_docs × avg_sz``) → ``intarrays``.
+        Its dictionary build must amortize: sf10 token family, ratio ~29,
+        226.6 s intarrays vs 293.7 s arrays; q54's shingle degrade, ratio
+        0.4, 189 s vs 84 s.  2× splits the two with >5× margin each side;
+      - otherwise → ``arrays``."""
+    vocab_n, avg_sz = facts.get("vocab_n"), facts.get("avg_sz")
+    projected, n_docs = facts.get("projected"), facts.get("n_docs")
+    why: list[str] = []
+
+    def pick(choice: str, reason: str) -> Decision:
+        seen = facts if budget is None else {**facts, "budget": budget}
+        return Decision(choice, (*why, reason), seen)
+
+    if op == "token_jaccard_pairs" and pin == "auto":
+        pin = "bitmask" if vocab_n is not None and vocab_n <= 64 else "prefix"
+        why.append(f"vocab {vocab_n} {'<=' if pin == 'bitmask' else '>'} 64")
+    if op == "token_jaccard_pairs" and pin == "bitmask":
+        return pick("bitmask", "bitmask: candidates bounded by distinct sets")
+    if budget is not None:
+        if projected > budget:
+            return pick(on_budget, f"projected {projected} > budget {budget}")
+        why.append(f"projected {projected} <= budget {budget}")
+    if op == "containment_pairs":
+        return pick("prefix", "containment prefix join")
+    if op == "token_jaccard_pairs":
+        if vocab_n and vocab_n <= _BLOCKMASK_VOCAB_CAP:
+            return pick("blockmask", f"vocab {vocab_n} <= {_BLOCKMASK_VOCAB_CAP}")
+        return pick("arrays", f"vocab {vocab_n} not in 1..{_BLOCKMASK_VOCAB_CAP}")
+    if pin != "auto":
+        return pick(pin, "pinned")
     if vocab_n is None:
-        return "arrays"
+        return pick("arrays", f"vocab > {_INTARRAYS_VOCAB_CAP}")
     if vocab_n <= 64:
-        return "bitmask"
-    if not dense:
-        return "arrays"
-    if vocab_n <= _BLOCKMASK_VOCAB_CAP and (vocab_n + 63) // 64 <= avg_sz:
-        return "blockmask"
+        return pick("bitmask", f"vocab {vocab_n} <= 64")
+    if op == "lsh_representatives":
+        return pick("arrays", "sparse hub-edge stream")
+    n_words = (vocab_n + 63) // 64
+    if vocab_n <= _BLOCKMASK_VOCAB_CAP and n_words <= avg_sz:
+        return pick("blockmask", f"{n_words} mask words <= avg_sz {avg_sz}")
     if (
         projected is not None
         and avg_sz > 0
         and vocab_n <= _INTARRAYS_VOCAB_CAP
         and projected >= 2 * n_docs * avg_sz
     ):
-        return "intarrays"
-    return "arrays"
+        return pick("intarrays", "projected >= 2 x token relation")
+    return pick("arrays", "no encoded tier amortizes")
+
+
+def _decide(
+    op: str, facts: CorpusFacts | None, projected: int | None = None, **pins
+) -> Decision:
+    """:func:`choose` over ``facts``, written to stderr as one
+    ``{"event": "dedup.decision", ...}`` JSON line."""
+    known = {} if facts is None else {
+        "n_docs": facts.n_docs,
+        "sample_p": facts.p,
+        "vocab_n": None if facts.vocab is None else len(facts.vocab),
+        "avg_sz": facts.avg_sz,
+    }
+    if projected is not None:
+        known["projected"] = projected
+    d = choose(op, known, **pins)
+    print(
+        json.dumps(
+            {"event": "dedup.decision", "op": op, "choice": d.choice,
+             "reasons": list(d.reasons), "facts": d.facts}
+        ),
+        file=sys.stderr,
+        flush=True,
+    )
+    return d
+
+
+def _check_verify(verify: str) -> None:
+    if verify not in ("auto", "bitmask", "blockmask", "intarrays", "arrays"):
+        raise ValueError(f"bad verify {verify!r}")
 
 
 def _verify_candidates(
     cand: DataFrame,
     docsets: DataFrame,
-    verify: str,
+    tier: str,
     threshold: float,
-    dense_candidates: bool = True,
-    projection: tuple[int, int] | None = None,
+    vocab: list[str] | None,
     positions: tuple[DataFrame, int] | None = None,
 ) -> DataFrame:
     """Exact-Jaccard verification of a ``(doc_a, doc_b)`` candidate frame
@@ -977,49 +1071,23 @@ def _verify_candidates(
       vocabulary width, ~4 B/token join rows instead of strings;
     - ``arrays``: ``array_intersect`` over the token strings (general).
 
-    ``verify='auto'`` probes the vocabulary (:func:`_vocab_if_small`, at
-    the widest cap the policy can still use) and the mean set size, then
-    asks :func:`_verify_tier`; explicit pins are always honored.
-    ``projection`` is the caller's ``(projected candidates, n_docs)``;
-    ``positions`` is a :func:`_token_positions` result the caller already
-    built (the prefix path keys its join on it)."""
-    if verify not in ("auto", "bitmask", "blockmask", "intarrays", "arrays"):
-        raise ValueError(f"bad verify {verify!r}")
-    vocab: list[str] | None = None
-    if verify == "auto":
-        # intarrays needs a projection, blockmask a dense stream: probe no
-        # wider than the widest tier still reachable
-        cap = (
-            64 if not dense_candidates
-            else _INTARRAYS_VOCAB_CAP if projection is not None
-            else _BLOCKMASK_VOCAB_CAP
-        )
-        vocab = _vocab_if_small(docsets, cap)
-        avg_sz = None
-        if vocab is not None and len(vocab) > 64:
-            # the same bounded 4096-doc sample discipline as the probe
-            avg_sz = float(
-                docsets.limit(4096).agg(F.avg("sz")).collect()[0][0] or 0.0
-            )
-        projected, n_docs = projection or (None, None)
-        verify = _verify_tier(
-            None if vocab is None else len(vocab),
-            avg_sz, projected, n_docs, dense_candidates,
-        )
+    The caller picks ``tier`` (:func:`choose`); ``vocab`` is its
+    :attr:`CorpusFacts.vocab`, and ``positions`` a :func:`_token_positions`
+    result it already built (the prefix path keys its join on it)."""
     a, b = F.col("rep_a"), F.col("rep_b")
     n_common = F.size(F.array_intersect(a, b))
-    if verify == "arrays":
+    if tier == "arrays":
         rep = docsets.select("doc_id", "sz", F.col("toks").alias("rep"))
-    elif verify == "bitmask":
-        rep = _doc_masks(docsets, vocab=vocab).select(
+    elif tier == "bitmask":
+        rep = _doc_masks(docsets, vocab).select(
             "doc_id",
             F.bit_count("mask").cast("int").alias("sz"),
             F.col("mask").alias("rep"),
         )
         n_common = F.bit_count(a.bitwiseAND(b))
     else:
-        tokp, vocab_n = positions or _token_positions(docsets, verify, vocab)
-        if verify == "intarrays":
+        tokp, vocab_n = positions or _token_positions(docsets, tier, vocab)
+        if tier == "intarrays":
             rep = tokp.groupBy("doc_id", "sz").agg(
                 F.collect_list("pos").alias("rep")
             )
@@ -1111,6 +1179,10 @@ def lsh_representatives(
     from foresttime_builder_spark.operators.graph import connected_components
 
     _check_threshold(threshold)
+    _check_verify(verify)
+    docsets = _docsets(df, id_col, text_col, tokenizer)
+    facts = _corpus_facts(docsets)
+    d = _decide("lsh_representatives", facts, pin=verify)
     stacked = _stacked_bands(
         df, id_col, text_col, n_hashes, band_size, tokenizer=tokenizer,
         with_size=True,
@@ -1139,9 +1211,7 @@ def lsh_representatives(
         .distinct()
     )
     verified = _verify_candidates(
-        edges, _docsets(df, id_col, text_col, tokenizer), verify, threshold,
-        # hub-edge stream is linear in the corpus (see _verify_tier)
-        dense_candidates=False,
+        edges, docsets, d.choice, threshold, facts.vocab
     ).select("doc_a", "doc_b")
     # exact-duplicate star tier: hub edges alone cannot GUARANTEE that
     # two identical documents co-cluster — a dissimilar lower-id doc can
@@ -1474,7 +1544,7 @@ def containment_pairs(
     REAL text (rare tokens are rare); on a synthetic heavily-duplicated
     corpus the output itself is near-quadratic (sf1 measured 141M pairs)
     and the prefix⋈index stream with it.  When the sampled projection
-    (:func:`estimate_containment_candidates`) exceeds the budget the
+    (:func:`_prefix_projection`) exceeds the budget the
     operator RAISES — containment has no lossless sub-enumeration form;
     the levers are a higher threshold, dedup-then-contain (cluster
     representatives first), or corpus sharding.
@@ -1486,18 +1556,22 @@ def containment_pairs(
     docsets = df.select(
         F.col(id_col).alias("doc_id"), tokens(text_col).alias("toks")
     ).withColumn("sz", F.size("toks")).persist()
-    if candidate_budget is not None:
-        projected = estimate_containment_candidates(docsets, threshold)
-        if projected > candidate_budget:
-            docsets.unpersist()
-            raise ValueError(
-                f"containment_pairs: projected candidate stream "
-                f"~{projected:,} pairs exceeds candidate_budget="
-                f"{candidate_budget:,}; the containment pair list is "
-                f"output-bound on this corpus. Raise threshold, collapse "
-                f"to representatives first (lsh_representatives or "
-                f"dedup_finalize) and contain those, or shard the corpus."
-            )
+    facts = None if candidate_budget is None else _corpus_facts(docsets)
+    projected = (
+        None if facts is None
+        else _prefix_projection(facts, threshold, containment=True)
+    )
+    d = _decide("containment_pairs", facts, projected, budget=candidate_budget)
+    if d.choice == "error":
+        docsets.unpersist()
+        raise ValueError(
+            f"containment_pairs: projected candidate stream "
+            f"~{projected:,} pairs exceeds candidate_budget="
+            f"{candidate_budget:,}; the containment pair list is "
+            f"output-bound on this corpus. Raise threshold, collapse "
+            f"to representatives first (lsh_representatives or "
+            f"dedup_finalize) and contain those, or shard the corpus."
+        )
     tok = docsets.select(
         "doc_id", "sz", F.explode("toks").alias("token")
     ).persist()

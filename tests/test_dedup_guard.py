@@ -449,7 +449,62 @@ def test_prefix_slack_keeps_rounding_boundary_pair(spark):
     ],
 )
 def test_verify_tier_ladder(vocab_n, avg_sz, projected, n_docs, dense, tier):
-    """The verify='auto' policy is a pure function of probed facts."""
-    from foresttime_builder_spark.operators.dedup import _verify_tier
+    """The verify='auto' policy is a pure function of the corpus facts."""
+    from foresttime_builder_spark.operators.dedup import choose
 
-    assert _verify_tier(vocab_n, avg_sz, projected, n_docs, dense) == tier
+    op = "minhash_lsh_pairs" if dense else "lsh_representatives"
+    facts = {"vocab_n": vocab_n, "avg_sz": avg_sz, "n_docs": n_docs}
+    if projected is not None:
+        facts["projected"] = projected
+    assert choose(op, facts).choice == tier
+
+
+@pytest.mark.parametrize(
+    "op, facts, pins, choice",
+    [
+        # token_jaccard_pairs: auto picks bitmask by vocabulary alone, and
+        # bitmask is never budget-guarded
+        ("token_jaccard_pairs", {"vocab_n": 31, "projected": 10**9},
+         {"budget": 1}, "bitmask"),
+        ("token_jaccard_pairs", {"vocab_n": 64}, {}, "bitmask"),
+        ("token_jaccard_pairs", {"vocab_n": 65}, {}, "blockmask"),
+        ("token_jaccard_pairs", {"vocab_n": None}, {}, "arrays"),
+        ("token_jaccard_pairs", {"vocab_n": 4097}, {}, "arrays"),
+        # an empty vocabulary has nothing to number
+        ("token_jaccard_pairs", {"vocab_n": 0}, {"pin": "prefix"}, "arrays"),
+        ("token_jaccard_pairs", {"vocab_n": 31}, {"pin": "prefix"}, "blockmask"),
+        ("token_jaccard_pairs", {"vocab_n": 120}, {"pin": "bitmask"}, "bitmask"),
+        # the budget: strictly greater degrades or raises
+        ("token_jaccard_pairs", {"vocab_n": 380, "projected": 2},
+         {"pin": "prefix", "budget": 1, "on_budget": "degrade"}, "degrade"),
+        ("token_jaccard_pairs", {"vocab_n": 380, "projected": 1},
+         {"pin": "prefix", "budget": 1, "on_budget": "degrade"}, "blockmask"),
+        ("token_jaccard_pairs", {"vocab_n": 120, "projected": 1920},
+         {"pin": "prefix", "budget": 500}, "error"),
+        ("token_jaccard_pairs", {"vocab_n": 5000, "projected": 0},
+         {"budget": 0}, "arrays"),
+        ("minhash_lsh_pairs", {"vocab_n": 31, "projected": 385},
+         {"budget": 384, "on_budget": "representatives"}, "representatives"),
+        ("minhash_lsh_pairs", {"vocab_n": 31, "projected": 385},
+         {"budget": 384}, "error"),
+        ("minhash_lsh_pairs", {"vocab_n": 31, "projected": 384},
+         {"budget": 384}, "bitmask"),
+        ("minhash_lsh_pairs", {"vocab_n": 31}, {"pin": "arrays"}, "arrays"),
+        ("minhash_lsh_pairs", {}, {"pin": "arrays"}, "arrays"),
+        ("lsh_representatives", {"vocab_n": 4000, "avg_sz": 100.0},
+         {"pin": "blockmask"}, "blockmask"),
+        ("containment_pairs", {"projected": 11}, {"budget": 10}, "error"),
+        ("containment_pairs", {"projected": 10}, {"budget": 10}, "prefix"),
+        ("containment_pairs", {}, {}, "prefix"),
+    ],
+)
+def test_choose_table(op, facts, pins, choice):
+    """Strategy, degrade and tier are one pure function of the facts and
+    the caller's pins; the Decision carries its facts and the budget."""
+    from foresttime_builder_spark.operators.dedup import choose
+
+    d = choose(op, facts, **pins)
+    assert d.choice == choice
+    assert d.reasons and all(isinstance(r, str) for r in d.reasons)
+    budget = pins.get("budget")
+    assert d.facts == (facts if budget is None else {**facts, "budget": budget})

@@ -29,15 +29,13 @@ TABLES = (
 ).split()
 
 
-def fresh_con(sf_dir: str, mem: str | None = None, threads: int | None = None):
+def fresh_con(sf_dir: str, mem: str, threads: int | None = None):
+    """A connection capped at ``mem`` (a ``duckdb_mem_caps`` figure)."""
     c = duckdb.connect()
     spill = os.path.join(tempfile.gettempdir(), "ftb_duckdb_spill")
     os.makedirs(spill, exist_ok=True)
     c.execute(f"SET temp_directory='{spill}'")
-    c.execute(
-        f"SET memory_limit="
-        f"'{mem or os.environ.get('FTB_DUCKDB_MEM', '64GB')}'"
-    )
+    c.execute(f"SET memory_limit='{mem}'")
     # threads are PINNED (default 8, override FTB_DUCKDB_THREADS): at this
     # box's default of 32, per-thread working-set over-allocation kills the
     # 110 KB NSVB CTE chain (q26's twin) with 'bad allocation' at EVERY
@@ -53,19 +51,6 @@ def fresh_con(sf_dir: str, mem: str | None = None, threads: int | None = None):
         if os.path.exists(p):
             c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     return c
-
-
-def _retry_mem() -> str:
-    """Memory cap for the OOM retry: 48GB, but never ABOVE the operator's
-    configured ceiling — on a small-RAM box with FTB_DUCKDB_MEM=24GB the
-    retry must stay at 24GB and lean on threads=4 + spill, not outbid the
-    limit the operator set (r15 review catch)."""
-    env = os.environ.get("FTB_DUCKDB_MEM", "64GB").strip().upper()
-    try:
-        configured_gb = float(env.removesuffix("GB").removesuffix("GIB"))
-    except ValueError:
-        return "48GB"  # non-GB unit: don't guess, keep the historical cap
-    return f"{min(48.0, configured_gb):g}GB"
 
 
 def _run_oracle(con, name: str, sql: str) -> int:
@@ -118,7 +103,12 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as e
+    from tools.check_correctness import duckdb_mem_caps
 
+    mem_cap, retry_cap = duckdb_mem_caps(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"),
+        os.environ.get("FTB_DUCKDB_MEM"),
+    )
     oracles = e.oracle_sql()
     names = sorted(oracles)
     if args.only:
@@ -132,7 +122,7 @@ def main() -> None:
         for _ in range(args.runs):
             t0 = time.time()
             try:
-                with contextlib.closing(fresh_con(args.sf)) as con:
+                with contextlib.closing(fresh_con(args.sf, mem_cap)) as con:
                     n_rows = _run_oracle(con, name, oracles[name])
             except Exception as ex:
                 if "emory" not in str(ex) and "allocation" not in str(ex):
@@ -147,7 +137,7 @@ def main() -> None:
                 _gc.collect()
                 t0 = time.time()
                 with contextlib.closing(
-                    fresh_con(args.sf, mem=_retry_mem(), threads=4)
+                    fresh_con(args.sf, retry_cap, threads=4)
                 ) as con:
                     n_rows = _run_oracle(con, name, oracles[name])
             samples.append(time.time() - t0)
