@@ -19,7 +19,16 @@ def release_on_gc(result: DataFrame, *cached: DataFrame) -> DataFrame:
     If the result is dropped before execution the plan merely recomputes — a
     perf hiccup, never a correctness issue.
     """
-    jdfs = [c._jdf for c in cached]
+    return _attach(result, [c._jdf for c in cached])
+
+
+def _attach(owner: DataFrame, jdfs: list) -> DataFrame:
+    """Unpersist ``jdfs`` when ``owner`` is garbage-collected, recording
+    the finalizer and the relations on ``owner`` so :func:`carry_cache`
+    can transfer ownership to an enclosing frame: callers that derive a
+    new DataFrame from ``owner`` (a select, a filter) drop its refcount to
+    zero the moment they return, which would fire the finalizer and
+    unpersist the cache before the derived plan ever executes."""
 
     def _release(jdfs=jdfs):
         for j in jdfs:
@@ -28,15 +37,10 @@ def release_on_gc(result: DataFrame, *cached: DataFrame) -> DataFrame:
             except Exception:
                 pass  # session already stopped / JVM gone
 
-    fin = weakref.finalize(result, _release)
-    # bookkeeping so carry_cache() can transfer ownership to an enclosing
-    # frame: callers that derive a new DataFrame from `result` (a select, a
-    # filter) drop `result`'s refcount to zero the moment they return, which
-    # would fire the finalizer and unpersist the cache before the derived
-    # plan ever executes
-    result.__dict__.setdefault("_ft_cache_finalizers", []).append(fin)
-    result.__dict__.setdefault("_ft_cache_jdfs", []).extend(jdfs)
-    return result
+    fin = weakref.finalize(owner, _release)
+    owner.__dict__.setdefault("_ft_cache_finalizers", []).append(fin)
+    owner.__dict__.setdefault("_ft_cache_jdfs", []).extend(jdfs)
+    return owner
 
 
 def carry_cache(outer: DataFrame, *inners: DataFrame) -> DataFrame:
@@ -59,15 +63,4 @@ def carry_cache(outer: DataFrame, *inners: DataFrame) -> DataFrame:
         jdfs.extend(inner.__dict__.pop("_ft_cache_jdfs", []))
     if not jdfs:
         return outer
-
-    def _release(jdfs=jdfs):
-        for j in jdfs:
-            try:
-                j.unpersist(False)
-            except Exception:
-                pass  # session already stopped / JVM gone
-
-    fin = weakref.finalize(outer, _release)
-    outer.__dict__.setdefault("_ft_cache_finalizers", []).append(fin)
-    outer.__dict__.setdefault("_ft_cache_jdfs", []).extend(jdfs)
-    return outer
+    return _attach(outer, jdfs)

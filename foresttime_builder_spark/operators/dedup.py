@@ -1128,9 +1128,6 @@ def lsh_representatives(
     threshold: float = 0.5,
     verify: str = "auto",
     tokenizer: Column | None = None,
-    algorithm: str = "star",
-    max_iter: int | None = None,
-    stats: dict | None = None,
 ) -> DataFrame:
     """One row per document — ``(doc_id, rep_id, cluster_size)`` — via a
     LINEAR-candidate-stream LSH clustering: the measured escape hatch for
@@ -1167,15 +1164,7 @@ def lsh_representatives(
     ``cluster_size = 1``).  NULL-text documents produce no signature and
     no exact-tier hash, so they always stay singletons; EMPTY-string
     text is a real value (``tokens('') == ['']``) — empty docs co-cluster
-    with other empties at jaccard 1.0, like any other identical text.
-
-    Pass a dict as ``stats`` to receive ``{"edges_raw": n,
-    "edges_verified": n, "edges_exact": n, "clusters": n}`` telemetry
-    (each is a triggered count — scale-harness use, not the hot path).
-    Since r14 ``edges_raw`` counts the hub-edge stream AFTER the lossless
-    All-Pairs length cut (and the distinct) — r13-and-earlier recorded
-    figures are pre-cut, so cross-round edges_raw comparisons straddling
-    r14 partly measure the cut itself."""
+    with other empties at jaccard 1.0, like any other identical text."""
     from foresttime_builder_spark.operators.graph import connected_components
 
     _check_threshold(threshold)
@@ -1232,23 +1221,9 @@ def lsh_representatives(
         .filter(F.col("doc_id") != F.col("hub"))
         .select(F.col("hub").alias("doc_a"), F.col("doc_id").alias("doc_b"))
     )
-    lsh_verified = None
-    if stats is not None:
-        stats["edges_raw"] = edges.count()
-        lsh_verified = verified.persist()
-        verified = lsh_verified
-        stats["edges_verified"] = verified.count()
-        stats["edges_exact"] = exact_edges.count()
-    verified = verified.unionByName(exact_edges)
     comp = connected_components(
-        verified, src="doc_a", dst="doc_b", algorithm=algorithm,
-        max_iter=max_iter,
+        verified.unionByName(exact_edges), src="doc_a", dst="doc_b"
     )
-    if lsh_verified is not None:
-        # the CC rounds materialized comp (checkpointed) — the persisted
-        # edge relation is fully consumed; free it now instead of leaking
-        # a cached DataFrame per stats invocation for the session lifetime
-        lsh_verified.unpersist()
     ids = df.select(F.col(id_col).alias("doc_id")).filter(
         F.col("doc_id").isNotNull()
     )
@@ -1257,10 +1232,6 @@ def lsh_representatives(
     ).select(
         "doc_id", F.coalesce(F.col("comp"), F.col("doc_id")).alias("rep_id")
     )
-    if stats is not None:
-        stats["clusters"] = (
-            assigned.agg(F.countDistinct("rep_id")).collect()[0][0]
-        )
     # cluster_size over one rep_id window — a single linear exchange,
     # no self-join (the CC output is checkpointed, so re-evaluating
     # `assigned` would be cheap, but one pass is cheaper still)

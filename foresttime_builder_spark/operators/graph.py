@@ -3,37 +3,21 @@
 After near-dup detection (token-Jaccard q16, MinHash-LSH q23, SimHash q24,
 embedding cosine q40) a training-data pipeline groups the pairs into
 CLUSTERS and keeps one canonical document per cluster.  That grouping is
-connected components, with two driver-controlled iterative backends behind
-one API (SURVEY classifies this as a non-SQL-expressible iterative
-algorithm; the test oracle uses fixed-depth unrolled SQL instead):
-
-- ``algorithm="star"`` (default): alternating large-star/small-star
-  (Kiveris et al., SoCC'14) — the edge set contracts toward a union of
-  stars rooted at each component's minimum id in O(log n)-ish rounds on
-  ANY topology, the 100 TB-safe choice.  An adversarial path graph that
-  drives label propagation to O(n) rounds converges in ~log2(n) here
-  (asserted by test).  The output is certified exactly before return.
-- ``algorithm="minlabel"``: minimum-label propagation — every node takes
-  the min label of its neighborhood each round; rounds = graph DIAMETER
-  (fine for dense near-dup clusters, typically 2-4; pathological on
-  chains).  Kept as the simpler twin of the q50 oracle's unrolled layers.
-
-Both raise on non-convergence rather than silently returning wrong ids.
+connected components, computed by alternating large-star/small-star
+(Kiveris et al., SoCC'14), a driver-controlled iterative algorithm (SURVEY
+classifies it as non-SQL-expressible; the DuckDB oracles unroll a
+fixed-depth SQL chain instead, ``plans/queries/dedup._components_sql``).
+The edge set contracts toward a union of stars rooted at each component's
+minimum id in O(log n)-ish rounds on ANY topology: an adversarial path
+graph converges in ~log2(n) rounds (asserted by test).  Graphs small
+enough to collect take an exact driver-side union-find tier.  The output
+is certified exactly before return, and non-convergence raises rather
+than silently returning wrong ids.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
-
-#: Shared propagation-depth bound.  The q50 test oracle unrolls exactly this
-#: many label-propagation layers, so keeping the operator's default and the
-#: oracle's depth defined in ONE place guarantees they can never disagree
-#: (a graph needing more rounds raises here instead of gate-failing
-#: confusingly).  Min-label propagation needs rounds ~= graph diameter;
-#: near-dup clusters are dense (measured diameter <= ~8 on the synthetic
-#: corpus), so 16 leaves ample headroom.
-MAX_ITER_DEFAULT = 16
-
 
 #: Round bound for the alternating large-star/small-star algorithm, which
 #: converges in O(log n)-ish rounds on any graph (O(log^2 n) proven bound,
@@ -42,123 +26,6 @@ MAX_ITER_DEFAULT = 16
 #: 100k-node PATH needs ~10 rounds (measured in tests) where min-label
 #: propagation would need 100k.
 STAR_MAX_ITER = 64
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int | None = None,
-    algorithm: str = "star",
-    stats: dict | None = None,
-    small_graph_edges: int | None = None,
-) -> DataFrame:
-    """``(id, comp)`` for every node in ``edges``; ``comp`` is the smallest
-    node id in the component.  Edges are treated as undirected.  Pass a
-    dict as ``stats`` to receive ``{"rounds": n}`` (star path only) — the
-    tests assert the O(log n) round bound through it.
-
-    ``algorithm="star"`` (default) runs alternating large-star/small-star
-    (Kiveris et al.) — O(log n)-round convergence on ANY topology, the
-    100 TB-safe choice (an adversarial path graph drives min-label to
-    O(n) rounds).  ``algorithm="minlabel"`` keeps the original min-label
-    propagation — O(diameter) rounds, marginally cheaper per round, fine
-    for dense near-dup clusters and the unrolled-SQL oracle twin.
-
-    Both raise ``RuntimeError`` if not converged after ``max_iter`` rounds
-    (default :data:`STAR_MAX_ITER` / :data:`MAX_ITER_DEFAULT`) rather than
-    silently returning wrong component ids; the star path additionally
-    certifies its output EXACTLY (every input edge's endpoints share a
-    label) so a checksum-based early stop can never smuggle a wrong
-    answer through.
-
-    ``small_graph_edges`` (the count threshold below which the star
-    backend switches to its driver-side union-find tier) applies to the
-    "star" backend ONLY — passing it with ``algorithm="minlabel"`` raises
-    rather than silently ignoring the pin."""
-    if algorithm not in ("star", "minlabel"):
-        # validated FIRST so a typo'd backend gets the 'unknown algorithm'
-        # error, not a misleading small_graph_edges-incompatibility message
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    if algorithm != "star" and small_graph_edges is not None:
-        raise ValueError(
-            "small_graph_edges applies only to the 'star' backend; "
-            f"algorithm={algorithm!r} has no small-graph tier"
-        )
-    if algorithm == "star":
-        return _cc_star(
-            edges, src, dst, STAR_MAX_ITER if max_iter is None else max_iter,
-            stats=stats,
-            small_graph_edges=(
-                SMALL_CC_EDGES if small_graph_edges is None else small_graph_edges
-            ),
-        )
-    return _cc_minlabel(
-        edges, src, dst, MAX_ITER_DEFAULT if max_iter is None else max_iter
-    )
-
-
-def _cc_minlabel(
-    edges: DataFrame, src: str, dst: str, max_iter: int
-) -> DataFrame:
-    # persist the edge list: it feeds every propagation round, and its
-    # upstream (e.g. the whole jaccard pair join) must execute once
-    # NULL-endpoint edges dropped — the same contract as the star
-    # backend, so switching algorithm= can never change the node set
-    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a").isNotNull() & F.col("b").isNotNull()
-    )
-    sym = (
-        raw.union(raw.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .persist()
-    )
-    nodes = sym.select(F.col("a").alias("id")).distinct()
-    # localCheckpoint (eager) after every round: persist() alone caches the
-    # DATA but each round's plan still nests every previous round's joins,
-    # so driver-side analysis grows superlinearly with iterations — the
-    # classic iterative-lineage blowup. Checkpointing truncates the lineage
-    # to the materialized partitions.
-    labels = nodes.select("id", F.col("id").alias("comp")).localCheckpoint()
-    labels_root = labels  # the LogicalRDD root _free_local_checkpoint needs
-
-    changed = -1
-    for _ in range(max_iter):
-        neigh = (
-            sym.join(labels, sym["a"] == labels["id"])
-            .groupBy(F.col("b").alias("id"))
-            .agg(F.min("comp").alias("ncomp"))
-        )
-        new_labels = (
-            labels.join(neigh, on="id", how="left")
-            .select(
-                "id",
-                F.least(F.col("comp"), F.coalesce("ncomp", "comp")).alias("comp"),
-                F.col("comp").alias("_old"),
-            )
-            .localCheckpoint()
-        )
-        changed = new_labels.filter(F.col("comp") != F.col("_old")).count()
-        # free the RAW checkpoint root that is being superseded —
-        # labels_root, not labels: after round 1 `labels` is a Project
-        # (.drop) over the LogicalRDD, and analyzed().rdd() on a Project
-        # throws into _free_local_checkpoint's guard, silently leaking
-        # every superseded round's blocks (the _cc_star convention)
-        _free_local_checkpoint(labels_root)
-        labels_root = new_labels
-        labels = new_labels.drop("_old")
-        if changed == 0:
-            break
-    # labels is materialized (localCheckpoint) — the edge cache has served
-    # its purpose; release it so repeated invocations in a long-lived
-    # session don't accumulate storage blocks
-    sym.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); the graph diameter exceeds "
-            f"max_iter — raise it (and keep any fixed-depth oracle in sync)"
-        )
-    return labels
 
 
 def _free_local_checkpoint(df: DataFrame) -> None:
@@ -237,38 +104,44 @@ def _cc_driver_small(
         .select("id", F.coalesce("comp", "id").alias("comp"))
         .localCheckpoint()
     )
-    raw.unpersist()
-    _free_local_checkpoint(e)
     if stats is not None:
         stats["rounds"] = 0
     return labels
 
 
-def _cc_star(
+def connected_components(
     edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iter: int,
+    src: str = "src",
+    dst: str = "dst",
+    max_iter: int = STAR_MAX_ITER,
     stats: dict | None = None,
     small_graph_edges: int = SMALL_CC_EDGES,
 ) -> DataFrame:
-    """Alternating large-star/small-star connected components.
+    """``(id, comp)`` for every node in ``edges``; ``comp`` is the smallest
+    node id in the component.  Edges are treated as undirected.  Pass a
+    dict as ``stats`` to receive ``{"rounds": n}`` — the tests assert the
+    O(log n) round bound through it.
 
-    One round = large-star (every node connects its strictly-LARGER
-    neighbors to the minimum of its closed neighborhood) then small-star
-    (every node connects its smaller neighbors and itself to their
-    minimum).  The edge set monotonically contracts toward a union of
-    stars rooted at each component's minimum id; rounds needed are
-    O(log n)-ish on any topology — including the path/chain graphs that
-    drive label propagation to O(n) rounds.
+    Alternating large-star/small-star (Kiveris et al.).  One round =
+    large-star (every node connects its strictly-LARGER neighbors to the
+    minimum of its closed neighborhood) then small-star (every node
+    connects its smaller neighbors and itself to their minimum).  The edge
+    set monotonically contracts toward a union of stars rooted at each
+    component's minimum id; rounds needed are O(log n)-ish on any
+    topology — including the path/chain graphs that drive label
+    propagation to O(n) rounds.  ``small_graph_edges`` is the
+    canonical-edge count at or below which the driver-side union-find
+    tier runs instead of the rounds (``0`` forces the rounds).
 
     Convergence is detected by an order-free edge-set checksum
-    (count + sum of xxhash64), then the labeling is certified EXACTLY:
+    (count + xor of xxhash64), then the labeling is certified EXACTLY:
     every original edge must connect two nodes with the same label, and
     every node must be labeled.  A checksum collision (~2^-64) therefore
     degrades to a raise, never to a wrong answer — labels only ever
     travel along edges, so equal-labels-across-every-edge proves the
-    partition is exactly the connected components.
+    partition is exactly the connected components.  Not converging within
+    ``max_iter`` rounds raises ``RuntimeError`` too; every exit releases
+    the edge caches.
     """
     # cache the edge list once (columnar, compressed — NOT localCheckpoint,
     # whose row-format blocks measured several times larger on the sf1
@@ -282,10 +155,13 @@ def _cc_star(
     )
     # canonical undirected edge set (lo < hi), self-loops dropped; this is
     # the working set the rounds contract.  localCheckpoint each round:
-    # same iterative-lineage truncation as the min-label loop — but each
-    # round's blocks are edge-count-sized, so the PREVIOUS round's are
-    # explicitly dropped once the new round is materialized (safe: a
-    # localCheckpointed frame is never re-read after being superseded).
+    # persist() alone caches the DATA but each round's plan would still
+    # nest every previous round's joins, so driver-side analysis would
+    # grow superlinearly with iterations; checkpointing truncates the
+    # lineage.  Each round's blocks are edge-count-sized, so the PREVIOUS
+    # round's are explicitly dropped once the new round is materialized
+    # (safe: a localCheckpointed frame is never re-read after being
+    # superseded).
     # edge-count-sized checkpoints are stored SERIALIZED: localCheckpoint's
     # default (MEMORY_AND_DISK_DESER) holds one JVM object per row, and at
     # the degraded-q50 scale (72.8M edges) the transient prev+new
@@ -296,14 +172,6 @@ def _cc_star(
     from pyspark import StorageLevel as _SL
 
     _ckpt_level = _SL.MEMORY_AND_DISK
-    e = (
-        raw.filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi")
-        )
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=_ckpt_level)
-    )
 
     def _sig(df: DataFrame) -> tuple:
         # bit_xor: order-free, overflow-free (ANSI-safe) fold; the edge
@@ -314,103 +182,119 @@ def _cc_star(
         ).collect()[0]
         return (r["n"], r["h"])
 
-    sig = _sig(e)
-    if 0 < sig[0] <= small_graph_edges:
-        # small-graph tier: the per-round checkpoint floor would dominate
-        # (see SMALL_CC_EDGES); gated on the plan-time count this _sig
-        # already paid, so the collect is bounded by construction
-        return _cc_driver_small(raw, e, stats)
-    converged = sig[0] == 0
-    rounds = 0
-    for _ in range(max_iter):
-        if converged:
-            break
-        rounds += 1
-        prev_ckpt = e
-        # LARGE-STAR: for edge (u,v), v > u, connect v to
-        # m(u) = min(neighborhood(u) ∪ {u}).  Processing each canonical
-        # edge from its smaller endpoint's perspective covers every
-        # (u, v>u) pair exactly once; m comes from u's FULL neighborhood,
-        # which needs the symmetric view.
-        sym = e.select(F.col("lo").alias("u"), F.col("hi").alias("v")).union(
-            e.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-        )
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("_mn"))
-            .select("u", F.least("_mn", F.col("u")).alias("m"))
-        )
+    # `e` always names the CURRENT edge checkpoint (or None before the
+    # first one), so the finally releases it and the raw cache on every
+    # exit — return, non-convergence and certificate raises alike
+    e = None
+    try:
         e = (
-            e.join(mins, e["lo"] == mins["u"])
-            .select(F.col("m").alias("lo"), F.col("hi"))
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-        )
-        # SMALL-STAR: group by the larger endpoint; connect it and all its
-        # smaller neighbors to their minimum.
-        gmin = e.groupBy("hi").agg(F.min("lo").alias("m"))
-        e = (
-            e.join(gmin, "hi")
-            .select(F.col("m").alias("lo"), F.col("lo").alias("hi"))
-            .union(gmin.select(F.col("m").alias("lo"), F.col("hi")))
-            .filter(F.col("lo") != F.col("hi"))
+            raw.filter(F.col("a") != F.col("b"))
+            .select(
+                F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi")
+            )
             .distinct()
             .localCheckpoint(eager=True, storageLevel=_ckpt_level)
         )
-        # the round ENTERED with prev_ckpt (checkpointed); the new e is
-        # materialized, so prev_ckpt's edge-count-sized blocks can go —
-        # without this, a 64-round run holds 64 edge sets simultaneously
-        _free_local_checkpoint(prev_ckpt)
-        new_sig = _sig(e)
-        converged = new_sig == sig
-        sig = new_sig
-    if stats is not None:
-        stats["rounds"] = rounds
-    if not converged:
-        raise RuntimeError(
-            f"connected_components(star) did not converge in {max_iter} "
-            f"rounds — far beyond the O(log n) bound; the input graph is "
-            f"pathological or the checksum never stabilized"
+        sig = _sig(e)
+        if 0 < sig[0] <= small_graph_edges:
+            # small-graph tier: the per-round checkpoint floor would
+            # dominate (see SMALL_CC_EDGES); gated on the plan-time count
+            # this _sig already paid, so the collect is bounded
+            return _cc_driver_small(raw, e, stats)
+        converged = sig[0] == 0
+        rounds = 0
+        for _ in range(max_iter):
+            if converged:
+                break
+            rounds += 1
+            # LARGE-STAR: for edge (u,v), v > u, connect v to
+            # m(u) = min(neighborhood(u) ∪ {u}).  Processing each canonical
+            # edge from its smaller endpoint's perspective covers every
+            # (u, v>u) pair exactly once; m comes from u's FULL
+            # neighborhood, which needs the symmetric view.
+            sym = e.select(F.col("lo").alias("u"), F.col("hi").alias("v")).union(
+                e.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
+            )
+            mins = (
+                sym.groupBy("u")
+                .agg(F.min("v").alias("_mn"))
+                .select("u", F.least("_mn", F.col("u")).alias("m"))
+            )
+            large = (
+                e.join(mins, e["lo"] == mins["u"])
+                .select(F.col("m").alias("lo"), F.col("hi"))
+                .filter(F.col("lo") != F.col("hi"))
+                .distinct()
+            )
+            # SMALL-STAR: group by the larger endpoint; connect it and all
+            # its smaller neighbors to their minimum.
+            gmin = large.groupBy("hi").agg(F.min("lo").alias("m"))
+            new_ckpt = (
+                large.join(gmin, "hi")
+                .select(F.col("m").alias("lo"), F.col("lo").alias("hi"))
+                .union(gmin.select(F.col("m").alias("lo"), F.col("hi")))
+                .filter(F.col("lo") != F.col("hi"))
+                .distinct()
+                .localCheckpoint(eager=True, storageLevel=_ckpt_level)
+            )
+            # the round ENTERED with e (checkpointed); the new checkpoint is
+            # materialized, so e's edge-count-sized blocks can go — without
+            # this, a 64-round run holds 64 edge sets simultaneously
+            _free_local_checkpoint(e)
+            e = new_ckpt
+            new_sig = _sig(e)
+            converged = new_sig == sig
+            sig = new_sig
+        if stats is not None:
+            stats["rounds"] = rounds
+        if not converged:
+            raise RuntimeError(
+                f"connected_components(star) did not converge in {max_iter} "
+                f"rounds — far beyond the O(log n) bound; the input graph is "
+                f"pathological or the checksum never stabilized"
+            )
+        nodes = (
+            raw.select(F.col("a").alias("id"))
+            .union(raw.select(F.col("b").alias("id")))
+            .distinct()
         )
-    nodes = (
-        raw.select(F.col("a").alias("id"))
-        .union(raw.select(F.col("b").alias("id")))
-        .distinct()
-    )
-    # node-count-sized; materialized so the edge caches can be released
-    # before returning (the caller's consumption re-reads only this)
-    labels = (
-        nodes.join(
-            e.select(F.col("hi").alias("id"), F.col("lo").alias("comp")),
-            on="id",
-            how="left",
+        # node-count-sized; materialized so the edge caches can be released
+        # before returning (the caller's consumption re-reads only this)
+        labels = (
+            nodes.join(
+                e.select(F.col("hi").alias("id"), F.col("lo").alias("comp")),
+                on="id",
+                how="left",
+            )
+            .select("id", F.coalesce("comp", "id").alias("comp"))
+            .localCheckpoint()
         )
-        .select("id", F.coalesce("comp", "id").alias("comp"))
-        .localCheckpoint()
-    )
-    # exact certificate: every ORIGINAL edge joins two equal labels (and
-    # both endpoints are labeled).  Labels only move along edges, so this
-    # also rules out distinct components sharing a label.
-    la = labels.select(F.col("id").alias("a"), F.col("comp").alias("_ca"))
-    lb = labels.select(F.col("id").alias("b"), F.col("comp").alias("_cb"))
-    bad = (
-        raw.join(la, "a", "left")
-        .join(lb, "b", "left")
-        .filter(
-            F.col("_ca").isNull()
-            | F.col("_cb").isNull()
-            | (F.col("_ca") != F.col("_cb"))
+        # exact certificate: every ORIGINAL edge joins two equal labels (and
+        # both endpoints are labeled).  Labels only move along edges, so
+        # this also rules out distinct components sharing a label.
+        la = labels.select(F.col("id").alias("a"), F.col("comp").alias("_ca"))
+        lb = labels.select(F.col("id").alias("b"), F.col("comp").alias("_cb"))
+        bad = (
+            raw.join(la, "a", "left")
+            .join(lb, "b", "left")
+            .filter(
+                F.col("_ca").isNull()
+                | F.col("_cb").isNull()
+                | (F.col("_ca") != F.col("_cb"))
+            )
+            .count()
         )
-        .count()
-    )
-    raw.unpersist()
-    _free_local_checkpoint(e)
-    if bad:
-        raise RuntimeError(
-            f"connected_components(star) certificate failed on {bad} "
-            f"edges — convergence checksum produced an invalid labeling"
-        )
-    return labels
+        if bad:
+            _free_local_checkpoint(labels)
+            raise RuntimeError(
+                f"connected_components(star) certificate failed on {bad} "
+                f"edges — convergence checksum produced an invalid labeling"
+            )
+        return labels
+    finally:
+        raw.unpersist()
+        if e is not None:
+            _free_local_checkpoint(e)
 
 
 def cluster_near_dups(
@@ -421,8 +305,6 @@ def cluster_near_dups(
     strategy: str = "auto",
     candidate_budget: int | None = None,
     on_budget: str = "error",
-    max_iter: int | None = None,
-    algorithm: str = "star",
     degrade_budget: int | None = None,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
@@ -484,10 +366,7 @@ def cluster_near_dups(
         except ValueError as exc:
             if "candidate_budget" not in str(exc):
                 raise
-            reps = lsh_representatives(
-                df, id_col, text_col, threshold=threshold,
-                algorithm=algorithm, max_iter=max_iter,
-            )
+            reps = lsh_representatives(df, id_col, text_col, threshold=threshold)
             return reps.filter(F.col("cluster_size") > 1).select(
                 F.col("doc_id").alias(id_col),
                 F.col("rep_id").alias("cluster_id"),
@@ -504,10 +383,7 @@ def cluster_near_dups(
             on_budget=on_budget,
             degrade_budget=degrade_budget,
         )
-    comp = connected_components(
-        pairs, src="doc_a", dst="doc_b", max_iter=max_iter,
-        algorithm=algorithm,
-    )
+    comp = connected_components(pairs, src="doc_a", dst="doc_b")
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
     return comp.join(sizes, on="comp").select(
         F.col("id").alias(id_col),
@@ -524,8 +400,6 @@ def dedup_finalize(
     strategy: str = "auto",
     candidate_budget: int | None = None,
     on_budget: str = "error",
-    max_iter: int | None = None,
-    algorithm: str = "star",
     clusters: DataFrame | None = None,
     degrade_budget: int | None = None,
     pairs: DataFrame | None = None,
@@ -549,8 +423,7 @@ def dedup_finalize(
     e.g. persisted :func:`~foresttime_builder_spark.operators.dedup.
     token_jaccard_pairs` output) to skip only the pair detection and still
     run the components here.  Passing BOTH raises: silently preferring one
-    would hide a stale-input bug (same posture as the small_graph_edges/
-    minlabel check in :func:`connected_components`).
+    would hide a stale-input bug.
     """
     if clusters is not None and pairs is not None:
         raise ValueError(
@@ -567,8 +440,6 @@ def dedup_finalize(
             strategy=strategy,
             candidate_budget=candidate_budget,
             on_budget=on_budget,
-            max_iter=max_iter,
-            algorithm=algorithm,
             degrade_budget=degrade_budget,
             pairs=pairs,
         )

@@ -29,6 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
+from foresttime_builder_spark.functions.nsvb import BISECT_ITERS
 from foresttime_builder_spark.operators.cache import release_on_gc
 from foresttime_builder_spark.plans import carbon, fia
 from foresttime_builder_spark.plans.fia_on_synthetic import annualize_cte
@@ -154,8 +155,6 @@ def estimate_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # DuckDB oracle generation
 # ---------------------------------------------------------------------------
-
-_BISECT_ITERS = 48  # keep in sync with functions.nsvb.BISECT_ITERS
 
 
 def _rif(cond: str, yes: str, no: str) -> str:
@@ -308,7 +307,7 @@ def _bisect_ctes(src: str, out: str) -> str:
         "bK * pow(1 - {m} / THT, mh_alpha - 1)"
         " * pow(1 - pow(1 - {m} / THT, mh_alpha), mh_beta - 1)"
     )
-    for i in range(1, _BISECT_ITERS + 1):
+    for i in range(1, BISECT_ITERS + 1):
         parts.append(
             f"""bm{i} AS (
   SELECT *, (lo4 + hi4) * 0.5 AS m4, (loS + hiS) * 0.5 AS mS,
@@ -325,7 +324,7 @@ bz{i} AS (
   FROM bm{i}
 )"""
         )
-    n = _BISECT_ITERS
+    n = BISECT_ITERS
     guard = "DBH IS NULL OR DBH < 5.0 OR THT IS NULL OR bK IS NULL"
     parts.append(
         f"""{out} AS (

@@ -301,8 +301,8 @@ FROM tok GROUP BY doc_id
 
 def q50_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate clustering: connected components over the exact
-    token-Jaccard pair graph (operators.graph, Pregel-style min-label
-    propagation), yielding a deterministic canonical cluster id (min doc_id)
+    token-Jaccard pair graph (operators.graph, alternating large-star/
+    small-star), yielding a deterministic canonical cluster id (min doc_id)
     and cluster size — the step a training-data pipeline runs after dup
     detection to keep one representative per cluster."""
     from foresttime_builder_spark.operators.graph import cluster_near_dups
@@ -320,33 +320,54 @@ def q50_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         on_budget="degrade",
     )
 
-def _dup_clusters_oracle(rounds: int | None = None) -> str:
-    """Min-label propagation unrolled to a fixed depth: exact once
-    ``rounds`` >= the dup-graph diameter (measured <= ~8 on the synthetic
-    corpus; near-dup clusters are dense).  Depth defaults to
-    ``operators.graph.MAX_ITER_DEFAULT`` — the same bound the Spark
-    operator enforces (raising on non-convergence), so operator and oracle
-    can never silently disagree on depth.  A recursive reachability-closure
-    CTE is also exact but materializes |component|²-scale intermediates —
-    it ran minutes on this avg-degree-120 graph where the layered form runs
-    in milliseconds.  Every layer is MATERIALIZED: DuckDB inlines CTEs per
+#: Depth of the DuckDB connected-components chain.  It bounds ONLY the
+#: oracles: the Spark side runs star CC under its own bound
+#: (``operators.graph.STAR_MAX_ITER``) and certifies its output.  Each
+#: round propagates neighbour minima and then pointer-jumps, so the chain
+#: covers diameters far beyond 16 hops: measured on DuckDB, a 40-node path
+#: converges in 5 rounds and a 100,000-node path in 16, where a plain
+#: 16-round min-label unroll leaves the 40-node path in 24 pieces.
+MAX_ITER_DEFAULT = 16
+
+def _components_sql(sym: str = "sym", rounds: int = MAX_ITER_DEFAULT) -> str:
+    """CTE definitions ``lab0 .. lab{rounds}`` and ``comp(id, lab)``: the
+    connected components of the symmetric edge CTE ``sym(a, b)``, ``lab``
+    the component's minimum id, as :func:`~foresttime_builder_spark.
+    operators.graph.connected_components` labels them.
+
+    Min-label layers with POINTER JUMPING: each round propagates neighbour
+    minima AND shortcuts ``lab := min(lab, lab[lab])``, so the reach of a
+    label grows geometrically rather than one hop per round.  The shortcut
+    join is sound because a label is always the id of a node in the same
+    component (init lab=id; propagate and shortcut both take minima over
+    same-component node ids).  A recursive reachability-closure CTE is
+    also exact but materializes |component|²-scale intermediates — it ran
+    minutes on the avg-degree-120 q50 graph where the layered form runs in
+    milliseconds.  Every layer is MATERIALIZED: DuckDB inlines CTEs per
     reference, and each layer references its predecessor twice — unmarked,
     the chain expands exponentially."""
-    if rounds is None:
-        from foresttime_builder_spark.operators.graph import MAX_ITER_DEFAULT
-
-        rounds = MAX_ITER_DEFAULT
-    layers = []
+    layers = [
+        "lab0 AS MATERIALIZED (\n"
+        f"  SELECT id, id AS lab FROM (SELECT DISTINCT a AS id FROM {sym})\n)"
+    ]
     for i in range(rounds):
         layers.append(
-            f"lab{i + 1} AS MATERIALIZED ("
+            f"lab{i + 1}p AS MATERIALIZED ("
             f"  SELECT n.id, least(n.lab, coalesce(m.minlab, n.lab)) AS lab"
             f"  FROM lab{i} n LEFT JOIN ("
             f"    SELECT s.b AS id, min(l.lab) AS minlab"
-            f"    FROM sym s JOIN lab{i} l ON l.id = s.a GROUP BY s.b"
-            f"  ) m ON n.id = m.id)"
+            f"    FROM {sym} s JOIN lab{i} l ON l.id = s.a GROUP BY s.b"
+            f"  ) m ON n.id = m.id),\n"
+            f"lab{i + 1} AS MATERIALIZED ("
+            f"  SELECT n.id, least(n.lab, l2.lab) AS lab"
+            f"  FROM lab{i + 1}p n JOIN lab{i + 1}p l2 ON n.lab = l2.id)"
         )
-    chain = ",\n".join(layers)
+    layers.append(f"comp AS (SELECT id, lab FROM lab{rounds})")
+    return ",\n".join(layers)
+
+def _dup_clusters_oracle() -> str:
+    """Connected components (:func:`_components_sql`) over the exact
+    token-Jaccard pair SQL, with cluster sizes."""
     return f"""
 WITH toks AS (
   SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
@@ -369,12 +390,10 @@ sym AS MATERIALIZED (
   SELECT doc_a AS a, doc_b AS b FROM pairs
   UNION SELECT doc_b, doc_a FROM pairs
 ),
-lab0 AS MATERIALIZED (SELECT id, id AS lab FROM (SELECT DISTINCT a AS id FROM sym)),
-{chain},
-comp AS (SELECT id AS doc_id, lab AS cluster_id FROM lab{rounds}),
-csize AS (SELECT cluster_id, count(*) AS cluster_size FROM comp GROUP BY 1)
-SELECT doc_id, comp.cluster_id, cluster_size
-FROM comp JOIN csize ON comp.cluster_id = csize.cluster_id
+{_components_sql()},
+csize AS (SELECT lab, count(*) AS cluster_size FROM comp GROUP BY 1)
+SELECT id AS doc_id, comp.lab AS cluster_id, cluster_size
+FROM comp JOIN csize ON comp.lab = csize.lab
 """
 
 def q71_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -487,20 +506,19 @@ FROM ranked WHERE rnk = 1
 def q87_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic deduplication END-TO-END: embedding-cosine
     near-dup pairs (q40's LSH-bucketed candidates + exact verify) feed
-    min-label connected components (q50's operator), every vector joins
+    connected components (q50's operator), every vector joins
     back so singletons form their own cluster, and the representative is
     the smallest vec_id — which IS the component label, so `kept` is a
     pure comparison. The whole chain is existing gated operators
-    composed; the oracle replays the identical pair SQL + the identical
-    fixed-depth label propagation."""
+    composed; the oracle replays the identical pair SQL + the shared
+    fixed-depth components chain."""
     from foresttime_builder_spark.operators.ann import embedding_neardup_pairs
     from foresttime_builder_spark.operators.graph import connected_components
 
     emb = load_table(spark, sf_dir, "embeddings")
     # SemDeDup keeps only true semantic duplicates: a HIGH cosine bar
-    # (0.85) — which also keeps components small and dense, so the
-    # label-propagation diameter stays far under the iteration bound
-    # (0.3 produced a sprawling diameter->17 chain at sf0.1)
+    # (0.85) — which also keeps components small and dense (0.3 produced
+    # a sprawling diameter->17 chain at sf0.1)
     pairs = embedding_neardup_pairs(emb, threshold=0.85)
     comp = connected_components(pairs, "id_a", "id_b")
     assigned = (
@@ -520,28 +538,13 @@ def q87_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") == F.col("cluster_id")).alias("kept"),
     )
 
-def _semantic_dedup_oracle(rounds: int | None = None) -> str:
-    """Same layered min-label chain as `_dup_clusters_oracle`, over the
-    embedding near-dup pair SQL, with singleton attach + kept flag."""
+def _semantic_dedup_oracle() -> str:
+    """Connected components (:func:`_components_sql`) over the embedding
+    near-dup pair SQL, with singleton attach + kept flag."""
     from foresttime_builder_spark.operators.ann import (
         embedding_neardup_oracle_sql,
     )
 
-    if rounds is None:
-        from foresttime_builder_spark.operators.graph import MAX_ITER_DEFAULT
-
-        rounds = MAX_ITER_DEFAULT
-    layers = []
-    for i in range(rounds):
-        layers.append(
-            f"lab{i + 1} AS MATERIALIZED ("
-            f"  SELECT n.id, least(n.lab, coalesce(m.minlab, n.lab)) AS lab"
-            f"  FROM lab{i} n LEFT JOIN ("
-            f"    SELECT s.b AS id, min(l.lab) AS minlab"
-            f"    FROM sym s JOIN lab{i} l ON l.id = s.a GROUP BY s.b"
-            f"  ) m ON n.id = m.id)"
-        )
-    chain = ",\n".join(layers)
     return f"""
 WITH pairs AS MATERIALIZED (
   SELECT id_a, id_b FROM ({embedding_neardup_oracle_sql(threshold=0.85)}) p
@@ -550,9 +553,7 @@ sym AS MATERIALIZED (
   SELECT id_a AS a, id_b AS b FROM pairs
   UNION SELECT id_b, id_a FROM pairs
 ),
-lab0 AS MATERIALIZED (SELECT id, id AS lab FROM (SELECT DISTINCT a AS id FROM sym)),
-{chain},
-comp AS (SELECT id, lab FROM lab{rounds}),
+{_components_sql()},
 assigned AS (
   SELECT e.vec_id, coalesce(c.lab, e.vec_id) AS cluster_id
   FROM embeddings e LEFT JOIN comp c ON e.vec_id = c.id
@@ -740,41 +741,13 @@ def _lsh_representatives_oracle(
     n_hashes: int = _MH_N,
     band_size: int = _MH_BAND,
     threshold: float = 0.5,
-    rounds: int | None = None,
 ) -> str:
     """DuckDB twin of :func:`q119_lsh_representatives`: identical minhash/
     banding construction as the q23 oracle, bucket-min star edges via a
     window (min ignores NULL ids; ``<>`` drops NULL-id rows — matching the
     Spark operator's NULL contract), exact-jaccard edge verification, then
-    min-label layers with POINTER JUMPING: each round propagates neighbor
-    minima AND shortcuts ``lab := min(lab, lab[lab])``, so ``rounds``
-    layers cover component diameter ~2^rounds — unconditionally exact for
-    any gate corpus, unlike q50's plain unroll (whose Spark twin raises at
-    the same fixed bound, keeping parity; the q119 Spark side runs the
-    certified star CC with a DIFFERENT bound, so a fixed-depth oracle
-    here could silently desync on a deep hub-chain graph — r12 review
-    finding).  The shortcut join is sound because a label is always the
-    id of a node in the same component (init lab=id; propagate and
-    shortcut both take minima over same-component node ids)."""
-    if rounds is None:
-        from foresttime_builder_spark.operators.graph import MAX_ITER_DEFAULT
-
-        rounds = MAX_ITER_DEFAULT
+    connected components (:func:`_components_sql`)."""
     mins, bands, band_list = _minhash_band_sql(n_hashes, band_size)
-    layers = []
-    for i in range(rounds):
-        layers.append(
-            f"lab{i + 1}p AS MATERIALIZED ("
-            f"  SELECT n.id, least(n.lab, coalesce(m.minlab, n.lab)) AS lab"
-            f"  FROM lab{i} n LEFT JOIN ("
-            f"    SELECT s.b AS id, min(l.lab) AS minlab"
-            f"    FROM sym s JOIN lab{i} l ON l.id = s.a GROUP BY s.b"
-            f"  ) m ON n.id = m.id),\n"
-            f"lab{i + 1} AS MATERIALIZED ("
-            f"  SELECT n.id, least(n.lab, l2.lab) AS lab"
-            f"  FROM lab{i + 1}p n JOIN lab{i + 1}p l2 ON n.lab = l2.id)"
-        )
-    chain = ",\n".join(layers)
     return f"""
 WITH tok AS (
   SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
@@ -828,11 +801,7 @@ sym AS MATERIALIZED (
   UNION SELECT doc_a, doc_b FROM eedges
   UNION SELECT doc_b, doc_a FROM eedges
 ),
-lab0 AS MATERIALIZED (
-  SELECT id, id AS lab FROM (SELECT DISTINCT a AS id FROM sym)
-),
-{chain},
-comp AS (SELECT id, lab FROM lab{rounds}),
+{_components_sql()},
 assigned AS (
   SELECT d.doc_id, coalesce(c.lab, d.doc_id) AS rep_id
   FROM (SELECT doc_id FROM documents WHERE doc_id IS NOT NULL) d

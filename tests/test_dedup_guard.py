@@ -275,19 +275,12 @@ def test_lsh_representatives_cluster_semantics(spark):
         (None, "a b c d e f g h i j"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    stats: dict = {}
-    out = lsh_representatives(
-        df, "doc_id", "text", threshold=0.5, stats=stats
-    ).collect()
+    out = lsh_representatives(df, "doc_id", "text", threshold=0.5).collect()
     got = {r.doc_id: (r.rep_id, r.cluster_size) for r in out}
     assert len(out) == 5 and set(got) == {1, 2, 3, 4, 5}
     assert got[1] == (1, 3) and got[2] == (1, 3) and got[3] == (1, 3)
     assert got[4] == (4, 1) and got[5] == (5, 1)
-    # telemetry: star edges are linear (<= n_docs * n_bands pre-distinct),
-    # verification kept at least the two cluster edges, 3 clusters total
-    assert stats["edges_verified"] >= 2
-    assert stats["edges_raw"] >= stats["edges_verified"]
-    assert stats["clusters"] == 3
+    assert len({r.rep_id for r in out}) == 3
 
 
 def test_lsh_pairs_on_budget_representatives_routes(spark):

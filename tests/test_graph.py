@@ -1,4 +1,5 @@
-"""Connected components (min-label propagation) and the guarded
+"""Connected components (alternating large-star/small-star with a
+driver-side union-find tier), its DuckDB oracle chain, and the guarded
 clustering/finalize entry points built on them."""
 
 from __future__ import annotations
@@ -77,9 +78,32 @@ def test_components_small_tier_string_ids(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
+def _oracle_components(edges) -> dict:
+    """``{id: comp}`` from the DuckDB oracle's min-label chain
+    (:func:`_components_sql`) over the symmetric closure of ``edges``."""
+    import duckdb
+
+    from foresttime_builder_spark.plans.queries.dedup import _components_sql
+
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE e (a BIGINT, b BIGINT)")
+        con.executemany("INSERT INTO e VALUES (?, ?)", edges)
+        return dict(
+            con.execute(
+                "WITH sym AS MATERIALIZED "
+                "(SELECT a, b FROM e UNION SELECT b, a FROM e), "
+                f"{_components_sql('sym')} SELECT id, lab FROM comp"
+            ).fetchall()
+        )
+    finally:
+        con.close()
+
+
 def test_components_star_vs_minlabel_differential(spark):
-    """Both backends must agree exactly on a random multi-component graph
-    with self-loops, duplicate and reversed edges."""
+    """The distributed star rounds and the oracle's min-label chain must
+    agree exactly on a random multi-component graph with self-loops,
+    duplicate and reversed edges."""
     import random
 
     rng = random.Random(7)
@@ -90,44 +114,59 @@ def test_components_star_vs_minlabel_differential(spark):
     df = spark.createDataFrame(edges, "src INT, dst INT")
     star = {
         r["id"]: r["comp"]
-        for r in connected_components(df, algorithm="star").collect()
+        for r in connected_components(df, small_graph_edges=0).collect()
     }
-    minl = {
-        r["id"]: r["comp"]
-        for r in connected_components(
-            df, algorithm="minlabel", max_iter=256
-        ).collect()
-    }
-    assert star == minl and len(star) > 0
+    assert star == _oracle_components(edges) and len(star) > 0
 
 
 def test_components_star_logarithmic_on_adversarial_chain(spark):
-    """A 100k-node PATH graph: min-label needs ~100k rounds (it raises at
-    its 16-round bound); large/small-star must converge in O(log n)
-    rounds and still label every node with the chain's minimum id."""
+    """A 100k-node PATH graph: min-label propagation would need ~100k
+    rounds; large/small-star must converge in O(log n) rounds and still
+    label every node with the chain's minimum id."""
     n = 100_000
     edges = spark.range(n - 1).selectExpr("id AS src", "id + 1 AS dst")
     stats: dict = {}
     # small_graph_edges=0 forces the distributed star rounds — this test
     # exists to prove the O(log n) round bound, which the driver-side
     # union-find tier (gated at SMALL_CC_EDGES) would bypass
-    labels = connected_components(
-        edges, algorithm="star", stats=stats, small_graph_edges=0
-    )
+    labels = connected_components(edges, stats=stats, small_graph_edges=0)
     agg = labels.groupBy("comp").count().collect()
     assert len(agg) == 1 and agg[0]["comp"] == 0 and agg[0]["count"] == n
     # log2(100000) ~ 17; the alternating algorithm typically needs far
     # fewer — anything <= 20 proves the O(n)-round pathology is gone
     assert 1 <= stats["rounds"] <= 20, stats
 
+
+def _cached_rdds(spark) -> set:
+    # ids, not a count: earlier tests' checkpoints may be freed by GC
+    # mid-test, which would mask a new block in a before/after count
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return {i.id() for i in infos if i.numCachedPartitions() > 0}
+
+
+def test_components_non_convergence_releases_caches(spark):
+    """The non-convergence raise must release the persisted edge list and
+    the current round's checkpoint, not leave them cached for the
+    session's lifetime."""
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(100)], "src INT, dst INT"
+    )
+    before = _cached_rdds(spark)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, algorithm="minlabel").collect()
+        connected_components(path, max_iter=1, small_graph_edges=0)
+    assert _cached_rdds(spark) <= before
 
 
-def test_components_rejects_unknown_algorithm(spark):
-    edges = spark.createDataFrame([(1, 2)], "src INT, dst INT")
-    with pytest.raises(ValueError, match="unknown algorithm"):
-        connected_components(edges, algorithm="bogus")
+def test_components_oracle_chain_matches_engine_on_long_path(spark):
+    """A 40-node path is deeper than the oracle's 16 rounds of plain
+    min-label propagation (which leave it in 24 pieces); the oracle's
+    pointer-jumping chain and the Spark operator must both label the
+    whole path with node 0."""
+    edges = [(i, i + 1) for i in range(39)]
+    df = spark.createDataFrame(edges, "src LONG, dst LONG")
+    spark_labels = {r["comp"] for r in connected_components(df).collect()}
+    duck_labels = set(_oracle_components(edges).values())
+    assert spark_labels == duck_labels == {0}
 
 
 def test_cluster_guard_error_fires_before_shuffle(spark):
@@ -149,18 +188,12 @@ def test_cluster_guard_degrade_refines_exact_clusters(spark):
     wholly inside one exact cluster — and on this overlap-dense corpus it
     still finds real multi-doc clusters."""
     wide = _corpus(spark, vocab=120)
-    # the cyclic corpus is one 120-node ring with edges to distance <= 3:
-    # diameter ~20 > MAX_ITER_DEFAULT, so both calls need the raised bound
     exact = {
         r.doc_id: r.cluster_id
         for r in cluster_near_dups(
             wide, "doc_id", "text", threshold=0.5, strategy="prefix",
-            max_iter=64,
         ).collect()
     }
-    # the degraded pair graph is SPARSER than the exact one, so the
-    # chain corpus's component diameter grows past MAX_ITER_DEFAULT —
-    # raise the bound (the operator correctly refuses to silently stop)
     # budget 500 sits between the exact prefix projection (1920) and the
     # banded-LSH stream (384): the exact path degrades, the fallback fits.
     # The budget is forwarded into the fallback (ADVICE r11), so a budget
@@ -168,7 +201,7 @@ def test_cluster_guard_degrade_refines_exact_clusters(spark):
     # which test_cluster_degrade_budget_forwarded asserts.
     degraded = cluster_near_dups(
         wide, "doc_id", "text", threshold=0.5, strategy="prefix",
-        candidate_budget=500, on_budget="degrade", max_iter=64,
+        candidate_budget=500, on_budget="degrade",
     ).collect()
     assert any(r.cluster_size > 1 for r in degraded)
     by_cluster: dict[int, set[int]] = {}
@@ -188,7 +221,7 @@ def test_dedup_finalize_guard_passthrough(spark):
     wide = _corpus(spark, vocab=120)
     kept = dedup_finalize(
         wide, "doc_id", "text", threshold=0.5, strategy="prefix",
-        candidate_budget=500, on_budget="degrade", max_iter=64,
+        candidate_budget=500, on_budget="degrade",
     ).collect()
     # one row per cluster, clusters partition the doc space
     assert len({r.cluster_id for r in kept}) == len(kept)
@@ -246,37 +279,20 @@ def test_semantic_dedup_composition_semantics(spark):
 
 
 def test_components_release_superseded_checkpoint_blocks(spark):
-    """Both iterative backends localCheckpoint() every round; the
-    superseded round's blocks must be EXPLICITLY evicted (GC is
-    nondeterministic and the deserialized blocks OOM'd 8 GB heaps at
-    72.8M edges before the r11 fix).  After a multi-round run, the only
-    storage delta allowed is the returned labels checkpoint — a leak of
-    per-round blocks shows up as delta ~= rounds.  Guards the
-    _free_local_checkpoint(labels_root) convention: freeing the post-drop
-    Project handle instead of the LogicalRDD root is a silent no-op."""
-
-    def n_cached_rdds():
-        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        return sum(1 for i in infos if i.numCachedPartitions() > 0)
-
-    # chain of 13 nodes: min-label needs ~12 rounds (one hop per round),
-    # so a leak would leave ~12 extra checkpoints cached
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "src INT, dst INT"
-    )
-    before = n_cached_rdds()
-    out = connected_components(chain, algorithm="minlabel")
-    assert out.count() == 13
-    assert n_cached_rdds() - before <= 1
-
-    # 101-node path drives the star backend through ~7 contraction rounds
+    """The star rounds localCheckpoint() every round; the superseded
+    round's blocks must be EXPLICITLY evicted (GC is nondeterministic and
+    the deserialized blocks OOM'd 8 GB heaps at 72.8M edges before the
+    r11 fix).  After a multi-round run, the only storage delta allowed is
+    the returned labels checkpoint — a leak of per-round blocks shows up
+    as delta ~= rounds."""
+    # 101-node path drives the star rounds through ~7 contraction rounds
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(100)], "src INT, dst INT"
     )
-    before = n_cached_rdds()
-    out = connected_components(path, algorithm="star")
+    before = _cached_rdds(spark)
+    out = connected_components(path, small_graph_edges=0)
     assert out.count() == 101
-    assert n_cached_rdds() - before <= 1
+    assert len(_cached_rdds(spark) - before) <= 1
 
 
 def test_cluster_degrade_budget_forwarded(spark):
@@ -291,7 +307,7 @@ def test_cluster_degrade_budget_forwarded(spark):
     with pytest.raises(ValueError, match="band_size|shard"):
         cluster_near_dups(
             wide, "doc_id", "text", threshold=0.5, strategy="prefix",
-            candidate_budget=1, on_budget="degrade", max_iter=64,
+            candidate_budget=1, on_budget="degrade",
         )
 
 

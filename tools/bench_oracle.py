@@ -20,37 +20,17 @@ import sys
 import tempfile
 import time
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from tools.check_correctness import duckdb_mem_caps, fresh_con  # noqa: E402
 
-
-def fresh_con(sf_dir: str, mem: str, threads: int | None = None):
-    """A connection capped at ``mem`` (a ``duckdb_mem_caps`` figure)."""
-    c = duckdb.connect()
-    spill = os.path.join(tempfile.gettempdir(), "ftb_duckdb_spill")
-    os.makedirs(spill, exist_ok=True)
-    c.execute(f"SET temp_directory='{spill}'")
-    c.execute(f"SET memory_limit='{mem}'")
-    # threads are PINNED (default 8, override FTB_DUCKDB_THREADS): at this
-    # box's default of 32, per-thread working-set over-allocation kills the
-    # 110 KB NSVB CTE chain (q26's twin) with 'bad allocation' at EVERY
-    # memory_limit tried (64/32/24 GB, reproduced 4x in the r14 judge
-    # session), while threads=8 completes it in ~6 s.  8 also matches the
-    # single-process comparator framing — the oracle column measures an
-    # engine, not a 32-way box race.
-    c.execute(
-        f"SET threads={threads or int(os.environ.get('FTB_DUCKDB_THREADS', '8'))}"
-    )
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    return c
+#: threads are PINNED (default 8, override FTB_DUCKDB_THREADS): at a
+#: default of 32, per-thread working-set over-allocation kills the 110 KB
+#: NSVB CTE chain (q26's twin) with 'bad allocation' at EVERY memory_limit
+#: tried (64/32/24 GB, reproduced 4x at r14), while threads=8 completes it
+#: in ~6 s.  8 also matches the single-process comparator framing — the
+#: oracle column measures an engine, not a 32-way box race.
+THREADS = int(os.environ.get("FTB_DUCKDB_THREADS", "8"))
 
 
 def _run_oracle(con, name: str, sql: str) -> int:
@@ -103,7 +83,6 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as e
-    from tools.check_correctness import duckdb_mem_caps
 
     mem_cap, retry_cap = duckdb_mem_caps(
         os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"),
@@ -122,7 +101,9 @@ def main() -> None:
         for _ in range(args.runs):
             t0 = time.time()
             try:
-                with contextlib.closing(fresh_con(args.sf, mem_cap)) as con:
+                with contextlib.closing(
+                    fresh_con(args.sf, mem_cap, THREADS)
+                ) as con:
                     n_rows = _run_oracle(con, name, oracles[name])
             except Exception as ex:
                 if "emory" not in str(ex) and "allocation" not in str(ex):

@@ -24,9 +24,29 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from foresttime_builder_spark.sources.readers import TPCH_TABLES  # noqa: E402
+
+
+def fresh_con(sf_dir: str, mem: str, threads: int | None = None):
+    """A DuckDB connection over ``sf_dir``'s tables, capped at ``mem`` (a
+    :func:`duckdb_mem_caps` figure), with ``threads`` pinned when given.
+
+    One connection per query: a query that hits DuckDB's memory ceiling
+    otherwise poisons the connection and every later oracle fails with
+    bad-allocation too.  A temp_directory lets the big NSVB-twin CTE
+    chains spill instead of dying at larger SFs."""
+    c = duckdb.connect()
+    spill = os.path.join(tempfile.gettempdir(), "ftb_duckdb_spill")
+    os.makedirs(spill, exist_ok=True)
+    c.execute(f"SET temp_directory='{spill}'")
+    c.execute(f"SET memory_limit='{mem}'")
+    if threads is not None:
+        c.execute(f"SET threads={threads}")
+    for t in TPCH_TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return c
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -121,22 +141,6 @@ def main() -> int:
         os.environ.get("FTB_DUCKDB_MEM"),
     )
 
-    def fresh_con(mem: str):
-        """One connection per query: a query that hits DuckDB's memory
-        ceiling otherwise poisons the connection and every later oracle
-        fails with bad-allocation too. A temp_directory lets the big
-        NSVB-twin CTE chains spill instead of dying at larger SFs."""
-        c = duckdb.connect()
-        spill = os.path.join(tempfile.gettempdir(), "ftb_duckdb_spill")
-        os.makedirs(spill, exist_ok=True)
-        c.execute(f"SET temp_directory='{spill}'")
-        c.execute(f"SET memory_limit='{mem}'")
-        for t in TABLES:
-            p = os.path.join(args.sf, f"{t}.parquet")
-            if os.path.exists(p):
-                c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-        return c
-
     n_pass = n_fail = 0
     for name, fn in sorted(qs.items()):
         t0 = time.time()
@@ -155,7 +159,7 @@ def main() -> int:
             # close on BOTH paths: an oracle OOM (the very scenario the
             # per-query connection exists for) must not leak the
             # connection's memory reservation and spill directory
-            with contextlib.closing(fresh_con(mem_cap)) as con:
+            with contextlib.closing(fresh_con(args.sf, mem_cap)) as con:
                 odf = con.execute(oracles[name]).fetchdf()
         except Exception as ex:
             if "emory" in str(ex):
@@ -168,7 +172,7 @@ def main() -> int:
 
                 _gc.collect()
                 try:
-                    with contextlib.closing(fresh_con(retry_cap)) as con:
+                    with contextlib.closing(fresh_con(args.sf, retry_cap)) as con:
                         odf = con.execute(oracles[name]).fetchdf()
                 except Exception as ex2:
                     print(f"FAIL {name}: oracle error (after retry): {ex2}")
