@@ -196,30 +196,11 @@ def brute_topk_np(
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine for dynamic-width vectors via array higher-order functions.
-
-    HOFs are interpreted per element (zip_with/transform allocate a fresh
-    array per call, every lambda frame is an interpreted expression) —
-    measured ~160 us per pair on the near-dup verify path.  Hot paths with
-    a statically known width use :func:`dot_unrolled` /
-    :func:`cosine_unrolled` instead (same arithmetic, whole-stage
-    codegen'd); this form is kept for callers that genuinely cannot know
-    the width at plan time."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    norm = lambda c: F.sqrt(
-        F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda s, v: s + v)
-    )
-    return dot / (norm(a) * norm(b))
-
-
 def dot_unrolled(a: Column, b: Column, dims: int) -> Column:
-    """Inner product as ``dims`` codegen'd multiply-adds.  Left-associated
-    in index order, exactly like the ``aggregate`` fold in :func:`cosine`
-    (whose leading ``0.0 +`` is value-neutral), so results are
-    bit-identical — only the execution strategy changes: no lambda
+    """Inner product as ``dims`` codegen'd multiply-adds, left-associated
+    in index order.  It replaced an ``aggregate``/``zip_with`` fold with
+    the same order (whose leading ``0.0 +`` is value-neutral), so results
+    are bit-identical — only the execution strategy changed: no lambda
     interpretation, no per-pair array allocation.  Together with the
     native array cast (the lambda-transform cast is CodegenFallback and
     was being projection-collapsed into the per-pair verify), q40's sf1

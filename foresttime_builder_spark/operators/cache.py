@@ -1,4 +1,21 @@
-"""Cache-lifetime helper shared by operators that persist() intermediates."""
+"""Cache lifetimes for operators that persist() or localCheckpoint()
+intermediates: the one owner of every cache an operator hands back.
+
+A frame owns a cache when a finalizer on it releases the cache as soon as
+the frame is garbage-collected.  Two kinds of cache are owned the same way:
+
+- a persisted frame (:func:`release_on_gc`), released by ``unpersist``;
+- a local checkpoint (:func:`local_checkpoint`), released through the
+  RDD under its ``LogicalRDD`` root — ``Dataset.unpersist`` never reaches
+  those blocks, which otherwise live until the JVM's ContextCleaner runs.
+
+The rule for callers: **derive from an owned frame ⇒** :func:`carry_cache`.
+A select, filter or join over an owned frame returns a new frame, and the
+owned one is dropped the moment the caller returns; without the hand-off
+its finalizer fires before the derived plan executes.  A dropped persisted
+cache merely recomputes, but a dropped checkpoint fails the read — Spark
+does not recompute a local checkpoint.
+"""
 
 from __future__ import annotations
 
@@ -22,24 +39,42 @@ def release_on_gc(result: DataFrame, *cached: DataFrame) -> DataFrame:
     return _attach(result, [c._jdf for c in cached])
 
 
-def _attach(owner: DataFrame, jdfs: list) -> DataFrame:
-    """Unpersist ``jdfs`` when ``owner`` is garbage-collected, recording
-    the finalizer and the relations on ``owner`` so :func:`carry_cache`
-    can transfer ownership to an enclosing frame: callers that derive a
-    new DataFrame from ``owner`` (a select, a filter) drop its refcount to
-    zero the moment they return, which would fire the finalizer and
-    unpersist the cache before the derived plan ever executes."""
+def local_checkpoint(df: DataFrame, **kwargs) -> DataFrame:
+    """``df.localCheckpoint(**kwargs)`` that owns its blocks.
 
-    def _release(jdfs=jdfs):
-        for j in jdfs:
-            try:
-                j.unpersist(False)
-            except Exception:
-                pass  # session already stopped / JVM gone
+    The checkpointed plan root is a ``LogicalRDD``; its RDD is what the
+    finalizer unpersists (verified against the Spark 4.1 runtime; guarded
+    so an internals change degrades to ContextCleaner timing, never an
+    error).  :func:`release` frees the blocks at once."""
+    ckpt = df.localCheckpoint(**kwargs)
+    try:
+        return _attach(ckpt, [ckpt._jdf.queryExecution().analyzed().rdd()])
+    except Exception:
+        return ckpt
 
-    fin = weakref.finalize(owner, _release)
+
+def release(df: DataFrame) -> None:
+    """Release every cache ``df`` owns now.  ONLY call on frames that will
+    never be read again: a freed checkpoint fails the read."""
+    for fin in df.__dict__.pop("_ft_cache_finalizers", []):
+        fin()
+
+
+def _unpersist(handles: list) -> None:
+    for h in handles:
+        try:
+            h.unpersist(False)
+        except Exception:
+            pass  # session already stopped / JVM gone
+
+
+def _attach(owner: DataFrame, handles: list) -> DataFrame:
+    """Release ``handles`` — persisted JVM Datasets or checkpoint RDDs, both
+    freed by ``unpersist`` — when ``owner`` is garbage-collected.  The
+    finalizer is recorded on ``owner`` so :func:`carry_cache` can detach it
+    and hand its handles to an enclosing frame."""
+    fin = weakref.finalize(owner, _unpersist, handles)
     owner.__dict__.setdefault("_ft_cache_finalizers", []).append(fin)
-    owner.__dict__.setdefault("_ft_cache_jdfs", []).extend(jdfs)
     return owner
 
 
@@ -48,19 +83,16 @@ def carry_cache(outer: DataFrame, *inners: DataFrame) -> DataFrame:
 
     Query wrappers that post-project an operator result (``op(...).select(
     ...)``) must call this on the frame they actually return, otherwise the
-    operator's persisted intermediates are unpersisted as soon as the inner
-    frame is garbage-collected — before execution — and the cache the
-    operator exists to provide is silently disabled (re-tokenizing the
-    corpus once per plan branch).  Inner finalizers are detached (they never
-    fire) and a single new finalizer owning all their cached relations is
-    attached to ``outer``.  Safe to call on frames without cache metadata —
-    it is then a no-op.
+    operator's caches are released as soon as the inner frame is
+    garbage-collected — before execution: a persisted intermediate is
+    silently recomputed once per plan branch, and a checkpoint read fails.
+    Inner finalizers are detached (they never fire) and a single new
+    finalizer owning all their caches is attached to ``outer``.  Safe to
+    call on frames without cache metadata — it is then a no-op.
     """
-    jdfs: list = []
+    handles: list = []
     for inner in inners:
         for fin in inner.__dict__.pop("_ft_cache_finalizers", []):
-            fin.detach()
-        jdfs.extend(inner.__dict__.pop("_ft_cache_jdfs", []))
-    if not jdfs:
-        return outer
-    return _attach(outer, jdfs)
+            _, _, (owned,), _ = fin.detach()
+            handles.extend(owned)
+    return _attach(outer, handles) if handles else outer

@@ -42,7 +42,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from foresttime_builder_spark.functions.encoding import hash60
-from foresttime_builder_spark.operators.cache import release_on_gc as _release_on_gc
+from foresttime_builder_spark.operators.cache import carry_cache, release_on_gc
 from foresttime_builder_spark.operators.spread import spread as _sp
 
 
@@ -323,7 +323,8 @@ def token_jaccard_pairs(
     Returns columns (doc_a, doc_b, n_common, jaccard) with doc_a < doc_b and
     jaccard rounded to 4 decimals.  ``threshold`` must be in (0, 1].
     ``tokenizer`` defaults to whitespace tokens; pass e.g.
-    ``char_ngrams(text_col)`` for shingle (n-gram) set similarity.
+    ``char_ngrams(text_col)`` for shingle (n-gram) set similarity (a
+    custom tokenizer is distinct-wrapped, see :func:`_docsets`).
 
     Strategies (both lossless — they produce identical results):
 
@@ -374,12 +375,7 @@ def token_jaccard_pairs(
         raise ValueError(f"bad strategy {strategy!r}")
     # the tokenized relation feeds the candidate join AND both verification
     # sides — persist it so the corpus is tokenized once, not 3-4 times
-    tok_col = tokens(text_col) if tokenizer is None else tokenizer
-    docsets = (
-        df.select(F.col(id_col).alias("doc_id"), tok_col.alias("toks"))
-        .withColumn("sz", F.size("toks"))
-        .persist()
-    )
+    docsets = _docsets(df, id_col, text_col, tokenizer).persist()
 
     facts = _corpus_facts(docsets)
     projected = (
@@ -411,7 +407,7 @@ def token_jaccard_pairs(
             ),
         )
     if d.choice == "bitmask":
-        return _release_on_gc(
+        return release_on_gc(
             _jaccard_bitmask(docsets, threshold, facts.vocab), docsets
         )
     if d.choice == "blockmask":
@@ -425,7 +421,7 @@ def token_jaccard_pairs(
         positions, key = None, "token"
         tok = docsets.select("doc_id", "sz", F.explode("toks").alias("token"))
     cand = _prefix_candidates(tok, key, threshold)
-    return _release_on_gc(
+    return release_on_gc(
         _verify_candidates(
             cand, docsets, d.choice, threshold, facts.vocab, positions
         ),
@@ -709,7 +705,7 @@ def _jaccard_bitmask(
             "jaccard",
         )
     )
-    return _release_on_gc(intra.unionByName(inter), masks)
+    return release_on_gc(intra.unionByName(inter), masks)
 
 
 def minhash_signatures(
@@ -903,7 +899,8 @@ def _docsets(
     df: DataFrame, id_col: str, text_col: str, tokenizer: Column | None
 ) -> DataFrame:
     """The ``(doc_id, toks, sz)`` verification input shared by
-    :func:`minhash_lsh_pairs` and :func:`lsh_representatives`.
+    :func:`token_jaccard_pairs`, :func:`minhash_lsh_pairs` and
+    :func:`lsh_representatives`.
 
     A custom tokenizer is distinct-wrapped: the operator's contract is
     token-SET jaccard, and a duplicate-emitting tokenizer would otherwise
@@ -1235,10 +1232,8 @@ def lsh_representatives(
     # cluster_size over one rep_id window — a single linear exchange,
     # no self-join (the CC output is checkpointed, so re-evaluating
     # `assigned` would be cheap, but one pass is cheaper still)
-    return assigned.withColumn(
-        "cluster_size",
-        F.count(F.lit(1)).over(Window.partitionBy("rep_id")),
-    )
+    size = F.count(F.lit(1)).over(Window.partitionBy("rep_id"))
+    return carry_cache(assigned.withColumn("cluster_size", size), comp)
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, n_bits: int = 60) -> DataFrame:
@@ -1578,4 +1573,4 @@ def containment_pairs(
         )
         .select("contained_id", "container_id", "n_common", "containment")
     )
-    return _release_on_gc(out, docsets, tok)
+    return release_on_gc(out, docsets, tok)

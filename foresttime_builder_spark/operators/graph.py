@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from foresttime_builder_spark.operators import cache
+
 #: Round bound for the alternating large-star/small-star algorithm, which
 #: converges in O(log n)-ish rounds on any graph (O(log^2 n) proven bound,
 #: Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14)
@@ -26,22 +28,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 #: 100k-node PATH needs ~10 rounds (measured in tests) where min-label
 #: propagation would need 100k.
 STAR_MAX_ITER = 64
-
-
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Release a localCheckpoint()'s cached blocks.
-
-    ``Dataset.unpersist`` only evicts plans registered through
-    ``Dataset.persist`` — a localCheckpoint's blocks live on the
-    underlying RDD and are otherwise freed only by nondeterministic GC.
-    The checkpointed plan root is a ``LogicalRDD``; unpersisting its RDD
-    drops the blocks immediately (verified against the Spark 4.1 runtime;
-    guarded so an internals change degrades to the old GC behavior, never
-    an error).  ONLY call on frames that will never be read again."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
 
 
 #: edge-count gate for the driver-side union-find tier: below this, the
@@ -99,10 +85,10 @@ def _cc_driver_small(
         .union(raw.select(F.col("b").alias("id")))
         .distinct()
     )
-    labels = (
-        nodes.join(F.broadcast(mapping), on="id", how="left")
-        .select("id", F.coalesce("comp", "id").alias("comp"))
-        .localCheckpoint()
+    labels = cache.local_checkpoint(
+        nodes.join(F.broadcast(mapping), on="id", how="left").select(
+            "id", F.coalesce("comp", "id").alias("comp")
+        )
     )
     if stats is not None:
         stats["rounds"] = 0
@@ -141,7 +127,10 @@ def connected_components(
     travel along edges, so equal-labels-across-every-edge proves the
     partition is exactly the connected components.  Not converging within
     ``max_iter`` rounds raises ``RuntimeError`` too; every exit releases
-    the edge caches.
+    the edge caches.  The returned labels are a local checkpoint that owns
+    its blocks (:mod:`~foresttime_builder_spark.operators.cache`): a caller
+    that derives a frame from them hands that ownership on with
+    ``carry_cache``.
     """
     # cache the edge list once (columnar, compressed — NOT localCheckpoint,
     # whose row-format blocks measured several times larger on the sf1
@@ -187,13 +176,14 @@ def connected_components(
     # exit — return, non-convergence and certificate raises alike
     e = None
     try:
-        e = (
+        e = cache.local_checkpoint(
             raw.filter(F.col("a") != F.col("b"))
             .select(
                 F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi")
             )
-            .distinct()
-            .localCheckpoint(eager=True, storageLevel=_ckpt_level)
+            .distinct(),
+            eager=True,
+            storageLevel=_ckpt_level,
         )
         sig = _sig(e)
         if 0 < sig[0] <= small_graph_edges:
@@ -229,18 +219,19 @@ def connected_components(
             # SMALL-STAR: group by the larger endpoint; connect it and all
             # its smaller neighbors to their minimum.
             gmin = large.groupBy("hi").agg(F.min("lo").alias("m"))
-            new_ckpt = (
+            new_ckpt = cache.local_checkpoint(
                 large.join(gmin, "hi")
                 .select(F.col("m").alias("lo"), F.col("lo").alias("hi"))
                 .union(gmin.select(F.col("m").alias("lo"), F.col("hi")))
                 .filter(F.col("lo") != F.col("hi"))
-                .distinct()
-                .localCheckpoint(eager=True, storageLevel=_ckpt_level)
+                .distinct(),
+                eager=True,
+                storageLevel=_ckpt_level,
             )
             # the round ENTERED with e (checkpointed); the new checkpoint is
             # materialized, so e's edge-count-sized blocks can go — without
             # this, a 64-round run holds 64 edge sets simultaneously
-            _free_local_checkpoint(e)
+            cache.release(e)
             e = new_ckpt
             new_sig = _sig(e)
             converged = new_sig == sig
@@ -260,14 +251,12 @@ def connected_components(
         )
         # node-count-sized; materialized so the edge caches can be released
         # before returning (the caller's consumption re-reads only this)
-        labels = (
+        labels = cache.local_checkpoint(
             nodes.join(
                 e.select(F.col("hi").alias("id"), F.col("lo").alias("comp")),
                 on="id",
                 how="left",
-            )
-            .select("id", F.coalesce("comp", "id").alias("comp"))
-            .localCheckpoint()
+            ).select("id", F.coalesce("comp", "id").alias("comp"))
         )
         # exact certificate: every ORIGINAL edge joins two equal labels (and
         # both endpoints are labeled).  Labels only move along edges, so
@@ -285,7 +274,7 @@ def connected_components(
             .count()
         )
         if bad:
-            _free_local_checkpoint(labels)
+            cache.release(labels)
             raise RuntimeError(
                 f"connected_components(star) certificate failed on {bad} "
                 f"edges — convergence checksum produced an invalid labeling"
@@ -294,7 +283,7 @@ def connected_components(
     finally:
         raw.unpersist()
         if e is not None:
-            _free_local_checkpoint(e)
+            cache.release(e)
 
 
 def cluster_near_dups(
@@ -367,11 +356,12 @@ def cluster_near_dups(
             if "candidate_budget" not in str(exc):
                 raise
             reps = lsh_representatives(df, id_col, text_col, threshold=threshold)
-            return reps.filter(F.col("cluster_size") > 1).select(
+            out = reps.filter(F.col("cluster_size") > 1).select(
                 F.col("doc_id").alias(id_col),
                 F.col("rep_id").alias("cluster_id"),
                 "cluster_size",
             )
+            return cache.carry_cache(out, reps)
     else:
         pairs = token_jaccard_pairs(
             df,
@@ -385,11 +375,10 @@ def cluster_near_dups(
         )
     comp = connected_components(pairs, src="doc_a", dst="doc_b")
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return comp.join(sizes, on="comp").select(
-        F.col("id").alias(id_col),
-        F.col("comp").alias("cluster_id"),
-        "cluster_size",
+    out = comp.join(sizes, on="comp").select(
+        F.col("id").alias(id_col), F.col("comp").alias("cluster_id"), "cluster_size"
     )
+    return cache.carry_cache(out, comp)
 
 
 def dedup_finalize(
@@ -431,7 +420,10 @@ def dedup_finalize(
             "clusters would silently win and a stale frame could mask "
             "the freshly computed pairs"
         )
-    if clusters is None:
+    # a caller's clusters frame keeps its own cache; only clusters built
+    # here hand their labels checkpoint to the returned frame
+    owned = clusters is None
+    if owned:
         clusters = cluster_near_dups(
             df,
             id_col,
@@ -453,8 +445,9 @@ def dedup_finalize(
         F.coalesce(F.col("cluster_size"), F.lit(1)).alias("cluster_size"),
     )
     w = Window.partitionBy("cluster_id").orderBy(F.desc("n_tokens"), F.col(id_col))
-    return (
+    out = (
         joined.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") == 1)
         .select(id_col, "cluster_id", "cluster_size", "n_tokens")
     )
+    return cache.carry_cache(out, clusters) if owned else out

@@ -531,12 +531,13 @@ def q87_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes = assigned.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
-    return assigned.join(sizes, "cluster_id").select(
+    out = assigned.join(sizes, "cluster_id").select(
         "vec_id",
         "cluster_id",
         "cluster_size",
         (F.col("vec_id") == F.col("cluster_id")).alias("kept"),
     )
+    return carry_cache(out, comp)
 
 def _semantic_dedup_oracle() -> str:
     """Connected components (:func:`_components_sql`) over the embedding

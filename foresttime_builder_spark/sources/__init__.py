@@ -1,3 +1,3 @@
-from foresttime_builder_spark.sources.readers import TPCH_TABLES, load_table, load_tables
+from foresttime_builder_spark.sources.readers import TPCH_TABLES, load_table
 
-__all__ = ["TPCH_TABLES", "load_table", "load_tables"]
+__all__ = ["TPCH_TABLES", "load_table"]

@@ -63,12 +63,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return cached(spark, path, build)
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 def register_views(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
 ) -> None:

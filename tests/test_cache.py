@@ -1,5 +1,6 @@
-"""Cache-lifetime semantics: release_on_gc + carry_cache, and plan
-builders that must not uncache the frame they build on.
+"""Cache-lifetime semantics: release_on_gc, local_checkpoint + release,
+carry_cache, and plan builders that must not uncache the frame they build
+on.
 
 The operators persist() intermediate relations (tokenized corpora, mask
 relations) that feed several branches of one returned plan.  The finalizer
@@ -16,7 +17,12 @@ import gc
 from pyspark.sql import functions as F
 
 from foresttime_builder_spark.functions.helpers import apply_layers
-from foresttime_builder_spark.operators.cache import carry_cache, release_on_gc
+from foresttime_builder_spark.operators.cache import (
+    carry_cache,
+    local_checkpoint,
+    release,
+    release_on_gc,
+)
 from foresttime_builder_spark.plans import fia
 from tests.fia_fixtures import spark_db
 
@@ -103,3 +109,26 @@ def test_adjust_mortality_reads_persisted_panel(spark):
         assert _reads_cache(out)
     finally:
         interp.unpersist()
+
+
+def _persisted_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_local_checkpoint_is_owned_like_a_persisted_frame(spark):
+    """A local checkpoint's blocks follow the same owner as a persisted
+    frame's: carry_cache hands them on, dropping the owner frees them, and
+    release() frees them at once."""
+    before = _persisted_ids(spark)
+    ckpt = local_checkpoint(spark.range(10))
+    assert _persisted_ids(spark) - before
+    out = carry_cache(ckpt.select("id"), ckpt)
+    del ckpt
+    gc.collect()
+    assert out.count() == 10, "checkpoint released before the outer plan ran"
+    del out
+    gc.collect()
+    assert _persisted_ids(spark) <= before
+    ckpt = local_checkpoint(spark.range(10))
+    release(ckpt)
+    assert _persisted_ids(spark) <= before

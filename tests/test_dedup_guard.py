@@ -335,9 +335,9 @@ def test_banded_cut_lossless_with_duplicate_emitting_tokenizer(spark):
     prunes pairs the verifier keeps ('x x x x' vs 'x': bitmask jaccard
     1.0, multiset sizes 4 vs 1 fail the 0.5 ratio).  MinHash is
     duplicate-invariant, so the signature stage distinct-wraps custom
-    tokenizers and the pair must survive."""
-    from pyspark.sql import functions as F
-
+    tokenizers and the pair must survive.  The exact operator shares that
+    verification input, so every token_jaccard_pairs strategy must find
+    the same pair."""
     from foresttime_builder_spark.operators.dedup import (
         minhash_lsh_pairs,
         tokens,
@@ -346,11 +346,20 @@ def test_banded_cut_lossless_with_duplicate_emitting_tokenizer(spark):
     df = spark.createDataFrame(
         [(1, "x x x x"), (2, "x")], "doc_id int, text string"
     )
-    out = minhash_lsh_pairs(
-        df, "doc_id", "text", threshold=0.5,
-        tokenizer=tokens("text", distinct=False),
-    ).collect()
-    assert [(r["doc_a"], r["doc_b"], r["jaccard"]) for r in out] == [(1, 2, 1.0)]
+    tokenizer = tokens("text", distinct=False)
+    runs = {
+        "lsh": minhash_lsh_pairs(
+            df, "doc_id", "text", threshold=0.5, tokenizer=tokenizer
+        )
+    }
+    for strategy in ("auto", "bitmask", "prefix"):
+        runs[strategy] = token_jaccard_pairs(
+            df, "doc_id", "text", threshold=0.5, strategy=strategy,
+            tokenizer=tokenizer,
+        )
+    for name, out in runs.items():
+        got = [(r["doc_a"], r["doc_b"], r["jaccard"]) for r in out.collect()]
+        assert got == [(1, 2, 1.0)], name
 
 
 def test_lsh_verify_blockmask_matches_arrays_and_auto(spark):

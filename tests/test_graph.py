@@ -4,6 +4,8 @@ clustering/finalize entry points built on them."""
 
 from __future__ import annotations
 
+import gc
+
 import pytest
 
 from foresttime_builder_spark.operators.graph import (
@@ -410,3 +412,108 @@ def test_precomputed_pairs_identical_to_end_to_end(spark):
     )
     assert e2e_fin == fed_fin and e2e_fin
     pairs.unpersist()
+
+
+def _persisted_ids(spark) -> set:
+    # getPersistentRDDs drops an id the moment it is unpersisted; ids, not
+    # a count, so another test's frame freed mid-test cannot mask a leak
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize("small_graph_edges", [100_000, 0], ids=["union_find", "star"])
+def test_components_labels_released_with_derived_result(spark, small_graph_edges):
+    """The labels checkpoint connected_components returns is owned by the
+    frame a consumer derives from it (carry_cache): once that frame is
+    executed, dropped and collected, no persisted RDD of the call is left
+    for the JVM's ContextCleaner to find."""
+    from foresttime_builder_spark.operators.cache import carry_cache
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)] + [(100, 101)], "src INT, dst INT"
+    )
+    before = _persisted_ids(spark)
+    comp = connected_components(edges, small_graph_edges=small_graph_edges)
+    sizes = carry_cache(comp.groupBy("comp").count(), comp)
+    del comp
+    gc.collect()
+    assert sorted(tuple(r) for r in sizes.collect()) == [(0, 31), (100, 2)]
+    del sizes
+    gc.collect()
+    assert _persisted_ids(spark) <= before
+
+
+def _cluster_near_dups_case(spark, tmp_path):
+    rows = [
+        (1, "a b c d e f g h i j"),
+        (2, "a b c d e f g h i j"),
+        (3, "a b c d e f g h i k"),
+        (4, "p q r s t u v w x y"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    return (
+        cluster_near_dups(df, "doc_id", "text", threshold=0.5),
+        [(1, 1, 3), (2, 1, 3), (3, 1, 3)],
+    )
+
+
+def _lsh_representatives_case(spark, tmp_path):
+    from foresttime_builder_spark.operators.dedup import lsh_representatives
+
+    rows = [(1, "a b c d e"), (2, "a b c d e"), (3, "v w x y z")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    return (
+        lsh_representatives(df, "doc_id", "text", threshold=0.5),
+        [(1, 1, 2), (2, 1, 2), (3, 3, 1)],
+    )
+
+
+def _semantic_dedup_case(spark, tmp_path):
+    from foresttime_builder_spark.plans.queries.dedup import q87_semantic_dedup
+
+    def v(*xs):
+        return [float(x) for x in xs] + [0.0] * (32 - len(xs))
+
+    rows = [
+        (1, v(1, 0)), (2, v(1, 0.01)),
+        (3, v(0, 1)), (4, v(0.01, 1)), (5, v(0.02, 1)),
+        (6, v(1, 1, 1, 1, 1, 1)),
+    ]
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").write.parquet(
+        str(tmp_path / "embeddings.parquet")
+    )
+    return (
+        q87_semantic_dedup(spark, str(tmp_path)),
+        [(1, 1, 2, True), (2, 1, 2, False), (3, 3, 3, True), (4, 3, 3, False),
+         (5, 3, 3, False), (6, 6, 1, True)],
+    )
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_cluster_near_dups_case, _lsh_representatives_case, _semantic_dedup_case],
+    ids=["cluster_near_dups", "lsh_representatives", "q87_semantic_dedup"],
+)
+def test_cc_consumers_own_the_labels_checkpoint(spark, tmp_path, case):
+    """Each consumer derives its result from the CC labels and must hand
+    their checkpoint on: the result still executes after a collection
+    between build and execution (a checkpoint freed early fails the read,
+    Spark does not recompute it), and dropping the result releases it."""
+    before = _persisted_ids(spark)
+    out, expected = case(spark, tmp_path)
+    gc.collect()
+    assert sorted(tuple(r) for r in out.collect()) == expected
+    del out
+    gc.collect()
+    assert _persisted_ids(spark) <= before
+
+
+def test_dedup_finalize_leaves_given_clusters_their_cache(spark):
+    """dedup_finalize takes the labels checkpoint only from clusters it
+    builds itself: a caller's clusters frame stays readable after the
+    finalized frame derived from it is dropped."""
+    small = _corpus(spark, vocab=40)
+    pre = cluster_near_dups(small, "doc_id", "text", threshold=0.5)
+    expected = sorted(tuple(r) for r in pre.collect())
+    dedup_finalize(small, "doc_id", "text", clusters=pre).collect()
+    gc.collect()
+    assert sorted(tuple(r) for r in pre.collect()) == expected

@@ -6,6 +6,11 @@ DuckDB against the same parquet tables, then compares row count, schema
 pre-rounding value sits dangerously close to a rounding boundary (those could
 hash-mismatch between engines even when semantically equal).
 
+Each query must also release what it caches: the persisted RDDs are
+recorded before the query, and one the query added that is still persisted
+once the result is compared, dropped and garbage-collected fails it as a
+leak.
+
 Usage: python tools/check_correctness.py [--sf DIR] [--only q08,q09]
 """
 
@@ -13,7 +18,7 @@ from __future__ import annotations
 
 import argparse
 import contextlib
-import math
+import gc
 import os
 import sys
 import tempfile
@@ -64,7 +69,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns), ignore_index=True, na_position="last")
 
 
-def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
     errs = []
     if sorted(sdf.columns) != sorted(odf.columns):
         errs.append(f"schema: spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}")
@@ -122,6 +127,49 @@ def duckdb_mem_caps(phys_bytes: int, override: str | None = None) -> tuple[str, 
     return f"{mib * 60 // 100}MiB", f"{mib * 45 // 100}MiB"
 
 
+def run_oracle(sql: str, sf_dir: str, mem_cap: str, retry_cap: str) -> pd.DataFrame:
+    """``sql`` on a fresh DuckDB connection, retried once at ``retry_cap``
+    when it runs out of memory."""
+    try:
+        # close on BOTH paths: an oracle OOM (the very scenario the
+        # per-query connection exists for) must not leak the
+        # connection's memory reservation and spill directory
+        with contextlib.closing(fresh_con(sf_dir, mem_cap)) as con:
+            return con.execute(sql).fetchdf()
+    except Exception as ex:
+        if "emory" not in str(ex):
+            raise
+    # in a long 78-oracle run the process RSS (JVM + pandas
+    # materializations) eats the allocator's headroom; retry once after a
+    # GC with a cap that still fits the giant carbon-CTE twins'
+    # unspillable working set (q27/q52 were flaky-OOM at sf0.1 exactly
+    # this way, passing solo)
+    gc.collect()
+    with contextlib.closing(fresh_con(sf_dir, retry_cap)) as con:
+        return con.execute(sql).fetchdf()
+
+
+def check_query(fn, spark, oracle, sf_dir, mem_cap, retry_cap) -> tuple[str, list[str]]:
+    """Run one query on Spark and, when it has one, its oracle on DuckDB.
+    Returns a summary and the errors (none when the query passes).  Every
+    frame it builds is dropped when it returns."""
+    t0 = time.time()
+    try:
+        sdf = fn(spark, sf_dir).toPandas()
+    except Exception as ex:
+        return "spark error", [str(ex)]
+    summary = f"rows={len(sdf)} ({time.time() - t0:.1f}s)"
+    if oracle is None:
+        return summary, []
+    try:
+        odf = run_oracle(oracle, sf_dir, mem_cap, retry_cap)
+    except Exception as ex:
+        return summary, [f"oracle error: {ex}"]
+    risk = boundary_risk(sdf)
+    tag = f" [boundary-risk={risk}]" if risk else ""
+    return summary + tag, compare(sdf, odf)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
@@ -141,65 +189,28 @@ def main() -> int:
         os.environ.get("FTB_DUCKDB_MEM"),
     )
 
+    jsc = spark.sparkContext._jsc
     n_pass = n_fail = 0
     for name, fn in sorted(qs.items()):
-        t0 = time.time()
-        try:
-            sdf = fn(spark, args.sf).toPandas()
-        except Exception as ex:
-            print(f"FAIL {name}: spark error: {ex}")
-            n_fail += 1
-            continue
-        t_spark = time.time() - t0
-        if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(sdf)} rows ({t_spark:.1f}s)")
-            n_pass += 1
-            continue
-        try:
-            # close on BOTH paths: an oracle OOM (the very scenario the
-            # per-query connection exists for) must not leak the
-            # connection's memory reservation and spill directory
-            with contextlib.closing(fresh_con(args.sf, mem_cap)) as con:
-                odf = con.execute(oracles[name]).fetchdf()
-        except Exception as ex:
-            if "emory" in str(ex):
-                # in a long 78-oracle run the process RSS (JVM + pandas
-                # materializations) eats the allocator's headroom; retry
-                # once after a GC with a cap that still fits the giant
-                # carbon-CTE twins' unspillable working set (q27/q52 were
-                # flaky-OOM at sf0.1 exactly this way, passing solo)
-                import gc as _gc
-
-                _gc.collect()
-                try:
-                    with contextlib.closing(fresh_con(args.sf, retry_cap)) as con:
-                        odf = con.execute(oracles[name]).fetchdf()
-                except Exception as ex2:
-                    print(f"FAIL {name}: oracle error (after retry): {ex2}")
-                    n_fail += 1
-                    continue
-            else:
-                print(f"FAIL {name}: oracle error: {ex}")
-                n_fail += 1
-                continue
-        errs = compare(name, sdf, odf)
-        risk = boundary_risk(sdf)
-        tag = f" [boundary-risk={risk}]" if risk else ""
-        if errs:
-            print(f"FAIL {name}: rows={len(sdf)}{tag}")
-            for err in errs[:4]:
-                print(f"     {err}")
-            n_fail += 1
-        else:
-            print(f"PASS {name}: rows={len(sdf)} ({t_spark:.1f}s){tag}")
-            n_pass += 1
-        # release the per-query frames before the next oracle: 78 pandas
-        # materializations otherwise ratchet the process RSS and starve
-        # the biggest DuckDB twins mid-sweep
-        del sdf, odf
-        import gc as _gc
-
-        _gc.collect()
+        baseline = set(jsc.getPersistentRDDs().keySet())
+        summary, errs = check_query(
+            fn, spark, oracles.get(name), args.sf, mem_cap, retry_cap
+        )
+        # leak gate: with the result compared and dropped (and the
+        # per-query pandas frames freed before the next oracle), every
+        # cache the query persisted or checkpointed must be released, not
+        # left to the JVM's ContextCleaner.  RDD ids, not a count: the
+        # cleaner freeing an earlier leak mid-query would offset a new one
+        gc.collect()
+        leaked = set(jsc.getPersistentRDDs().keySet()) - baseline
+        if leaked:
+            errs.append(f"leak: {len(leaked)} persisted RDD(s) left behind")
+        verdict = "FAIL" if errs else "PASS" if name in oracles else "ROWS-ONLY"
+        print(f"{verdict} {name}: {summary}")
+        for err in errs[:4]:
+            print(f"     {err}")
+        n_fail += bool(errs)
+        n_pass += not errs
     print(f"\n{n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0
 
