@@ -23,9 +23,19 @@ assignment O(N·k) and probe scan O(N/k · probes) balance at k ~ √N).
 The DuckDB oracle twins derive the identical parameters from the same
 counts via integer comparison chains, so the gates hold at every SF.
 Centroid assignment runs as a vectorized Arrow kernel with the k-row
-centroid matrix in the task closure, accumulating dots in index order for
-bit-parity with the SQL fold (see ``_assign_arrow`` for why the
+centroid matrix in the task closure (see ``_assign_arrow`` for why the
 relational forms were measured 10-50x slower).
+
+All numpy scoring — centroid distances and the one exact cosine top-k
+kernel (:func:`_cosine_topk`) behind both brute force and IVF — sums
+inner products with the index-order fold (:func:`_fold_dots`), never a
+GEMM.  The fold is the same left-associated chain as ``dot_unrolled``
+and DuckDB's ``list_dot_product``, so raw cosines are bit-identical to
+the oracles'.  A GEMM re-associates the sum: on a 512x16384x64 draw it
+differed from the fold in 5.88M of 8.39M entries, and a value within
+~1e-14 of a 6-dp rounding step then rounds the other way.  The fold
+costs more CPU (about 0.28 s vs 0.006 s for 80 probes x 20,000 x 64);
+that is the price of oracle parity.
 """
 
 from __future__ import annotations
@@ -106,8 +116,181 @@ def signature_bits(vec: Column, dims: int, n_bits: int) -> Column:
     return F.concat(*bits)
 
 
+#: probes of the IVF operator and of q17/q101 are the ids ``% PROBE_MOD == 0``
+PROBE_MOD = 25
+
+#: extra local candidates kept per probe by :func:`_cosine_topk` beyond
+#: ``k``: the kernel's 6-dp bucket ``floor(x*1e6+0.5)`` can sit one step
+#: off the JVM's HALF_UP ``round`` for a value within an ulp of a half-way
+#: point, and a few dozen spare local candidates absorb such strays
+_MARGIN = 32
+_PROBE_BLOCK = 256  # probe rows per scoring block
+_MEMB_CHUNK = 16384  # member rows per scoring chunk
+
+_KERNEL_SCHEMA = (
+    "probe_id long, neighbor_id long, cosine_raw double, is_nan boolean"
+)
+
+
+def _fold_dots(A, BT):
+    """(n x d) x (d x m) -> n x m inner products accumulated in index order
+    (a left fold over d, bit-identical to ``dot_unrolled`` and DuckDB's
+    ``list_dot_product``), NOT a GEMM.  ``BT`` is the contiguous transposed
+    right side and every term is multiplied into one preallocated temp —
+    measured 0.95 -> 0.28 s at 80 x 20,000 x 64 over the strided form."""
+    import numpy as np
+
+    acc = np.zeros((A.shape[0], BT.shape[1]))
+    tmp = np.empty_like(acc)
+    for j in range(A.shape[1]):
+        np.multiply(A[:, j, None], BT[j], out=tmp)
+        acc += tmp
+    return acc
+
+
+def _fold_self(A):
+    """Per-row self inner products of ``A`` in the same index order."""
+    import numpy as np
+
+    acc = np.zeros(A.shape[0])
+    for col in A.T:
+        acc += col * col
+    return acc
+
+
+def _top_block(cos, key, ids2d, selfm, width):
+    """Tie-safe top-``width`` per row by (key asc, id asc); returns
+    (cos, key, ids, selfmask) column-pruned arrays."""
+    import numpy as np
+
+    m = key.shape[1]
+    if m > 4 * width:
+        part = np.argpartition(key, 4 * width - 1, axis=1)[:, : 4 * width]
+        keyp = np.take_along_axis(key, part, axis=1)
+        # boundary-tie detection: an EXCLUDED candidate tying the largest
+        # kept key means the partition chose an arbitrary subset of a tie
+        # group — resolve those rows by full sort
+        kth = keyp.max(axis=1, keepdims=True)
+        bad = (key == kth).sum(axis=1) > (keyp == kth).sum(axis=1)
+        for r in np.where(bad)[0]:
+            full = np.lexsort((ids2d[r], key[r]))[: 4 * width]
+            part[r] = full
+            keyp[r] = key[r][full]
+        cosp = np.take_along_axis(cos, part, axis=1)
+        idp = np.take_along_axis(ids2d, part, axis=1)
+        selfp = np.take_along_axis(selfm, part, axis=1)
+    else:
+        cosp, keyp, idp, selfp = cos, key, ids2d, selfm
+    order = np.lexsort((idp, keyp), axis=1)[:, :width]
+    return (
+        np.take_along_axis(cosp, order, axis=1),
+        np.take_along_axis(keyp, order, axis=1),
+        np.take_along_axis(idp, order, axis=1),
+        np.take_along_axis(selfp, order, axis=1),
+    )
+
+
+def _cosine_topk(pvecs, pids, mvecs, mids, k: int):
+    """The one exact cosine top-k kernel: for every probe, its local top
+    ``k + _MARGIN`` members by cosine, as a pandas frame of
+    ``_KERNEL_SCHEMA``.  ``pvecs``/``mvecs`` are 1-D arrays of vectors,
+    ``pids``/``mids`` their ids.  A global window (:func:`_rank_topk`)
+    over the union of every call's rows then takes the exact top-k.
+
+    Ordering parity with the engines' ``ORDER BY cosine DESC, neighbor_id``:
+    - the raw cosine is the index-order fold dot over the folded norms
+      (:func:`_fold_dots`), bit-identical to the oracle's;
+    - the cut ranks by the 6-dp cosine bucket, not the raw value, so
+      candidates that round equal resolve by id here exactly as in the
+      global window — however many share the bucket (a raw-value cut
+      keeps the raw-largest of a group of near-duplicates, not the
+      smallest ids);
+    - NaN cosines (NaN-component vectors — ``_valid(cosine=True)``
+      already excludes NULL-component and zero-norm ones) rank FIRST, as
+      both engines treat NaN as greatest: the sort key maps NaN -> -inf so
+      they survive the cut, and each row carries an explicit ``is_nan``
+      flag because the pandas->Arrow conversion turns float NaN into
+      NULL, which Spark sorts last under DESC (:func:`_restore_nan`);
+    - bucket ties are id-resolved even at the cut (see
+      :func:`_top_block`), so the smallest ids of a tie group are kept;
+    - a probe's own row is keyed last and dropped after selection.
+    Members are scored in chunks of ``_MEMB_CHUNK`` (a skew-collapsed IVF
+    list never materializes a score matrix beyond block x chunk) with a
+    running per-probe pool merged tie-safely across chunks: a dropped id
+    always has >= take smaller ids at the same key in its own chunk, so
+    the merged top-take is exact."""
+    import numpy as np
+    import pandas as pd
+
+    if not len(pids) or not len(mids):
+        return pd.DataFrame(
+            {"probe_id": [], "neighbor_id": [], "cosine_raw": [], "is_nan": []}
+        ).astype({"probe_id": "int64", "neighbor_id": "int64",
+                  "cosine_raw": "float64", "is_nan": "bool"})
+    take = k + _MARGIN
+    P = np.stack(pvecs).astype("float64")
+    pnorm = np.sqrt(_fold_self(P))
+    blocks = range(0, len(pids), _PROBE_BLOCK)
+    pools = [None] * len(blocks)  # per block: (cos, key, ids, selfmask)
+    for mlo in range(0, len(mids), _MEMB_CHUNK):
+        M = np.stack(mvecs[mlo : mlo + _MEMB_CHUNK]).astype("float64")
+        MT = np.ascontiguousarray(M.T)
+        ids = mids[mlo : mlo + _MEMB_CHUNK]
+        mnorm = np.sqrt(_fold_self(M))
+        for b, lo in enumerate(blocks):
+            bp = pids[lo : lo + _PROBE_BLOCK]
+            S = _fold_dots(P[lo : lo + _PROBE_BLOCK], MT) / (
+                pnorm[lo : lo + _PROBE_BLOCK, None] * mnorm[None, :]
+            )
+            selfm = ids[None, :] == bp[:, None]
+            key = -np.floor(S * 1e6 + 0.5)
+            key[np.isnan(S)] = -np.inf
+            key[selfm] = np.inf
+            top = _top_block(S, key, np.broadcast_to(ids, S.shape), selfm, take)
+            if pools[b] is not None:
+                merged = (np.concatenate(ab, axis=1) for ab in zip(pools[b], top))
+                top = _top_block(*merged, take)
+            pools[b] = top
+    out = []
+    for lo, (cosq, _, idq, selfq) in zip(blocks, pools):
+        keep = ~selfq.ravel()
+        bp = pids[lo : lo + _PROBE_BLOCK]
+        cos = cosq.ravel()[keep]
+        out.append(pd.DataFrame({
+            "probe_id": np.repeat(bp, cosq.shape[1])[keep],
+            "neighbor_id": idq.ravel()[keep],
+            "cosine_raw": cos,
+            "is_nan": np.isnan(cos),
+        }))
+    return pd.concat(out, ignore_index=True)
+
+
+def _restore_nan(local: DataFrame) -> DataFrame:
+    """Kernel rows -> (probe_id, neighbor_id, cosine): the 6-dp rounded
+    cosine, with a literal NaN where the kernel flagged one."""
+    return local.withColumn(
+        "cosine",
+        F.when(F.col("is_nan"), F.lit(float("nan"))).otherwise(
+            F.round(F.col("cosine_raw"), 6)
+        ),
+    )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The one rank tail of every top-k operator: per probe, the first
+    ``k`` rows by (cosine desc, neighbor_id) — the oracles' ordering."""
+    w = W.partitionBy("probe_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("probe_id", "neighbor_id", "cosine", "rank")
+    )
+
+
 #: hard ceiling on the probe set a brute-force scan will ship to every task.
-#: Probes ride in the task closure (they must: each partition matmuls the
+#: Probes ride in the task closure (they must: each partition scores the
 #: whole probe matrix), so an unbounded probe side is a driver/executor OOM
 #: at scale — callers with more probes should batch them or use lsh/ivf.
 MAX_BRUTE_PROBES = 1024
@@ -119,30 +302,22 @@ def brute_topk_np(
     k: int,
     vec_col: str = "vec",
     id_col: str = "vec_id",
-    margin: int = 32,
     max_probes: int = MAX_BRUTE_PROBES,
 ) -> DataFrame:
-    """Brute-force cosine top-k with a vectorized numpy kernel.
+    """Brute-force cosine top-k with the shared numpy kernel.
 
     ``probes`` is a DataFrame of (probe_id, probe_vec).  It is collected to
     the driver and shipped in the task closure — the probe set must be tiny
     next to the corpus, which is the side that scales — so the collect is
     bounded: if it exceeds ``max_probes`` rows the operator raises instead
-    of silently OOM-ing the driver at scale.  Each input partition computes
-    the full probe×partition similarity matrix with one BLAS matmul and
-    emits only its local top ``k + margin`` per probe; a global window then
-    takes the exact top-k.  Arrow traffic is O(partitions × probes ×
+    of silently OOM-ing the driver at scale.  Each Arrow batch of the
+    corpus runs :func:`_cosine_topk` against the whole probe set and emits
+    only its local top ``k + _MARGIN`` per probe; a global window then
+    takes the exact top-k.  Arrow traffic is O(batches × probes ×
     (k+margin)) instead of O(|base| × probes) — the scan stays distributed
-    and nothing quadratic leaves the workers.
-
-    ``margin`` guards the later round-to-6-decimals tie-break: a candidate
-    can only displace another after rounding if their raw cosines are
-    within 5e-7, so keeping a few dozen extra local candidates makes the
-    pruned result identical to the unpruned one.
+    and nothing quadratic leaves the workers.  Ties, NaN cosines and the
+    probe's own row rank exactly as in :func:`brute_topk_oracle_sql`.
     """
-    import numpy as np
-    import pandas as pd
-
     # junk guard: a NULL vector crashes np.stack mid-task, a NULL id
     # cannot be reported (shared contract — see _valid)
     base = _valid(base, id_col, vec_col, cosine=True)
@@ -156,44 +331,44 @@ def brute_topk_np(
             f"brute_topk_np probe set exceeds max_probes={max_probes}; "
             "batch the probes or use lsh_topk/ivf_topk for large probe sides"
         )
-
-    P = np.stack(probes_pdf["probe_vec"].to_numpy()).astype("float64")
-    pnorm = np.linalg.norm(P, axis=1, keepdims=True)
-    probe_ids = probes_pdf["probe_id"].to_numpy()
-    take = k + margin
+    pvecs = probes_pdf["probe_vec"].to_numpy()
+    pids = probes_pdf["probe_id"].to_numpy()
 
     def part(batches):
         for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            ids = pdf[id_col].to_numpy()
-            mnorm = np.linalg.norm(M, axis=1, keepdims=True)
-            # dot / (|p|·|m|), matching the dot-then-normalize arithmetic of
-            # the SQL formulation (not pre-normalized vectors)
-            S = (P @ M.T) / (pnorm * mnorm.T)  # probes × partition rows
-            n = S.shape[1]
-            top = min(take, n)
-            idx = np.argpartition(-S, top - 1, axis=1)[:, :top]
-            out = {
-                "probe_id": np.repeat(probe_ids, top),
-                "neighbor_id": ids[idx].ravel(),
-                "cosine_raw": np.take_along_axis(S, idx, axis=1).ravel(),
-            }
-            yield pd.DataFrame(out)
+            if len(pdf):
+                yield _cosine_topk(
+                    pvecs, pids, pdf[vec_col].to_numpy(), pdf[id_col].to_numpy(), k
+                )
 
-    local = base.mapInPandas(
-        part, schema="probe_id LONG, neighbor_id LONG, cosine_raw DOUBLE"
-    ).filter(F.col("probe_id") != F.col("neighbor_id"))
-    from pyspark.sql import Window as W
+    local = base.select(id_col, vec_col).mapInPandas(part, _KERNEL_SCHEMA)
+    return _rank_topk(_restore_nan(local), k)
 
-    scored = local.withColumn("cosine", F.round(F.col("cosine_raw"), 6))
-    w = W.partitionBy("probe_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cosine", "rank")
-    )
+
+def brute_topk_oracle_sql(table: str, probe_where: str, k: int) -> str:
+    """DuckDB twin of :func:`brute_topk_np` over ``table``'s (vec_id,
+    embedding): every probe row matching ``probe_where`` (a predicate
+    over ``vid``) against every other valid row."""
+    return f"""
+WITH base AS (
+  SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS vec
+  FROM {_valid_sql(table, "vec_id", "embedding", cosine=True)}
+),
+pairs AS (
+  SELECT p.vid AS probe_id, b.vid AS neighbor_id,
+         round(list_dot_product(p.vec, b.vec)
+               / (sqrt(list_dot_product(p.vec, p.vec))
+                  * sqrt(list_dot_product(b.vec, b.vec))), 6) AS cosine
+  FROM (SELECT * FROM base WHERE {probe_where}) p
+  JOIN base b ON p.vid != b.vid
+),
+ranked AS (
+  SELECT *, row_number() OVER
+    (PARTITION BY probe_id ORDER BY cosine DESC, neighbor_id) AS rank
+  FROM pairs
+)
+SELECT probe_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}
+"""
 
 
 def dot_unrolled(a: Column, b: Column, dims: int) -> Column:
@@ -212,17 +387,11 @@ def dot_unrolled(a: Column, b: Column, dims: int) -> Column:
     return out
 
 
-def cosine_unrolled(
-    a: Column, b: Column, dims: int,
-    norm_a: Column | None = None, norm_b: Column | None = None,
-) -> Column:
-    """Codegen'd cosine; pass precomputed per-VECTOR norms (computed once
-    per row before the pair join) so the verify stage does one unrolled
-    dot instead of three."""
-    na = F.sqrt(dot_unrolled(a, a, dims)) if norm_a is None else norm_a
-    nb = F.sqrt(dot_unrolled(b, b, dims)) if norm_b is None else norm_b
-    return dot_unrolled(a, b, dims) / (na * nb)
-
+def cosine_unrolled(a: Column, b: Column, dims: int) -> Column:
+    """Codegen'd cosine: the unrolled dot over the unrolled norms."""
+    return dot_unrolled(a, b, dims) / (
+        F.sqrt(dot_unrolled(a, a, dims)) * F.sqrt(dot_unrolled(b, b, dims))
+    )
 
 
 def _valid(
@@ -300,6 +469,35 @@ def lsh_topk(
     hyperplanes); verification always uses the vector's full width, probed
     once at plan time so the unrolled codegen'd cosine covers every
     component exactly like the array-fold form it replaced."""
+    pairs = _lsh_bucket_pairs(
+        emb, id_col, vec_col, dims, n_bits, target_occupancy,
+        lambda a, b: a != b,
+    )
+    return _rank_topk(
+        pairs.select(
+            F.col("id_a").alias("probe_id"),
+            F.col("id_b").alias("neighbor_id"),
+            "cosine",
+        ),
+        k,
+    )
+
+
+def _lsh_bucket_pairs(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dims: int,
+    n_bits: int | str,
+    target_occupancy: int,
+    keep,
+) -> DataFrame:
+    """The LSH candidate join shared by :func:`lsh_topk` and
+    :func:`embedding_neardup_pairs`: valid rows, ``dims``-wide hyperplane
+    signature of ``n_bits`` bits (``'auto'``: :func:`adaptive_bits` from one
+    count), bucket self-join filtered by ``keep(id_a, id_b)``.  Returns
+    (id_a, id_b, cosine) with the 6-dp rounded cosine over the probed full
+    vector width."""
     emb = _valid(emb, id_col, vec_col, cosine=True)
     vdims = _probe_width(emb, vec_col)
     if n_bits == "auto":
@@ -308,33 +506,20 @@ def lsh_topk(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     ).withColumn("bucket", signature_bits(F.col("vec"), dims, n_bits))
-
     left = _spread(
-        base.select(
-            F.col("vid").alias("probe_id"),
-            F.col("vec").alias("pvec"),
-            "bucket",
-        )
+        base.select(F.col("vid").alias("id_a"), F.col("vec").alias("vec_a"), "bucket")
     )
-    pairs = left.join(base, on="bucket").filter(F.col("probe_id") != F.col("vid"))
+    pairs = left.join(base, on="bucket").filter(keep(F.col("id_a"), F.col("vid")))
     # norms INLINE, not as precomputed columns: the threshold filter sinks
     # into the join condition either way, and a half-materialized /
     # half-inlined condition measured 2.4x slower than the fully inline
     # form (81 s vs 34 s at sf1) — see BASELINE.md round-7 notes
-    scored = pairs.select(
-        "probe_id",
-        F.col("vid").alias("neighbor_id"),
-        F.round(cosine_unrolled(F.col("pvec"), F.col("vec"), vdims), 6).alias(
+    return pairs.select(
+        "id_a",
+        F.col("vid").alias("id_b"),
+        F.round(cosine_unrolled(F.col("vec_a"), F.col("vec"), vdims), 6).alias(
             "cosine"
         ),
-    )
-    w = W.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cosine", "rank")
     )
 
 
@@ -514,18 +699,17 @@ def _assign_arrow(
     INTERPRETED (~110 us/eval measured; 19 s for 20k x 256 at sf1 vs 1.2 s
     for an 8-term distance) — the numpy kernel does the same N*k*dims
     flops in ~0.1 s.  Arithmetic parity with the SQL twin is exact by
-    construction: the dot accumulates in INDEX ORDER over a dims-loop of
-    vectorized adds (same left-associated fold as ``dot_unrolled`` / the
-    oracle's ``+``-chain), the rounding is the same ``floor(x*1e6+0.5)/
-    1e6``, and ties resolve to the smallest cid (stable argsort /
-    first-occurrence argmin over cid-ascending columns == ``ORDER BY
-    dist, cid``).  Returns (vid, cid) rows — ``top`` nearest per vector.
+    construction: the dot is the index-order fold (:func:`_fold_dots`),
+    the rounding is the same ``floor(x*1e6+0.5)/1e6``, and ties resolve
+    to the smallest cid (stable argsort / first-occurrence argmin over
+    cid-ascending columns == ``ORDER BY dist, cid``).  Returns (vid, cid)
+    rows — ``top`` nearest per vector.
     """
     import numpy as np
     import pandas as pd
 
     cent_rows = sorted(cent_rows, key=lambda r: r["cid"])
-    C = np.array([list(r["cvec"]) for r in cent_rows], dtype="float64")
+    CT = np.array([list(r["cvec"]) for r in cent_rows], dtype="float64").T.copy()
     CC = np.array([r["cc"] for r in cent_rows], dtype="float64")
     cids = np.array([r["cid"] for r in cent_rows], dtype="int32")
 
@@ -535,9 +719,7 @@ def _assign_arrow(
                 continue
             M = np.stack(pdf["vec"].to_numpy()).astype("float64")
             VV = pdf["vv"].to_numpy(dtype="float64")
-            acc = np.zeros((len(pdf), len(cids)))
-            for j in range(dims):  # index order == the SQL fold
-                acc += M[:, j : j + 1] * C[:, j][None, :]
+            acc = _fold_dots(M, CT)
             dist = np.floor((VV[:, None] - 2.0 * acc + CC[None, :]) * 1e6 + 0.5) / 1e6
             # NaN distances (NaN-component vectors, or centroids whose
             # Lloyd mean went NaN) must sort LAST like the oracle's
@@ -601,6 +783,98 @@ def _kmeans_build(
     return cent_rows, lists
 
 
+def _quantizer_setup(
+    emb: DataFrame, id_col: str, vec_col: str, dims: int | None, op: str
+) -> tuple[DataFrame, int, int]:
+    """The set-up shared by :func:`ivf_topk` and
+    :func:`kmeans_coverage_sample`: valid rows, the probed vector width (a
+    pinned ``dims`` that disagrees raises rather than silently truncating
+    the arithmetic), one row count, and the spread (vid, vec, vv) base
+    with its self-dot.  Returns (base, dims, n_rows)."""
+    emb = _valid(emb, id_col, vec_col, cosine=True)
+    vdims = _probe_width(emb, vec_col)
+    if dims is not None and dims != vdims:
+        raise ValueError(
+            f"{op}: dims={dims} but {vec_col!r} carries {vdims} "
+            f"components; pass dims=None to use the probed width"
+        )
+    base = _spread(
+        emb.select(
+            F.col(id_col).alias("vid"),
+            F.col(vec_col).cast("array<double>").alias("vec"),
+        )
+    )
+    return _with_self_dot(base, "vec", "vv", vdims), vdims, emb.count()
+
+
+def _ivf_params(
+    n_rows: int,
+    dims: int,
+    k: int,
+    k_clusters: int | str,
+    nprobe: int | str,
+    candidate_budget: int | None,
+    on_budget: str,
+) -> tuple[int, int]:
+    """IVF parameter policy, pure and Spark-free: ``(k_clusters, nprobe)``
+    for a corpus of ``n_rows`` ``dims``-wide vectors.  ``'auto'`` derives
+    k from :func:`adaptive_k_clusters` and nprobe from
+    :func:`adaptive_nprobe`; nprobe is capped at k.
+
+    With a ``candidate_budget`` the projected (probe, list) pair stream
+    ``n_probes · nprobe`` is checked against it.  Since the cogroup
+    re-rank, candidates are SCANNED inside the per-list kernel and never
+    materialize as rows; what hits the shuffle is the pair stream — each
+    pair ships the probe vector in (dims*8 B) and at most k+margin scored
+    rows out (24 B each) — so the 64 B/candidate budget currency is
+    re-denominated to that byte weight (a guard crossing regimes must
+    re-denominate for the target row size — dedup.py's degrade ladder
+    does the same).  Over budget, ``on_budget='error'`` raises naming the
+    levers and ``'degrade'`` lowers nprobe to the largest value that fits;
+    when even nprobe=1 does not fit, both postures raise."""
+    if on_budget not in ("error", "degrade"):
+        raise ValueError(f"bad on_budget {on_budget!r}")
+    if k_clusters == "auto":
+        k_clusters = adaptive_k_clusters(n_rows)
+    if nprobe == "auto":
+        nprobe = adaptive_nprobe(k_clusters)
+    nprobe = min(nprobe, k_clusters)
+    if candidate_budget is None:
+        return k_clusters, nprobe
+    n_probes = max(1, n_rows // PROBE_MOD)
+    bytes_per_pair = dims * 8 + 48 + (k + _MARGIN) * 24
+    pair_budget = candidate_budget * 64 // bytes_per_pair
+    projected = n_probes * nprobe
+    if projected <= pair_budget:
+        return k_clusters, nprobe
+    fit = pair_budget // n_probes
+    if fit < 1:
+        # there is no degrade below one list per probe, so BOTH postures
+        # raise — the same 'fallback does not fit' regime the dedup
+        # degrade path raises on
+        raise ValueError(
+            f"ivf_topk: even nprobe=1 projects "
+            f"~{n_probes:,} probe-list pairs "
+            f"(~{bytes_per_pair} B each) over candidate_budget="
+            f"{candidate_budget:,} (= {pair_budget:,} pairs); no "
+            f"nprobe degrade fits.  Thin the probe set (raise "
+            f"PROBE_MOD) or shard the probe side."
+        )
+    if on_budget == "error":
+        raise ValueError(
+            f"ivf_topk: projected probe-list pair stream "
+            f"~{projected:,} rows ({n_probes:,} probes x "
+            f"nprobe={nprobe}, ~{bytes_per_pair} B each) exceeds "
+            f"candidate_budget={candidate_budget:,} "
+            f"(= {pair_budget:,} pairs).  Lower nprobe "
+            f"(<= {fit} fits), thin the probe set (raise "
+            f"PROBE_MOD), or re-run with on_budget='degrade' to "
+            f"take the largest nprobe that fits (recall traded "
+            f"for scan volume)."
+        )
+    return k_clusters, min(nprobe, fit)
+
+
 def ivf_topk(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -610,16 +884,15 @@ def ivf_topk(
     iters: int = 2,
     nprobe: int | str = "auto",
     k: int = 3,
-    probe_mod: int = 25,
     candidate_budget: int | None = None,
     on_budget: str = "error",
-    margin: int = 32,
     probe_filter=None,
 ) -> DataFrame:
     """IVF approximate top-``k``: deterministic mini k-means (md5-seeded
     init, ``iters`` fixed Lloyd iterations, centroids rounded at 6 dp for
-    cross-engine reproducibility) builds inverted lists; each probe scans
-    only its ``nprobe`` nearest lists and re-ranks by exact cosine.
+    cross-engine reproducibility) builds inverted lists; each probe (ids
+    ``% PROBE_MOD == 0``) scans only its ``nprobe`` nearest lists and
+    re-ranks by exact cosine.
 
     Replaces the reference-free scale path for similarity search (the
     reference has no ANN; SURVEY §2 extension family).
@@ -653,96 +926,18 @@ def ivf_topk(
     oracle replays the same integer chain).  The probed FRACTION shrinks
     as the corpus grows (0.41 at k=32, 0.23 at k=4096), tracking the
     measured decay of the recall requirement instead of the r12 flat
-    0.4·k.  The physical unit the guard bounds is the (probe, list) pair
-    stream — since the r13 cogroup re-rank, candidates are scanned
-    inside a per-list Arrow kernel and never materialize as rows — so
-    pass ``candidate_budget`` (64 B/candidate currency, re-denominated
-    internally to the pair row weight) and the projection
-    ``n_probes · nprobe`` is checked at plan time from the same counts
-    the auto-k derivation already pays.  Over budget,
-    ``on_budget='error'`` raises the designed feasibility answer naming
-    the levers; ``on_budget='degrade'`` lowers nprobe to the largest
-    value that fits (the recall/cost dial turned toward cost).  At gate
+    0.4·k.  ``candidate_budget`` (64 B/candidate currency) bounds the
+    (probe, list) pair stream and ``on_budget`` picks the posture over
+    budget — see :func:`_ivf_params`, which makes every parameter choice
+    from the same counts the auto-k derivation already pays.  At gate
     SFs the projection is tiny, so a physical budget never binds there
     and the oracle twin stays bit-exact."""
-    if on_budget not in ("error", "degrade"):
-        raise ValueError(f"bad on_budget {on_budget!r}")
-    emb = _valid(emb, id_col, vec_col, cosine=True)
-    vdims = _probe_width(emb, vec_col)
-    if dims is None:
-        dims = vdims
-    elif dims != vdims:
-        raise ValueError(
-            f"ivf_topk: dims={dims} but {vec_col!r} carries {vdims} "
-            f"components; pass dims=None to use the probed width"
-        )
-    n_rows: int | None = None
-    if k_clusters == "auto":
-        n_rows = emb.count()
-        k_clusters = adaptive_k_clusters(n_rows)
-    if nprobe == "auto":
-        nprobe = adaptive_nprobe(k_clusters)
-    nprobe = min(nprobe, k_clusters)
-    if candidate_budget is not None:
-        if n_rows is None:
-            n_rows = emb.count()
-        n_probes = max(1, n_rows // probe_mod)
-        # Since the r13 cogroup re-rank, candidates are SCANNED inside a
-        # per-list BLAS kernel and never materialize as rows; what hits
-        # the shuffle is the (probe, list) pair stream — each pair ships
-        # the probe vector in (dims*8 B) and at most k+margin scored rows
-        # out (24 B each).  Re-denominate the 64 B/candidate budget
-        # currency to that byte weight (the r12 budget-rescale convention:
-        # a guard crossing regimes must re-denominate for the target row
-        # size — dedup.py's degrade ladder does the same).
-        bytes_per_pair = dims * 8 + 48 + (k + margin) * 24
-        pair_budget = candidate_budget * 64 // bytes_per_pair
-        projected = n_probes * nprobe
-        if projected > pair_budget:
-            fit = pair_budget // n_probes
-            if fit < 1:
-                # even nprobe=1 exceeds the budget: there is no degrade
-                # below one list per probe, so BOTH postures raise (the
-                # r12 review caught the old max(1, ...) floor silently
-                # running past the budget — the same 'fallback does not
-                # fit' regime the dedup degrade path raises on)
-                raise ValueError(
-                    f"ivf_topk: even nprobe=1 projects "
-                    f"~{n_probes:,} probe-list pairs "
-                    f"(~{bytes_per_pair} B each) over candidate_budget="
-                    f"{candidate_budget:,} (= {pair_budget:,} pairs); no "
-                    f"nprobe degrade fits.  Thin the probe set (raise "
-                    f"probe_mod) or shard the probe side."
-                )
-            if on_budget == "error":
-                raise ValueError(
-                    f"ivf_topk: projected probe-list pair stream "
-                    f"~{projected:,} rows ({n_probes:,} probes x "
-                    f"nprobe={nprobe}, ~{bytes_per_pair} B each) exceeds "
-                    f"candidate_budget={candidate_budget:,} "
-                    f"(= {pair_budget:,} pairs).  Lower nprobe "
-                    f"(<= {fit} fits), thin the probe set (raise "
-                    f"probe_mod), or re-run with on_budget='degrade' to "
-                    f"take the largest nprobe that fits (recall traded "
-                    f"for scan volume)."
-                )
-            nprobe = min(nprobe, fit)
-    base = _with_self_dot(
-        _spread(
-            emb.select(
-                F.col(id_col).alias("vid"),
-                F.col(vec_col).cast("array<double>").alias("vec"),
-            )
-        ),
-        "vec",
-        "vv",
-        dims,
+    base, dims, n_rows = _quantizer_setup(emb, id_col, vec_col, dims, "ivf_topk")
+    k_clusters, nprobe = _ivf_params(
+        n_rows, dims, k, k_clusters, nprobe, candidate_budget, on_budget
     )
-
     cent_rows, lists = _kmeans_build(base, dims, k_clusters, iters)
 
-    if n_rows is None:
-        n_rows = emb.count()
     if n_rows * (dims * 8 + 32) > IVF_MAX_LIST_BYTES:
         # skew guard (r13 review; decoupled from candidate_budget in r14 —
         # an UNGUARDED production call could previously still build a
@@ -782,184 +977,42 @@ def ivf_topk(
     # result equals post-filtering the unfiltered output.  The budget
     # guard's n_probes projection deliberately stays the UNFILTERED
     # upper bound.
-    pf = F.col("vid") % probe_mod == 0
+    pf = F.col("vid") % PROBE_MOD == 0
     if probe_filter is not None:
         pf = pf & probe_filter(F.col("vid"))
-    probes = base.filter(pf).select(
-        F.col("vid").alias("probe_id"),
-        F.col("vec").alias("pvec"),
-        F.col("vv").alias("pvv"),
-    )
-    probe_assign = _assign_arrow(
-        probes.select(
-            F.col("probe_id").alias("vid"),
-            F.col("pvec").alias("vec"),
-            F.col("pvv").alias("vv"),
-        ),
-        cent_rows,
-        dims,
-        top=nprobe,
-    ).select(F.col("vid").alias("probe_id"), "cid")
-    probe_lists = probes.select("probe_id", "pvec").join(
-        probe_assign, on="probe_id"
-    )
+    probes = base.filter(pf)
+    probe_assign = _assign_arrow(probes, cent_rows, dims, top=nprobe)
+    probe_lists = probes.select(
+        F.col("vid").alias("probe_id"), F.col("vec").alias("pvec")
+    ).join(probe_assign.withColumnRenamed("vid", "probe_id"), on="probe_id")
 
     # Re-rank: per-list Arrow kernel instead of the relational candidate
     # join.  The r12 form joined probe_lists x lists on cid and evaluated
     # a codegen'd 64-term cosine PER CANDIDATE ROW — at sf10 that is a
     # ~50-500M-row shuffle where every row carries BOTH vectors (~1 KB),
     # i.e. hundreds of GB of exchange for what is arithmetically a handful
-    # of small matmuls.  The cogroup form shuffles each side ONCE on cid
-    # (corpus ~dims*8 B/row + the probe-pair stream the budget guard
-    # bounds), computes the per-list cosine blocks in numpy with the
-    # INDEX-ORDER fold (`_assign_arrow`'s convention — the j-loop of
-    # vectorized adds is the same left-associated chain as DuckDB's
-    # list_dot_product and dot_unrolled, so the raw cosine is
-    # bit-identical to the oracle's; a GEMM would re-associate), rounds
-    # JVM-side with F.round exactly as before, and emits only the local
-    # top (k+margin) per (probe, list) — the global window then takes the
-    # exact top-k.
-    #
-    # Ordering parity with the engines (r13 review fixes):
-    # - NaN cosines (NaN-component vectors — the only NaN source left:
-    #   _valid(cosine=True) already excludes NULL-component AND zero-norm
-    #   vectors) rank FIRST, exactly as Spark's and DuckDB's
-    #   `ORDER BY cosine DESC` treat NaN as greatest: the sort key maps
-    #   NaN -> -inf so they survive the local cut and reach the global
-    #   window, which applies the engines' own NaN semantics.
-    # - Exact raw-cosine ties are id-resolved even at the argpartition
-    #   boundary: rows where an excluded candidate ties the kept
-    #   boundary value fall back to a full sort of that row, so the
-    #   smallest neighbor_ids of a tie group are always the ones kept
-    #   (mass-duplicate lists are the near-dup corpus's normal shape).
-    # - `margin` absorbs ROUNDED near-tie displacement exactly as in
-    #   brute_topk_np (same 32 default): a candidate can only pass
-    #   another after 6-dp rounding if their raw cosines are within
-    #   5e-7.
-    # Members are processed in bounded chunks (a skew-collapsed list
-    # never materializes an S matrix beyond block x memb_chunk), with a
-    # running per-probe pool merged tie-safely across chunks: a dropped
-    # id always has >= take smaller ids at the same key in its own
-    # chunk, so the merged global top-take is exact.
-    import numpy as np
-    import pandas as pd
-
-    take = k + margin
-    block = 256  # probe rows per block
-    memb_chunk = 16384  # member rows per scoring chunk
-
-    def _fold_dots(A, B):
-        # (n x d) x (m x d) -> n x m inner products, accumulated in index
-        # order (left fold), NOT a GEMM: bit-parity with the SQL fold.
-        acc = np.zeros((A.shape[0], B.shape[0]))
-        for j in range(A.shape[1]):
-            acc += A[:, j : j + 1] * B[:, j][None, :]
-        return acc
-
-    def _fold_self(A):
-        acc = np.zeros(A.shape[0])
-        for j in range(A.shape[1]):
-            acc += A[:, j] * A[:, j]
-        return acc
-
-    def _top_block(cos, key, ids2d, selfm, width):
-        """Tie-safe top-``width`` per row by (key asc, id asc); returns
-        (cos, key, ids, selfmask) column-pruned arrays."""
-        m = key.shape[1]
-        if m > 4 * width:
-            part = np.argpartition(key, 4 * width - 1, axis=1)[:, : 4 * width]
-            keyp = np.take_along_axis(key, part, axis=1)
-            # boundary-tie detection: an EXCLUDED candidate tying the
-            # largest kept key means the partition chose an arbitrary
-            # subset of a tie group — resolve those rows by full sort
-            kth = keyp.max(axis=1, keepdims=True)
-            bad = (key == kth).sum(axis=1) > (keyp == kth).sum(axis=1)
-            for r in np.where(bad)[0]:
-                full = np.lexsort((ids2d[r], key[r]))[: 4 * width]
-                part[r] = full
-                keyp[r] = key[r][full]
-            cosp = np.take_along_axis(cos, part, axis=1)
-            idp = np.take_along_axis(ids2d, part, axis=1)
-            selfp = np.take_along_axis(selfm, part, axis=1)
-        else:
-            cosp, keyp, idp, selfp = cos, key, ids2d, selfm
-        order = np.lexsort((idp, keyp), axis=1)[:, :width]
-        return (
-            np.take_along_axis(cosp, order, axis=1),
-            np.take_along_axis(keyp, order, axis=1),
-            np.take_along_axis(idp, order, axis=1),
-            np.take_along_axis(selfp, order, axis=1),
-        )
-
+    # of small score blocks.  The cogroup form shuffles each side ONCE on
+    # cid (corpus ~dims*8 B/row + the probe-pair stream the budget guard
+    # bounds) and runs the shared exact kernel (:func:`_cosine_topk`) per
+    # list, emitting only the local top (k+margin) per (probe, list) —
+    # the global window then takes the exact top-k.
     def _score(probes_pdf, members_pdf):
-        if not len(probes_pdf) or not len(members_pdf):
-            return pd.DataFrame(
-                {"probe_id": [], "neighbor_id": [], "cosine_raw": [],
-                 "is_nan": []}
-            ).astype({"probe_id": "int64", "neighbor_id": "int64",
-                      "cosine_raw": "float64", "is_nan": "bool"})
-        out = []
-        for lo in range(0, len(probes_pdf), block):
-            chunk = probes_pdf.iloc[lo : lo + block]
-            P = np.stack(chunk["pvec"].to_numpy()).astype("float64")
-            pids = chunk["probe_id"].to_numpy()
-            pnorm = np.sqrt(_fold_self(P))
-            pool = None  # (cos, key, ids, selfmask) running top-take
-            for mlo in range(0, len(members_pdf), memb_chunk):
-                msl = members_pdf.iloc[mlo : mlo + memb_chunk]
-                M = np.stack(msl["vec"].to_numpy()).astype("float64")
-                ids = msl["vid"].to_numpy()
-                mnorm = np.sqrt(_fold_self(M))
-                S = _fold_dots(P, M) / (pnorm[:, None] * mnorm[None, :])
-                selfm = ids[None, :] == pids[:, None]
-                # sort key: cosine desc with NaN FIRST (engine semantics);
-                # self rows keyed last and dropped after selection
-                key = np.where(np.isnan(S), -np.inf, -S)
-                key[selfm] = np.inf
-                ids2d = np.broadcast_to(ids, S.shape)
-                top = _top_block(S, key, ids2d, selfm, take)
-                if pool is None:
-                    pool = top
-                else:
-                    merged = tuple(
-                        np.concatenate([a, b], axis=1)
-                        for a, b in zip(pool, top)
-                    )
-                    pool = _top_block(*merged, take)
-            cosq, keyq, idq, selfq = pool
-            keep = ~selfq
-            # NaN survives as an EXPLICIT flag: the pandas->Arrow output
-            # conversion treats float NaN as null, and Spark sorts NULL
-            # last under DESC where both engines sort NaN FIRST — the
-            # flag lets the JVM side restore a literal NaN (r13 review)
-            out.append(pd.DataFrame({
-                "probe_id": np.repeat(pids, cosq.shape[1])[keep.ravel()],
-                "neighbor_id": idq.ravel()[keep.ravel()],
-                "cosine_raw": cosq.ravel()[keep.ravel()],
-                "is_nan": np.isnan(cosq.ravel()[keep.ravel()]),
-            }))
-        return pd.concat(out, ignore_index=True)
+        if probes_pdf.empty or members_pdf.empty:  # a side may lack columns
+            return _cosine_topk((), (), (), (), k)
+        return _cosine_topk(
+            probes_pdf["pvec"].to_numpy(),
+            probes_pdf["probe_id"].to_numpy(),
+            members_pdf["vec"].to_numpy(),
+            members_pdf["vid"].to_numpy(),
+            k,
+        )
 
     local = (
         probe_lists.groupBy("cid")
         .cogroup(lists.select("cid", "vid", "vec").groupBy("cid"))
-        .applyInPandas(
-            _score,
-            "probe_id long, neighbor_id long, cosine_raw double, is_nan boolean",
-        )
+        .applyInPandas(_score, _KERNEL_SCHEMA)
     )
-    scored = local.withColumn(
-        "cosine",
-        F.when(F.col("is_nan"), F.lit(float("nan"))).otherwise(
-            F.round(F.col("cosine_raw"), 6)
-        ),
-    )
-    wr = W.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(_restore_nan(local), k)
 
 
 #: the oracle-side rounded squared-distance template shared by the
@@ -1036,7 +1089,6 @@ def ivf_topk_oracle_sql(
     iters: int = 2,
     nprobe: int | str = "auto",
     k: int = 3,
-    probe_mod: int = 25,
 ) -> str:
     """DuckDB twin of :func:`ivf_topk` — identical init ordering, Lloyd
     iteration count, centroid/distance rounding, and tie-breaks; in auto
@@ -1052,7 +1104,7 @@ def ivf_topk_oracle_sql(
     )
     ctes.append(
         f"""probes AS (
-  SELECT vid AS probe_id, vec AS pvec FROM base WHERE vid % {probe_mod} = 0
+  SELECT vid AS probe_id, vec AS pvec FROM base WHERE vid % {PROBE_MOD} = 0
 )"""
     )
     nprobe_sql = (
@@ -1131,7 +1183,6 @@ def kmeans_coverage_sample(
     """
     if order not in ("representative", "diverse"):
         raise ValueError(f"bad order {order!r}")
-    emb = _valid(emb, id_col, vec_col, cosine=True)
 
     def _empty():
         # empty (or fully validity-filtered) corpus: the contract result
@@ -1146,31 +1197,15 @@ def kmeans_coverage_sample(
         ).filter(F.lit(False))
 
     try:
-        vdims = _probe_width(emb, vec_col)
+        base, dims, n_rows = _quantizer_setup(
+            emb, id_col, vec_col, dims, "kmeans_coverage_sample"
+        )
     except ValueError:
-        if emb.isEmpty():
+        if _valid(emb, id_col, vec_col, cosine=True).isEmpty():
             return _empty()
         raise
-    if dims is None:
-        dims = vdims
-    elif dims != vdims:
-        raise ValueError(
-            f"kmeans_coverage_sample: dims={dims} but {vec_col!r} carries "
-            f"{vdims} components; pass dims=None to use the probed width"
-        )
     if k_clusters == "auto":
-        k_clusters = adaptive_k_clusters(emb.count())
-    base = _with_self_dot(
-        _spread(
-            emb.select(
-                F.col(id_col).alias("vid"),
-                F.col(vec_col).cast("array<double>").alias("vec"),
-            )
-        ),
-        "vec",
-        "vv",
-        dims,
-    )
+        k_clusters = adaptive_k_clusters(n_rows)
     cent_rows, lists = _kmeans_build(base, dims, k_clusters, iters)
     if not cent_rows:
         return _empty()
@@ -1178,16 +1213,11 @@ def kmeans_coverage_sample(
     cdf = sess.createDataFrame(cent_rows)  # (cid, cvec, cc): k ~ sqrt(N) rows
     scored = lists.join(F.broadcast(cdf), on="cid").withColumn(
         "dist",
-        F.floor(
-            (
-                F.col("vv")
-                - 2 * dot_unrolled(F.col("vec"), F.col("cvec"), dims)
-                + F.col("cc")
-            )
-            * 1000000.0
-            + F.lit(0.5)
-        )
-        / 1000000.0,
+        _pround6(
+            F.col("vv")
+            - 2 * dot_unrolled(F.col("vec"), F.col("cvec"), dims)
+            + F.col("cc")
+        ),
     ).filter(~F.isnan(F.col("dist")))
     ordering = (
         F.col("dist").asc() if order == "representative" else F.col("dist").desc()
@@ -1260,34 +1290,10 @@ def embedding_neardup_pairs(
     the candidate stream stays linear in corpus size; the dedup default
     targets 2x the top-k occupancy because recall matters more than
     bucket size here.  Pass an int to pin the width."""
-    emb = _valid(emb, id_col, vec_col, cosine=True)
-    vdims = _probe_width(emb, vec_col)
-    if n_bits == "auto":
-        n_bits = adaptive_bits(emb.count(), target_occupancy)
-    base = emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    ).withColumn("bucket", signature_bits(F.col("vec"), dims, n_bits))
-    left = _spread(
-        base.select(
-            F.col("vid").alias("id_a"),
-            F.col("vec").alias("vec_a"),
-            "bucket",
-        )
-    )
-    pairs = left.join(base, on="bucket").filter(F.col("id_a") < F.col("vid"))
-    # norms inline (see lsh_topk): fully-inline condition beats the
-    # half-materialized one 34 s vs 81 s at sf1
-    return (
-        pairs.select(
-            "id_a",
-            F.col("vid").alias("id_b"),
-            F.round(
-                cosine_unrolled(F.col("vec_a"), F.col("vec"), vdims), 6
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    return _lsh_bucket_pairs(
+        emb, id_col, vec_col, dims, n_bits, target_occupancy,
+        lambda a, b: a < b,
+    ).filter(F.col("cosine") >= threshold)
 
 
 def embedding_neardup_oracle_sql(

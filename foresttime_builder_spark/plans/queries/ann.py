@@ -2,20 +2,23 @@
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from foresttime_builder_spark.operators.ann import PROBE_MOD, brute_topk_oracle_sql
 from foresttime_builder_spark.operators.cache import carry_cache
 from foresttime_builder_spark.operators.dedup import derive_candidate_budget
 from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
 from foresttime_builder_spark.sources import load_table
 from foresttime_builder_spark.plans.queries._shared import QuerySpec
 
+#: bounded probe subset of q17 and q101: at most 512 probes at any SF
+PROBE_CAP = PROBE_MOD * 512
 
 
 def q17_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k over the embedding column for a probe subset
     (similarity-search baseline; the IVF/LSH variants prune the same plan).
-    Executes via the numpy matmul kernel (operators.ann.brute_topk_np): the
-    tiny probe set rides in the task closure, each partition emits only its
-    local top-k, so nothing quadratic crosses Arrow — the JVM
+    Executes via the shared exact numpy kernel (operators.ann.brute_topk_np):
+    the tiny probe set rides in the task closure, each Arrow batch emits
+    only its local top-k, so nothing quadratic crosses Arrow — the JVM
     higher-order-function formulation evaluates ~3 lambdas per vector
     element per pair and was measured ~4× slower.
 
@@ -31,7 +34,7 @@ def q17_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.transform("embedding", lambda v: v.cast("double")).alias("vec")
     )
     probes = base.filter(
-        (F.col("vec_id") % 25 == 0) & (F.col("vec_id") < 25 * 512)
+        (F.col("vec_id") % PROBE_MOD == 0) & (F.col("vec_id") < PROBE_CAP)
     ).select(F.col("vec_id").alias("probe_id"), F.col("vec").alias("probe_vec"))
     out = brute_topk_np(base, probes, k=5)
     return out.select(
@@ -41,29 +44,13 @@ def q17_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rank",
     )
 
+
+#: q17's and q101's brute-force probe predicate, over the oracle's ``vid``
+_PROBE_WHERE = f"vid % {PROBE_MOD} = 0 AND vid < {PROBE_CAP}"
+
 ORACLE_Q17 = f"""
-WITH base AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings
-  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-    AND len(list_filter(embedding, x -> x IS NULL)) = 0
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-),
-pairs AS (
-  SELECT p.vec_id AS probe_id, b.vec_id AS neighbor_id,
-         round(list_dot_product(p.vec, b.vec)
-               / (sqrt(list_dot_product(p.vec, p.vec))
-                  * sqrt(list_dot_product(b.vec, b.vec))), 6) AS cosine
-  FROM base p JOIN base b ON p.vec_id != b.vec_id
-  WHERE p.vec_id % 25 = 0 AND p.vec_id < 25 * 512
-),
-ranked AS (
-  SELECT *, row_number() OVER
-    (PARTITION BY probe_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM pairs
-)
-SELECT probe_id, neighbor_id,
-       {fixed_sql('cosine', 6)} AS cosine_e6, rank
-FROM ranked WHERE rank <= 5
+SELECT probe_id, neighbor_id, {fixed_sql('cosine', 6)} AS cosine_e6, rank
+FROM ({brute_topk_oracle_sql("embeddings", _PROBE_WHERE, 5)}) z
 """
 
 def q37_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -194,7 +181,6 @@ def q101_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from foresttime_builder_spark.operators.ann import brute_topk_np, ivf_topk
 
     e = load_table(spark, sf_dir, "embeddings")
-    cap = 25 * 512  # bounded probe subset, q17's convention
     # probe_filter thins the probe side INSIDE the operator (a filter on
     # the applyInPandas output cannot push through it — at sf10 the
     # harness otherwise scores all 8000 production probes for an 80-probe
@@ -205,14 +191,14 @@ def q101_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         e,
         candidate_budget=derive_candidate_budget(spark),
         on_budget="degrade",
-        probe_filter=lambda vid: vid < cap,
-    ).filter(F.col("probe_id") < cap)
+        probe_filter=lambda vid: vid < PROBE_CAP,
+    ).filter(F.col("probe_id") < PROBE_CAP)
     base = e.select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("vec"),
     )
     probes = base.filter(
-        (F.col("vec_id") % 25 == 0) & (F.col("vec_id") < cap)
+        (F.col("vec_id") % PROBE_MOD == 0) & (F.col("vec_id") < PROBE_CAP)
     ).select(F.col("vec_id").alias("probe_id"), F.col("vec").alias("probe_vec"))
     exact = brute_topk_np(base, probes, k=3).select(
         F.col("probe_id").alias("e_probe"),
@@ -243,29 +229,11 @@ def _ann_recall_oracle() -> str:
     return f"""
 WITH ivf AS (
   SELECT probe_id, neighbor_id FROM ({ivf_topk_oracle_sql()}) z
-  WHERE probe_id < 25 * 512
-),
-base AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings
-  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-    AND len(list_filter(embedding, x -> x IS NULL)) = 0
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-),
-pairs AS (
-  SELECT p.vec_id AS probe_id, b.vec_id AS neighbor_id,
-         round(list_dot_product(p.vec, b.vec)
-               / (sqrt(list_dot_product(p.vec, p.vec))
-                  * sqrt(list_dot_product(b.vec, b.vec))), 6) AS cosine
-  FROM base p JOIN base b ON p.vec_id != b.vec_id
-  WHERE p.vec_id % 25 = 0 AND p.vec_id < 25 * 512
+  WHERE probe_id < {PROBE_CAP}
 ),
 exact AS (
   SELECT probe_id AS e_probe, neighbor_id AS e_neighbor
-  FROM (
-    SELECT *, row_number() OVER
-      (PARTITION BY probe_id ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM pairs
-  ) WHERE rank <= 3
+  FROM ({brute_topk_oracle_sql("embeddings", _PROBE_WHERE, 3)}) z
 )
 SELECT i.probe_id,
        CAST(sum(CASE WHEN e.e_probe IS NOT NULL THEN 1 ELSE 0 END)

@@ -18,8 +18,10 @@ def q43_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources.bucketing): both sides bucketed on the order key, so the join
     plans with zero shuffle Exchange at any scale. The oracle verifies the
     bucketed round-trip preserves the join result."""
+    import atexit
     import hashlib
     import os
+    import shutil
     import tempfile
 
     from foresttime_builder_spark.sources.bucketing import (
@@ -27,13 +29,17 @@ def q43_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_bucketed,
     )
 
-    # Deterministic layout location keyed on the source directory: repeated
-    # invocations (bench loops, the correctness gate) reuse the bucketed
-    # copy instead of rewriting it into a fresh mkdtemp each time, and the
-    # key suffix on the catalog names keeps concurrent sessions pointed at
-    # different sf dirs from colliding on a shared warehouse.
+    # Layout location keyed on the source directory and the process:
+    # repeated invocations in one process (bench loops) reuse the bucketed
+    # copy, and the key suffix on the catalog names keeps a session pointed
+    # at different sf dirs from colliding.  The catalog lives in memory, so
+    # a new process rewrites the copy anyway; the pid keeps concurrent
+    # processes from overwriting each other's files, and the copy is
+    # removed when the process exits.
     key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    tmp = os.path.join(tempfile.gettempdir(), f"ftb_q43_{key}")
+    tmp = os.path.join(tempfile.gettempdir(), f"ftb_q43_{key}_{os.getpid()}")
+    if not os.path.isdir(tmp):
+        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     orders_tbl = f"ftb_q43_orders_{key}"
     lineitem_tbl = f"ftb_q43_lineitem_{key}"
     for tbl, src, path, cols, sort_cols in (

@@ -26,8 +26,10 @@ non-matching).
 
 from __future__ import annotations
 
+import atexit
 import functools
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -108,7 +110,11 @@ def state_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     mortality variants of the parquet output, tagged and rounded for the
     cross-engine hash gate.  ``sf_dir`` is unused (the fixture is its own
     input) but kept for the queries() contract."""
-    base = os.path.join(tempfile.gettempdir(), "ftb_q51_state")
+    # per-process scratch, removed at exit: concurrent runs must not
+    # rewrite each other's CSVs and parquet output mid-read
+    base = os.path.join(tempfile.gettempdir(), f"ftb_q51_state_{os.getpid()}")
+    if not os.path.isdir(base):
+        atexit.register(shutil.rmtree, base, ignore_errors=True)
     csv_dir, out_dir = os.path.join(base, "csv"), os.path.join(base, "out")
     fixture_state.write_csvs(csv_dir)
     db = fia_load(spark, [fixture_state.STATE], csv_dir)

@@ -142,69 +142,121 @@ def test_adaptive_nprobe_integer_chain():
         assert v == adaptive_nprobe(kk), kk
 
 
-def test_ivf_candidate_budget_guard(spark):
-    """The IVF scan guard: a budget below the projected candidate stream
-    raises with the arithmetic (on_budget='error') or lowers nprobe to
-    the largest value that fits (on_budget='degrade' — query still runs,
-    output rows still rank-valid)."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
+def test_ivf_candidate_budget_guard():
+    """The IVF scan guard, Spark-free on the policy function: a budget
+    below the projected (probe, list) pair stream raises with the
+    arithmetic (on_budget='error') or lowers nprobe to the largest value
+    that fits (on_budget='degrade'); a generous budget leaves the auto
+    plan untouched.  200 rows x 8 dims, k=3: 8 probes, auto k=16,
+    auto nprobe=11, 952 B per pair; budget 600 -> 40 pairs -> fit 5."""
+    from foresttime_builder_spark.operators.ann import _ivf_params
 
-    from foresttime_builder_spark.operators.ann import ivf_topk
-
-    vecs = [(i, [float((i * 7 + j) % 13) for j in range(8)]) for i in range(200)]
-    emb = spark.createDataFrame(vecs, ["vec_id", "embedding"])
-    with _pytest.raises(ValueError, match="candidate_budget"):
-        ivf_topk(emb, candidate_budget=1, on_budget="error")
-    out = ivf_topk(emb, candidate_budget=200, on_budget="degrade")
-    rows = out.collect()
-    assert rows and all(1 <= r["rank"] <= 3 for r in rows)
-    # a generous budget leaves the auto plan untouched: identical output
-    a = sorted(tuple(r) for r in ivf_topk(emb).collect())
-    b = sorted(
-        tuple(r)
-        for r in ivf_topk(
-            emb, candidate_budget=10_000_000, on_budget="degrade"
-        ).collect()
+    assert _ivf_params(200, 8, 3, "auto", "auto", None, "error") == (16, 11)
+    with pytest.raises(ValueError, match=r"candidate_budget=600 .*<= 5 fits"):
+        _ivf_params(200, 8, 3, "auto", "auto", 600, "error")
+    assert _ivf_params(200, 8, 3, "auto", "auto", 600, "degrade") == (16, 5)
+    assert _ivf_params(200, 8, 3, "auto", "auto", 10_000_000, "error") == (
+        16, 11
     )
-    assert a == b
+    # a pinned nprobe is capped at k before the budget sees it
+    assert _ivf_params(200, 8, 3, 4, 9, None, "error") == (4, 4)
+    with pytest.raises(ValueError, match="bad on_budget"):
+        _ivf_params(200, 8, 3, "auto", "auto", None, "nope")
 
 
-def test_ivf_no_fit_raises_in_both_postures(spark):
-    """r12 review fix: when even nprobe=1 exceeds the budget there is no
-    degrade left — BOTH postures must raise the feasibility error instead
-    of the old max(1, fit) floor silently running past the budget."""
-    import pytest as _pytest
+def test_ivf_no_fit_raises_in_both_postures():
+    """When even nprobe=1 exceeds the budget there is no degrade left —
+    BOTH postures must raise the feasibility error instead of a max(1,
+    fit) floor silently running past the budget."""
+    from foresttime_builder_spark.operators.ann import _ivf_params
 
+    for posture in ("error", "degrade"):
+        with pytest.raises(ValueError, match="even nprobe=1"):
+            _ivf_params(200, 8, 3, "auto", "auto", 1, posture)
+
+
+def test_ivf_degraded_plan_runs(spark):
+    """A budget-degraded IVF plan still runs and emits rank-valid rows."""
     from foresttime_builder_spark.operators.ann import ivf_topk
 
     vecs = [(i, [float((i * 7 + j) % 13) for j in range(8)]) for i in range(200)]
     emb = spark.createDataFrame(vecs, ["vec_id", "embedding"])
-    for posture in ("error", "degrade"):
-        with _pytest.raises(ValueError, match="even nprobe=1"):
-            ivf_topk(emb, candidate_budget=1, on_budget=posture)
+    rows = ivf_topk(emb, candidate_budget=600, on_budget="degrade").collect()
+    assert rows and all(1 <= r["rank"] <= 3 for r in rows)
 
 
-def _ivf_vs_oracle(spark, rows, dims):
-    """Run ivf_topk AND its DuckDB twin on the same tiny corpus; both
-    result sets must match row-for-row (probe, neighbor, 6-dp cosine,
-    rank) — NaN cosines compare as equal-NaN."""
+def test_fold_dots_is_the_index_order_fold():
+    """_fold_dots equals a plain left fold in index order bit for bit —
+    the order of dot_unrolled and DuckDB's list_dot_product."""
+    import numpy as np
+
+    from foresttime_builder_spark.operators.ann import _fold_dots
+
+    rng = np.random.default_rng(7)
+    A, B = rng.standard_normal((5, 64)), rng.standard_normal((9, 64))
+    got = _fold_dots(A, np.ascontiguousarray(B.T))
+    for i in range(5):
+        for m in range(9):
+            acc = 0.0
+            for j in range(64):
+                acc += A[i, j] * B[m, j]
+            assert got[i, m] == acc
+
+
+def test_cosine_topk_chunking_is_exact(monkeypatch):
+    """The kernel's probe blocks and member chunks (merged through the
+    tie-safe running pool) give exactly the single-block answer, on a
+    corpus with a wide tie group and a NaN-component vector."""
+    import numpy as np
+
+    from foresttime_builder_spark.operators import ann
+
+    vecs = [np.array([1.0, 2.0, 3.0])] * 50 + [
+        np.array([float((i * 5 + j) % 7 - 3) for j in range(3)])
+        for i in range(30)
+    ]
+    vecs[60] = np.array([1.0, np.nan, 0.5])
+    mvecs = np.empty(len(vecs), dtype=object)
+    for i, v in enumerate(vecs):
+        mvecs[i] = v
+    mids = np.arange(len(vecs) - 1, -1, -1, dtype="int64")  # descending ids
+    pick = np.array([0, 5, 49, 60, 61, 79])
+
+    def run():
+        out = ann._cosine_topk(mvecs[pick], mids[pick], mvecs, mids, 2)
+        return sorted(
+            (p, n, None if nan else c)
+            for p, n, c, nan in out.itertuples(index=False)
+        )
+
+    whole = run()
+    monkeypatch.setattr(ann, "_MEMB_CHUNK", 7)
+    monkeypatch.setattr(ann, "_PROBE_BLOCK", 4)
+    assert run() == whole
+    assert len(whole) == len(pick) * (2 + ann._MARGIN)
+
+
+def _topk_vs_oracle(spark, rows, topk, oracle_sql):
+    """Run a Spark top-k operator (``topk(emb)``) AND its DuckDB twin
+    (``oracle_sql`` over table ``embeddings``) on the same tiny corpus,
+    held in ONE partition so every local top-k cut sees the whole corpus;
+    both result sets must match row-for-row (probe, neighbor, 6-dp
+    cosine, rank) — NaN cosines compare as equal-NaN."""
     import math
 
     import duckdb
     import pyarrow as pa
 
-    from foresttime_builder_spark.operators.ann import (
-        ivf_topk,
-        ivf_topk_oracle_sql,
-    )
+    def norm(p, n, c, rk):
+        nan = c is None or math.isnan(c)
+        return (p, n, rk, None if nan else round(c, 6))
 
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    ).coalesce(1)
     got = sorted(
-        (r["probe_id"], r["neighbor_id"], r["rank"],
-         None if r["cosine"] is None or math.isnan(r["cosine"])
-         else round(r["cosine"], 6))
-        for r in ivf_topk(emb).collect()
+        norm(r["probe_id"], r["neighbor_id"], r["cosine"], r["rank"])
+        for r in topk(emb).collect()
     )
     con = duckdb.connect()
     # pyarrow, NOT pandas: pandas registration converts in-list NaN to
@@ -219,12 +271,78 @@ def _ivf_vs_oracle(spark, rows, dims):
             ),
         }),
     )
-    want = sorted(
-        (p, n, rk, None if c is None or (isinstance(c, float) and math.isnan(c))
-         else round(c, 6))
-        for p, n, c, rk in con.execute(ivf_topk_oracle_sql()).fetchall()
-    )
+    want = sorted(norm(*row) for row in con.execute(oracle_sql).fetchall())
     assert got == want, (got[:10], want[:10])
+
+
+def _ivf_vs_oracle(spark, rows):
+    from foresttime_builder_spark.operators.ann import (
+        ivf_topk,
+        ivf_topk_oracle_sql,
+    )
+
+    _topk_vs_oracle(spark, rows, ivf_topk, ivf_topk_oracle_sql())
+
+
+def _brute_vs_oracle(spark, rows, k=3):
+    """brute_topk_np with every id % PROBE_MOD == 0 as a probe, against
+    brute_topk_oracle_sql with the same probe predicate."""
+    from foresttime_builder_spark.operators.ann import (
+        PROBE_MOD,
+        brute_topk_np,
+        brute_topk_oracle_sql,
+    )
+
+    def topk(emb):
+        base = emb.select("vec_id", F.col("embedding").alias("vec"))
+        probes = base.filter(F.col("vec_id") % PROBE_MOD == 0).select(
+            F.col("vec_id").alias("probe_id"), F.col("vec").alias("probe_vec")
+        )
+        return brute_topk_np(base, probes, k=k)
+
+    oracle = brute_topk_oracle_sql("embeddings", f"vid % {PROBE_MOD} = 0", k)
+    _topk_vs_oracle(spark, rows, topk, oracle)
+
+
+def _degenerate_rows(dims=4):
+    """A zero-norm member (excluded by the cosine contract on both
+    engines) and a NaN-component vector whose id is also a probe."""
+    rows = [
+        (i, [float((i * 7 + j * 3) % 11 - 5) for j in range(dims)])
+        for i in range(60)
+    ]
+    rows[10] = (250, [0.0] * dims)            # zero-norm member
+    rows[20] = (500, [1.0, float("nan"), 0.5, 2.0])  # NaN component, probe id
+    return rows
+
+
+def test_brute_nan_component_matches_oracle(spark):
+    """A NaN-component vector has a NaN cosine against every row, and
+    both engines rank NaN first under ORDER BY cosine DESC: the brute
+    kernel must keep it (and restore a literal NaN, not NULL)."""
+    _brute_vs_oracle(spark, _degenerate_rows())
+
+
+@pytest.mark.parametrize(
+    "topk,eps",
+    # IVF's exact-tie case is test_ivf_mass_duplicate_ties_match_oracle
+    [("brute", 0.0), ("brute", 1e-4), ("ivf", 1e-4)],
+)
+def test_tie_group_matches_oracle(spark, topk, eps):
+    """60 vectors listed in DESCENDING id order in one partition whose
+    cosines all round to 1.0 — a tie group wider than the local k +
+    margin cut, so the cut must keep the smallest ids (ORDER BY cosine
+    DESC, neighbor_id).  eps=0: identical vectors, exact raw ties (an
+    unguarded argpartition keeps an arbitrary subset); eps>0: raw
+    cosines differ below the 6-dp step and smaller ids sit farther from
+    the probes (a raw-value cut keeps the raw-nearest instead)."""
+    rows = [
+        (i, [1.0, eps * (60 - i) / 60, 0.0, 0.0]) for i in range(59, -1, -1)
+    ]
+    if topk == "brute":
+        _brute_vs_oracle(spark, rows)
+    else:
+        _ivf_vs_oracle(spark, rows)
 
 
 def test_ivf_degenerate_vectors_match_oracle(spark):
@@ -232,14 +350,7 @@ def test_ivf_degenerate_vectors_match_oracle(spark):
     (NULL-only filter) and produce NaN cosines; both engines rank NaN as
     greatest, so the kernel must KEEP them (the first cogroup kernel
     silently dropped non-finite cosines — an engine-parity break)."""
-    dims = 4
-    rows = [
-        (i, [float((i * 7 + j * 3) % 11 - 5) for j in range(dims)])
-        for i in range(60)
-    ]
-    rows[10] = (250, [0.0] * dims)            # zero-norm member
-    rows[20] = (500, [1.0, float("nan"), 0.5, 2.0])  # NaN component, probe id
-    _ivf_vs_oracle(spark, rows, dims)
+    _ivf_vs_oracle(spark, _degenerate_rows())
 
 
 def test_ivf_mass_duplicate_ties_match_oracle(spark):
@@ -253,7 +364,7 @@ def test_ivf_mass_duplicate_ties_match_oracle(spark):
         (200 + i, [float((i * 5 + j) % 7 - 3) for j in range(dims)])
         for i in range(40)
     ]
-    _ivf_vs_oracle(spark, rows, dims)
+    _ivf_vs_oracle(spark, rows)
 
 
 def test_ivf_collapsed_list_guard(spark, monkeypatch):

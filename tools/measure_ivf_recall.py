@@ -19,20 +19,19 @@ from __future__ import annotations
 import argparse
 import hashlib
 import json
+import os
+import sys
 
 import numpy as np
 import pyarrow.parquet as pq
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from foresttime_builder_spark.operators.ann import adaptive_k_clusters
+
 
 def _md5(s: str) -> str:
     return hashlib.md5(s.encode()).hexdigest()
-
-
-def adaptive_k_clusters(n: int, lo: int = 8, hi: int = 4096) -> int:
-    kk = lo
-    while kk < hi and kk * kk < n:
-        kk *= 2
-    return kk
 
 
 def _r6(x):
