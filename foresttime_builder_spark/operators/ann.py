@@ -345,6 +345,29 @@ def brute_topk_np(
     return _rank_topk(_restore_nan(local), k)
 
 
+def _cosine_sql(a: str, b: str) -> str:
+    """The ANN oracles' DuckDB cosine of two DOUBLE[] expressions, rounded
+    to 6 dp."""
+    return (
+        f"round(list_dot_product({a}, {b})"
+        f" / (sqrt(list_dot_product({a}, {a}))"
+        f" * sqrt(list_dot_product({b}, {b}))), 6)"
+    )
+
+
+def _ranked_topk_sql(src: str, k: int) -> str:
+    """The ANN oracles' top-k tail over ``src``'s (probe_id, neighbor_id,
+    cosine) rows: a ``ranked`` CTE (cosine descending, ties by neighbour
+    id — :func:`_rank_topk`'s order) and the ``rank <= k`` select."""
+    return f"""ranked AS (
+  SELECT *, row_number() OVER
+    (PARTITION BY probe_id ORDER BY cosine DESC, neighbor_id) AS rank
+  FROM {src}
+)
+SELECT probe_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}
+"""
+
+
 def brute_topk_oracle_sql(table: str, probe_where: str, k: int) -> str:
     """DuckDB twin of :func:`brute_topk_np` over ``table``'s (vec_id,
     embedding): every probe row matching ``probe_where`` (a predicate
@@ -356,19 +379,11 @@ WITH base AS (
 ),
 pairs AS (
   SELECT p.vid AS probe_id, b.vid AS neighbor_id,
-         round(list_dot_product(p.vec, b.vec)
-               / (sqrt(list_dot_product(p.vec, p.vec))
-                  * sqrt(list_dot_product(b.vec, b.vec))), 6) AS cosine
+         {_cosine_sql("p.vec", "b.vec")} AS cosine
   FROM (SELECT * FROM base WHERE {probe_where}) p
   JOIN base b ON p.vid != b.vid
 ),
-ranked AS (
-  SELECT *, row_number() OVER
-    (PARTITION BY probe_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM pairs
-)
-SELECT probe_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}
-"""
+{_ranked_topk_sql("pairs", k)}"""
 
 
 def dot_unrolled(a: Column, b: Column, dims: int) -> Column:
@@ -578,18 +593,10 @@ WITH base AS (
 {_sigs_cte("base", dims, n_bits, target_occupancy)},
 pairs AS (
   SELECT a.vid AS probe_id, b.vid AS neighbor_id,
-         round(list_dot_product(a.vec, b.vec)
-               / (sqrt(list_dot_product(a.vec, a.vec))
-                  * sqrt(list_dot_product(b.vec, b.vec))), 6) AS cosine
+         {_cosine_sql("a.vec", "b.vec")} AS cosine
   FROM sigs a JOIN sigs b ON a.bucket = b.bucket AND a.vid != b.vid
 ),
-ranked AS (
-  SELECT *, row_number() OVER
-    (PARTITION BY probe_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM pairs
-)
-SELECT probe_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}
-"""
+{_ranked_topk_sql("pairs", k)}"""
 
 
 def _pround6(col: Column) -> Column:
@@ -1097,11 +1104,6 @@ def ivf_topk_oracle_sql(
     (mirroring the Spark default — both sides pure integer)."""
     ctes = _kmeans_ctes(table, id_col, vec_col, k_clusters, iters)
     pd = _DIST_SQL.format(v="p.pvec", c="c.cvec")
-    cos = (
-        "round(list_dot_product(pc.pvec, a.vec)"
-        " / (sqrt(list_dot_product(pc.pvec, pc.pvec))"
-        " * sqrt(list_dot_product(a.vec, a.vec))), 6)"
-    )
     ctes.append(
         f"""probes AS (
   SELECT vid AS probe_id, vec AS pvec FROM base WHERE vid % {PROBE_MOD} = 0
@@ -1123,22 +1125,13 @@ def ivf_topk_oracle_sql(
     )
     ctes.append(
         f"""cand AS (
-  SELECT pc.probe_id, a.vid AS neighbor_id, {cos} AS cosine
+  SELECT pc.probe_id, a.vid AS neighbor_id,
+         {_cosine_sql("pc.pvec", "a.vec")} AS cosine
   FROM pc JOIN lists a ON pc.cid = a.cid AND pc.probe_id != a.vid
 )"""
     )
-    ctes.append(
-        """ranked AS (
-  SELECT *, row_number() OVER
-    (PARTITION BY probe_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM cand
-)"""
-    )
-    body = ",\n".join(ctes)
-    return (
-        f"WITH {body}\n"
-        f"SELECT probe_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}"
-    )
+    ctes.append(_ranked_topk_sql("cand", k))
+    return "WITH " + ",\n".join(ctes)
 
 
 def kmeans_coverage_sample(
@@ -1305,20 +1298,16 @@ def embedding_neardup_oracle_sql(
     threshold: float = 0.3,
     target_occupancy: int = 2 * LSH_TARGET_OCCUPANCY,
 ) -> str:
+    cos = _cosine_sql("a.vec", "b.vec")
     return f"""
 WITH base AS (
   SELECT {id_col} AS vid, CAST({vec_col} AS DOUBLE[]) AS vec
   FROM {_valid_sql(table, id_col, vec_col, cosine=True)}
 ),
 {_sigs_cte("base", dims, n_bits, target_occupancy)}
-SELECT a.vid AS id_a, b.vid AS id_b,
-       round(list_dot_product(a.vec, b.vec)
-             / (sqrt(list_dot_product(a.vec, a.vec))
-                * sqrt(list_dot_product(b.vec, b.vec))), 6) AS cosine
+SELECT a.vid AS id_a, b.vid AS id_b, {cos} AS cosine
 FROM sigs a JOIN sigs b ON a.bucket = b.bucket AND a.vid < b.vid
-WHERE round(list_dot_product(a.vec, b.vec)
-            / (sqrt(list_dot_product(a.vec, a.vec))
-               * sqrt(list_dot_product(b.vec, b.vec))), 6) >= {threshold}
+WHERE {cos} >= {threshold}
 """
 
 

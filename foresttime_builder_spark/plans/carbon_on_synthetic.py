@@ -1,8 +1,10 @@
-"""End-to-end NSVB carbon estimation over a synthetic tree panel.
+"""DuckDB twin of the NSVB carbon estimation over a synthetic tree panel.
 
-Extends the annualization differential test (:mod:`.fia_on_synthetic`) with
-the full carbon chain (:mod:`.carbon`: ``prep_carbon → estimate_carbon →
-predict_crm2``).  The synthetic panel deliberately exercises:
+Extends the annualization twin (:mod:`.fia_on_synthetic`) with the SQL twin
+of the full carbon chain (:mod:`.carbon`: ``prep_carbon → estimate_carbon →
+predict_crm2``); the Spark sides of q26/q27/q28/q52 live in
+:mod:`.queries.fia` and this module imports none of the code it checks.
+The synthetic panel deliberately exercises:
 
 - all three coefficient-resolution levels: SPCD 316 ("316 230" division
   rows), 131 (SPCD-level rows + the planted "1_131" override when
@@ -26,14 +28,12 @@ from __future__ import annotations
 import csv
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
+from foresttime_builder_spark.functions.encoding import fixed_sql
 from foresttime_builder_spark.functions.nsvb import BISECT_ITERS
-from foresttime_builder_spark.operators.cache import release_on_gc
-from foresttime_builder_spark.plans import carbon, fia
-from foresttime_builder_spark.plans.fia_on_synthetic import annualize_cte
-from foresttime_builder_spark.sources import load_table
+from foresttime_builder_spark.plans.fia_on_synthetic import (
+    PANEL_TEMPLATE,
+    annualize_cte,
+)
 from foresttime_builder_spark.sources.ref_tables import COEF_NAMES
 
 _RES = os.path.join(
@@ -41,116 +41,26 @@ _RES = os.path.join(
 )
 
 # ---------------------------------------------------------------------------
-# panel (shared SQL text: Spark runs it via spark.sql, the oracle inlines it)
+# panel: the annualize twin's template with the carbon species/ecoregion mix
 # ---------------------------------------------------------------------------
 
-_CPANEL_SQL = """
-  SELECT * FROM (
-    WITH per AS (
-      SELECT o_custkey AS ck, year(o_orderdate) AS yr,
-             -- least(): bound the synthetic panel's physical domain.
-             -- Clean-data base maxes at ~2.8e6 at every SF (measured), so
-             -- 1e7 never touches real values; junk magnitudes (the fuzz
-             -- corpus injects 1e8 prices) would otherwise drive DIA into
-             -- the thousands of inches and the NSVB power laws to 1e100+,
-             -- where Spark's floor->long SATURATES silently but DuckDB's
-             -- CAST raises — a real cross-engine divergence this clamp
-             -- keeps out of the equations' domain
-             -- NULL-guarded: least() SKIPS NULL args in BOTH engines,
-             -- so an all-NULL-price group's base would silently become
-             -- the clamp maximum (a fake max-magnitude tree) instead of
-             -- staying missing
-             CASE WHEN sum(o_totalprice) IS NULL THEN NULL
-                  ELSE least(floor(sum(o_totalprice) * 10000 + 0.5) / 10000,
-                             10000000.0) END AS base
-      -- Spark-only REPARTITION hint (comment to DuckDB): hash by ck
-      -- before the aggregate so HashPartitioning(o_custkey) satisfies the
-      -- (ck, yr) clustering AND the mx window's ck partitioning — the
-      -- whole panel rides ONE exchange instead of two, and the post-agg
-      -- stage keeps a healthy task count (r15 guide §2.4)
-      FROM (SELECT /*+ REPARTITION(o_custkey) */ * FROM orders) orders
-      GROUP BY 1, 2
-      HAVING ((o_custkey + year(o_orderdate)) % 3) != 0
-    ),
-    mx AS (SELECT *, max(yr) OVER (PARTITION BY ck) AS max_yr FROM per)
-    SELECT
-      CAST(ck % 50 AS STRING) AS plot_ID,
-      CAST(ck AS STRING) AS tree_ID,
-      yr AS INVYR,
-      concat(ck, '_', yr) AS PLT_CN,
-      floor(base / 60000 * 10000 + 0.5) / 10000 AS DIA,
-      floor(base / 9000 * 10000 + 0.5) / 10000 AS HT,
-      CASE WHEN ck % 6 = 0 THEN floor(base / 9000 * 0.9 * 10000 + 0.5) / 10000
-           ELSE floor(base / 9000 * 10000 + 0.5) / 10000 END AS ACTUALHT,
-      CASE WHEN (ck + yr) % 5 = 0 THEN NULL
-           ELSE CAST((ck * 7 + yr) % 80 AS DOUBLE) END AS CR,
-      CASE WHEN (ck + yr) % 4 = 0 THEN NULL
-           ELSE CAST((ck + yr) % 30 AS DOUBLE) END AS CULL,
-      CASE WHEN ck % 7 = 0 AND yr = max_yr THEN 2 ELSE 1 END AS STATUSCD,
-      CASE WHEN ck % 7 = 0 AND yr = max_yr THEN CAST(ck % 2 AS INT)
-           ELSE NULL END AS STANDING_DEAD_CD,
-      CASE WHEN ck % 7 = 0 AND yr = max_yr AND ck % 2 = 1
-           THEN CAST(1 + ck % 5 AS INT) ELSE NULL END AS DECAYCD,
-      CASE WHEN (ck + yr) % 17 = 0 THEN 5 ELSE NULL END AS RECONCILECD,
-      CAST(CASE WHEN ck % 13 = 0 THEN 1 ELSE 0 END AS INT) AS STDORGCD,
-      1 AS CONDID,
-      CASE WHEN ck % 11 = 0 AND yr = max_yr THEN 2 ELSE 1 END
-        AS COND_STATUS_CD,
-      CASE WHEN ck % 7 = 0 AND ck % 3 = 1 THEN max_yr - 1 ELSE NULL END
-        AS MORTYR,
-      CASE WHEN ck % 5 = 0 THEN 475
+_CPANEL_SQL = PANEL_TEMPLATE.format(
+    dia_div=60000,
+    ht_div=9000,
+    stdorgcd="CAST(CASE WHEN ck % 13 = 0 THEN 1 ELSE 0 END AS INT)",
+    spcd="""CASE WHEN ck % 5 = 0 THEN 475
            WHEN ck % 5 = 1 THEN 131
            WHEN ck % 5 = 2 THEN 6135
-           ELSE 316 END AS SPCD,
-      1 AS DESIGNCD,
-      1 AS INTENSITY,
-      CASE WHEN ck % 4 = 0 THEN 'M221Ab'
+           ELSE 316 END""",
+    ecosubcd="""CASE WHEN ck % 4 = 0 THEN 'M221Ab'
            WHEN ck % 9 = 0 THEN '999A'
-           ELSE '232Aa' END AS ECOSUBCD,
-      'SUBP' AS PROP_BASIS,
-      1.0 AS CONDPROP_UNADJ
-    FROM mx
-  )
-"""
+           ELSE '232Aa' END""",
+)
 
 _JCASE = (
     "CASE WHEN SPCD = 475 THEN 10 WHEN SPCD = 6135 THEN 8 "
     "WHEN SPCD = 131 THEN 4 ELSE 7 END"
 )
-
-_OUT_R4 = (
-    "dia:DIA", "ht:HT", "ht4:HT4", "htsaw:HTSAW",
-    "vtotib_sound:VTOTIB_SOUND", "vmerob_sound:VMEROB_SOUND",
-    "vsawib_sound:VSAWIB_SOUND", "wtotib:WTOTIB", "wmerbch:WMERBCH",
-    "foliage:FOLIAGE", "agb:AGB", "drybio_ag:BIOMASS", "carbon_ag:CARBON",
-)
-
-
-def estimate_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    panel = spark.sql(_CPANEL_SQL)
-    ann = fia.adjust_mortality(
-        fia.interpolate_data(fia.expand_data(panel)), use_mortyr=True
-    )
-    est = carbon.estimate_carbon(carbon.prep_carbon(ann), keep_all=True)
-    # estimates are computed in place; gate every estimated column on the
-    # eligibility flag (identical to the reference's left-join null extension)
-    elig = F.col("_eligible")
-    sel = [
-        F.col("tree_ID"),
-        F.col("YEAR"),
-        F.col("STATUSCD").cast("int").alias("statuscd"),
-        F.when(elig, F.col("SPCD")).alias("spcd"),
-        fixed("DIA", 4).alias("dia_e4"),
-        fixed("HT", 4).alias("ht_e4"),
-    ]
-    for p in _OUT_R4:
-        out_name, src = p.split(":")
-        if src in ("DIA", "HT"):
-            continue
-        sel.append(fixed(F.when(elig, F.col(src)), 4).alias(out_name + "_e4"))
-    return est.select(*sel)
-
 
 # ---------------------------------------------------------------------------
 # DuckDB oracle generation
@@ -795,103 +705,7 @@ ORACLE_CARBON = _oracle()
 _POP_AREA = 1_000_000.0
 
 
-def population_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-year carbon totals + tons/acre over the estimated synthetic panel
-    (the vignette pop-scaling query, ``vignettes/pop_scaling.qmd:100-166``)."""
-    from foresttime_builder_spark.plans.population import estimate_population
-
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    panel = spark.sql(_CPANEL_SQL)
-    ann = fia.adjust_mortality(
-        fia.interpolate_data(fia.expand_data(panel)), use_mortyr=True
-    )
-    # the population query aggregates the estimated table three ways
-    # (EXPNS dim, tree totals, condition totals); persist so the carbon
-    # chain executes once — at production scale this table is the parquet
-    # output of run_states and the reuse is free
-    est = carbon.estimate_carbon(carbon.prep_carbon(ann)).persist()
-    pop = estimate_population(est, area=_POP_AREA)
-    return release_on_gc(
-        pop.select(
-            "YEAR",
-            fixed("total_tons", 2).alias("total_tons_e2"),
-            fixed("total_area", 2).alias("total_area_e2"),
-            fixed("tons_per_acre", 6).alias("tons_per_acre_e6"),
-        ),
-        est,
-    )
-
-
-def population_stratified_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Design-based (POP-table) population scaling over the estimated panel:
-    synthetic POP_PLOT_STRATUM_ASSGN / POP_STRATUM dims with three
-    non-uniform strata per year (EXPNS 1000/2000/3000, ADJ 1.0/1.1/1.2)
-    derived deterministically from PLT_CN, pushed through
-    :func:`..population.estimate_population_stratified`."""
-    from foresttime_builder_spark.plans.population import (
-        estimate_population_stratified,
-    )
-
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    panel = spark.sql(_CPANEL_SQL)
-    ann = fia.adjust_mortality(
-        fia.interpolate_data(fia.expand_data(panel)), use_mortyr=True
-    )
-    # no persist: the single-pass estimator scans the estimate exactly once
-    # (the broadcast POP dim is built from the pre-expansion panel), so a
-    # cache would only add write amplification
-    est = carbon.estimate_carbon(carbon.prep_carbon(ann))
-
-    # synthetic POP dims: stratum h = ck % 3 within each survey year
-    # (PLT_CN = '{ck}_{yr}' in the synthetic panel).  Derived from the
-    # pre-expansion panel, not the ~250-column estimate plan: the annualize
-    # chain never invents or drops PLT_CNs, so the distinct sets are equal
-    # and the dim build costs one scan of the tiny survey snapshot.
-    # PERSISTED (r16, q52 exchange audit): ``assgn`` is referenced twice —
-    # by the ``stratum`` roll-up and by the estimator's broadcast dim —
-    # and Spark shares no uncached subtree, so the whole orders→panel→
-    # distinct pipeline executed twice (the r15 after-plan shows two
-    # REPARTITION_BY_COL panel exchanges + a third orders scan feeding
-    # the dim side).  Caching the plot-key snapshot (dimension-sized: one
-    # row per plot-survey-year) computes it once; both dims then read the
-    # cache (guide §2.4: stop computing the same subtree twice).
-    plt = panel.select("PLT_CN").distinct().persist()
-    # bigint, not int: plot keys are arbitrary-magnitude ids (a scaled
-    # corpus overflowed an int32 cast here — caught by run_at_scale at sf1)
-    h = (F.split(F.col("PLT_CN"), "_").getItem(0).cast("bigint") % 3).cast("int")
-    yr = F.split(F.col("PLT_CN"), "_").getItem(1)
-    assgn = plt.select(
-        "PLT_CN",
-        F.concat_ws("_", yr, h.cast("string")).alias("STRATUM_CN"),
-        h.alias("_h"),
-    )
-    stratum = (
-        assgn.select("STRATUM_CN", "_h")
-        .distinct()
-        .select(
-            F.col("STRATUM_CN").alias("CN"),
-            (F.lit(1000.0) * (1 + F.col("_h"))).alias("EXPNS"),
-            (F.lit(1.0) + F.col("_h") * F.lit(0.1)).alias("ADJ_FACTOR_SUBP"),
-        )
-    )
-    pop = estimate_population_stratified(
-        est, stratum, assgn.select("PLT_CN", "STRATUM_CN")
-    )
-    # release_on_gc: the persisted plot-key snapshot must outlive this
-    # returned projection (both broadcast dims read it lazily), then be
-    # freed with it — the q16/q27 carry-cache discipline
-    return release_on_gc(
-        pop.select(
-            "YEAR",
-            fixed("total_tons", 2).alias("total_tons_e2"),
-            fixed("total_area", 2).alias("total_area_e2"),
-            fixed("tons_per_acre", 6).alias("tons_per_acre_e6"),
-        ),
-        plt,
-    )
-
-
-ORACLE_POPULATION_STRATIFIED = f"""WITH {{chain}},
+ORACLE_POPULATION_STRATIFIED = f"""WITH {_chain()},
 annest AS (
   SELECT f.*, c.CARBON AS CARBON_AG
   FROM final f
@@ -955,7 +769,7 @@ FROM yearly
 """
 
 
-ORACLE_POPULATION = f"""WITH {{chain}},
+ORACLE_POPULATION = f"""WITH {_chain()},
 annest AS (
   SELECT f.*, c.CARBON AS CARBON_AG
   FROM final f
@@ -1002,33 +816,7 @@ FROM yearly
 """
 
 
-def grain_sweep_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-grain aggregation sweep in one GROUPING SETS pass
-    (SURVEY §2.4 A7; the reference loops ~14 separate summaries)."""
-    from foresttime_builder_spark.plans.population import multi_grain_sweep
-
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    panel = spark.sql(_CPANEL_SQL)
-    ann = fia.adjust_mortality(
-        fia.interpolate_data(fia.expand_data(panel)), use_mortyr=True
-    )
-    est = carbon.estimate_carbon(carbon.prep_carbon(ann)).persist()
-    out = multi_grain_sweep(
-        est, grains=[["SPCD"], ["YEAR"], ["SPCD", "YEAR"], []]
-    )
-    return release_on_gc(
-        out.select(
-            F.col("SPCD").cast("int").alias("spcd"),
-            F.col("YEAR").cast("int").alias("year"),
-            "grain",
-            fixed("weighted_value", 2).alias("weighted_value_e2"),
-            "n_rows",
-        ),
-        est,
-    )
-
-
-ORACLE_GRAIN_SWEEP = f"""WITH {{chain}},
+ORACLE_GRAIN_SWEEP = f"""WITH {_chain()},
 annest AS (
   SELECT f.*, c.CARBON AS CARBON_AG
   FROM final f

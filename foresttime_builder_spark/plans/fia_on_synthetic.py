@@ -1,26 +1,26 @@
-"""End-to-end annualization pipeline over a synthetic tree panel.
+"""DuckDB twin of the annualization pipeline over a synthetic tree panel.
 
-Derives a deterministic FIA-shaped panel from the benchmark ``orders`` table
-(tree = customer, survey year = order year with punched gaps), then runs the
-*real* pipeline stages (:mod:`foresttime_builder_spark.plans.fia`:
-``expand_data → interpolate_data → adjust_mortality``). The DuckDB oracle
-replicates every stage in SQL — sentinel swap, dense-grid expansion, linear
-interpolation with extrapolation, midpoint-switch interpolation, TPA band
-join, below-threshold ⇒ fallen-dead, and the full mortality-mask algebra —
-so the pipeline itself is value-hash-gated, not just its component
-operators.
+Holds the synthetic panel's SQL text (:data:`PANEL_TEMPLATE`, which the
+Spark side in :mod:`..queries.fia` runs too) and the generated SQL twin of
+every stage of :mod:`foresttime_builder_spark.plans.fia`'s
+``expand_data → interpolate_data → adjust_mortality``: sentinel swap,
+dense-grid expansion, linear interpolation with extrapolation,
+midpoint-switch interpolation, TPA band join, below-threshold ⇒
+fallen-dead, and the full mortality-mask algebra — so the pipeline itself
+is value-hash-gated, not just its component operators.  The module imports
+none of the Spark code it checks.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from foresttime_builder_spark.functions.encoding import fixed_sql
 
-from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
-from foresttime_builder_spark.plans import fia
-from foresttime_builder_spark.sources import load_table
-
-# panel derivation (kept in exact sync between Spark and SQL)
-_PANEL_SQL = """
+#: The synthetic panel both FIA twins read, derived from ``orders`` (tree =
+#: customer, survey year = order year with punched gaps).  One text runs on
+#: Spark (``spark.sql``) and inlines into the DuckDB oracle; the two panels
+#: differ only in the five fields: DIA and HT divisors, STDORGCD, SPCD and
+#: ECOSUBCD.
+PANEL_TEMPLATE = """
   SELECT * FROM (
     WITH per AS (
       SELECT o_custkey AS ck, year(o_orderdate) AS yr,
@@ -54,10 +54,10 @@ _PANEL_SQL = """
       CAST(ck AS STRING) AS tree_ID,
       yr AS INVYR,
       concat(ck, '_', yr) AS PLT_CN,
-      floor(base / 100000 * 10000 + 0.5) / 10000 AS DIA,
-      floor(base / 20000 * 10000 + 0.5) / 10000 AS HT,
-      CASE WHEN ck % 6 = 0 THEN floor(base / 20000 * 0.9 * 10000 + 0.5) / 10000
-           ELSE floor(base / 20000 * 10000 + 0.5) / 10000 END AS ACTUALHT,
+      floor(base / {dia_div} * 10000 + 0.5) / 10000 AS DIA,
+      floor(base / {ht_div} * 10000 + 0.5) / 10000 AS HT,
+      CASE WHEN ck % 6 = 0 THEN floor(base / {ht_div} * 0.9 * 10000 + 0.5) / 10000
+           ELSE floor(base / {ht_div} * 10000 + 0.5) / 10000 END AS ACTUALHT,
       CASE WHEN (ck + yr) % 5 = 0 THEN NULL
            ELSE CAST((ck * 7 + yr) % 80 AS DOUBLE) END AS CR,
       CASE WHEN (ck + yr) % 4 = 0 THEN NULL
@@ -68,50 +68,29 @@ _PANEL_SQL = """
       CASE WHEN ck % 7 = 0 AND yr = max_yr AND ck % 2 = 1
            THEN CAST(1 + ck % 5 AS INT) ELSE NULL END AS DECAYCD,
       CASE WHEN (ck + yr) % 17 = 0 THEN 5 ELSE NULL END AS RECONCILECD,
-      0 AS STDORGCD,
+      {stdorgcd} AS STDORGCD,
       1 AS CONDID,
       CASE WHEN ck % 11 = 0 AND yr = max_yr THEN 2 ELSE 1 END
         AS COND_STATUS_CD,
       CASE WHEN ck % 7 = 0 AND ck % 3 = 1 THEN max_yr - 1 ELSE NULL END
         AS MORTYR,
-      CASE WHEN ck % 5 = 0 THEN 475 ELSE 316 END AS SPCD,
+      {spcd} AS SPCD,
       1 AS DESIGNCD,
       1 AS INTENSITY,
-      '232Aa' AS ECOSUBCD,
+      {ecosubcd} AS ECOSUBCD,
       'SUBP' AS PROP_BASIS,
       1.0 AS CONDPROP_UNADJ
     FROM mx
   )
 """
 
-
-def synthetic_tree_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_PANEL_SQL)
-
-
-def annualize_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    panel = synthetic_tree_panel(spark, sf_dir)
-    out = fia.adjust_mortality(
-        fia.interpolate_data(fia.expand_data(panel)), use_mortyr=True
-    )
-    return out.select(
-        "tree_ID",
-        "YEAR",
-        "interpolated",
-        fixed("DIA", 4).alias("dia_e4"),
-        fixed("HT", 4).alias("ht_e4"),
-        fixed("ACTUALHT", 4).alias("actualht_e4"),
-        fixed("CULL", 4).alias("cull_e4"),
-        fixed("CR", 4).alias("cr_e4"),
-        F.col("STATUSCD").cast("int").alias("statuscd"),
-        F.col("STANDING_DEAD_CD").cast("int").alias("standing_dead_cd"),
-        F.col("DECAYCD").cast("int").alias("decaycd"),
-        F.col("RECONCILECD").cast("int").alias("reconcilecd"),
-        F.col("COND_STATUS_CD").cast("int").alias("cond_status_cd"),
-        fixed("TPA_UNADJ", 4).alias("tpa_unadj_e4"),
-        "PLT_CN",
-    )
+_PANEL_SQL = PANEL_TEMPLATE.format(
+    dia_div=100000,
+    ht_div=20000,
+    stdorgcd="0",
+    spcd="CASE WHEN ck % 5 = 0 THEN 475 ELSE 316 END",
+    ecosubcd="'232Aa'",
+)
 
 
 _LIN_COLS = ["DIA", "HT", "ACTUALHT", "CULL", "CR", "CONDPROP_UNADJ"]

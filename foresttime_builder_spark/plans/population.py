@@ -5,9 +5,13 @@ the annualized + estimated table (``vignettes/pop_scaling.qmd:100-166``) and
 a legacy multi-grain aggregation sweep (``carbon_code/R/07_aggregateFIADB.R``,
 SURVEY §2.4 A7).  Both are textbook shuffle aggregations:
 
-- :func:`estimate_population`: two grouped sums (tree totals, deduped
-  condition/area totals) joined per (plot, year), then a per-year rollup and
-  ratio — exactly the vignette's EXPNS / aDI / tDI algebra;
+- one post-stratified estimator (Bechtold & Patterson 2005, USDA GTR
+  SRS-80), two designs: :func:`estimate_population_stratified` reads the
+  design from the FIA POP tables, :func:`estimate_population` derives the
+  vignette's one stratum per year (EXPNS = area / n_plots, no adjustment).
+  Both run the same single grouped pass over distinct condition tuples,
+  then a per-year rollup and ratio — the vignette's EXPNS / aDI / tDI
+  algebra;
 - :func:`multi_grain_sweep`: the reference loops one aggregation per grain
   (~14 passes over the data); here a single ``GROUPING SETS`` pass computes
   every grain in one shuffle (SURVEY §2.4 A7 mapping).
@@ -23,7 +27,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 LB_PER_TON = 2000.0
 
@@ -42,20 +46,20 @@ def _finite_or_zero(col: F.Column) -> F.Column:
     ).otherwise(F.lit(0.0))
 
 
-def estimate_population(
-    df: DataFrame,
-    area: float,
-    tree_domain: Column | None = None,
-    area_domain: Column | None = None,
-    value_col: str = "CARBON_AG",
+def _estimate(
+    d: DataFrame,
+    tree_domain: Column | None,
+    area_domain: Column | None,
+    value_col: str,
 ) -> DataFrame:
-    """Per-year population totals and per-acre ratio for ``value_col``
-    (reference ``vignettes/pop_scaling.qmd:100-166``).
+    """The post-stratified estimator over ``d``, whose rows carry their
+    design's ``EXPNS`` and ``ADJ_FACTOR_SUBP`` (NULL where the plot has no
+    stratum: the row contributes 0).  Totals per YEAR:
 
-    Returns one row per YEAR: ``total_tons`` (Σ value·TPA·EXPNS / 2000),
-    ``total_area`` (Σ CONDPROP·EXPNS over distinct conditions), and
-    ``tons_per_acre``.
-    """
+        Σ value · TPA · ADJ_FACTOR_SUBP · EXPNS / 2000   (tree domain)
+        Σ CONDPROP · ADJ_FACTOR_SUBP · EXPNS             (area domain)
+
+    and ``tons_per_acre`` = total_tons / total_area."""
     # domain indicators (qmd:103-104); null-safe to 0 like the R arithmetic
     adi_cond = (
         area_domain
@@ -67,17 +71,9 @@ def estimate_population(
     )
     adi = F.when(adi_cond, 1.0).otherwise(0.0)
     tdi = F.when(tdi_cond, 1.0).otherwise(0.0) * adi
-
-    # EXPNS = area / n_distinct(plot) per YEAR (qmd:119-123)
-    expns_dim = (
-        df.groupBy("YEAR")
-        .agg(F.countDistinct("plot_ID").alias("_nplots"))
-        .withColumn("EXPNS", F.lit(float(area)) / F.col("_nplots"))
-        .drop("_nplots")
-    )
-    d = df.withColumn("aDI", adi).withColumn("tDI", tdi).join(
-        F.broadcast(expns_dim), on="YEAR", how="left"
-    )
+    d = d.withColumn("aDI", adi).withColumn("tDI", tdi)
+    adj = F.coalesce(F.col("ADJ_FACTOR_SUBP"), F.lit(0.0))
+    expns = F.coalesce(F.col("EXPNS"), F.lit(0.0))
 
     # ONE fact pass for both rollups (qmd:141-155).  The reference (and the
     # DuckDB oracle) compute tree totals per plot-year, area totals over
@@ -92,15 +88,23 @@ def estimate_population(
     # tuple deliberately includes the attribute columns, NOT just
     # (plot, YEAR, CONDID): interpolated panels can carry mixed attribute
     # values within one condition (e.g. step-interpolated PLT_CN switching
-    # at different midpoints per tree), and the distinct-tuple semantics of
-    # the reference counts each combination.
+    # at different midpoints per tree, and with it the stratum's EXPNS and
+    # ADJ_FACTOR_SUBP), and the distinct-tuple semantics of the reference
+    # counts each combination.
     cond_grp = d.groupBy(
-        "YEAR", "plot_ID", "CONDID", "CONDPROP_UNADJ", "EXPNS", "aDI"
+        "YEAR",
+        "plot_ID",
+        "CONDID",
+        "CONDPROP_UNADJ",
+        "EXPNS",
+        "ADJ_FACTOR_SUBP",
+        "aDI",
     ).agg(
         F.sum(
             _finite_or_zero(F.col(value_col))
             * F.coalesce(F.col("TPA_UNADJ"), F.lit(0.0))
-            * F.col("EXPNS")
+            * adj
+            * expns
             * F.col("tDI")
             / LB_PER_TON
         ).alias("_cond_tons")
@@ -111,7 +115,8 @@ def estimate_population(
             F.sum("_cond_tons").alias("total_tons"),
             F.sum(
                 F.coalesce(F.col("CONDPROP_UNADJ"), F.lit(0.0))
-                * F.col("EXPNS")
+                * adj
+                * expns
                 * F.col("aDI")
             ).alias("total_area"),
         )
@@ -123,6 +128,46 @@ def estimate_population(
             F.col("total_tons") / F.nullif(F.col("total_area"), F.lit(0.0))
         )
     )
+
+
+def _year_design(df: DataFrame, area: float) -> DataFrame:
+    """The simplified design: one stratum per YEAR with
+    ``EXPNS = area / n_distinct(plot_ID)`` (qmd:119-123) and
+    ``ADJ_FACTOR_SUBP = 1``."""
+    return (
+        df.groupBy("YEAR")
+        .agg(F.countDistinct("plot_ID").alias("_nplots"))
+        .select(
+            "YEAR",
+            (F.lit(float(area)) / F.col("_nplots")).alias("EXPNS"),
+            F.lit(1.0).alias("ADJ_FACTOR_SUBP"),
+        )
+    )
+
+
+def estimate_population(
+    df: DataFrame,
+    area: float,
+    tree_domain: Column | None = None,
+    area_domain: Column | None = None,
+    value_col: str = "CARBON_AG",
+) -> DataFrame:
+    """Per-year population totals and per-acre ratio for ``value_col``
+    (reference ``vignettes/pop_scaling.qmd:100-166``).
+
+    Returns one row per YEAR: ``total_tons`` (Σ value·TPA·EXPNS / 2000),
+    ``total_area`` (Σ CONDPROP·EXPNS over distinct conditions), and
+    ``tons_per_acre``.
+
+    This is the post-stratified estimator over :func:`_year_design`.  The
+    design's ``ADJ_FACTOR_SUBP = 1`` changes no product (``x * 1.0 == x``
+    in IEEE arithmetic) and, being constant, no group, so the totals are
+    the vignette's own.  The one difference from spelling EXPNS out is a
+    NULL ``YEAR``, which joins no design row and so sums to 0 instead of
+    NULL; ``expand_grid`` never emits one.
+    """
+    d = df.join(F.broadcast(_year_design(df, area)), on="YEAR", how="left")
+    return _estimate(d, tree_domain, area_domain, value_col)
 
 
 def estimate_population_stratified(
@@ -142,86 +187,21 @@ def estimate_population_stratified(
     Each plot inherits its stratum's expansion: ``POP_PLOT_STRATUM_ASSGN``
     maps ``PLT_CN → STRATUM_CN`` and ``POP_STRATUM`` carries ``EXPNS``
     (acres represented per plot in the stratum) and ``ADJ_FACTOR_SUBP``
-    (non-sampled-area adjustment).  Totals are then
-
-        Σ value · TPA · ADJ_FACTOR_SUBP · EXPNS      (tree domain)
-        Σ CONDPROP · ADJ_FACTOR_SUBP · EXPNS         (area domain)
-
-    summed per plot-year and rolled up per year — the textbook
-    post-stratified expansion.  With one stratum per year and
-    ``EXPNS = area / n_plots``, ``ADJ = 1`` this reduces exactly to
-    :func:`estimate_population` (pinned by a pytest equivalence case).
+    (non-sampled-area adjustment); a ``PLT_CN`` with no assignment
+    contributes 0.
 
     Scale notes: the POP tables are dimension-sized (one row per plot
-    assignment / per stratum) and broadcast; the fact-side plan is
-    identical to the simplified mode — same two grouped sums on
-    (plot_ID, YEAR), no extra shuffle.
+    assignment / per stratum) and broadcast; the fact-side plan is the
+    simplified mode's — same single-pass grouped sum, no extra shuffle.
     """
-    adi_cond = (
-        area_domain
-        if area_domain is not None
-        else (F.col("COND_STATUS_CD") == 1) & (F.col("INTENSITY") == 1)
-    )
-    tdi_cond = (
-        tree_domain if tree_domain is not None else (F.col("STATUSCD") == 1)
-    )
-    adi = F.when(adi_cond, 1.0).otherwise(0.0)
-    tdi = F.when(tdi_cond, 1.0).otherwise(0.0) * adi
-
     strat = pop_stratum.select(
         F.col("CN").alias("STRATUM_CN"), "EXPNS", "ADJ_FACTOR_SUBP"
     )
     dim = pop_assgn.select("PLT_CN", "STRATUM_CN").join(
         F.broadcast(strat), on="STRATUM_CN"
     )
-    d = (
-        df.join(F.broadcast(dim), on="PLT_CN", how="left")
-        .withColumn("aDI", adi)
-        .withColumn("tDI", tdi)
-    )
-
-    # same single-pass distinct-tuple shape as estimate_population (see the
-    # comment there).  The stratum attributes (EXPNS, ADJ_FACTOR_SUBP)
-    # join through the step-interpolated PLT_CN, which CAN differ across
-    # trees within one plot-year — including them in the group key is what
-    # keeps this exactly equal to the reference's DISTINCT-then-sum.
-    cond_grp = d.groupBy(
-        "YEAR",
-        "plot_ID",
-        "CONDID",
-        "CONDPROP_UNADJ",
-        "EXPNS",
-        "ADJ_FACTOR_SUBP",
-        "aDI",
-    ).agg(
-        F.sum(
-            _finite_or_zero(F.col(value_col))
-            * F.coalesce(F.col("TPA_UNADJ"), F.lit(0.0))
-            * F.coalesce(F.col("ADJ_FACTOR_SUBP"), F.lit(0.0))
-            * F.coalesce(F.col("EXPNS"), F.lit(0.0))
-            * F.col("tDI")
-            / LB_PER_TON
-        ).alias("_cond_tons")
-    )
-    return (
-        cond_grp.groupBy("YEAR")
-        .agg(
-            F.sum("_cond_tons").alias("total_tons"),
-            F.sum(
-                F.coalesce(F.col("CONDPROP_UNADJ"), F.lit(0.0))
-                * F.coalesce(F.col("ADJ_FACTOR_SUBP"), F.lit(0.0))
-                * F.coalesce(F.col("EXPNS"), F.lit(0.0))
-                * F.col("aDI")
-            ).alias("total_area"),
-        )
-        .withColumn(
-            "tons_per_acre",
-            # nullif: a zero-area year (every condition non-sampled or
-            # NULL-proportioned) must yield NULL, not 0/0 -> NaN — Spark
-            # silently casts NaN->long as 0 while DuckDB's CAST raises
-            F.col("total_tons") / F.nullif(F.col("total_area"), F.lit(0.0))
-        )
-    )
+    d = df.join(F.broadcast(dim), on="PLT_CN", how="left")
+    return _estimate(d, tree_domain, area_domain, value_col)
 
 
 def multi_grain_sweep(

@@ -1,14 +1,72 @@
-"""fia benchmark queries; this module declares its own ``QUERIES`` entries."""
+"""fia benchmark queries; this module declares its own ``QUERIES`` entries.
+
+Every query's Spark side lives here; its DuckDB twin lives in a twin module
+(:mod:`..fia_on_synthetic`, :mod:`..carbon_on_synthetic`,
+:mod:`..state_on_fixture`) that imports none of the Spark plan code.
+"""
 
 from __future__ import annotations
+
+import atexit
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
-from foresttime_builder_spark.sources import load_table
-
-from foresttime_builder_spark.plans.queries._shared import (  # noqa: F401
-    QuerySpec,
-    _PANEL_SQL,
+from foresttime_builder_spark.operators.cache import release_on_gc
+from foresttime_builder_spark.plans import carbon, fia
+from foresttime_builder_spark.plans.carbon_on_synthetic import (
+    ORACLE_CARBON,
+    ORACLE_GRAIN_SWEEP,
+    ORACLE_POPULATION,
+    ORACLE_POPULATION_STRATIFIED,
+    _CPANEL_SQL,
+    _POP_AREA,
 )
+from foresttime_builder_spark.plans.fia_on_synthetic import (
+    ORACLE_ANNUALIZE,
+    _PANEL_SQL,
+    annualize_cte,
+)
+from foresttime_builder_spark.plans.population import (
+    estimate_population,
+    estimate_population_stratified,
+    multi_grain_sweep,
+)
+from foresttime_builder_spark.plans.queries._shared import QuerySpec
+from foresttime_builder_spark.plans.state_on_fixture import (
+    ORACLE_STATE_PIPELINE,
+    _OUT_DOUBLES,
+    _OUT_INTS,
+)
+from foresttime_builder_spark.plans.state_pipeline import run_states
+from foresttime_builder_spark.sources import fixture_state, load_table
+from foresttime_builder_spark.sources.fia import fia_load
+
+
+def _panel(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
+    """A synthetic tree panel: ``sql`` (one of the twin modules' panel
+    texts) over the SF's ``orders`` table."""
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    return spark.sql(sql)
+
+
+def _estimated(panel: DataFrame, keep_all: bool = False) -> DataFrame:
+    """The annualize → NSVB estimate chain over a synthetic panel."""
+    return carbon.estimate_carbon(
+        carbon.prep_carbon(fia.fia_annualize(panel)), keep_all=keep_all
+    )
+
+
+def _pop_e(pop: DataFrame) -> DataFrame:
+    """The population estimators' gate columns."""
+    return pop.select(
+        "YEAR",
+        fixed("total_tons", 2).alias("total_tons_e2"),
+        fixed("total_area", 2).alias("total_area_e2"),
+        fixed("tons_per_acre", 6).alias("tons_per_acre_e6"),
+    )
 
 
 def q25_fia_annualize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -16,84 +74,151 @@ def q25_fia_annualize(spark: SparkSession, sf_dir: str) -> DataFrame:
     midpoint-switch interpolation → TPA band join → mortality masks
     (SURVEY §3.1 — the full ``fia_annualize`` chain), value-hash-gated
     stage-for-stage against a DuckDB SQL twin."""
-    from foresttime_builder_spark.plans.fia_on_synthetic import annualize_panel
+    out = fia.fia_annualize(_panel(spark, sf_dir, _PANEL_SQL))
+    return out.select(
+        "tree_ID",
+        "YEAR",
+        "interpolated",
+        fixed("DIA", 4).alias("dia_e4"),
+        fixed("HT", 4).alias("ht_e4"),
+        fixed("ACTUALHT", 4).alias("actualht_e4"),
+        fixed("CULL", 4).alias("cull_e4"),
+        fixed("CR", 4).alias("cr_e4"),
+        F.col("STATUSCD").cast("int").alias("statuscd"),
+        F.col("STANDING_DEAD_CD").cast("int").alias("standing_dead_cd"),
+        F.col("DECAYCD").cast("int").alias("decaycd"),
+        F.col("RECONCILECD").cast("int").alias("reconcilecd"),
+        F.col("COND_STATUS_CD").cast("int").alias("cond_status_cd"),
+        fixed("TPA_UNADJ", 4).alias("tpa_unadj_e4"),
+        "PLT_CN",
+    )
 
-    return annualize_panel(spark, sf_dir)
 
-def _annualize_oracle() -> str:
-    from foresttime_builder_spark.plans.fia_on_synthetic import ORACLE_ANNUALIZE
+#: q26's estimated columns: output name → estimate column
+_OUT_R4 = (
+    "ht4:HT4", "htsaw:HTSAW",
+    "vtotib_sound:VTOTIB_SOUND", "vmerob_sound:VMEROB_SOUND",
+    "vsawib_sound:VSAWIB_SOUND", "wtotib:WTOTIB", "wmerbch:WMERBCH",
+    "foliage:FOLIAGE", "agb:AGB", "drybio_ag:BIOMASS", "carbon_ag:CARBON",
+)
 
-    return ORACLE_ANNUALIZE
 
 def q26_nsvb_carbon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full NSVB carbon/biomass estimation chain on the annualized synthetic
     panel (SURVEY §2.8 / §3.2): three-level coefficient resolution, equation
     dispatch, bisection merch heights, volume deduction + harmonization —
     value-hash-gated against a generated stage-by-stage DuckDB twin."""
-    from foresttime_builder_spark.plans.carbon_on_synthetic import estimate_panel
+    est = _estimated(_panel(spark, sf_dir, _CPANEL_SQL), keep_all=True)
+    # estimates are computed in place; gate every estimated column on the
+    # eligibility flag (identical to the reference's left-join null extension)
+    elig = F.col("_eligible")
+    sel = [
+        F.col("tree_ID"),
+        F.col("YEAR"),
+        F.col("STATUSCD").cast("int").alias("statuscd"),
+        F.when(elig, F.col("SPCD")).alias("spcd"),
+        fixed("DIA", 4).alias("dia_e4"),
+        fixed("HT", 4).alias("ht_e4"),
+    ]
+    for p in _OUT_R4:
+        out_name, src = p.split(":")
+        sel.append(fixed(F.when(elig, F.col(src)), 4).alias(out_name + "_e4"))
+    return est.select(*sel)
 
-    return estimate_panel(spark, sf_dir)
-
-def _carbon_oracle() -> str:
-    from foresttime_builder_spark.plans.carbon_on_synthetic import ORACLE_CARBON
-
-    return ORACLE_CARBON
 
 def q27_population_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population/area scaling over the estimated panel: EXPNS, domain
-    indicators, plot totals, per-year ratio (SURVEY §3.3, §2.4 A2-A5)."""
-    from foresttime_builder_spark.plans.carbon_on_synthetic import population_panel
+    indicators, plot totals, per-year ratio (SURVEY §3.3, §2.4 A2-A5;
+    ``vignettes/pop_scaling.qmd:100-166``)."""
+    # the population query aggregates the estimated table twice (the
+    # per-year design and the fact pass); persist so the carbon chain
+    # executes once — at production scale this table is the parquet
+    # output of run_states and the reuse is free
+    est = _estimated(_panel(spark, sf_dir, _CPANEL_SQL)).persist()
+    return release_on_gc(
+        _pop_e(estimate_population(est, area=_POP_AREA)), est
+    )
 
-    return population_panel(spark, sf_dir)
 
 def q28_grain_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-grain aggregation sweep via one GROUPING SETS pass
-    (SURVEY §2.4 A7)."""
-    from foresttime_builder_spark.plans.carbon_on_synthetic import grain_sweep_panel
-
-    return grain_sweep_panel(spark, sf_dir)
-
-def _pop_oracle() -> str:
-    from foresttime_builder_spark.plans.carbon_on_synthetic import (
-        ORACLE_POPULATION,
-        carbon_cte,
+    (SURVEY §2.4 A7; the reference loops ~14 separate summaries)."""
+    est = _estimated(_panel(spark, sf_dir, _CPANEL_SQL)).persist()
+    out = multi_grain_sweep(
+        est, grains=[["SPCD"], ["YEAR"], ["SPCD", "YEAR"], []]
+    )
+    return release_on_gc(
+        out.select(
+            F.col("SPCD").cast("int").alias("spcd"),
+            F.col("YEAR").cast("int").alias("year"),
+            "grain",
+            fixed("weighted_value", 2).alias("weighted_value_e2"),
+            "n_rows",
+        ),
+        est,
     )
 
-    return ORACLE_POPULATION.format(chain=carbon_cte())
 
 def q52_population_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Design-based (POP_STRATUM / POP_PLOT_STRATUM_ASSGN) population
     scaling: each plot inherits its stratum's EXPNS and ADJ_FACTOR_SUBP —
     the rFIA/EVALIDator-style estimator the simplified per-year EXPNS
-    (q27) approximates (SURVEY §3.3; vignettes/pop_scaling.qmd:36-44)."""
-    from foresttime_builder_spark.plans.carbon_on_synthetic import (
-        population_stratified_panel,
+    (q27) approximates (SURVEY §3.3; vignettes/pop_scaling.qmd:36-44).
+    The synthetic POP dims hold three non-uniform strata per year (EXPNS
+    1000/2000/3000, ADJ 1.0/1.1/1.2) derived deterministically from
+    PLT_CN."""
+    panel = _panel(spark, sf_dir, _CPANEL_SQL)
+    # no persist: the single-pass estimator scans the estimate exactly once
+    # (the broadcast POP dim is built from the pre-expansion panel), so a
+    # cache would only add write amplification
+    est = _estimated(panel)
+
+    # synthetic POP dims: stratum h = ck % 3 within each survey year
+    # (PLT_CN = '{ck}_{yr}' in the synthetic panel).  Derived from the
+    # pre-expansion panel, not the ~250-column estimate plan: the annualize
+    # chain never invents or drops PLT_CNs, so the distinct sets are equal
+    # and the dim build costs one scan of the tiny survey snapshot.
+    # PERSISTED (r16, q52 exchange audit): ``assgn`` is referenced twice —
+    # by the ``stratum`` roll-up and by the estimator's broadcast dim —
+    # and Spark shares no uncached subtree, so the whole orders→panel→
+    # distinct pipeline executed twice (the r15 after-plan shows two
+    # REPARTITION_BY_COL panel exchanges + a third orders scan feeding
+    # the dim side).  Caching the plot-key snapshot (dimension-sized: one
+    # row per plot-survey-year) computes it once; both dims then read the
+    # cache (guide §2.4: stop computing the same subtree twice).
+    plt = panel.select("PLT_CN").distinct().persist()
+    # bigint, not int: plot keys are arbitrary-magnitude ids (a scaled
+    # corpus overflowed an int32 cast here — caught by run_at_scale at sf1)
+    h = (F.split(F.col("PLT_CN"), "_").getItem(0).cast("bigint") % 3).cast("int")
+    yr = F.split(F.col("PLT_CN"), "_").getItem(1)
+    assgn = plt.select(
+        "PLT_CN",
+        F.concat_ws("_", yr, h.cast("string")).alias("STRATUM_CN"),
+        h.alias("_h"),
     )
-
-    return population_stratified_panel(spark, sf_dir)
-
-def _pop_stratified_oracle() -> str:
-    from foresttime_builder_spark.plans.carbon_on_synthetic import (
-        ORACLE_POPULATION_STRATIFIED,
-        carbon_cte,
+    stratum = (
+        assgn.select("STRATUM_CN", "_h")
+        .distinct()
+        .select(
+            F.col("STRATUM_CN").alias("CN"),
+            (F.lit(1000.0) * (1 + F.col("_h"))).alias("EXPNS"),
+            (F.lit(1.0) + F.col("_h") * F.lit(0.1)).alias("ADJ_FACTOR_SUBP"),
+        )
     )
+    pop = estimate_population_stratified(
+        est, stratum, assgn.select("PLT_CN", "STRATUM_CN")
+    )
+    # release_on_gc: the persisted plot-key snapshot must outlive this
+    # returned projection (both broadcast dims read it lazily), then be
+    # freed with it — the q16/q27 carry-cache discipline
+    return release_on_gc(_pop_e(pop), plt)
 
-    return ORACLE_POPULATION_STRATIFIED.format(chain=carbon_cte())
 
 def q38_sapling_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sapling state machine over the annualized panel: lag/lead year-over-
     year transitions + per-from-state proportions (SURVEY §2.5 W9, the
     reference's ``scripts/05-check_saplings.R`` transition matrix)."""
-    from foresttime_builder_spark.plans import fia
-    from foresttime_builder_spark.plans.fia_on_synthetic import (
-        _PANEL_SQL,
-        synthetic_tree_panel,
-    )
-
-    panel = synthetic_tree_panel(spark, sf_dir)
-    ann = fia.adjust_mortality(
-        fia.interpolate_data(fia.expand_data(panel)), use_mortyr=True
-    )
+    ann = fia.fia_annualize(_panel(spark, sf_dir, _PANEL_SQL))
     state = (
         F.when(F.col("STATUSCD").isNull(), "unknown")
         .when(F.col("STATUSCD") == 2, "dead")
@@ -120,13 +245,7 @@ def q38_sapling_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         fixed(F.col("n") / F.sum("n").over(tot), 4).alias("prop_e4"),
     )
 
-def _sapling_oracle() -> str:
-    from foresttime_builder_spark.plans.fia_on_synthetic import (
-        _PANEL_SQL,
-        annualize_cte,
-    )
-
-    return f"""
+ORACLE_Q38 = f"""
 WITH {annualize_cte(_PANEL_SQL)},
 st AS (
   SELECT tree_ID, YEAR,
@@ -155,11 +274,6 @@ FROM counts
 def q39_id_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite-key build + split roundtrip (SURVEY §2.6 O6 / §1.2:
     underscore-joined plot/tree IDs and their inverse)."""
-    from foresttime_builder_spark.plans.fia import (
-        add_composite_ids,
-        split_composite_ids,
-    )
-
     c = load_table(spark, sf_dir, "customer")
     synth = c.select(
         (F.col("c_nationkey") + 1).alias("STATECD"),
@@ -169,8 +283,8 @@ def q39_id_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_custkey") % 4 + 1).alias("SUBP"),
         (F.col("c_custkey") % 9 + 1).alias("TREE"),
     )
-    built = add_composite_ids(synth)
-    parsed = split_composite_ids(
+    built = fia.add_composite_ids(synth)
+    parsed = fia.split_composite_ids(
         built.select("tree_ID", "plot_ID"), id_col="tree_ID"
     )
     return parsed.select(
@@ -206,36 +320,46 @@ def q51_state_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     → CSV source layer → tidy → annualize (BOTH mortality variants) → NSVB
     estimate → parquet sink → read-back (``scripts/state-parquet.R:10-49``).
     The oracle rebuilds the identical CSV rows as VALUES and runs the SQL
-    twin of every stage (plans.state_on_fixture)."""
-    from foresttime_builder_spark.plans.state_on_fixture import (
-        state_pipeline_roundtrip,
-    )
+    twin of every stage (plans.state_on_fixture).  ``sf_dir`` is unused
+    (the fixture is its own input) but kept for the queries() contract."""
+    # per-process scratch, removed at exit: concurrent runs must not
+    # rewrite each other's CSVs and parquet output mid-read
+    base = os.path.join(tempfile.gettempdir(), f"ftb_q51_state_{os.getpid()}")
+    if not os.path.isdir(base):
+        atexit.register(shutil.rmtree, base, ignore_errors=True)
+    csv_dir, out_dir = os.path.join(base, "csv"), os.path.join(base, "out")
+    fixture_state.write_csvs(csv_dir)
+    db = fia_load(spark, [fixture_state.STATE], csv_dir)
+    paths = run_states(spark, db, out_dir, estimate=True)
 
-    return state_pipeline_roundtrip(spark, sf_dir)
-
-def _state_pipeline_oracle() -> str:
-    from foresttime_builder_spark.plans.state_on_fixture import oracle_sql
-
-    return oracle_sql()
-
-def _grain_oracle() -> str:
-    from foresttime_builder_spark.plans.carbon_on_synthetic import (
-        ORACLE_GRAIN_SWEEP,
-        carbon_cte,
-    )
-
-    return ORACLE_GRAIN_SWEEP.format(chain=carbon_cte())
+    frames = []
+    for variant, name in (("midpt", "annualized_midpt"),
+                          ("mortyr", "annualized_mortyr")):
+        df = spark.read.parquet(paths[name])
+        sel = [
+            F.lit(variant).alias("variant"),
+            "plot_ID",
+            "tree_ID",
+            F.col("YEAR").cast("int").alias("year"),
+            "interpolated",
+            *[fixed(c, 4).alias(c.lower() + "_e4") for c in _OUT_DOUBLES],
+            *[F.col(c).cast("int").alias(c.lower()) for c in _OUT_INTS],
+            fixed("DRYBIO_AG", 4).alias("drybio_ag_e4"),
+            fixed("CARBON_AG", 4).alias("carbon_ag_e4"),
+        ]
+        frames.append(df.select(*sel))
+    return frames[0].unionByName(frames[1])
 
 
 QUERIES: dict[str, QuerySpec] = {
-    "q25_fia_annualize": QuerySpec(q25_fia_annualize, _annualize_oracle()),
-    "q26_nsvb_carbon": QuerySpec(q26_nsvb_carbon, _carbon_oracle()),
-    "q27_population_scaling": QuerySpec(q27_population_scaling, _pop_oracle()),
-    "q28_grain_sweep": QuerySpec(q28_grain_sweep, _grain_oracle()),
-    "q38_sapling_transitions": QuerySpec(q38_sapling_transitions, _sapling_oracle()),
+    "q25_fia_annualize": QuerySpec(q25_fia_annualize, ORACLE_ANNUALIZE),
+    "q26_nsvb_carbon": QuerySpec(q26_nsvb_carbon, ORACLE_CARBON),
+    "q27_population_scaling": QuerySpec(q27_population_scaling, ORACLE_POPULATION),
+    "q28_grain_sweep": QuerySpec(q28_grain_sweep, ORACLE_GRAIN_SWEEP),
+    "q38_sapling_transitions": QuerySpec(q38_sapling_transitions, ORACLE_Q38),
     "q39_id_roundtrip": QuerySpec(q39_id_roundtrip, ORACLE_Q39),
-    "q51_state_pipeline": QuerySpec(q51_state_pipeline, _state_pipeline_oracle()),
+    "q51_state_pipeline": QuerySpec(q51_state_pipeline, ORACLE_STATE_PIPELINE),
     "q52_population_stratified": QuerySpec(
-        q52_population_stratified, _pop_stratified_oracle()
+        q52_population_stratified, ORACLE_POPULATION_STRATIFIED
     ),
 }

@@ -1,4 +1,4 @@
-"""End-to-end state-pipeline gate (q51): CSV → parquet round trip.
+"""DuckDB twin of the end-to-end state-pipeline gate (q51): CSV → parquet.
 
 The full production path of the reference's per-state job
 (``scripts/state-parquet.R:10-49``): raw FIA-shaped CSVs → CSV source layer
@@ -11,7 +11,9 @@ proves the assembled product (including the source layer and the sink) on
 the scenario fixture (one named tree per reference test scenario,
 FIXTURES.md §2).
 
-The DuckDB oracle rebuilds the identical input as VALUES CTEs
+The Spark side is ``queries.fia.q51_state_pipeline``; this module holds
+its twin and imports none of the code the twin checks.  The DuckDB oracle
+rebuilds the identical input as VALUES CTEs
 (``sources.fixture_state.values_sql``) and runs the SQL twin of the whole
 chain: a tidy-join twin (this module) + the annualize chain
 (``fia_on_synthetic.annualize_cte``, per mortality variant) + the NSVB
@@ -26,19 +28,11 @@ non-matching).
 
 from __future__ import annotations
 
-import atexit
 import functools
-import os
-import shutil
-import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
+from foresttime_builder_spark.functions.encoding import fixed_sql
 from foresttime_builder_spark.plans.carbon_on_synthetic import carbon_cte
-from foresttime_builder_spark.plans.state_pipeline import run_states
 from foresttime_builder_spark.sources import fixture_state
-from foresttime_builder_spark.sources.fia import fia_load
 
 #: fia_tidy twin (R/fia_tidy.R:19-142 semantics as implemented in
 #: plans/fia.py): prune+filter+composite-ids, the three left joins, the
@@ -105,40 +99,6 @@ _OUT_INTS = ("STATUSCD", "STANDING_DEAD_CD", "DECAYCD")
 _sql_e4 = functools.partial(fixed_sql, n=4)
 
 
-def state_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run the whole per-state job on the fixture CSVs; return both
-    mortality variants of the parquet output, tagged and rounded for the
-    cross-engine hash gate.  ``sf_dir`` is unused (the fixture is its own
-    input) but kept for the queries() contract."""
-    # per-process scratch, removed at exit: concurrent runs must not
-    # rewrite each other's CSVs and parquet output mid-read
-    base = os.path.join(tempfile.gettempdir(), f"ftb_q51_state_{os.getpid()}")
-    if not os.path.isdir(base):
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-    csv_dir, out_dir = os.path.join(base, "csv"), os.path.join(base, "out")
-    fixture_state.write_csvs(csv_dir)
-    db = fia_load(spark, [fixture_state.STATE], csv_dir)
-    paths = run_states(spark, db, out_dir, estimate=True)
-
-    frames = []
-    for variant, name in (("midpt", "annualized_midpt"),
-                          ("mortyr", "annualized_mortyr")):
-        df = spark.read.parquet(paths[name])
-        sel = [
-            F.lit(variant).alias("variant"),
-            "plot_ID",
-            "tree_ID",
-            F.col("YEAR").cast("int").alias("year"),
-            "interpolated",
-            *[fixed(c, 4).alias(c.lower() + "_e4") for c in _OUT_DOUBLES],
-            *[F.col(c).cast("int").alias(c.lower()) for c in _OUT_INTS],
-            fixed("DRYBIO_AG", 4).alias("drybio_ag_e4"),
-            fixed("CARBON_AG", 4).alias("carbon_ag_e4"),
-        ]
-        frames.append(df.select(*sel))
-    return frames[0].unionByName(frames[1])
-
-
 def _variant_sql(use_mortyr: bool) -> str:
     values = ",\n".join(fixture_state.values_sql().values())
     panel_sql = f"WITH {values},{_TIDY_CTES} SELECT * FROM tidy"
@@ -168,9 +128,8 @@ LEFT JOIN carbonout c
 ) sub"""
 
 
-def oracle_sql() -> str:
-    return (
-        _variant_sql(use_mortyr=False)
-        + "\nUNION ALL\n"
-        + _variant_sql(use_mortyr=True)
-    )
+ORACLE_STATE_PIPELINE = (
+    _variant_sql(use_mortyr=False)
+    + "\nUNION ALL\n"
+    + _variant_sql(use_mortyr=True)
+)

@@ -59,12 +59,12 @@ def run_states(
         if estimate:
             both = carbon.estimate_carbon(carbon.prep_carbon(both))
 
-        # recover STATECD from the composite plot key for partitioning
-        if "STATECD" not in both.columns:
-            both = both.withColumn(
-                "STATECD",
-                F.split(F.col("plot_ID"), "_").getItem(0).cast("int"),
-            )
+        # recover STATECD from the composite plot key for partitioning:
+        # fia_tidy projects it away and no reference table joined by
+        # prep_carbon or estimate_carbon carries it
+        both = both.withColumn(
+            "STATECD", F.split(F.col("plot_ID"), "_").getItem(0).cast("int")
+        )
         root = os.path.join(out_dir, "annualized")
         both.write.mode("overwrite").partitionBy("variant", "STATECD").parquet(root)
     finally:
