@@ -131,6 +131,51 @@ _IDENT = None  # compiled lazily; helpers imports before re is warm
 _BQTOK = None  # `quoted identifier` extractor (`` = escaped backquote)
 
 
+def _tokens(expr: str) -> set[str]:
+    """Every identifier an expression's SQL text may read, lower-cased:
+    its word tokens (function names and literals included) and its
+    backquoted names."""
+    _compile_tokens()
+    return {t.lower() for t in _IDENT.findall(expr)} | {
+        m.replace("``", "`").lower() for m in _BQTOK.findall(expr)
+    }
+
+
+def _compile_tokens() -> None:
+    global _IDENT, _BQTOK
+    if _IDENT is None:
+        import re
+
+        _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+        _BQTOK = re.compile(r"`((?:[^`]|``)*)`")
+
+
+def prune_layers(
+    layers: list[tuple[dict[str, str], list[str]]],
+    keep: list[str] | set[str],
+) -> list[tuple[dict[str, str], list[str]]]:
+    """The ``(exprs, drops)`` layers reduced to what the ``keep`` columns
+    depend on: walking back from the last layer, an expression stays when
+    a kept column or a later kept expression reads its name (same
+    conservative token scan as :func:`_merge_layers`: a false match only
+    keeps more).  Drops stay as they are (dropping an absent column is a
+    no-op) and layers left empty go, so every ``keep`` column has the
+    value it had under the full list.  The NSVB DAG uses it to build only
+    what a caller writes."""
+    needed = {k.lower() for k in keep}
+    out = []
+    for exprs, drops in reversed(layers):
+        # a column dropped here is not the one any later layer reads
+        needed -= {d.lower() for d in drops}
+        kept = {k: e for k, e in exprs.items() if k.lower() in needed}
+        needed -= {k.lower() for k in kept}
+        for e in kept.values():
+            needed |= _tokens(e)
+        if kept or drops:
+            out.append((kept, list(drops)))
+    return out[::-1]
+
+
 def _merge_layers(
     layers: list[tuple[dict[str, str], list[str]]],
 ) -> list[tuple[dict[str, str], list[str]]]:
@@ -154,12 +199,7 @@ def _merge_layers(
     is skipped outright (layers return unchanged — correct, just
     unpacked).  All current carbon-DAG names are snake_case, so packing
     stays active where it matters."""
-    global _IDENT, _BQTOK
-    if _IDENT is None:
-        import re
-
-        _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
-        _BQTOK = re.compile(r"`((?:[^`]|``)*)`")
+    _compile_tokens()
     word_ok = _IDENT.fullmatch
     for exprs, drops in layers:
         for n in list(exprs or ()) + list(drops or ()):
@@ -173,15 +213,7 @@ def _merge_layers(
         exprs = dict(exprs) if exprs else {}
         drops = list(drops) if drops else []
         names = {k.lower() for k in exprs} | {d.lower() for d in drops}
-        tokens = {
-            t.lower()
-            for e in exprs.values()
-            for t in _IDENT.findall(e)
-        } | {
-            m.replace("``", "`").lower()
-            for e in exprs.values()
-            for m in _BQTOK.findall(e)
-        }
+        tokens = set().union(*map(_tokens, exprs.values()))
         place = len(levels)
         for i in range(len(levels) - 1, -1, -1):
             _, _, mnames, mtokens = levels[i]

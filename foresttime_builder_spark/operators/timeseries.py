@@ -226,19 +226,21 @@ def linear_interpolate_layers(
     chain can fuse its whole interpolation stage into ONE generated
     statement (r16; see :func:`fill_gaps_layers`).
 
-    Expression design notes (unchanged from the r12-r15 forms):
+    Expression design notes:
 
-    ONE window function per column: collect the sorted known-point array
-    as a group constant.  An unbounded frame is evaluated once per group
-    (UnboundedWindowFunctionFrame aggregates the partition a single time),
-    and every derived quantity — nearest points either side, boundary
-    lines, known-count — is ordinary codegen'd array algebra over that
-    attribute.  The round-1 shape spent 7 interpreted per-row window
-    evaluations per column across 3 sequential Window passes; this is the
-    dominant-cost fix for the annualize pipeline.  collect_list drops the
-    nulls (unknown rows), and WindowExec's partition sort makes the array
-    x-ascending.  Groups are small (a tree has tens of rows), so the
-    per-row O(k) array filters are cheap and the arrays never approach
+    The boundary quantities — known-count and the two known points
+    nearest each end — come from ONE group-constant window per column:
+    the sorted known-point array (``collect_list`` drops the nulls, and
+    WindowExec's partition sort makes it x-ascending).  The nearest known
+    point at-or-before / at-or-after each row are ``last``/``first``
+    ignoring nulls over RANGE frames on the same partition and order:
+    a RANGE frame includes the row's peers, so a duplicate x sees the
+    known points at its own x on both sides, exactly as ``e.x <= x`` /
+    ``e.x >= x`` would over the array.  Every function shares one sort
+    and one Window node, and the final projection is plain array
+    indexing and arithmetic, so it stays in whole-stage codegen (a
+    ``filter(k, e -> ...)`` lambda is evaluated interpreted).  Groups
+    are small (a tree has tens of rows), so the arrays never approach
     collect_list's size limits.
 
     Expressions are assembled as SQL text and analyzed JVM-side in one
@@ -247,26 +249,35 @@ def linear_interpolate_layers(
     the q25 wall time (plan construction measured ~2x the execution), and
     the former one-transform-per-stage form paid a full analyzer pass per
     transform on an already-deep plan."""
+    part = _partition_clause(group_cols)
+    order = f"ORDER BY {_bq(x_col)} "
     over = (
-        f"OVER ({_partition_clause(group_cols)}ORDER BY {_bq(x_col)} "
+        f"OVER ({part}{order}"
         "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
+    )
+    over_prev = (
+        f"OVER ({part}{order}RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    )
+    over_next = (
+        f"OVER ({part}{order}RANGE BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
     )
     x = f"CAST({_bq(x_col)} AS DOUBLE)"
 
-    karrs = {}
+    windows = {}
     for c in cols:
         y = f"CAST({_bq(c)} AS DOUBLE)"
         kp = f"CASE WHEN {y} IS NOT NULL THEN named_struct('x', {x}, 'y', {y}) END"
-        karrs[f"_li_{c}_k"] = f"collect_list({kp}) {over}"
+        windows[f"_li_{c}_k"] = f"collect_list({kp}) {over}"
+        windows[f"_li_{c}_p"] = f"last({kp}, true) {over_prev}"
+        windows[f"_li_{c}_n"] = f"first({kp}, true) {over_next}"
 
     final, drops = {}, []
     for c in cols:
         y = f"CAST({_bq(c)} AS DOUBLE)"
         k = _bq(f"_li_{c}_k")
-        drops.append(f"_li_{c}_k")
         # nearest known point at-or-before / at-or-after this row
-        prev = f"try_element_at(filter({k}, e -> e.x <= {x}), -1)"
-        nxt = f"try_element_at(filter({k}, e -> e.x >= {x}), 1)"
+        prev, nxt = _bq(f"_li_{c}_p"), _bq(f"_li_{c}_n")
+        drops += [f"_li_{c}_k", f"_li_{c}_p", f"_li_{c}_n"]
         interp = (
             f"({prev}).y + (({nxt}).y - ({prev}).y)"
             f" / (({nxt}).x - ({prev}).x) * ({x} - ({prev}).x)"
@@ -304,7 +315,7 @@ def linear_interpolate_layers(
             # leading gap: extend line through first two known points
             f"ELSE {bwd} END"
         )
-    return [(karrs, []), (final, drops)]
+    return [(windows, []), (final, drops)]
 
 
 def step_interpolate(
@@ -341,35 +352,37 @@ def step_interpolate_layers(
     """:func:`step_interpolate` as ``apply_layers`` layers (r16 chain
     fusion; see :func:`fill_gaps_layers`).
 
-    ONE window function per column (same design as linear_interpolate):
-    the sorted (index, value) known array is a group constant computed
-    once per group; nearest-known lookups either side are codegen'd array
-    filters instead of interpreted per-row window evaluations.  The
-    row_number layer stays separate (cheap, single-function Window node)
-    since the packed struct depends on it — the ASAP packer keeps the
-    dependency order.  SQL-text expressions for the same py4j-chatter
-    reason as linear_interpolate."""
+    The nearest known (index, value) at-or-before / at-or-after each row
+    are ``last``/``first`` ignoring nulls over ROWS frames on the row's
+    index order (indices are unique, so a ROWS frame is exactly
+    ``e.i <= _sg_i`` / ``e.i >= _sg_i``): one sort, one Window node, and a
+    final projection of plain struct arithmetic that stays in whole-stage
+    codegen.  The row_number layer stays separate since the packed struct
+    depends on it — the ASAP packer keeps the dependency order.  SQL-text
+    expressions for the same py4j-chatter reason as linear_interpolate."""
     part = _partition_clause(group_cols)
-    over = (
-        f"OVER ({part}ORDER BY {_bq(order_col)} "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
+    order = f"ORDER BY {_bq(order_col)} "
+    over_prev = (
+        f"OVER ({part}{order}ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    )
+    over_next = (
+        f"OVER ({part}{order}ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
     )
 
-    rn = {"_sg_i": f"row_number() OVER ({part}ORDER BY {_bq(order_col)})"}
-    karrs = {}
+    rn = {"_sg_i": f"row_number() OVER ({part}{order})"}
+    windows = {}
     for c in cols:
         kp = (
             f"CASE WHEN {_bq(c)} IS NOT NULL"
             f" THEN named_struct('i', _sg_i, 'v', {_bq(c)}) END"
         )
-        karrs[f"_sg_{c}_k"] = f"collect_list({kp}) {over}"
+        windows[f"_sg_{c}_p"] = f"last({kp}, true) {over_prev}"
+        windows[f"_sg_{c}_n"] = f"first({kp}, true) {over_next}"
     filled = {}
     drops = ["_sg_i"]
     for c in cols:
-        k = _bq(f"_sg_{c}_k")
-        drops.append(f"_sg_{c}_k")
-        prev = f"try_element_at(filter({k}, e -> e.i <= _sg_i), -1)"
-        nxt = f"try_element_at(filter({k}, e -> e.i >= _sg_i), 1)"
+        prev, nxt = _bq(f"_sg_{c}_p"), _bq(f"_sg_{c}_n")
+        drops += [f"_sg_{c}_p", f"_sg_{c}_n"]
         switch_at = f"({prev}).i + CEIL((({nxt}).i - ({prev}).i) / 2.0D)"
         filled[c] = (
             f"CASE WHEN {_bq(c)} IS NOT NULL THEN {_bq(c)} "
@@ -378,4 +391,4 @@ def step_interpolate_layers(
             f"WHEN _sg_i < {switch_at} THEN ({prev}).v "
             f"ELSE ({nxt}).v END"
         )
-    return [(rn, []), (karrs, []), (filled, drops)]
+    return [(rn, []), (windows, []), (filled, drops)]

@@ -29,7 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from foresttime_builder_spark.functions import nsvb
-from foresttime_builder_spark.functions.helpers import apply_layers
+from foresttime_builder_spark.functions.helpers import (
+    _bq,
+    apply_layers,
+    prune_layers,
+)
 from foresttime_builder_spark.functions.nsvb import rif_sql
 from foresttime_builder_spark.sources import ref_tables
 
@@ -104,6 +108,21 @@ def prep_carbon(df: DataFrame) -> DataFrame:
     )
 
 
+#: prepped columns estimate_carbon mutates in place to feed the equations;
+#: the caller-visible contract keeps the prepped originals
+_MUTATED = ("CR", "STDORGCD", "SPCD", "CULL")
+#: what estimate_carbon's default output reads from the NSVB DAG besides
+#: the prepped columns: the stashed originals, the two estimates and the
+#: eligibility inputs
+ESTIMATE_READS = (
+    *(f"_orig_{c}" for c in _MUTATED),
+    "BIOMASS",
+    "CARBON",
+    "JENKINS_SPGRPCD",
+    "HT",
+)
+
+
 def estimate_carbon(df_prepped: DataFrame, keep_all: bool = False) -> DataFrame:
     """Run the NSVB equation system and attach the estimates
     (reference ``R/estimate_carbon.R:10-105``).
@@ -121,7 +140,6 @@ def estimate_carbon(df_prepped: DataFrame, keep_all: bool = False) -> DataFrame:
     contract (prepped input columns + ``DRYBIO_AG`` + ``CARBON_AG``).
     """
     spark = df_prepped.sparkSession
-    E = F.expr
     crprop = ref_tables.median_crprop(spark)
     cr_dim = crprop.select(
         F.col("Province").alias("PROVINCE"), "SFTWD_HRDWD", "CRmn"
@@ -130,9 +148,6 @@ def estimate_carbon(df_prepped: DataFrame, keep_all: bool = False) -> DataFrame:
     undef = ref_tables.crprop_undefined()
 
     eligible = "(JENKINS_SPGRPCD < 10) AND (HT IS NOT NULL)"
-    # the in-place mutations below feed the equations; the caller-visible
-    # contract keeps the prepped originals
-    mutated = ("CR", "STDORGCD", "SPCD", "CULL")
 
     joined = df_prepped.join(
         F.broadcast(cr_dim), on=["SFTWD_HRDWD", "PROVINCE"], how="left"
@@ -141,7 +156,7 @@ def estimate_carbon(df_prepped: DataFrame, keep_all: bool = False) -> DataFrame:
         joined,
         [
             # stash the prepped originals before the in-place mutations
-            ({f"_orig_{c}": c for c in mutated}, []),
+            ({f"_orig_{c}": c for c in _MUTATED}, []),
             (
                 {
                     "CRmn": (
@@ -172,28 +187,54 @@ def estimate_carbon(df_prepped: DataFrame, keep_all: bool = False) -> DataFrame:
         ],
     )
 
-    est = predict_crm2(fiadb).withColumn("_eligible", E(eligible))
     if keep_all:
-        return est
+        return predict_crm2(fiadb).withColumn("_eligible", F.expr(eligible))
 
-    restore = {c: F.col(f"_orig_{c}") for c in mutated}
-    restore["DRYBIO_AG"] = E(f"CASE WHEN {eligible} THEN BIOMASS END")
-    restore["CARBON_AG"] = E(f"CASE WHEN {eligible} THEN CARBON END")
-    out = est.withColumns(restore)
-    return out.select(*df_prepped.columns, "DRYBIO_AG", "CARBON_AG")
+    # build only what the output reads: the sink never writes the ~100
+    # other responses, the HT4/HTSAW bisection among them
+    est = predict_crm2(fiadb, keep=[*df_prepped.columns, *ESTIMATE_READS])
+
+    # the prepped columns, mutated ones restored, then the estimates
+    return est.selectExpr(
+        *(
+            f"{_bq('_orig_' + c)} AS {_bq(c)}" if c in _MUTATED else _bq(c)
+            for c in df_prepped.columns
+        ),
+        f"CASE WHEN {eligible} THEN BIOMASS END AS DRYBIO_AG",
+        f"CASE WHEN {eligible} THEN CARBON END AS CARBON_AG",
+    )
 
 
-def predict_crm2(data: DataFrame) -> DataFrame:
+def predict_crm2(data: DataFrame, keep: list[str] | None = None) -> DataFrame:
     """The NSVB 40-column prediction/deduction/harmonization DAG
     (reference ``R/predictCRM2.R:4-626``), as one lazy column plan:
     three broadcast dim joins, then every derived column in one
     nested-CTE SQL pyramid (single analysis pass, single codegen span
-    except the bisection's ArrowEvalPython)."""
-    nsvb.register_udfs(data.sparkSession)
+    except the bisection's ArrowEvalPython).
+
+    With ``keep``, only the layers those columns depend on are built
+    (:func:`..functions.helpers.prune_layers`); the bisection UDF is
+    registered only when a built layer calls it."""
+    layers = crm2_layers()
+    if keep is not None:
+        layers = prune_layers(layers, keep)
+    if calls_bisect(layers):
+        nsvb.register_udfs(data.sparkSession)
+    return apply_layers(nsvb.join_coef_dims(data), layers)
+
+
+def calls_bisect(layers: list[tuple[dict[str, str], list[str]]]) -> bool:
+    """Whether any layer expression calls the ``nsvb_bisect_ht`` UDF."""
+    return any(
+        "nsvb_bisect_ht" in e for exprs, _ in layers for e in exprs.values()
+    )
+
+
+def crm2_layers() -> list[tuple[dict[str, str], list[str]]]:
+    """:func:`predict_crm2`'s ``(exprs, drops)`` layers over the
+    coefficient-joined rows (SQL text, no Spark)."""
     avail = {p: frozenset(cols) for p, cols in nsvb.prefix_cols().items()}
     fv = nsvb.find_vol_sql
-
-    d = nsvb.join_coef_dims(data)
     pick_exprs, pick_drops = nsvb.coef_pick_layer()
 
     layers: list[tuple[dict[str, str], list[str]]] = []
@@ -582,5 +623,4 @@ def predict_crm2(data: DataFrame) -> DataFrame:
         )
     )
     layers.append(({}, ["_ht4_raw", "_htsaw_raw", "_bcp_raw", "_bcp0"]))
-
-    return apply_layers(d, layers)
+    return layers

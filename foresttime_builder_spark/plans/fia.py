@@ -12,18 +12,21 @@ Stage-for-stage capability parity with the reference pipeline
 - mortality masks are pure column algebra with R NA semantics via
   :mod:`foresttime_builder_spark.functions.helpers`.
 
-Scale notes: after :func:`fia_tidy` everything partitions by
-``(plot_ID, tree_ID)``; one exchange covers every window in expand /
-interpolate / adjust (Catalyst collapses same-partitioning Window nodes).
-The only other shuffles are the three tidy joins. Reference tables are all
-broadcast.
+Scale notes: everything from :func:`fia_tidy`'s MORTYR/SPCD window on
+partitions by ``(plot_ID, tree_ID)``; that one exchange covers every window
+in tidy / expand / interpolate / adjust (Catalyst collapses
+same-partitioning Window nodes), and :func:`adjust_mortality` emits both
+mortality variants from the same projection.  The three tidy joins are
+broadcast at state scale, as are the reference tables.
 """
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+
 from pyspark.sql import DataFrame, Window, functions as F
 
-from foresttime_builder_spark.functions.helpers import apply_layers
+from foresttime_builder_spark.functions.helpers import _bq, apply_layers
 from foresttime_builder_spark.operators import expand_grid, fill_gaps
 from foresttime_builder_spark.operators.timeseries import (
     fill_gaps_layers,
@@ -97,8 +100,8 @@ def split_composite_ids(df: DataFrame, id_col: str = "tree_ID") -> DataFrame:
 def fia_tidy(db: dict[str, DataFrame]) -> DataFrame:
     """Join PLOT ⋈ TREE ⋈ PLOTGEOM ⋈ COND into the tree-panel table
     (reference ``R/fia_tidy.R:19-142``): prune to the column contract,
-    filter INVYR >= 2000, composite IDs, MORTYR fill / last-SPCD windows,
-    re-attach empty plots."""
+    filter INVYR >= 2000, composite IDs, MORTYR fill / last-SPCD windows;
+    an empty plot is one row with a NULL tree_ID."""
     plotgeom = (
         db["PLOTGEOM"]
         .filter(F.col("INVYR") >= 2000)
@@ -172,24 +175,22 @@ def fia_tidy(db: dict[str, DataFrame]) -> DataFrame:
         }
     )
 
-    # snapshot of every plot-year before any row-dropping cleaning, then
-    # full-join back so "empty" plots survive the pipeline.  ``data`` is
-    # built from ``plot`` by LEFT joins, so its (plot_ID, INVYR) set is
-    # exactly plot's — the snapshot IS the plot relation.  Deriving it from
-    # ``data`` (as the reference's dataflow reads, R/fia_tidy.R:47,126)
-    # would execute the whole PLOT⋈TREE⋈PLOTGEOM⋈COND subtree twice: the
-    # round-1 plan carried two scan branches per source and doubled the
-    # most expensive shuffle stage.
-    all_plots = plot
-
-    data = data.withColumn("ACTUALHT", F.coalesce("ACTUALHT", "HT"))
-
-    data = data.join(
-        all_plots,
-        on=["plot_ID", "PLT_CN", "INVYR", "DESIGNCD", "INTENSITY"],
-        how="full",
+    # Every plot-year survives without a re-join: ``data`` is built from
+    # ``plot`` by LEFT joins, so an empty plot is already one row with a
+    # NULL tree_ID.  The reference re-attaches its pre-cleaning snapshot
+    # with a full join (R/fia_tidy.R:47,126), a no-op here — except that a
+    # plot whose DESIGNCD or INTENSITY is NULL never matches itself under
+    # SQL equality and would come back twice.  Keys first, as the
+    # reference's join output orders them.
+    keys = ["plot_ID", "PLT_CN", "INVYR", "DESIGNCD", "INTENSITY"]
+    return data.select(
+        *keys,
+        *[
+            F.coalesce("ACTUALHT", "HT").alias(c) if c == "ACTUALHT" else c
+            for c in data.columns
+            if c not in keys
+        ],
     )
-    return data
 
 
 def expand_data(data: DataFrame) -> DataFrame:
@@ -254,9 +255,11 @@ def interpolate_data(data_expanded: DataFrame) -> DataFrame:
         + [(desentinel, [])],
     )
 
-    # TPA assignment: DESIGNCD × DIA ∈ [min_DIA, max_DIA) band rules
+    # TPA assignment: DESIGNCD × DIA ∈ [min_DIA, max_DIA) band rules, and
+    # the species' Jenkins group for the thresholds below
     rules = ref_tables.tpa_rules(spark)
-    out = out.join(
+    species = ref_tables.ref_species(spark).select("SPCD", "JENKINS_SPGRPCD")
+    joined = out.join(
         F.broadcast(rules),
         on=(
             (out["DESIGNCD"] == rules["DESIGNCD"])
@@ -264,62 +267,79 @@ def interpolate_data(data_expanded: DataFrame) -> DataFrame:
             & (out["DIA"] < rules["max_DIA"])
         ),
         how="left",
-    ).drop(rules["DESIGNCD"]).drop("min_DIA", "max_DIA")
+    ).join(F.broadcast(species), on="SPCD", how="left")
 
     # below measurement thresholds ⇒ fallen dead (woodland species
     # JENKINS_SPGRPCD == 10 use a 1 ft height threshold instead of 4.5)
-    species = ref_tables.ref_species(spark).select("SPCD", "JENKINS_SPGRPCD")
-    out = out.join(F.broadcast(species), on="SPCD", how="left")
-    dia, ht, aht = F.col("DIA"), F.col("HT"), F.col("ACTUALHT")
+    dia, ht, aht = out["DIA"], out["HT"], out["ACTUALHT"]
     j = F.col("JENKINS_SPGRPCD")
-    below_normal = (j < 10) & ((dia < 1) | (ht < 4.5) | (aht < 4.5))
-    below_woodland = (j == 10) & ((dia < 1) | (ht < 1) | (aht < 1))
-    out = out.withColumns(
-        {
-            "STATUSCD": F.when(below_normal | below_woodland, 2).otherwise(
-                F.col("STATUSCD")
-            ),
-            "STANDING_DEAD_CD": F.when(below_normal | below_woodland, 0).otherwise(
-                F.col("STANDING_DEAD_CD")
-            ),
-        }
-    ).drop("JENKINS_SPGRPCD")
-    return out
+    below = ((j < 10) & ((dia < 1) | (ht < 4.5) | (aht < 4.5))) | (
+        (j == 10) & ((dia < 1) | (ht < 1) | (aht < 1))
+    )
+    fallen = {
+        "STATUSCD": F.when(below, 2).otherwise(out["STATUSCD"]),
+        "STANDING_DEAD_CD": F.when(below, 0).otherwise(out["STANDING_DEAD_CD"]),
+    }
+    # one projection: the join key first (as the USING join returns it),
+    # the panel's columns, then the band's TPA
+    return joined.select(
+        "SPCD",
+        *[
+            fallen[c].alias(c) if c in fallen else out[c]
+            for c in out.columns
+            if c != "SPCD"
+        ],
+        "TPA_UNADJ",
+    )
 
 
-def adjust_mortality(
-    data_interpolated: DataFrame, use_mortyr: bool | str = "auto"
-) -> DataFrame:
-    """Mortality masks (reference ``R/adjust_mortality.R:24-130``): optional
-    recorded-MORTYR override of the interpolated death midpoint, then
-    applicability rules (standing-dead only for dead trees, decay only for
-    standing dead, no measurements for fallen trees / non-sampled
-    conditions).
+def mortyr_recorded(db: dict[str, DataFrame]) -> bool:
+    """Whether :func:`fia_tidy`'s panel carries any MORTYR: a TREE row of
+    INVYR >= 2000 with a MORTYR whose (plot_ID, PLT_CN, INVYR) matches a
+    PLOT row.  The reference warns and skips the MORTYR override when none
+    is recorded (its runtime downgrade); this decides it from the source
+    tables in one small semi-join job that reads none of the panel."""
+    ids = ["plot_ID", "PLT_CN", "INVYR"]
+    tree = add_composite_ids(
+        db["TREE"].filter((F.col("INVYR") >= 2000) & F.col("MORTYR").isNotNull())
+    ).select(*ids)
+    plot = add_composite_ids(db["PLOT"].filter(F.col("INVYR") >= 2000)).select(
+        "plot_ID", F.col("CN").alias("PLT_CN"), "INVYR"
+    )
+    return tree.join(plot, on=ids, how="left_semi").limit(1).count() > 0
 
-    ``use_mortyr="auto"`` reproduces the reference's runtime downgrade (warn
-    + skip when no MORTYR is recorded anywhere) via a probe job; pass
-    ``True``/``False`` to skip the probe — the probe executes the whole
-    upstream plan once, which matters when this is mid-pipeline."""
-    df = data_interpolated
 
-    if use_mortyr == "auto":
-        # reference warns + downgrades when no MORTYR is recorded at all
-        use_mortyr = (
-            df.filter(F.col("MORTYR").isNotNull()).limit(1).count() > 0
-        )
+#: the columns whose values differ between mortality variants; every
+#: other column of the panel passes through unchanged
+MASKED_COLS = (
+    "STATUSCD",
+    "STANDING_DEAD_CD",
+    "DECAYCD",
+    "DIA",
+    "HT",
+    "ACTUALHT",
+    "CULL",
+    "CR",
+)
 
-    # The whole stage is ONE generated statement (r16, guide §1.2): the
-    # former five eager transforms (MORTYR_eff/first_dead windows,
-    # STATUSCD override, up-fill, scratch drop, applicability masks) each
-    # re-ran the analyzer over the deep chain plan.  Layer text matches
-    # what the Column forms compiled to; the oracle gates pin it.
+
+def _mortality_layers(
+    use_mortyr: bool, prefix: str
+) -> list[tuple[dict[str, str], list[str]]]:
+    """One variant's mortality stage as ``apply_layers`` layers.  It writes
+    every :data:`MASKED_COLS` column as ``prefix + name`` and reads the
+    panel's own columns, so with ``prefix=""`` the masks rewrite the panel
+    in place and with distinct prefixes several variants compute side by
+    side in one statement."""
     # (plot_ID, tree_ID) partitioning for the same reason as fia_tidy:
     # value-identical to the reference's tree_ID grouping
     # (R/adjust_mortality.R:51,93), one shared exchange with the
     # interpolation windows, no NULL-key skew.
     layers: list[tuple[dict[str, str], list[str]]] = []
+    src = {c: c for c in ("STATUSCD", "STANDING_DEAD_CD", "DECAYCD")}
     if use_mortyr:
         over_all = "OVER (PARTITION BY plot_ID, tree_ID)"
+        eff_col, dead_col = f"{prefix}MORTYR_eff", f"{prefix}first_dead"
         # tree alive in its recorded MORTYR → effective death the year
         # after; R max() without na.rm poisons the whole tree when any row
         # is NA (the n_null window).  _eff is inlined into both window
@@ -331,36 +351,36 @@ def adjust_mortality(
         )
         layers.append((
             {
-                "MORTYR_eff": (
+                eff_col: (
                     f"CASE WHEN sum(CAST(({eff}) IS NULL AS INT)) {over_all}"
                     f" > 0 THEN NULL ELSE max({eff}) {over_all} END"
                 ),
-                "first_dead": (
-                    f"min(CASE WHEN STATUSCD = 2 THEN YEAR END) {over_all}"
-                ),
+                dead_col: f"min(CASE WHEN STATUSCD = 2 THEN YEAR END) {over_all}",
             },
             [],
         ))
-        layers.append((
-            {
-                "STATUSCD": (
-                    "CASE WHEN MORTYR_eff IS NULL THEN STATUSCD "
-                    "WHEN MORTYR_eff = first_dead THEN STATUSCD "
-                    "WHEN (MORTYR_eff < first_dead) AND (YEAR >= MORTYR_eff)"
-                    " AND (YEAR < first_dead) THEN 2 "
-                    "WHEN (MORTYR_eff > first_dead) AND (YEAR < MORTYR_eff)"
-                    " AND (YEAR >= first_dead) THEN 1 "
-                    "ELSE STATUSCD END"
-                )
-            },
-            [],
-        ))
-        # up-fill grouped on the full tree key (value-identical: tree_ID
-        # embeds plot_ID) so the window reuses the chain's one exchange
+        # the STATUSCD override, and the up-fill of the decay codes grouped
+        # on the full tree key (value-identical: tree_ID embeds plot_ID) so
+        # the window reuses the chain's one exchange
         fill_up = fill_gaps_layers(
             GROUP, "YEAR", ["DECAYCD", "STANDING_DEAD_CD"], direction="up"
-        )
-        layers.append((fill_up[0][0], ["first_dead", "MORTYR_eff"]))
+        )[0][0]
+        layers.append((
+            {
+                f"{prefix}STATUSCD": (
+                    f"CASE WHEN {eff_col} IS NULL THEN STATUSCD "
+                    f"WHEN {eff_col} = {dead_col} THEN STATUSCD "
+                    f"WHEN ({eff_col} < {dead_col}) AND (YEAR >= {eff_col})"
+                    f" AND (YEAR < {dead_col}) THEN 2 "
+                    f"WHEN ({eff_col} > {dead_col}) AND (YEAR < {eff_col})"
+                    f" AND (YEAR >= {dead_col}) THEN 1 "
+                    "ELSE STATUSCD END"
+                ),
+                **{f"{prefix}{c}": e for c, e in fill_up.items()},
+            },
+            [eff_col, dead_col],
+        ))
+        src = {c: f"{prefix}{c}" for c in src}
 
     # One layer for the applicability masks, with the dependency chain
     # inlined: STANDING_DEAD_CD only applies to dead trees; DECAYCD only to
@@ -368,19 +388,25 @@ def adjust_mortality(
     # conditions have no measurements (CASE WHEN with a NULL condition
     # falls through to ELSE, matching R if_else NA-condition → NA;
     # missing = keep).
-    sdc = "CASE WHEN STATUSCD = 2 THEN STANDING_DEAD_CD ELSE NULL END"
+    status = src["STATUSCD"]
+    sdc = (
+        f"CASE WHEN {status} = 2 THEN {src['STANDING_DEAD_CD']} ELSE NULL END"
+    )
     fallen = f"({sdc}) = 0"
     nonsampled = (
-        "((STATUSCD = 0) AND coalesce(RECONCILECD IN (5, 6, 9), false))"
+        f"(({status} = 0) AND coalesce(RECONCILECD IN (5, 6, 9), false))"
         " OR (COND_STATUS_CD != 1)"
     )
     masks = {
-        "STANDING_DEAD_CD": sdc,
-        "DECAYCD": f"CASE WHEN ({sdc}) = 1 THEN DECAYCD ELSE NULL END",
+        f"{prefix}STATUSCD": status,
+        f"{prefix}STANDING_DEAD_CD": sdc,
+        f"{prefix}DECAYCD": (
+            f"CASE WHEN ({sdc}) = 1 THEN {src['DECAYCD']} ELSE NULL END"
+        ),
     }
     masks.update(
         {
-            c: (
+            f"{prefix}{c}": (
                 f"CASE WHEN {nonsampled} THEN NULL "
                 f"ELSE CASE WHEN {fallen} THEN NULL ELSE {c} END END"
             )
@@ -388,7 +414,52 @@ def adjust_mortality(
         }
     )
     layers.append((masks, []))
-    return apply_layers(df, layers)
+    return layers
+
+
+def adjust_mortality(
+    data_interpolated: DataFrame, use_mortyr: bool | Mapping[str, bool] = True
+) -> DataFrame:
+    """Mortality masks (reference ``R/adjust_mortality.R:24-130``): optional
+    recorded-MORTYR override of the interpolated death midpoint, then
+    applicability rules (standing-dead only for dead trees, decay only for
+    standing dead, no measurements for fallen trees / non-sampled
+    conditions).
+
+    ``use_mortyr`` is one variant's flag, or ``{variant name: flag}`` for
+    several variants at once: every variant's masks are computed side by
+    side in one generated statement over one read of the panel, and each
+    panel row comes out once per variant, tagged in a ``variant`` column.
+    The reference's runtime downgrade (no MORTYR recorded anywhere) is
+    decided from the source tables by :func:`mortyr_recorded`.
+
+    The whole stage is ONE generated statement (r16, guide §1.2): the
+    former five eager transforms each re-ran the analyzer over the deep
+    chain plan.  Layer text matches what the Column forms compiled to; the
+    oracle gates pin it."""
+    df = data_interpolated
+    if not isinstance(use_mortyr, Mapping):
+        return apply_layers(df, _mortality_layers(use_mortyr, ""))
+
+    prefixes = {name: f"_v{i}_" for i, name in enumerate(use_mortyr)}
+    masked = apply_layers(
+        df,
+        [
+            layer
+            for name, flag in use_mortyr.items()
+            for layer in _mortality_layers(flag, prefixes[name])
+        ],
+    )
+    # the rows of every variant from one projection: one struct per
+    # variant in the panel's column order, then `variant`
+    structs = []
+    for name, p in prefixes.items():
+        fields = [
+            f"'{c}', {_bq(p + c if c in MASKED_COLS else c)}"
+            for c in df.columns
+        ]
+        structs.append(f"named_struct({', '.join(fields)}, 'variant', '{name}')")
+    return masked.selectExpr(f"inline(array({', '.join(structs)}))")
 
 
 def fia_annualize(data_tidy: DataFrame, use_mortyr: bool = True) -> DataFrame:

@@ -297,10 +297,10 @@ def get_spark(
         # materializes a full-width row between every layer (measured ~1.5x
         # on the carbon chain). 800 keeps wide analytic plans fused.
         .config("spark.sql.codegen.maxFields", "800")
-        # let AQE re-plan CACHED plans too (off by default): the state
-        # pipeline persists its interpolated intermediate, and with this
-        # off the cache pins the full initialPartitionNum on a fixture-
-        # sized input — q51 ran 32-512 tasks over 92 rows (measured 5.8 s
+        # let AQE re-plan CACHED plans too (off by default): with this off
+        # a cache pins the full initialPartitionNum on a fixture-sized
+        # input — q51 ran 32-512 tasks over 92 rows when the state
+        # pipeline persisted its interpolated panel (measured 5.8 s
         # -> 4.8 s at sf0.1 with this on).  The CPU-dense floor below
         # still bounds how far cached stages coalesce, and exchange reuse
         # lost to output-partitioning changes is irrelevant here (the

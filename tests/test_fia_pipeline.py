@@ -242,3 +242,55 @@ def test_qa_detects_violations(spark):
     )
     assert qa.one_row_per_tree_year(bad).count() == 1
     assert qa.unique_spcd_per_tree(bad).count() == 1
+
+
+def test_null_key_plot_matches_tidy_twin(spark):
+    """A PLOT row whose INTENSITY (a key of the reference's empty-plot
+    re-join) is NULL stays ONE panel row per plot-year, as in the DuckDB
+    twin ``_TIDY_CTES``: a NULL-keyed re-join would never match it and add
+    a second, empty row, which expand would carry into every year."""
+    from decimal import Decimal
+
+    import duckdb
+
+    from foresttime_builder_spark.plans.fia_on_synthetic import annualize_cte
+    from foresttime_builder_spark.plans.state_on_fixture import _TIDY_CTES
+    from foresttime_builder_spark.sources import fixture_state
+
+    tables = fixture_state.build_rows()
+    tables["PLOT"][1][0]["INTENSITY"] = None
+    db = {
+        t: spark.createDataFrame(
+            [tuple(r[c] for c in cols) for r in rows], fixture_state.SCHEMAS[t]
+        )
+        for t, (cols, rows) in tables.items()
+    }
+    values = ",\n".join(
+        fixture_state._values_cte(t, cols, rows)
+        for t, (cols, rows) in tables.items()
+    )
+    panel_sql = f"WITH {values},{_TIDY_CTES} SELECT * FROM tidy"
+
+    def norm(row):  # DuckDB reads the VALUES' decimals as Decimal
+        return tuple(
+            round(float(v), 6) if isinstance(v, (int, float, Decimal)) else v
+            for v in row
+        )
+
+    tidy = fia.fia_tidy(db)
+    cols = tidy.columns
+    con = duckdb.connect()
+    try:
+        want = con.execute(
+            f"SELECT {', '.join(cols)} FROM ({panel_sql})"
+        ).fetchall()
+        want_annual = con.execute(
+            f"WITH {annualize_cte(panel_sql, fixture_state.JCASE, use_mortyr=False)}"
+            " SELECT count(*) FROM final"
+        ).fetchone()[0]
+    finally:
+        con.close()
+    got = [tuple(r) for r in tidy.collect()]
+    assert sorted(map(norm, got), key=repr) == sorted(map(norm, want), key=repr)
+    annual = fia.fia_annualize(tidy, use_mortyr=False)
+    assert annual.count() == want_annual

@@ -166,29 +166,73 @@ def test_run_states_writes_both_variants(spark, tmp_path):
     assert m.filter(F.col("s_mid") != F.col("s_mor")).count() > 0
 
 
-def test_run_states_sink_reads_the_persisted_panel(
+def _plan_nodes(plan):
+    """(class name, inside whole-stage codegen, node) for every node of an
+    executed plan, through the adaptive wrapper and its query stages."""
+    out = []
+    stack = [(plan, False)]
+    while stack:
+        node, in_codegen = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "WholeStageCodegenExec":
+            in_codegen = True
+        elif name == "InputAdapter":
+            in_codegen = False
+        out.append((name, in_codegen, node))
+        if name == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        elif name.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        else:
+            seq = node.children()
+            kids = [seq.apply(i) for i in range(seq.size())]
+        stack.extend((k, in_codegen) for k in kids)
+    return out
+
+
+def test_run_states_writes_one_single_pass_plan(
     spark, csv_dir, tmp_path, monkeypatch
 ):
-    """Both union branches of the sink write (and the ``auto`` probe
-    before it) read the persisted interpolated panel: the write plan has
-    an InMemoryTableScan and no CSV scan outside the cached relation."""
+    """The sink's executed plan is one pass over the CSVs: no cached
+    panel, no union of variants, one (plot_ID, tree_ID) exchange for
+    every window of the chain, no interpreted array lambda, and every
+    projection inside whole-stage codegen."""
     from pyspark.sql.readwriter import DataFrameWriter
 
-    leaves = []
+    plans = []
     parquet = DataFrameWriter.parquet
 
     def capture(self, path, *args, **kwargs):
-        plan = self._df._jdf.queryExecution().sparkPlan()
-        it = plan.collectLeaves().iterator()
-        while it.hasNext():
-            leaves.append(it.next().getClass().getSimpleName())
+        self._df.collect()  # runs the adaptive plan to its final form
+        plans.append(self._df._jdf.queryExecution().executedPlan())
         return parquet(self, path, *args, **kwargs)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", capture)
     db = fia_src.fia_load(spark, ["RI"], csv_dir)
     state_pipeline.run_states(spark, db, str(tmp_path), estimate=True)
-    assert leaves.count("InMemoryTableScanExec") == 2, leaves
-    assert "FileSourceScanExec" not in leaves, leaves
+    (plan,) = plans
+    nodes = _plan_nodes(plan)
+    names = [n for n, _, _ in nodes]
+    assert "InMemoryTableScanExec" not in names, names
+    assert "UnionExec" not in names, names
+    shuffles = [
+        node.outputPartitioning().toString()
+        for n, _, node in nodes
+        if n == "ShuffleExchangeExec"
+    ]
+    assert len(shuffles) == 1, shuffles
+    assert shuffles[0].startswith("hashpartitioning(plot_ID#"), shuffles
+    assert ", tree_ID#" in shuffles[0] and shuffles[0].count("#") == 2, shuffles
+    outside = [n for n, in_codegen, _ in nodes if n == "ProjectExec" and not in_codegen]
+    assert not outside, f"{len(outside)} ProjectExec outside whole-stage codegen"
+    key = "spark.sql.debug.maxToStringFields"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1000000")  # the full expression text
+    try:
+        text = plan.toString()
+    finally:
+        spark.conf.set(key, old)
+    assert "lambdafunction" not in text  # filter(k, e -> ...) and kin
 
 
 def test_run_states_releases_panel_when_write_fails(spark, csv_dir, tmp_path):

@@ -150,3 +150,120 @@ def test_fill_downup_matches_model(spark, panel):
             last = v
         want[x] = last if last is not None else (known[0] if known else None)
     assert got == want
+
+
+# --- ties and edges ----------------------------------------------------------
+#
+# (custkey, year, val, prio) groups: duplicate YEAR rows, no known value,
+# one known value, leading and trailing gaps.  Groups below 10 have one
+# answer whatever order a sort leaves tied rows in, so DuckDB can check
+# them; 10 and 11 tie rows of different values, which only an in-query
+# comparison over one sort can pin.
+_EDGE_ROWS = [
+    (1, 2000, 1.0, "a"), (1, 2002, 5.0, "b"), (1, 2002, 5.0, "b"),
+    (1, 2005, 2.0, "c"),
+    (2, 2000, 1.0, "a"), (2, 2002, None, None), (2, 2002, None, None),
+    (2, 2004, 3.0, "b"),
+    (3, 2000, None, None), (3, 2003, None, None),
+    (4, 2000, None, None), (4, 2002, 7.0, "x"), (4, 2005, None, None),
+    (5, 2000, None, None), (5, 2001, 1.0, "a"), (5, 2003, 3.0, "b"),
+    (5, 2006, None, None),
+    (6, 2001, 4.0, "a"), (6, 2001, 4.0, "a"),
+    (10, 2000, 1.0, "a"), (10, 2000, 2.0, "b"), (10, 2003, 4.0, "c"),
+    (11, 2000, 1.0, "a"), (11, 2000, 1.0, None), (11, 2002, 2.0, "b"),
+]
+_EDGE_SCHEMA = "custkey int, year int, val double, prio string"
+
+
+def _edge_grid(spark):
+    panel = spark.createDataFrame(_EDGE_ROWS, _EDGE_SCHEMA)
+    return expand_grid(panel, ["custkey"], "year")
+
+
+def test_linear_lookups_match_array_filter_form(spark):
+    """The RANGE-frame ``last``/``first`` lookups equal the former
+    ``filter(k, e -> e.x <= x)[-1]`` / ``filter(k, e -> e.x >= x)[1]``
+    over the known-point array, ties included: both in one query, so
+    both see one sort."""
+    from foresttime_builder_spark.functions.helpers import apply_layers
+    from foresttime_builder_spark.operators.timeseries import (
+        linear_interpolate_layers,
+    )
+
+    windows = linear_interpolate_layers(["custkey"], "year", ["val"])[0]
+    x = "CAST(year AS DOUBLE)"
+    ref = {
+        "ref_p": f"try_element_at(filter(_li_val_k, e -> e.x <= {x}), -1)",
+        "ref_n": f"try_element_at(filter(_li_val_k, e -> e.x >= {x}), 1)",
+    }
+    rows = apply_layers(_edge_grid(spark), [windows, (ref, [])]).collect()
+    assert len(rows) == 41
+    for r in rows:
+        assert (r["_li_val_p"], r["_li_val_n"]) == (r["ref_p"], r["ref_n"]), r
+
+
+def test_step_lookups_match_array_filter_form(spark):
+    """The ROWS-frame ``last``/``first`` lookups equal the former
+    ``filter(k, e -> e.i <= _sg_i)[-1]`` / ``[1]`` over a collected
+    (index, value) array, ties included."""
+    from foresttime_builder_spark.functions.helpers import apply_layers
+    from foresttime_builder_spark.operators.timeseries import (
+        step_interpolate_layers,
+    )
+
+    rn, (windows, _), _ = step_interpolate_layers(["custkey"], "year", ["prio"])
+    over = (
+        "OVER (PARTITION BY custkey ORDER BY year "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
+    )
+    ref_k = (
+        "collect_list(CASE WHEN prio IS NOT NULL "
+        f"THEN named_struct('i', _sg_i, 'v', prio) END) {over}"
+    )
+    ref = {
+        "ref_p": "try_element_at(filter(ref_k, e -> e.i <= _sg_i), -1)",
+        "ref_n": "try_element_at(filter(ref_k, e -> e.i >= _sg_i), 1)",
+    }
+    rows = apply_layers(
+        _edge_grid(spark), [rn, ({**windows, "ref_k": ref_k}, []), (ref, [])]
+    ).collect()
+    assert len(rows) == 41
+    for r in rows:
+        assert (r["_sg_prio_p"], r["_sg_prio_n"]) == (r["ref_p"], r["ref_n"]), r
+
+
+@pytest.mark.parametrize("query", ["q08", "q09"])
+def test_edge_groups_match_registry_twins(spark, query):
+    """Linear (q08) and step (q09) interpolation of the order-independent
+    edge groups equal the registry's DuckDB twins run over the same
+    panel."""
+    import duckdb
+
+    from foresttime_builder_spark.functions.encoding import fixed
+    from foresttime_builder_spark.plans.queries import _shared, timeseries
+
+    def lit(v, kind):
+        return "NULL" if v is None else f"CAST({v!r} AS {kind})"
+
+    edge = [r for r in _EDGE_ROWS if r[0] < 10]
+    values = ", ".join(
+        f"({c}, {y}, {lit(v, 'DOUBLE')}, {lit(p, 'VARCHAR')})"
+        for c, y, v, p in edge
+    )
+    panel_cte = f"panel AS ({_shared._PANEL_SQL})"
+    assert panel_cte in _shared._GRID_SQL
+    oracle = getattr(timeseries, f"ORACLE_{query.upper()}").replace(
+        panel_cte,
+        f"panel AS (SELECT * FROM (VALUES {values}) t(custkey, year, val, prio))",
+    )
+    g = expand_grid(spark.createDataFrame(edge, _EDGE_SCHEMA), ["custkey"], "year")
+    if query == "q08":
+        out = linear_interpolate(g, ["custkey"], "year", ["val"])
+        out = out.select("custkey", "year", fixed("val", 4), "interpolated")
+    else:
+        out = step_interpolate(g, ["custkey"], "year", ["prio"])
+        out = out.select("custkey", "year", "prio", "interpolated")
+    got = sorted(tuple(map(str, r)) for r in out.collect())
+    want = sorted(tuple(map(str, r)) for r in duckdb.sql(oracle).fetchall())
+    assert len(got) == 32
+    assert got == want
