@@ -52,6 +52,55 @@ EXTENDED = [
 ]
 
 
+def _time_queries(spark, sf_dir: str, names: list[str], n_runs: int,
+                  time_build: bool) -> dict[str, dict]:
+    """Per query: the warm-up run's wall time (``cold``), the median and
+    [min, max] of the first three timed runs (the legacy ``value`` metric
+    and ``spread``, byte-compatible with every BENCH_r{N}.json since round
+    6) and of all ``n_runs`` (``trend``/``trend_spread``, the lower-variance
+    number round-over-round comparisons should use).
+
+    noop sink: full computation of every output column (count() would let
+    Catalyst prune the row-level expression DAGs of q25/q26), with no
+    driver-side materialization.  The warm-up run pays the one-time
+    whole-stage codegen compilation, a fixed per-query-shape cost that a
+    production job amortizes across every partition; steady state is what
+    a 100 TB run experiences.  Each timed run builds a fresh plan object,
+    so only the JVM-level caches (codegen, scan metadata) stay warm.
+    ``time_build`` puts that build inside the timer: pipeline-shaped
+    entries (q51 writes its parquet sink at build time) do their data work
+    before the plan object exists, so excluding the build would time only
+    the read-back."""
+    import gc
+
+    out = {}
+    for name in names:
+        # release prior queries' plan objects (and their GC-tied caches)
+        # before timing — accumulated session state showed up as occasional
+        # 2-3x outliers on the last queries in the list
+        gc.collect()
+        fn = QUERIES[name].fn
+        t0 = time.time()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        cold = round(time.time() - t0, 3)
+        runs = []
+        for _ in range(n_runs):
+            t0 = time.time()
+            df = fn(spark, sf_dir)
+            t1 = time.time()
+            df.write.format("noop").mode("overwrite").save()
+            runs.append(time.time() - (t0 if time_build else t1))
+        first = runs[:3]
+        out[name] = {
+            "median": round(statistics.median(first), 3),
+            "spread": [round(min(first), 3), round(max(first), 3)],
+            "cold": cold,
+            "trend": round(statistics.median(runs), 3),
+            "trend_spread": [round(min(runs), 3), round(max(runs), 3)],
+        }
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -66,85 +115,16 @@ def main() -> None:
     for t in ("lineitem", "orders", "customer", "documents", "embeddings", "region", "nation"):
         load_table(spark, sf_dir, t).limit(1).count()
 
-    import gc
-
-    # r13 (r12 verdict item 8): 5 timed runs per query.  The LEGACY metric
-    # ("value"/"queries") stays the median of the FIRST 3 — byte-compatible
-    # with every BENCH_r{N}.json since round 6 — while the new "trend"
-    # block records the median of all 5, the lower-variance number
-    # round-over-round comparisons should use (3 of the last 5 rounds
-    # adjudicated headline deltas as box noise at the 3-run protocol).
+    # r13 (r12 verdict item 8): 5 timed runs per query.
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5")))
-    legacy_n = min(3, n_runs)
-    timings: dict[str, float] = {}
-    spread: dict[str, list[float]] = {}
-    cold: dict[str, float] = {}
-    trend: dict[str, float] = {}
-    trend_spread: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        # release prior queries' plan objects (and their GC-tied caches)
-        # before timing — accumulated session state showed up as occasional
-        # 2-3x outliers on the last queries in the list
-        gc.collect()
-        fn = QUERIES[name].fn
-        # noop sink: full computation of every output column (count() would
-        # let Catalyst prune the row-level expression DAGs of q25/q26),
-        # with no driver-side materialization.  The warm-up run pays the
-        # one-time whole-stage codegen compilation (~seconds for the
-        # ~250-column NSVB plan), a fixed per-query-shape cost that a
-        # production job amortizes across every partition it processes —
-        # steady-state throughput is what a 100 TB run experiences.  Its
-        # wall time is still RECORDED (the "cold" table) so the driver's
-        # colder environment stays reconcilable with the warm medians —
-        # the two regimes differing silently cost a round of confusion once.
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        cold[name] = round(time.time() - t0, 3)
-        runs = []
-        for _ in range(n_runs):
-            # fresh plan object per timed run — only the JVM-level caches
-            # (codegen, scan metadata) stay warm, every stage re-executes
-            df = fn(spark, sf_dir)
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
-        timings[name] = round(statistics.median(runs[:legacy_n]), 3)
-        trend[name] = round(statistics.median(runs), 3)
-        # spread stays a FIRST-3 envelope so it remains comparable with
-        # every pre-r13 BENCH artifact; the 5-run envelope lives in trend
-        spread[name] = [
-            round(min(runs[:legacy_n]), 3), round(max(runs[:legacy_n]), 3)
-        ]
-        trend_spread[name] = [round(min(runs), 3), round(max(runs), 3)]
+    head = _time_queries(spark, sf_dir, HEADLINE, n_runs, time_build=False)
+    ext = _time_queries(spark, sf_dir, EXTENDED, n_runs, time_build=True)
 
-    ext_timings: dict[str, float] = {}
-    ext_spread: dict[str, list[float]] = {}
-    ext_cold: dict[str, float] = {}
-    ext_trend: dict[str, float] = {}
-    ext_trend_spread: dict[str, list[float]] = {}
-    for name in EXTENDED:
-        gc.collect()
-        fn = QUERIES[name].fn
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        ext_cold[name] = round(time.time() - t0, 3)
-        runs = []
-        for _ in range(n_runs):
-            # unlike the headline loop, time BUILD + EXECUTE: pipeline-shaped
-            # entries (q51 writes its parquet sink at build time) do their
-            # data work before the plan object exists, so excluding the
-            # build would time only the read-back
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
-        ext_timings[name] = round(statistics.median(runs[:legacy_n]), 3)
-        ext_trend[name] = round(statistics.median(runs), 3)
-        ext_spread[name] = [
-            round(min(runs[:legacy_n]), 3), round(max(runs[:legacy_n]), 3)
-        ]
-        ext_trend_spread[name] = [round(min(runs), 3), round(max(runs), 3)]
+    def col(table, key):
+        return {name: row[key] for name, row in table.items()}
 
+    timings, ext_timings = col(head, "median"), col(ext, "median")
+    trend, ext_trend = col(head, "trend"), col(ext, "trend")
     total = round(sum(timings.values()), 3)
     # r14 (r13 verdict item 1): the r13 single line carried every spread/
     # cold/trend sub-block and overflowed the driver's 2000-char stdout
@@ -158,19 +138,19 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "spread": spread,
-        "cold": cold,
+        "spread": col(head, "spread"),
+        "cold": col(head, "cold"),
         "extended": ext_timings,
-        "extended_spread": ext_spread,
-        "extended_cold": ext_cold,
+        "extended_spread": col(ext, "spread"),
+        "extended_cold": col(ext, "cold"),
         "extended_total_sec": round(sum(ext_timings.values()), 3),
         "trend": {
             "protocol": f"median-of-{n_runs} exec-only, noop sink",
             "queries": trend,
-            "spread": trend_spread,
+            "spread": col(head, "trend_spread"),
             "total_sec": round(sum(trend.values()), 3),
             "extended": ext_trend,
-            "extended_spread": ext_trend_spread,
+            "extended_spread": col(ext, "trend_spread"),
             "extended_total_sec": round(sum(ext_trend.values()), 3),
         },
         "runs": n_runs,

@@ -282,11 +282,15 @@ def linear_interpolate_layers(
             f"({prev}).y + (({nxt}).y - ({prev}).y)"
             f" / (({nxt}).x - ({prev}).x) * ({x} - ({prev}).x)"
         )
+        # an unknown row that shares its x with a known one: both nearest
+        # points are that peer, so the value is its y, not 0 / 0
+        same_x = f"WHEN ({prev}).x = ({nxt}).x THEN ({prev}).y "
 
         if not extrapolate:
             final[c] = (
                 f"CASE WHEN {y} IS NOT NULL THEN {y} "
                 f"WHEN size({k}) <= 1 THEN {y} "
+                f"{same_x}"
                 f"WHEN {prev} IS NOT NULL AND {nxt} IS NOT NULL THEN {interp} "
                 "ELSE CAST(NULL AS DOUBLE) END"
             )
@@ -308,6 +312,7 @@ def linear_interpolate_layers(
             f"WHEN size({k}) = 0 THEN CAST(NULL AS DOUBLE) "
             # single known value: carry forward only (leading rows null)
             f"WHEN size({k}) = 1 THEN ({prev}).y "
+            f"{same_x}"
             # interior gap
             f"WHEN {prev} IS NOT NULL AND {nxt} IS NOT NULL THEN {interp} "
             # trailing gap: extend line through last two known points

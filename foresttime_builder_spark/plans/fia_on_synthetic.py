@@ -191,6 +191,7 @@ def annualize_cte(
         f"""CASE WHEN {c} IS NOT NULL THEN {c}
            WHEN n_{c} = 0 THEN NULL
            WHEN n_{c} = 1 THEN pv_{c}
+           WHEN px_{c} = nx_{c} THEN pv_{c}
            WHEN pv_{c} IS NOT NULL AND nv_{c} IS NOT NULL
              THEN pv_{c} + (nv_{c} - pv_{c}) / (nx_{c} - px_{c}) * (YEAR - px_{c})
            WHEN YEAR > lx_{c}

@@ -55,6 +55,9 @@ _INTERP_SQL = """CASE
     WHEN k IS NULL OR len(k) = 0 THEN NULL
     WHEN len(k) = 1
       THEN (list_filter(k, e -> e.x <= j.year)[-1]).y
+    WHEN (list_filter(k, e -> e.x <= j.year)[-1]).x
+         = (list_filter(k, e -> e.x >= j.year)[1]).x
+      THEN (list_filter(k, e -> e.x <= j.year)[-1]).y
     WHEN len(list_filter(k, e -> e.x <= j.year)) > 0
      AND len(list_filter(k, e -> e.x >= j.year)) > 0
       THEN (list_filter(k, e -> e.x <= j.year)[-1]).y

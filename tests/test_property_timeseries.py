@@ -155,7 +155,9 @@ def test_fill_downup_matches_model(spark, panel):
 # --- ties and edges ----------------------------------------------------------
 #
 # (custkey, year, val, prio) groups: duplicate YEAR rows, no known value,
-# one known value, leading and trailing gaps.  Groups below 10 have one
+# one known value, leading and trailing gaps, and a known and an unknown
+# val at one YEAR (group 7: its nearest known points on both sides are
+# that one peer, whose val it takes).  Groups below 10 have one
 # answer whatever order a sort leaves tied rows in, so DuckDB can check
 # them; 10 and 11 tie rows of different values, which only an in-query
 # comparison over one sort can pin.
@@ -169,6 +171,7 @@ _EDGE_ROWS = [
     (5, 2000, None, None), (5, 2001, 1.0, "a"), (5, 2003, 3.0, "b"),
     (5, 2006, None, None),
     (6, 2001, 4.0, "a"), (6, 2001, 4.0, "a"),
+    (7, 2000, 1.0, "a"), (7, 2000, None, "a"), (7, 2002, 3.0, "b"),
     (10, 2000, 1.0, "a"), (10, 2000, 2.0, "b"), (10, 2003, 4.0, "c"),
     (11, 2000, 1.0, "a"), (11, 2000, 1.0, None), (11, 2002, 2.0, "b"),
 ]
@@ -197,7 +200,7 @@ def test_linear_lookups_match_array_filter_form(spark):
         "ref_n": f"try_element_at(filter(_li_val_k, e -> e.x >= {x}), 1)",
     }
     rows = apply_layers(_edge_grid(spark), [windows, (ref, [])]).collect()
-    assert len(rows) == 41
+    assert len(rows) == 45
     for r in rows:
         assert (r["_li_val_p"], r["_li_val_n"]) == (r["ref_p"], r["ref_n"]), r
 
@@ -227,7 +230,7 @@ def test_step_lookups_match_array_filter_form(spark):
     rows = apply_layers(
         _edge_grid(spark), [rn, ({**windows, "ref_k": ref_k}, []), (ref, [])]
     ).collect()
-    assert len(rows) == 41
+    assert len(rows) == 45
     for r in rows:
         assert (r["_sg_prio_p"], r["_sg_prio_n"]) == (r["ref_p"], r["ref_n"]), r
 
@@ -265,5 +268,5 @@ def test_edge_groups_match_registry_twins(spark, query):
         out = out.select("custkey", "year", "prio", "interpolated")
     got = sorted(tuple(map(str, r)) for r in out.collect())
     want = sorted(tuple(map(str, r)) for r in duckdb.sql(oracle).fetchall())
-    assert len(got) == 32
+    assert len(got) == 36
     assert got == want

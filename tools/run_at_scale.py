@@ -18,6 +18,21 @@ MEDIAN with min/max spread — the builder's floor-sensitivity study showed
 single-session sf10 numbers carry ±50% error bars, so any number meant for
 BASELINE.md should be taken with ``--runs 3`` on an idle box.
 
+``--isolate`` runs each query in its own fresh JVM (a subprocess re-exec
+of this tool with ``--only``): the steady-state mode.  Interpreted-HOF
+throughput depends on what ran before in the session (BASELINE.md round 9:
+q59 at sf10 takes 8 s fresh and 29 s after q58), so shared-session sweeps
+overstate HOF-heavy operators.  The default stays shared-session: it is
+the cheaper executes-at-scale check and the adversarial regime worth
+watching.  ``--retry-fresh`` re-runs each query that ERRED in the shared
+session in a fresh JVM and records the fresh result with the superseded
+shared-session error (``retried_fresh``, ``shared_session_err``); guards
+are never retried.
+
+A before/after of named queries is ``tools/ab.py BASE NAME --only Q1,Q2``:
+it runs this tool with ``--only Q --runs 1`` once per query, side and pair,
+each in a fresh JVM, and compares the two sides' sec and rows.
+
 Usage: python tools/run_at_scale.py [--sf-dir DIR] [--only q16,q25]
                                     [--skip q51] [--runs 3]
                                     [--out SCALE_sf1.json]
@@ -71,70 +86,62 @@ def _steal_pct(before, after) -> float | None:
     return round(100.0 * (after[1] - before[1]) / (after[0] - before[0]), 1)
 
 
-def _isolate_main(args) -> None:
-    """--isolate driver: one subprocess (fresh JVM) per query, merged report."""
+def _select(names, only: str | None, skip: str) -> list[str]:
+    """``names`` that start with an ``--only`` prefix and no ``--skip`` one."""
+    want = [w.strip() for w in (only or "").split(",") if w.strip()]
+    drop = [w.strip() for w in skip.split(",") if w.strip()]
+    return [n for n in names
+            if (not want or any(n.startswith(w) for w in want))
+            and not any(n.startswith(s) for s in drop)]
+
+
+def _fresh(args, name: str) -> dict:
+    """``name``'s entry from a re-exec of this tool in a fresh JVM (a
+    subprocess with ``--only name``), or an entry whose ``err`` says why
+    there is none."""
     import subprocess
 
-    names = sorted(entrymod.queries())
-    if args.only:
-        want = {w.strip() for w in args.only.split(",")}
-        names = [n for n in names if any(n.startswith(w) for w in want)]
-    skip = {w.strip() for w in args.skip.split(",") if w.strip()}
-    names = [n for n in names if not any(n.startswith(s) for s in skip)]
+    cap = max(1, args.runs) * _RETRY_PER_QUERY_CAP_S
+    cmd = [
+        sys.executable, os.path.abspath(__file__),
+        "--sf-dir", args.sf_dir, "--only", name, "--runs", str(args.runs),
+    ]
+    try:
+        proc = subprocess.run(cmd, capture_output=True, text=True, timeout=cap)
+    except subprocess.TimeoutExpired:
+        return {"sec": None, "rows": None,
+                "err": f"subprocess timeout after {cap}s"}
+    except OSError as exc:  # fork ENOMEM etc.: report it, keep sweeping
+        return {"sec": None, "rows": None, "err": "subprocess spawn failed: "
+                f"{type(exc).__name__}: {str(exc)[:200]}"}
+    try:
+        return json.loads(proc.stdout.strip().splitlines()[-1])["queries"][name]
+    except (ValueError, KeyError, IndexError, TypeError):
+        return {"sec": None, "rows": None, "err": f"subprocess rc="
+                f"{proc.returncode}: {proc.stderr.strip()[-300:]}"}
 
-    report: dict[str, dict] = {}
-    for name in names:
-        cmd = [
-            sys.executable, os.path.abspath(__file__),
-            "--sf-dir", args.sf_dir, "--only", name,
-            "--runs", str(args.runs),
-        ]
-        proc = None
-        try:
-            proc = subprocess.run(
-                cmd, capture_output=True, text=True,
-                timeout=max(1, args.runs) * _RETRY_PER_QUERY_CAP_S,
-            )
-            sub = json.loads(proc.stdout.strip().splitlines()[-1])
-            report[name] = sub["queries"][name]
-        except subprocess.TimeoutExpired:
-            report[name] = {
-                "sec": None,
-                "rows": None,
-                "err": f"subprocess timeout after "
-                       f"{max(1, args.runs) * _RETRY_PER_QUERY_CAP_S}s",
-            }
-        except Exception as exc:
-            # proc stays None when subprocess.run itself raised (fork
-            # ENOMEM etc.) — report that, don't crash the sweep on an
-            # unbound reference inside the handler
-            detail = (
-                f"rc={proc.returncode}: {proc.stderr.strip()[-300:]}"
-                if proc is not None
-                else f"spawn failed: {type(exc).__name__}: {str(exc)[:200]}"
-            )
-            report[name] = {"sec": None, "rows": None,
-                            "err": f"subprocess {detail}"}
-        status = (
-            report[name]["err"]
-            or ("GUARDED: " + report[name]["guarded"][:80]
-                if report[name].get("guarded")
-                else f"{report[name]['rows']} rows")
-        )
-        print(f"{name}: {report[name]['sec']}s  {status}", file=sys.stderr)
 
-    errs = [n for n in report if report[n]["err"]]
-    guarded = [n for n in report if report[n].get("guarded")]
-    line = json.dumps(
-        {
-            "sf_dir": args.sf_dir,
-            "isolate": True,
-            "queries": report,
-            "n": len(report),
-            "errors": errs,
-            "guarded": guarded,
-        }
+def _status(name: str, entry: dict, note: str = "") -> None:
+    status = (
+        entry["err"]
+        or ("GUARDED: " + entry["guarded"][:80] if entry.get("guarded")
+            else f"{entry['rows']} rows")
     )
+    print(f"{name}: {entry['sec']}s  {status}{note}", file=sys.stderr)
+
+
+def _emit(args, report: dict[str, dict], **extra) -> None:
+    """Print (and with ``--out`` write) the one report line, then exit 1
+    if any query erred."""
+    errs = [n for n in report if report[n]["err"]]
+    line = json.dumps({
+        "sf_dir": args.sf_dir,
+        "queries": report,
+        "n": len(report),
+        "errors": errs,
+        "guarded": [n for n in report if report[n].get("guarded")],
+        **extra,
+    })
     print(line)
     if args.out:
         with open(args.out, "w") as fh:
@@ -150,41 +157,20 @@ def main() -> None:
     ap.add_argument("--skip", default="")
     ap.add_argument("--runs", type=int, default=1)
     ap.add_argument("--out", default=None)
-    ap.add_argument(
-        "--isolate",
-        action="store_true",
-        help=(
-            "run each query in its own fresh JVM (a subprocess re-exec of "
-            "this tool with --only). Steady-state mode: interpreted-HOF "
-            "throughput is session-context-dependent (BASELINE.md round-9 "
-            "— q59 sf10 is 8 s fresh vs 29 s after q58 in one session), so "
-            "shared-session sweeps overstate HOF-heavy operators. Default "
-            "stays shared-session: it is the cheaper end-to-end executes-"
-            "at-scale check and the adversarial regime worth watching."
-        ),
-    )
-    ap.add_argument(
-        "--retry-fresh",
-        action="store_true",
-        help=(
-            "after a shared-session sweep, re-run any ERRED query in its "
-            "own fresh JVM and merge the result (annotated with the "
-            "superseded shared-session error). Guards are never retried."
-        ),
-    )
+    ap.add_argument("--isolate", action="store_true",
+                    help="run each query in its own fresh JVM")
+    ap.add_argument("--retry-fresh", action="store_true",
+                    help="re-run each erred query in a fresh JVM and merge it")
     args = ap.parse_args()
 
-    if args.isolate:
-        _isolate_main(args)
-        return
-
     queries = entrymod.queries()
-    names = sorted(queries)
-    if args.only:
-        want = {w.strip() for w in args.only.split(",")}
-        names = [n for n in names if any(n.startswith(w) for w in want)]
-    skip = {w.strip() for w in args.skip.split(",") if w.strip()}
-    names = [n for n in names if not any(n.startswith(s) for s in skip)]
+    names = _select(sorted(queries), args.only, args.skip)
+    if args.isolate:
+        report = {}
+        for name in names:
+            report[name] = _fresh(args, name)
+            _status(name, report[name])
+        _emit(args, report, isolate=True)
 
     from foresttime_builder_spark.session import dir_bytes
 
@@ -217,100 +203,45 @@ def main() -> None:
                 report[name]["steal_pct"] = steal
             if args.runs > 1:
                 report[name]["spread"] = [min(samples), max(samples)]
-        except ValueError as exc:
+        except Exception as exc:  # noqa: BLE001 — sweep must not abort
             # a candidate-budget guard RAISING at scale is the operator's
             # DESIGNED behavior (the feasibility answer, not a crash) —
-            # recorded as 'guarded', distinct from infrastructure errors
+            # recorded as 'guarded', distinct from infrastructure errors.
+            # Every designed feasibility guard is a ValueError naming the
+            # lever the caller can pull: candidate_budget (pair/LSH/
+            # containment families) or max_sample_rows (single-task
+            # sampled histogram)
             msg = str(exc)
-            # every designed feasibility guard names the lever the caller
-            # can pull: candidate_budget (pair/LSH/containment families) or
-            # max_sample_rows (single-task sampled histogram) — match both
-            # so a guard firing at scale is never misreported as an
-            # infrastructure error
-            _guard_markers = ("candidate_budget", "max_sample_rows")
-            kind = "guarded" if any(m in msg for m in _guard_markers) else "err"
+            guarded = isinstance(exc, ValueError) and any(
+                m in msg for m in ("candidate_budget", "max_sample_rows"))
             report[name] = {
                 "sec": round(time.time() - t0, 2),
                 "rows": None,
-                "err": None if kind == "guarded" else f"ValueError: {msg[:300]}",
+                "err": None if guarded else f"{type(exc).__name__}: {msg[:300]}",
             }
-            if kind == "guarded":
+            if guarded:
                 report[name]["guarded"] = msg[:300]
-        except Exception as exc:  # noqa: BLE001 — sweep must not abort
-            report[name] = {
-                "sec": round(time.time() - t0, 2),
-                "rows": None,
-                "err": f"{type(exc).__name__}: {str(exc)[:300]}",
-            }
-        status = (
-            report[name]["err"]
-            or ("GUARDED: " + report[name]["guarded"][:80]
-                if report[name].get("guarded")
-                else f"{report[name]['rows']} rows")
-        )
-        print(f"{name}: {report[name]['sec']}s  {status}", file=sys.stderr)
+        _status(name, report[name])
 
-    errs = [n for n in report if report[n]["err"]]
-    if args.retry_fresh and errs:
+    if args.retry_fresh:
         # Shared-session sweeps occasionally OOM a heavy-hash query deep
         # into the JVM (r14: q16 at stage ~1354 — asynchronous broadcast
         # reclamation lag, not an operator leak; the full-registry storage
         # probe ends at 0 blocks). Adjudicate automatically: re-run each
         # erred query in its own fresh JVM and record BOTH outcomes — the
-        # fresh number plus the shared-session error it supersedes.
-        import subprocess
-
-        for name in list(errs):
+        # fresh number plus the shared-session error it supersedes. A
+        # fresh run that fails too keeps the shared-session error.
+        for name in [n for n in report if report[n]["err"]]:
             print(f"retry-fresh: {name}", file=sys.stderr)
-            cmd = [
-                sys.executable, os.path.abspath(__file__),
-                "--sf-dir", args.sf_dir, "--only", name,
-                "--runs", str(args.runs),
-            ]
-            try:
-                # the regime this retry targets (deep-sweep OOM / stuck
-                # JVM) can hang the subprocess too — cap it so one wedged
-                # retry can't block the whole sweep; a timeout keeps the
-                # original shared-session error
-                proc = subprocess.run(
-                    cmd, capture_output=True, text=True,
-                    timeout=max(1, args.runs) * _RETRY_PER_QUERY_CAP_S,
-                )
-            except subprocess.TimeoutExpired:
-                print(f"retry-fresh: {name} timed out", file=sys.stderr)
-                continue
-            try:
-                sub = json.loads(proc.stdout.strip().splitlines()[-1])
-                fresh = sub["queries"][name]
-            except Exception:
-                continue  # fresh run also failed — keep the original err
+            fresh = _fresh(args, name)
             if not fresh.get("err"):
                 fresh["shared_session_err"] = report[name]["err"]
                 fresh["retried_fresh"] = True
                 report[name] = fresh
-                print(
-                    f"{name}: {fresh['sec']}s  {fresh['rows']} rows "
-                    f"(fresh JVM; shared-session run erred)",
-                    file=sys.stderr,
-                )
-        errs = [n for n in report if report[n]["err"]]
-    guarded = [n for n in report if report[n].get("guarded")]
+                _status(name, fresh, " (fresh JVM; shared-session run erred)")
     sweep_steal = _steal_pct(sweep_ticks0, _cpu_ticks())
-    line = json.dumps(
-        {
-            "sf_dir": args.sf_dir,
-            "queries": report,
-            "n": len(report),
-            "errors": errs,
-            "guarded": guarded,
-            **({"steal_pct": sweep_steal} if sweep_steal is not None else {}),
-        }
-    )
-    print(line)
-    if args.out:
-        with open(args.out, "w") as fh:
-            fh.write(line + "\n")
-    sys.exit(1 if errs else 0)
+    _emit(args, report,
+          **({"steal_pct": sweep_steal} if sweep_steal is not None else {}))
 
 
 if __name__ == "__main__":
