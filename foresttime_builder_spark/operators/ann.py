@@ -637,8 +637,9 @@ def adaptive_nprobe(k_clusters: int) -> int:
     Why this shape: the required probe FRACTION for recall@3 ≥ 0.8 on the
     synthetic embeddings (near-isotropic — the ANN-hostile worst case;
     real embedding spaces cluster far better) DECAYS with corpus size but
-    only slowly.  Measured via the offline numpy replica
-    (``tools/measure_ivf_recall.py``, curves in ``RECALL_IVF_r13.json``):
+    only slowly.  Measured in r13 with an offline numpy replica of this
+    module's k-means (since deleted; ``RECALL_IVF_r13.json`` holds its
+    curves and is the record):
 
     - sf0.01 (N=500,  k=32):  0.8 at nprobe≈13 (fraction 0.41)
     - sf1    (N=20k,  k=256): 0.8 at nprobe≈80 (fraction 0.31)

@@ -20,24 +20,19 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-
-def token_ngrams(text: Column, n: int) -> Column:
-    """Array of space-joined token ``n``-grams of ``text`` (whitespace
-    tokenized); empty array when the document has fewer than ``n`` tokens.
-
-    Hot paths that explode the grams should prefer
-    :func:`token_ngrams_from_tokens` over a MATERIALIZED token-array
-    column: ``transform`` lambdas are CodegenFallback (interpreted), so an
-    embedded ``split`` here is at risk of re-evaluating per element —
-    hoisting the array into a multi-referenced projection keeps the split
-    per row (Catalyst refuses to collapse multi-referenced non-trivial
-    projections into the lambda)."""
-    return token_ngrams_from_tokens(F.split(text, " "), n)
+from foresttime_builder_spark.functions.tokens import words
 
 
 def token_ngrams_from_tokens(toks: Column, n: int) -> Column:
-    """n-gram array from an already-tokenized array column — see
-    :func:`token_ngrams`."""
+    """Array of space-joined ``n``-grams of the token array ``toks``; empty
+    when the document has fewer than ``n`` tokens.
+
+    Pass a MATERIALIZED token-array column: ``transform`` lambdas are
+    CodegenFallback (interpreted), so a ``words(...)`` embedded in ``toks``
+    is at risk of re-evaluating per element — hoisting the array into a
+    multi-referenced projection keeps the split per row (Catalyst refuses
+    to collapse multi-referenced non-trivial projections into the
+    lambda)."""
     return F.when(
         F.size(toks) >= n,
         F.transform(
@@ -61,7 +56,7 @@ def contamination(
     with at least one collision appear.
     """
     grams = lambda df: df.select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("_toks")
+        F.col(id_col), words(text_col).alias("_toks")
     ).select(
         F.col(id_col),
         F.explode(token_ngrams_from_tokens(F.col("_toks"), n)).alias("gram"),

@@ -42,14 +42,15 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from foresttime_builder_spark.functions.encoding import hash60
+from foresttime_builder_spark.functions.tokens import words
 from foresttime_builder_spark.operators.cache import carry_cache, release_on_gc
 from foresttime_builder_spark.operators.spread import spread as _sp
 
 
-def tokens(text: Column | str, distinct: bool = True) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    arr = F.split(c, " ")
-    return F.array_distinct(arr) if distinct else arr
+def tokens(text: Column | str) -> Column:
+    """The distinct whitespace tokens of ``text``; DuckDB twin:
+    :func:`~foresttime_builder_spark.functions.tokens.token_set_sql`."""
+    return F.array_distinct(words(text))
 
 
 def char_ngrams(text: str, n: int = 3) -> Column:

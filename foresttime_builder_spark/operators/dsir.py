@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from foresttime_builder_spark.functions.encoding import hash60, hash60_sql
+from foresttime_builder_spark.functions.tokens import words, words_sql
 from foresttime_builder_spark.operators.cache import release_on_gc
 
 __all__ = ["dsir_logweights", "dsir_logweights_oracle_sql"]
@@ -74,7 +75,7 @@ def dsir_logweights(
     distribution.
     """
     _check(n_buckets, add_k)
-    toks = F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
+    toks = words(text_col, null_as_empty=True)
     base = df.select(
         F.col(id_col), F.col(target_col).alias("_tgt"), toks.alias("_t")
     )
@@ -172,7 +173,7 @@ def dsir_logweights_oracle_sql(
     return f"""
 WITH docs AS (
   SELECT {id_col}, CAST(({target_expr}) AS BOOLEAN) AS tgt,
-         string_split(coalesce({text_col}, ''), ' ') AS ts
+         {words_sql(text_col, null_as_empty=True)} AS ts
   FROM {table}
 ), feats AS (
   SELECT {id_col}, tgt, {h_uni} AS bkt

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from foresttime_builder_spark.functions.tokens import words
 from foresttime_builder_spark.operators import cache
 
 #: Round bound for the alternating large-star/small-star algorithm, which
@@ -435,9 +436,7 @@ def dedup_finalize(
             degrade_budget=degrade_budget,
             pairs=pairs,
         )
-    toks = df.select(
-        id_col, F.size(F.split(F.col(text_col), " ")).alias("n_tokens")
-    )
+    toks = df.select(id_col, F.size(words(text_col)).alias("n_tokens"))
     joined = toks.join(clusters, on=id_col, how="left").select(
         id_col,
         "n_tokens",

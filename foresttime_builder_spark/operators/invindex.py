@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from foresttime_builder_spark.functions.tokens import words, words_sql
+
 __all__ = ["inverted_index", "inverted_index_oracle_sql"]
 
 
@@ -60,7 +62,7 @@ def inverted_index(
         df.filter(F.col(id_col).isNotNull())
         .select(
             F.col(id_col).alias("_doc"),
-            F.explode(F.split(F.col(text_col), " ")).alias("term"),
+            F.explode(words(text_col)).alias("term"),
         )
         .groupBy("term", "_doc")
         .agg(F.count(F.lit(1)).alias("_tf"))
@@ -128,7 +130,7 @@ def inverted_index_oracle_sql(
 WITH tf AS (
   SELECT term, doc, count(*) AS tf
   FROM (
-    SELECT {id_col} AS doc, unnest(string_split({text_col}, ' ')) AS term
+    SELECT {id_col} AS doc, unnest({words_sql(text_col)}) AS term
     FROM {table}
     WHERE {id_col} IS NOT NULL
   )

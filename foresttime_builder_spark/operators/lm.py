@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from foresttime_builder_spark.functions.tokens import words, words_sql
+
 __all__ = ["ngram_lm_score", "ngram_lm_score_oracle_sql"]
 
 
@@ -47,7 +49,7 @@ def ngram_lm_score(
     """
     if add_k <= 0:
         raise ValueError(f"add_k must be positive, got {add_k}")
-    toks = F.split(F.col(text_col), " ")
+    toks = words(text_col)
     base = df.select(F.col(id_col), toks.alias("_t")).filter(F.size("_t") >= 2)
     bigrams = base.select(
         F.col(id_col),
@@ -96,9 +98,9 @@ def ngram_lm_score_oracle_sql(
         raise ValueError(f"add_k must be positive, got {add_k}")
     return f"""
 WITH docs AS (
-  SELECT {id_col}, string_split({text_col}, ' ') AS ts
+  SELECT {id_col}, {words_sql(text_col)} AS ts
   FROM {table}
-  WHERE len(string_split({text_col}, ' ')) >= 2
+  WHERE len({words_sql(text_col)}) >= 2
 ), bigrams AS (
   SELECT {id_col}, ts[i] AS w1, ts[i + 1] AS w2
   FROM docs, LATERAL (
@@ -110,7 +112,7 @@ WITH docs AS (
   SELECT w1, count(*) AS c1 FROM bigrams GROUP BY w1
 ), vocab AS (
   SELECT count(DISTINCT w) AS V
-  FROM (SELECT unnest(string_split({text_col}, ' ')) AS w FROM {table})
+  FROM (SELECT unnest({words_sql(text_col)}) AS w FROM {table})
 ), scored AS (
   SELECT b.{id_col},
          CAST(floor(ln((c2.c2 + {add_k!r}) / (c1.c1 + {add_k!r} * vocab.V))

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
+from foresttime_builder_spark.functions.tokens import words, words_sql
 
 __all__ = ["bm25_scores", "bm25_scores_oracle_sql"]
 
@@ -72,7 +73,7 @@ def bm25_scores(
     # size(split(NULL)) = -1 leaks into the avgdl average while DuckDB's
     # len(string_split(NULL)) = NULL is EXCLUDED from avg() — one NULL row
     # would shift bm25_e4 for every document on the Spark side only.
-    toks = F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
+    toks = words(text_col, null_as_empty=True)
 
     stats = df.select(toks.alias("_t")).agg(
         F.count(F.lit(1)).alias("_N"),
@@ -132,7 +133,7 @@ def bm25_scores_oracle_sql(
     query_terms = tuple(query_terms)
     _check(query_terms)
     # coalesce NULL text to '' exactly like the Spark side (see bm25_scores)
-    ts = f"string_split(coalesce({text_col}, ''), ' ')"
+    ts = words_sql(text_col, null_as_empty=True)
     # per-row scalars in the inner projection; the aggregate sees only
     # plain columns (DuckDB rejects aggregates over list lambdas)
     row_flags = ", ".join(
@@ -170,7 +171,7 @@ WITH stats AS (
   SELECT count(*) AS N, avg(n) AS avgdl, {dfs}
   FROM (SELECT len({ts}) AS n, {row_flags} FROM {table})
 ), docs AS (
-  SELECT {id_col}, string_split(coalesce({text_col}, ''), ' ') AS ts
+  SELECT {id_col}, {ts} AS ts
   FROM {table}
 )
 SELECT {id_col},

@@ -37,6 +37,7 @@ from foresttime_builder_spark.functions.encoding import (
     hash60,
     hash60_sql,
 )
+from foresttime_builder_spark.functions.tokens import words, words_sql
 from foresttime_builder_spark.operators.decontaminate import (
     token_ngrams_from_tokens,
 )
@@ -56,7 +57,7 @@ def duplicated_span_coverage(
     ``dup_token_cov`` (tokens covered by the union of those windows), and
     ``dup_cov_frac_e4``.
     """
-    toks = F.split(F.col(text_col), " ")
+    toks = words(text_col)
     base = df.select(F.col(id_col), F.size(toks).alias("n_tokens"))
 
     # hoist the token split to a materialized projection so the interpreted
@@ -144,21 +145,21 @@ def duplicated_span_coverage_oracle_sql(
 ) -> str:
     """DuckDB twin of :func:`duplicated_span_coverage` — identical window
     inventory, hash, interval union, and fixed-point arithmetic."""
+    toks = words_sql(text_col)
     return f"""
 WITH base AS (
-  SELECT {id_col}, len(string_split({text_col}, ' ')) AS n_tokens
+  SELECT {id_col}, len({toks}) AS n_tokens
   FROM {table}
 ), wins AS (
   SELECT {id_col},
-         unnest(generate_series(1, len(string_split({text_col}, ' ')) - {n - 1})) - 1
+         unnest(generate_series(1, len({toks}) - {n - 1})) - 1
            AS pos,
          unnest(list_transform(
-           generate_series(1, len(string_split({text_col}, ' ')) - {n - 1}),
-           i -> {hash60_sql(
-             f"array_to_string(string_split({text_col}, ' ')[i:i+{n - 1}], ' ')"
-           )})) AS h
+           generate_series(1, len({toks}) - {n - 1}),
+           i -> {hash60_sql(f"array_to_string({toks}[i:i+{n - 1}], ' ')")}))
+           AS h
   FROM {table}
-  WHERE len(string_split({text_col}, ' ')) >= {n}
+  WHERE len({toks}) >= {n}
 ), dup_h AS (
   SELECT h FROM wins GROUP BY h HAVING count(DISTINCT {id_col}) >= {min_docs}
 ), spans AS (

@@ -23,6 +23,7 @@ from foresttime_builder_spark.functions.encoding import (
     hash60,
     hash60_sql,
 )
+from foresttime_builder_spark.functions.tokens import words, words_sql
 from foresttime_builder_spark.operators.spread import spread as _spread
 
 #: tiny deterministic stopword profiles (order = tie-break priority)
@@ -41,13 +42,13 @@ def language_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document language guess: count profile-word occurrences per
     language, pick the max (earlier profile wins ties), 'und' when no
     profile word occurs at all."""
-    toks = F.split(F.lower(F.col(text_col)), " ")
+    toks = words(F.lower(F.col(text_col)))
 
-    def _score(words: tuple[str, ...]):
-        profile = F.array(*[F.lit(w) for w in words])
+    def _score(ws: tuple[str, ...]):
+        profile = F.array(*[F.lit(w) for w in ws])
         return F.size(F.filter(toks, lambda t: F.array_contains(profile, t)))
 
-    scores = {lang: _score(words) for lang, words in LANG_PROFILES}
+    scores = {lang: _score(ws) for lang, ws in LANG_PROFILES}
     best = None
     lang_col = F.lit("und")
     # build right-to-left so earlier profiles win ties via strict >
@@ -71,12 +72,10 @@ def language_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def language_id_oracle_sql(id_col: str, text_col: str, table: str) -> str:
     """DuckDB twin of :func:`language_id`."""
+    toks = words_sql(f"lower({text_col})")
     score = {
-        lang: (
-            f"len(list_filter(string_split(lower({text_col}), ' '), "
-            f"t -> list_contains({list(words)}, t)))"
-        )
-        for lang, words in LANG_PROFILES
+        lang: f"len(list_filter({toks}, t -> list_contains({list(ws)}, t)))"
+        for lang, ws in LANG_PROFILES
     }
     # replicate the right-to-left when-chain exactly
     expr = "'und'"
@@ -100,12 +99,12 @@ def token_count_bpe(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Subword token counts via :data:`BPE_PATTERN` (whitespace tokens
     alongside for a compression-ratio signal)."""
     pieces = F.regexp_extract_all(F.col(text_col), F.lit(BPE_PATTERN), 0)
-    words = F.split(F.col(text_col), " ")
+    n_words = F.size(words(text_col))
     return df.select(
         F.col(id_col),
         F.size(pieces).alias("n_bpe_tokens"),
-        F.size(words).alias("n_words"),
-        fixed(F.size(pieces) / F.nullif(F.size(words), F.lit(0)), 4).alias(
+        n_words.alias("n_words"),
+        fixed(F.size(pieces) / F.nullif(n_words, F.lit(0)), 4).alias(
             "tokens_per_word_e4"
         ),
     )
@@ -114,12 +113,12 @@ def token_count_bpe(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def token_count_bpe_oracle_sql(id_col: str, text_col: str, table: str) -> str:
     pat = BPE_PATTERN.replace("'", "''")
     pieces = f"len(regexp_extract_all({text_col}, '{pat}'))"
-    words = f"len(string_split({text_col}, ' '))"
+    n_words = f"len({words_sql(text_col)})"
     return f"""
 SELECT {id_col},
        {pieces} AS n_bpe_tokens,
-       {words} AS n_words,
-       {fixed_sql(f"{pieces} / nullif({words}, 0)", 4)} AS tokens_per_word_e4
+       {n_words} AS n_words,
+       {fixed_sql(f"{pieces} / nullif({n_words}, 0)", 4)} AS tokens_per_word_e4
 FROM {table}
 """
 
@@ -265,8 +264,11 @@ def top_token_ngrams(
     a zero-width match the engine resumes one char later — so a text
     with a LEADING space (fuzz whitespace soup) lost the gram starting
     at token 1 (caught by the fuzz gate, invisible on clean data).
-    ``[^ ]*`` (not ``\\S+``) reproduces ``split(text, ' ')`` exactly —
-    consecutive spaces yield empty tokens that participate in grams.
+    ``[^ ]*`` (not ``\\S+``) reproduces the tokens of
+    :func:`~foresttime_builder_spark.functions.tokens.words` exactly —
+    consecutive spaces yield empty tokens that participate in grams.  It
+    is the one whitespace tokenizer spelled outside that module, on
+    purpose: it never builds the token array, which is what it saves.
     Two predecessors, for the record (all three verified
     output-identical at sf0.1/sf1/sf10): ``transform(sequence(...))``
     struct grams (interpreted HOF — the standing hot-path trap; sf0.1
@@ -303,7 +305,7 @@ def top_token_ngrams_oracle_sql(
     """DuckDB twin of :func:`top_token_ngrams`."""
     return f"""
 WITH toks AS (
-  SELECT string_split({text_col}, ' ') AS t FROM {table}
+  SELECT {words_sql(text_col)} AS t FROM {table}
 ), grams AS (
   SELECT unnest(list_transform(generate_series(1, len(t) - {n - 1}),
                                i -> array_to_string(t[i:i+{n - 1}], ' ')))
@@ -344,8 +346,7 @@ def repetition_quality(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     the narrow parent scan is round-robin spread (operators/spread.py) so
     a few-split documents file still uses every core.
     """
-    text = F.col(text_col)
-    toks = F.split(text, " ")
+    toks = words(text_col)
 
     # narrow-scan spread: the per-doc sort+scan does orders of magnitude
     # more work per row than the scan reads bytes (operators/spread.py)
@@ -441,8 +442,7 @@ def repetition_quality_oracle_sql(id_col: str, text_col: str, table: str) -> str
 
     return f"""
 WITH base AS (
-  SELECT {id_col}, string_split({text_col}, ' ') AS toks,
-         len(string_split({text_col}, ' ')) AS n_tok
+  SELECT {id_col}, {words_sql(text_col)} AS toks, len({words_sql(text_col)}) AS n_tok
   FROM {table}
   WHERE {id_col} IS NOT NULL
 ), g2 AS ({gram_cte(2)}), g3 AS ({gram_cte(3)}),
@@ -511,7 +511,7 @@ def chunk_tokens(
             "skip inter-window tokens"
         )
     base = _spread(
-        df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_toks"))
+        df.select(F.col(id_col), words(text_col).alias("_toks"))
     ).withColumn("_n", F.size(F.col("_toks")))
     max_idx = F.floor(
         (F.greatest(F.col("_n") - F.lit(size), F.lit(0)) + F.lit(stride - 1))
@@ -557,8 +557,7 @@ def chunk_tokens_oracle_sql(
         )
     return f"""
 WITH base AS (
-  SELECT {id_col}, string_split({text_col}, ' ') AS toks,
-         len(string_split({text_col}, ' ')) AS n_tok
+  SELECT {id_col}, {words_sql(text_col)} AS toks, len({words_sql(text_col)}) AS n_tok
   FROM {table}
 ), idx AS (
   SELECT {id_col}, toks,
@@ -595,7 +594,7 @@ def corpus_profile(
     """
     d = df.select(
         F.col(group_col),
-        F.size(F.split(F.col(text_col), " ")).alias("_n"),
+        F.size(words(text_col)).alias("_n"),
     )
     return (
         d.groupBy(group_col)
@@ -625,7 +624,7 @@ def corpus_profile_oracle_sql(
     """DuckDB twin of :func:`corpus_profile`."""
     return f"""
 WITH base AS (
-  SELECT {group_col}, len(string_split({text_col}, ' ')) AS n
+  SELECT {group_col}, len({words_sql(text_col)}) AS n
   FROM {table}
 )
 SELECT {group_col},
@@ -687,7 +686,7 @@ def quality_gate(
     # the len rule while DuckDB's NULL predicates drop out of the fail
     # list entirely (the junk row would PASS the oracle's gate).
     txt = F.coalesce(F.col(text_col), F.lit(""))
-    toks = F.split(txt, " ")
+    toks = words(txt)
     n = F.size(toks)
     mean_wl = (F.length(txt) - (n - F.lit(1))) / n
     sym = F.size(F.regexp_extract_all(txt, F.lit(QUALITY_SYMBOLS_PATTERN), 0))
@@ -731,7 +730,7 @@ def quality_gate_oracle_sql(
     constants (embedded via ``repr``); NULL text coalesced to '' exactly
     like the Spark side."""
     txt = f"coalesce({text_col}, '')"
-    ts = f"string_split({txt}, ' ')"
+    ts = words_sql(txt)
     n = f"len({ts})"
     mean_wl = f"((length({txt}) - ({n} - 1)) / {n})"
     sym = f"len(regexp_extract_all({txt}, '{QUALITY_SYMBOLS_PATTERN}'))"
@@ -784,7 +783,7 @@ def vocabulary_overlap(
     vocab = (
         df.select(
             F.col(group_col).alias("_g"),
-            F.explode(F.split(F.col(text_col), " ")).alias("_tok"),
+            F.explode(words(text_col)).alias("_tok"),
         )
         .distinct()
     )
@@ -821,7 +820,7 @@ def vocabulary_overlap_oracle_sql(
     """DuckDB twin of :func:`vocabulary_overlap`."""
     return f"""
 WITH vocab AS (
-  SELECT DISTINCT {group_col} AS g, unnest(string_split({text_col}, ' ')) AS tok
+  SELECT DISTINCT {group_col} AS g, unnest({words_sql(text_col)}) AS tok
   FROM {table}
 ), sizes AS (
   SELECT g, count(*) AS sz FROM vocab GROUP BY g
@@ -861,7 +860,7 @@ def tfidf_signature_terms(
     tf = (
         df.select(
             F.col(group_col).alias("_g"),
-            F.explode(F.split(F.col(text_col), " ")).alias("term"),
+            F.explode(words(text_col)).alias("term"),
         )
         .groupBy("_g", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -904,7 +903,7 @@ def tfidf_signature_terms_oracle_sql(
 WITH tf AS (
   SELECT g, term, count(*) AS tf
   FROM (
-    SELECT {group_col} AS g, unnest(string_split({text_col}, ' ')) AS term
+    SELECT {group_col} AS g, unnest({words_sql(text_col)}) AS term
     FROM {table}
   )
   GROUP BY g, term

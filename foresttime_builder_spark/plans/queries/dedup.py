@@ -3,6 +3,7 @@
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from foresttime_builder_spark.functions.encoding import fixed, fixed_sql, hash60_sql
+from foresttime_builder_spark.functions.tokens import token_set_sql, words_sql
 from foresttime_builder_spark.operators.cache import carry_cache
 from foresttime_builder_spark.operators.dedup import (
     derive_candidate_budget,
@@ -70,14 +71,18 @@ def q16_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs,
     )
 
+#: Each document's distinct whitespace tokens (``operators.dedup.tokens``).
+_TOKSET = token_set_sql("text")
+
 #: The oracles round the jaccard to 4 decimals as the Spark operators do.
 _JACCARD_E4_SQL = fixed_sql("round(n_common / (sa.sz + sb.sz - n_common), 4)", 4)
 
-ORACLE_Q16 = f"""
-WITH toks AS (
-  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
-  FROM documents
-),
+def _exact_jaccard_sql(token_rows: str) -> str:
+    """The naive quadratic inverted-index join: every document pair with
+    Jaccard >= 0.8 over ``token_rows``' ``(doc_id, token)`` rows, one per
+    distinct token of a document."""
+    return f"""
+WITH toks AS ({token_rows}),
 sizes AS (SELECT doc_id, count(*) AS sz FROM toks GROUP BY 1),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
@@ -91,6 +96,10 @@ JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
 WHERE round(n_common / (sa.sz + sb.sz - n_common), 4) >= 0.8
 """
+
+ORACLE_Q16 = _exact_jaccard_sql(
+    f"SELECT doc_id, unnest({_TOKSET}) AS token FROM documents"
+)
 
 def q54_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-trigram (shingle) set-similarity pairs — the n-gram flavor
@@ -149,28 +158,14 @@ def q54_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs,
     )
 
-ORACLE_Q54 = f"""
-WITH toks AS (
+ORACLE_Q54 = _exact_jaccard_sql("""
   SELECT doc_id, unnest(list_distinct(
     CASE WHEN length(text) < 3 THEN []
          ELSE list_transform(range(1, length(text) - 1),
                              i -> substring(text, CAST(i AS INT), 3)) END
   )) AS token
   FROM documents WHERE doc_id % 3 = 0
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM toks GROUP BY 1),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-  FROM toks a JOIN toks b ON a.token = b.token AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, n_common,
-       {_JACCARD_E4_SQL} AS jaccard_e4
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE round(n_common / (sa.sz + sb.sz - n_common), 4) >= 0.8
-"""
+""")
 
 def q23_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded MinHash-LSH near-dup candidates verified with exact Jaccard
@@ -237,7 +232,7 @@ def _minhash_lsh_oracle(
     mins, bands, band_list = _minhash_band_sql(n_hashes, band_size)
     return f"""
 WITH tok AS (
-  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
+  SELECT doc_id, unnest({_TOKSET}) AS token
   FROM documents
 ),
 sigs AS (
@@ -259,8 +254,8 @@ cand AS (
     ON a.band_key = b.band_key AND a.doc_id < b.doc_id
 ),
 docsets AS (
-  SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks,
-         len(list_distinct(string_split(text, ' '))) AS sz
+  SELECT doc_id, {_TOKSET} AS toks,
+         len({_TOKSET}) AS sz
   FROM documents
 )
 SELECT doc_a, doc_b,
@@ -292,7 +287,7 @@ def _simhash_oracle() -> str:
     return f"""
 WITH tok AS (
   SELECT doc_id, {h} AS h
-  FROM (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
+  FROM (SELECT doc_id, unnest({_TOKSET}) AS token
         FROM documents) t
 )
 SELECT doc_id, {bits} AS simhash, count(*) AS n_tokens
@@ -367,25 +362,9 @@ def _components_sql(sym: str = "sym", rounds: int = MAX_ITER_DEFAULT) -> str:
 
 def _dup_clusters_oracle() -> str:
     """Connected components (:func:`_components_sql`) over the exact
-    token-Jaccard pair SQL, with cluster sizes."""
+    token-Jaccard pairs (q16's oracle), with cluster sizes."""
     return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
-  FROM documents
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM toks GROUP BY 1),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-  FROM toks a JOIN toks b ON a.token = b.token AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT doc_a, doc_b
-  FROM inter
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE round(n_common / (sa.sz + sb.sz - n_common), 4) >= 0.8
-),
+WITH pairs AS (SELECT doc_a, doc_b FROM ({ORACLE_Q16})),
 sym AS MATERIALIZED (
   SELECT doc_a AS a, doc_b AS b FROM pairs
   UNION SELECT doc_b, doc_a FROM pairs
@@ -486,7 +465,7 @@ def _dedup_keep_best_oracle() -> str:
     return f"""
 WITH clusters AS ({_dup_clusters_oracle()}),
 toks AS (
-  SELECT doc_id, len(string_split(text, ' ')) AS n_tokens FROM documents
+  SELECT doc_id, len({words_sql('text')}) AS n_tokens FROM documents
 ),
 joined AS (
   SELECT t.doc_id, t.n_tokens,
@@ -590,7 +569,7 @@ def _incremental_dedup_oracle(
   SELECT doc_id, unnest([{band_list}]) AS band_key FROM (
     SELECT doc_id, {bands} FROM (
       SELECT doc_id, {mins}
-      FROM (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
+      FROM (SELECT doc_id, unnest({_TOKSET}) AS token
             FROM {src})
       GROUP BY doc_id
     )
@@ -610,13 +589,13 @@ cand AS (
   FROM {_stack("batch")} b JOIN {_stack("history")} h USING (band_key)
 ),
 bsets AS (
-  SELECT doc_id AS bid, list_distinct(string_split(text, ' ')) AS btoks,
-         len(list_distinct(string_split(text, ' '))) AS bsz
+  SELECT doc_id AS bid, {_TOKSET} AS btoks,
+         len({_TOKSET}) AS bsz
   FROM batch
 ),
 hsets AS (
-  SELECT doc_id AS hid, list_distinct(string_split(text, ' ')) AS htoks,
-         len(list_distinct(string_split(text, ' '))) AS hsz
+  SELECT doc_id AS hid, {_TOKSET} AS htoks,
+         len({_TOKSET}) AS hsz
   FROM history
 ),
 near_keep AS (
@@ -662,8 +641,8 @@ def q111_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _containment_oracle(threshold: float = 0.8) -> str:
     return f"""
 WITH docsets AS (
-  SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks,
-         len(list_distinct(string_split(text, ' '))) AS sz
+  SELECT doc_id, {_TOKSET} AS toks,
+         len({_TOKSET}) AS sz
   FROM documents
 ),
 tok AS (
@@ -751,7 +730,7 @@ def _lsh_representatives_oracle(
     mins, bands, band_list = _minhash_band_sql(n_hashes, band_size)
     return f"""
 WITH tok AS (
-  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
+  SELECT doc_id, unnest({_TOKSET}) AS token
   FROM documents
 ),
 sigs AS (
@@ -774,8 +753,8 @@ edges AS (
   ) s WHERE doc_id <> hub
 ),
 docsets AS (
-  SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks,
-         len(list_distinct(string_split(text, ' '))) AS sz
+  SELECT doc_id, {_TOKSET} AS toks,
+         len({_TOKSET}) AS sz
   FROM documents
 ),
 ver AS MATERIALIZED (

@@ -4,6 +4,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from foresttime_builder_spark.operators.cache import carry_cache
 from foresttime_builder_spark.functions.encoding import fixed, fixed_sql
+from foresttime_builder_spark.functions.tokens import words, words_sql
 from foresttime_builder_spark.sources import load_table
 from foresttime_builder_spark.plans.queries._shared import QuerySpec
 
@@ -110,9 +111,7 @@ def q117_group_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "source",
-        F.explode(
-            F.split(F.coalesce(F.col("text"), F.lit("")), " ")
-        ).alias("tok"),
+        F.explode(words("text", null_as_empty=True)).alias("tok"),
     )
     out = kmv_distinct_by(toks, "source", "tok", k=64, with_exact=True)
     # carry_cache: the operator persists its distinct hash relation across
@@ -130,8 +129,8 @@ def _group_kmv_oracle() -> str:
     from foresttime_builder_spark.operators.sketch import kmv_by_oracle_sql
 
     inner = (
-        "(SELECT source, unnest(string_split(coalesce(text, ''), ' ')) "
-        "AS tok FROM documents)"
+        f"(SELECT source, unnest({words_sql('text', null_as_empty=True)})"
+        " AS tok FROM documents)"
     )
     return (
         f"SELECT source, {fixed_sql('est_distinct', 4)}"
@@ -152,9 +151,7 @@ def q118_group_kmv_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "lang",
-        F.explode(
-            F.split(F.coalesce(F.col("text"), F.lit("")), " ")
-        ).alias("tok"),
+        F.explode(words("text", null_as_empty=True)).alias("tok"),
     )
     out = kmv_distinct_by(toks, "lang", "tok", k=64, with_exact=False)
     return carry_cache(
@@ -169,8 +166,8 @@ def _group_kmv_estimate_oracle() -> str:
     from foresttime_builder_spark.operators.sketch import kmv_by_oracle_sql
 
     inner = (
-        "(SELECT lang, unnest(string_split(coalesce(text, ''), ' ')) "
-        "AS tok FROM documents)"
+        f"(SELECT lang, unnest({words_sql('text', null_as_empty=True)})"
+        " AS tok FROM documents)"
     )
     return (
         f"SELECT lang, {fixed_sql('est_distinct', 4)}"

@@ -3,6 +3,7 @@
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from foresttime_builder_spark.functions.encoding import hash60_sql
+from foresttime_builder_spark.functions.tokens import words, words_sql
 from foresttime_builder_spark.sources import load_table
 from foresttime_builder_spark.plans.queries._shared import QuerySpec
 
@@ -22,18 +23,16 @@ def q56_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         # NULL text -> '' (one empty token): a NULL length would poison
         # the running fill/bin fold state for the whole stream
-        F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " ")).alias(
-            "n_tok"
-        ),
+        F.size(words("text", null_as_empty=True)).alias("n_tok"),
     )
     return pack_sequences(
         d, "n_tok", capacity=256, group_cols=["source"], n_shards=4
     )
 
-ORACLE_Q56 = """
+ORACLE_Q56 = f"""
 WITH RECURSIVE ordered AS (
   SELECT doc_id, source, doc_id % 4 AS shard,
-         CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT)
+         CAST(len({words_sql("text", null_as_empty=True)}) AS BIGINT)
            AS n_tokens,
          row_number() OVER (PARTITION BY source, doc_id % 4 ORDER BY doc_id) AS rn
   FROM documents
@@ -179,7 +178,7 @@ def q78_length_bucket_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     from foresttime_builder_spark.operators.packing import length_bucket_batches
 
     d = load_table(spark, sf_dir, "documents")
-    docs = d.select("doc_id", F.size(F.split(F.col("text"), " ")).alias("len"))
+    docs = d.select("doc_id", F.size(words("text")).alias("len"))
     return length_bucket_batches(docs, "len", token_budget=2048)
 
 def _length_bucket_oracle() -> str:
@@ -188,7 +187,7 @@ def _length_bucket_oracle() -> str:
     )
 
     return length_bucket_batches_oracle_sql(
-        "(SELECT doc_id, len(string_split(text, ' ')) AS len FROM documents)",
+        f"(SELECT doc_id, len({words_sql('text')}) AS len FROM documents)",
         "len",
         token_budget=2048,
     )

@@ -8,6 +8,8 @@ from foresttime_builder_spark.functions.encoding import (
     hash60,
     hash60_sql,
 )
+from foresttime_builder_spark.functions.tokens import token_set_sql, words, words_sql
+from foresttime_builder_spark.operators.dedup import tokens
 from foresttime_builder_spark.sources import load_table
 
 from foresttime_builder_spark.plans.queries.sampling import ORACLE_Q57
@@ -24,7 +26,7 @@ def q13_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text quality scoring: token count, mean word length, stopword ratio
     (text-analysis operator family)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
+    toks = words("text")
     stop = F.array([F.lit(s) for s in ["the", "a", "of", "and", "to"]])
     n_tok = F.size(toks)
     n_stop = F.size(F.array_intersect(toks, stop))
@@ -38,18 +40,20 @@ def q13_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         (n_stop > 0).alias("has_stopword"),
     )
 
+_TOKS = words_sql("text")
+
 ORACLE_Q13 = f"""
 SELECT doc_id,
-       len(string_split(text, ' ')) AS n_tokens,
-       {fixed_sql("length(text) / len(string_split(text, ' '))", 4)}
+       len({_TOKS}) AS n_tokens,
+       {fixed_sql(f"length(text) / len({_TOKS})", 4)}
          AS mean_tok_len_e4,
        {fixed_sql(
-           "len(list_filter(string_split(text, ' '),"
+           f"len(list_filter({_TOKS},"
            " t -> list_contains(['the','a','of','and','to'], t)))"
-           " / len(string_split(text, ' '))",
+           f" / len({_TOKS})",
            4,
        )} AS stopword_ratio_e4,
-       len(list_intersect(string_split(text, ' '),
+       len(list_intersect({_TOKS},
                           ['the','a','of','and','to'])) > 0 AS has_stopword
 FROM documents
 """
@@ -59,15 +63,15 @@ def q14_token_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprinting building block)."""
     d = load_table(spark, sf_dir, "documents")
     return (
-        d.select("doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("token"))
+        d.select("doc_id", F.explode(tokens("text")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") >= 10)
     )
 
-ORACLE_Q14 = """
+ORACLE_Q14 = f"""
 SELECT token, count(*) AS df
-FROM (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
+FROM (SELECT doc_id, unnest({token_set_sql('text')}) AS token
       FROM documents) t
 GROUP BY token HAVING count(*) >= 10
 """
@@ -76,7 +80,7 @@ def q15_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit-ish content fingerprint from the document's token multiset
     (engine-portable md5-based hashing)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+    toks = d.select("doc_id", F.explode(words("text")).alias("token"))
     return toks.groupBy("doc_id").agg(
         F.min(hash60(F.col("token"))).alias("min_token_hash"),
         F.max(hash60(F.col("token"))).alias("max_token_hash"),
@@ -88,7 +92,7 @@ SELECT doc_id,
        min({hash60_sql('token')}) AS min_token_hash,
        max({hash60_sql('token')}) AS max_token_hash,
        count(*) AS n_tokens
-FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents) t
+FROM (SELECT doc_id, unnest({_TOKS}) AS token FROM documents) t
 GROUP BY doc_id
 """
 
@@ -124,9 +128,9 @@ def q58_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = d.filter(~F.col("source").isin("src0", "src1"))
     return contamination(tr, ev, n=5)
 
-ORACLE_Q58 = """
+ORACLE_Q58 = f"""
 WITH toks AS (
-  SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
+  SELECT doc_id, source, {_TOKS} AS t FROM documents
 ), grams AS (
   SELECT doc_id, source,
          unnest(list_transform(generate_series(1, len(t) - 4),

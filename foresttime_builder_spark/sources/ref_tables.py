@@ -76,10 +76,14 @@ def values_df(spark: SparkSession, rows, spec: tuple[tuple[str, str], ...]) -> D
 
     ``createDataFrame`` over python rows yields an ``ExistingRDD`` scan:
     every broadcast of it runs a Spark job that deserializes pickled rows.
-    An Arrow table becomes a ``LocalRelation``, which broadcasts
-    driver-side with no job at all, and skips the cold SQL parser that
-    generated ``VALUES`` text paid (REF_SPECIES alone was 2,697 rows of
-    literals; all dims cold 3.2-3.4 s → 0.9 s on 4 vCPUs, local[4]).
+    An Arrow table becomes a ``LocalRelation``: its broadcast reads no
+    pickled rows, and it skips the cold SQL parser that generated
+    ``VALUES`` text paid (REF_SPECIES alone was 2,697 rows of literals;
+    all dims cold 3.2-3.4 s → 0.9 s on 4 vCPUs, local[4]).  The broadcast
+    is still a Spark job on Spark 4.1: ``BroadcastExchangeExec`` calls
+    ``executeCollectIterator``, which ``LocalTableScanExec`` does not
+    override (only ``executeCollect``); broadcasting ``decay_prop`` into
+    a 100-row join runs 2 jobs, one of them the broadcast.
     Columns keep the ``VALUES`` form's nullability, so plans do not
     change: doubles are nullable, other kinds only when a NULL occurs."""
     import pyarrow as pa

@@ -189,6 +189,7 @@ def test_projections_match_the_spark_formulations(spark):
     whole (p = 1) and sampled (p < 1)."""
     from pyspark.sql import functions as F
 
+    from foresttime_builder_spark.functions.tokens import words
     from foresttime_builder_spark.operators.dedup import (
         _corpus_facts,
         char_ngrams,
@@ -200,7 +201,7 @@ def test_projections_match_the_spark_formulations(spark):
     try:
         for name, tok in (
             ("tokens", tokens("text")),
-            ("repeating", tokens("text", distinct=False)),
+            ("repeating", words("text")),
             ("trigrams", char_ngrams("text")),
         ):
             docsets = df.select(

@@ -338,15 +338,13 @@ def test_banded_cut_lossless_with_duplicate_emitting_tokenizer(spark):
     tokenizers and the pair must survive.  The exact operator shares that
     verification input, so every token_jaccard_pairs strategy must find
     the same pair."""
-    from foresttime_builder_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        tokens,
-    )
+    from foresttime_builder_spark.functions.tokens import words
+    from foresttime_builder_spark.operators.dedup import minhash_lsh_pairs
 
     df = spark.createDataFrame(
         [(1, "x x x x"), (2, "x")], "doc_id int, text string"
     )
-    tokenizer = tokens("text", distinct=False)
+    tokenizer = words("text")
     runs = {
         "lsh": minhash_lsh_pairs(
             df, "doc_id", "text", threshold=0.5, tokenizer=tokenizer

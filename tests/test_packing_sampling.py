@@ -5,7 +5,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from foresttime_builder_spark.operators.decontaminate import contamination, token_ngrams
+from foresttime_builder_spark.functions.tokens import words
+from foresttime_builder_spark.operators.decontaminate import (
+    contamination,
+    token_ngrams_from_tokens,
+)
 from foresttime_builder_spark.operators.packing import pack_sequences
 from foresttime_builder_spark.operators.sampling import quota_sample
 
@@ -115,7 +119,9 @@ def test_quota_sample_prefilter_validates(spark):
 
 def test_token_ngrams_short_doc_empty(spark):
     df = spark.createDataFrame([("a b c",), ("a b c d e f",)], "text string")
-    out = df.select(F.size(token_ngrams(F.col("text"), 5)).alias("n")).collect()
+    out = df.select(
+        F.size(token_ngrams_from_tokens(words("text"), 5)).alias("n")
+    ).collect()
     assert [r.n for r in out] == [0, 2]
 
 

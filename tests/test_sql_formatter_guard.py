@@ -19,6 +19,10 @@ It also rejects inline spellings of the cross-engine value encoding
 (``*_eN`` fixed point and the md5 60-bit hash) outside
 :mod:`foresttime_builder_spark.functions.encoding`: copies drift apart,
 as the unguarded NaN → 0 (Spark) vs cast error (DuckDB) copies did.
+
+And it rejects a whitespace ``split`` / ``string_split`` spelled outside
+:mod:`foresttime_builder_spark.functions.tokens`, the one tokenizer
+contract, whose NULL policy each caller passes explicitly.
 """
 
 from __future__ import annotations
@@ -160,3 +164,62 @@ def test_no_package_module_spells_the_value_encoding_inline():
         "emit gate values with functions.encoding.fixed/fixed_sql and "
         f"hash60/hash60_sql, not an inline copy: {sorted(offenders)}"
     )
+
+
+_TOKENS_MODULE = os.path.join("functions", "tokens.py")
+_SQL_SPLIT_CALL = re.compile(r"\b(?:string_|str_)?split\s*\(", re.I)
+_WHITESPACE_LAST_ARG = re.compile(r",\s*'(?:\s+|\\s\+?)'\s*\)$")
+
+
+def _sql_whitespace_split(text: str) -> bool:
+    """Whether SQL text calls ``split``/``string_split`` with a whitespace
+    delimiter (the call's parentheses balanced, its last argument seen)."""
+    for m in _SQL_SPLIT_CALL.finditer(text):
+        depth, i = 1, m.end()
+        while i < len(text) and depth:
+            depth += {"(": 1, ")": -1}.get(text[i], 0)
+            i += 1
+        if _WHITESPACE_LAST_ARG.search(text[m.start() : i]):
+            return True
+    return False
+
+
+def _is_whitespace_split_column(node) -> bool:
+    """``F.split(<text>, " ")`` (or another whitespace pattern)."""
+    return (
+        _is_f_call(node, "split")
+        and len(node.args) >= 2
+        and isinstance(node.args[1], ast.Constant)
+        and isinstance(node.args[1].value, str)
+        and re.fullmatch(r"\s+|\\s\+?", node.args[1].value) is not None
+    )
+
+
+def test_no_package_module_spells_the_whitespace_tokenizer_inline():
+    offenders = set()
+    for path, node in package_nodes():
+        if path == _TOKENS_MODULE:
+            continue
+        text = _string_text(node)
+        if (text is not None and _sql_whitespace_split(text)) or (
+            _is_whitespace_split_column(node)
+        ):
+            offenders.add(f"{path}:{node.lineno}")
+    assert not offenders, (
+        "tokenize on whitespace with functions.tokens.words/words_sql "
+        f"(or token_set_sql), not an inline split: {sorted(offenders)}"
+    )
+
+
+def test_whitespace_split_guard_sees_both_forms():
+    def nodes(src):
+        return list(ast.walk(ast.parse(src)))
+
+    assert any(map(_is_whitespace_split_column, nodes('F.split(F.col("t"), " ")')))
+    assert not any(map(_is_whitespace_split_column, nodes('F.split(c, "_")')))
+    assert not any(map(_is_whitespace_split_column, nodes('"a b".split(" ")')))
+    assert _sql_whitespace_split("len(string_split(coalesce(t, ''), ' '))")
+    assert _sql_whitespace_split("unnest(split({}, ' ')) AS w")
+    assert not _sql_whitespace_split("string_split(tree_ID, '_')[1]")
+    assert not _sql_whitespace_split("string_split_regex(t, ' line ')")
+    assert not _sql_whitespace_split("array_to_string(t[i:i+2], ' ')")

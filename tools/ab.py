@@ -15,8 +15,9 @@ Without ``--only`` every workload in BENCHMARK.json runs its ``command``
 sides.  With ``--only`` each listed registry query runs
 ``tools/run_at_scale.py --sf-dir DIR --only Q --runs 1`` on both sides:
 one fresh JVM per query and side, judged on ``sec`` with the
-``first_run_s`` bound.  Give full query names (``run_at_scale`` matches
-prefixes); ``DIR`` defaults to this checkout's ``.localdata/sf1``.
+``first_run_s`` bound.  Give full query names (an older base commit's
+``run_at_scale`` matches prefixes); ``DIR`` defaults to this checkout's
+``.localdata/sf1``.
 
 The protocol is fixed: 10 pairs per workload or query; pair i uses seed
 ``seed0 + i``, where seed0 comes from ``sha256("<base sha>:NAME")``, so a

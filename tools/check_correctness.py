@@ -12,6 +12,8 @@ once the result is compared, dropped and garbage-collected fails it as a
 leak.
 
 Usage: python tools/check_correctness.py [--sf DIR] [--only q08,q09]
+(``--only`` takes full query names or exact ``qNN`` ids: see
+:func:`select_queries`).
 """
 
 from __future__ import annotations
@@ -30,6 +32,26 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from foresttime_builder_spark.sources.readers import TPCH_TABLES  # noqa: E402
+
+
+def select_queries(names, only: str | None, skip: str = "") -> list[str]:
+    """``names`` picked by ``only`` and not dropped by ``skip``.
+
+    Both are comma-separated lists of full query names or exact ``qNN``
+    ids: ``q10`` is ``q10_fill_downup``, not q100-q109.  An empty ``only``
+    picks every name.  A token that names no query raises ``ValueError``
+    rather than selecting nothing."""
+    ids = {n.split("_")[0] for n in names}
+
+    def picked(arg):
+        toks = {t.strip() for t in (arg or "").split(",") if t.strip()}
+        unknown = toks - set(names) - ids
+        if unknown:
+            raise ValueError(f"no registry query is named {sorted(unknown)}")
+        return {n for n in names if {n, n.split("_")[0]} & toks}
+
+    want, drop = picked(only), picked(skip)
+    return [n for n in names if (not only or n in want) and n not in drop]
 
 
 def fresh_con(sf_dir: str, mem: str, threads: int | None = None):
@@ -181,9 +203,7 @@ def main() -> int:
 
     spark = get_spark(app_name="check_correctness", data_bytes=dir_bytes(args.sf))
     qs, oracles = e.queries(), e.oracle_sql()
-    if args.only:
-        keep = set(args.only.split(","))
-        qs = {k: v for k, v in qs.items() if any(k.startswith(p) for p in keep)}
+    qs = {k: qs[k] for k in select_queries(sorted(qs), args.only)}
     mem_cap, retry_cap = duckdb_mem_caps(
         os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"),
         os.environ.get("FTB_DUCKDB_MEM"),

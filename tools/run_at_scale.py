@@ -36,6 +36,8 @@ each in a fresh JVM, and compares the two sides' sec and rows.
 Usage: python tools/run_at_scale.py [--sf-dir DIR] [--only q16,q25]
                                     [--skip q51] [--runs 3]
                                     [--out SCALE_sf1.json]
+(``--only`` and ``--skip`` take full query names or exact ``qNN`` ids, as
+``tools/check_correctness.select_queries`` reads them).
 """
 
 from __future__ import annotations
@@ -52,6 +54,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from foresttime_builder_spark.session import get_spark
+from tools.check_correctness import select_queries
 
 #: per-query wall cap for fresh-JVM subprocess re-runs (--isolate /
 #: --retry-fresh).  The slowest legitimate sf10 query on record is q77 at
@@ -84,15 +87,6 @@ def _steal_pct(before, after) -> float | None:
     if before is None or after is None or after[0] <= before[0]:
         return None
     return round(100.0 * (after[1] - before[1]) / (after[0] - before[0]), 1)
-
-
-def _select(names, only: str | None, skip: str) -> list[str]:
-    """``names`` that start with an ``--only`` prefix and no ``--skip`` one."""
-    want = [w.strip() for w in (only or "").split(",") if w.strip()]
-    drop = [w.strip() for w in skip.split(",") if w.strip()]
-    return [n for n in names
-            if (not want or any(n.startswith(w) for w in want))
-            and not any(n.startswith(s) for s in drop)]
 
 
 def _fresh(args, name: str) -> dict:
@@ -164,7 +158,7 @@ def main() -> None:
     args = ap.parse_args()
 
     queries = entrymod.queries()
-    names = _select(sorted(queries), args.only, args.skip)
+    names = select_queries(sorted(queries), args.only, args.skip)
     if args.isolate:
         report = {}
         for name in names:
