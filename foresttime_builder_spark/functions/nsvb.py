@@ -213,26 +213,23 @@ EQUATION_REQUIRES: dict[float, frozenset[str]] = {
 }
 
 
-def rif_sql(cond: str, yes: str, no: str, missing: str = "NULL") -> str:
-    """dplyr ``if_else`` with an explicit NA-condition branch: a null
-    ``cond`` yields ``missing``, where a plain ``CASE WHEN cond`` would take
-    the ``ELSE``."""
+def rif_sql(cond: str, yes: str, no: str) -> str:
+    """dplyr ``if_else`` with its NA-condition branch: a null ``cond``
+    yields NULL, where a plain ``CASE WHEN cond`` would take the
+    ``ELSE``."""
     return (
-        f"CASE WHEN ({cond}) IS NULL THEN {missing} "
+        f"CASE WHEN ({cond}) IS NULL THEN NULL "
         f"WHEN {cond} THEN {yes} ELSE {no} END"
     )
 
 
 def equation_sql(
     prefix: str,
-    dbh: str = "DBH",
-    tht: str = "THT",
-    wdsg: str = "WDSG",
-    k: str = "k",
     equation: str | None = None,
     available: frozenset[str] | None = None,
 ) -> str:
-    """The allometric prediction for one response as one CASE expression:
+    """The allometric prediction for one response as one CASE expression
+    over the ``DBH``, ``THT``, ``WDSG`` and ``k`` columns:
     dispatch over equation ids 3 / 4 / 5 / 50 / 3.1 (forms from
     ``data-raw/equation_forms_and_calls.csv`` + ``R/estimate_carbon.R:64-72``;
     ids 7-14 and 6.1 are handled by :func:`find_ht_sql` /
@@ -246,6 +243,7 @@ def equation_sql(
     b, b0, b1 = f"{prefix}_b", f"{prefix}_b0", f"{prefix}_b1"
     b2, c, c1 = f"{prefix}_b2", f"{prefix}_c", f"{prefix}_c1"
     eq = equation if equation is not None else f"{prefix}_equation"
+    dbh, tht, wdsg, k = "DBH", "THT", "WDSG", "k"
 
     forms = (
         (3, f"{a} * pow({dbh}, {b}) * pow({tht}, {c})"),

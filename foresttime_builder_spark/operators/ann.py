@@ -57,40 +57,36 @@ def _plane_component(bit: int, dim: int) -> Column:
     return ((h % 2001) - 1000) / 1000.0
 
 
-#: default LSH bucket-occupancy target: buckets of ~this many vectors keep
-#: the candidate stream ~linear in corpus size (candidates ~ N * occupancy)
+#: LSH bucket-occupancy target of lsh_topk (embedding_neardup_pairs
+#: targets twice it): buckets of ~this many vectors keep the candidate
+#: stream ~linear in corpus size (candidates ~ N * occupancy)
 LSH_TARGET_OCCUPANCY = 64
 LSH_MIN_BITS, LSH_MAX_BITS = 2, 20
+#: leading vector components the LSH hyperplane signature reads
+LSH_SIG_DIMS = 32
+#: neighbours per probe of lsh_topk and ivf_topk
+TOPK = 3
 
 
-def adaptive_bits(
-    n: int,
-    target: int = LSH_TARGET_OCCUPANCY,
-    lo: int = LSH_MIN_BITS,
-    hi: int = LSH_MAX_BITS,
-) -> int:
-    """Smallest ``nb`` in [lo, hi] with ``target * 2^nb >= n`` — i.e. grow
-    the signature until expected bucket occupancy falls to ``target``.
-    Integer comparisons only (no float log2), so the SQL twin
-    (:func:`adaptive_bits_sql`) is bit-identical on any engine."""
-    nb = lo
-    while nb < hi and n > target * (1 << nb):
+def adaptive_bits(n: int, target: int) -> int:
+    """Smallest ``nb`` in [LSH_MIN_BITS, LSH_MAX_BITS] with
+    ``target * 2^nb >= n`` — i.e. grow the signature until expected bucket
+    occupancy falls to ``target``.  Integer comparisons only (no float
+    log2), so the SQL twin (:func:`adaptive_bits_sql`) is bit-identical on
+    any engine."""
+    nb = LSH_MIN_BITS
+    while nb < LSH_MAX_BITS and n > target * (1 << nb):
         nb += 1
     return nb
 
 
-def adaptive_bits_sql(
-    n_expr: str,
-    target: int = LSH_TARGET_OCCUPANCY,
-    lo: int = LSH_MIN_BITS,
-    hi: int = LSH_MAX_BITS,
-) -> str:
+def adaptive_bits_sql(n_expr: str, target: int) -> str:
     """SQL twin of :func:`adaptive_bits` as a CASE chain over ``n_expr``."""
     arms = "\n    ".join(
         f"WHEN {n_expr} <= {target * (1 << nb)} THEN {nb}"
-        for nb in range(lo, hi)
+        for nb in range(LSH_MIN_BITS, LSH_MAX_BITS)
     )
-    return f"CASE {arms} ELSE {hi} END"
+    return f"CASE {arms} ELSE {LSH_MAX_BITS} END"
 
 
 def _probe_width(emb: DataFrame, vec_col: str) -> int:
@@ -300,14 +296,13 @@ def brute_topk_np(
     base: DataFrame,
     probes: DataFrame,
     k: int,
-    vec_col: str = "vec",
-    id_col: str = "vec_id",
     max_probes: int = MAX_BRUTE_PROBES,
 ) -> DataFrame:
     """Brute-force cosine top-k with the shared numpy kernel.
 
-    ``probes`` is a DataFrame of (probe_id, probe_vec).  It is collected to
-    the driver and shipped in the task closure — the probe set must be tiny
+    ``base`` is a DataFrame of (vec_id, vec), ``probes`` one of
+    (probe_id, probe_vec).  ``probes`` is collected to the driver and
+    shipped in the task closure — the probe set must be tiny
     next to the corpus, which is the side that scales — so the collect is
     bounded: if it exceeds ``max_probes`` rows the operator raises instead
     of silently OOM-ing the driver at scale.  Each Arrow batch of the
@@ -320,7 +315,7 @@ def brute_topk_np(
     """
     # junk guard: a NULL vector crashes np.stack mid-task, a NULL id
     # cannot be reported (shared contract — see _valid)
-    base = _valid(base, id_col, vec_col, cosine=True)
+    base = _valid(base, "vec_id", "vec", cosine=True)
     probes = _valid(probes, "probe_id", "probe_vec", cosine=True)
 
     # bounded collect: fetch at most cap+1 rows so even a huge probe side
@@ -338,10 +333,10 @@ def brute_topk_np(
         for pdf in batches:
             if len(pdf):
                 yield _cosine_topk(
-                    pvecs, pids, pdf[vec_col].to_numpy(), pdf[id_col].to_numpy(), k
+                    pvecs, pids, pdf["vec"].to_numpy(), pdf["vec_id"].to_numpy(), k
                 )
 
-    local = base.select(id_col, vec_col).mapInPandas(part, _KERNEL_SCHEMA)
+    local = base.select("vec_id", "vec").mapInPandas(part, _KERNEL_SCHEMA)
     return _rank_topk(_restore_nan(local), k)
 
 
@@ -456,37 +451,36 @@ def _valid_sql(
     )
 
 
-def lsh_topk(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 32,
-    n_bits: int | str = "auto",
-    k: int = 3,
-    target_occupancy: int = LSH_TARGET_OCCUPANCY,
-) -> DataFrame:
-    """Top-``k`` same-bucket neighbors per vector under random-hyperplane
-    LSH with exact cosine re-ranking (ranking on the rounded cosine so the
-    order is reproducible across engines).
+#: the LSH, IVF and coverage oracles' ``base`` CTE: the valid (vid, vec)
+#: rows of ``embeddings``
+_BASE_CTE = f"""base AS (
+  SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS vec
+  FROM {_valid_sql("embeddings", "vec_id", "embedding", cosine=True)}
+)"""
+
+
+def lsh_topk(emb: DataFrame, dims: int = LSH_SIG_DIMS) -> DataFrame:
+    """Top-``TOPK`` same-bucket neighbors per vector of ``emb``'s (vec_id,
+    embedding) under random-hyperplane LSH with exact cosine re-ranking
+    (ranking on the rounded cosine so the order is reproducible across
+    engines).
 
     Scale design: at a FIXED signature width the candidate stream is
-    ``N^2 / 2^n_bits`` — quadratic in corpus size.  The default
-    ``n_bits='auto'`` therefore grows the signature with the corpus
-    (smallest nb with ``target_occupancy * 2^nb >= N``, one count() at
-    plan time): expected bucket occupancy stays ~``target_occupancy`` and
-    the candidate stream stays ~``N * target_occupancy`` — linear.  The
+    ``N^2 / 2^n_bits`` — quadratic in corpus size.  The signature
+    therefore grows with the corpus (smallest nb with
+    ``LSH_TARGET_OCCUPANCY * 2^nb >= N``, one count() at plan time):
+    expected bucket occupancy stays ~``LSH_TARGET_OCCUPANCY`` and the
+    candidate stream stays ~``N * LSH_TARGET_OCCUPANCY`` — linear.  The
     DuckDB twin derives the same nb from the same count with the same
     integer comparisons (:func:`adaptive_bits_sql`), so the gate holds at
-    every SF.  Use multiple hash tables for recall at high nb; pass an
-    int to pin the width explicitly.
+    every SF.  Use multiple hash tables for recall at high nb.
 
     ``dims`` is the SIGNATURE width (how many leading components feed the
     hyperplanes); verification always uses the vector's full width, probed
     once at plan time so the unrolled codegen'd cosine covers every
     component exactly like the array-fold form it replaced."""
     pairs = _lsh_bucket_pairs(
-        emb, id_col, vec_col, dims, n_bits, target_occupancy,
-        lambda a, b: a != b,
+        emb, dims, "auto", LSH_TARGET_OCCUPANCY, lambda a, b: a != b
     )
     return _rank_topk(
         pairs.select(
@@ -494,32 +488,31 @@ def lsh_topk(
             F.col("id_b").alias("neighbor_id"),
             "cosine",
         ),
-        k,
+        TOPK,
     )
 
 
 def _lsh_bucket_pairs(
     emb: DataFrame,
-    id_col: str,
-    vec_col: str,
     dims: int,
     n_bits: int | str,
     target_occupancy: int,
     keep,
 ) -> DataFrame:
     """The LSH candidate join shared by :func:`lsh_topk` and
-    :func:`embedding_neardup_pairs`: valid rows, ``dims``-wide hyperplane
+    :func:`embedding_neardup_pairs`: valid (vec_id, embedding) rows,
+    ``dims``-wide hyperplane
     signature of ``n_bits`` bits (``'auto'``: :func:`adaptive_bits` from one
     count), bucket self-join filtered by ``keep(id_a, id_b)``.  Returns
     (id_a, id_b, cosine) with the 6-dp rounded cosine over the probed full
     vector width."""
-    emb = _valid(emb, id_col, vec_col, cosine=True)
-    vdims = _probe_width(emb, vec_col)
+    emb = _valid(emb, "vec_id", "embedding", cosine=True)
+    vdims = _probe_width(emb, "embedding")
     if n_bits == "auto":
         n_bits = adaptive_bits(emb.count(), target_occupancy)
     base = emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").cast("array<double>").alias("vec"),
     ).withColumn("bucket", signature_bits(F.col("vec"), dims, n_bits))
     left = _spread(
         base.select(F.col("vid").alias("id_a"), F.col("vec").alias("vec_a"), "bucket")
@@ -555,48 +548,33 @@ def _sig_sql(dims: int, n_bits: int) -> str:
     return " || ".join(bit_exprs)
 
 
-def _sigs_cte(table_cte: str, dims: int, n_bits, target_occupancy: int) -> str:
-    """CTEs computing per-row buckets: fixed-width when ``n_bits`` is an
-    int; in auto mode the signature is built at LSH_MAX_BITS and truncated
-    to the width :func:`adaptive_bits_sql` derives from count(*) — the
-    same integer chain the Spark side evaluates at plan time."""
-    if n_bits == "auto":
-        sig = _sig_sql(dims=dims, n_bits=LSH_MAX_BITS)
-        nb = adaptive_bits_sql("(SELECT count(*) FROM " + table_cte + ")",
-                               target_occupancy)
-        return f"""nbq AS (SELECT {nb} AS nb),
+def _sigs_cte(target_occupancy: int) -> str:
+    """CTEs computing the bucket of every ``base`` row: the signature is
+    built at LSH_MAX_BITS and truncated to the width
+    :func:`adaptive_bits_sql` derives from count(*) — the same integer
+    chain the Spark side evaluates at plan time."""
+    sig = _sig_sql(dims=LSH_SIG_DIMS, n_bits=LSH_MAX_BITS)
+    nb = adaptive_bits_sql("(SELECT count(*) FROM base)", target_occupancy)
+    return f"""nbq AS (SELECT {nb} AS nb),
 sigs AS (
   SELECT vid, vec,
          substr({sig}, 1, (SELECT nb FROM nbq)) AS bucket
-  FROM {table_cte}
+  FROM base
 )"""
-    sig = _sig_sql(dims=dims, n_bits=n_bits)
-    return f"sigs AS (\n  SELECT vid, vec, {sig} AS bucket FROM {table_cte}\n)"
 
 
-def lsh_topk_oracle_sql(
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 32,
-    n_bits: int | str = "auto",
-    k: int = 3,
-    target_occupancy: int = LSH_TARGET_OCCUPANCY,
-) -> str:
+def lsh_topk_oracle_sql() -> str:
     """DuckDB twin of :func:`lsh_topk` (identical hyperplane construction
-    and, in auto mode, identical occupancy-derived signature width)."""
+    and occupancy-derived signature width)."""
     return f"""
-WITH base AS (
-  SELECT {id_col} AS vid, CAST({vec_col} AS DOUBLE[]) AS vec
-  FROM {_valid_sql(table, id_col, vec_col, cosine=True)}
-),
-{_sigs_cte("base", dims, n_bits, target_occupancy)},
+WITH {_BASE_CTE},
+{_sigs_cte(LSH_TARGET_OCCUPANCY)},
 pairs AS (
   SELECT a.vid AS probe_id, b.vid AS neighbor_id,
          {_cosine_sql("a.vec", "b.vec")} AS cosine
   FROM sigs a JOIN sigs b ON a.bucket = b.bucket AND a.vid != b.vid
 ),
-{_ranked_topk_sql("pairs", k)}"""
+{_ranked_topk_sql("pairs", TOPK)}"""
 
 
 def _pround6(col: Column) -> Column:
@@ -610,6 +588,8 @@ def _with_self_dot(df: DataFrame, vec_col: str, out: str, dims: int) -> DataFram
 
 
 IVF_MIN_K, IVF_MAX_K = 8, 4096
+#: fixed Lloyd rounds of the IVF / coverage-sample quantizer
+IVF_ITERS = 2
 
 #: per-task memory bound for one inverted list materialized by the
 #: cogrouped re-rank (vectors + pandas framing); a collapsed quantizer
@@ -617,13 +597,14 @@ IVF_MIN_K, IVF_MAX_K = 8, 4096
 IVF_MAX_LIST_BYTES = 1 << 30
 
 
-def adaptive_k_clusters(n: int, lo: int = IVF_MIN_K, hi: int = IVF_MAX_K) -> int:
-    """Smallest power-of-two k in [lo, hi] with ``k^2 >= n`` — the classic
-    IVF balance point: Lloyd assignment costs O(n*k) and probing costs
-    O(n/k * probes), so k ~ sqrt(n) keeps both sub-quadratic.  Integer
-    comparisons only; :func:`adaptive_k_sql` is the engine twin."""
-    kk = lo
-    while kk < hi and kk * kk < n:
+def adaptive_k_clusters(n: int) -> int:
+    """Smallest power-of-two k in [IVF_MIN_K, IVF_MAX_K] with ``k^2 >= n``
+    — the classic IVF balance point: Lloyd assignment costs O(n*k) and
+    probing costs O(n/k * probes), so k ~ sqrt(n) keeps both
+    sub-quadratic.  Integer comparisons only; :func:`adaptive_k_sql` is
+    the engine twin."""
+    kk = IVF_MIN_K
+    while kk < IVF_MAX_K and kk * kk < n:
         kk *= 2
     return kk
 
@@ -657,22 +638,20 @@ def adaptive_nprobe(k_clusters: int) -> int:
     saturated the physical budget at sf10 and the budget guard silently
     became the tuner (degrading to nprobe=16, recall 0.35 — the r12
     verdict's '0.833 at nprobe=16' premise did not reproduce; see the
-    measured curve).  Pass an int to pin nprobe explicitly."""
+    measured curve)."""
     lg = max(1, int(k_clusters).bit_length() - 1)
     return max(2, min(k_clusters, (11 * k_clusters + 4 * lg - 1) // (4 * lg)))
 
 
-def _floor_log2_sql(kk_expr: str, hi_bits: int = 31) -> str:
+def _floor_log2_sql(kk_expr: str) -> str:
     """``max(1, floor(log2(k)))`` as an integer CASE ladder — exact on any
-    engine for k < 2^hi_bits = 2^31, i.e. the whole positive-int32 range
-    (the auto path caps k at 4096; the ladder covers any sane pinned
-    value, and the r13 review flagged the old 2^20 ceiling as a silent
-    Python/SQL divergence for absurd pinned k)."""
+    engine for k < 2^31, the whole positive-int32 range (k is at most
+    IVF_MAX_K = 4096)."""
     arms = "\n    ".join(
         f"WHEN {kk_expr} < {1 << (b + 1)} THEN {max(1, b)}"
-        for b in range(1, hi_bits)
+        for b in range(1, 31)
     )
-    return f"CASE {arms} ELSE {hi_bits} END"
+    return f"CASE {arms} ELSE 31 END"
 
 
 def adaptive_nprobe_sql(kk_expr: str) -> str:
@@ -686,13 +665,13 @@ def adaptive_nprobe_sql(kk_expr: str) -> str:
     )
 
 
-def adaptive_k_sql(n_expr: str, lo: int = IVF_MIN_K, hi: int = IVF_MAX_K) -> str:
+def adaptive_k_sql(n_expr: str) -> str:
     arms = []
-    kk = lo
-    while kk < hi:
+    kk = IVF_MIN_K
+    while kk < IVF_MAX_K:
         arms.append(f"WHEN {n_expr} <= {kk * kk} THEN {kk}")
         kk *= 2
-    return "CASE " + "\n    ".join(arms) + f" ELSE {hi} END"
+    return "CASE " + "\n    ".join(arms) + f" ELSE {IVF_MAX_K} END"
 
 
 def _assign_arrow(
@@ -751,12 +730,12 @@ def _assign_arrow(
 
 
 def _kmeans_build(
-    base: DataFrame, dims: int, k_clusters: int, iters: int
+    base: DataFrame, dims: int, k_clusters: int
 ) -> tuple[list, DataFrame]:
     """The deterministic mini k-means shared by :func:`ivf_topk` and
     :func:`kmeans_coverage_sample`: md5-seeded init (min_by over an
     md5+zero-padded-id key — deterministic total order even under an
-    astronomically unlikely md5 collision), ``iters`` driver-coordinated
+    astronomically unlikely md5 collision), ``IVF_ITERS`` driver-coordinated
     Lloyd rounds (each collects the k ~ sqrt(N) centroid rows — a few
     hundred KB — and bakes them into the next assignment's task closure,
     so every iteration's plan is base -> one Arrow map -> one groupBy:
@@ -773,7 +752,7 @@ def _kmeans_build(
         .agg(F.min_by("vec", seed_key).alias("cvec"))
     )
     cent = _with_self_dot(cent, "cvec", "cc", dims)
-    for _ in range(iters):
+    for _ in range(IVF_ITERS):
         assigned = base.join(
             _assign_arrow(base, cent.collect(), dims), on="vid"
         )
@@ -792,24 +771,25 @@ def _kmeans_build(
 
 
 def _quantizer_setup(
-    emb: DataFrame, id_col: str, vec_col: str, dims: int | None, op: str
+    emb: DataFrame, dims: int | None, op: str
 ) -> tuple[DataFrame, int, int]:
     """The set-up shared by :func:`ivf_topk` and
-    :func:`kmeans_coverage_sample`: valid rows, the probed vector width (a
-    pinned ``dims`` that disagrees raises rather than silently truncating
-    the arithmetic), one row count, and the spread (vid, vec, vv) base
-    with its self-dot.  Returns (base, dims, n_rows)."""
-    emb = _valid(emb, id_col, vec_col, cosine=True)
-    vdims = _probe_width(emb, vec_col)
+    :func:`kmeans_coverage_sample`: valid (vec_id, embedding) rows, the
+    probed vector width (a pinned ``dims`` that disagrees raises rather
+    than silently truncating the arithmetic), one row count, and the
+    spread (vid, vec, vv) base with its self-dot.  Returns (base, dims,
+    n_rows)."""
+    emb = _valid(emb, "vec_id", "embedding", cosine=True)
+    vdims = _probe_width(emb, "embedding")
     if dims is not None and dims != vdims:
         raise ValueError(
-            f"{op}: dims={dims} but {vec_col!r} carries {vdims} "
+            f"{op}: dims={dims} but 'embedding' carries {vdims} "
             f"components; pass dims=None to use the probed width"
         )
     base = _spread(
         emb.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
+            F.col("vec_id").alias("vid"),
+            F.col("embedding").cast("array<double>").alias("vec"),
         )
     )
     return _with_self_dot(base, "vec", "vv", vdims), vdims, emb.count()
@@ -818,22 +798,19 @@ def _quantizer_setup(
 def _ivf_params(
     n_rows: int,
     dims: int,
-    k: int,
-    k_clusters: int | str,
-    nprobe: int | str,
     candidate_budget: int | None,
     on_budget: str,
 ) -> tuple[int, int]:
     """IVF parameter policy, pure and Spark-free: ``(k_clusters, nprobe)``
-    for a corpus of ``n_rows`` ``dims``-wide vectors.  ``'auto'`` derives
-    k from :func:`adaptive_k_clusters` and nprobe from
-    :func:`adaptive_nprobe`; nprobe is capped at k.
+    for a corpus of ``n_rows`` ``dims``-wide vectors, k from
+    :func:`adaptive_k_clusters` and nprobe from :func:`adaptive_nprobe`
+    (at most k, as k >= IVF_MIN_K).
 
     With a ``candidate_budget`` the projected (probe, list) pair stream
     ``n_probes · nprobe`` is checked against it.  Since the cogroup
     re-rank, candidates are SCANNED inside the per-list kernel and never
     materialize as rows; what hits the shuffle is the pair stream — each
-    pair ships the probe vector in (dims*8 B) and at most k+margin scored
+    pair ships the probe vector in (dims*8 B) and at most TOPK+margin scored
     rows out (24 B each) — so the 64 B/candidate budget currency is
     re-denominated to that byte weight (a guard crossing regimes must
     re-denominate for the target row size — dedup.py's degrade ladder
@@ -842,15 +819,12 @@ def _ivf_params(
     when even nprobe=1 does not fit, both postures raise."""
     if on_budget not in ("error", "degrade"):
         raise ValueError(f"bad on_budget {on_budget!r}")
-    if k_clusters == "auto":
-        k_clusters = adaptive_k_clusters(n_rows)
-    if nprobe == "auto":
-        nprobe = adaptive_nprobe(k_clusters)
-    nprobe = min(nprobe, k_clusters)
+    k_clusters = adaptive_k_clusters(n_rows)
+    nprobe = adaptive_nprobe(k_clusters)
     if candidate_budget is None:
         return k_clusters, nprobe
     n_probes = max(1, n_rows // PROBE_MOD)
-    bytes_per_pair = dims * 8 + 48 + (k + _MARGIN) * 24
+    bytes_per_pair = dims * 8 + 48 + (TOPK + _MARGIN) * 24
     pair_budget = candidate_budget * 64 // bytes_per_pair
     projected = n_probes * nprobe
     if projected <= pair_budget:
@@ -874,31 +848,25 @@ def _ivf_params(
             f"~{projected:,} rows ({n_probes:,} probes x "
             f"nprobe={nprobe}, ~{bytes_per_pair} B each) exceeds "
             f"candidate_budget={candidate_budget:,} "
-            f"(= {pair_budget:,} pairs).  Lower nprobe "
-            f"(<= {fit} fits), thin the probe set (raise "
+            f"(= {pair_budget:,} pairs).  Thin the probe set (raise "
             f"PROBE_MOD), or re-run with on_budget='degrade' to "
-            f"take the largest nprobe that fits (recall traded "
-            f"for scan volume)."
+            f"take the largest nprobe that fits (<= {fit} fits; recall "
+            f"traded for scan volume)."
         )
     return k_clusters, min(nprobe, fit)
 
 
 def ivf_topk(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int | None = None,
-    k_clusters: int | str = "auto",
-    iters: int = 2,
-    nprobe: int | str = "auto",
-    k: int = 3,
     candidate_budget: int | None = None,
     on_budget: str = "error",
     probe_filter=None,
 ) -> DataFrame:
-    """IVF approximate top-``k``: deterministic mini k-means (md5-seeded
-    init, ``iters`` fixed Lloyd iterations, centroids rounded at 6 dp for
-    cross-engine reproducibility) builds inverted lists; each probe (ids
+    """IVF approximate top-``TOPK`` over ``emb``'s (vec_id, embedding):
+    deterministic mini k-means (md5-seeded init, ``IVF_ITERS`` fixed Lloyd
+    iterations, centroids rounded at 6 dp for cross-engine
+    reproducibility) builds inverted lists; each probe (ids
     ``% PROBE_MOD == 0``) scans only its ``nprobe`` nearest lists and
     re-ranks by exact cosine.
 
@@ -915,11 +883,10 @@ def ivf_topk(
     pathologically tiny corpus can leave a bucket empty — then there are
     simply fewer lists, identically in both engines.
 
-    ``k_clusters='auto'`` (default) derives k ~ sqrt(N) from one plan-time
-    count (see :func:`adaptive_k_clusters`) so neither the Lloyd
-    assignment (O(N*k)) nor the probe scan (O(N/k * probes)) goes
-    quadratic as the corpus grows; the oracle derives the identical k in
-    SQL.  Pass an int to pin it.
+    ``k_clusters`` is derived as k ~ sqrt(N) from one plan-time count (see
+    :func:`adaptive_k_clusters`) so neither the Lloyd assignment (O(N*k))
+    nor the probe scan (O(N/k * probes)) goes quadratic as the corpus
+    grows; the oracle derives the identical k in SQL.
 
     ``dims=None`` (default) probes the ACTUAL vector width and covers it
     fully — self-dots, centroid distances, Lloyd means and the final
@@ -927,7 +894,7 @@ def ivf_topk(
     ``list_dot_product``.  A pinned ``dims`` that disagrees with the data
     raises rather than silently truncating the arithmetic.
 
-    ``nprobe='auto'`` (default) derives ``ceil(11 k / (4 ⌊log2 k⌋))`` —
+    ``nprobe`` is derived as ``ceil(11 k / (4 ⌊log2 k⌋))`` —
     the recall-targeted rule measured to land recall@3 ≥ 0.8 on the
     isotropic synthetic corpus at sf0.01, sf1 AND sf10
     (:func:`adaptive_nprobe`, curves in ``RECALL_IVF_r13.json``; the
@@ -940,11 +907,9 @@ def ivf_topk(
     from the same counts the auto-k derivation already pays.  At gate
     SFs the projection is tiny, so a physical budget never binds there
     and the oracle twin stays bit-exact."""
-    base, dims, n_rows = _quantizer_setup(emb, id_col, vec_col, dims, "ivf_topk")
-    k_clusters, nprobe = _ivf_params(
-        n_rows, dims, k, k_clusters, nprobe, candidate_budget, on_budget
-    )
-    cent_rows, lists = _kmeans_build(base, dims, k_clusters, iters)
+    base, dims, n_rows = _quantizer_setup(emb, dims, "ivf_topk")
+    k_clusters, nprobe = _ivf_params(n_rows, dims, candidate_budget, on_budget)
+    cent_rows, lists = _kmeans_build(base, dims, k_clusters)
 
     if n_rows * (dims * 8 + 32) > IVF_MAX_LIST_BYTES:
         # skew guard (r13 review; decoupled from candidate_budget in r14 —
@@ -970,9 +935,8 @@ def ivf_topk(
                 f"ivf_topk: largest inverted list holds {biggest:,} vectors "
                 f"(~{biggest * (dims * 8 + 32) / 2**30:.1f} GiB as one "
                 f"cogroup task) — the quantizer collapsed on this corpus. "
-                f"Raise k_clusters (smaller lists) or deduplicate the "
-                f"embedding column first; nprobe degrade cannot shrink a "
-                f"single list."
+                f"Deduplicate the embedding column first; nprobe degrade "
+                f"cannot shrink a single list."
             )
 
     # probe_filter (a Column-predicate callable over the probe id) thins
@@ -1006,13 +970,13 @@ def ivf_topk(
     # the global window then takes the exact top-k.
     def _score(probes_pdf, members_pdf):
         if probes_pdf.empty or members_pdf.empty:  # a side may lack columns
-            return _cosine_topk((), (), (), (), k)
+            return _cosine_topk((), (), (), (), TOPK)
         return _cosine_topk(
             probes_pdf["pvec"].to_numpy(),
             probes_pdf["probe_id"].to_numpy(),
             members_pdf["vec"].to_numpy(),
             members_pdf["vid"].to_numpy(),
-            k,
+            TOPK,
         )
 
     local = (
@@ -1020,7 +984,7 @@ def ivf_topk(
         .cogroup(lists.select("cid", "vid", "vec").groupBy("cid"))
         .applyInPandas(_score, _KERNEL_SCHEMA)
     )
-    return _rank_topk(_restore_nan(local), k)
+    return _rank_topk(_restore_nan(local), TOPK)
 
 
 #: the oracle-side rounded squared-distance template shared by the
@@ -1031,13 +995,7 @@ _DIST_SQL = (
 )
 
 
-def _kmeans_ctes(
-    table: str,
-    id_col: str,
-    vec_col: str,
-    k_clusters: int | str,
-    iters: int,
-) -> list[str]:
+def _kmeans_ctes() -> list[str]:
     """The shared oracle CTE prefix (base → kq → cent0 → Lloyd rounds →
     lists) mirroring :func:`_kmeans_build` — one definition so
     :func:`ivf_topk_oracle_sql` and :func:`kmeans_coverage_sample_oracle_sql`
@@ -1064,16 +1022,9 @@ def _kmeans_ctes(
 )"""
 
     ctes = [
-        f"""base AS (
-  SELECT {id_col} AS vid, CAST({vec_col} AS DOUBLE[]) AS vec
-  FROM {_valid_sql(table, id_col, vec_col, cosine=True)}
-)""",
-        (
-            "kq AS (SELECT " + adaptive_k_sql("(SELECT count(*) FROM base)")
-            + " AS kk)"
-            if k_clusters == "auto"
-            else f"kq AS (SELECT {k_clusters} AS kk)"
-        ),
+        _BASE_CTE,
+        "kq AS (SELECT " + adaptive_k_sql("(SELECT count(*) FROM base)")
+        + " AS kk)",
         f"""cent0 AS (
   SELECT CAST({hash60_sql("md5(CAST(vid AS VARCHAR))")} % (SELECT kk FROM kq)
               AS INT) AS cid,
@@ -1082,45 +1033,33 @@ def _kmeans_ctes(
   FROM base GROUP BY 1
 )""",
     ]
-    for i in range(iters):
+    for i in range(IVF_ITERS):
         ctes.append(assign_cte(f"assign{i}", f"cent{i}"))
         ctes.append(cent_cte(f"cent{i + 1}", f"assign{i}"))
-    ctes.append(assign_cte("lists", f"cent{iters}"))
+    ctes.append(assign_cte("lists", f"cent{IVF_ITERS}"))
     return ctes
 
 
-def ivf_topk_oracle_sql(
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k_clusters: int | str = "auto",
-    iters: int = 2,
-    nprobe: int | str = "auto",
-    k: int = 3,
-) -> str:
+def ivf_topk_oracle_sql() -> str:
     """DuckDB twin of :func:`ivf_topk` — identical init ordering, Lloyd
-    iteration count, centroid/distance rounding, and tie-breaks; in auto
-    mode k is derived from count(*) by the same integer chain
+    iteration count, centroid/distance rounding, and tie-breaks; k is
+    derived from count(*) by the same integer chain
     (:func:`adaptive_k_sql`) and nprobe by :func:`adaptive_nprobe_sql`
-    (mirroring the Spark default — both sides pure integer)."""
-    ctes = _kmeans_ctes(table, id_col, vec_col, k_clusters, iters)
+    (both sides pure integer)."""
+    ctes = _kmeans_ctes()
     pd = _DIST_SQL.format(v="p.pvec", c="c.cvec")
     ctes.append(
         f"""probes AS (
   SELECT vid AS probe_id, vec AS pvec FROM base WHERE vid % {PROBE_MOD} = 0
 )"""
     )
-    nprobe_sql = (
-        adaptive_nprobe_sql("(SELECT kk FROM kq)")
-        if nprobe == "auto"
-        else str(nprobe)
-    )
+    nprobe_sql = adaptive_nprobe_sql("(SELECT kk FROM kq)")
     ctes.append(
         f"""pc AS (
   SELECT probe_id, pvec, cid FROM (
     SELECT p.probe_id, p.pvec, c.cid,
       row_number() OVER (PARTITION BY p.probe_id ORDER BY {pd}, c.cid) AS rnn
-    FROM probes p CROSS JOIN cent{iters} c)
+    FROM probes p CROSS JOIN cent{IVF_ITERS} c)
   WHERE rnn <= least({nprobe_sql}, (SELECT kk FROM kq))
 )"""
     )
@@ -1131,21 +1070,16 @@ def ivf_topk_oracle_sql(
   FROM pc JOIN lists a ON pc.cid = a.cid AND pc.probe_id != a.vid
 )"""
     )
-    ctes.append(_ranked_topk_sql("cand", k))
+    ctes.append(_ranked_topk_sql("cand", TOPK))
     return "WITH " + ",\n".join(ctes)
 
 
 def kmeans_coverage_sample(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int | None = None,
-    k_clusters: int | str = "auto",
-    iters: int = 2,
     per_cluster: int = 3,
     order: str = "representative",
 ) -> DataFrame:
-    """Diversity-aware subset selection over an embedding column — the
+    """Diversity-aware subset selection over ``emb``'s (vec_id, embedding) — the
     coverage-sampling step of a training-data pipeline (pick a bounded,
     spread-out subset instead of a uniform random one).
 
@@ -1184,23 +1118,19 @@ def kmeans_coverage_sample(
         # not _probe_width's error, and not createDataFrame([])'s opaque
         # "can not infer schema from empty dataset" (r13 advice item)
         return emb.select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.lit(None).cast("int").alias("cid"),
             F.lit(None).cast("long").alias("dist_e6"),
             F.lit(None).cast("int").alias("pick_rank"),
         ).filter(F.lit(False))
 
     try:
-        base, dims, n_rows = _quantizer_setup(
-            emb, id_col, vec_col, dims, "kmeans_coverage_sample"
-        )
+        base, dims, n_rows = _quantizer_setup(emb, None, "kmeans_coverage_sample")
     except ValueError:
-        if _valid(emb, id_col, vec_col, cosine=True).isEmpty():
+        if _valid(emb, "vec_id", "embedding", cosine=True).isEmpty():
             return _empty()
         raise
-    if k_clusters == "auto":
-        k_clusters = adaptive_k_clusters(n_rows)
-    cent_rows, lists = _kmeans_build(base, dims, k_clusters, iters)
+    cent_rows, lists = _kmeans_build(base, dims, adaptive_k_clusters(n_rows))
     if not cent_rows:
         return _empty()
     sess = emb.sparkSession
@@ -1221,7 +1151,7 @@ def kmeans_coverage_sample(
         scored.withColumn("pick_rank", F.row_number().over(w))
         .filter(F.col("pick_rank") <= per_cluster)
         .select(
-            F.col("vid").alias(id_col),
+            F.col("vid").alias("vec_id"),
             "cid",
             fixed("dist", 6).alias("dist_e6"),
             "pick_rank",
@@ -1229,25 +1159,18 @@ def kmeans_coverage_sample(
     )
 
 
-def kmeans_coverage_sample_oracle_sql(
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k_clusters: int | str = "auto",
-    iters: int = 2,
-    per_cluster: int = 3,
-    order: str = "representative",
-) -> str:
-    """DuckDB twin of :func:`kmeans_coverage_sample` — the quantizer CTEs
-    come from the same :func:`_kmeans_ctes` builder the IVF oracle uses,
-    then one join to the final centroids + one window."""
+def kmeans_coverage_sample_oracle_sql(order: str = "representative") -> str:
+    """DuckDB twin of :func:`kmeans_coverage_sample` at its default three
+    rows per cluster — the quantizer CTEs come from the same
+    :func:`_kmeans_ctes` builder the IVF oracle uses, then one join to the
+    final centroids + one window."""
     direction = "ASC" if order == "representative" else "DESC"
-    ctes = _kmeans_ctes(table, id_col, vec_col, k_clusters, iters)
+    ctes = _kmeans_ctes()
     d = _DIST_SQL.format(v="a.vec", c="c.cvec")
     ctes.append(
         f"""scored AS (
   SELECT a.vid, a.cid, {d} AS dist
-  FROM lists a JOIN cent{iters} c ON a.cid = c.cid
+  FROM lists a JOIN cent{IVF_ITERS} c ON a.cid = c.cid
 )"""
     )
     ctes.append(
@@ -1260,52 +1183,39 @@ def kmeans_coverage_sample_oracle_sql(
     body = ",\n".join(ctes)
     return (
         f"WITH {body}\n"
-        f"SELECT vid AS {id_col}, cid, "
+        "SELECT vid AS vec_id, cid, "
         f"{fixed_sql('dist', 6)} AS dist_e6, "
-        f"pick_rank FROM picked WHERE pick_rank <= {per_cluster}"
+        "pick_rank FROM picked WHERE pick_rank <= 3"
     )
 
 
 def embedding_neardup_pairs(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 32,
     n_bits: int | str = "auto",
     threshold: float = 0.3,
-    target_occupancy: int = 2 * LSH_TARGET_OCCUPANCY,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (dedup family): LSH-bucketed
-    candidate generation + exact cosine verification at ``threshold``.
-    Returns (id_a, id_b, cosine) with id_a < id_b.  ``dims`` is the
-    signature width; verification covers the probed full vector width.
+    """Embedding-cosine near-duplicate pairs (dedup family) over ``emb``'s
+    (vec_id, embedding): LSH-bucketed candidate generation over an
+    ``LSH_SIG_DIMS``-wide signature + exact cosine verification at
+    ``threshold`` over the probed full vector width.  Returns (id_a, id_b,
+    cosine) with id_a < id_b.
 
     ``n_bits='auto'`` (see :func:`lsh_topk`): occupancy-targeted width so
-    the candidate stream stays linear in corpus size; the dedup default
-    targets 2x the top-k occupancy because recall matters more than
-    bucket size here.  Pass an int to pin the width."""
+    the candidate stream stays linear in corpus size; it targets 2x the
+    top-k occupancy because recall matters more than bucket size here.
+    Pass an int to pin the width."""
     return _lsh_bucket_pairs(
-        emb, id_col, vec_col, dims, n_bits, target_occupancy,
+        emb, LSH_SIG_DIMS, n_bits, 2 * LSH_TARGET_OCCUPANCY,
         lambda a, b: a < b,
     ).filter(F.col("cosine") >= threshold)
 
 
-def embedding_neardup_oracle_sql(
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 32,
-    n_bits: int | str = "auto",
-    threshold: float = 0.3,
-    target_occupancy: int = 2 * LSH_TARGET_OCCUPANCY,
-) -> str:
+def embedding_neardup_oracle_sql(threshold: float = 0.3) -> str:
+    """DuckDB twin of :func:`embedding_neardup_pairs` at the auto width."""
     cos = _cosine_sql("a.vec", "b.vec")
     return f"""
-WITH base AS (
-  SELECT {id_col} AS vid, CAST({vec_col} AS DOUBLE[]) AS vec
-  FROM {_valid_sql(table, id_col, vec_col, cosine=True)}
-),
-{_sigs_cte("base", dims, n_bits, target_occupancy)}
+WITH {_BASE_CTE},
+{_sigs_cte(2 * LSH_TARGET_OCCUPANCY)}
 SELECT a.vid AS id_a, b.vid AS id_b, {cos} AS cosine
 FROM sigs a JOIN sigs b ON a.bucket = b.bucket AND a.vid < b.vid
 WHERE {cos} >= {threshold}
@@ -1397,14 +1307,13 @@ def random_projection_oracle_sql(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     out_dims: int = 8,
-    salt: str = "rp",
 ) -> str:
-    """DuckDB twin of :func:`random_projection` — identical md5-parity
-    signs (0-based indices in the hash string) and identical e9
-    quantization before the integer sum."""
+    """DuckDB twin of :func:`random_projection` at its default salt
+    ``'rp'`` — identical md5-parity signs (0-based indices in the hash
+    string) and identical e9 quantization before the integer sum."""
     if out_dims < 1:
         raise ValueError(f"out_dims must be >= 1, got {out_dims}")
-    h = hash60_sql(f"'{salt}|' || (i - 1) || '|' || j")
+    h = hash60_sql("'rp|' || (i - 1) || '|' || j")
     sign = f"CASE WHEN {h} % 2 = 0 THEN 1 ELSE -1 END"
     return f"""
 WITH comps AS (

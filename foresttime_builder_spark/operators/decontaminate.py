@@ -46,26 +46,25 @@ def contamination(
     train: DataFrame,
     eval_: DataFrame,
     n: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """Per contaminated train document: how many distinct n-grams collide
-    with the eval set, and how many distinct eval documents are hit.
+    """Per contaminated train document: how many distinct n-grams of its
+    ``text`` collide with the eval set, and how many distinct eval
+    documents are hit.
 
-    Returns ``(id_col, n_collided_grams, n_eval_docs)`` — only documents
+    Returns ``(doc_id, n_collided_grams, n_eval_docs)`` — only documents
     with at least one collision appear.
     """
     grams = lambda df: df.select(
-        F.col(id_col), words(text_col).alias("_toks")
+        F.col("doc_id"), words("text").alias("_toks")
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(token_ngrams_from_tokens(F.col("_toks"), n)).alias("gram"),
     ).distinct()
-    ev = grams(eval_).withColumnRenamed(id_col, "eval_doc")
+    ev = grams(eval_).withColumnRenamed("doc_id", "eval_doc")
     tr = grams(train)
     return (
         tr.join(F.broadcast(ev), "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.countDistinct("gram").alias("n_collided_grams"),
             F.countDistinct("eval_doc").alias("n_eval_docs"),

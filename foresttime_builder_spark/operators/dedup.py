@@ -53,11 +53,12 @@ def tokens(text: Column | str) -> Column:
     return F.array_distinct(words(text))
 
 
-def char_ngrams(text: str, n: int = 3) -> Column:
-    """Distinct character n-gram (shingle) set of a text column — the
+def char_ngrams(text: str) -> Column:
+    """Distinct character trigram (shingle) set of a text column — the
     n-gram flavor of set-similarity dedup (vs whitespace tokens). SQL-text
     construction: one JVM round trip, and `sequence` is guarded because
     Spark's sequence(1, 0) yields a DESCENDING [1, 0], not empty."""
+    n = 3
     return F.expr(
         f"CASE WHEN length(`{text}`) < {n} THEN array() "
         f"ELSE array_distinct(transform(sequence(1, length(`{text}`) - {n - 1}), "

@@ -40,6 +40,8 @@ from foresttime_builder_spark.operators.cache import release_on_gc
 __all__ = ["dsir_logweights", "dsir_logweights_oracle_sql"]
 
 _MAX_BROADCAST_BUCKETS = 4_000_000  # ~32 MB of (bigint, bigint, bigint) rows
+#: default feature buckets (the paper's 10k) and add-k smoothing constant
+N_BUCKETS, ADD_K = 10_000, 0.5
 
 
 def _check(n_buckets: int, add_k: float) -> None:
@@ -60,8 +62,8 @@ def dsir_logweights(
     id_col: str,
     text_col: str,
     target_col: str,
-    n_buckets: int = 10_000,
-    add_k: float = 0.5,
+    n_buckets: int = N_BUCKETS,
+    add_k: float = ADD_K,
 ) -> DataFrame:
     """Per-document DSIR importance log-weight (e6-quantized BIGINT).
 
@@ -159,17 +161,14 @@ def dsir_logweights_oracle_sql(
     text_col: str,
     table: str,
     target_expr: str,
-    n_buckets: int = 10_000,
-    add_k: float = 0.5,
 ) -> str:
-    """DuckDB twin of :func:`dsir_logweights` — identical md5 bucket
-    hash, identical smoothing constants via ``repr``, identical e6
-    quantization before the per-document sum.  ``target_expr`` is a SQL
-    boolean over ``table``'s columns."""
-    _check(n_buckets, add_k)
-    kb = repr(float(add_k) * n_buckets)
-    h_uni = hash60_sql("concat('u|', w)") + f" % {n_buckets}"
-    h_bi = hash60_sql("concat('b|', w1, ' ', w2)") + f" % {n_buckets}"
+    """DuckDB twin of :func:`dsir_logweights` at the default buckets and
+    smoothing — identical md5 bucket hash, identical smoothing constants
+    via ``repr``, identical e6 quantization before the per-document sum.
+    ``target_expr`` is a SQL boolean over ``table``'s columns."""
+    kb = repr(float(ADD_K) * N_BUCKETS)
+    h_uni = hash60_sql("concat('u|', w)") + f" % {N_BUCKETS}"
+    h_bi = hash60_sql("concat('b|', w1, ' ', w2)") + f" % {N_BUCKETS}"
     return f"""
 WITH docs AS (
   SELECT {id_col}, CAST(({target_expr}) AS BOOLEAN) AS tgt,
@@ -199,8 +198,8 @@ WITH docs AS (
 ), scored AS (
   SELECT d.{id_col}, d.cnt,
          d.cnt * CAST(floor(
-           (ln((m.cnt_t + {add_k!r}) / (t.T + {kb}))
-            - ln((m.cnt_r + {add_k!r}) / (t.R + {kb}))) * 1000000
+           (ln((m.cnt_t + {ADD_K!r}) / (t.T + {kb}))
+            - ln((m.cnt_r + {ADD_K!r}) / (t.R + {kb}))) * 1000000
          ) AS BIGINT) AS w_e6
   FROM doc_bkt d JOIN model m USING (bkt) CROSS JOIN totals t
 )

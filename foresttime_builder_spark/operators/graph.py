@@ -391,7 +391,6 @@ def dedup_finalize(
     candidate_budget: int | None = None,
     on_budget: str = "error",
     clusters: DataFrame | None = None,
-    degrade_budget: int | None = None,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Dedup FINALIZE — keep exactly one representative per near-dup
@@ -433,7 +432,6 @@ def dedup_finalize(
             strategy=strategy,
             candidate_budget=candidate_budget,
             on_budget=on_budget,
-            degrade_budget=degrade_budget,
             pairs=pairs,
         )
     toks = df.select(id_col, F.size(words(text_col)).alias("n_tokens"))

@@ -33,12 +33,15 @@ from foresttime_builder_spark.functions.tokens import words, words_sql
 
 __all__ = ["ngram_lm_score", "ngram_lm_score_oracle_sql"]
 
+#: default add-k smoothing constant
+ADD_K = 0.1
+
 
 def ngram_lm_score(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    add_k: float = 0.1,
+    add_k: float = ADD_K,
 ) -> DataFrame:
     """Smoothed bigram log-prob totals per document.
 
@@ -86,16 +89,10 @@ def ngram_lm_score(
     )
 
 
-def ngram_lm_score_oracle_sql(
-    id_col: str,
-    text_col: str,
-    table: str,
-    add_k: float = 0.1,
-) -> str:
-    """DuckDB twin of :func:`ngram_lm_score` — identical smoothing
-    constant via ``repr``, identical e6 quantization before the sum."""
-    if add_k <= 0:
-        raise ValueError(f"add_k must be positive, got {add_k}")
+def ngram_lm_score_oracle_sql(id_col: str, text_col: str, table: str) -> str:
+    """DuckDB twin of :func:`ngram_lm_score` at the default smoothing —
+    identical constant via ``repr``, identical e6 quantization before the
+    sum."""
     return f"""
 WITH docs AS (
   SELECT {id_col}, {words_sql(text_col)} AS ts
@@ -115,7 +112,7 @@ WITH docs AS (
   FROM (SELECT unnest({words_sql(text_col)}) AS w FROM {table})
 ), scored AS (
   SELECT b.{id_col},
-         CAST(floor(ln((c2.c2 + {add_k!r}) / (c1.c1 + {add_k!r} * vocab.V))
+         CAST(floor(ln((c2.c2 + {ADD_K!r}) / (c1.c1 + {ADD_K!r} * vocab.V))
                     * 1000000) AS BIGINT) AS lp_e6
   FROM bigrams b
   JOIN c2 USING (w1, w2)

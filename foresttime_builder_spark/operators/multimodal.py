@@ -40,10 +40,10 @@ FEATURES_SCHEMA = (
 )
 
 
-def with_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Synthesize a binary payload column from text (the testdata has no
+def with_payload(df: DataFrame) -> DataFrame:
+    """Synthesize a binary payload column from ``text`` (the testdata has no
     real media; production data arrives with the payload already binary)."""
-    return df.withColumn("payload", F.encode(F.col(text_col), "UTF-8"))
+    return df.withColumn("payload", F.encode(F.col("text"), "UTF-8"))
 
 
 def _fake_decode(batch: pd.DataFrame) -> pd.DataFrame:

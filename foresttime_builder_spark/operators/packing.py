@@ -31,11 +31,10 @@ def pack_sequences(
     length_col: str,
     capacity: int,
     group_cols: Sequence[str] = (),
-    id_col: str = "doc_id",
     n_shards: int = 4,
 ) -> DataFrame:
     """Assign each row a ``bin_id`` within its ``(group_cols..., shard)``
-    stream such that consecutive rows (by ``id_col``) share a bin while
+    stream such that consecutive rows (by ``doc_id``) share a bin while
     their lengths fit in ``capacity``; an item longer than ``capacity``
     opens (and overflows) its own bin.
 
@@ -45,9 +44,9 @@ def pack_sequences(
     # id-keyed deterministic op: NULL ids have no shard/sort position
     # (and NULL-order differs between engines) — excluded identically in
     # the oracle twins, same contract as the samplers
-    df = df.filter(F.col(id_col).isNotNull())
-    shard = (F.col(id_col) % n_shards).alias("shard")
-    items = df.select(*group_cols, shard, F.struct(F.col(id_col).alias("id"), F.col(length_col).cast("long").alias("n")).alias("it"))
+    df = df.filter(F.col("doc_id").isNotNull())
+    shard = (F.col("doc_id") % n_shards).alias("shard")
+    items = df.select(*group_cols, shard, F.struct(F.col("doc_id").alias("id"), F.col(length_col).cast("long").alias("n")).alias("it"))
     streams = items.groupBy(*group_cols, "shard").agg(
         F.sort_array(F.collect_list("it")).alias("its")
     )
@@ -81,7 +80,7 @@ def pack_sequences(
         F.explode(F.aggregate("its", zero, step, lambda acc: acc.out)).alias("p"),
     )
     return packed.select(
-        F.col("p.id").alias(id_col),
+        F.col("p.id").alias("doc_id"),
         *group_cols,
         "shard",
         F.col("p.n").alias("n_tokens"),
@@ -93,7 +92,6 @@ def length_bucket_batches(
     df: DataFrame,
     length_col: str,
     token_budget: int,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Length-bucketed batch shaping — the padding-minimizing batching used
     for training/inference serving: documents are grouped into power-of-two
@@ -112,7 +110,7 @@ def length_bucket_batches(
       member pads to at most this);
     - ``capacity = max(1, floor(token_budget / cap_len))`` docs per batch;
     - ``batch_in_bucket = floor((row_number - 1) / capacity) + 1`` in
-      deterministic ``id_col`` order — one hash shuffle on the bucket key.
+      deterministic ``doc_id`` order — one hash shuffle on the bucket key.
 
     Guarantees (each batch, all integer algebra with an exact SQL twin):
     ``members <= capacity``, padded cost ``members * cap_len <=
@@ -123,22 +121,22 @@ def length_bucket_batches(
     longer than ``token_budget`` always lands alone (its batch total then
     exceeds the budget by exactly that document's own length, the
     unavoidable case).  Scale: one shuffle; buckets are ~log2(max_len)
-    partitions, so pre-shard by a hash of ``id_col`` (as in
+    partitions, so pre-shard by a hash of ``doc_id`` (as in
     :func:`pack_sequences`) if a single bucket dominates a huge corpus.
     """
     from pyspark.sql import Window as W
 
-    df = df.filter(F.col(id_col).isNotNull())  # see pack_sequences
+    df = df.filter(F.col("doc_id").isNotNull())  # see pack_sequences
     n = F.col(length_col).cast("long")
     bucket = (F.length(F.bin(n)) - 1).alias("bucket")
-    base = df.select(F.col(id_col), n.alias("n_tokens"), bucket).filter(
+    base = df.select(F.col("doc_id"), n.alias("n_tokens"), bucket).filter(
         F.col("n_tokens") > 0
     )
     cap_len = F.expr("shiftleft(CAST(1 AS BIGINT), bucket + 1)") - 1
     capacity = F.greatest(
         F.lit(1).cast("long"), F.floor(F.lit(token_budget) / cap_len)
     )
-    rn = F.row_number().over(W.partitionBy("bucket").orderBy(id_col))
+    rn = F.row_number().over(W.partitionBy("bucket").orderBy("doc_id"))
     return base.withColumn(
         "batch_in_bucket",
         (F.floor((rn - 1) / capacity) + 1).cast("long"),
@@ -146,16 +144,16 @@ def length_bucket_batches(
 
 
 def length_bucket_batches_oracle_sql(
-    table: str, length_expr: str, token_budget: int, id_col: str = "doc_id"
+    table: str, length_expr: str, token_budget: int
 ) -> str:
     """DuckDB twin of :func:`length_bucket_batches` — same bucket /
-    padding-ceiling / capacity integer chain, same ``id_col`` order."""
+    padding-ceiling / capacity integer chain, same ``doc_id`` order."""
     return f"""
 WITH base AS (
-  SELECT {id_col}, CAST({length_expr} AS BIGINT) AS n_tokens,
+  SELECT doc_id, CAST({length_expr} AS BIGINT) AS n_tokens,
          length(bin(CAST({length_expr} AS BIGINT))) - 1 AS bucket
   FROM {table}
-  WHERE CAST({length_expr} AS BIGINT) > 0 AND {id_col} IS NOT NULL
+  WHERE CAST({length_expr} AS BIGINT) > 0 AND doc_id IS NOT NULL
 ),
 numbered AS (
   SELECT *,
@@ -163,10 +161,10 @@ numbered AS (
              CAST(floor({token_budget} /
                   ((CAST(1 AS BIGINT) << (bucket + 1)) - 1)) AS BIGINT))
       AS capacity,
-    row_number() OVER (PARTITION BY bucket ORDER BY {id_col}) AS rn
+    row_number() OVER (PARTITION BY bucket ORDER BY doc_id) AS rn
   FROM base
 )
-SELECT {id_col}, n_tokens, bucket,
+SELECT doc_id, n_tokens, bucket,
        CAST(floor((rn - 1) / capacity) + 1 AS BIGINT) AS batch_in_bucket
 FROM numbered
 """

@@ -198,13 +198,12 @@ def equidepth_histogram_sampled(
     n_buckets: int = 20,
     scale: int = 100,
     fraction: float = 0.1,
-    salt: str = "edh",
     max_sample_rows: int = 50_000_000,
 ) -> DataFrame:
     """Equi-depth histogram over a DETERMINISTIC hash sample — the 100 TB
     variant :func:`equidepth_histogram`'s docstring promises: the exact
     form's ntile is a global sort of every row; this sorts only the
-    ``fraction`` of rows whose md5-derived ``hash60(salt:id)`` falls below
+    ``fraction`` of rows whose md5-derived ``hash60('edh:' || id)`` falls below
     the threshold (content-independent, identical in both engines, stable
     under appends/repartitioning — the `split_assign` convention).
 
@@ -246,7 +245,7 @@ def equidepth_histogram_sampled(
     from pyspark.sql import Window as _W
 
     cut = int(fraction * float((1 << 60) - 1))
-    h = hash60(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
+    h = hash60(F.concat(F.lit("edh:"), F.col(id_col).cast("string")))
     v = F.floor(F.col(value_col) * scale).cast("long")
     base = (
         df.select(v.alias("_v"), F.col(id_col).alias("_id"), h.alias("_h"))
@@ -278,7 +277,6 @@ def equidepth_histogram_sampled_oracle_sql(
     n_buckets: int = 20,
     scale: int = 100,
     fraction: float = 0.1,
-    salt: str = "edh",
 ) -> str:
     """DuckDB twin of :func:`equidepth_histogram_sampled` — identical md5
     hash threshold, ntile order, and estimate arithmetic.  The divisor is
@@ -292,7 +290,7 @@ def equidepth_histogram_sampled_oracle_sql(
     if not (0.0 < fraction <= 1.0):
         raise ValueError(f"fraction must be in (0, 1], got {fraction}")
     cut = int(fraction * float((1 << 60) - 1))
-    h = hash60_sql(f"'{salt}:' || CAST({id_col} AS VARCHAR)")
+    h = hash60_sql(f"'edh:' || CAST({id_col} AS VARCHAR)")
     return f"""
 WITH base AS (
   SELECT CAST(floor({value_col} * {scale}) AS BIGINT) AS v, {id_col} AS id

@@ -21,7 +21,7 @@ Scale posture (100 TB): two full scans of the corpus, both pruned to
    whole-stage-codegen'd, deliberately NOT a lambda higher-order function
    (interpreted HOFs measured 5-40x slower in this repo's sf10 runs).
 
-Engine parity: all scalar constants (k1, b, k1+1, 1-b) are computed ONCE
+Engine parity: all scalar constants (K1, B, K1+1, 1-B) are computed ONCE
 in Python and embedded via ``repr`` into BOTH the Spark plan and the
 DuckDB twin, so each engine parses the identical double; sums over terms
 are left-folded in the same order; integer tf/dl/N/df arithmetic is
@@ -42,6 +42,9 @@ from foresttime_builder_spark.functions.tokens import words, words_sql
 
 __all__ = ["bm25_scores", "bm25_scores_oracle_sql"]
 
+#: BM25 term-frequency saturation and document-length normalization
+K1, B = 1.2, 0.75
+
 
 def _check(query_terms: tuple[str, ...]) -> None:
     if not query_terms:
@@ -58,8 +61,6 @@ def bm25_scores(
     id_col: str,
     text_col: str,
     query_terms: tuple[str, ...],
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 score of every document against a fixed bag of query terms.
 
@@ -87,7 +88,7 @@ def bm25_scores(
     d = df.select(F.col(id_col), toks.alias("_t")).crossJoin(F.broadcast(stats))
     dl = F.size(F.col("_t"))
     # document-length normalizer, shared across terms
-    norm = F.lit(1.0 - b) + F.lit(b) * dl.cast("double") / F.col("_avgdl")
+    norm = F.lit(1.0 - B) + F.lit(B) * dl.cast("double") / F.col("_avgdl")
 
     def _tf(i: int) -> Column:
         # count of term i: built-in array ops, no lambda HOF
@@ -101,7 +102,7 @@ def bm25_scores(
 
     def _contrib(i: int) -> Column:
         tf = _tf(i).cast("double")
-        return _idf(i) * (tf * F.lit(k1 + 1.0)) / (tf + F.lit(k1) * norm)
+        return _idf(i) * (tf * F.lit(K1 + 1.0)) / (tf + F.lit(K1) * norm)
 
     score: Column = _contrib(0)
     hits: Column = _tf(0)
@@ -125,8 +126,6 @@ def bm25_scores_oracle_sql(
     text_col: str,
     table: str,
     query_terms: tuple[str, ...],
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> str:
     """DuckDB twin of :func:`bm25_scores` — identical constant doubles via
     ``repr``, identical left-fold order, identical idf/tf formulas."""
@@ -146,7 +145,7 @@ def bm25_scores_oracle_sql(
         i: f"(len(ts) - len(list_filter(ts, x -> x != '{t}')))"
         for i, t in enumerate(query_terms)
     }
-    norm = f"({1.0 - b!r} + {b!r} * CAST(len(ts) AS DOUBLE) / avgdl)"
+    norm = f"({1.0 - B!r} + {B!r} * CAST(len(ts) AS DOUBLE) / avgdl)"
     idf = {
         i: (
             f"ln(1.0 + (N - CAST(df{i} AS DOUBLE) + 0.5)"
@@ -156,8 +155,8 @@ def bm25_scores_oracle_sql(
     }
     contrib = {
         i: (
-            f"({idf[i]} * (CAST({tf[i]} AS DOUBLE) * {k1 + 1.0!r})"
-            f" / (CAST({tf[i]} AS DOUBLE) + {k1!r} * {norm}))"
+            f"({idf[i]} * (CAST({tf[i]} AS DOUBLE) * {K1 + 1.0!r})"
+            f" / (CAST({tf[i]} AS DOUBLE) + {K1!r} * {norm}))"
         )
         for i in tf
     }

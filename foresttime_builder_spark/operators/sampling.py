@@ -28,16 +28,20 @@ from foresttime_builder_spark.functions.encoding import hash60, hash60_sql
 #: hash60 values are 15 hex digits -> [0, 2^60)
 _MAX_HASH60 = (1 << 60) - 1
 
+#: the train/val/test split weights in basis points, and the hash salt of
+#: split_assign and stratified_split_exact
+SPLITS = (("train", 8000), ("val", 1000), ("test", 1000))
+SPLIT_SALT = "split-v1"
+
 
 def quota_sample(
     df: DataFrame,
     quotas: DataFrame,
     mix_col: str = "source",
-    id_col: str = "doc_id",
-    quota_col: str = "quota",
     prefilter_safety: float | None = None,
 ) -> DataFrame:
-    """Keep the ``quota`` lowest-hash rows of each ``mix_col`` group.
+    """Keep the ``quota`` lowest-hash rows (by ``doc_id``) of each
+    ``mix_col`` group.
 
     ``quotas`` is a small (mix_col, quota) dim — broadcast.  Output adds
     ``sample_rank`` (1-based hash rank within the source).
@@ -58,10 +62,10 @@ def quota_sample(
     # hash/rank — NULL md5 even ERRORS inside DuckDB's '0x' cast.  Ids
     # must also be unique per the documented precondition (duplicate ids
     # tie the (hash, id) order and make peer ranks engine-arbitrary).
-    df = df.filter(F.col(id_col).isNotNull())
-    h = hash60(F.col(id_col).cast("string"))
+    df = df.filter(F.col("doc_id").isNotNull())
+    h = hash60(F.col("doc_id").cast("string"))
     rank = F.row_number().over(
-        W.partitionBy(mix_col).orderBy(h.asc(), F.col(id_col).asc())
+        W.partitionBy(mix_col).orderBy(h.asc(), F.col("doc_id").asc())
     )
     # passthrough contract: every non-key column of the quotas dim survives
     # (q74 reads temperature_quotas' n_docs/weight downstream)
@@ -74,7 +78,7 @@ def quota_sample(
     if prefilter_safety is None:
         ranked = df.withColumn("sample_rank", rank)
         return ranked.join(F.broadcast(quotas), mix_col).filter(
-            F.col("sample_rank") <= F.col(quota_col)
+            F.col("sample_rank") <= F.col("quota")
         ).select(*out_cols)
 
     if prefilter_safety <= 0:
@@ -87,7 +91,7 @@ def quota_sample(
             F.lit(_MAX_HASH60),
             F.ceil(
                 F.lit(float(_MAX_HASH60))
-                * F.col(quota_col)
+                * F.col("quota")
                 * F.lit(prefilter_safety)
                 / F.col("_n_docs")
             ).cast("long"),
@@ -95,7 +99,7 @@ def quota_sample(
     )
     surv = df.join(F.broadcast(dim), mix_col).filter(h <= F.col("_thr"))
     kept = surv.withColumn("sample_rank", rank).filter(
-        F.col("sample_rank") <= F.col(quota_col)
+        F.col("sample_rank") <= F.col("quota")
     )
     # guard: a source undershot iff the cut kept fewer rows than the full
     # ranking would return. kept counts are <= quota per source, so this
@@ -106,7 +110,7 @@ def quota_sample(
         dim.join(kc, mix_col, "left")
         .filter(
             F.coalesce(F.col("_kept"), F.lit(0))
-            < F.least(F.col(quota_col), F.col("_n_docs"))
+            < F.least(F.col("quota"), F.col("_n_docs"))
         )
         .select(mix_col)
     )
@@ -114,7 +118,7 @@ def quota_sample(
         df.join(F.broadcast(undershot), mix_col, "semi")
         .withColumn("sample_rank", rank)
         .join(F.broadcast(quotas), mix_col)
-        .filter(F.col("sample_rank") <= F.col(quota_col))
+        .filter(F.col("sample_rank") <= F.col("quota"))
     )
     good = kept.join(F.broadcast(undershot), mix_col, "anti")
     return good.select(*out_cols).unionByName(redo.select(*out_cols))
@@ -123,12 +127,8 @@ def quota_sample(
 def split_assign(
     df: DataFrame,
     id_col: str = "doc_id",
-    splits: tuple[tuple[str, int], ...] = (
-        ("train", 8000),
-        ("val", 1000),
-        ("test", 1000),
-    ),
-    salt: str = "split-v1",
+    splits: tuple[tuple[str, int], ...] = SPLITS,
+    salt: str = SPLIT_SALT,
 ) -> DataFrame:
     """Deterministic train/val/test assignment: bucket each row by an
     engine-portable content-independent hash of ``(salt, id)`` into 10,000
@@ -164,35 +164,25 @@ def split_assign(
     return df.withColumn("split", expr)
 
 
-def split_assign_oracle_sql(
-    id_col: str = "doc_id",
-    splits: tuple[tuple[str, int], ...] = (
-        ("train", 8000),
-        ("val", 1000),
-        ("test", 1000),
-    ),
-    salt: str = "split-v1",
-) -> str:
-    """DuckDB CASE expression computing the identical ``split`` column."""
+def split_assign_oracle_sql() -> str:
+    """DuckDB CASE expression computing the identical ``split`` column of
+    ``doc_id`` at the default splits and salt."""
     bucket = (
-        hash60_sql(f"'{salt}:' || coalesce(CAST({id_col} AS VARCHAR), '<NULL>')")
+        hash60_sql(
+            f"'{SPLIT_SALT}:' || coalesce(CAST(doc_id AS VARCHAR), '<NULL>')"
+        )
         + " % 10000"
     )
     parts, cum = [], 0
-    for name, w in splits[:-1]:
+    for name, w in SPLITS[:-1]:
         cum += w
         parts.append(f"WHEN {bucket} < {cum} THEN '{name}'")
-    return f"CASE {' '.join(parts)} ELSE '{splits[-1][0]}' END"
+    return f"CASE {' '.join(parts)} ELSE '{SPLITS[-1][0]}' END"
 
 
-def upsample_to_quota(
-    df: DataFrame,
-    quotas: DataFrame,
-    mix_col: str = "source",
-    id_col: str = "doc_id",
-    quota_col: str = "quota",
-) -> DataFrame:
-    """Draw EXACTLY ``quota`` rows per source, repeating documents when a
+def upsample_to_quota(df: DataFrame, quotas: DataFrame) -> DataFrame:
+    """Draw EXACTLY ``quota`` rows per ``source`` (of ``quotas``' (source,
+    quota) dim), ranked by ``doc_id`` hash, repeating documents when a
     source is smaller than its quota — the "epoch upsampling" half of a
     training mix ("3.2 epochs of the small high-quality source") that
     :func:`quota_sample` (downsampling only) cannot express.
@@ -210,54 +200,48 @@ def upsample_to_quota(
     source is both giant and downsampled) plus an explode bounded by
     ``ceil(q/n)`` copies per row — output-size-bound, never more.
     """
-    df = df.filter(F.col(id_col).isNotNull())  # see quota_sample
-    h = hash60(F.col(id_col).cast("string"))
+    df = df.filter(F.col("doc_id").isNotNull())  # see quota_sample
+    h = hash60(F.col("doc_id").cast("string"))
     rank = F.row_number().over(
-        W.partitionBy(mix_col).orderBy(h.asc(), F.col(id_col).asc())
+        W.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
     )
-    counts = df.groupBy(mix_col).agg(F.count(F.lit(1)).alias("_n_docs"))
-    dim = quotas.join(counts, mix_col)
-    ranked = df.withColumn("sample_rank", rank).join(F.broadcast(dim), mix_col)
-    base = F.floor(F.col(quota_col) / F.col("_n_docs")).cast("long")
-    rem = F.col(quota_col) % F.col("_n_docs")
+    counts = df.groupBy("source").agg(F.count(F.lit(1)).alias("_n_docs"))
+    dim = quotas.join(counts, "source")
+    ranked = df.withColumn("sample_rank", rank).join(F.broadcast(dim), "source")
+    base = F.floor(F.col("quota") / F.col("_n_docs")).cast("long")
+    rem = F.col("quota") % F.col("_n_docs")
     n_copies = base + (F.col("sample_rank") <= rem).cast("long")
     return (
         ranked.filter(n_copies > 0)
         .withColumn("epoch", F.explode(F.sequence(F.lit(1).cast("long"), n_copies)))
-        .select(*df.columns, "sample_rank", quota_col, "epoch")
+        .select(*df.columns, "sample_rank", "quota", "epoch")
     )
 
 
-def upsample_to_quota_oracle_sql(
-    table: str,
-    quotas_sql: str,
-    mix_col: str = "source",
-    id_col: str = "doc_id",
-    quota_col: str = "quota",
-) -> str:
+def upsample_to_quota_oracle_sql(table: str, quotas_sql: str) -> str:
     """DuckDB twin of :func:`upsample_to_quota` (``quotas_sql`` is a
-    subquery yielding (mix_col, quota))."""
-    hash_sql = hash60_sql(f"CAST({id_col} AS VARCHAR)")
+    subquery yielding (source, quota))."""
+    hash_sql = hash60_sql("CAST(doc_id AS VARCHAR)")
     return f"""
 WITH ranked AS (
   SELECT t.*,
          row_number() OVER (
-           PARTITION BY {mix_col} ORDER BY {hash_sql} ASC, {id_col} ASC
+           PARTITION BY source ORDER BY {hash_sql} ASC, doc_id ASC
          ) AS sample_rank,
-         count(*) OVER (PARTITION BY {mix_col}) AS n_docs
+         count(*) OVER (PARTITION BY source) AS n_docs
   FROM {table} t
-  WHERE {id_col} IS NOT NULL
+  WHERE doc_id IS NOT NULL
 ), withq AS (
-  SELECT r.*, q.{quota_col}
-  FROM ranked r JOIN ({quotas_sql}) q USING ({mix_col})
+  SELECT r.*, q.quota
+  FROM ranked r JOIN ({quotas_sql}) q USING (source)
 )
 SELECT w.* EXCLUDE (n_docs), e.epoch
 FROM withq w,
      LATERAL (
        SELECT unnest(generate_series(
          1,
-         CAST(floor({quota_col} / n_docs)
-              + CASE WHEN sample_rank <= {quota_col} % n_docs THEN 1 ELSE 0 END
+         CAST(floor(quota / n_docs)
+              + CASE WHEN sample_rank <= quota % n_docs THEN 1 ELSE 0 END
               AS BIGINT)
        )) AS epoch
      ) e
@@ -359,7 +343,6 @@ def weighted_sample(
     group_col: str,
     weight_col: str,
     k: int,
-    salt: str = "ws",
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement, k per group — the
     Efraimidis-Spirakis A-ES scheme (2006): each row draws a reproducible
@@ -368,7 +351,7 @@ def weighted_sample(
     The mixing-pipeline primitive for "sample 10k docs per source,
     proportional to quality weight, reproducibly".
 
-    Engine parity: u = hash60(salt:id) / 2^60 clamped into
+    Engine parity: u = hash60('ws:' || id) / 2^60 clamped into
     [2^-60, 1 - 2^-53] — the clamp matters at BOTH ends: near the top,
     double rounding would otherwise let u reach exactly 1.0 (key 0, an
     unconditional rank-1 winner regardless of weight); at the bottom,
@@ -392,7 +375,7 @@ def weighted_sample(
         raise ValueError(f"k must be >= 1, got {k}")
     u = F.greatest(
         F.least(
-            hash60(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
+            hash60(F.concat(F.lit("ws:"), F.col(id_col).cast("string")))
             / F.lit(2.0**60),
             F.lit(1.0 - 2.0**-53),
         ),
@@ -419,13 +402,12 @@ def weighted_sample_oracle_sql(
     weight_col: str,
     table: str,
     k: int,
-    salt: str = "ws",
 ) -> str:
     """DuckDB twin of :func:`weighted_sample` — identical u construction
     and ln(u)/w ranking."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    h = hash60_sql(f"'{salt}:' || CAST({id_col} AS VARCHAR)")
+    h = hash60_sql(f"'ws:' || CAST({id_col} AS VARCHAR)")
     u = (
         f"greatest(least({h} / {2.0**60!r}, {1.0 - 2.0**-53!r}), "
         f"{2.0**-60!r})"
@@ -451,15 +433,10 @@ def stratified_split_exact(
     df: DataFrame,
     id_col: str,
     stratum_col: str,
-    splits: tuple[tuple[str, int], ...] = (
-        ("train", 8000),
-        ("val", 1000),
-        ("test", 1000),
-    ),
-    salt: str = "split-v1",
+    splits: tuple[tuple[str, int], ...] = SPLITS,
 ) -> DataFrame:
     """EXACT stratified split: within every stratum, rows are ranked by
-    the deterministic (salt, id) hash and the rank range is carved by the
+    the deterministic (SPLIT_SALT, id) hash and the rank range is carved by the
     cumulative split weights — so each stratum's split counts are exact
     to the rounding of ``floor(n * cum_bp / 10000)``, not merely expected
     (the :func:`split_assign` hash-cell method is stable under appends
@@ -475,7 +452,7 @@ def stratified_split_exact(
     if total != 10_000:
         raise ValueError(f"split weights must sum to 10000 bp, got {total}")
     df = df.filter(F.col(id_col).isNotNull())  # see quota_sample
-    h = hash60(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
+    h = hash60(F.concat(F.lit(SPLIT_SALT + ":"), F.col(id_col).cast("string")))
     w = W.partitionBy(stratum_col).orderBy(h.asc(), F.col(id_col).asc())
     n = W.partitionBy(stratum_col)
     ranked = df.select(
@@ -499,27 +476,17 @@ def stratified_split_exact(
 
 
 def stratified_split_exact_oracle_sql(
-    id_col: str,
-    stratum_col: str,
-    table: str,
-    splits: tuple[tuple[str, int], ...] = (
-        ("train", 8000),
-        ("val", 1000),
-        ("test", 1000),
-    ),
-    salt: str = "split-v1",
+    id_col: str, stratum_col: str, table: str
 ) -> str:
-    """DuckDB twin of :func:`stratified_split_exact`."""
-    total = sum(w for _, w in splits)
-    if total != 10_000:
-        raise ValueError(f"split weights must sum to 10000 bp, got {total}")
-    h = hash60_sql(f"'{salt}:' || CAST({id_col} AS VARCHAR)")
+    """DuckDB twin of :func:`stratified_split_exact` at the default
+    splits."""
+    h = hash60_sql(f"'{SPLIT_SALT}:' || CAST({id_col} AS VARCHAR)")
     case = "CASE "
     cum = 0
-    for name, bp in splits[:-1]:
+    for name, bp in SPLITS[:-1]:
         cum += bp
         case += f"WHEN rk <= floor(n * {cum} / 10000) THEN '{name}' "
-    case += f"ELSE '{splits[-1][0]}' END"
+    case += f"ELSE '{SPLITS[-1][0]}' END"
     return f"""
 SELECT {id_col}, {stratum_col}, {case} AS split
 FROM (

@@ -82,18 +82,13 @@ FROM {table}
 """
 
 
-def canonicalize_url(
-    df: DataFrame, url_col: str, out_prefix: str = ""
-) -> DataFrame:
-    """Append ``{out_prefix}canon_url`` (scheme/www/query/fragment
-    stripped) and ``{out_prefix}host`` columns."""
+def canonicalize_url(df: DataFrame, url_col: str) -> DataFrame:
+    """Append ``canon_url`` (scheme/www/query/fragment stripped) and
+    ``host`` columns."""
     stripped = F.regexp_replace(F.col(url_col), _SCHEME_WWW, "")
     canon = F.regexp_replace(stripped, _QUERY_FRAGMENT, "")
     return df.withColumns(
-        {
-            f"{out_prefix}canon_url": canon,
-            f"{out_prefix}host": F.regexp_extract(stripped, _HOST, 0),
-        }
+        {"canon_url": canon, "host": F.regexp_extract(stripped, _HOST, 0)}
     )
 
 

@@ -94,23 +94,14 @@ def salted_join(
     on: Sequence[str],
     salt: int = 16,
     salt_from: Sequence[str] | None = None,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with the right side replicated ``salt`` times and the left
-    side scattered by a deterministic salt — no single reducer receives all
-    rows of a hot key.  Only sensible when ``right`` is too big to broadcast
-    but small enough to replicate ``salt``-fold (classic medium-dim case).
-
-    Only ``how`` in {'inner', 'left'} is supported: the construction
-    replicates every right row ``salt`` times, so any join shape that emits
-    unmatched RIGHT rows ('right'/'full'/right-semi/anti) would emit them
-    once per replica — structurally wrong, hence rejected."""
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"salted_join supports how='inner'|'left', got {how!r}: the "
-            "right side is replicated per salt, so shapes preserving "
-            "unmatched right rows would duplicate them"
-        )
+    """Inner equi-join with the right side replicated ``salt`` times and
+    the left side scattered by a deterministic salt — no single reducer
+    receives all rows of a hot key.  Only sensible when ``right`` is too
+    big to broadcast but small enough to replicate ``salt``-fold (classic
+    medium-dim case).  The construction replicates every right row
+    ``salt`` times, so a join shape that emits unmatched RIGHT rows
+    (right/full/anti) would emit them once per replica."""
     src = salt_from if salt_from is not None else [
         c for c in left.columns if c not in on
     ]
@@ -126,4 +117,4 @@ def salted_join(
     rexp = right.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
     )
-    return lsalted.join(rexp, [*on, "_salt"], how).drop("_salt")
+    return lsalted.join(rexp, [*on, "_salt"], "inner").drop("_salt")

@@ -10,7 +10,7 @@ inventory:
 1. emit every ``n``-token window of every document with its position
    (one ``posexplode``; rows ~ corpus token count — the same relation
    every shingle pipeline builds);
-2. a window hash that occurs in ``>= min_docs`` distinct documents is a
+2. a window hash that occurs in at least two distinct documents is a
    duplicated span (one hash-partitioned aggregation);
 3. per document, merge the surviving (possibly overlapping) spans with
    the classic running-max interval-union window trick and report the
@@ -48,12 +48,11 @@ def duplicated_span_coverage(
     id_col: str,
     text_col: str,
     n: int = 8,
-    min_docs: int = 2,
 ) -> DataFrame:
     """Per-document duplicated-substring statistics.
 
     Returns one row per input document: ``n_tokens``, ``n_dup_windows``
-    (windows of ``n`` tokens shared with >= ``min_docs-1`` other docs),
+    (windows of ``n`` tokens shared with at least one other doc),
     ``dup_token_cov`` (tokens covered by the union of those windows), and
     ``dup_cov_frac_e4``.
     """
@@ -88,7 +87,7 @@ def duplicated_span_coverage(
     dup_h = (
         wins.groupBy("h")
         .agg(F.count_distinct(F.col(id_col)).alias("nd"))
-        .filter(F.col("nd") >= min_docs)
+        .filter(F.col("nd") >= 2)
         .select("h")
     )
 
@@ -141,7 +140,7 @@ def duplicated_span_coverage(
 
 
 def duplicated_span_coverage_oracle_sql(
-    id_col: str, text_col: str, table: str, n: int = 8, min_docs: int = 2
+    id_col: str, text_col: str, table: str, n: int = 8
 ) -> str:
     """DuckDB twin of :func:`duplicated_span_coverage` — identical window
     inventory, hash, interval union, and fixed-point arithmetic."""
@@ -161,7 +160,7 @@ WITH base AS (
   FROM {table}
   WHERE len({toks}) >= {n}
 ), dup_h AS (
-  SELECT h FROM wins GROUP BY h HAVING count(DISTINCT {id_col}) >= {min_docs}
+  SELECT h FROM wins GROUP BY h HAVING count(DISTINCT {id_col}) >= 2
 ), spans AS (
   SELECT w.{id_col}, w.pos FROM wins w JOIN dup_h USING (h)
 ), islands AS (

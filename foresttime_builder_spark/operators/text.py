@@ -123,11 +123,13 @@ FROM {table}
 """
 
 
-def winnow_fingerprint(
-    df: DataFrame, id_col: str, text_col: str, k: int = 8, w: int = 4
-) -> DataFrame:
-    """Winnowing document fingerprints: hash every character ``k``-gram,
-    keep the minimum hash of each sliding window of ``w`` consecutive
+#: winnowing gram length (characters) and window (gram positions)
+WINNOW_K, WINNOW_W = 8, 4
+
+
+def winnow_fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Winnowing document fingerprints: hash every character ``WINNOW_K``-gram,
+    keep the minimum hash of each sliding window of ``WINNOW_W`` consecutive
     positions, then the distinct mins are the document's fingerprints.
 
     Spark-first shape (r12 rewrite): explode gram POSITIONS to rows, hash
@@ -150,6 +152,7 @@ def winnow_fingerprint(
     ``sequence()`` can arise)."""
     from pyspark.sql import Window as _W
 
+    k, w = WINNOW_K, WINNOW_W
     text = F.coalesce(F.col(text_col), F.lit(""))
     n_grams = F.greatest(F.length(text) - F.lit(k - 1), F.lit(0))
     # per-ROW semantics, like the HOF form: the fuzz corpora carry NULL
@@ -214,9 +217,8 @@ def winnow_fingerprint(
     return mins.unionByName(short)
 
 
-def winnow_fingerprint_oracle_sql(
-    id_col: str, text_col: str, table: str, k: int = 8, w: int = 4
-) -> str:
+def winnow_fingerprint_oracle_sql(id_col: str, text_col: str, table: str) -> str:
+    k, w = WINNOW_K, WINNOW_W
     txt = f"coalesce({text_col}, '')"
     h = hash60_sql(f"substr({txt}, CAST(p AS INT), {k})")
     return f"""
@@ -647,35 +649,29 @@ FROM base GROUP BY {group_col}
 #: features RE2 lacks, so the DuckDB twin is exact).
 QUALITY_STOPWORDS: tuple[str, ...] = ("the", "a", "of", "and", "to", "in", "is")
 QUALITY_SYMBOLS_PATTERN = "[#%$@^*]"
+MIN_TOKENS, MAX_TOKENS = 50, 100_000
+MIN_MEAN_WORD_LEN, MAX_MEAN_WORD_LEN = 3.0, 10.0
+MAX_SYMBOL_RATIO = 0.1
+MIN_STOPWORD_HITS = 2
+MIN_DISTINCT_RATIO = 0.1
 
 
-def quality_gate(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_tokens: int = 50,
-    max_tokens: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    min_stopword_hits: int = 2,
-    min_distinct_ratio: float = 0.1,
-) -> DataFrame:
+def quality_gate(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Composite document-quality gate: one boolean verdict per document
     plus a deterministic comma-joined list of the rules it failed — the
     single-pass curation filter a pipeline applies before dedup/mixing.
 
     Rules (each a pure-Column predicate, zero shuffles, one scan):
 
-    - ``len``: ``min_tokens <= n_tokens <= max_tokens``;
+    - ``len``: ``MIN_TOKENS <= n_tokens <= MAX_TOKENS``;
     - ``word_len``: mean non-space characters per token within
-      ``[min_mean_word_len, max_mean_word_len]``;
+      ``[MIN_MEAN_WORD_LEN, MAX_MEAN_WORD_LEN]``;
     - ``symbols``: symbol-to-token ratio (:data:`QUALITY_SYMBOLS_PATTERN`
-      occurrences / tokens) at most ``max_symbol_ratio``;
-    - ``stopwords``: at least ``min_stopword_hits`` DISTINCT members of
+      occurrences / tokens) at most ``MAX_SYMBOL_RATIO``;
+    - ``stopwords``: at least ``MIN_STOPWORD_HITS`` DISTINCT members of
       :data:`QUALITY_STOPWORDS` present;
     - ``repetition``: distinct-token ratio at least
-      ``min_distinct_ratio`` (collapses pathological repetition).
+      ``MIN_DISTINCT_RATIO`` (collapses pathological repetition).
 
     Floats only feed comparisons, never the output (booleans, counts and
     the reason string are emitted), so the cross-engine hash sees no
@@ -696,11 +692,11 @@ def quality_gate(
     distinct_ratio = F.size(F.array_distinct(toks)) / n
 
     rules = [
-        ("len", (n >= min_tokens) & (n <= max_tokens)),
-        ("word_len", (mean_wl >= min_mean_word_len) & (mean_wl <= max_mean_word_len)),
-        ("symbols", sym / n <= max_symbol_ratio),
-        ("stopwords", stop_hits >= min_stopword_hits),
-        ("repetition", distinct_ratio >= min_distinct_ratio),
+        ("len", (n >= MIN_TOKENS) & (n <= MAX_TOKENS)),
+        ("word_len", (mean_wl >= MIN_MEAN_WORD_LEN) & (mean_wl <= MAX_MEAN_WORD_LEN)),
+        ("symbols", sym / n <= MAX_SYMBOL_RATIO),
+        ("stopwords", stop_hits >= MIN_STOPWORD_HITS),
+        ("repetition", distinct_ratio >= MIN_DISTINCT_RATIO),
     ]
     fails = F.array_compact(
         F.array(*[F.when(~ok, F.lit(name)) for name, ok in rules])
@@ -714,18 +710,7 @@ def quality_gate(
     )
 
 
-def quality_gate_oracle_sql(
-    id_col: str,
-    text_col: str,
-    table: str,
-    min_tokens: int = 50,
-    max_tokens: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    min_stopword_hits: int = 2,
-    min_distinct_ratio: float = 0.1,
-) -> str:
+def quality_gate_oracle_sql(id_col: str, text_col: str, table: str) -> str:
     """DuckDB twin of :func:`quality_gate` — identical rule order and
     constants (embedded via ``repr``); NULL text coalesced to '' exactly
     like the Spark side."""
@@ -738,14 +723,14 @@ def quality_gate_oracle_sql(
     stop_hits = f"len(list_intersect({ts}, {stops}))"
     distinct_ratio = f"(len(list_distinct({ts})) / {n})"
     rules = [
-        ("len", f"({n} >= {min_tokens} AND {n} <= {max_tokens})"),
+        ("len", f"({n} >= {MIN_TOKENS} AND {n} <= {MAX_TOKENS})"),
         (
             "word_len",
-            f"({mean_wl} >= {min_mean_word_len!r} AND {mean_wl} <= {max_mean_word_len!r})",
+            f"({mean_wl} >= {MIN_MEAN_WORD_LEN!r} AND {mean_wl} <= {MAX_MEAN_WORD_LEN!r})",
         ),
-        ("symbols", f"({sym} / {n} <= {max_symbol_ratio!r})"),
-        ("stopwords", f"({stop_hits} >= {min_stopword_hits})"),
-        ("repetition", f"({distinct_ratio} >= {min_distinct_ratio!r})"),
+        ("symbols", f"({sym} / {n} <= {MAX_SYMBOL_RATIO!r})"),
+        ("stopwords", f"({stop_hits} >= {MIN_STOPWORD_HITS})"),
+        ("repetition", f"({distinct_ratio} >= {MIN_DISTINCT_RATIO!r})"),
     ]
     arr = (
         "list_filter(["

@@ -205,24 +205,21 @@ def estimate_population_stratified(
 
 
 def multi_grain_sweep(
-    df: DataFrame,
-    grains: Sequence[Sequence[str]],
-    value_col: str = "CARBON_AG",
-    weight_col: str = "TPA_UNADJ",
+    df: DataFrame, grains: Sequence[Sequence[str]]
 ) -> DataFrame:
     """The legacy per-grain aggregation sweep in ONE pass via grouping sets
     (reference runs ~14 separate summaries, ``carbon_code/R/07_aggregateFIADB.R:22-32``).
 
     ``grains`` is a list of column-name lists; the output carries each grain's
-    columns (null outside its grain) plus a ``grain`` label, the weighted sum
-    of ``value_col`` and the row count.
+    columns (null outside its grain) plus a ``grain`` label, the
+    ``TPA_UNADJ``-weighted sum of ``CARBON_AG`` and the row count.
     """
     all_cols = sorted({c for g in grains for c in g})
     sets_sql = ", ".join(
         "(" + ", ".join(g) + ")" if g else "()" for g in grains
     )
-    w = F.coalesce(F.col(weight_col), F.lit(0.0))
-    v = _finite_or_zero(F.col(value_col))
+    w = F.coalesce(F.col("TPA_UNADJ"), F.lit(0.0))
+    v = _finite_or_zero(F.col("CARBON_AG"))
     d = df.withColumn("_wv", v * w)
     d.createOrReplaceTempView("_sweep_in")
     cols = ", ".join(all_cols)

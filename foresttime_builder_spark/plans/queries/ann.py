@@ -92,7 +92,7 @@ def q42_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact re-ranking — the centroid-based scale path for similarity search
     (complements the LSH path, q37).
 
-    nprobe defaults to 'auto' (recall-targeted ceil(11k/(4·lg k)) — r13,
+    nprobe is derived (recall-targeted ceil(11k/(4·lg k)) — r13,
     measured curves in RECALL_IVF_r13.json; history: nprobe=2 at recall
     1/3 in r9, flat ceil(0.4k) in r12 whose candidate volume saturated
     the budget at sf10 and silently degraded recall to 0.35).  Since the

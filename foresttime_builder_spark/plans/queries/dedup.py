@@ -324,8 +324,8 @@ def q50_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: 16-round min-label unroll leaves the 40-node path in 24 pieces.
 MAX_ITER_DEFAULT = 16
 
-def _components_sql(sym: str = "sym", rounds: int = MAX_ITER_DEFAULT) -> str:
-    """CTE definitions ``lab0 .. lab{rounds}`` and ``comp(id, lab)``: the
+def _components_sql(sym: str = "sym") -> str:
+    """CTE definitions ``lab0 .. lab{MAX_ITER_DEFAULT}`` and ``comp(id, lab)``: the
     connected components of the symmetric edge CTE ``sym(a, b)``, ``lab``
     the component's minimum id, as :func:`~foresttime_builder_spark.
     operators.graph.connected_components` labels them.
@@ -345,7 +345,7 @@ def _components_sql(sym: str = "sym", rounds: int = MAX_ITER_DEFAULT) -> str:
         "lab0 AS MATERIALIZED (\n"
         f"  SELECT id, id AS lab FROM (SELECT DISTINCT a AS id FROM {sym})\n)"
     ]
-    for i in range(rounds):
+    for i in range(MAX_ITER_DEFAULT):
         layers.append(
             f"lab{i + 1}p AS MATERIALIZED ("
             f"  SELECT n.id, least(n.lab, coalesce(m.minlab, n.lab)) AS lab"
@@ -357,7 +357,7 @@ def _components_sql(sym: str = "sym", rounds: int = MAX_ITER_DEFAULT) -> str:
             f"  SELECT n.id, least(n.lab, l2.lab) AS lab"
             f"  FROM lab{i + 1}p n JOIN lab{i + 1}p l2 ON n.lab = l2.id)"
         )
-    layers.append(f"comp AS (SELECT id, lab FROM lab{rounds})")
+    layers.append(f"comp AS (SELECT id, lab FROM lab{MAX_ITER_DEFAULT})")
     return ",\n".join(layers)
 
 def _dup_clusters_oracle() -> str:
@@ -559,10 +559,10 @@ def q90_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = d.filter(F.col("doc_id") >= 200)
     return incremental_dedup(history, batch, "doc_id", "text")
 
-def _incremental_dedup_oracle(
-    n_hashes: int = 16, band_size: int = 4, threshold: float = 0.5
-) -> str:
-    mins, bands, band_list = _minhash_band_sql(n_hashes, band_size)
+def _incremental_dedup_oracle() -> str:
+    """DuckDB twin of :func:`q90_incremental_dedup` at the operator's
+    16 hashes, bands of 4 and threshold 0.5."""
+    mins, bands, band_list = _minhash_band_sql(16, 4)
 
     def _stack(src: str) -> str:
         return f"""(
@@ -602,7 +602,7 @@ near_keep AS (
   SELECT bid, min(hid) AS near_hist_id
   FROM cand JOIN bsets USING (bid) JOIN hsets USING (hid)
   WHERE len(list_intersect(btoks, htoks))
-        / (bsz + hsz - len(list_intersect(btoks, htoks))) >= {threshold!r}
+        / (bsz + hsz - len(list_intersect(btoks, htoks))) >= 0.5
   GROUP BY bid
 )
 SELECT bid AS doc_id,
@@ -638,7 +638,8 @@ def q111_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-def _containment_oracle(threshold: float = 0.8) -> str:
+def _containment_oracle() -> str:
+    """DuckDB twin of :func:`q111_containment_pairs` at threshold 0.8."""
     return f"""
 WITH docsets AS (
   SELECT doc_id, {_TOKSET} AS toks,
@@ -658,7 +659,7 @@ prefix AS (
            ) AS rnk
     FROM tok t JOIN dfreq d USING (token)
   )
-  WHERE rnk <= sz - ceil({threshold!r} * sz) + 1
+  WHERE rnk <= sz - ceil(0.8 * sz) + 1
 ),
 cand AS (
   SELECT DISTINCT p.contained_id, i.doc_id AS container_id
@@ -671,7 +672,7 @@ SELECT contained_id, container_id,
 FROM cand
 JOIN docsets sa ON sa.doc_id = contained_id
 JOIN docsets sb ON sb.doc_id = container_id
-WHERE len(list_intersect(sa.toks, sb.toks)) / sa.sz >= {threshold!r}
+WHERE len(list_intersect(sa.toks, sb.toks)) / sa.sz >= 0.8
 """
 
 def q116_fuzzy_join_d2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -717,17 +718,13 @@ def q119_lsh_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.5, verify="auto",
     )
 
-def _lsh_representatives_oracle(
-    n_hashes: int = _MH_N,
-    band_size: int = _MH_BAND,
-    threshold: float = 0.5,
-) -> str:
+def _lsh_representatives_oracle(threshold: float = 0.5) -> str:
     """DuckDB twin of :func:`q119_lsh_representatives`: identical minhash/
     banding construction as the q23 oracle, bucket-min star edges via a
     window (min ignores NULL ids; ``<>`` drops NULL-id rows — matching the
     Spark operator's NULL contract), exact-jaccard edge verification, then
     connected components (:func:`_components_sql`)."""
-    mins, bands, band_list = _minhash_band_sql(n_hashes, band_size)
+    mins, bands, band_list = _minhash_band_sql(_MH_N, _MH_BAND)
     return f"""
 WITH tok AS (
   SELECT doc_id, unnest({_TOKSET}) AS token

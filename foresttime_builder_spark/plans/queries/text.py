@@ -10,6 +10,12 @@ from foresttime_builder_spark.functions.encoding import (
 )
 from foresttime_builder_spark.functions.tokens import token_set_sql, words, words_sql
 from foresttime_builder_spark.operators.dedup import tokens
+from foresttime_builder_spark.operators.text import (
+    language_id_oracle_sql,
+    repetition_quality_oracle_sql,
+    token_count_bpe_oracle_sql,
+    winnow_fingerprint_oracle_sql,
+)
 from foresttime_builder_spark.sources import load_table
 
 from foresttime_builder_spark.plans.queries.sampling import ORACLE_Q57
@@ -291,11 +297,6 @@ def _dup_spans_oracle() -> str:
 
     return duplicated_span_coverage_oracle_sql("doc_id", "text", "documents", n=8)
 
-def _text_oracle(fn_name: str) -> str:
-    from foresttime_builder_spark.operators import text as text_ops
-
-    return getattr(text_ops, fn_name)("doc_id", "text", "documents")
-
 def q80_chunk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window document chunking (`operators/text.chunk_tokens`):
     every document split into 32-token windows advancing by 16 — the step
@@ -472,17 +473,21 @@ QUERIES: dict[str, QuerySpec] = {
     "q14_token_df": QuerySpec(q14_token_df, ORACLE_Q14),
     "q15_doc_fingerprint": QuerySpec(q15_doc_fingerprint, ORACLE_Q15),
     "q32_language_id": QuerySpec(
-        q32_language_id, _text_oracle("language_id_oracle_sql")
+        q32_language_id,
+        language_id_oracle_sql("doc_id", "text", "documents"),
     ),
     "q33_bpe_tokens": QuerySpec(
-        q33_bpe_tokens, _text_oracle("token_count_bpe_oracle_sql")
+        q33_bpe_tokens,
+        token_count_bpe_oracle_sql("doc_id", "text", "documents"),
     ),
     "q34_winnow_fingerprint": QuerySpec(
-        q34_winnow_fingerprint, _text_oracle("winnow_fingerprint_oracle_sql")
+        q34_winnow_fingerprint,
+        winnow_fingerprint_oracle_sql("doc_id", "text", "documents"),
     ),
     "q58_decontamination": QuerySpec(q58_decontamination, ORACLE_Q58),
     "q59_repetition_quality": QuerySpec(
-        q59_repetition_quality, _text_oracle("repetition_quality_oracle_sql")
+        q59_repetition_quality,
+        repetition_quality_oracle_sql("doc_id", "text", "documents"),
     ),
     "q60_pii_scrub": QuerySpec(q60_pii_scrub, _pii_oracle()),
     "q61_domain_quota": QuerySpec(q61_domain_quota, _domain_quota_oracle()),

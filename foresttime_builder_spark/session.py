@@ -299,12 +299,17 @@ def get_spark(
         .config("spark.sql.codegen.maxFields", "800")
         # let AQE re-plan CACHED plans too (off by default): with this off
         # a cache pins the full initialPartitionNum on a fixture-sized
-        # input — q51 ran 32-512 tasks over 92 rows when the state
-        # pipeline persisted its interpolated panel (measured 5.8 s
-        # -> 4.8 s at sf0.1 with this on).  The CPU-dense floor below
-        # still bounds how far cached stages coalesce, and exchange reuse
-        # lost to output-partitioning changes is irrelevant here (the
-        # persisted intermediates feed column-DAG stages, not re-joins).
+        # input.  The one measurement (q51, 32-512 tasks over 92 rows,
+        # 5.8 s -> 4.8 s at sf0.1) predates the single-pass run_states,
+        # which persists nothing.  Today's persist sites are the pair
+        # family's docsets and masks (operators/dedup.py), the dsir,
+        # substr, sketch and graph intermediates, and the q27/q28/q52
+        # panels in plans/queries/fia.py; neither the gain on them nor
+        # the cost is re-measured.  The cost is exchange reuse lost to
+        # output-partitioning changes, and it can apply:
+        # token_jaccard_pairs' persisted docsets feed both sides of its
+        # verification join.  Unverified either way.  The CPU-dense floor
+        # below still bounds how far cached stages coalesce.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # AQE coalescing sizes partitions by BYTES; window/expression-dense
         # stages (annualization: ~10 window passes per row) have huge

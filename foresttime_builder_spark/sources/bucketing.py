@@ -16,10 +16,9 @@ For the FIA workload the recommended layout is::
 
     write_bucketed(tree_panel, "tree_panel",  path,
                    bucket_cols=["plot_ID"], num_buckets=1024,
-                   sort_cols=["plot_ID", "tree_ID", "YEAR"],
-                   partition_cols=["STATECD"])
+                   sort_cols=["plot_ID", "tree_ID", "YEAR"])
 
-which gives partition pruning by state AND shuffle-free tree-window stages
+which gives shuffle-free tree-window stages
 (tree_ID is plot-prefixed, so plot_ID bucketing co-locates every window
 partition; SURVEY §3.1).
 """
@@ -36,23 +35,20 @@ def write_bucketed(
     bucket_cols: list[str],
     num_buckets: int = 32,
     sort_cols: list[str] | None = None,
-    partition_cols: list[str] | None = None,
 ) -> DataFrame:
     """Write ``df`` as an external bucketed parquet table registered in the
     session catalog under ``name``; returns the catalog-backed DataFrame."""
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    writer = (
+    (
         df.repartition(num_buckets, *[F.col(c) for c in bucket_cols])
         .write.mode("overwrite")
         .format("parquet")
         .option("path", path)
         .bucketBy(num_buckets, *bucket_cols)
         .sortBy(*(sort_cols or bucket_cols))
+        .saveAsTable(name)
     )
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.saveAsTable(name)
     return spark.table(name)
 
 
@@ -62,9 +58,8 @@ def co_bucketed_join(
     right_name: str,
     left_on: str,
     right_on: str,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join two co-bucketed catalog tables on their bucket keys. With equal
-    bucket counts Catalyst plans this without any Exchange."""
+    """Inner-join two co-bucketed catalog tables on their bucket keys. With
+    equal bucket counts Catalyst plans this without any Exchange."""
     left, right = spark.table(left_name), spark.table(right_name)
-    return left.join(right, on=left[left_on] == right[right_on], how=how)
+    return left.join(right, on=left[left_on] == right[right_on], how="inner")

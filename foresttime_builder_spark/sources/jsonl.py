@@ -19,9 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write ``df`` as sharded JSONL under ``path``."""
-    df.write.mode(mode).json(path)
+def write_jsonl(df: DataFrame, path: str) -> None:
+    """Write ``df`` as sharded JSONL under ``path``, replacing what is
+    there."""
+    df.write.mode("overwrite").json(path)
 
 
 def read_jsonl(

@@ -86,13 +86,18 @@ def read_event_stream(
     return stream
 
 
-def windowed_rollup(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Tumbling-window per-event-type rollup with late-data watermark."""
+#: late-data watermark of the window and session rollups
+ROLLUP_WATERMARK = "2 hours"
+#: click look-back of the purchase attribution joins, and their watermark
+ATTRIBUTION_HORIZON, ATTRIBUTION_WATERMARK = "2 days", "4 days"
+
+
+def windowed_rollup(events: DataFrame) -> DataFrame:
+    """Hourly tumbling-window per-event-type rollup with late-data
+    watermark."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", ROLLUP_WATERMARK)
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 4).alias("total_value"),
@@ -106,12 +111,10 @@ def windowed_rollup(
     )
 
 
-def sessionized(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
+def sessionized(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Gap-based session windows per user."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", ROLLUP_WATERMARK)
         .groupBy(F.session_window("ts", gap).alias("s"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -175,12 +178,10 @@ def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def purchase_attribution(
-    events: DataFrame, horizon: str = "2 days", watermark: str = "4 days"
-) -> DataFrame:
+def purchase_attribution(events: DataFrame) -> DataFrame:
     """Stream-stream interval join: each purchase joins the clicks from the
-    same user in the preceding ``horizon`` (state on both sides bounded by
-    watermarks + the time-range predicate)."""
+    same user in the preceding ``ATTRIBUTION_HORIZON`` (state on both sides
+    bounded by watermarks + the time-range predicate)."""
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(
@@ -189,7 +190,7 @@ def purchase_attribution(
             F.col("ts").alias("click_ts"),
             F.col("value").alias("click_value"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", ATTRIBUTION_WATERMARK)
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
@@ -198,29 +199,30 @@ def purchase_attribution(
             F.col("event_id").alias("purchase_id"),
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", ATTRIBUTION_WATERMARK)
     )
     return purchases.join(
         clicks,
         (F.col("user_id") == F.col("c_user"))
         & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon}")),
+        & (
+            F.col("click_ts")
+            >= F.col("purchase_ts") - F.expr(f"INTERVAL {ATTRIBUTION_HORIZON}")
+        ),
         "inner",
     ).select("purchase_id", "user_id", "click_id", "click_ts", "purchase_ts")
 
 
-def purchase_attribution_outer(
-    events: DataFrame, horizon: str = "2 days", watermark: str = "4 days"
-) -> DataFrame:
+def purchase_attribution_outer(events: DataFrame) -> DataFrame:
     """LEFT OUTER stream-stream interval join: like
     :func:`purchase_attribution`, but purchases with NO qualifying click
     are also emitted (click columns NULL) — the semantics that needs the
     watermark to PASS before an unmatched row can be declared final.
     With an availableNow run the trailing no-data micro-batch advances
-    the watermark past ``max(ts) - watermark``, so unmatched purchases up
-    to that cutoff are flushed; rows inside the final watermark window
-    stay in state (consumers must apply the cutoff — the q108 gate does,
-    identically on the batch oracle side)."""
+    the watermark past ``max(ts) - ATTRIBUTION_WATERMARK``, so unmatched
+    purchases up to that cutoff are flushed; rows inside the final
+    watermark window stay in state (consumers must apply the cutoff — the
+    q108 gate does, identically on the batch oracle side)."""
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(
@@ -228,7 +230,7 @@ def purchase_attribution_outer(
             F.col("event_id").alias("click_id"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", ATTRIBUTION_WATERMARK)
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
@@ -237,13 +239,16 @@ def purchase_attribution_outer(
             F.col("event_id").alias("purchase_id"),
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", ATTRIBUTION_WATERMARK)
     )
     return purchases.join(
         clicks,
         (F.col("user_id") == F.col("c_user"))
         & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon}")),
+        & (
+            F.col("click_ts")
+            >= F.col("purchase_ts") - F.expr(f"INTERVAL {ATTRIBUTION_HORIZON}")
+        ),
         "left_outer",
     ).select("purchase_id", "user_id", "click_id", "click_ts", "purchase_ts")
 
@@ -340,14 +345,12 @@ def run_foreach_batch_upsert(
 
 
 def run_to_memory(
-    streaming_df: DataFrame,
-    output_mode: str = "complete",
-    name: str | None = None,
+    streaming_df: DataFrame, output_mode: str = "complete"
 ) -> DataFrame:
     """Execute a streaming plan to completion (``availableNow``) into a
     memory sink and return the materialized result."""
     spark = streaming_df.sparkSession
-    name = name or f"stream_{uuid.uuid4().hex[:10]}"
+    name = f"stream_{uuid.uuid4().hex[:10]}"
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     q = (
         streaming_df.writeStream.format("memory")
@@ -361,11 +364,7 @@ def run_to_memory(
     return spark.table(name)
 
 
-def run_to_parquet(
-    streaming_df: DataFrame,
-    name: str | None = None,
-    out_dir: str | None = None,
-) -> DataFrame:
+def run_to_parquet(streaming_df: DataFrame) -> DataFrame:
     """Execute a streaming plan to completion (``availableNow``) into a
     PARQUET sink and return the read-back frame.
 
@@ -380,18 +379,14 @@ def run_to_parquet(
     row-scale-output stream should use anyway (complete mode re-emits
     the whole result per batch)."""
     spark = streaming_df.sparkSession
-    name = name or f"stream_{uuid.uuid4().hex[:10]}"
-    # default-created dirs are registered for process-exit cleanup: at q96's
+    name = f"stream_{uuid.uuid4().hex[:10]}"
+    # both dirs are registered for process-exit cleanup (the returned frame
+    # lazily re-reads the sink, so it must outlive this call): at q96's
     # output scale (10M rows at sf10) leaked sinks accumulate in /tmp — the
     # same filesystem derive_candidate_budget sizes budgets from, so leaks
-    # would silently shrink later runs' budgets.  A caller-passed out_dir is
-    # the caller's to manage (the returned frame lazily re-reads it, so it
-    # must outlive this call); the checkpoint dir is always ours to reap.
-    if out_dir is None:
-        out = tempfile.mkdtemp(prefix=f"sink_{name}_")
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-    else:
-        out = out_dir
+    # would silently shrink later runs' budgets
+    out = tempfile.mkdtemp(prefix=f"sink_{name}_")
+    atexit.register(shutil.rmtree, out, ignore_errors=True)
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
     q = (

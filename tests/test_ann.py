@@ -151,17 +151,13 @@ def test_ivf_candidate_budget_guard():
     auto nprobe=11, 952 B per pair; budget 600 -> 40 pairs -> fit 5."""
     from foresttime_builder_spark.operators.ann import _ivf_params
 
-    assert _ivf_params(200, 8, 3, "auto", "auto", None, "error") == (16, 11)
+    assert _ivf_params(200, 8, None, "error") == (16, 11)
     with pytest.raises(ValueError, match=r"candidate_budget=600 .*<= 5 fits"):
-        _ivf_params(200, 8, 3, "auto", "auto", 600, "error")
-    assert _ivf_params(200, 8, 3, "auto", "auto", 600, "degrade") == (16, 5)
-    assert _ivf_params(200, 8, 3, "auto", "auto", 10_000_000, "error") == (
-        16, 11
-    )
-    # a pinned nprobe is capped at k before the budget sees it
-    assert _ivf_params(200, 8, 3, 4, 9, None, "error") == (4, 4)
+        _ivf_params(200, 8, 600, "error")
+    assert _ivf_params(200, 8, 600, "degrade") == (16, 5)
+    assert _ivf_params(200, 8, 10_000_000, "error") == (16, 11)
     with pytest.raises(ValueError, match="bad on_budget"):
-        _ivf_params(200, 8, 3, "auto", "auto", None, "nope")
+        _ivf_params(200, 8, None, "nope")
 
 
 def test_ivf_no_fit_raises_in_both_postures():
@@ -172,7 +168,7 @@ def test_ivf_no_fit_raises_in_both_postures():
 
     for posture in ("error", "degrade"):
         with pytest.raises(ValueError, match="even nprobe=1"):
-            _ivf_params(200, 8, 3, "auto", "auto", 1, posture)
+            _ivf_params(200, 8, 1, posture)
 
 
 def test_ivf_degraded_plan_runs(spark):
