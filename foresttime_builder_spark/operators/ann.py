@@ -296,7 +296,6 @@ def brute_topk_np(
     base: DataFrame,
     probes: DataFrame,
     k: int,
-    max_probes: int = MAX_BRUTE_PROBES,
 ) -> DataFrame:
     """Brute-force cosine top-k with the shared numpy kernel.
 
@@ -304,7 +303,7 @@ def brute_topk_np(
     (probe_id, probe_vec).  ``probes`` is collected to the driver and
     shipped in the task closure — the probe set must be tiny
     next to the corpus, which is the side that scales — so the collect is
-    bounded: if it exceeds ``max_probes`` rows the operator raises instead
+    bounded: if it exceeds ``MAX_BRUTE_PROBES`` rows the operator raises instead
     of silently OOM-ing the driver at scale.  Each Arrow batch of the
     corpus runs :func:`_cosine_topk` against the whole probe set and emits
     only its local top ``k + _MARGIN`` per probe; a global window then
@@ -320,10 +319,10 @@ def brute_topk_np(
 
     # bounded collect: fetch at most cap+1 rows so even a huge probe side
     # never materializes past the cap before the error fires
-    probes_pdf = probes.limit(max_probes + 1).toPandas()
-    if len(probes_pdf) > max_probes:
+    probes_pdf = probes.limit(MAX_BRUTE_PROBES + 1).toPandas()
+    if len(probes_pdf) > MAX_BRUTE_PROBES:
         raise ValueError(
-            f"brute_topk_np probe set exceeds max_probes={max_probes}; "
+            f"brute_topk_np probe set exceeds MAX_BRUTE_PROBES={MAX_BRUTE_PROBES}; "
             "batch the probes or use lsh_topk/ivf_topk for large probe sides"
         )
     pvecs = probes_pdf["probe_vec"].to_numpy()
@@ -459,7 +458,7 @@ _BASE_CTE = f"""base AS (
 )"""
 
 
-def lsh_topk(emb: DataFrame, dims: int = LSH_SIG_DIMS) -> DataFrame:
+def lsh_topk(emb: DataFrame) -> DataFrame:
     """Top-``TOPK`` same-bucket neighbors per vector of ``emb``'s (vec_id,
     embedding) under random-hyperplane LSH with exact cosine re-ranking
     (ranking on the rounded cosine so the order is reproducible across
@@ -475,13 +474,11 @@ def lsh_topk(emb: DataFrame, dims: int = LSH_SIG_DIMS) -> DataFrame:
     integer comparisons (:func:`adaptive_bits_sql`), so the gate holds at
     every SF.  Use multiple hash tables for recall at high nb.
 
-    ``dims`` is the SIGNATURE width (how many leading components feed the
-    hyperplanes); verification always uses the vector's full width, probed
-    once at plan time so the unrolled codegen'd cosine covers every
-    component exactly like the array-fold form it replaced."""
-    pairs = _lsh_bucket_pairs(
-        emb, dims, "auto", LSH_TARGET_OCCUPANCY, lambda a, b: a != b
-    )
+    The signature reads the leading ``LSH_SIG_DIMS`` components;
+    verification always uses the vector's full width, probed once at plan
+    time so the unrolled codegen'd cosine covers every component exactly
+    like the array-fold form it replaced."""
+    pairs = _lsh_bucket_pairs(emb, LSH_TARGET_OCCUPANCY, lambda a, b: a != b)
     return _rank_topk(
         pairs.select(
             F.col("id_a").alias("probe_id"),
@@ -492,28 +489,21 @@ def lsh_topk(emb: DataFrame, dims: int = LSH_SIG_DIMS) -> DataFrame:
     )
 
 
-def _lsh_bucket_pairs(
-    emb: DataFrame,
-    dims: int,
-    n_bits: int | str,
-    target_occupancy: int,
-    keep,
-) -> DataFrame:
+def _lsh_bucket_pairs(emb: DataFrame, target_occupancy: int, keep) -> DataFrame:
     """The LSH candidate join shared by :func:`lsh_topk` and
     :func:`embedding_neardup_pairs`: valid (vec_id, embedding) rows,
-    ``dims``-wide hyperplane
-    signature of ``n_bits`` bits (``'auto'``: :func:`adaptive_bits` from one
-    count), bucket self-join filtered by ``keep(id_a, id_b)``.  Returns
+    ``LSH_SIG_DIMS``-wide hyperplane signature of :func:`adaptive_bits`
+    bits (from one count), bucket self-join filtered by
+    ``keep(id_a, id_b)``.  Returns
     (id_a, id_b, cosine) with the 6-dp rounded cosine over the probed full
     vector width."""
     emb = _valid(emb, "vec_id", "embedding", cosine=True)
     vdims = _probe_width(emb, "embedding")
-    if n_bits == "auto":
-        n_bits = adaptive_bits(emb.count(), target_occupancy)
+    n_bits = adaptive_bits(emb.count(), target_occupancy)
     base = emb.select(
         F.col("vec_id").alias("vid"),
         F.col("embedding").cast("array<double>").alias("vec"),
-    ).withColumn("bucket", signature_bits(F.col("vec"), dims, n_bits))
+    ).withColumn("bucket", signature_bits(F.col("vec"), LSH_SIG_DIMS, n_bits))
     left = _spread(
         base.select(F.col("vid").alias("id_a"), F.col("vec").alias("vec_a"), "bucket")
     )
@@ -770,22 +760,13 @@ def _kmeans_build(
     return cent_rows, lists
 
 
-def _quantizer_setup(
-    emb: DataFrame, dims: int | None, op: str
-) -> tuple[DataFrame, int, int]:
+def _quantizer_setup(emb: DataFrame) -> tuple[DataFrame, int, int]:
     """The set-up shared by :func:`ivf_topk` and
     :func:`kmeans_coverage_sample`: valid (vec_id, embedding) rows, the
-    probed vector width (a pinned ``dims`` that disagrees raises rather
-    than silently truncating the arithmetic), one row count, and the
-    spread (vid, vec, vv) base with its self-dot.  Returns (base, dims,
-    n_rows)."""
+    probed vector width, one row count, and the spread (vid, vec, vv) base
+    with its self-dot.  Returns (base, dims, n_rows)."""
     emb = _valid(emb, "vec_id", "embedding", cosine=True)
     vdims = _probe_width(emb, "embedding")
-    if dims is not None and dims != vdims:
-        raise ValueError(
-            f"{op}: dims={dims} but 'embedding' carries {vdims} "
-            f"components; pass dims=None to use the probed width"
-        )
     base = _spread(
         emb.select(
             F.col("vec_id").alias("vid"),
@@ -858,7 +839,6 @@ def _ivf_params(
 
 def ivf_topk(
     emb: DataFrame,
-    dims: int | None = None,
     candidate_budget: int | None = None,
     on_budget: str = "error",
     probe_filter=None,
@@ -888,11 +868,10 @@ def ivf_topk(
     nor the probe scan (O(N/k * probes)) goes quadratic as the corpus
     grows; the oracle derives the identical k in SQL.
 
-    ``dims=None`` (default) probes the ACTUAL vector width and covers it
-    fully — self-dots, centroid distances, Lloyd means and the final
-    cosine all run over every component, matching the oracle's full-width
-    ``list_dot_product``.  A pinned ``dims`` that disagrees with the data
-    raises rather than silently truncating the arithmetic.
+    The ACTUAL vector width is probed and covered fully — self-dots,
+    centroid distances, Lloyd means and the final cosine all run over
+    every component, matching the oracle's full-width
+    ``list_dot_product``.
 
     ``nprobe`` is derived as ``ceil(11 k / (4 ⌊log2 k⌋))`` —
     the recall-targeted rule measured to land recall@3 ≥ 0.8 on the
@@ -907,7 +886,7 @@ def ivf_topk(
     from the same counts the auto-k derivation already pays.  At gate
     SFs the projection is tiny, so a physical budget never binds there
     and the oracle twin stays bit-exact."""
-    base, dims, n_rows = _quantizer_setup(emb, dims, "ivf_topk")
+    base, dims, n_rows = _quantizer_setup(emb)
     k_clusters, nprobe = _ivf_params(n_rows, dims, candidate_budget, on_budget)
     cent_rows, lists = _kmeans_build(base, dims, k_clusters)
 
@@ -1074,9 +1053,12 @@ def ivf_topk_oracle_sql() -> str:
     return "WITH " + ",\n".join(ctes)
 
 
+#: rows each cluster contributes to the coverage sample
+COVERAGE_PER_CLUSTER = 3
+
+
 def kmeans_coverage_sample(
     emb: DataFrame,
-    per_cluster: int = 3,
     order: str = "representative",
 ) -> DataFrame:
     """Diversity-aware subset selection over ``emb``'s (vec_id, embedding) — the
@@ -1086,7 +1068,7 @@ def kmeans_coverage_sample(
     The corpus is partitioned by the same deterministic mini k-means as
     :func:`ivf_topk` (shared :func:`_kmeans_build` — md5-seeded init,
     fixed Lloyd rounds, 6-dp rounding, so the quantizer is bit-identical
-    to the oracle's), then each cluster contributes its ``per_cluster``
+    to the oracle's), then each cluster contributes its ``COVERAGE_PER_CLUSTER``
     rows by rounded squared-distance to the final centroid:
 
     - ``order='representative'`` — closest first: cluster cores, the
@@ -1097,7 +1079,7 @@ def kmeans_coverage_sample(
     Scale shape: one k-means build (Arrow assignment maps, k ~ sqrt(N)
     centroid collects), one broadcast join of the k centroid rows, one
     window over the cid partitioning — every shuffle linear in the
-    corpus, output bounded at ``k_clusters * per_cluster`` rows.
+    corpus, output bounded at ``k_clusters * COVERAGE_PER_CLUSTER`` rows.
 
     Ties resolve (dist, id ascending) on both engines; rows whose
     distance is NaN (NaN-component vectors — zero-norm ones are already
@@ -1125,7 +1107,7 @@ def kmeans_coverage_sample(
         ).filter(F.lit(False))
 
     try:
-        base, dims, n_rows = _quantizer_setup(emb, None, "kmeans_coverage_sample")
+        base, dims, n_rows = _quantizer_setup(emb)
     except ValueError:
         if _valid(emb, "vec_id", "embedding", cosine=True).isEmpty():
             return _empty()
@@ -1149,7 +1131,7 @@ def kmeans_coverage_sample(
     w = W.partitionBy("cid").orderBy(ordering, F.col("vid"))
     return (
         scored.withColumn("pick_rank", F.row_number().over(w))
-        .filter(F.col("pick_rank") <= per_cluster)
+        .filter(F.col("pick_rank") <= COVERAGE_PER_CLUSTER)
         .select(
             F.col("vid").alias("vec_id"),
             "cid",
@@ -1160,8 +1142,7 @@ def kmeans_coverage_sample(
 
 
 def kmeans_coverage_sample_oracle_sql(order: str = "representative") -> str:
-    """DuckDB twin of :func:`kmeans_coverage_sample` at its default three
-    rows per cluster — the quantizer CTEs come from the same
+    """DuckDB twin of :func:`kmeans_coverage_sample` — the quantizer CTEs come from the same
     :func:`_kmeans_ctes` builder the IVF oracle uses, then one join to the
     final centroids + one window."""
     direction = "ASC" if order == "representative" else "DESC"
@@ -1185,33 +1166,27 @@ def kmeans_coverage_sample_oracle_sql(order: str = "representative") -> str:
         f"WITH {body}\n"
         "SELECT vid AS vec_id, cid, "
         f"{fixed_sql('dist', 6)} AS dist_e6, "
-        "pick_rank FROM picked WHERE pick_rank <= 3"
+        f"pick_rank FROM picked WHERE pick_rank <= {COVERAGE_PER_CLUSTER}"
     )
 
 
-def embedding_neardup_pairs(
-    emb: DataFrame,
-    n_bits: int | str = "auto",
-    threshold: float = 0.3,
-) -> DataFrame:
+def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.3) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (dedup family) over ``emb``'s
     (vec_id, embedding): LSH-bucketed candidate generation over an
     ``LSH_SIG_DIMS``-wide signature + exact cosine verification at
     ``threshold`` over the probed full vector width.  Returns (id_a, id_b,
     cosine) with id_a < id_b.
 
-    ``n_bits='auto'`` (see :func:`lsh_topk`): occupancy-targeted width so
+    The signature width is occupancy-targeted (see :func:`lsh_topk`) so
     the candidate stream stays linear in corpus size; it targets 2x the
-    top-k occupancy because recall matters more than bucket size here.
-    Pass an int to pin the width."""
+    top-k occupancy because recall matters more than bucket size here."""
     return _lsh_bucket_pairs(
-        emb, LSH_SIG_DIMS, n_bits, 2 * LSH_TARGET_OCCUPANCY,
-        lambda a, b: a < b,
+        emb, 2 * LSH_TARGET_OCCUPANCY, lambda a, b: a < b
     ).filter(F.col("cosine") >= threshold)
 
 
 def embedding_neardup_oracle_sql(threshold: float = 0.3) -> str:
-    """DuckDB twin of :func:`embedding_neardup_pairs` at the auto width."""
+    """DuckDB twin of :func:`embedding_neardup_pairs`."""
     cos = _cosine_sql("a.vec", "b.vec")
     return f"""
 WITH {_BASE_CTE},
@@ -1231,15 +1206,14 @@ def _rp_sign(salt: str, i: int, j: int) -> int:
     return 1 if h % 2 == 0 else -1
 
 
-def random_projection(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_dims: int = 8,
-    salt: str = "rp",
-) -> DataFrame:
+#: output width and sign-matrix salt of the random projection
+RP_OUT_DIMS, RP_SALT = 8, "rp"
+
+
+def random_projection(emb: DataFrame) -> DataFrame:
     """Johnson-Lindenstrauss sign-matrix dimensionality reduction
-    (Achlioptas 2003): project ``in_dims`` embeddings onto ``out_dims``
+    (Achlioptas 2003): project ``emb``'s (vec_id, embedding) rows onto
+    ``RP_OUT_DIMS``
     via a deterministic +-1 matrix derived from md5 parity — the cheap
     pre-step that shrinks vectors before ANN indexing or clustering at
     corpus scale.
@@ -1248,27 +1222,25 @@ def random_projection(
     (``floor(x * 1e9)``) BEFORE the matmul, so every output is an exact
     order-free int64 sum — the Arrow kernel's ``Q @ S`` and the oracle's
     ``sum(big * sign)`` agree bit-for-bit.  Consumers recover floats as
-    ``value_e9 / (1e9 * sqrt(out_dims))``.
+    ``value_e9 / (1e9 * sqrt(RP_OUT_DIMS))``.
 
-    Returns ``(id_col, out_dim, value_e9)`` — ``out_dims`` rows per
+    Returns ``(vec_id, out_dim, value_e9)`` — ``RP_OUT_DIMS`` rows per
     vector.
 
     Scale shape (100 TB): the sign matrix is a task closure
-    (``in_dims x out_dims`` int8 — KBs), the kernel is one Arrow-batched
+    (``in_dims x RP_OUT_DIMS`` int8 — KBs), the kernel is one Arrow-batched
     int64 matmul per partition (no shuffle at all: the operator is
     embarrassingly parallel map-side), and the long output is produced
     directly in the batch, never via explode.
     """
-    if out_dims < 1:
-        raise ValueError(f"out_dims must be >= 1, got {out_dims}")
-    emb = _valid(emb, id_col, vec_col)
-    dims = _probe_width(emb, vec_col)
+    emb = _valid(emb, "vec_id", "embedding")
+    dims = _probe_width(emb, "embedding")
 
     import numpy as np
 
     S = np.array(
         [
-            [_rp_sign(salt, i, j) for j in range(out_dims)]
+            [_rp_sign(RP_SALT, i, j) for j in range(RP_OUT_DIMS)]
             for i in range(dims)
         ],
         dtype="int64",
@@ -1286,48 +1258,41 @@ def random_projection(
             n = len(pdf)
             yield pd.DataFrame(
                 {
-                    "vid": np.repeat(pdf["vid"].to_numpy(), out_dims),
-                    "out_dim": np.tile(np.arange(out_dims, dtype="int32"), n),
+                    "vid": np.repeat(pdf["vid"].to_numpy(), RP_OUT_DIMS),
+                    "out_dim": np.tile(np.arange(RP_OUT_DIMS, dtype="int32"), n),
                     "value_e9": out.ravel(),
                 }
             )
 
     base = emb.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
+        F.col("vec_id").alias("vid"), F.col("embedding").alias("vec")
     )
     return base.mapInPandas(
         fn, "vid long, out_dim int, value_e9 long"
     ).select(
-        F.col("vid").alias(id_col), "out_dim", "value_e9"
+        F.col("vid").alias("vec_id"), "out_dim", "value_e9"
     )
 
 
-def random_projection_oracle_sql(
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_dims: int = 8,
-) -> str:
-    """DuckDB twin of :func:`random_projection` at its default salt
-    ``'rp'`` — identical md5-parity signs (0-based indices in the hash
-    string) and identical e9 quantization before the integer sum."""
-    if out_dims < 1:
-        raise ValueError(f"out_dims must be >= 1, got {out_dims}")
-    h = hash60_sql("'rp|' || (i - 1) || '|' || j")
+def random_projection_oracle_sql() -> str:
+    """DuckDB twin of :func:`random_projection` — identical md5-parity
+    signs (0-based indices in the hash string) and identical e9
+    quantization before the integer sum."""
+    h = hash60_sql(f"'{RP_SALT}|' || (i - 1) || '|' || j")
     sign = f"CASE WHEN {h} % 2 = 0 THEN 1 ELSE -1 END"
     return f"""
 WITH comps AS (
-  SELECT {id_col}, i, CAST(floor({vec_col}[i] * 1e9) AS BIGINT) AS big
-  FROM {_valid_sql(table, id_col, vec_col)}, LATERAL (
-    SELECT unnest(generate_series(1, len({vec_col}))) AS i
+  SELECT vec_id, i, CAST(floor(embedding[i] * 1e9) AS BIGINT) AS big
+  FROM {_valid_sql("embeddings", "vec_id", "embedding")}, LATERAL (
+    SELECT unnest(generate_series(1, len(embedding))) AS i
   ) g
 ), expanded AS (
-  SELECT {id_col}, i, big, j, {sign} AS sign
+  SELECT vec_id, i, big, j, {sign} AS sign
   FROM comps, LATERAL (
-    SELECT unnest(generate_series(0, {out_dims - 1})) AS j
+    SELECT unnest(generate_series(0, {RP_OUT_DIMS - 1})) AS j
   ) h
 )
-SELECT {id_col}, CAST(j AS INTEGER) AS out_dim,
+SELECT vec_id, CAST(j AS INTEGER) AS out_dim,
        CAST(sum(big * sign) AS BIGINT) AS value_e9
-FROM expanded GROUP BY {id_col}, j
+FROM expanded GROUP BY vec_id, j
 """

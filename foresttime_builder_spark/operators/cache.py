@@ -9,6 +9,10 @@ the frame is garbage-collected.  Two kinds of cache are owned the same way:
   RDD under its ``LogicalRDD`` root — ``Dataset.unpersist`` never reaches
   those blocks, which otherwise live until the JVM's ContextCleaner runs.
 
+Spark keeps ONE cache entry for all ``sameResult``-equal plans, and an
+``unpersist`` of any of them drops it.  So an owned persisted frame is
+released with the last live owner of an equal plan, not the first.
+
 The rule for callers: **derive from an owned frame ⇒** :func:`carry_cache`.
 A select, filter or join over an owned frame returns a new frame, and the
 owned one is dropped the moment the caller returns; without the hand-off
@@ -19,9 +23,35 @@ does not recompute a local checkpoint.
 
 from __future__ import annotations
 
+import threading
 import weakref
 
 from pyspark.sql import DataFrame
+
+#: live owners per persisted plan, keyed by the plan's semantic hash
+_owners: dict[int, int] = {}
+_owners_lock = threading.Lock()
+
+
+class _Persisted:
+    """A persisted JVM Dataset counted among the owners of its plan's
+    cache entry; ``unpersist`` releases the entry when the last owner
+    goes."""
+
+    def __init__(self, jdf):
+        self.jdf = jdf
+        self.key = jdf.queryExecution().analyzed().semanticHash()
+        with _owners_lock:
+            _owners[self.key] = _owners.get(self.key, 0) + 1
+
+    def unpersist(self, blocking: bool) -> None:
+        with _owners_lock:
+            _owners[self.key] -= 1
+            last = not _owners[self.key]
+            if last:
+                del _owners[self.key]
+        if last:
+            self.jdf.unpersist(blocking)
 
 
 def release_on_gc(result: DataFrame, *cached: DataFrame) -> DataFrame:
@@ -36,7 +66,7 @@ def release_on_gc(result: DataFrame, *cached: DataFrame) -> DataFrame:
     If the result is dropped before execution the plan merely recomputes — a
     perf hiccup, never a correctness issue.
     """
-    return _attach(result, [c._jdf for c in cached])
+    return _attach(result, [_Persisted(c._jdf) for c in cached])
 
 
 def local_checkpoint(df: DataFrame, **kwargs) -> DataFrame:
@@ -58,6 +88,17 @@ def release(df: DataFrame) -> None:
     never be read again: a freed checkpoint fails the read."""
     for fin in df.__dict__.pop("_ft_cache_finalizers", []):
         fin()
+
+
+def owned_kinds(df: DataFrame) -> set[str]:
+    """What ``df`` owns: ``"persist"`` for a persisted frame,
+    ``"checkpoint"`` for a local checkpoint."""
+    kinds = set()
+    for fin in df.__dict__.get("_ft_cache_finalizers", []):
+        info = fin.peek()
+        for h in info[2][0] if info else ():
+            kinds.add("persist" if isinstance(h, _Persisted) else "checkpoint")
+    return kinds
 
 
 def _unpersist(handles: list) -> None:

@@ -2,9 +2,9 @@
 
 The reference refreshes its published parquet by overwrite-and-rerun
 (``scripts/state-parquet.R`` writes every state's file from scratch each
-run); the streaming side of this repo narrows that to a key-level MERGE
-(``streaming/events.run_foreach_batch_upsert``).  This operator closes the
-remaining gap: given two snapshots, report each key as ``insert`` /
+run); ``operators/upsert.merge_latest`` narrows that to a key-level MERGE.
+This operator closes the remaining gap: given two snapshots, report each
+key as ``insert`` /
 ``delete`` / ``update`` — the change feed a downstream consumer (index
 refresh, cache invalidation, incremental training-data delivery) actually
 wants.

@@ -10,13 +10,11 @@ selective filters on ANY of them skip.
 
 ``zorder_key`` is pure column algebra (shift/and/or over BIGINTs — one
 codegen'd expression, no UDF) and has an exact SQL twin for the gate.
-``zorder_write`` range-partitions by the key and sorts within partitions
-— the layout job is a single range shuffle, embarrassingly scalable.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 
 def zorder_key(x: Column, y: Column, bits: int = 16) -> Column:
@@ -46,28 +44,3 @@ def zorder_key_sql(x: str, y: str, bits: int = 16) -> str:
         terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return "CAST((" + " | ".join(terms) + ") AS BIGINT)"
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    bits: int = 16,
-    partitions: int = 8,
-) -> None:
-    """Write ``df`` as parquet clustered on the Z-curve of
-    ``(x_col, y_col)``: range-partition by the interleaved key, sort
-    within partitions, drop the key.  One range shuffle; each output file
-    covers a contiguous key range so its min/max stats are tight on both
-    dimensions (row-group sizing within files is the writer's knob)."""
-    keyed = df.withColumn(
-        "_zkey", zorder_key(F.col(x_col), F.col(y_col), bits)
-    )
-    (
-        keyed.repartitionByRange(partitions, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

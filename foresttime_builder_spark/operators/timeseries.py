@@ -48,7 +48,8 @@ def fill_gaps_layers(
     projections into ONE generated statement — the r16 fold of the FIA
     chain's remaining per-transform analyzer passes into the apply_layers
     path (guide §1.2: each eager Dataset transform re-runs the analyzer
-    over the whole deepening plan)."""
+    over the whole deepening plan).  ``direction`` is ``"downup"`` (as
+    :func:`fill_gaps`) or ``"up"``: the first non-null value after."""
     part = _partition_clause(group_cols)
     over_down = (
         f"OVER ({part}ORDER BY {_bq(order_col)} "
@@ -62,14 +63,10 @@ def fill_gaps_layers(
     for c in cols:
         down = f"last({_bq(c)}, true) {over_down}"
         up = f"first({_bq(c)}, true) {over_up}"
-        if direction == "down":
-            filled[c] = down
-        elif direction == "up":
+        if direction == "up":
             filled[c] = up
         elif direction == "downup":
             filled[c] = f"coalesce({down}, {up})"
-        elif direction == "updown":
-            filled[c] = f"coalesce({up}, {down})"
         else:
             raise ValueError(f"bad direction {direction!r}")
     return [(filled, [])]
@@ -80,13 +77,10 @@ def fill_gaps(
     group_cols: Sequence[str],
     order_col: str,
     cols: Sequence[str],
-    direction: str = "downup",
 ) -> DataFrame:
-    """Fill nulls from neighboring rows within each group (``tidyr::fill``).
-
-    direction: 'down' (last non-null before), 'up' (first non-null after),
-    'downup' (down, then up for leading nulls), 'updown' (up, then down).
-    Reference semantics: ``R/fia_tidy.R:96-98``, ``R/expand_data.R:61-70``,
+    """Fill nulls from neighboring rows within each group
+    (``tidyr::fill(.direction = "downup")``): the last non-null value
+    before, else the first non-null value after.  Reference semantics: ``R/fia_tidy.R:96-98``, ``R/expand_data.R:61-70``,
     ``R/adjust_mortality.R:90``.
     """
     from foresttime_builder_spark.functions.helpers import apply_layers
@@ -94,7 +88,7 @@ def fill_gaps(
     # one projection for every column (N analyzer passes -> 1), via the
     # same generated-SQL path the chain fusion uses
     return apply_layers(
-        df, fill_gaps_layers(group_cols, order_col, cols, direction)
+        df, fill_gaps_layers(group_cols, order_col, cols)
     )
 
 
@@ -103,15 +97,14 @@ def expand_grid(
     group_cols: Sequence[str],
     x_col: str,
     out_col: str | None = None,
-    flag_col: str = "interpolated",
 ) -> DataFrame:
     """Densify an integer axis to every value between each group's min and max.
 
     Equivalent of ``tidyr::expand(YEAR = full_seq(INVYR, 1))`` + the
     provenance-flag right join (``R/expand_data.R:41-57``): emits one row per
     group per grid value; rows absent from the input get nulls in every
-    non-group column and ``flag_col = True``; original rows keep their values
-    and get ``flag_col = False``.
+    non-group column and ``interpolated = True``; original rows keep their
+    values and get ``interpolated = False``.
 
     Implementation: ONE pass — a ``lead`` window over (group, x) finds each
     row's next year, and every row explodes into itself plus the gap years
@@ -131,7 +124,7 @@ def expand_grid(
     - a row whose x is NULL never matched the grid and vanished → filtered;
     - rows in a group with a NULL group key never matched (SQL NULL
       equality): their VALUES vanish — every grid year of that group comes
-      back all-NULL with ``flag_col = true``, and duplicate years collapse
+      back all-NULL with ``interpolated = true``, and duplicate years collapse
       to the one grid row (``plans/state_on_fixture.py`` empty-plot
       contract) → only the last row of each distinct x emits, nulled;
     - duplicate (group, x) rows in a matched group each re-matched their
@@ -176,7 +169,7 @@ def expand_grid(
         *group_cols,
         F.col(ycol).alias(out_col),
         *[F.when(orig_row, F.col(c)).alias(c) for c in others],
-        (~orig_row).alias(flag_col),
+        (~orig_row).alias("interpolated"),
     )
 
 
@@ -185,7 +178,6 @@ def linear_interpolate(
     group_cols: Sequence[str],
     x_col: str,
     cols: Sequence[str],
-    extrapolate: bool = True,
 ) -> DataFrame:
     """Per-group linear interpolation / extrapolation over a numeric axis.
 
@@ -194,13 +186,10 @@ def linear_interpolate(
     - rows with a known value keep it;
     - gaps strictly between two known points are linearly interpolated on
       ``x_col``;
-    - with ``extrapolate=True``:
-        * groups with exactly one known value carry it *forward* only
-          (leading rows stay null);
-        * groups with >= 2 known values extend the line through the two
-          nearest known points beyond either end (trailing and leading);
-    - with ``extrapolate=False`` values outside the known range stay null,
-      and single-known-value groups are returned unchanged.
+    - groups with exactly one known value carry it *forward* only (leading
+      rows stay null);
+    - groups with >= 2 known values extend the line through the two
+      nearest known points beyond either end (trailing and leading).
 
     Note: for leading gaps with >= 2 known points the reference's R
     implementation concatenates extrapolated values at the *end* of the
@@ -212,7 +201,7 @@ def linear_interpolate(
     from foresttime_builder_spark.functions.helpers import apply_layers
 
     return apply_layers(
-        df, linear_interpolate_layers(group_cols, x_col, cols, extrapolate)
+        df, linear_interpolate_layers(group_cols, x_col, cols)
     )
 
 
@@ -220,7 +209,6 @@ def linear_interpolate_layers(
     group_cols: Sequence[str],
     x_col: str,
     cols: Sequence[str],
-    extrapolate: bool = True,
 ) -> list[tuple[dict[str, str], list[str]]]:
     """:func:`linear_interpolate` as ``apply_layers`` layers, so the FIA
     chain can fuse its whole interpolation stage into ONE generated
@@ -285,16 +273,6 @@ def linear_interpolate_layers(
         # an unknown row that shares its x with a known one: both nearest
         # points are that peer, so the value is its y, not 0 / 0
         same_x = f"WHEN ({prev}).x = ({nxt}).x THEN ({prev}).y "
-
-        if not extrapolate:
-            final[c] = (
-                f"CASE WHEN {y} IS NOT NULL THEN {y} "
-                f"WHEN size({k}) <= 1 THEN {y} "
-                f"{same_x}"
-                f"WHEN {prev} IS NOT NULL AND {nxt} IS NOT NULL THEN {interp} "
-                "ELSE CAST(NULL AS DOUBLE) END"
-            )
-            continue
 
         # boundary lines through the two known points nearest each end
         l, l2 = f"try_element_at({k}, -1)", f"try_element_at({k}, -2)"

@@ -79,7 +79,7 @@ def add_composite_ids(df: DataFrame) -> DataFrame:
     return out
 
 
-def split_composite_ids(df: DataFrame, id_col: str = "tree_ID") -> DataFrame:
+def split_composite_ids(df: DataFrame) -> DataFrame:
     """Inverse of :func:`add_composite_ids` (reference ``R/fia_ids.R:59-77``).
 
     ``F.get`` (NULL past the end), not ``getItem`` (ANSI
@@ -87,10 +87,8 @@ def split_composite_ids(df: DataFrame, id_col: str = "tree_ID") -> DataFrame:
     built from a NULL key, which concat_ws silently skips — must parse
     to NULL fields like DuckDB's out-of-range list index, not kill the
     stage."""
-    parts = ["STATECD", "UNITCD", "COUNTYCD", "PLOT"]
-    if id_col == "tree_ID":
-        parts += ["SUBP", "TREE"]
-    split = F.split(F.col(id_col), "_")
+    parts = ["STATECD", "UNITCD", "COUNTYCD", "PLOT", "SUBP", "TREE"]
+    split = F.split(F.col("tree_ID"), "_")
     out = df
     for i, name in enumerate(parts):
         out = out.withColumn(name, F.get(split, i))
@@ -208,11 +206,9 @@ def expand_data(data: DataFrame) -> DataFrame:
         swaps["CULL"] = F.coalesce("CULL", F.lit(0.0))
     data = data.withColumns(swaps)
 
-    expanded = expand_grid(
-        data, GROUP, "INVYR", out_col="YEAR", flag_col="interpolated"
-    )
+    expanded = expand_grid(data, GROUP, "INVYR", out_col="YEAR")
     fill_cols = [c for c in INVARIANT_COLS if c in cols]
-    return fill_gaps(expanded, GROUP, "YEAR", fill_cols, direction="downup")
+    return fill_gaps(expanded, GROUP, "YEAR", fill_cols)
 
 
 def interpolate_data(data_expanded: DataFrame) -> DataFrame:
@@ -462,9 +458,7 @@ def adjust_mortality(
     return masked.selectExpr(f"inline(array({', '.join(structs)}))")
 
 
-def fia_annualize(data_tidy: DataFrame, use_mortyr: bool = True) -> DataFrame:
+def fia_annualize(data_tidy: DataFrame) -> DataFrame:
     """expand → interpolate → adjust_mortality (reference
     ``R/fia_annualize.R:29-34``)."""
-    return adjust_mortality(
-        interpolate_data(expand_data(data_tidy)), use_mortyr=use_mortyr
-    )
+    return adjust_mortality(interpolate_data(expand_data(data_tidy)))

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 LB_PER_TON = 2000.0
 
@@ -46,31 +46,20 @@ def _finite_or_zero(col: F.Column) -> F.Column:
     ).otherwise(F.lit(0.0))
 
 
-def _estimate(
-    d: DataFrame,
-    tree_domain: Column | None,
-    area_domain: Column | None,
-    value_col: str,
-) -> DataFrame:
+def _estimate(d: DataFrame) -> DataFrame:
     """The post-stratified estimator over ``d``, whose rows carry their
     design's ``EXPNS`` and ``ADJ_FACTOR_SUBP`` (NULL where the plot has no
     stratum: the row contributes 0).  Totals per YEAR:
 
-        Σ value · TPA · ADJ_FACTOR_SUBP · EXPNS / 2000   (tree domain)
-        Σ CONDPROP · ADJ_FACTOR_SUBP · EXPNS             (area domain)
+        Σ CARBON_AG · TPA · ADJ_FACTOR_SUBP · EXPNS / 2000   (tree domain)
+        Σ CONDPROP · ADJ_FACTOR_SUBP · EXPNS                 (area domain)
 
-    and ``tons_per_acre`` = total_tons / total_area."""
+    and ``tons_per_acre`` = total_tons / total_area.  The domains are the
+    vignette's: live trees on sampled forest land."""
     # domain indicators (qmd:103-104); null-safe to 0 like the R arithmetic
-    adi_cond = (
-        area_domain
-        if area_domain is not None
-        else (F.col("COND_STATUS_CD") == 1) & (F.col("INTENSITY") == 1)
-    )
-    tdi_cond = (
-        tree_domain if tree_domain is not None else (F.col("STATUSCD") == 1)
-    )
+    adi_cond = (F.col("COND_STATUS_CD") == 1) & (F.col("INTENSITY") == 1)
     adi = F.when(adi_cond, 1.0).otherwise(0.0)
-    tdi = F.when(tdi_cond, 1.0).otherwise(0.0) * adi
+    tdi = F.when(F.col("STATUSCD") == 1, 1.0).otherwise(0.0) * adi
     d = d.withColumn("aDI", adi).withColumn("tDI", tdi)
     adj = F.coalesce(F.col("ADJ_FACTOR_SUBP"), F.lit(0.0))
     expns = F.coalesce(F.col("EXPNS"), F.lit(0.0))
@@ -101,7 +90,7 @@ def _estimate(
         "aDI",
     ).agg(
         F.sum(
-            _finite_or_zero(F.col(value_col))
+            _finite_or_zero(F.col("CARBON_AG"))
             * F.coalesce(F.col("TPA_UNADJ"), F.lit(0.0))
             * adj
             * expns
@@ -145,14 +134,8 @@ def _year_design(df: DataFrame, area: float) -> DataFrame:
     )
 
 
-def estimate_population(
-    df: DataFrame,
-    area: float,
-    tree_domain: Column | None = None,
-    area_domain: Column | None = None,
-    value_col: str = "CARBON_AG",
-) -> DataFrame:
-    """Per-year population totals and per-acre ratio for ``value_col``
+def estimate_population(df: DataFrame, area: float) -> DataFrame:
+    """Per-year population totals and per-acre ratio for ``CARBON_AG``
     (reference ``vignettes/pop_scaling.qmd:100-166``).
 
     Returns one row per YEAR: ``total_tons`` (Σ value·TPA·EXPNS / 2000),
@@ -167,16 +150,11 @@ def estimate_population(
     NULL; ``expand_grid`` never emits one.
     """
     d = df.join(F.broadcast(_year_design(df, area)), on="YEAR", how="left")
-    return _estimate(d, tree_domain, area_domain, value_col)
+    return _estimate(d)
 
 
 def estimate_population_stratified(
-    df: DataFrame,
-    pop_stratum: DataFrame,
-    pop_assgn: DataFrame,
-    tree_domain: Column | None = None,
-    area_domain: Column | None = None,
-    value_col: str = "CARBON_AG",
+    df: DataFrame, pop_stratum: DataFrame, pop_assgn: DataFrame
 ) -> DataFrame:
     """Design-based population totals using the FIA POP tables
     (the reference downloads-but-never-reads them, ``R/fia_download.R:2-12``;
@@ -201,7 +179,7 @@ def estimate_population_stratified(
         F.broadcast(strat), on="STRATUM_CN"
     )
     d = df.join(F.broadcast(dim), on="PLT_CN", how="left")
-    return _estimate(d, tree_domain, area_domain, value_col)
+    return _estimate(d)
 
 
 def multi_grain_sweep(

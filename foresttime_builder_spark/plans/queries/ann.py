@@ -153,16 +153,14 @@ def q95_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from foresttime_builder_spark.operators.ann import random_projection
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return random_projection(emb, "vec_id", "embedding", out_dims=8)
+    return random_projection(emb)
 
 def _random_projection_oracle() -> str:
     from foresttime_builder_spark.operators.ann import (
         random_projection_oracle_sql,
     )
 
-    return random_projection_oracle_sql(
-        "embeddings", "vec_id", "embedding", out_dims=8
-    )
+    return random_projection_oracle_sql()
 
 def q101_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality evaluation: recall@3 of the IVF index (q42's operator)

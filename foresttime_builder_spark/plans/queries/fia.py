@@ -143,19 +143,18 @@ def q27_population_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q28_grain_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-grain aggregation sweep via one GROUPING SETS pass
     (SURVEY §2.4 A7; the reference loops ~14 separate summaries)."""
-    est = _estimated(_panel(spark, sf_dir, _CPANEL_SQL)).persist()
+    # no persist: the one GROUPING SETS pass reads the estimate once, so a
+    # cache would only add a materialization
+    est = _estimated(_panel(spark, sf_dir, _CPANEL_SQL))
     out = multi_grain_sweep(
         est, grains=[["SPCD"], ["YEAR"], ["SPCD", "YEAR"], []]
     )
-    return release_on_gc(
-        out.select(
-            F.col("SPCD").cast("int").alias("spcd"),
-            F.col("YEAR").cast("int").alias("year"),
-            "grain",
-            fixed("weighted_value", 2).alias("weighted_value_e2"),
-            "n_rows",
-        ),
-        est,
+    return out.select(
+        F.col("SPCD").cast("int").alias("spcd"),
+        F.col("YEAR").cast("int").alias("year"),
+        "grain",
+        fixed("weighted_value", 2).alias("weighted_value_e2"),
+        "n_rows",
     )
 
 
@@ -284,9 +283,7 @@ def q39_id_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_custkey") % 9 + 1).alias("TREE"),
     )
     built = fia.add_composite_ids(synth)
-    parsed = fia.split_composite_ids(
-        built.select("tree_ID", "plot_ID"), id_col="tree_ID"
-    )
+    parsed = fia.split_composite_ids(built.select("tree_ID", "plot_ID"))
     return parsed.select(
         "tree_ID",
         "plot_ID",

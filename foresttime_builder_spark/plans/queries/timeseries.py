@@ -138,7 +138,7 @@ def q10_fill_downup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Down-then-up gap fill of group-invariant columns (SURVEY §2.5 W1/W3)."""
     panel = _orders_panel(spark, sf_dir)
     g = expand_grid(panel, ["custkey"], "year")
-    out = fill_gaps(g, ["custkey"], "year", ["prio"], direction="downup")
+    out = fill_gaps(g, ["custkey"], "year", ["prio"])
     return out.select("custkey", "year", F.col("prio").alias("prio_filled"))
 
 ORACLE_Q10 = f"""

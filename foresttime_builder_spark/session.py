@@ -20,6 +20,7 @@ import glob
 import hashlib
 import json
 import os
+import re
 import shutil
 import sys
 import uuid
@@ -263,12 +264,13 @@ def dir_bytes(path: str) -> int | None:
 def get_spark(
     app_name: str = "foresttime_builder_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     data_bytes: int | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or cpus
+    # one shuffle partition per core of a local master
+    local = re.fullmatch(r"local\[(\d+)\]", master)
+    shuffle_partitions = int(local.group(1)) if local else cpus
     if data_bytes is None:
         sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
         if sf_dir:
@@ -303,7 +305,7 @@ def get_spark(
         # 5.8 s -> 4.8 s at sf0.1) predates the single-pass run_states,
         # which persists nothing.  Today's persist sites are the pair
         # family's docsets and masks (operators/dedup.py), the dsir,
-        # substr, sketch and graph intermediates, and the q27/q28/q52
+        # substr, sketch and graph intermediates, and the q27/q52
         # panels in plans/queries/fia.py; neither the gain on them nor
         # the cost is re-measured.  The cost is exchange reuse lost to
         # output-partitioning changes, and it can apply:

@@ -7,7 +7,7 @@ CSVs the reference ships (``inst/exdata/DE_*.csv``, FIXTURES.md §1).
 
 Three consumers share this single source of truth:
 
-- :func:`spark_db` — in-memory DataFrames for pytest;
+- ``tests/fia_fixtures.spark_db`` — in-memory DataFrames for pytest;
 - :func:`write_csvs` — ``44_{TABLE}.csv`` files with ``NA`` nulls, driven
   through the real CSV source layer (``sources.fia.fia_load``) by the
   end-to-end state-pipeline gate (q51);
@@ -200,16 +200,6 @@ JCASE = (
     "CASE WHEN SPCD = 475 THEN 10 WHEN SPCD = 131 THEN 4 "
     "WHEN SPCD = 318 THEN 9 ELSE 7 END"
 )
-
-
-def spark_db(spark) -> dict:
-    """In-memory DataFrames (pytest fast path, no I/O)."""
-    out = {}
-    for table, (cols, rows) in build_rows().items():
-        out[table] = spark.createDataFrame(
-            [tuple(r[c] for c in cols) for r in rows], SCHEMAS[table]
-        )
-    return out
 
 
 def _csv_cell(v) -> str:

@@ -42,12 +42,14 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 _EVENTS_SCHEMA_BASE = "event_id bigint, user_id bigint, event_type string, value double"
 
 
-def read_event_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def _events_reader(reader):
+    # file-source streams take a directory; the filter selects the files
+    return reader.option("pathGlobFilter", "events.parquet").option(
+        "recursiveFileLookup", "true"
+    )
+
+
+def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the events parquet.
 
     readStream needs a pinned schema, but the physical type of ``ts`` depends
@@ -58,29 +60,19 @@ def read_event_stream(
     apply the nanos→timestamp conversion only when the column is physically
     a long.
 
-    ``glob`` selects the files within ``sf_dir`` (default: the single
-    testdata events file).  ``max_files_per_trigger`` bounds each
-    micro-batch to N source files — with a time-chunked multi-file layout
-    this is how the differential tests force a genuinely incremental
-    multi-batch execution instead of one catch-all batch.
+    The stream reads every ``events.parquet`` file under ``sf_dir``, one
+    file per micro-batch (oldest first), as files would arrive from a
+    time-chunked log: the testdata's single file is one batch, and a tree
+    of time-ordered chunks runs genuinely incremental.
     """
-    batch_ts = (
-        spark.read.option("pathGlobFilter", glob)
-        .parquet(sf_dir)
-        .schema["ts"]
-        .dataType
-    )
+    batch_ts = _events_reader(spark.read).parquet(sf_dir).schema["ts"].dataType
     ts_is_long = isinstance(batch_ts, T.LongType)
     schema = _EVENTS_SCHEMA_BASE + (", ts bigint" if ts_is_long else ", ts timestamp")
-    # file-source streams take a directory; glob selects the member files
-    reader = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", glob)
+    stream = (
+        _events_reader(spark.readStream.schema(schema))
+        .option("maxFilesPerTrigger", 1)
+        .parquet(sf_dir)
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.load(sf_dir)
     if ts_is_long:
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return stream
@@ -251,97 +243,6 @@ def purchase_attribution_outer(events: DataFrame) -> DataFrame:
         ),
         "left_outer",
     ).select("purchase_id", "user_id", "click_id", "click_ts", "purchase_ts")
-
-
-def _upsert_current_dir(path: str) -> str | None:
-    """Resolve the committed version directory of an upsert table, or None
-    if no commit has happened yet."""
-    pointer = os.path.join(path, "CURRENT")
-    if not os.path.exists(pointer):
-        return None
-    with open(pointer) as fh:
-        return os.path.join(path, fh.read().strip())
-
-
-def read_upsert_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read the current committed snapshot of a table maintained by
-    :func:`run_foreach_batch_upsert`."""
-    current = _upsert_current_dir(path)
-    if current is None:
-        raise FileNotFoundError(f"no committed snapshot under {path}")
-    return spark.read.parquet(current)
-
-
-def run_foreach_batch_upsert(
-    events: DataFrame,
-    path: str,
-    keys: tuple[str, ...] = ("user_id",),
-    version_col: str = "ts",
-    tie_break: tuple[str, ...] = ("event_id",),
-    checkpoint_dir: str | None = None,
-) -> None:
-    """Incrementally materialize the latest row per key into a parquet
-    table: every micro-batch MERGEs into the table via
-    ``operators.upsert.merge_latest`` — the streaming analog of the
-    reference's overwrite-and-rerun refresh (``scripts/state-parquet.R``),
-    with the whole-table overwrite narrowed to a key-level upsert.
-
-    Plain parquet has no transactions, so the table lives behind a
-    ``CURRENT`` pointer file: each merge writes a fresh versioned directory
-    and the commit is ONE atomic rename of the pointer's temp file — there
-    is no window in which the table is missing (the two-rename swap this
-    replaces had one).  The PREVIOUS version directory is retained for one
-    commit (only N-2 and older are deleted), so a reader that resolved the
-    old pointer just before a commit can still finish its scan; a reader
-    must not lag by more than one full commit.  This is the poor-man's
-    snapshot commit a
-    transactional format (Delta/Iceberg) provides natively; the merge plan
-    itself (one shuffle per batch on the business key) is identical there.
-    Runs with ``availableNow`` and blocks until the source is drained.
-    Pass ``checkpoint_dir`` (persistent) for cross-restart idempotency —
-    the default tempdir only dedups replayed batches within one invocation.
-    Read the table back with :func:`read_upsert_table`.
-    """
-    import shutil
-
-    from foresttime_builder_spark.operators.upsert import merge_latest
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        current = _upsert_current_dir(path)
-        if current is not None:
-            base = spark.read.parquet(current)
-        else:
-            base = batch_df.limit(0)
-        merged = merge_latest(base, batch_df, keys, version_col, tie_break)
-        os.makedirs(path, exist_ok=True)
-        staging = os.path.join(path, f"v{batch_id}-{uuid.uuid4().hex[:8]}")
-        merged.write.mode("overwrite").parquet(staging)  # reads old version
-        pointer_tmp = os.path.join(path, f".CURRENT.tmp-{batch_id}")
-        with open(pointer_tmp, "w") as fh:
-            fh.write(os.path.basename(staging))
-        os.rename(pointer_tmp, os.path.join(path, "CURRENT"))  # atomic commit
-        # GC: keep the new version AND the one it replaced (a reader that
-        # resolved the old pointer pre-commit can still be mid-scan); only
-        # N-2 and older go.
-        keep = {staging, current} - {None}
-        for entry in os.listdir(path):
-            full = os.path.join(path, entry)
-            if (
-                os.path.isdir(full)
-                and entry.startswith("v")
-                and full not in keep
-            ):
-                shutil.rmtree(full)
-
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_upsert_")
-    q = (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def run_to_memory(

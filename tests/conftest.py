@@ -13,5 +13,5 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="foresttime_tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark(app_name="foresttime_tests", master="local[4]")
     yield s

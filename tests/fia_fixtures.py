@@ -16,7 +16,6 @@ from foresttime_builder_spark.sources.fixture_state import (  # noqa: F401
     SCHEMAS,
     YEARS,
     build_rows,
-    spark_db,
 )
 
 
@@ -29,3 +28,13 @@ def build_db() -> dict[str, pd.DataFrame]:
         )
         for table, (cols, rows) in build_rows().items()
     }
+
+
+def spark_db(spark) -> dict:
+    """In-memory DataFrames of the fixture tables (no I/O)."""
+    out = {}
+    for table, (cols, rows) in build_rows().items():
+        out[table] = spark.createDataFrame(
+            [tuple(r[c] for c in cols) for r in rows], SCHEMAS[table]
+        )
+    return out

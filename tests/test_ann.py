@@ -7,7 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from foresttime_builder_spark.operators.ann import brute_topk_np
+from foresttime_builder_spark.operators.ann import MAX_BRUTE_PROBES, brute_topk_np
 
 
 def _corpus(spark, n=40, dims=4):
@@ -19,11 +19,13 @@ def _corpus(spark, n=40, dims=4):
 
 def test_probe_cap_raises(spark):
     base = _corpus(spark)
-    probes = base.select(
-        F.col("vec_id").alias("probe_id"), F.col("vec").alias("probe_vec")
+    # one probe over the cap: the bounded collect raises before scoring
+    probes = spark.range(MAX_BRUTE_PROBES + 1).select(
+        F.col("id").alias("probe_id"),
+        F.array(*[F.lit(float(j + 1)) for j in range(4)]).alias("probe_vec"),
     )
-    with pytest.raises(ValueError, match="max_probes"):
-        brute_topk_np(base, probes, k=3, max_probes=10)
+    with pytest.raises(ValueError, match="MAX_BRUTE_PROBES"):
+        brute_topk_np(base, probes, k=3)
 
 
 def test_brute_topk_matches_exact(spark):
@@ -52,17 +54,6 @@ def test_brute_topk_matches_exact(spark):
             assert got[(p, rank)] == (-neg_i, c)
 
 
-def test_ivf_topk_dims_mismatch_raises(spark):
-    """A pinned dims that disagrees with the data must raise instead of
-    silently truncating the distance/cosine arithmetic (the oracle always
-    covers the full vector width)."""
-    from foresttime_builder_spark.operators.ann import ivf_topk
-
-    emb = _corpus(spark, n=10, dims=4).withColumnRenamed("vec", "embedding")
-    with pytest.raises(ValueError, match="probed width"):
-        ivf_topk(emb, dims=8)
-
-
 def test_random_projection_matches_numpy_reference(spark):
     import numpy as np
 
@@ -79,18 +70,18 @@ def test_random_projection_matches_numpy_reference(spark):
     df = spark.createDataFrame(vecs, ["vec_id", "embedding"])
     out = {
         (r["vec_id"], r["out_dim"]): r["value_e9"]
-        for r in random_projection(df, out_dims=3, salt="t").collect()
+        for r in random_projection(df).collect()
     }
     S = np.array(
-        [[_rp_sign("t", i, j) for j in range(3)] for i in range(4)],
+        [[_rp_sign("rp", i, j) for j in range(8)] for i in range(4)],
         dtype="int64",
     )
     for vid, v in vecs:
         q = np.floor(np.array(v, dtype="float64") * 1e9).astype("int64")
         ref = q @ S
-        for j in range(3):
+        for j in range(8):
             assert out[(vid, j)] == ref[j]
-    assert len(out) == 9
+    assert len(out) == 24
 
 
 def test_random_projection_preserves_sign_symmetry(spark):
@@ -101,20 +92,11 @@ def test_random_projection_preserves_sign_symmetry(spark):
     df = spark.createDataFrame(
         [(0, [1.0, -2.0]), (1, [-1.0, 2.0])], ["vec_id", "embedding"]
     )
-    rows = random_projection(df, out_dims=4, salt="s").collect()
+    rows = random_projection(df).collect()
     by = {}
     for r in rows:
         by.setdefault(r["vec_id"], {})[r["out_dim"]] = r["value_e9"]
-    assert all(by[0][j] == -by[1][j] for j in range(4))
-
-
-def test_random_projection_validation():
-    from foresttime_builder_spark.operators.ann import random_projection
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="out_dims"):
-        random_projection(None, out_dims=0)
+    assert all(by[0][j] == -by[1][j] for j in range(8))
 
 
 def test_adaptive_nprobe_integer_chain():
@@ -413,7 +395,7 @@ def test_ivf_probe_filter_commutes(spark):
 
 
 def test_coverage_sample_invariants(spark):
-    """kmeans_coverage_sample contract: <= per_cluster rows per cluster,
+    """kmeans_coverage_sample contract: <= 3 rows per cluster,
     pick_rank dense from 1, representative picks are each cluster's
     distance-minima (diverse: maxima), and the two postures agree on the
     clustering itself."""
@@ -424,8 +406,8 @@ def test_coverage_sample_invariants(spark):
         for i in range(150)
     ]
     emb = spark.createDataFrame(vecs, ["vec_id", "embedding"])
-    rep = kmeans_coverage_sample(emb, per_cluster=2).collect()
-    div = kmeans_coverage_sample(emb, per_cluster=2, order="diverse").collect()
+    rep = kmeans_coverage_sample(emb).collect()
+    div = kmeans_coverage_sample(emb, order="diverse").collect()
     for out in (rep, div):
         by_cid: dict[int, list] = {}
         for r in out:
@@ -434,7 +416,7 @@ def test_coverage_sample_invariants(spark):
             assert sorted(x["pick_rank"] for x in rows_) == list(
                 range(1, len(rows_) + 1)
             )
-            assert len(rows_) <= 2
+            assert len(rows_) <= 3
     # same quantizer: the set of non-empty clusters matches
     assert {r["cid"] for r in rep} == {r["cid"] for r in div}
     # representative rank-1 distance <= diverse rank-1 distance per cluster

@@ -14,12 +14,14 @@ from __future__ import annotations
 
 import gc
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from foresttime_builder_spark.functions.helpers import apply_layers
 from foresttime_builder_spark.operators.cache import (
     carry_cache,
     local_checkpoint,
+    owned_kinds,
     release,
     release_on_gc,
 )
@@ -132,3 +134,38 @@ def test_local_checkpoint_is_owned_like_a_persisted_frame(spark):
     ckpt = local_checkpoint(spark.range(10))
     release(ckpt)
     assert _persisted_ids(spark) <= before
+
+
+def test_equal_plans_keep_their_cache_until_the_last_owner(spark):
+    """Two owners of sameResult-equal persisted plans share Spark's one
+    cache entry: dropping the first must leave the second's cache in
+    place, and dropping the second releases it."""
+
+    def owned():
+        c = spark.range(1000).selectExpr("id", "id % 7 AS k").persist()
+        return release_on_gc(c.groupBy("k").count(), c)
+
+    def equal_is_cached():
+        probe = spark.range(1000).selectExpr("id", "id % 7 AS k")
+        return probe.storageLevel != StorageLevel.NONE
+
+    a, b = owned(), owned()
+    del a
+    gc.collect()
+    assert "InMemoryTableScan" in b._jdf.queryExecution().executedPlan().toString()
+    assert equal_is_cached()
+    del b
+    gc.collect()
+    assert not equal_is_cached()
+
+
+def test_owned_kinds_names_each_owned_cache(spark):
+    """What the correctness gate checks a plan reads: the kinds of cache a
+    frame owns."""
+    c = spark.range(10).persist()
+    owner = release_on_gc(c.selectExpr("id + 1 AS id"), c)
+    ckpt = local_checkpoint(spark.range(10))
+    assert owned_kinds(owner) == {"persist"}
+    assert owned_kinds(ckpt) == {"checkpoint"}
+    assert owned_kinds(carry_cache(owner.select("id"), owner)) == {"persist"}
+    assert owned_kinds(spark.range(1)) == set()

@@ -292,5 +292,7 @@ def test_null_key_plot_matches_tidy_twin(spark):
         con.close()
     got = [tuple(r) for r in tidy.collect()]
     assert sorted(map(norm, got), key=repr) == sorted(map(norm, want), key=repr)
-    annual = fia.fia_annualize(tidy, use_mortyr=False)
+    annual = fia.adjust_mortality(
+        fia.interpolate_data(fia.expand_data(tidy)), use_mortyr=False
+    )
     assert annual.count() == want_annual

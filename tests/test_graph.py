@@ -269,7 +269,7 @@ def test_semantic_dedup_composition_semantics(spark):
         (6, v(1, 1, 1, 1, 1, 1)),             # singleton
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    pairs = embedding_neardup_pairs(emb, threshold=0.99, n_bits=1)
+    pairs = embedding_neardup_pairs(emb, threshold=0.99)
     comp = connected_components(pairs, "id_a", "id_b")
     assigned = (
         emb.select("vec_id")

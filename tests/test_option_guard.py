@@ -1,45 +1,132 @@
-"""Spark-free guard: every defaulted package parameter has a caller that
-passes it.
+"""Spark-free guard: every defaulted package parameter is an option a
+product caller really uses, and every top-level package function has a
+product caller.
 
-A default nobody overrides is a constant spelled as an option: the
-branch only another value reaches never runs, so it is untested code
-that reads as a supported configuration.  The scan collects the
+A default only a test overrides is a constant spelled as an option: the
+branch behind the other value never runs in the product, so it reads as
+a supported configuration that nothing ships.  The scan collects the
 defaulted parameters of every package function and method, then every
-call in the package, ``tools/``, ``perfbench/``, ``bench.py``,
-``__spark_entry__.py`` and ``tests/``, matched by callee name.  A call
-passes a parameter when it names it as a keyword, reaches it by
-position, or spreads ``*args`` / ``**kwargs``.
+call outside the tests (the package, ``tools/``, ``perfbench/`` except
+its self-tests, ``bench.py`` and ``__spark_entry__.py``), matched by
+callee name.  A call passes a parameter when it names it as a keyword,
+reaches it by position, or spreads ``*args`` / ``**kwargs``; a pass of
+the default's own literal does not count.  A top-level function needs a
+reference (a call, or its name as a value) outside the tests and its own
+definition.
 """
 
 from __future__ import annotations
 
 import ast
 import os
+from collections import Counter
 
 from tests.test_sql_formatter_guard import PKG, package_nodes
 
 ROOT = os.path.dirname(PKG)
-CALLER_LOCATIONS = ["tools", "perfbench", "tests", "bench.py", "__spark_entry__.py"]
+CALLER_LOCATIONS = ["tools", "perfbench", "bench.py", "__spark_entry__.py"]
+TEST_FILES = {os.path.join(ROOT, "perfbench", "test_perfbench.py")}
 
-# Deployment settings of the FIA downloader, which mirrors the reference
-# R downloader's signature; a network deployment sets them, no test can.
-ALLOWED = {"fia_download"}
+_DEPLOYMENT = (
+    "deployment setting of the FIA downloader, which mirrors the reference "
+    "R downloader's signature; a network deployment sets it, no test can"
+)
+#: ``function(param)`` or ``function`` -> why it stays without a product caller
+EXEMPT = {
+    "fia_download": _DEPLOYMENT,
+    "fia_download(extract)": _DEPLOYMENT,
+    "fia_download(keep_zip)": _DEPLOYMENT,
+    "fia_download(timeout)": _DEPLOYMENT,
+    "fia_download(max_workers)": _DEPLOYMENT,
+    "run_states(estimate)": (
+        "the frozen benchmark calls run_states(..., estimate=True); tests "
+        "run the annualize-only write"
+    ),
+    "connected_components(small_graph_edges)": (
+        "the operator picks the driver-side path below this edge count; "
+        "tests need the distributed path at test size"
+    ),
+}
+
+#: offenders not yet triaged (ROADMAP open item 7): each becomes a
+#: constant or gets a product caller; the list only shrinks
+PENDING = {
+    "_components_sql(sym)",
+    "_lsh_representatives_oracle(threshold)",
+    "connected_components(max_iter)",
+    "connected_components(stats)",
+    "containment_pairs(threshold)",
+    "contamination(n)",
+    "dedup_finalize(clusters)",
+    "dedup_finalize(pairs)",
+    "dedup_finalize(strategy)",
+    "dedup_finalize(threshold)",
+    "derive_candidate_budget(n_workers)",
+    "derive_candidate_budget(safety)",
+    "domain_cap(n_salts)",
+    "dsir_logweights(add_k)",
+    "dsir_logweights(n_buckets)",
+    "duplicated_span_coverage(n)",
+    "duplicated_span_coverage_oracle_sql(n)",
+    "edit_distance_pairs(max_key_len)",
+    "equidepth_histogram(scale)",
+    "equidepth_histogram_oracle_sql(scale)",
+    "equidepth_histogram_sampled(max_sample_rows)",
+    "equidepth_histogram_sampled(scale)",
+    "equidepth_histogram_sampled_oracle_sql(scale)",
+    "estimate_candidate_pairs(sample_docs)",
+    "incremental_dedup(band_size)",
+    "incremental_dedup(n_hashes)",
+    "incremental_dedup(threshold)",
+    "incremental_group_sum(old_agg)",
+    "kmv_by_oracle_sql(k)",
+    "kmv_distinct(k)",
+    "kmv_distinct_by(k)",
+    "kmv_distinct_by(oversample)",
+    "kmv_oracle_sql(k)",
+    "line_dedup(max_doc_freq)",
+    "line_dedup_oracle_sql(max_doc_freq)",
+    "minhash_lsh_pairs(on_budget)",
+    "minhash_lsh_pairs(verify)",
+    "ngram_lm_score(add_k)",
+    "numeric_histogram(scale)",
+    "numeric_histogram_oracle_sql(scale)",
+    "pack_sequences(n_shards)",
+    "quota_sample(mix_col)",
+    "read_jsonl(permissive)",
+    "salted_agg(salt)",
+    "semi_reduced_join(how)",
+    "semi_reduced_join(n_buckets)",
+    "split_assign(id_col)",
+    "split_assign(salt)",
+    "split_assign(splits)",
+    "stratified_split_exact(splits)",
+    "temperature_quotas(mix_col)",
+    "top_token_ngrams(k)",
+    "top_token_ngrams(n)",
+    "top_token_ngrams_oracle_sql(k)",
+    "top_token_ngrams_oracle_sql(n)",
+    "zorder_key(bits)",
+    "zorder_key_sql(bits)",
+}
 
 
 def _defaulted(fn, is_method: bool):
-    """``(param, position)`` per defaulted parameter of ``fn``; position is
-    the index a positional call reaches it at (``None`` for keyword-only),
-    counted after ``self`` / ``cls`` for a method."""
+    """``(param, position, default)`` per defaulted parameter of ``fn``;
+    position is the index a positional call reaches it at (``None`` for
+    keyword-only), counted after ``self`` / ``cls`` for a method."""
     a = fn.args
     positional = a.posonlyargs + a.args
     if is_method:
         positional = positional[1:]
     first = len(positional) - len(a.defaults)
-    for i, arg in enumerate(positional[first:], start=first):
-        yield arg.arg, i
+    for i, (arg, default) in enumerate(
+        zip(positional[first:], a.defaults), start=first
+    ):
+        yield arg.arg, i, default
     for arg, default in zip(a.kwonlyargs, a.kw_defaults):
         if default is not None:
-            yield arg.arg, None
+            yield arg.arg, None, default
 
 
 def _is_static(fn) -> bool:
@@ -50,9 +137,9 @@ def _is_static(fn) -> bool:
 
 
 def defaulted_params(modules):
-    """``(path, line, function, param, position)`` for every defaulted
-    parameter of every function and method in ``modules``, an iterable of
-    ``(path, tree)``."""
+    """``(path, line, function, param, position, default)`` for every
+    defaulted parameter of every function and method in ``modules``, an
+    iterable of ``(path, tree)``."""
     for path, tree in modules:
         methods = {
             id(f)
@@ -64,8 +151,8 @@ def defaulted_params(modules):
         }
         for fn in ast.walk(tree):
             if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                for param, pos in _defaulted(fn, id(fn) in methods):
-                    yield path, fn.lineno, fn.name, param, pos
+                for param, pos, default in _defaulted(fn, id(fn) in methods):
+                    yield path, fn.lineno, fn.name, param, pos, default
 
 
 def _callee(call):
@@ -78,9 +165,10 @@ def _callee(call):
 
 
 def passed(trees):
-    """``{callee name: (keywords, max positional count, spreads)}`` over
-    every call in ``trees``; ``spreads`` is True when some call uses
-    ``*args`` or ``**kwargs``."""
+    """``{callee name: (keyword values, positional values, spreads)}`` over
+    every call in ``trees``: ``ast.dump`` of each value passed per keyword
+    and per position; ``spreads`` is True when some call uses ``*args`` or
+    ``**kwargs``."""
     seen = {}
     for tree in trees:
         for call in ast.walk(tree):
@@ -89,25 +177,55 @@ def passed(trees):
             name = _callee(call)
             if name is None:
                 continue
-            kws, n_pos, spreads = seen.get(name, (set(), 0, False))
-            spreads = spreads or any(
-                isinstance(a, ast.Starred) for a in call.args
-            ) or any(kw.arg is None for kw in call.keywords)
-            kws |= {kw.arg for kw in call.keywords if kw.arg is not None}
-            seen[name] = (kws, max(n_pos, len(call.args)), spreads)
+            kws, pos, spreads = seen.setdefault(name, ({}, {}, [False]))
+            if any(isinstance(a, ast.Starred) for a in call.args) or any(
+                kw.arg is None for kw in call.keywords
+            ):
+                spreads[0] = True
+            for kw in call.keywords:
+                if kw.arg is not None:
+                    kws.setdefault(kw.arg, set()).add(ast.dump(kw.value))
+            for i, a in enumerate(call.args):
+                pos.setdefault(i, set()).add(ast.dump(a))
     return seen
 
 
 def never_passed(modules, trees):
     """``module:line function(param)`` per defaulted parameter of
-    ``modules`` that no call in ``trees`` passes."""
+    ``modules`` that no call in ``trees`` passes with a value other than
+    the default's own."""
     calls = passed(trees)
     out = []
-    for path, line, fn, param, pos in defaulted_params(modules):
-        kws, n_pos, spreads = calls.get(fn, (set(), 0, False))
-        if spreads or param in kws or (pos is not None and pos < n_pos):
+    for path, line, fn, param, pos, default in defaulted_params(modules):
+        kws, by_pos, spreads = calls.get(fn, ({}, {}, [False]))
+        values = kws.get(param, set()) | by_pos.get(pos, set())
+        if spreads[0] or values - {ast.dump(default)}:
             continue
         out.append(f"{path}:{line} {fn}({param})")
+    return out
+
+
+def _loads(node):
+    """Names loaded under ``node``: ``Name`` loads and attribute names."""
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+
+
+def unreferenced(modules, trees):
+    """``module:line function`` per top-level function of ``modules`` whose
+    name no node of ``trees`` loads outside the function itself."""
+    loads = Counter(name for tree in trees for name in _loads(tree))
+    out = []
+    for path, tree in modules:
+        for fn in tree.body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            inside = sum(1 for name in _loads(fn) if name == fn.name)
+            if loads[fn.name] <= inside:
+                out.append(f"{path}:{fn.lineno} {fn.name}")
     return out
 
 
@@ -124,8 +242,9 @@ def _caller_trees():
             continue
         for root, _dirs, files in os.walk(top):
             for name in sorted(files):
-                if name.endswith(".py"):
-                    yield _parse(os.path.join(root, name))
+                path = os.path.join(root, name)
+                if name.endswith(".py") and path not in TEST_FILES:
+                    yield _parse(path)
 
 
 def _package_trees():
@@ -135,20 +254,40 @@ def _package_trees():
     ]
 
 
-def test_every_defaulted_parameter_has_a_caller():
+def _name(offender: str) -> str:
+    return offender.split(" ", 1)[1]
+
+
+def _scan():
     modules = _package_trees()
-    trees = [t for _, t in modules] + list(_caller_trees())
+    return modules, [t for _, t in modules] + list(_caller_trees())
+
+
+def test_every_defaulted_parameter_has_a_caller():
+    modules, trees = _scan()
     params = list(defaulted_params(modules))
-    assert any(fn == "get_spark" for _, _, fn, _, _ in params), (
+    assert any(p[2] == "get_spark" for p in params), (
         "the scan no longer sees session.get_spark's defaults"
     )
-    offenders = [
-        o for o in never_passed(modules, trees)
-        if o.split(" ", 1)[1].split("(", 1)[0] not in ALLOWED
-    ]
+    found = never_passed(modules, trees)
+    offenders = [o for o in found if _name(o) not in EXEMPT.keys() | PENDING]
     assert not offenders, (
-        "defaulted parameter no call passes (make it a constant and drop "
-        f"the branches only another value reaches): {offenders}"
+        "defaulted parameter only tests or only its own default exercise "
+        "(make it a constant and drop the branches only another value "
+        f"reaches, and their test cases): {offenders}"
+    )
+    stale = (PENDING | {k for k in EXEMPT if "(" in k}) - {
+        _name(o) for o in found
+    }
+    assert not stale, f"listed but now passed by a product caller: {stale}"
+
+
+def test_every_package_function_has_a_product_caller():
+    modules, trees = _scan()
+    found = unreferenced(modules, trees)
+    offenders = [o for o in found if _name(o) not in EXEMPT]
+    assert not offenders, (
+        f"package function only tests reach (delete it): {offenders}"
     )
 
 
@@ -176,3 +315,17 @@ def test_option_guard_sees_every_way_to_pass():
     assert missing("K().m(6)") == every - {"m(d)"}
     assert missing("K().m()") == every
     assert missing("K.s(7)") == every - {"s(e)"}
+    # the default's own literal is no pass
+    assert missing("f(0, 1, c=2)") == every
+    assert missing("f(0, 1); f(0, 3)") == every - {"f(b)"}
+
+
+def test_function_guard_sees_references():
+    defs = ast.parse(
+        "def a():\n    return a()\n"
+        "def b():\n    pass\n"
+        "def c():\n    pass\n"
+    )
+    modules = [("m.py", defs)]
+    trees = [defs, ast.parse("x = [b]\nm.c()\n")]
+    assert unreferenced(modules, trees) == ["m.py:1 a"]

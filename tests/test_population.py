@@ -6,13 +6,12 @@ per year with ``EXPNS = area / n_plots`` and ``ADJ_FACTOR_SUBP = 1``; that
 design must equal a hand-built one, the two modes must agree exactly on
 it, and a hand-computed multi-stratum expansion must be reproduced.  The
 edge cases (non-finite values, NULL proportions, zero-area years,
-unassigned plots, the domain parameters) run through both modes.
+unassigned plots) run through both modes.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from foresttime_builder_spark.plans import population
 from foresttime_builder_spark.plans.population import (
@@ -70,16 +69,13 @@ def _hand_design(spark, rows):
     return stratum, assgn
 
 
-def _estimate(spark, mode, rows, **kw):
-    """Run ``mode``'s estimator over ``rows`` (plus a ``DRYBIO_AG`` column
-    of twice CARBON_AG); return {YEAR: Row}."""
-    df = spark.createDataFrame(rows, PANEL_SCHEMA).withColumn(
-        "DRYBIO_AG", F.col("CARBON_AG") * 2
-    )
+def _estimate(spark, mode, rows):
+    """Run ``mode``'s estimator over ``rows``; return {YEAR: Row}."""
+    df = spark.createDataFrame(rows, PANEL_SCHEMA)
     if mode == "simple":
-        out = estimate_population(df, area=AREA, **kw)
+        out = estimate_population(df, area=AREA)
     else:
-        out = estimate_population_stratified(df, *_hand_design(spark, rows), **kw)
+        out = estimate_population_stratified(df, *_hand_design(spark, rows))
     return {r["YEAR"]: r for r in out.collect()}
 
 
@@ -167,22 +163,3 @@ def test_unassigned_plot_contributes_zero(spark, panel):
     # p1 only: (100 + 200) * 6 * 1000 / 2000 tons over 1.0 * 1000 acres
     assert (got["total_tons"], got["total_area"]) == (900.0, 1000.0)
 
-
-@pytest.mark.parametrize("mode", MODES)
-@pytest.mark.parametrize(
-    "param, value, tons, acres",
-    [
-        # dead trees only: t3, 300 * 6 * 3000 / 2000
-        ("tree_domain", "STATUSCD = 2", 2700.0, ACRES),
-        # non-forested land only: p3's 1.0 * 3000 acres, its live t5
-        # 500 * 6 * 3000 / 2000
-        ("area_domain", "COND_STATUS_CD = 2", 4500.0, 3000.0),
-        # a value column twice CARBON_AG doubles the tons
-        ("value_col", "DRYBIO_AG", 2 * TONS, ACRES),
-    ],
-    ids=["tree_domain", "area_domain", "value_col"],
-)
-def test_domain_parameters(spark, mode, param, value, tons, acres):
-    kw = {param: value if param == "value_col" else F.expr(value)}
-    got = _estimate(spark, mode, ROWS, **kw)[2020]
-    assert (got["total_tons"], got["total_area"]) == (tons, acres)

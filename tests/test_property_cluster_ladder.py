@@ -163,8 +163,7 @@ def test_lsh_topk_recall_floor_vs_brute(spark):
     from foresttime_builder_spark.operators.ann import brute_topk_np, lsh_topk
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    dims = emb.select(F.size("embedding")).first()[0]
-    approx = lsh_topk(emb, dims=dims)
+    approx = lsh_topk(emb)
     base = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )

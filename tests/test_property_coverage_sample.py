@@ -10,12 +10,13 @@ contracts the gate cannot see:
    components here are small integers so double sums are exact under any
    aggregation order, making the property exact rather than approximate);
 2. **Prefix consistency under mass ties** — on a corpus made of exact
-   duplicate vectors, the per_cluster=m output is EXACTLY the first m
-   rows of each cluster's full (dist_e6, vid)-ordered ranking: ties are
-   id-broken deterministically, never dropped or duplicated;
+   duplicate vectors, a cluster of identical vectors keeps EXACTLY its
+   smallest ``COVERAGE_PER_CLUSTER`` ids: ties are id-broken
+   deterministically, never dropped or duplicated;
 3. **Coverage floor vs uniform sampling** — every non-empty cluster of
-   the full ranking contributes min(cluster_size, per_cluster) rows: the
-   guarantee a uniform random subset cannot make;
+   the operator's own quantizer contributes min(cluster_size,
+   ``COVERAGE_PER_CLUSTER``) rows: the guarantee a uniform random subset
+   cannot make;
 4. **Empty-corpus contract** (r13 advice fix) — a corpus with no valid
    vector returns an EMPTY frame with the contract schema instead of
    raising PySpark's opaque empty-inference error.
@@ -26,7 +27,11 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from foresttime_builder_spark.operators.ann import kmeans_coverage_sample
+from foresttime_builder_spark.operators import ann
+from foresttime_builder_spark.operators.ann import (
+    COVERAGE_PER_CLUSTER as M,
+    kmeans_coverage_sample,
+)
 
 _SETTINGS = dict(
     max_examples=6,
@@ -52,15 +57,28 @@ def _rows(out):
     return sorted(tuple(r) for r in out.collect())
 
 
+def _members(df):
+    """{cid: [vec_id, ...]}: the clusters of the quantizer
+    kmeans_coverage_sample builds over ``df``."""
+    if ann._valid(df, "vec_id", "embedding", cosine=True).isEmpty():
+        return {}
+    base, dims, n_rows = ann._quantizer_setup(df)
+    _cent, lists = ann._kmeans_build(base, dims, ann.adaptive_k_clusters(n_rows))
+    out: dict[int, list] = {}
+    for r in lists.select("cid", "vid").collect():
+        out.setdefault(r["cid"], []).append(r["vid"])
+    return out
+
+
 @given(corpus=corpus_strategy, order=st.sampled_from(["representative", "diverse"]))
 @settings(**_SETTINGS)
 def test_permutation_invariance(spark, corpus, order):
     rows = [(i, v) for i, v in enumerate(corpus)]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    base = _rows(kmeans_coverage_sample(df, per_cluster=2, order=order))
+    base = _rows(kmeans_coverage_sample(df, order=order))
     # reversed row order AND a different physical partitioning
     shuffled = spark.createDataFrame(rows[::-1], df.schema).repartition(5)
-    assert _rows(kmeans_coverage_sample(shuffled, per_cluster=2, order=order)) == base
+    assert _rows(kmeans_coverage_sample(shuffled, order=order)) == base
 
 
 @given(
@@ -78,32 +96,21 @@ def test_mass_tie_prefix_consistency(spark, n_dups, seeds, order):
         for j in range(n_dups)
     ]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    m = 2
-    picked = kmeans_coverage_sample(df, per_cluster=m, order=order).collect()
-    full = kmeans_coverage_sample(
-        df, per_cluster=len(rows) + 1, order=order
-    ).collect()
+    picked = kmeans_coverage_sample(df, order=order).collect()
+    vec = dict(rows)
     by_cid: dict[int, list] = {}
-    for r in full:
+    for r in picked:
         by_cid.setdefault(r["cid"], []).append(r)
-    want = []
-    for members in by_cid.values():
-        # replay the operator's own ranking via pick_rank (for
-        # order='diverse' the window sorts dist DESC, so re-deriving the
-        # direction here would just duplicate the implementation)
-        members.sort(key=lambda r: r["pick_rank"])
-        want.extend(members[:m])
-    assert sorted((r["vec_id"], r["cid"], r["dist_e6"], r["pick_rank"]) for r in picked) == sorted(
-        (r["vec_id"], r["cid"], r["dist_e6"], r["pick_rank"]) for r in want
-    )
-    # tie determinism: within a cluster of identical vectors the kept ids
-    # are the SMALLEST ids of that cluster
-    for cid, members in by_cid.items():
-        dists = {r["dist_e6"] for r in members}
-        if len(dists) != 1:
+    for cid, members in _members(df).items():
+        kept = sorted(by_cid.get(cid, []), key=lambda r: r["pick_rank"])
+        # pick_rank dense from 1, one row per kept id
+        assert [r["pick_rank"] for r in kept] == list(range(1, len(kept) + 1))
+        assert len({r["vec_id"] for r in kept}) == len(kept)
+        if len({tuple(vec[i]) for i in members}) != 1:
             continue  # cross-seed collision in one cluster: distances differ
-        kept = sorted(r["vec_id"] for r in picked if r["cid"] == cid)
-        assert kept == sorted(r["vec_id"] for r in members)[: len(kept)]
+        # identical vectors tie on distance: the SMALLEST ids are kept,
+        # in id order
+        assert [r["vec_id"] for r in kept] == sorted(members)[:M]
 
 
 @given(corpus=corpus_strategy)
@@ -111,18 +118,13 @@ def test_mass_tie_prefix_consistency(spark, n_dups, seeds, order):
 def test_coverage_floor(spark, corpus):
     rows = [(i, v) for i, v in enumerate(corpus)]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    m = 2
-    picked = kmeans_coverage_sample(df, per_cluster=m).collect()
-    full = kmeans_coverage_sample(df, per_cluster=len(rows) + 1).collect()
-    size: dict[int, int] = {}
-    for r in full:
-        size[r["cid"]] = size.get(r["cid"], 0) + 1
+    picked = kmeans_coverage_sample(df).collect()
     got: dict[int, int] = {}
     for r in picked:
         got[r["cid"]] = got.get(r["cid"], 0) + 1
-    # every non-empty cluster contributes exactly min(size, m) rows —
+    # every non-empty cluster contributes exactly min(size, M) rows —
     # the floor a uniform sample cannot guarantee
-    assert got == {cid: min(n, m) for cid, n in size.items()}
+    assert got == {cid: min(len(v), M) for cid, v in _members(df).items()}
 
 
 def test_empty_corpus_contract(spark):

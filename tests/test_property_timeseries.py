@@ -136,7 +136,7 @@ def test_step_interpolate_matches_model(spark, panel):
 def test_fill_downup_matches_model(spark, panel):
     rows = list(panel)
     got = _run(
-        spark, rows, lambda g: fill_gaps(g, ["g"], "x", ["v"], "downup"),
+        spark, rows, lambda g: fill_gaps(g, ["g"], "x", ["v"]),
         value_type="int",
     )
     grid = _grid([x for x, _ in rows])

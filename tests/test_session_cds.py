@@ -120,7 +120,7 @@ from pyspark import SparkContext
 from foresttime_builder_spark.session import get_spark
 
 def launch():
-    spark = get_spark(app_name="cds_test", master="local[1]", shuffle_partitions=1)
+    spark = get_spark(app_name="cds_test", master="local[1]")
     jvm = spark.sparkContext._jvm
     args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
                 .getInputArguments())

@@ -170,6 +170,7 @@ def chunked(request, spark, tmp_path_factory):
     ).first()["q"]
     bounds = [float("-inf")] + [float(x) for x in qs] + [float("inf")]
     tsd = F.col("ts").cast("timestamp").cast("double")
+    # the stream reads every events.parquet under d: here 4 chunks
     for i in range(4):
         staging = os.path.join(d, f"_stage{i}")
         (
@@ -178,7 +179,8 @@ def chunked(request, spark, tmp_path_factory):
             .write.parquet(staging)
         )
         part = _glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-        dest = os.path.join(d, f"chunk_{i}.parquet")
+        os.makedirs(os.path.join(d, f"chunk_{i}"))
+        dest = os.path.join(d, f"chunk_{i}", "events.parquet")
         shutil.move(part, dest)
         shutil.rmtree(staging)
         # the file source processes oldest-mtime-first: pin ascending mtimes
@@ -188,16 +190,10 @@ def chunked(request, spark, tmp_path_factory):
     return d, ev
 
 
-def _chunk_stream(spark, d):
-    return read_event_stream(
-        spark, d, glob="chunk_*.parquet", max_files_per_trigger=1
-    )
-
-
 def test_multibatch_rollup_equals_batch(spark, chunked):
     d, ev = chunked
     out = run_to_memory(
-        windowed_rollup(_chunk_stream(spark, d)), output_mode="complete"
+        windowed_rollup(read_event_stream(spark, d)), output_mode="complete"
     )
     batch = (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -219,7 +215,7 @@ def test_multibatch_rollup_equals_batch(spark, chunked):
 def test_multibatch_sessions_stitch_across_batches(spark, chunked):
     d, ev = chunked
     out = run_to_memory(
-        sessionized(_chunk_stream(spark, d)), output_mode="complete"
+        sessionized(read_event_stream(spark, d)), output_mode="complete"
     )
     batch = (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("s"), "user_id")
@@ -242,7 +238,7 @@ def test_multibatch_sessions_stitch_across_batches(spark, chunked):
 def test_multibatch_stateful_totals_accumulate(spark, chunked):
     d, ev = chunked
     out = run_to_memory(
-        running_user_totals(_chunk_stream(spark, d)), output_mode="update"
+        running_user_totals(read_event_stream(spark, d)), output_mode="update"
     )
     # users active in several chunks emit one update per batch: the memory
     # sink holds the whole update history, final state = row with max n
@@ -267,7 +263,7 @@ def test_multibatch_attribution_joins_across_batches(spark, chunked):
 
     d, ev = chunked
     out = run_to_memory(
-        purchase_attribution(_chunk_stream(spark, d)), output_mode="append"
+        purchase_attribution(read_event_stream(spark, d)), output_mode="append"
     )
     clicks = ev.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),
@@ -287,105 +283,6 @@ def test_multibatch_attribution_joins_across_batches(spark, chunked):
     ).select("purchase_id", "user_id", "click_id", "click_ts", "purchase_ts")
     cols = ["purchase_id", "user_id", "click_id", "click_ts", "purchase_ts"]
     assert _canon(out, cols) == _canon(batch, cols)
-
-
-def test_multibatch_foreach_upsert_equals_batch(spark, chunked, tmp_path_factory):
-    """foreachBatch incremental MERGE sink: after draining 4 micro-batches,
-    the parquet table holds exactly the latest event per user — identical
-    to a one-shot batch window dedup over all events."""
-    from pyspark.sql import Window as W
-
-    from foresttime_builder_spark.streaming.events import (
-        read_upsert_table,
-        run_foreach_batch_upsert,
-    )
-
-    d, ev = chunked
-    target = os.path.join(str(tmp_path_factory.mktemp("upsert")), "latest")
-    run_foreach_batch_upsert(
-        _chunk_stream(spark, d),
-        target,
-        keys=("user_id",),
-        version_col="ts",
-        tie_break=("event_id",),
-    )
-    got = read_upsert_table(spark, target)
-
-    w = W.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    expected = (
-        ev.select("event_id", "user_id", "event_type", "value", "ts")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    cols = ["user_id", "event_id", "event_type", "value", "ts"]
-    assert _canon(got, cols) == _canon(expected, cols)
-
-
-def test_foreach_upsert_restart_idempotent(spark, chunked, tmp_path_factory):
-    """Cross-restart idempotency (the ADVICE fix): with a CALLER-SUPPLIED
-    persistent checkpoint, re-invoking the upsert over the same drained
-    source must replay nothing — the committed snapshot is byte-identical
-    — and the CURRENT pointer always resolves (no missing-table window)."""
-    from foresttime_builder_spark.streaming.events import (
-        read_upsert_table,
-        run_foreach_batch_upsert,
-    )
-
-    d, ev = chunked
-    root = str(tmp_path_factory.mktemp("upsert_restart"))
-    target = os.path.join(root, "latest")
-    ckpt = os.path.join(root, "ckpt")
-
-    run_foreach_batch_upsert(
-        _chunk_stream(spark, d), target,
-        keys=("user_id",), version_col="ts", tie_break=("event_id",),
-        checkpoint_dir=ckpt,
-    )
-    first = _canon(
-        read_upsert_table(spark, target),
-        ["user_id", "event_id", "event_type", "value", "ts"],
-    )
-    # "restart": fresh invocation, same source, same persistent checkpoint
-    run_foreach_batch_upsert(
-        _chunk_stream(spark, d), target,
-        keys=("user_id",), version_col="ts", tie_break=("event_id",),
-        checkpoint_dir=ckpt,
-    )
-    second = _canon(
-        read_upsert_table(spark, target),
-        ["user_id", "event_id", "event_type", "value", "ts"],
-    )
-    assert first == second
-
-
-def test_foreach_upsert_retains_previous_version(spark, chunked, tmp_path_factory):
-    """Version GC keeps the replaced snapshot for ONE commit: after the
-    drain, exactly the current + previous version dirs remain, CURRENT
-    resolves to the newest, and the previous one is still a readable
-    parquet table (a reader that resolved the old pointer just before the
-    commit can finish its scan)."""
-    from foresttime_builder_spark.streaming.events import (
-        run_foreach_batch_upsert,
-    )
-
-    d, ev = chunked
-    target = os.path.join(str(tmp_path_factory.mktemp("upsert_gc")), "latest")
-    run_foreach_batch_upsert(
-        _chunk_stream(spark, d), target,
-        keys=("user_id",), version_col="ts", tie_break=("event_id",),
-    )
-    vdirs = [
-        e for e in os.listdir(target)
-        if e.startswith("v") and os.path.isdir(os.path.join(target, e))
-    ]
-    assert len(vdirs) == 2, vdirs  # 4 micro-batches committed; N-2 pruned
-    current = open(os.path.join(target, "CURRENT")).read().strip()
-    assert current in vdirs
-    prev = next(v for v in vdirs if v != current)
-    assert spark.read.parquet(os.path.join(target, prev)).count() > 0
 
 
 def test_outer_join_stream_equals_batch_below_watermark(spark, events_batch):

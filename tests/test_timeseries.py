@@ -17,6 +17,8 @@ from foresttime_builder_spark.operators import (
     linear_interpolate,
     step_interpolate,
 )
+from foresttime_builder_spark.operators.timeseries import fill_gaps_layers
+from foresttime_builder_spark.functions.helpers import apply_layers
 
 
 def _series(spark, ys, xs=None, grp="g1"):
@@ -36,23 +38,11 @@ def test_linear_interp_golden(spark):
     assert _col(out) == [2.0, 3.5, 5.0, 6.0, 7.0, 8.0, 9.0]
 
 
-def test_linear_interp_no_extrapolate(spark):
-    df = _series(spark, [2.0, None, 5.0, 6.0, None, None, None])
-    out = linear_interpolate(df, ["g"], "x", ["y"], extrapolate=False)
-    assert _col(out) == [2.0, 3.5, 5.0, 6.0, None, None, None]
-
-
 def test_linear_interp_single_value_carried_forward(spark):
     # y=[Ø,Ø,3,Ø,Ø] → [Ø,Ø,3,3,3]
     df = _series(spark, [None, None, 3.0, None, None])
     out = linear_interpolate(df, ["g"], "x", ["y"])
     assert _col(out) == [None, None, 3.0, 3.0, 3.0]
-
-
-def test_linear_interp_single_value_no_extrap_unchanged(spark):
-    df = _series(spark, [None, None, 3.0, None, None])
-    out = linear_interpolate(df, ["g"], "x", ["y"], extrapolate=False)
-    assert _col(out) == [None, None, 3.0, None, None]
 
 
 def test_linear_interp_leading_backward_extrapolation(spark):
@@ -178,10 +168,9 @@ def test_expand_grid(spark):
 
 def test_fill_gaps_directions(spark):
     df = _series(spark, [None, 5.0, None, 7.0, None])
-    assert _col(fill_gaps(df, ["g"], "x", ["y"], "down")) == [None, 5.0, 5.0, 7.0, 7.0]
-    assert _col(fill_gaps(df, ["g"], "x", ["y"], "up")) == [5.0, 5.0, 7.0, 7.0, None]
-    assert _col(fill_gaps(df, ["g"], "x", ["y"], "downup")) == [5.0, 5.0, 5.0, 7.0, 7.0]
-    assert _col(fill_gaps(df, ["g"], "x", ["y"], "updown")) == [5.0, 5.0, 7.0, 7.0, 7.0]
+    up = apply_layers(df, fill_gaps_layers(["g"], "x", ["y"], direction="up"))
+    assert _col(up) == [5.0, 5.0, 7.0, 7.0, None]
+    assert _col(fill_gaps(df, ["g"], "x", ["y"])) == [5.0, 5.0, 5.0, 7.0, 7.0]
 
 
 def test_linear_interp_empty_group_cols(spark):

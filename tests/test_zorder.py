@@ -2,13 +2,11 @@
 
 from __future__ import annotations
 
-import glob
-import os
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from foresttime_builder_spark.operators.layout import zorder_key, zorder_write
+from foresttime_builder_spark.operators.layout import zorder_key
 
 
 def _unzorder(z: int, bits: int = 16) -> tuple[int, int]:
@@ -72,16 +70,3 @@ def test_zorder_tightens_rowgroup_stats_on_both_dims(spark, tmp_path):
     # z-order: every 256-row group is one 16x16 quadrant — BOTH bounded
     assert max(rowgroup_ranges(zsorted, "x")) == 15
     assert max(rowgroup_ranges(zsorted, "y")) == 15
-
-
-def test_zorder_write_roundtrip(spark, tmp_path):
-    n = 32
-    grid = spark.range(0, n * n).select(
-        (F.col("id") % n).alias("x"), (F.col("id") / n).cast("long").alias("y")
-    )
-    path = str(tmp_path / "zw")
-    zorder_write(grid, path, "x", "y", bits=5, partitions=4)
-    back = spark.read.parquet(path)
-    assert back.count() == n * n
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, grid.collect()))
-    assert len(glob.glob(os.path.join(path, "*.parquet"))) >= 1

@@ -9,7 +9,10 @@ hash-mismatch between engines even when semantically equal).
 Each query must also release what it caches: the persisted RDDs are
 recorded before the query, and one the query added that is still persisted
 once the result is compared, dropped and garbage-collected fails it as a
-leak.
+leak.  And a cache its result owns must be read: an owned persisted frame
+shows as an ``InMemoryTableScan`` in the executed plan, an owned local
+checkpoint as its ``ExistingRDD`` scan (the plan the run already made; no
+extra job).
 
 Usage: python tools/check_correctness.py [--sf DIR] [--only q08,q09]
 (``--only`` takes full query names or exact ``qNN`` ids: see
@@ -171,25 +174,47 @@ def run_oracle(sql: str, sf_dir: str, mem_cap: str, retry_cap: str) -> pd.DataFr
         return con.execute(sql).fetchdf()
 
 
+#: the executed-plan node that reads each kind of owned cache
+CACHE_SCANS = {"persist": "InMemoryTableScan", "checkpoint": "ExistingRDD"}
+
+
+def unread_caches(df) -> list[str]:
+    """One error per kind of cache ``df`` owns that its executed plan never
+    reads."""
+    from foresttime_builder_spark.operators.cache import owned_kinds
+
+    kinds = owned_kinds(df)
+    plan = df._jdf.queryExecution().executedPlan().toString() if kinds else ""
+    return [
+        f"cache: owns a {kind} its executed plan never reads "
+        f"(no {CACHE_SCANS[kind]})"
+        for kind in sorted(kinds)
+        if CACHE_SCANS[kind] not in plan
+    ]
+
+
 def check_query(fn, spark, oracle, sf_dir, mem_cap, retry_cap) -> tuple[str, list[str]]:
     """Run one query on Spark and, when it has one, its oracle on DuckDB.
     Returns a summary and the errors (none when the query passes).  Every
     frame it builds is dropped when it returns."""
     t0 = time.time()
     try:
-        sdf = fn(spark, sf_dir).toPandas()
+        df = fn(spark, sf_dir)
+        sdf = df.toPandas()
     except Exception as ex:
         return "spark error", [str(ex)]
     summary = f"rows={len(sdf)} ({time.time() - t0:.1f}s)"
+    errs = unread_caches(df)
+    del df
     if oracle is None:
-        return summary, []
+        return summary, errs
     try:
         odf = run_oracle(oracle, sf_dir, mem_cap, retry_cap)
     except Exception as ex:
-        return summary, [f"oracle error: {ex}"]
+        return summary, errs + [f"oracle error: {ex}"]
     risk = boundary_risk(sdf)
     tag = f" [boundary-risk={risk}]" if risk else ""
-    return summary + tag, compare(sdf, odf)
+    return summary + tag, errs + compare(sdf, odf)
 
 
 def main() -> int:
