@@ -21,8 +21,18 @@ Scale design notes:
   whole when it fits ``sample_docs``, else a count and a uniform sample),
   computes the vocabulary, mean set size and projected candidate streams
   from those rows on the driver, and asks the pure :func:`choose` for its
-  strategy, budget degrade and verify tier.  Every choice is written to
-  stderr as one ``{"event": "dedup.decision", ...}`` JSON line.
+  strategy, budget degrade, verify tier and venue.  Every choice is
+  written to stderr as one ``{"event": "dedup.decision", ...}`` JSON line.
+- Two venues.  When the fact pass read the whole corpus, its ids are
+  unique and non-NULL, it has no NULL tokens and the projected candidate
+  stream fits :data:`_LOCAL_PAIRS_CAP`, ``token_jaccard_pairs`` and
+  ``minhash_lsh_pairs`` pair it on the driver (:func:`_local_pairs`):
+  numpy replays the same prefix filter (:func:`_prefix_rows`) or MinHash
+  bands (:func:`_band_buckets`) the projections count, computes the exact
+  ``n_common``, and Spark thresholds the rows with the expressions the
+  distributed tiers use (:func:`_thresholded`).  A corpus of a few
+  hundred documents then costs one job and no shuffle instead of a dozen
+  exchanges.  Everything else runs on Spark.
 - ``containment_pairs``: asymmetric ``|A ∩ B| / |A|`` over the
   containment prefix of the contained side.
 - ``simhash``: 60-bit SimHash per document for Hamming-distance near-dup.
@@ -39,7 +49,7 @@ from typing import NamedTuple
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from foresttime_builder_spark.functions.encoding import hash60
 from foresttime_builder_spark.functions.tokens import words
@@ -212,28 +222,26 @@ def _sample_tokens(
     return row, ids[row], tok.astype(np.int64), words
 
 
-def _prefix_projection(
-    facts: CorpusFacts, threshold: float, containment: bool = False
-) -> int:
-    """The prefix join's projected pre-``distinct`` candidate stream,
-    scaled from ``facts.sample`` by ``1/p^2`` (pair counts are products of
-    two frequencies).  Replays :func:`_rarest_prefix` on the sample in
-    numpy: each token element's sample document frequency ``df``, its
-    rank in its document under the global ``(df, token)`` order, and the
-    same prefix bound in the same double arithmetic.  Jaccard's stream is
-    ``sum over tokens of C(prefix_df, 2)``; containment's is ``sum over
-    prefix rows of (df - 1)``, each prefix posting joining every OTHER
-    posting of its token in the full inverted index."""
+def _prefix_rows(
+    facts: CorpusFacts, threshold: float, containment: bool
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(row, tok, df)``: the sample row and token code of every
+    rarest-first prefix element, and each token's sample document
+    frequency.  Replays :func:`_rarest_prefix` on ``facts.sample`` in
+    numpy: each token element's ``df``, its rank in its document under the
+    global ``(df, token)`` order, and the same prefix bound in the same
+    double arithmetic.  NULL tokens are left out, as the frequency join
+    drops them."""
     row, doc, tok, words = _sample_tokens(facts.sample)
-    real = tok < len(words)  # the frequency join drops NULL tokens
-    if not real.any():
-        return 0
+    real = tok < len(words)
     row, doc, tok = row[real], doc[real], tok[real]
+    v = len(words)
+    df = np.bincount(tok, minlength=v)
+    if not len(tok):
+        return row, tok, df
     sz = facts.sample.column("sz").combine_chunks().to_numpy(
         zero_copy_only=False
     )[row].astype(np.float64)
-    v = len(words)
-    df = np.bincount(tok, minlength=v)
     # each token's place in the global (df, token) order; Python orders
     # str by code point, which is Spark's UTF-8 byte order
     by_token = np.empty(v, np.int64)
@@ -250,30 +258,44 @@ def _prefix_projection(
         np.ceil(threshold * sz - 1e-9) if containment
         else np.ceil((threshold - 1e-4) * sz)
     )
-    kept = tok[rnk <= sz - need + 1]
+    kept = rnk <= sz - need + 1
+    return row[kept], tok[kept], df
+
+
+def _prefix_projection(
+    facts: CorpusFacts, threshold: float, containment: bool = False
+) -> int:
+    """The prefix join's projected pre-``distinct`` candidate stream,
+    scaled from ``facts.sample`` by ``1/p^2`` (pair counts are products of
+    two frequencies), over the prefix rows :func:`_prefix_rows` replays.
+    Jaccard's stream is ``sum over tokens of C(prefix_df, 2)``;
+    containment's is ``sum over prefix rows of (df - 1)``, each prefix
+    posting joining every OTHER posting of its token in the full inverted
+    index."""
+    _, kept, df = _prefix_rows(facts, threshold, containment)
     if containment:
         pairs = int((df[kept] - 1).sum())
     else:
-        n = np.bincount(kept, minlength=len(words))
+        n = np.bincount(kept, minlength=len(df))
         pairs = int((n * (n - 1) // 2).sum())
     return int(float(pairs) / (facts.p * facts.p))
 
 
-def _lsh_projection(facts: CorpusFacts, n_hashes: int, band_size: int) -> int:
-    """The banded-LSH self-join's projected stream, ``sum over (band,
-    band_key) buckets of C(n_bucket, 2)`` scaled from ``facts.sample`` by
-    ``1/p^2``.  The sample's MinHash signatures are computed in numpy from
-    the same ``hash60(concat('i|', token))`` values
+def _band_buckets(
+    facts: CorpusFacts, n_hashes: int, band_size: int
+) -> tuple[np.ndarray, list[np.ndarray]]:
+    """``(rows, buckets)``: the first sample row of every document with a
+    MinHash signature, and per band each such document's bucket number
+    (documents share a bucket when their band's minima are equal, as
+    their ``band_key`` md5s are).  The signatures are computed in numpy
+    from the same ``hash60(concat('i|', token))`` values
     :func:`minhash_signatures` takes the min of: md5 runs once per
     distinct sample token and hash.  A NULL token hashes to NULL, which
     the min skips; a document of NULL tokens only has NULL minima, so its
-    band keys (``concat_ws`` skips NULLs) equal every such document's.
-
-    A CONSERVATIVE upper bound: no in-join size cut (see
-    :func:`minhash_lsh_pairs`)."""
-    _, doc, tok, words = _sample_tokens(facts.sample)
+    band keys (``concat_ws`` skips NULLs) equal every such document's."""
+    row, doc, tok, words = _sample_tokens(facts.sample)
     if not len(tok):
-        return 0
+        return row, []
     null = np.uint64(2**64 - 1)  # above every 60-bit hash: the min skips it
     h = np.full((n_hashes, len(words) + 1), null, np.uint64)
     encoded = [w.encode() for w in words]
@@ -285,12 +307,28 @@ def _lsh_projection(facts: CorpusFacts, n_hashes: int, band_size: int) -> int:
     doc, tok = doc[order], tok[order]
     starts = np.flatnonzero(np.r_[True, doc[1:] != doc[:-1]])
     sig = [np.minimum.reduceat(h[i][tok], starts) for i in range(n_hashes)]
-    pairs = 0
+    buckets = []
     for b in range(n_hashes // band_size):
         band = sig[b * band_size:(b + 1) * band_size]
-        keys = [k[np.lexsort(band)] for k in band]
+        srt = np.lexsort(band)
+        keys = [k[srt] for k in band]
         first = np.r_[True, np.any([k[1:] != k[:-1] for k in keys], axis=0)]
-        n = np.diff(np.r_[np.flatnonzero(first), len(first)])
+        bucket = np.empty(len(srt), np.int64)
+        bucket[srt] = np.cumsum(first) - 1
+        buckets.append(bucket)
+    return row[order][starts], buckets
+
+
+def _lsh_projection(facts: CorpusFacts, n_hashes: int, band_size: int) -> int:
+    """The banded-LSH self-join's projected stream, ``sum over (band,
+    band_key) buckets of C(n_bucket, 2)`` over :func:`_band_buckets`,
+    scaled from ``facts.sample`` by ``1/p^2``.
+
+    A CONSERVATIVE upper bound: no in-join size cut (see
+    :func:`minhash_lsh_pairs`)."""
+    pairs = 0
+    for bucket in _band_buckets(facts, n_hashes, band_size)[1]:
+        n = np.bincount(bucket)
         pairs += int((n * (n - 1) // 2).sum())
     return int(float(pairs) / (facts.p * facts.p))
 
@@ -347,6 +385,10 @@ def token_jaccard_pairs(
       (:func:`_corpus_facts`), whose vocabulary also numbers the blockmask
       dictionary; :func:`choose` makes every choice from those facts.
 
+    Whichever tier is chosen, a whole corpus with unique ids, no NULL
+    tokens and a projected prefix stream within :data:`_LOCAL_PAIRS_CAP`
+    is paired on the driver with the same result (see :func:`choose`).
+
     ``candidate_budget`` is the regime guard for the prefix path: before
     any full-corpus shuffle, :func:`_prefix_projection` projects the
     join's candidate stream from the fact pass's document sample; if the
@@ -375,20 +417,16 @@ def token_jaccard_pairs(
         raise ValueError(f"bad on_budget {on_budget!r}")
     if strategy not in ("auto", "bitmask", "prefix"):
         raise ValueError(f"bad strategy {strategy!r}")
-    # the tokenized relation feeds the candidate join AND both verification
-    # sides — persist it so the corpus is tokenized once, not 3-4 times
-    docsets = _docsets(df, id_col, text_col, tokenizer).persist()
-
+    docsets = _docsets(df, id_col, text_col, tokenizer)
     facts = _corpus_facts(docsets)
     projected = (
-        None if candidate_budget is None else _prefix_projection(facts, threshold)
+        _prefix_projection(facts, threshold)
+        if candidate_budget is not None or facts.p == 1.0 else None
     )
     d = _decide(
         "token_jaccard_pairs", facts, projected, pin=strategy,
         budget=candidate_budget, on_budget=on_budget,
     )
-    if d.choice in ("error", "degrade"):
-        docsets.unpersist()
     if d.choice == "error":
         raise ValueError(
             f"token_jaccard_pairs: projected candidate stream "
@@ -400,14 +438,19 @@ def token_jaccard_pairs(
             f"minhash_lsh_pairs / dup_clusters directly."
         )
     if d.choice == "degrade":
-        return minhash_lsh_pairs(
-            df, id_col, text_col, n_hashes=16, band_size=4,
-            threshold=threshold, tokenizer=tokenizer,
-            candidate_budget=(
-                candidate_budget * 4 if degrade_budget is None
-                else degrade_budget
-            ),
+        # the banded path reads the same docsets: its facts are these
+        return _lsh_pairs(
+            df, id_col, text_col, docsets, facts, 16, 4, threshold, "auto",
+            tokenizer,
+            candidate_budget * 4 if degrade_budget is None else degrade_budget,
+            "error",
         )
+    if d.venue == "local":
+        row, tok, _ = _prefix_rows(facts, threshold, False)
+        return _local_pairs(df.sparkSession, facts, d.choice, tok, row, threshold)
+    # the tokenized relation feeds the candidate join AND both verification
+    # sides — persist it so the corpus is tokenized once, not 3-4 times
+    docsets = docsets.persist()
     if d.choice == "bitmask":
         return release_on_gc(
             _jaccard_bitmask(docsets, threshold, facts.vocab), docsets
@@ -440,18 +483,10 @@ _BLOCKMASK_VOCAB_CAP = 4096  # 64 longs of bitset per document
 _INTARRAYS_VOCAB_CAP = 65536
 
 
-def _token_positions(
-    docsets: DataFrame, tier: str, vocab: list[str] | None
-) -> tuple[DataFrame, int]:
-    """``((doc_id, sz, pos) relation, vocab size)``: every document token
-    numbered by its place in the sorted vocabulary — the one dictionary
-    encoding behind the mask and int tiers.  Positions are explicit per
-    token (no hashing), so set intersections over them are exact.
-
-    ``vocab`` is :attr:`CorpusFacts.vocab` (None past every cap), so the
-    numbering runs no job.  A pinned tier on a corpus past its cap raises
-    here, at plan time, instead of letting positions wrap into colliding
-    bits."""
+def _check_vocab(tier: str, vocab: list[str] | None) -> None:
+    """Raise unless ``vocab`` fits the encoded ``tier``: a pinned tier on a
+    corpus past its cap fails at plan time, on either venue, instead of
+    letting positions wrap into colliding bits."""
     # caps read at call time, so tests can shrink them
     cap = {
         "bitmask": 64,
@@ -463,6 +498,20 @@ def _token_positions(
             f"{tier} verification requires vocabulary <= {cap} distinct "
             f"tokens; use strategy='prefix', verify='arrays' or 'auto'"
         )
+
+
+def _token_positions(
+    docsets: DataFrame, tier: str, vocab: list[str] | None
+) -> tuple[DataFrame, int]:
+    """``((doc_id, sz, pos) relation, vocab size)``: every document token
+    numbered by its place in the sorted vocabulary — the one dictionary
+    encoding behind the mask and int tiers.  Positions are explicit per
+    token (no hashing), so set intersections over them are exact.
+
+    ``vocab`` is :attr:`CorpusFacts.vocab` (None past every cap), so the
+    numbering runs no job; :func:`_check_vocab` rejects a pinned tier on
+    a corpus past its cap."""
+    _check_vocab(tier, vocab)
     vocab_df = docsets.sparkSession.createDataFrame(
         [(t, i) for i, t in enumerate(vocab)], "token string, pos int"
     )
@@ -667,13 +716,20 @@ def _jaccard_bitmask(
     # back to its documents.  A naive all-pairs nested loop is |sets|²; the
     # SSJoin size filter makes it a hash equi-join instead: J >= t forces
     # t·|A| <= |B| <= |A|/t, so explode each set over its admissible
-    # popcount window and join on exact popcount.  The epsilon only widens
-    # the window (extra candidates are removed by the exact jaccard filter
-    # below), guarding against float fuzz like 0.8*15 = 12.0000000000000007.
+    # popcount window and join on exact popcount.  The window uses the
+    # slacked t - 1e-4 of _size_compatible, as the 4-dp filter admits raw
+    # jaccard down to t - 5e-5 (at t = 0.6667 it keeps J = 2/3, sizes 3
+    # and 2), and is capped at the 64 bits a mask has.  The epsilon only
+    # widens the window (extra candidates are removed by the exact jaccard
+    # filter below), guarding against float fuzz like 0.8*15 =
+    # 12.0000000000000007.
     sets = masks.groupBy("mask").agg(F.collect_list("doc_id").alias("members"))
     pcs = sets.withColumn("pc", F.bit_count("mask").cast("int"))
-    lo = F.ceil(F.lit(threshold) * F.col("pc") - F.lit(1e-9)).cast("int")
-    hi = F.floor(F.col("pc") / F.lit(threshold) + F.lit(1e-9)).cast("int")
+    slack = threshold - 1e-4
+    lo = F.ceil(F.lit(slack) * F.col("pc") - F.lit(1e-9)).cast("int")
+    hi = F.least(
+        F.lit(64), F.floor(F.col("pc") / F.lit(max(slack, 1e-9)) + F.lit(1e-9))
+    ).cast("int")
     sa = pcs.withColumn("pc_b", F.explode(F.sequence(lo, hi))).alias("sa")
     sb = pcs.alias("sb")
     inter_bits = F.bit_count(F.col("sa.mask").bitwiseAND(F.col("sb.mask")))
@@ -845,10 +901,32 @@ def minhash_lsh_pairs(
         raise ValueError(f"bad on_budget {on_budget!r}")
     _check_verify(verify)
     docsets = _docsets(df, id_col, text_col, tokenizer)
-    facts = _corpus_facts(docsets)
+    return _lsh_pairs(
+        df, id_col, text_col, docsets, _corpus_facts(docsets), n_hashes,
+        band_size, threshold, verify, tokenizer, candidate_budget, on_budget,
+    )
+
+
+def _lsh_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    docsets: DataFrame,
+    facts: CorpusFacts,
+    n_hashes: int,
+    band_size: int,
+    threshold: float,
+    verify: str,
+    tokenizer: Column | None,
+    candidate_budget: int | None,
+    on_budget: str,
+) -> DataFrame:
+    """:func:`minhash_lsh_pairs` over its ``docsets`` and their ``facts``,
+    which :func:`token_jaccard_pairs`' degrade hands over from its own
+    fact pass."""
     projected = (
-        None if candidate_budget is None
-        else _lsh_projection(facts, n_hashes, band_size)
+        _lsh_projection(facts, n_hashes, band_size)
+        if candidate_budget is not None or facts.p == 1.0 else None
     )
     d = _decide(
         "minhash_lsh_pairs", facts, projected, pin=verify,
@@ -876,6 +954,16 @@ def minhash_lsh_pairs(
             f"calling that operator directly), dup_clusters/"
             f"dedup_finalize, raise threshold with tighter banding "
             f"(larger band_size), or shard the corpus."
+        )
+    if d.venue == "local":
+        rows, buckets = _band_buckets(facts, n_hashes, band_size)
+        keys = np.concatenate(
+            [np.empty(0, np.int64)]
+            + [b * len(rows) + k for b, k in enumerate(buckets)]
+        )
+        return _local_pairs(
+            df.sparkSession, facts, d.choice, keys,
+            np.tile(rows, len(buckets)), threshold,
         )
     stacked = _stacked_bands(
         df, id_col, text_col, n_hashes, band_size, tokenizer=tokenizer,
@@ -917,12 +1005,34 @@ def _docsets(
 
 
 class Decision(NamedTuple):
-    """One adaptive choice of the pair family: what was picked, why, and
-    the facts it was picked from."""
+    """One adaptive choice of the pair family: what was picked, why, the
+    facts it was picked from, and where it runs (``spark``, or ``local``:
+    the driver pairs a corpus its fact pass holds whole)."""
 
     choice: str
     reasons: tuple[str, ...]
     facts: dict
+    venue: str
+
+
+#: the operators with a local venue
+_LOCAL_OPS = ("token_jaccard_pairs", "minhash_lsh_pairs")
+
+#: the largest projected candidate stream the local venue pairs, below
+#: both measured crossovers (``PERF_local_pairs_crossover.json``: warm,
+#: one JVM, ``local[4]``, perfbench's dense 31-token corpus grown from 500
+#: to 2,000 documents).  The local venue's time grows with its candidates
+#: and output rows, Spark's far more slowly: banded LSH crosses near 1.2M
+#: projected pairs (0.90M: 2.05 s local vs 2.82 s Spark; 1.81M: 4.04 vs
+#: 2.22 s), the exact prefix stream near 3.5M (3.49M: 2.87 vs 2.93 s).
+#: Memory is O(candidates) too.  Read at call time, so tests can force
+#: either venue.
+_LOCAL_PAIRS_CAP = 1_000_000
+
+#: the local venue looks ``(document, token)`` codes up in a dense bool
+#: array while it has at most this many cells (32 MB), else by binary
+#: search in their sorted list (~70x slower per lookup)
+_DENSE_CELLS = 1 << 25
 
 
 def choose(
@@ -934,10 +1044,12 @@ def choose(
 ) -> Decision:
     """The pair family's adaptive policy, a pure function of the corpus
     facts (``n_docs``, ``vocab_n`` — None past the vocabulary cap —,
-    ``avg_sz`` and ``projected``, the candidate stream projected when the
-    caller has a budget) and the caller's pins.  ``op`` names the operator;
-    ``pin`` is its ``strategy`` (``token_jaccard_pairs``) or ``verify``
-    (``minhash_lsh_pairs``, ``lsh_representatives``).  The choice is:
+    ``avg_sz``, ``projected``, the candidate stream projected when the
+    caller has a budget or the corpus is read whole, and for a whole
+    corpus ``sample_p``, ``ids_unique`` and ``null_tokens``) and the
+    caller's pins.  ``op`` names the operator; ``pin`` is its ``strategy``
+    (``token_jaccard_pairs``) or ``verify`` (``minhash_lsh_pairs``,
+    ``lsh_representatives``).  The choice is:
 
     - ``on_budget`` (``error``, ``degrade`` or ``representatives``) when
       the projection exceeds the budget.  ``bitmask`` is never guarded:
@@ -964,14 +1076,25 @@ def choose(
         Its dictionary build must amortize: sf10 token family, ratio ~29,
         226.6 s intarrays vs 293.7 s arrays; q54's shingle degrade, ratio
         0.4, 189 s vs 84 s.  2× splits the two with >5× margin each side;
-      - otherwise → ``arrays``."""
+      - otherwise → ``arrays``.
+
+    A tier of ``token_jaccard_pairs`` or ``minhash_lsh_pairs`` then runs
+    on the ``local`` venue when the fact pass read the whole corpus
+    (``sample_p`` 1), its ids are unique and non-NULL, it has no NULL
+    token array or element, and ``projected`` is at most
+    :data:`_LOCAL_PAIRS_CAP`; everything else runs on ``spark``.  The
+    tier name stays the choice: the local venue computes what that tier
+    computes."""
     vocab_n, avg_sz = facts.get("vocab_n"), facts.get("avg_sz")
     projected, n_docs = facts.get("projected"), facts.get("n_docs")
     why: list[str] = []
 
     def pick(choice: str, reason: str) -> Decision:
         seen = facts if budget is None else {**facts, "budget": budget}
-        return Decision(choice, (*why, reason), seen)
+        if op in _LOCAL_OPS and choice in _TIERS:
+            venue, where = _venue(facts)
+            return Decision(choice, (*why, reason, where), seen, venue)
+        return Decision(choice, (*why, reason), seen, "spark")
 
     if op == "token_jaccard_pairs" and pin == "auto":
         pin = "bitmask" if vocab_n is not None and vocab_n <= 64 else "prefix"
@@ -1009,6 +1132,25 @@ def choose(
     return pick("arrays", "no encoded tier amortizes")
 
 
+#: the verify tiers; the other choices raise, degrade or reroute
+_TIERS = ("bitmask", "blockmask", "intarrays", "arrays")
+
+
+def _venue(facts: dict) -> tuple[str, str]:
+    """``(venue, reason)`` of a tier :func:`choose` picked."""
+    cap = _LOCAL_PAIRS_CAP  # read at call time, so tests can move it
+    projected = facts.get("projected")
+    if facts.get("sample_p") != 1.0:
+        return "spark", f"venue spark: sample_p {facts.get('sample_p')} < 1"
+    if not facts.get("ids_unique"):
+        return "spark", "venue spark: doc ids not unique and non-NULL"
+    if facts.get("null_tokens"):
+        return "spark", "venue spark: NULL token arrays or elements"
+    if projected is None or projected > cap:
+        return "spark", f"venue spark: projected {projected} > local cap {cap}"
+    return "local", f"venue local: whole corpus, projected {projected} <= {cap}"
+
+
 def _decide(
     op: str, facts: CorpusFacts | None, projected: int | None = None, **pins
 ) -> Decision:
@@ -1022,11 +1164,21 @@ def _decide(
     }
     if projected is not None:
         known["projected"] = projected
+    if facts is not None and facts.p == 1.0 and op in _LOCAL_OPS:
+        ids = facts.sample.column("doc_id")
+        toks = facts.sample.column("toks")
+        known["ids_unique"] = (
+            ids.null_count == 0
+            and pc.count_distinct(ids).as_py() == len(ids)
+        )
+        known["null_tokens"] = (
+            toks.null_count + pc.list_flatten(toks).null_count > 0
+        )
     d = choose(op, known, **pins)
     print(
         json.dumps(
             {"event": "dedup.decision", "op": op, "choice": d.choice,
-             "reasons": list(d.reasons), "facts": d.facts}
+             "venue": d.venue, "reasons": list(d.reasons), "facts": d.facts}
         ),
         file=sys.stderr,
         flush=True,
@@ -1035,7 +1187,7 @@ def _decide(
 
 
 def _check_verify(verify: str) -> None:
-    if verify not in ("auto", "bitmask", "blockmask", "intarrays", "arrays"):
+    if verify not in ("auto", *_TIERS):
         raise ValueError(f"bad verify {verify!r}")
 
 
@@ -1105,16 +1257,128 @@ def _verify_candidates(
             F.col("rep").alias(f"rep_{s}"),
         )
 
+    return _thresholded(
+        cand.join(side("a"), "doc_a").join(side("b"), "doc_b"),
+        n_common,
+        threshold,
+    )
+
+
+def _thresholded(pairs: DataFrame, n_common: Column, threshold: float) -> DataFrame:
+    """``(doc_a, doc_b, n_common, jaccard)`` of the ``(doc_a, doc_b, sz_a,
+    sz_b, ...)`` rows that pass the All-Pairs size cut
+    (:func:`_size_compatible`) and whose 4-dp :func:`_jaccard` reaches
+    ``threshold``: the one tail of both venues, so the values every tier
+    emits come from one expression."""
     return (
-        cand.join(side("a"), "doc_a")
-        .join(side("b"), "doc_b")
-        .filter(_size_compatible(F.col("sz_a"), F.col("sz_b"), threshold))
+        pairs.filter(_size_compatible(F.col("sz_a"), F.col("sz_b"), threshold))
         .withColumn("n_common", n_common.cast("int"))
         .withColumn(
             "jaccard", _jaccard(F.col("n_common"), F.col("sz_a"), F.col("sz_b"))
         )
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "n_common", "jaccard")
+    )
+
+
+def _group_pairs(
+    keys: np.ndarray, vals: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(vals[i], vals[j])`` for every two elements ``i != j`` that share a
+    key, each unordered pair of elements once: the rows an equi-self-join
+    on the key emits before its ``a < b`` filter."""
+    order = np.argsort(keys, kind="stable")
+    k, v = keys[order], vals[order]
+    n = len(k)
+    if not n:
+        return v, v
+    starts = np.flatnonzero(np.r_[True, k[1:] != k[:-1]])
+    sizes = np.diff(np.r_[starts, n])
+    after = np.repeat(starts + sizes, sizes) - np.arange(n) - 1  # later in group
+    left = np.repeat(np.arange(n), after)
+    first = np.cumsum(after) - after
+    right = left + 1 + np.arange(len(left)) - np.repeat(first, after)
+    return v[left], v[right]
+
+
+def _local_pairs(
+    spark: SparkSession, facts: CorpusFacts, tier: str, keys: np.ndarray,
+    rows: np.ndarray, threshold: float,
+) -> DataFrame:
+    """The local venue: every two documents of a whole corpus
+    (``facts.p == 1``, unique non-NULL ids, no NULL tokens) that share a
+    key — sample ``rows[i]`` holds ``keys[i]`` — verified in numpy and
+    thresholded in Spark.
+
+    Documents are numbered in id order, so each pair is ``(min, max)``
+    and made distinct; the All-Pairs size cut and a raw-jaccard cut at
+    ``threshold - 1e-4`` (the 4-dp filter admits raw jaccard down to
+    ``t - 5e-5``, so both are lossless) drop rows before they reach the
+    JVM; the exact ``n_common`` is each pair's smaller token set looked up
+    among the corpus's ``(document, token)`` codes.  The rows go to Spark
+    through ``createDataFrame`` of an Arrow table, where
+    :func:`_thresholded` computes the emitted values.  Nothing is
+    persisted.  ``tier``, the tier the Spark venue would run, keeps its
+    vocabulary contract (:func:`_check_vocab`)."""
+    if tier != "arrays":
+        _check_vocab(tier, facts.vocab)
+    ids = facts.sample.column("doc_id").combine_chunks()
+    n = len(ids)
+    by_id = pc.sort_indices(ids).to_numpy()
+    rank = np.empty(n, np.int64)
+    rank[by_id] = np.arange(n)
+    a, b = _group_pairs(keys, rank[rows])
+    key = np.unique(np.minimum(a, b) * n + np.maximum(a, b))
+    a, b = key // n, key % n
+    row, _, tok, words = _sample_tokens(facts.sample)
+    row = rank[row]
+    order = np.argsort(row, kind="stable")
+    row, tok = row[order], tok[order]
+    sz = np.bincount(row, minlength=n)
+    sa, sb = sz[a], sz[b]
+    slack = threshold - 1e-4
+    keep = np.minimum(sa, sb) >= slack * np.maximum(sa, sb)
+    a, b, sa, sb = a[keep], b[keep], sa[keep], sb[keep]
+    v = len(words)
+    cells = row * v + tok  # one code per (document, token)
+    if n * v <= _DENSE_CELLS:
+        dense = np.zeros(n * v, bool)
+        dense[cells] = True
+
+        def member(q):
+            return dense[q]
+    else:
+        members = np.sort(cells)
+
+        def member(q):
+            at = np.minimum(np.searchsorted(members, q), len(members) - 1)
+            return members[at] == q
+
+    offs = np.r_[0, np.cumsum(sz)]
+    small, other = np.where(sa <= sb, a, b), np.where(sa <= sb, b, a)
+    common = np.zeros(len(a), np.int64)
+    # the smaller set's tokens are looked up in blocks of ~4M elements
+    lens = np.minimum(sa, sb)
+    block = 1 << 22
+    cuts = np.searchsorted(
+        np.cumsum(lens), np.arange(1, lens.sum() // block + 1) * block
+    )
+    for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, len(a)]):
+        ln = lens[lo:hi]
+        pair = np.repeat(np.arange(hi - lo), ln)
+        elem = np.repeat(offs[small[lo:hi]] - (np.cumsum(ln) - ln), ln)
+        q = other[lo:hi][pair] * v + tok[elem + np.arange(len(pair))]
+        common[lo:hi] = np.bincount(pair, member(q), hi - lo)
+    keep = common >= slack * (sa + sb - common)
+    table = pa.table({
+        "doc_a": ids.take(by_id[a[keep]]),
+        "doc_b": ids.take(by_id[b[keep]]),
+        "sz_a": pa.array(sa[keep], pa.int32()),
+        "sz_b": pa.array(sb[keep], pa.int32()),
+        "n_common": pa.array(common[keep], pa.int32()),
+    })
+    return _thresholded(
+        spark.createDataFrame(table), F.col("n_common"), threshold
     )
 
 

@@ -244,11 +244,9 @@ def test_projections_match_the_spark_formulations(spark):
 
 # --- build-time jobs ----------------------------------------------------------
 
-def test_builds_run_one_fact_pass(spark, capfd):
-    """Building a pair operator's plan on a corpus that fits the sample
-    runs one bounded collect per operator call: at most two jobs even for
-    q76's shape, whose forced degrade reads the corpus for the banded
-    path too.  Each call writes one dedup.decision line."""
+def _builds(spark, capfd, venue):
+    """``(jobs, decisions)`` per pair-operator build on a corpus that fits
+    the sample: the build's job count and its dedup.decision lines."""
     from foresttime_builder_spark.operators.dedup import (
         containment_pairs,
         token_jaccard_pairs,
@@ -277,7 +275,7 @@ def test_builds_run_one_fact_pass(spark, capfd):
     sc = spark.sparkContext
     jobs, choices = {}, {}
     for name, build in builds.items():
-        group = f"test_builds_run_one_fact_pass.{name}"
+        group = f"test_builds_run_one_fact_pass.{venue}.{name}"
         capfd.readouterr()
         sc.setJobGroup(group, name)
         try:
@@ -290,13 +288,31 @@ def test_builds_run_one_fact_pass(spark, capfd):
             json.loads(line) for line in capfd.readouterr().err.splitlines()
             if line.startswith('{"event": "dedup.decision"')
         ]
-        choices[name] = [d["choice"] for d in lines]
+        choices[name] = [(d["choice"], d["venue"]) for d in lines]
         del out
-    assert all(n <= 2 for n in jobs.values()), jobs
     assert choices == {
-        "auto_bitmask": ["bitmask"],
-        "auto_prefix": ["blockmask"],
-        "budgeted_prefix": ["blockmask"],
-        "forced_degrade": ["degrade", "blockmask"],
-        "containment": ["prefix"],
+        "auto_bitmask": [("bitmask", venue)],
+        "auto_prefix": [("blockmask", venue)],
+        "budgeted_prefix": [("blockmask", venue)],
+        "forced_degrade": [("degrade", "spark"), ("blockmask", venue)],
+        "containment": [("prefix", "spark")],
     }, choices
+    return jobs
+
+
+def test_builds_run_one_fact_pass(spark, capfd):
+    """Building a pair operator's plan on a corpus that fits the sample
+    runs one bounded collect per build: q76's shape, whose forced degrade
+    pairs the corpus on the banded path too, hands that path its facts.
+    Each operator call writes one dedup.decision line; these corpora pair
+    on the local venue, which adds no job."""
+    jobs = _builds(spark, capfd, "local")
+    assert all(n == 1 for n in jobs.values()), jobs
+
+
+def test_builds_run_one_fact_pass_on_spark(spark, capfd, monkeypatch):
+    """The same builds kept on the Spark venue (a cap of -1) also run one
+    job each: the plans are lazy."""
+    monkeypatch.setattr(dedup, "_LOCAL_PAIRS_CAP", -1)
+    jobs = _builds(spark, capfd, "spark")
+    assert all(n == 1 for n in jobs.values()), jobs

@@ -5,7 +5,16 @@ from __future__ import annotations
 
 import pytest
 
+from foresttime_builder_spark.operators import dedup
 from foresttime_builder_spark.operators.dedup import token_jaccard_pairs
+
+
+@pytest.fixture(autouse=True)
+def spark_venue(monkeypatch):
+    """These tests pin the distributed tiers, so every corpus here stays
+    on the Spark venue (a cap of -1 holds even an empty projection there);
+    ``tests/test_dedup_local.py`` runs the tiers on both venues."""
+    monkeypatch.setattr(dedup, "_LOCAL_PAIRS_CAP", -1)
 
 
 def _corpus(spark, vocab: int):
@@ -35,8 +44,6 @@ def test_blockmask_matches_string_prefix_path(spark, monkeypatch):
     # vocab 120 > 64: the prefix path takes the multi-word blockmask tier.
     # Force the string-array tier by shrinking the cap and require
     # identical output (the two verifications must agree bit-for-bit).
-    import foresttime_builder_spark.operators.dedup as dedup
-
     wide = _corpus(spark, vocab=120)
     rows = lambda df: sorted(
         (r.doc_a, r.doc_b, r.n_common, r.jaccard) for r in df.collect()
@@ -392,7 +399,6 @@ def test_lsh_verify_blockmask_matches_arrays_and_auto(spark):
 
 
 def test_lsh_verify_blockmask_raises_past_cap(spark, monkeypatch):
-    import foresttime_builder_spark.operators.dedup as dedup
     from foresttime_builder_spark.operators.dedup import minhash_lsh_pairs
 
     monkeypatch.setattr(dedup, "_BLOCKMASK_VOCAB_CAP", 8)
@@ -425,6 +431,20 @@ def test_prefix_slack_keeps_rounding_boundary_pair(spark):
     assert [(r.doc_a, r.doc_b, r.n_common, r.jaccard) for r in got] == [
         (0, 1, 9999, 0.5)
     ]
+
+
+def test_bitmask_window_keeps_rounding_boundary_pair(spark):
+    # J = 2/3 rounds to 0.6667, so every tier keeps the pair at t = 0.6667;
+    # the bitmask's popcount window from the unslacked t (sizes 3..4 for a
+    # 3-token set) dropped it while the prefix join kept it
+    df = spark.createDataFrame(
+        [(1, "a b c"), (2, "a b")], "doc_id long, text string"
+    )
+    for strategy in ("bitmask", "prefix"):
+        got = token_jaccard_pairs(
+            df, "doc_id", "text", threshold=0.6667, strategy=strategy
+        ).collect()
+        assert [tuple(r) for r in got] == [(1, 2, 2, 0.6667)], strategy
 
 
 @pytest.mark.parametrize(

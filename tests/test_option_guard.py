@@ -31,6 +31,12 @@ _DEPLOYMENT = (
     "deployment setting of the FIA downloader, which mirrors the reference "
     "R downloader's signature; a network deployment sets it, no test can"
 )
+_DEGRADE = (
+    "token_jaccard_pairs' degrade runs the banded path with its own "
+    "caller's threshold and tokenizer (q16, q54, q76) through _lsh_pairs, "
+    "the body it shares with minhash_lsh_pairs, so that path reuses its "
+    "fact pass; the scan matches callers by callee name"
+)
 #: ``function(param)`` or ``function`` -> why it stays without a product caller
 EXEMPT = {
     "fia_download": _DEPLOYMENT,
@@ -42,6 +48,8 @@ EXEMPT = {
         "the frozen benchmark calls run_states(..., estimate=True); tests "
         "run the annualize-only write"
     ),
+    "minhash_lsh_pairs(threshold)": _DEGRADE,
+    "minhash_lsh_pairs(tokenizer)": _DEGRADE,
     "connected_components(small_graph_edges)": (
         "the operator picks the driver-side path below this edge count; "
         "tests need the distributed path at test size"

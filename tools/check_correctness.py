@@ -15,8 +15,11 @@ checkpoint as its ``ExistingRDD`` scan (the plan the run already made; no
 extra job).
 
 Usage: python tools/check_correctness.py [--sf DIR] [--only q08,q09]
-(``--only`` takes full query names or exact ``qNN`` ids: see
-:func:`select_queries`).
+[--json OUT] (``--only`` takes full query names or exact ``qNN`` ids: see
+:func:`select_queries`).  ``--json`` writes one record per query: its
+verdict, summary and errors, and the ``{op, choice, venue}`` of every
+``dedup.decision`` line its build printed (which tier each pair operator
+ran, and where).
 """
 
 from __future__ import annotations
@@ -24,6 +27,8 @@ from __future__ import annotations
 import argparse
 import contextlib
 import gc
+import io
+import json
 import os
 import sys
 import tempfile
@@ -193,6 +198,28 @@ def unread_caches(df) -> list[str]:
     ]
 
 
+class DecisionTee(io.TextIOBase):
+    """A text stream that passes every write on to ``out`` and keeps the
+    ``{op, choice, venue}`` of each ``dedup.decision`` line written."""
+
+    def __init__(self, out):
+        self.out, self.pending, self.decisions = out, "", []
+
+    def write(self, s: str) -> int:
+        self.out.write(s)
+        *lines, self.pending = (self.pending + s).split("\n")
+        for line in lines:
+            if line.startswith('{"event": "dedup.decision"'):
+                d = json.loads(line)
+                self.decisions.append(
+                    {k: d.get(k) for k in ("op", "choice", "venue")}
+                )
+        return len(s)
+
+    def flush(self) -> None:
+        self.out.flush()
+
+
 def check_query(fn, spark, oracle, sf_dir, mem_cap, retry_cap) -> tuple[str, list[str]]:
     """Run one query on Spark and, when it has one, its oracle on DuckDB.
     Returns a summary and the errors (none when the query passes).  Every
@@ -221,6 +248,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
     ap.add_argument("--only", default=None)
+    ap.add_argument("--json", default=None, help="write per-query records here")
     args = ap.parse_args()
 
     import __spark_entry__ as e
@@ -236,11 +264,14 @@ def main() -> int:
 
     jsc = spark.sparkContext._jsc
     n_pass = n_fail = 0
+    report = {}
     for name, fn in sorted(qs.items()):
         baseline = set(jsc.getPersistentRDDs().keySet())
-        summary, errs = check_query(
-            fn, spark, oracles.get(name), args.sf, mem_cap, retry_cap
-        )
+        tee = DecisionTee(sys.stderr)
+        with contextlib.redirect_stderr(tee):
+            summary, errs = check_query(
+                fn, spark, oracles.get(name), args.sf, mem_cap, retry_cap
+            )
         # leak gate: with the result compared and dropped (and the
         # per-query pandas frames freed before the next oracle), every
         # cache the query persisted or checkpointed must be released, not
@@ -252,11 +283,16 @@ def main() -> int:
             errs.append(f"leak: {len(leaked)} persisted RDD(s) left behind")
         verdict = "FAIL" if errs else "PASS" if name in oracles else "ROWS-ONLY"
         print(f"{verdict} {name}: {summary}")
+        report[name] = {"verdict": verdict, "summary": summary,
+                        "errors": errs, "decisions": tee.decisions}
         for err in errs[:4]:
             print(f"     {err}")
         n_fail += bool(errs)
         n_pass += not errs
     print(f"\n{n_pass} pass, {n_fail} fail")
+    if args.json:
+        with open(args.json, "w") as f:
+            json.dump({"sf": args.sf, "queries": report}, f, indent=1)
     return 1 if n_fail else 0
 
 
